@@ -1,9 +1,13 @@
 """SparkSession bootstrap with engine defaults.
 
 Defaults are tuned for correctness-parity with the DuckDB oracle (UTC
-session timezone, ANSI off) and for scale (AQE on, partition coalescing,
-skew-join handling). On a real cluster only ``master`` and memory sizing
-change — the SQL-level behavior is identical.
+session timezone, ANSI off), for scale (AQE on, partition coalescing,
+skew-join handling) and for sessions that run the same queries again and
+again (a codegen cache sized to hold their generated classes). The
+``WindowExec`` "No Partition Defined" warning is silenced; unpartitioned
+windows are counted at plan level by ``tools/planaudit.py`` and
+``tools/plansnapshot.py``. On a real cluster only ``master`` and memory
+sizing change — the SQL-level behavior is identical.
 """
 
 from __future__ import annotations
@@ -13,6 +17,15 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+#: ``spark.sql.codegen.cache.maxEntries``: Spark's LRU of compiled
+#: whole-stage classes. Spark's default of 100 is below one pass of a
+#: modest query set: at sf0.1 the 8 TPC-H/window queries of
+#: ``perfbench``'s relational workload need 117-128 classes and its 5
+#: lab pipelines 139-150 (``near_dup_probe_stored`` alone 70). Cycling
+#: through more entries than an LRU holds never hits: every call would
+#: recompile every class with Janino, and HotSpot JIT-compile it again.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(
@@ -31,6 +44,12 @@ def get_spark(
     - AQE enabled: runtime coalescing of shuffle partitions and skew-join
       splitting — the 100 TB story for uneven keys.
     - Arrow enabled: pandas_udf / toPandas use columnar transfer.
+    - ``spark.sql.codegen.cache.maxEntries`` = ``CODEGEN_CACHE_ENTRIES``
+      so a session that returns to its queries reuses their compiled
+      code. The setting is static: it must be set here, before the JVM
+      compiles its first class.
+    - The ``WindowExec`` logger is set to ERROR: its per-plan "No
+      Partition Defined" warning buried real errors in bench logs.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -45,6 +64,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # SPARK_GRAFT_ANSI=true validates the suite under Spark 4's
         # default strict mode (the driver's vanilla session has it on)
         .config(
@@ -60,6 +80,11 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window.WindowExec",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark
 
 
@@ -75,8 +100,3 @@ TPCH_TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=TPCH_TABLES):
-    """Load the driver-generated parquet tables as a dict of DataFrames."""
-    return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in names}

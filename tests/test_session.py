@@ -1,0 +1,50 @@
+"""Engine session defaults that change cost, not results: the codegen
+cache holds a repeated query set's compiled classes, and the WindowExec
+warning logger is quiet."""
+
+from __future__ import annotations
+
+from geo_big_data_analysis_spark.plans.registry import REGISTRY
+from geo_big_data_analysis_spark.session import CODEGEN_CACHE_ENTRIES
+
+#: the TPC-H/window queries of perfbench's relational workload. In a
+#: fresh session at sf0.001 one cycle compiles 131 classes; under
+#: Spark's old default of 100 cache entries every later cycle
+#: recompiles 123 of them.
+CYCLE = (
+    "pricing_summary",
+    "top_revenue_customers",
+    "region_nation_rollup",
+    "custdist_orders",
+    "top_customers_per_nation",
+    "window_suite_orders",
+    "cohort_retention",
+    "user_sessions",
+)
+
+
+def _compiles(spark) -> int:
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_session_defaults(spark):
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    jvm = spark.sparkContext._jvm
+    logger = jvm.org.apache.logging.log4j.LogManager.getLogger(
+        "org.apache.spark.sql.execution.window.WindowExec"
+    )
+    assert logger.getLevel().toString() == "ERROR"
+
+
+def test_repeated_cycle_compiles_nothing(spark, sf_dir):
+    """The second cycle finds every class in the cache. A non-zero count
+    means the cache is too small or some plan's generated source changes
+    from call to call."""
+    counts = []
+    for _ in range(2):
+        before = _compiles(spark)
+        for name in CYCLE:
+            REGISTRY[name][0](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        counts.append(_compiles(spark) - before)
+    assert counts[1] == 0, counts

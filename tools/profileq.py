@@ -13,8 +13,12 @@ Usage:
   python tools/profileq.py [--sf SF_DIR] [--tag before|after] [--iters N]
                            [--plans-dir DIR] query [query ...]
 
-Prints one line per query: `<median_sec>  <iqr>  <name>` and a total.
-This is a measurement tool: it never touches the bench contract.
+Prints one line per query: `<median_sec>  <iqr>  <compiles>  <name>` and
+a total. `compiles` is the number of classes Janino compiled across the
+timed iterations (Spark's `CodegenMetrics`). After the warm run it should
+be 0; a non-zero count points to a plan whose generated code changes on
+every call. This is a measurement tool: it never touches the bench
+contract.
 """
 
 from __future__ import annotations
@@ -44,6 +48,7 @@ def main() -> None:
     os.makedirs(args.plans_dir, exist_ok=True)
     spark = get_spark("profileq")
     spark.range(10).count()  # JVM warm
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
 
     total = 0.0
     for name in args.queries:
@@ -60,9 +65,10 @@ def main() -> None:
         # warm run (codegen compile) then timed noop iterations
         sc.setJobDescription(f"profileq warm: {name}")
         try:
-            fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass
+            fn(spark, args.sf).write.format("noop").mode("overwrite").save()
+        except Exception as e:  # noqa: BLE001 - the timed runs below raise it again
+            print(f"warm run failed: {name}: {type(e).__name__}: {e}", file=sys.stderr, flush=True)
+        compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
         runs = []
         for i in range(args.iters):
             sc.setJobDescription(f"profileq {name} iter {i}")
@@ -70,12 +76,13 @@ def main() -> None:
             fn(spark, args.sf).write.format("noop").mode("overwrite").save()
             runs.append(time.time() - t0)
         sc.setJobDescription(None)
+        compiles = codegen.METRIC_COMPILATION_TIME().getCount() - compiles0
         runs.sort()
         med = statistics.median(runs)
         iqr = (runs[-1] - runs[0]) if len(runs) > 1 else 0.0
         total += med
-        print(f"{med:8.3f} {iqr:7.3f}  {name}", flush=True)
-    print(f"{total:8.3f}          TOTAL ({len(args.queries)} queries)")
+        print(f"{med:8.3f} {iqr:7.3f} {compiles:5d}  {name}", flush=True)
+    print(f"{total:8.3f}                TOTAL ({len(args.queries)} queries)")
 
 
 if __name__ == "__main__":
