@@ -45,19 +45,6 @@ def bearing_deg(lat1, lon1, lat2, lon2) -> Column:
     return F.pmod(F.degrees(F.atan2(x, y)) + F.lit(360.0), F.lit(360.0))
 
 
-def manhattan_km(lat1, lon1, lat2, lon2) -> Column:
-    """L1 distance approximation with cos(lat) lon scaling
-    (lx_lightgbmTest.py:40-43): |Δlat| + |Δlon·cos(lat)| in km."""
-    deg_km = F.lit(math.pi * EARTH_RADIUS_KM / 180.0)
-    lat_km = F.abs(_c(lat2) - _c(lat1)) * deg_km
-    lon_km = (
-        F.abs(_c(lon2) - _c(lon1))
-        * F.cos(F.radians((_c(lat1) + _c(lat2)) / 2))
-        * deg_km
-    )
-    return lat_km + lon_km
-
-
 def in_bbox(lat, lon, lat_min, lat_max, lon_min, lon_max) -> Column:
     """Conjunction-of-between bbox predicate (test.py:55-56) — stays a
     plain comparison so Catalyst pushes it into the parquet scan."""
@@ -310,13 +297,6 @@ def hex_cell_sql(x_sql: str, y_sql: str, size: float) -> tuple[str, str]:
 def clip(col, lo, hi) -> Column:
     """np.clip equivalent (lab2 nb cell 22)."""
     return F.greatest(F.least(_c(col), F.lit(hi)), F.lit(lo))
-
-
-def st_point_wkt(lon, lat) -> Column:
-    """WKT POINT text from lon/lat columns (lightweight ST_Point)."""
-    return F.concat(
-        F.lit("POINT ("), _c(lon).cast("string"), F.lit(" "), _c(lat).cast("string"), F.lit(")")
-    )
 
 
 def make_grid(

@@ -480,16 +480,6 @@ def pattern_scores(
     return F.aggregate(bound, init, step, finish)
 
 
-def polarity_pattern(col) -> Column:
-    """PatternAnalyzer-parity polarity ∈ [−1, 1]."""
-    return pattern_scores(col)["polarity"]
-
-
-def subjectivity_pattern(col) -> Column:
-    """PatternAnalyzer-parity subjectivity ∈ [0, 1]."""
-    return pattern_scores(col)["subjectivity"]
-
-
 def pattern_lexicon_sql_values(alias: str = "lex") -> str:
     """PATTERN_LEXICON as a SQL VALUES list: alias(word, p, s, i) —
     repr-embedded floats so both engines hold identical constants."""

@@ -114,33 +114,11 @@ def shingle_hash_rows(
     return out
 
 
-def minhash_signature(df: DataFrame, text_col: str, id_col: str, num_hashes: int = 64, shingle_n: int = 3) -> DataFrame:
-    """MinHash signature per document: for permutation j,
-    min over shingles of (a_j * shingle_hash + b_j mod P).
-
-    Shape: shingle-hash rows (codegen'd window-lag build,
-    :func:`shingle_hash_rows`), then ONE hash aggregate carrying all
-    ``num_hashes`` min columns. The permutation arithmetic lives in
-    plain column expressions inside HashAggregate — whole-stage-
-    codegen'd, unlike higher-order-function lambdas which Spark
-    evaluates interpreted (measured ~9× slower for an intra-row
-    ``aggregate``+``zip_with`` formulation of the same signature).
-    Map-side partial aggregation means the shuffle carries one partial
-    signature per (doc × partition), not shingle rows. Min over the
-    shingle multiset equals min over the set, so no dedup pass is
-    needed.
-
-    Docs with no shingles (empty text) still hash the empty cleaned
-    string into one shingle, so every doc gets a signature.
-    """
-    sh = shingle_hash_rows(df, text_col, id_col, shingle_n, mod_p=True).withColumnRenamed(
-        "shingle", "_h"
-    )
-    return _signature_from_hash_rows(sh, num_hashes)
-
-
 def _signature_from_hash_rows(sh: DataFrame, num_hashes: int) -> DataFrame:
-    """64-min HashAggregate over (doc_id, _h) shingle-hash rows.
+    """64-min HashAggregate over (doc_id, _h) shingle-hash rows: for
+    permutation j, min over shingles of (a_j * _h + b_j) mod P. Min over
+    the shingle multiset equals min over the set, so no dedup pass is
+    needed.
 
     The whole signature is ONE parsed ``array(min(...), ...)``
     expression: the Column-API form costs ~6 py4j round-trips per

@@ -26,6 +26,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from ..functions import stats as st
 from ..functions import temporal, text as tx
@@ -41,6 +42,7 @@ from ..operators.similarity import (
     label_centroids,
     with_cosine,
 )
+from ..sources.tables import parquet_schema, read_parquet
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -57,9 +59,11 @@ _NANO_TS_COLS = {
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = read_parquet(spark, path)
+    types = {f.name: f.dataType for f in parquet_schema(spark, path)}
     for c in _NANO_TS_COLS.get(name, []):
-        if dict(df.dtypes).get(c) == "bigint":
+        if isinstance(types.get(c), LongType):
             df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
     return df
 

@@ -39,6 +39,8 @@ import struct
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .tables import read_parquet
+
 
 def _footer_digest(paths: list[str]) -> str:
     """Content hash of each parquet file's footer (the metadata block
@@ -140,7 +142,7 @@ def load_ivfpq_index(
     the probe-ready shape (neighbor_id, cell, code_0..code_{m-1})."""
     with open(os.path.join(index_dir, "meta.json")) as f:
         meta = json.load(f)
-    codes = spark.read.parquet(os.path.join(index_dir, "codes"))
+    codes = read_parquet(spark, os.path.join(index_dir, "codes"))
     centers = [(int(c), list(map(float, v))) for c, v in meta["centers"]]
     return codes, centers, meta["codebooks"], meta
 
@@ -268,8 +270,8 @@ def load_minhash_index(
     """(bands_df, shingles_df, meta) read back from the artifact."""
     with open(os.path.join(index_dir, "meta.json")) as f:
         meta = json.load(f)
-    bands = spark.read.parquet(os.path.join(index_dir, "bands"))
-    shingles = spark.read.parquet(os.path.join(index_dir, "shingles"))
+    bands = read_parquet(spark, os.path.join(index_dir, "bands"))
+    shingles = read_parquet(spark, os.path.join(index_dir, "shingles"))
     return bands, shingles, meta
 
 

@@ -29,11 +29,13 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import parquet_schema
+
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents parquet (schema pinned
-    from a batch peek — the `stream_events` idiom)."""
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    from the batch inference — the `stream_events` idiom)."""
+    schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     return (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")

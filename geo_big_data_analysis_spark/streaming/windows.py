@@ -28,6 +28,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import parquet_schema
+
 
 @contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int = 8):
@@ -53,12 +55,13 @@ _SINK_IDS = itertools.count()
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet (schema pinned from a
-    batch peek; nanos timestamps take the same long→micros conversion
-    as the batch loader, registry._t)."""
+    """File-source stream over the events parquet (schema pinned from
+    the batch inference, `sources/tables.parquet_schema`; nanos
+    timestamps take the same long→micros conversion as the batch
+    loader, registry._t)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     # the file source wants a directory: stream the sf dir, globbed down
     # to the events file
     s = (

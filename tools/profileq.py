@@ -6,19 +6,22 @@ For each named query:
     the formatted physical plan,
   - times `df.write.format("noop")` (eagerly computes every column —
     guide §1.4) for N iterations, reporting the median,
-  - labels jobs via setJobDescription so any captured UI/eventlog data
-    is attributable.
+  - labels jobs with a job group per phase (plan build, timed write) so
+    build-time jobs are counted and any captured UI/eventlog data is
+    attributable.
 
 Usage:
   python tools/profileq.py [--sf SF_DIR] [--tag before|after] [--iters N]
                            [--plans-dir DIR] query [query ...]
 
-Prints one line per query: `<median_sec>  <iqr>  <compiles>  <name>` and
-a total. `compiles` is the number of classes Janino compiled across the
-timed iterations (Spark's `CodegenMetrics`). After the warm run it should
-be 0; a non-zero count points to a plan whose generated code changes on
-every call. This is a measurement tool: it never touches the bench
-contract.
+Prints one line per query: `<median_sec>  <iqr>  <compiles>  <jobs>  <name>`
+and a total. `compiles` is the number of classes Janino compiled across
+the timed iterations (Spark's `CodegenMetrics`). After the warm run it
+should be 0; a non-zero count points to a plan whose generated code
+changes on every call. `jobs` is the most Spark jobs any timed iteration
+fired while `fn(spark, sf)` built the plan, before the write: eager
+probes, checkpoints and collects (a schema-inference job would show here
+too). This is a measurement tool: it never touches the bench contract.
 """
 
 from __future__ import annotations
@@ -69,20 +72,27 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001 - the timed runs below raise it again
             print(f"warm run failed: {name}: {type(e).__name__}: {e}", file=sys.stderr, flush=True)
         compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
-        runs = []
+        runs, jobs = [], 0
         for i in range(args.iters):
-            sc.setJobDescription(f"profileq {name} iter {i}")
+            build = f"profileq {name} build {i}"
+            sc.setJobGroup(build, build)
             t0 = time.time()
-            fn(spark, args.sf).write.format("noop").mode("overwrite").save()
+            df = fn(spark, args.sf)
+            sc.setJobGroup(f"profileq {name} iter {i}", f"profileq {name} iter {i}")
+            df.write.format("noop").mode("overwrite").save()
             runs.append(time.time() - t0)
+            # job-start events reach the status tracker through the listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs = max(jobs, len(sc.statusTracker().getJobIdsForGroup(build)))
+        sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
         compiles = codegen.METRIC_COMPILATION_TIME().getCount() - compiles0
         runs.sort()
         med = statistics.median(runs)
         iqr = (runs[-1] - runs[0]) if len(runs) > 1 else 0.0
         total += med
-        print(f"{med:8.3f} {iqr:7.3f} {compiles:5d}  {name}", flush=True)
-    print(f"{total:8.3f}                TOTAL ({len(args.queries)} queries)")
+        print(f"{med:8.3f} {iqr:7.3f} {compiles:5d} {jobs:5d}  {name}", flush=True)
+    print(f"{total:8.3f}                      TOTAL ({len(args.queries)} queries)")
 
 
 if __name__ == "__main__":
