@@ -51,17 +51,6 @@ def in_bbox(lat, lon, lat_min, lat_max, lon_min, lon_max) -> Column:
     return _c(lat).between(lat_min, lat_max) & _c(lon).between(lon_min, lon_max)
 
 
-def valid_lonlat(lat, lon) -> Column:
-    """Coordinate validity incl. Null-Island rejection (lab4 nb cell 6)."""
-    return (
-        _c(lat).isNotNull()
-        & _c(lon).isNotNull()
-        & _c(lat).between(-90.0, 90.0)
-        & _c(lon).between(-180.0, 180.0)
-        & ~((_c(lat) == 0.0) & (_c(lon) == 0.0))
-    )
-
-
 def grid_cell(lat, lon, origin_lat, origin_lon, cell_deg: float):
     """(gx, gy) integer grid-cell ids for a fixed-origin lat/lon grid.
 
@@ -102,14 +91,6 @@ def _asinh_sql(u: str) -> str:
     the closed form to double precision for the |u| ≤ tan(85°) range
     web mercator ever sees."""
     return f"ln(({u}) + sqrt(({u}) * ({u}) + 1.0))"
-
-
-def web_mercator_sql(lat_expr: str, lon_expr: str) -> tuple[str, str]:
-    """The same EPSG:3857 forward transform as ANSI-SQL strings (DuckDB
-    oracle twin of `web_mercator_xy`)."""
-    x = f"radians({lon_expr}) * {WGS84_A!r}"
-    y = f"{_asinh_sql(f'tan(radians({lat_expr}))')} * {WGS84_A!r}"
-    return x, y
 
 
 def slippy_tile(lat, lon, zoom: int) -> tuple:

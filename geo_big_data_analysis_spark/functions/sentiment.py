@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
 from .sentiment_lexicon_ext import EXTENDED_VALENCES_2
 from .sentiment_lexicon_ext3 import EXTENDED_VALENCES_3
 from .sentiment_lexicon_ext4 import EXTENDED_VALENCES_4
@@ -277,14 +278,6 @@ PATTERN_LEXICON: dict[str, tuple[float, float, float]] = {
 NEGATIONS = frozenset({"not", "no", "never", "n't", "cannot", "dont", "didnt", "isnt", "wasnt", "wont"})
 
 
-def _pattern_lex_map() -> Column:
-    entries = ", ".join(
-        f"'{w}', named_struct('p', {p!r}D, 's', {s!r}D, 'i', {i!r}D)"
-        for w, (p, s, i) in PATTERN_LEXICON.items()
-    )
-    return F.expr(f"map({entries})")
-
-
 #: bucket count for the crc32-chained lexicon index. GetMapValue on a
 #: literal map is a LINEAR scan per access — at 336+ entries that made
 #: the fold ~3.5× slower (round-3 bench). Bucketing by crc32(word) mod
@@ -341,7 +334,7 @@ def lexicon_df(spark):
     ]
     for w, (p, s, i) in PATTERN_LEXICON.items():
         chains[zlib.crc32(w.encode()) % _LEX_BUCKETS].append((w, p, s, i))
-    return spark.createDataFrame([(chains, sorted(NEGATIONS))], _LEX_ROW_SCHEMA)
+    return local_frame(spark, [(chains, sorted(NEGATIONS))], _LEX_ROW_SCHEMA)
 
 
 def with_pattern_scores(df, text_col, out: str = "_sc"):

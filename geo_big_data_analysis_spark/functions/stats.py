@@ -76,10 +76,3 @@ def three_sigma_bounds(df: DataFrame, col: str) -> tuple[float, float]:
         F.avg(col).alias("mu"), F.stddev_pop(col).alias("sigma")
     ).first()
     return row["mu"] - 3 * row["sigma"], row["mu"] + 3 * row["sigma"]
-
-
-def percentile_threshold(df: DataFrame, col: str, q: float) -> float:
-    """Exact percentile threshold (F17/F18). Uses the exact `percentile`
-    aggregate (interpolating, matches DuckDB quantile_cont); at 100 TB
-    swap for approx_percentile with a documented tolerance."""
-    return df.agg(F.expr(f"percentile({col}, {q})")).first()[0]

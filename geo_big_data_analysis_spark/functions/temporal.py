@@ -14,21 +14,11 @@ from pyspark.sql import functions as F
 # The reference parses NYC 311 timestamps with '%m/%d/%Y %I:%M:%S %p'
 # (test.py:64); Spark's pattern equivalent:
 US_12H_FORMAT = "M/d/yyyy h:mm:ss a"
-# Holidays file parsed with '%B %d %Y' (lab2 nb cell 3):
-MONTH_NAME_FORMAT = "MMMM d yyyy"
 
 
 def parse_us_12h(col) -> Column:
     """Parse '03/14/2024 05:32:10 PM' style strings to timestamp."""
     return F.to_timestamp(F.col(col) if isinstance(col, str) else col, US_12H_FORMAT)
-
-
-def parse_month_name_date(col, year: int | None = None) -> Column:
-    """Parse 'January 1' (+ optional appended year) to date."""
-    c = F.col(col) if isinstance(col, str) else col
-    if year is not None:
-        c = F.concat(c, F.lit(f" {year}"))
-    return F.to_date(c, MONTH_NAME_FORMAT)
 
 
 def to_tz(col, tz: str = "America/New_York") -> Column:
@@ -57,21 +47,11 @@ def is_weekend(col) -> Column:
     return (dayofweek_monday0(col) >= 5).cast("int")
 
 
-def fractional_hour(col) -> Column:
-    """hour + minute/60 (lab2 nb cell 7)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.hour(c) + F.minute(c) / F.lit(60.0)
-
-
 def seconds_between(end, start) -> Column:
     """(end - start) in seconds (ghy_实习二.py:31; stat_html.py:80)."""
     e = F.col(end) if isinstance(end, str) else end
     s = F.col(start) if isinstance(start, str) else start
     return (F.unix_timestamp(e) - F.unix_timestamp(s)).cast("double")
-
-
-def hours_between(end, start) -> Column:
-    return seconds_between(end, start) / F.lit(3600.0)
 
 
 def time_interval_bucket(ts_col, is_holiday_col=None) -> Column:

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
+
 
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """G7 — undirected degree per node (counts parallel edges, matching
@@ -64,7 +66,7 @@ def sssp_distributed(
         )
     e = e.localCheckpoint()
 
-    dist = e.sparkSession.createDataFrame([(source, 0.0)], ["id", "dist"])
+    dist = local_frame(e.sparkSession, [(source, 0.0)], "id bigint, dist double")
     frontier = dist
     for it in range(max_iter):
         cand = (
@@ -137,9 +139,7 @@ def _sssp_driver(
             if (cutoff is None or nd <= cutoff) and nd < dist.get(v, float("inf")):
                 dist[v] = nd
                 heapq.heappush(pq, (nd, v))
-    return spark.createDataFrame(
-        sorted(dist.items()), ["id", "dist"]
-    ).select(F.col("id").cast("bigint"), F.col("dist").cast("double"))
+    return local_frame(spark, sorted(dist.items()), "id bigint, dist double")
 
 
 def sssp(
@@ -205,7 +205,7 @@ def _route_driver(
                 heapq.heappush(pq, (nd, v))
     schema = "seq bigint, node_id bigint, dist_along double"
     if target not in dist:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     path = [target]
     while path[-1] != source:
         node = path[-1]
@@ -218,8 +218,8 @@ def _route_driver(
             break
         path.append(min(cands))
     path.reverse()
-    return spark.createDataFrame(
-        [(i, n, float(dist[n])) for i, n in enumerate(path)], schema
+    return local_frame(
+        spark, [(i, n, float(dist[n])) for i, n in enumerate(path)], schema
     )
 
 
@@ -263,8 +263,8 @@ def shortest_path_route(
     dist = dist.localCheckpoint()
     trow = dist.filter(F.col("id") == target).first()
     if trow is None:
-        return dist.sparkSession.createDataFrame(
-            [], "seq bigint, node_id bigint, dist_along double"
+        return local_frame(
+            dist.sparkSession, [], "seq bigint, node_id bigint, dist_along double"
         )
     tdist = trow["dist"]
 
@@ -311,7 +311,8 @@ def shortest_path_route(
         r["id"]: r["dist"]
         for r in dist.filter(F.col("id").isin([int(n) for n in path])).collect()
     }
-    return dist.sparkSession.createDataFrame(
+    return local_frame(
+        dist.sparkSession,
         [(i, n, float(dmap[n])) for i, n in enumerate(path)],
         "seq bigint, node_id bigint, dist_along double",
     )
@@ -475,9 +476,7 @@ def _pagerank_driver(
         for u, v in rows:
             in_sum[v] += pr[u] / outdeg[u]
         pr = {v: base + damping * in_sum[v] for v in nodes}
-    return spark.createDataFrame(
-        sorted(pr.items()), "id bigint, pr double"
-    )
+    return local_frame(spark, sorted(pr.items()), "id bigint, pr double")
 
 
 def pagerank(
@@ -572,7 +571,7 @@ def _kcore_driver(
         }
         nbrs = {a: s for a, s in nbrs.items() if s}
     out = sorted((a, len(s)) for a, s in nbrs.items())
-    return spark.createDataFrame(out, "id bigint, core_degree bigint")
+    return local_frame(spark, out, "id bigint, core_degree bigint")
 
 
 def kcore(
@@ -663,9 +662,7 @@ def _lpa_driver(spark, und_rows: list[tuple[int, int]], rounds: int) -> DataFram
                 counts[lb] = counts.get(lb, 0) + 1
             new[a] = min(counts, key=lambda lb: (-counts[lb], lb))
         labels = new
-    return spark.createDataFrame(
-        sorted(labels.items()), "id bigint, label bigint"
-    )
+    return local_frame(spark, sorted(labels.items()), "id bigint, label bigint")
 
 
 def label_propagation(
@@ -772,7 +769,6 @@ def _closure_driver(
     collapsing to 42k on the 300-node bench graph). Same pair set,
     same 200k guard."""
     import numpy as np
-    import pandas as pd
 
     ids = sorted({u for u, _ in pair_rows} | {v for _, v in pair_rows})
     idx = {n: i for i, n in enumerate(ids)}
@@ -789,8 +785,9 @@ def _closure_driver(
     _guard_pairs(int(m.sum()), exact, "reachability_closure")
     uu, vv = np.nonzero(m)
     arr = np.asarray(ids, dtype=np.int64)
-    pdf = pd.DataFrame({"u": arr[uu], "v": arr[vv]})
-    return spark.createDataFrame(pdf)
+    return local_frame(
+        spark, zip(arr[uu].tolist(), arr[vv].tolist()), "u bigint, v bigint"
+    )
 
 
 def reachability_closure(
@@ -899,8 +896,8 @@ def _scc_driver(spark, rows: list[tuple[int, int]]) -> DataFrame:
     # min mutual member per row: argmax over booleans returns the first
     # True, and ids/columns are sorted ascending
     scc = arr[np.argmax(mutual, axis=1)]
-    return spark.createDataFrame(
-        [(int(i), int(s)) for i, s in zip(arr, scc)], "id bigint, scc_id bigint"
+    return local_frame(
+        spark, [(int(i), int(s)) for i, s in zip(arr, scc)], "id bigint, scc_id bigint"
     )
 
 
@@ -997,7 +994,7 @@ def scc_labels_fwbw(
 
     spark = edges.sparkSession
     schema = "id bigint, scc_id bigint"
-    done: list[DataFrame] = [spark.createDataFrame([], schema)]
+    done: list[DataFrame] = [local_frame(spark, [], schema)]
 
     def _restrict(edges_df: DataFrame, alive: DataFrame) -> DataFrame:
         out = (

@@ -74,12 +74,6 @@ def positional_split(df: DataFrame, order_col: str, frac: float = 0.7) -> DataFr
     ).drop("__pos_rn")
 
 
-def random_split(df: DataFrame, weights: list[float], seed: int = 42) -> list[DataFrame]:
-    """Seeded random split (F16). Spark's sampling ≠ pandas
-    random_state row sets (SURVEY §7.3) — parity is statistical."""
-    return df.randomSplit(weights, seed=seed)
-
-
 def log1p_target(df: DataFrame, col: str, out: str | None = None) -> DataFrame:
     """log(1+x) target transform (lab2 cell 7; lx_lightgbmTest.py:64)."""
     return df.withColumn(out or f"log_{col}", F.log1p(F.col(col)))

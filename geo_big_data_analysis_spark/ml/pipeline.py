@@ -267,10 +267,6 @@ def kth_nn_distance_stats(kdist: DataFrame, dist_col: str = "dist") -> DataFrame
     )
 
 
-def euclidean(ax, ay, bx, by):
-    return F.sqrt(F.pow(ax - bx, 2) + F.pow(ay - by, 2))
-
-
 def assign_nearest_center(
     df: DataFrame, x_col: str, y_col: str, centers: list[tuple[float, float]], out: str = "region_id"
 ) -> DataFrame:

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
+
 _PAIRS_EXPR = """
 transform(
   slice(_toks, 1, size(_toks) - 1),
@@ -146,8 +148,8 @@ def _driver_rows(words: DataFrame) -> list[tuple[str, int, str]]:
 
 
 def _driver_vocab_df(words: DataFrame, out_rows) -> DataFrame:
-    return words.sparkSession.createDataFrame(
-        out_rows, "word string, cnt bigint, seq string"
+    return local_frame(
+        words.sparkSession, out_rows, "word string, cnt bigint, seq string"
     )
 
 
@@ -187,7 +189,8 @@ def bpe_train(
 
 
 def merges_df(spark: SparkSession, merges) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges,
         "merge_rank int, left_sym string, right_sym string,"
         " merged string, pair_count bigint",
@@ -255,7 +258,8 @@ def wordpiece_train(
 
 
 def wordpiece_merges_df(spark: SparkSession, merges) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges,
         "merge_rank int, left_sym string, right_sym string,"
         " merged string, pair_count bigint, score double",

@@ -53,12 +53,3 @@ def replace_values(df: DataFrame, col: str, mapping: dict) -> DataFrame:
     for old, new in items[1:]:
         expr = expr.when(F.col(col) == old, F.lit(new))
     return df.withColumn(col, expr.otherwise(F.col(col)))
-
-
-def fill_noninfinite(df: DataFrame, cols: list[str], value: float = 0.0) -> DataFrame:
-    """F13 — replace ±inf→null→value (lx_lightgbmTest.py:57)."""
-    for c in cols:
-        col = F.col(c)
-        cleaned = F.when(F.isnan(col) | (F.abs(col) == float("inf")), None).otherwise(col)
-        df = df.withColumn(c, F.coalesce(cleaned, F.lit(value)))
-    return df

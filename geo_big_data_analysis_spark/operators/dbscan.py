@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
+
 
 def _neighbor_pairs(pts: DataFrame, eps: float) -> DataFrame:
     """All point pairs (a, b) with dist ≤ eps (including a==b).
@@ -97,7 +99,7 @@ def _cc_driver_rows(spark, rows: list) -> DataFrame:
         r = find(v)
         comp_min[r] = min(comp_min.get(r, v), v)
     out = [(v, comp_min[find(v)]) for v in parent]
-    return spark.createDataFrame(out, "id bigint, comp bigint")
+    return local_frame(spark, out, "id bigint, comp bigint")
 
 
 def _connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:

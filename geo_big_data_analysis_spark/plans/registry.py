@@ -42,7 +42,7 @@ from ..operators.similarity import (
     label_centroids,
     with_cosine,
 )
-from ..sources.tables import parquet_schema, read_parquet
+from ..sources.tables import local_frame, parquet_schema, read_parquet
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -641,7 +641,8 @@ def q_ndjson_scan_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs.select(F.to_json(F.struct(*docs.columns)).alias("value")).write.mode(
         "overwrite"
     ).text(path)
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [("this line is {{{ not json",), ('{"doc_id": 1 "bad": true}',)], "value string"
     ).write.mode("append").text(path)
     ids = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id")
@@ -769,7 +770,7 @@ def q_polygon_points_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             for gx in range(gx0, gx1 + 1)
             for gy in range(gy0, gy1 + 1)
         ]
-    cells = spark.createDataFrame(cell_rows, "gx bigint, gy bigint, poly_id int")
+    cells = local_frame(spark, cell_rows, "gx bigint, gy bigint, poly_id int")
 
     pts = _derived_points(_t(spark, sf_dir, "events"))
     joined = point_in_cell_join(pts, F.broadcast(cells), "lat", "lon", o_lat, o_lon, cell)
@@ -3351,8 +3352,8 @@ def q_kmeans_event_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("no_collapse", bool(census["max_n"] < census["total"]), n_input),
         ("sizes_partition_points", bool(census["total"] == n_input), n_input),
     ]
-    return spark.createDataFrame(
-        rows, "band string, ok boolean, n_points bigint"
+    return local_frame(
+        spark, rows, "band string, ok boolean, n_points bigint"
     ).orderBy("band")
 
 
@@ -3483,8 +3484,8 @@ def q_gbt_value_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("rmse_ge_mae", bool(m["rmse"] >= m["mae"]), n_rows),
         ("rmsle_finite", bool(math.isfinite(m["rmsle"])), n_rows),
     ]
-    return spark.createDataFrame(
-        rows, "band string, ok boolean, n_rows bigint"
+    return local_frame(
+        spark, rows, "band string, ok boolean, n_rows bigint"
     ).orderBy("band")
 
 
@@ -3886,8 +3887,8 @@ def q_param_search_gbt(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for i, (pm, m) in enumerate(zip(grid, model.validationMetrics))
     ]
-    return spark.createDataFrame(
-        rows, "max_depth int, step_size double, val_rmse double, is_best boolean"
+    return local_frame(
+        spark, rows, "max_depth int, step_size double, val_rmse double, is_best boolean"
     ).orderBy("max_depth", "step_size")
 
 
@@ -3944,8 +3945,8 @@ def q_streaming_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events,
     )
 
-    dim = spark.createDataFrame(
-        _EVENT_DIM, "event_type string, category string, weight double"
+    dim = local_frame(
+        spark, _EVENT_DIM, "event_type string, category string, weight double"
     )
     with scoped_shuffle_partitions(spark):
         out = run_to_memory(
@@ -4400,8 +4401,8 @@ def q_logreg_return_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("precision_in_unit", bool(0.0 < m["precision"] <= 1.0), n_pos_total),
         ("recall_in_unit", bool(0.0 < m["recall"] <= 1.0), n_pos_total),
     ]
-    return spark.createDataFrame(
-        rows, "band string, ok boolean, n_pos_total bigint"
+    return local_frame(
+        spark, rows, "band string, ok boolean, n_pos_total bigint"
     ).orderBy("band")
 
 
@@ -7441,7 +7442,8 @@ def q_bias_audit_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = int(top20_share_pct > 50) + int(coverage_pct < 99) + int(
         max_month_share_pct > 20
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(n_cust),
@@ -7959,7 +7961,7 @@ def q_gbt_band_lab2(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("r2_above_half", bool(m["r2"] > 0.5)),
         ("rmsle_below_half", bool(m["rmsle"] < 0.5)),
     ]
-    return spark.createDataFrame(rows, "band string, ok boolean").orderBy("band")
+    return local_frame(spark, rows, "band string, ok boolean").orderBy("band")
 
 
 _SQL_GBT_BAND = """
@@ -7985,7 +7987,7 @@ def q_param_search_band(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("best_is_minimum", bool(abs(agg["best_rmse"] - agg["min_rmse"]) < 1e-12)),
         ("grid_fully_explored", bool(agg["n"] == 4)),
     ]
-    return spark.createDataFrame(rows, "band string, ok boolean").orderBy("band")
+    return local_frame(spark, rows, "band string, ok boolean").orderBy("band")
 
 
 _SQL_PARAM_SEARCH_BAND = """
@@ -8023,7 +8025,7 @@ def q_importances_band(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("sums_to_one", bool(abs(sum(imps) - 1.0) < 1e-6)),
         ("top_feature_is_distance", bool(fcols[max(range(len(imps)), key=imps.__getitem__)] == "hav_km")),
     ]
-    return spark.createDataFrame(rows, "band string, ok boolean").orderBy("band")
+    return local_frame(spark, rows, "band string, ok boolean").orderBy("band")
 
 
 _SQL_IMPORTANCES_BAND = """
@@ -8057,7 +8059,8 @@ def q_lisa_perm_band(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(((F.col("p_sim") > 0) & (F.col("p_sim") <= 1)).cast("bigint")).alias("ok"),
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             ("categories_legal", bool(agg["bad_cats"] == 0), int(agg["total"])),
             ("ns_majority", bool(agg["n_ns"] >= agg["total"] * 0.5), int(agg["total"])),
@@ -8115,7 +8118,8 @@ def q_lisa_perm_band_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     legs = {r["_leg"]: r for r in both}
     sb, sd = legs["b"], legs["d"]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             ("dist_covers_all_points", bool(sd["n"] == sb["n"]), int(sd["n"])),
             ("dist_pvalues_in_unit", bool(sd["ok"] == sd["n"]), int(sd["n"])),
@@ -13282,7 +13286,8 @@ def q_isochrone_hull_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
         (ay + by) * (ax * by - bx * ay)
         for (ax, ay), (bx, by) in zip(hull, hull[1:] + hull[:1])
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 len(hull),
@@ -16030,7 +16035,8 @@ def q_mrl_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()[0]
     )
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [(d, int(stats["n"]), int(stats[f"s{d}"])) for d in _MRL_DIMS],
         "trunc_dim int, n_queries bigint, s bigint",
     )
@@ -16647,8 +16653,8 @@ def q_kcenter_coreset_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("md"), F.lit(1.0) - dot_lit(bv) / (F.col("nv") * F.lit(bn))
                 ),
             ).localCheckpoint()
-    return spark.createDataFrame(
-        out_rows, "sel_round int, vec_id bigint, cov_radius double"
+    return local_frame(
+        spark, out_rows, "sel_round int, vec_id bigint, cov_radius double"
     ).select(
         "sel_round", "vec_id", F.round("cov_radius", 6).alias("cov_radius")
     ).orderBy("sel_round")
@@ -17129,7 +17135,7 @@ def q_bm25_retrieval_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     df_tbl = (
         toks.distinct().groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     )
-    qterms = spark.createDataFrame([(t,) for t in terms], ["tok"])
+    qterms = local_frame(spark, [(t,) for t in terms], "tok string")
     tf_tbl = (
         toks.join(F.broadcast(qterms), "tok")
         .groupBy("doc_id", "tok")

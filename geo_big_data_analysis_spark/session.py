@@ -13,6 +13,7 @@ sizing change — the SQL-level behavior is identical.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -26,6 +27,28 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 #: through more entries than an LRU holds never hits: every call would
 #: recompile every class with Janino, and HotSpot JIT-compile it again.
 CODEGEN_CACHE_ENTRIES = 4096
+
+#: ``spark.driver.memory`` ceiling, in GiB, when ``SPARK_DRIVER_MEMORY``
+#: is unset. A local-mode driver is the whole engine, but a heap near
+#: the machine's RAM lets the collector grow the JVM until the kernel
+#: kills it, so the default is half of physical memory up to this.
+MAX_DRIVER_MEMORY_GB = 16
+
+
+def default_driver_memory(meminfo: str) -> str:
+    """``spark.driver.memory`` for a host whose ``/proc/meminfo`` reads
+    ``meminfo``: half of ``MemTotal`` in whole GiB, at most
+    ``MAX_DRIVER_MEMORY_GB`` and at least 1g."""
+    kb = int(re.search(r"^MemTotal:\s+(\d+) kB", meminfo, re.M).group(1))
+    return f"{max(1, min(MAX_DRIVER_MEMORY_GB, kb // 2 // 2**20))}g"
+
+
+def _host_driver_memory() -> str:
+    try:
+        with open("/proc/meminfo") as fh:
+            return default_driver_memory(fh.read())
+    except OSError:  # no procfs (not Linux): keep the ceiling
+        return f"{MAX_DRIVER_MEMORY_GB}g"
 
 
 def get_spark(
@@ -50,6 +73,8 @@ def get_spark(
       compiles its first class.
     - The ``WindowExec`` logger is set to ERROR: its per-plan "No
       Partition Defined" warning buried real errors in bench logs.
+    - ``spark.driver.memory`` is ``SPARK_DRIVER_MEMORY`` if set, else
+      ``default_driver_memory`` of this host: half its RAM, 1g-16g.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -74,7 +99,10 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _host_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -23,6 +23,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .tables import local_frame
+
 NODE_SCHEMA = "node_id bigint, lat double, lon double, tags map<string,string>"
 WAY_SCHEMA = (
     "way_id bigint, seq int, src bigint, dst bigint, highway string, oneway boolean"
@@ -67,8 +69,8 @@ def read_osm_xml(
             for i in range(len(refs) - 1):
                 edges.append((wid, i, refs[i], refs[i + 1], hw, oneway))
             elem.clear()
-    nodes_df = spark.createDataFrame(nodes, NODE_SCHEMA)
-    edges_df = spark.createDataFrame(edges, WAY_SCHEMA)
+    nodes_df = local_frame(spark, nodes, NODE_SCHEMA)
+    edges_df = local_frame(spark, edges, WAY_SCHEMA)
     return nodes_df, edges_df
 
 

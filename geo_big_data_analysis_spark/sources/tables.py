@@ -1,4 +1,8 @@
-"""Parquet table reads with the inferred schema kept per input.
+"""Table reads and driver-built frames: how rows enter Spark.
+
+Parquet reads keep the inferred schema per input (``read_parquet``), and
+rows computed on the driver enter Spark as Arrow batches
+(``local_frame``).
 
 ``spark.read.parquet(path)`` infers the schema on every call, and Spark
 does it with a Spark job (``SchemaMergeUtils.mergeSchemasInParallel``)
@@ -26,6 +30,20 @@ Only the schema is kept, never a DataFrame: every call builds a fresh
 relation with new attribute IDs, so self-joins and ``df["col"]``
 references resolve as they do with a plain read, and the plan is the
 same as with an inferred schema.
+
+The graph, clustering and BPE kernels and the audit queries compute
+small results on the driver. ``spark.createDataFrame(list, schema)``
+hands such rows to Spark as a PythonRDD (``parallelize`` plus a
+``map(lambda x: x)`` re-serialization), so every job that scans the
+frame (each adaptive stage, each ``orderBy`` range-bound sample, the
+final write) starts Python-worker tasks to replay the pickled rows;
+that cost does not shrink as the JVM warms. ``local_frame`` converts
+the rows to an Arrow table with the DDL's Arrow schema instead and
+passes it to ``createDataFrame(pa.Table, schema)``: the JVM decodes the
+batches once (``PythonSQLUtils.toDataFrame``, a local relation below
+``spark.sql.execution.arrow.localRelationThreshold``), and no Python
+worker runs when the frame is scanned. The rows and the schema are the
+same as with the list path.
 """
 
 from __future__ import annotations
@@ -33,8 +51,12 @@ from __future__ import annotations
 import os
 import stat
 
+from collections.abc import Iterable
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -85,3 +107,18 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` without the schema-inference job
     once the input has been read in this process."""
     return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple], ddl: str) -> DataFrame:
+    """The DataFrame ``spark.createDataFrame(list(rows), ddl)`` gives,
+    sent to the JVM as Arrow batches so that scanning it runs no Python
+    worker. ``ddl`` is a top-level struct such as ``"id bigint, pr
+    double"``; each row is a tuple (or ``Row``) in its field order, with
+    ``None`` for null."""
+    struct = DataType.fromDDL(ddl)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)

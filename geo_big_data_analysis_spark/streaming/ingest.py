@@ -29,7 +29,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import parquet_schema
+from ..sources.tables import local_frame, parquet_schema
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -79,8 +79,8 @@ def near_dup_probe_stream(
     # yields zero micro-batches (no matching files) still leaves a
     # readable parquet directory instead of an AnalysisException
     # (ADVICE r5).
-    empty = spark.createDataFrame(
-        [], "probe_id bigint, source string, base_id bigint, jr double"
+    empty = local_frame(
+        spark, [], "probe_id bigint, source string, base_id bigint, jr double"
     )
     empty.write.mode("append").parquet(sink)
 

@@ -11,11 +11,12 @@ from geo_big_data_analysis_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# The suite shares one JVM for its whole run. Under get_spark's 16g default
-# heap the collector lets that JVM grow toward the machine's RAM instead of
-# collecting, and on a 16 GB box the kernel OOM-kills it part way through,
-# failing every later Spark test with ConnectionRefused. The fixtures are
-# sf0.001; the benchmark runs sf0.1 in 2g.
+# The suite shares one JVM for its whole run. With a heap near the
+# machine's RAM the collector lets that JVM grow instead of collecting
+# until the kernel OOM-kills it, failing every later Spark test with
+# ConnectionRefused. The fixtures are sf0.001 and the benchmark runs sf0.1
+# in 2g, so the suite caps its heap below get_spark's default (half the
+# host's RAM).
 os.environ.setdefault("SPARK_DRIVER_MEMORY", "2g")
 
 

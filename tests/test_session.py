@@ -1,11 +1,16 @@
 """Engine session defaults that change cost, not results: the codegen
-cache holds a repeated query set's compiled classes, and the WindowExec
-warning logger is quiet."""
+cache holds a repeated query set's compiled classes, the WindowExec
+warning logger is quiet, and the default driver heap fits the host."""
 
 from __future__ import annotations
 
+import pytest
+
 from geo_big_data_analysis_spark.plans.registry import REGISTRY
-from geo_big_data_analysis_spark.session import CODEGEN_CACHE_ENTRIES
+from geo_big_data_analysis_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
+    default_driver_memory,
+)
 
 #: the TPC-H/window queries of perfbench's relational workload. In a
 #: fresh session at sf0.001 one cycle compiles 131 classes; under
@@ -48,3 +53,21 @@ def test_repeated_cycle_compiles_nothing(spark, sf_dir):
             REGISTRY[name][0](spark, sf_dir).write.format("noop").mode("overwrite").save()
         counts.append(_compiles(spark) - before)
     assert counts[1] == 0, counts
+
+
+@pytest.mark.parametrize(
+    "mem_total_kb, heap",
+    [
+        (16479424, "7g"),  # a 16 GB box: half its RAM, rounded down
+        (2**26, "16g"),  # 64 GiB: the 16g ceiling
+        (1048576, "1g"),  # 1 GiB: the 1g floor
+        (3 * 2**20, "1g"),  # 3 GiB: 1.5 GiB rounds down to 1g
+    ],
+)
+def test_default_driver_memory(mem_total_kb, heap):
+    meminfo = (
+        f"MemTotal:       {mem_total_kb} kB\n"
+        "MemFree:         1000000 kB\n"
+        "MemAvailable:    2000000 kB\n"
+    )
+    assert default_driver_memory(meminfo) == heap

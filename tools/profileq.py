@@ -14,20 +14,38 @@ Usage:
   python tools/profileq.py [--sf SF_DIR] [--tag before|after] [--iters N]
                            [--plans-dir DIR] query [query ...]
 
-Prints one line per query: `<median_sec>  <iqr>  <compiles>  <jobs>  <name>`
+Prints one line per query:
+`<median_sec> <iqr> <compiles> <jobs> <py_s> <jit_s> <gc_s> <task_s> <other_s>  <name>`
 and a total. `compiles` is the number of classes Janino compiled across
 the timed iterations (Spark's `CodegenMetrics`). After the warm run it
 should be 0; a non-zero count points to a plan whose generated code
 changes on every call. `jobs` is the most Spark jobs any timed iteration
 fired while `fn(spark, sf)` built the plan, before the write: eager
 probes, checkpoints and collects (a schema-inference job would show here
-too). This is a measurement tool: it never touches the bench contract.
+too).
+
+The `*_s` columns are CPU seconds per timed iteration (the mean), read
+from `/proc` (Linux only):
+  - `py_s`: Python-worker processes of the session, i.e. every
+    descendant of the JVM (pyspark's daemon and its forked workers; a
+    reaped worker's CPU is counted in the daemon's children's time);
+  - `jit_s`, `gc_s`, `task_s`: live JVM threads named `C1/C2
+    CompilerThread*`, `GC Thread*`/`G1 *`, and `Executor task launch
+    worker*`;
+  - `other_s`: the JVM process's CPU minus those three. Besides the
+    driver, scheduler and Netty threads it holds the CPU of every
+    thread that exited between the snapshots (HotSpot's dynamic
+    compiler threads, per-task Python-runner threads), which a sum over
+    live threads misses.
+The driver's own Python process is not counted. This is a measurement
+tool: it never touches the bench contract.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import re
 import statistics
 import sys
 import time
@@ -36,6 +54,67 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from geo_big_data_analysis_spark.plans.registry import REGISTRY  # noqa: E402
 from geo_big_data_analysis_spark.session import get_spark  # noqa: E402
+
+_TICK = os.sysconf("SC_CLK_TCK")
+#: JVM thread name (the 15-byte ``comm``) -> CPU class
+_THREAD_CLASSES = (
+    ("jit", re.compile(r"C[12] CompilerThre")),
+    ("gc", re.compile(r"GC Thread|G1 ")),
+    ("task", re.compile(r"Executor task l")),
+)
+
+
+def _stat(path: str) -> tuple[str, list[str]] | None:
+    """(comm, fields from 3 on) of a /proc stat file, None if it is gone."""
+    try:
+        with open(path) as fh:
+            raw = fh.read()
+    except OSError:
+        return None
+    head, _, rest = raw.rpartition(")")
+    return head.partition("(")[2], rest.split()
+
+
+def _cpu_snapshot(jvm_pid: int) -> dict:
+    """CPU ticks of the JVM process, of each live JVM thread by class
+    (keyed by thread id and start time, so a reused id is a new thread),
+    and of the JVM's descendant processes together (Python workers)."""
+    st = _stat(f"/proc/{jvm_pid}/stat")
+    snap = {"jvm": int(st[1][11]) + int(st[1][12]), "threads": {}, "py": 0}
+    task_dir = f"/proc/{jvm_pid}/task"
+    for tid in os.listdir(task_dir):
+        st = _stat(f"{task_dir}/{tid}/stat")
+        if st is None:
+            continue
+        comm, f = st
+        cls = next((c for c, pat in _THREAD_CLASSES if pat.match(comm)), None)
+        if cls:
+            snap["threads"][(tid, f[19])] = (cls, int(f[11]) + int(f[12]))
+    procs = {}
+    for pid in os.listdir("/proc"):
+        if pid.isdigit() and (st := _stat(f"/proc/{pid}/stat")) is not None:
+            procs[pid] = st[1]
+    children: dict[str, list[str]] = {}
+    for pid, f in procs.items():
+        children.setdefault(f[1], []).append(pid)
+    todo = list(children.get(str(jvm_pid), []))
+    while todo:
+        pid = todo.pop()
+        f = procs[pid]
+        # own time plus reaped children's: a worker that exits moves
+        # into its parent's cutime/cstime, so the total stays whole
+        snap["py"] += sum(int(x) for x in f[11:15])
+        todo.extend(children.get(pid, []))
+    return snap
+
+
+def _cpu_split(before: dict, after: dict) -> dict[str, float]:
+    """CPU seconds between two snapshots: py, jit, gc, task and other."""
+    out = {"py": after["py"] - before["py"], "jit": 0, "gc": 0, "task": 0}
+    for key, (cls, ticks) in after["threads"].items():
+        out[cls] += ticks - before["threads"].get(key, (cls, 0))[1]
+    out["other"] = after["jvm"] - before["jvm"] - out["jit"] - out["gc"] - out["task"]
+    return {k: v / _TICK for k, v in out.items()}
 
 
 def main() -> None:
@@ -52,6 +131,7 @@ def main() -> None:
     spark = get_spark("profileq")
     spark.range(10).count()  # JVM warm
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
 
     total = 0.0
     for name in args.queries:
@@ -72,6 +152,7 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001 - the timed runs below raise it again
             print(f"warm run failed: {name}: {type(e).__name__}: {e}", file=sys.stderr, flush=True)
         compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
+        cpu0 = _cpu_snapshot(jvm_pid)
         runs, jobs = [], 0
         for i in range(args.iters):
             build = f"profileq {name} build {i}"
@@ -84,6 +165,7 @@ def main() -> None:
             # job-start events reach the status tracker through the listener bus
             sc._jsc.sc().listenerBus().waitUntilEmpty()
             jobs = max(jobs, len(sc.statusTracker().getJobIdsForGroup(build)))
+        cpu = _cpu_split(cpu0, _cpu_snapshot(jvm_pid))
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
         compiles = codegen.METRIC_COMPILATION_TIME().getCount() - compiles0
@@ -91,8 +173,11 @@ def main() -> None:
         med = statistics.median(runs)
         iqr = (runs[-1] - runs[0]) if len(runs) > 1 else 0.0
         total += med
-        print(f"{med:8.3f} {iqr:7.3f} {compiles:5d} {jobs:5d}  {name}", flush=True)
-    print(f"{total:8.3f}                      TOTAL ({len(args.queries)} queries)")
+        split = " ".join(
+            f"{cpu[k] / args.iters:7.3f}" for k in ("py", "jit", "gc", "task", "other")
+        )
+        print(f"{med:8.3f} {iqr:7.3f} {compiles:5d} {jobs:5d} {split}  {name}", flush=True)
+    print(f"{total:8.3f}{'':63}TOTAL ({len(args.queries)} queries)")
 
 
 if __name__ == "__main__":
