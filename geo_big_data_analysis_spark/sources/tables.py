@@ -117,8 +117,10 @@ def local_frame(spark: SparkSession, rows: Iterable[tuple], ddl: str) -> DataFra
     ``None`` for null."""
     struct = DataType.fromDDL(ddl)
     arrow = to_arrow_schema(struct)
-    cols = list(zip(*rows)) or [()] * len(arrow)
+    # strict: a row of the wrong width raises, as the list path does
+    cols = list(zip(*rows, strict=True)) or [()] * len(arrow)
     table = pa.Table.from_arrays(
-        [pa.array(col, type=f.type) for col, f in zip(cols, arrow)], schema=arrow
+        [pa.array(col, type=f.type) for col, f in zip(cols, arrow, strict=True)],
+        schema=arrow,
     )
     return spark.createDataFrame(table, struct)

@@ -49,6 +49,12 @@ def test_parity_with_create_dataframe(spark, shape):
     assert new.collect() == old.collect()
 
 
+@pytest.mark.parametrize("rows", [[(1, 1.0), (2, 2.0, 3)], [(1, 1.0, 3)]])
+def test_wrong_row_width_raises(spark, rows):
+    with pytest.raises(ValueError):
+        local_frame(spark, rows, "id bigint, x double")
+
+
 def test_no_python_rdd(spark):
     rows, ddl = SHAPES["nullable_numbers"]
     # the probe tells the two paths apart: the list path replays pickled
