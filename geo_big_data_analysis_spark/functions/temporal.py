@@ -47,13 +47,6 @@ def is_weekend(col) -> Column:
     return (dayofweek_monday0(col) >= 5).cast("int")
 
 
-def seconds_between(end, start) -> Column:
-    """(end - start) in seconds (ghy_实习二.py:31; stat_html.py:80)."""
-    e = F.col(end) if isinstance(end, str) else end
-    s = F.col(start) if isinstance(start, str) else start
-    return (F.unix_timestamp(e) - F.unix_timestamp(s)).cast("double")
-
-
 def time_interval_bucket(ts_col, is_holiday_col=None) -> Column:
     """Rule-based time-of-day bucket (lab2 nb cell 7 ``get_time_interval``).
 

@@ -1,10 +1,18 @@
 """Deduplication suite for large-scale corpus processing.
 
-Exact dedup (hash-groupBy), MinHash+LSH near-dup, SimHash, and n-gram
-Jaccard verification — the operators a pretraining-data pipeline runs
-over the `documents` table. All hash functions are Spark built-ins
-(xxhash64) or integer arithmetic, so every stage stays JVM-side and the
-shuffle keys are integers.
+MinHash+LSH near-dup, SimHash, and n-gram Jaccard verification — the
+operators a pretraining-data pipeline runs over the `documents` table.
+All hash functions are Spark built-ins (xxhash64, md5) or integer
+arithmetic, so every stage stays JVM-side and the shuffle keys are
+integers.
+
+This module is the one definition of the MinHash sketch: the modulus
+:data:`MINHASH_P`, the permutation family (:func:`minhash_coeffs`), the
+signature aggregate (:func:`minhash_signature`), the cross-engine
+word-bigram shingle hash (:func:`bigram_hash_rows`) and the 2-row LSH
+banding (:func:`band_rows`). The stored dedup index
+(`sources/ann_index`), the registry's LSH queries and their DuckDB
+oracles all build on these.
 
 Scale shape: shingle→minhash is a map; LSH banding is a groupBy on a
 band-hash (uniform integer key); candidate verification is an equi-join
@@ -13,7 +21,7 @@ on doc_id. No cross product ever materializes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import clean_text
@@ -22,49 +30,84 @@ from ..functions.text import clean_text
 # below 2^63 (a,x < 2^31 → a*x < 2^62), so the arithmetic is exact AND
 # ANSI-safe (no long overflow) — the driver runs queries on a vanilla
 # ANSI-enabled Spark 4 session.
-_P = 2147483647
+MINHASH_P = 2147483647
 
 
-def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Exact duplicate groups keyed by normalized text hash.
+def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
+    """The permutation family h ↦ (a_j·h + b_j) mod P, j < num_hashes:
+    a_j = 2654435761·(j+1) mod P, b_j = 40503·(j+1) mod P. The DuckDB
+    oracles replay the same integers, so signatures match bit for
+    bit."""
+    return [
+        ((2654435761 * j) % MINHASH_P, (40503 * j) % MINHASH_P)
+        for j in range(1, num_hashes + 1)
+    ]
 
-    Returns one row per distinct text: (keep_id = min id, n_copies).
-    groupBy on a 64-bit hash — map-side partial agg then single shuffle.
-    """
-    return (
-        df.select(F.col(id_col), F.xxhash64(clean_text(text_col)).alias("text_hash"))
-        .groupBy("text_hash")
-        .agg(
-            F.min(id_col).alias("keep_id"),
-            F.count(F.lit(1)).cast("bigint").alias("n_copies"),
-        )
+
+def minhash_signature(hash_col: str, num_hashes: int) -> Column:
+    """Aggregate expression for a per-group MinHash signature over
+    shingle hashes in [0, P): element j is min over rows of
+    (a_j·hash + b_j) mod P. Min over the shingle multiset equals min
+    over the set, so no dedup pass is needed.
+
+    The whole signature is ONE parsed ``array(min(...), ...)``
+    expression: the Column-API form costs ~6 py4j round-trips per
+    permutation (~400 total), measured as ~2 s of pure driver
+    plan-build time per query at 64 hashes; a single ``F.expr`` parse
+    is one round-trip with an identical analyzed plan."""
+    terms = ", ".join(
+        f"min(pmod({hash_col} * {a}L + {b}L, {MINHASH_P}L))"
+        for a, b in minhash_coeffs(num_hashes)
+    )
+    return F.expr(f"array({terms})")
+
+
+def bigram_hash_rows(docs: DataFrame, *carry: str) -> DataFrame:
+    """(doc_id, *carry, h): each doc's DISTINCT word 2-gram shingles of
+    ``text`` (split on single spaces, empty tokens dropped; docs under
+    2 tokens emit nothing), hashed to the md5 60-bit prefix mod P.
+    That is the `simhash_docs` hash, which DuckDB recomputes
+    bit-identically (``('0x' || substr(md5(s), 1, 15))::BIGINT``), so
+    the oracles replay the whole sketch."""
+    toks = docs.withColumn(
+        "_toks", F.expr("filter(split(text, ' '), x -> x <> '')")
+    ).filter(F.size("_toks") >= 2)
+    return toks.select(
+        "doc_id",
+        *carry,
+        F.explode(
+            F.expr(
+                "array_distinct(transform(sequence(0, size(_toks) - 2),"
+                " i -> concat_ws(' ', _toks[i], _toks[i + 1])))"
+            )
+        ).alias("s"),
+    ).select(
+        "doc_id",
+        *carry,
+        F.expr(
+            f"cast(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT) % {MINHASH_P}"
+        ).alias("h"),
     )
 
 
-def shingles(text_col, n: int = 3):
-    """Word n-gram shingles of cleaned text → array<string>.
-
-    Built as a sliding-window ``zip_with`` chain (token array zipped
-    with its shifted selves) instead of a per-index ``slice``+concat
-    lambda: the latter re-evaluates the tokenizer for every index
-    (lambda bodies don't share subexpressions), i.e. O(tokens²) string
-    work per doc. ``concat`` propagates the zip padding nulls, so the
-    tail partials filter out and only full n-grams remain; docs shorter
-    than n tokens keep the reference's single partial shingle.
-    """
-    toks = F.split(clean_text(text_col), " ")
-    comb = toks
-    for k in range(1, n):
-        nxt = F.slice(toks, k + 1, F.greatest(F.size(toks) - k, F.lit(1)))
-        comb = F.zip_with(comb, nxt, lambda a, b: F.concat(a, F.lit(" "), b))
-    full = F.filter(comb, lambda x: x.isNotNull())
-    return F.when(F.size(toks) >= n, full).otherwise(
-        F.array(F.array_join(toks, " "))
-    )
+def band_rows(sig_df: DataFrame, bands: int) -> DataFrame:
+    """(doc_id, band, m0, m1) LSH bucket rows of a (doc_id, sig) frame
+    at 2 rows per band: band b's bucket is the integer pair
+    (sig[2b], sig[2b+1]), so candidate generation is an equi-join on
+    (band, m0, m1), never a hash of the pair."""
+    return sig_df.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                f"transform(sequence(0, {bands - 1}),"
+                " b -> struct(b AS band, sig[2 * b] AS m0, sig[2 * b + 1] AS m1))"
+            )
+        ).alias("_b"),
+    ).select("doc_id", "_b.band", "_b.m0", "_b.m1")
 
 
 def shingle_hash_rows(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3, mod_p: bool = False
+    df: DataFrame, text_col: str, id_col: str, n: int = 3
 ) -> DataFrame:
     """Word n-gram shingle hashes as ROWS: (doc_id, shingle bigint).
 
@@ -75,9 +118,7 @@ def shingle_hash_rows(
     contain the split delimiter, so the n-token tuple ↔ string shingle
     mapping is bijective: distinct-set semantics match string shingles
     exactly (modulo 2⁻⁶⁴ hash collisions). Docs shorter than n tokens
-    emit one partial shingle (hash of the full cleaned text), matching
-    :func:`shingles`. With ``mod_p`` the hash is reduced into [0, P)
-    for ANSI-safe permutation arithmetic (MinHash).
+    emit one partial shingle (hash of the full cleaned text).
     """
     from pyspark.sql import Window
 
@@ -108,29 +149,7 @@ def shingle_hash_rows(
     short = base.filter(F.size(F.split("_ct", " ")) < n).select(
         "doc_id", F.xxhash64("_ct").alias("shingle")
     )
-    out = full.unionByName(short)
-    if mod_p:
-        out = out.select("doc_id", F.pmod("shingle", F.lit(_P)).alias("shingle"))
-    return out
-
-
-def _signature_from_hash_rows(sh: DataFrame, num_hashes: int) -> DataFrame:
-    """64-min HashAggregate over (doc_id, _h) shingle-hash rows: for
-    permutation j, min over shingles of (a_j * _h + b_j) mod P. Min over
-    the shingle multiset equals min over the set, so no dedup pass is
-    needed.
-
-    The whole signature is ONE parsed ``array(min(...), ...)``
-    expression: the Column-API form costs ~6 py4j round-trips per
-    permutation (~400 total), measured as ~2 s of pure driver
-    plan-build time per query at 64 hashes; a single ``F.expr`` parse
-    is one round-trip with an identical analyzed plan."""
-    terms = ", ".join(
-        f"min(pmod(_h * {(2654435761 * (j + 1)) % _P}L"
-        f" + {40503 * (j + 1) % _P}L, {_P}L))"
-        for j in range(num_hashes)
-    )
-    return sh.groupBy("doc_id").agg(F.expr(f"array({terms})").alias("minhash"))
+    return full.unionByName(short)
 
 
 def lsh_candidates(signatures: DataFrame, bands: int = 16, rows_per_band: int = 4) -> DataFrame:
@@ -140,7 +159,7 @@ def lsh_candidates(signatures: DataFrame, bands: int = 16, rows_per_band: int = 
     Output: (doc_a, doc_b) with doc_a < doc_b, distinct.
     """
     # one parsed expression for the whole banding (see
-    # _signature_from_hash_rows for the py4j round-trip rationale);
+    # minhash_signature for the py4j round-trip rationale);
     # minhash[i] is 0-based in SQL, matching element_at(i+1)
     structs = ", ".join(
         "struct({b} AS band, xxhash64(concat_ws(',', {cols})) AS bucket)".format(
@@ -167,38 +186,6 @@ def lsh_candidates(signatures: DataFrame, bands: int = 16, rows_per_band: int = 
         .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
         .distinct()
     )
-
-
-def ngram_jaccard(df: DataFrame, text_col: str, id_col: str, pairs: DataFrame, shingle_n: int = 3) -> DataFrame:
-    """Exact n-gram Jaccard similarity for candidate pairs.
-
-    pairs: (doc_a, doc_b). Joins shingle sets by id (hash joins) and
-    computes |∩|/|∪| with array built-ins.
-
-    Only docs that appear in a candidate pair get their shingle array
-    built (semi-join prune): candidates are a vanishing fraction of the
-    corpus, and the string-shingle construction is the expensive part.
-    """
-    ids = (
-        pairs.select(F.col("doc_a").alias("_cand_id"))
-        .unionByName(pairs.select(F.col("doc_b").alias("_cand_id")))
-        .distinct()
-    )
-    sh = df.join(ids, F.col(id_col) == F.col("_cand_id"), "left_semi").select(
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(shingles(text_col, shingle_n)).alias("sh"),
-    )
-    out = (
-        pairs.join(sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
-        .join(sh.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
-        .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("n_union", F.size(F.array_union("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.when(F.col("n_union") > 0, F.col("n_inter") / F.col("n_union")).otherwise(0.0),
-        )
-    )
-    return out.select("doc_a", "doc_b", "jaccard")
 
 
 SIMHASH_BITS = 60
@@ -267,9 +254,12 @@ def minhash_near_dup_pairs(
     rows = shingle_hash_rows(df, text_col, id_col, shingle_n).localCheckpoint()
     # materialize signatures: the banding explode would otherwise inline
     # (and re-evaluate) the per-doc signature expression once per band
-    sigs = _signature_from_hash_rows(
-        rows.select("doc_id", F.pmod("shingle", F.lit(_P)).alias("_h")), num_hashes
-    ).localCheckpoint()
+    sigs = (
+        rows.select("doc_id", F.pmod("shingle", F.lit(MINHASH_P)).alias("_h"))
+        .groupBy("doc_id")
+        .agg(minhash_signature("_h", num_hashes).alias("minhash"))
+        .localCheckpoint()
+    )
     cands = lsh_candidates(sigs, bands, num_hashes // bands)
     verified = jaccard_from_shingle_rows(rows, cands)
     return verified.filter(F.col("jaccard") >= jaccard_threshold)
@@ -280,8 +270,7 @@ def jaccard_from_shingle_rows(sh_rows: DataFrame, pairs: DataFrame) -> DataFrame
     hash rows: |∩| by co-count equi-join, |∪| = |A|+|B|−|∩|.
 
     Pairs with no shared shingle (possible under band-hash collisions)
-    come out as jaccard 0.0 via the left join, matching the array
-    formulation (:func:`ngram_jaccard`).
+    come out as jaccard 0.0 via the left join.
     """
     sh = sh_rows.distinct()
     counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))

@@ -42,6 +42,17 @@ from ..operators.similarity import (
     label_centroids,
     with_cosine,
 )
+from ..sources.ann_index import (
+    _MH_IDX_BANDS,
+    _MH_IDX_HASHES,
+    _MH_IDX_MOD,
+    _MH_IDX_TAU,
+    _mh_probe_pairs,
+    ensure_ivfpq_index,
+    ensure_ivfpq_upsert,
+    ensure_minhash_index,
+    ensure_minhash_upsert,
+)
 from ..sources.tables import local_frame, parquet_schema, read_parquet
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -1170,8 +1181,8 @@ def q_lsh_sensitivity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Fully cross-engine: shingle hash is the md5-prefix bigint (the
     `simhash_docs` idiom — bit-identical in DuckDB), MinHash
-    permutations are the same (a·h+b) mod P integer arithmetic as
-    `operators/dedup.py:141`, so the oracle replays the ENTIRE
+    permutations are the package's one (a·h+b) mod P integer family
+    (`operators/dedup.minhash_signature`), so the oracle replays the ENTIRE
     sketch — signatures, band collisions, and the S-curve (power by
     explicit multiplication chain; IEEE multiply is correctly rounded,
     so the doubles match bitwise; averages sum in decimal).
@@ -1180,24 +1191,8 @@ def q_lsh_sensitivity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-min HashAggregate signatures, pair-level column arithmetic.
     Probe modulus doc_id % 3 = 0 bounds the pair volume like the other
     diagnostic probes."""
-    P = 2_147_483_647
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 0)
-        .withColumn("_toks", F.expr("filter(split(text, ' '), x -> x <> '')"))
-        .filter(F.size("_toks") >= 2)
-    )
-    sh = docs.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "array_distinct(transform(sequence(0, size(_toks) - 2),"
-                " i -> concat_ws(' ', _toks[i], _toks[i + 1])))"
-            )
-        ).alias("s"),
-    ).withColumn(
-        "h",
-        F.expr("cast(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT) % 2147483647"),
+    sh = dd.bigram_hash_rows(
+        _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0)
     )
     # r9 rewrite (guide §2.3 "shuffle keys instead of payloads" / §8):
     # the original carried collect_set(h) hash-set ARRAYS per doc
@@ -1214,14 +1209,9 @@ def q_lsh_sensitivity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # jr = round(inter/(na+nb−inter), 6) — same ints, same double
     # division, bit-identical. Every pair shares its rare shingle's h,
     # so inter ≥ 1 and the joins stay inner.
-    mins = ", ".join(
-        f"min(pmod(h * {(2654435761 * (j + 1)) % P}L + {40503 * (j + 1) % P}L,"
-        f" {P}L))"
-        for j in range(16)
-    )
     sh = sh.localCheckpoint(eager=False)
     shd = sh.select("doc_id", "h").distinct().localCheckpoint(eager=False)
-    per_sig = sh.groupBy("doc_id").agg(F.expr(f"array({mins})").alias("sig"))
+    per_sig = sh.groupBy("doc_id").agg(dd.minhash_signature("h", 16).alias("sig"))
     counts = shd.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     rare = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df")).filter(F.col("df") <= 20)
     capped = sh.join(rare, "h")
@@ -1308,6 +1298,15 @@ def q_lsh_sensitivity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _duckdb_minhash_mins(num_hashes: int) -> str:
+    """DuckDB replay of `dd.minhash_signature` over column h: the body
+    of the oracles' ``[{mins}] AS sig`` list, same integers."""
+    return ", ".join(
+        f"min((h * {a} + {b}) % {dd.MINHASH_P})"
+        for a, b in dd.minhash_coeffs(num_hashes)
+    )
+
+
 _SQL_LSH_SENSITIVITY = """
 WITH t AS (
   SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
@@ -1366,94 +1365,7 @@ SELECT bucket, count(*)::BIGINT AS n_pairs,
        round(sum(round(expected, 6)::DECIMAL(20,10))::DOUBLE / count(*), 6)
          AS expected_rate
 FROM flagged GROUP BY bucket ORDER BY bucket
-""".format(
-    mins=", ".join(
-        f"min((h * {(2654435761 * (j + 1)) % 2_147_483_647}"
-        f" + {40503 * (j + 1) % 2_147_483_647}) % 2147483647)"
-        for j in range(16)
-    )
-)
-
-
-_MH_IDX_HASHES, _MH_IDX_BANDS, _MH_IDX_MOD, _MH_IDX_TAU = 16, 8, 10, 0.3
-
-
-def _mh_probe_shingle_rows(docs: DataFrame) -> DataFrame:
-    """(doc_id, source, h) hashed 2-gram shingle rows with the index's
-    exact cross-engine hash (`sources/ann_index.shingle_hash_expr`)."""
-    from ..sources.ann_index import shingle_hash_expr
-
-    toks = docs.withColumn(
-        "_toks", F.expr("filter(split(text, ' '), x -> x <> '')")
-    ).filter(F.size("_toks") >= 2)
-    return toks.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.expr(
-                "array_distinct(transform(sequence(0, size(_toks) - 2),"
-                " i -> concat_ws(' ', _toks[i], _toks[i + 1])))"
-            )
-        ).alias("s"),
-    ).select("doc_id", "source", F.expr(shingle_hash_expr()).alias("h"))
-
-
-def _mh_probe_pairs(
-    delta: DataFrame, bands: DataFrame, base_sh: DataFrame
-) -> DataFrame:
-    """Verified near-dup pairs of a delta batch against the stored
-    index: (probe_id, source, base_id, jr) — sketch the batch with the
-    index's permutation family, candidates from the persisted band
-    table, exact hashed-shingle Jaccard ≥ τ. Shared by the batch query
-    and its foreachBatch streaming twin."""
-    from ..sources.ann_index import minhash_sig_exprs
-
-    dsh = _mh_probe_shingle_rows(delta).localCheckpoint(eager=False)
-    mins = ", ".join(minhash_sig_exprs(_MH_IDX_HASHES))
-    dsig = dsh.groupBy("doc_id").agg(
-        F.expr(f"array({mins})").alias("sig"),
-        F.first("source").alias("source"),
-        F.collect_set("h").alias("hs"),
-    )
-    dbands = dsig.select(
-        F.col("doc_id").alias("probe_id"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {_MH_IDX_BANDS - 1}),"
-                " b -> struct(b AS band, sig[2 * b] AS m0, sig[2 * b + 1] AS m1))"
-            )
-        ).alias("_b"),
-    ).select("probe_id", "_b.band", "_b.m0", "_b.m1")
-    cand = (
-        dbands.join(bands, ["band", "m0", "m1"])
-        .select("probe_id", F.col("doc_id").alias("base_id"))
-        .distinct()
-    )
-    base_sets = (
-        base_sh.join(
-            cand.select(F.col("base_id").alias("doc_id")).distinct(), "doc_id"
-        )
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("hs_b"))
-    )
-    return (
-        cand.join(
-            dsig.select(
-                F.col("doc_id").alias("probe_id"), "source", "hs"
-            ),
-            "probe_id",
-        )
-        .join(base_sets.withColumnRenamed("doc_id", "base_id"), "base_id")
-        .withColumn("_i", F.size(F.array_intersect("hs", "hs_b")))
-        .withColumn(
-            "jr",
-            F.round(
-                F.col("_i") / (F.size("hs") + F.size("hs_b") - F.col("_i")), 6
-            ),
-        )
-        .filter(F.col("jr") >= _MH_IDX_TAU)
-        .select("probe_id", "source", "base_id", "jr")
-    )
+""".format(mins=_duckdb_minhash_mins(16))
 
 
 def q_minhash_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1470,8 +1382,6 @@ def q_minhash_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch build. 100 TB shape: sketching is one pass + one
     groupBy; every later ingest batch probes this table instead of
     re-sketching the corpus."""
-    from ..sources.ann_index import ensure_minhash_index
-
     bands, _sh, _meta = ensure_minhash_index(
         spark, sf_dir, num_hashes=_MH_IDX_HASHES, bands=_MH_IDX_BANDS,
         split_mod=_MH_IDX_MOD,
@@ -1485,6 +1395,25 @@ def q_minhash_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("m1").alias("sum_m1"),
         )
         .orderBy("band")
+    )
+
+
+def _probe_summary(pairs: DataFrame) -> DataFrame:
+    """Per delta-doc source: matched docs, pairs, and the mean and max
+    Jaccard of verified (probe_id, source, base_id, jr) probe pairs."""
+    return (
+        pairs.groupBy("source")
+        .agg(
+            F.count_distinct("probe_id").alias("n_matched_docs"),
+            F.count(F.lit(1)).alias("n_pairs"),
+            F.round(
+                F.sum(F.col("jr").cast("decimal(20,10)")).cast("double")
+                / F.count(F.lit(1)),
+                6,
+            ).alias("avg_jaccard"),
+            F.max("jr").alias("max_jaccard"),
+        )
+        .orderBy("source")
     )
 
 
@@ -1505,8 +1434,6 @@ def q_near_dup_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves stored-probe ≡ recompute-from-scratch. avg_jaccard sums
     6dp-quantized values in DECIMAL so reassociation can't flip the
     rounding boundary."""
-    from ..sources.ann_index import ensure_minhash_index, minhash_sig_exprs
-
     bands, base_sh, _meta = ensure_minhash_index(
         spark, sf_dir, num_hashes=_MH_IDX_HASHES, bands=_MH_IDX_BANDS,
         split_mod=_MH_IDX_MOD,
@@ -1515,21 +1442,7 @@ def q_near_dup_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = docs.filter(F.col("doc_id") % _MH_IDX_MOD == 0).select(
         "doc_id", "source", "text"
     )
-    verified = _mh_probe_pairs(delta, bands, base_sh)
-    return (
-        verified.groupBy("source")
-        .agg(
-            F.count_distinct("probe_id").alias("n_matched_docs"),
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.round(
-                F.sum(F.col("jr").cast("decimal(20,10)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("avg_jaccard"),
-            F.max("jr").alias("max_jaccard"),
-        )
-        .orderBy("source")
-    )
+    return _probe_summary(_mh_probe_pairs(delta, bands, base_sh))
 
 
 def q_streaming_near_dup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1546,29 +1459,10 @@ def q_streaming_near_dup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with scoped_shuffle_partitions(spark):
         pairs = near_dup_probe_stream(spark, sf_dir, split_mod=_MH_IDX_MOD)
-    return (
-        pairs.groupBy("source")
-        .agg(
-            F.count_distinct("probe_id").alias("n_matched_docs"),
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.round(
-                F.sum(F.col("jr").cast("decimal(20,10)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("avg_jaccard"),
-            F.max("jr").alias("max_jaccard"),
-        )
-        .orderBy("source")
-    )
+    return _probe_summary(pairs)
 
 
-def _mh_idx_sql_parts() -> tuple[str, str]:
-    mins = ", ".join(
-        f"min((h * {(2654435761 * (j + 1)) % 2_147_483_647}"
-        f" + {40503 * (j + 1) % 2_147_483_647}) % 2147483647)"
-        for j in range(_MH_IDX_HASHES)
-    )
-    sh = """
+_MH_IDX_SHINGLE_CTES = """
 t{side} AS (
   SELECT doc_id, source, list_filter(string_split(text, ' '), x -> x <> '') AS toks
   FROM documents WHERE doc_id % 10 {op} 0
@@ -1583,7 +1477,14 @@ sh{side} AS (
     FROM t{side} WHERE len(toks) >= 2
   )
 )"""
-    return mins, sh
+# Placeholders shared by the three stored-index oracles.
+_MH_IDX_SQL = dict(
+    base_ctes=_MH_IDX_SHINGLE_CTES.format(side="b", op="!="),
+    delta_ctes=_MH_IDX_SHINGLE_CTES.format(side="d", op="=").lstrip(",\n"),
+    mins=_duckdb_minhash_mins(_MH_IDX_HASHES),
+    bands=_MH_IDX_BANDS,
+    tau=_MH_IDX_TAU,
+)
 
 
 _SQL_MINHASH_INDEX_BUILD = """
@@ -1599,11 +1500,7 @@ SELECT band::INT AS band, count(*)::BIGINT AS n_rows,
        count(DISTINCT (m0, m1))::BIGINT AS n_buckets,
        sum(m0)::BIGINT AS sum_m0, sum(m1)::BIGINT AS sum_m1
 FROM rows_ GROUP BY band ORDER BY band
-""".format(
-    base_ctes=_mh_idx_sql_parts()[1].format(side="b", op="!="),
-    mins=_mh_idx_sql_parts()[0],
-    bands=_MH_IDX_BANDS,
-)
+""".format(**_MH_IDX_SQL)
 
 
 _SQL_NEAR_DUP_PROBE = """
@@ -1640,13 +1537,7 @@ SELECT source, count(DISTINCT probe_id)::BIGINT AS n_matched_docs,
        max(jr) AS max_jaccard
 FROM verified WHERE jr >= {tau}
 GROUP BY source ORDER BY source
-""".format(
-    base_ctes=_mh_idx_sql_parts()[1].format(side="b", op="!="),
-    delta_ctes=_mh_idx_sql_parts()[1].format(side="d", op="=").lstrip(",\n"),
-    mins=_mh_idx_sql_parts()[0],
-    bands=_MH_IDX_BANDS,
-    tau=_MH_IDX_TAU,
-)
+""".format(**_MH_IDX_SQL)
 
 
 def q_minhash_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1665,11 +1556,9 @@ def q_minhash_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     append ≡ from-scratch rebuild over base ∪ admitted. 100 TB shape:
     per ingest batch, one stored-index probe + append-only parquet of
     the batch's own sketch rows; nothing rescans the corpus."""
-    from ..sources.ann_index import ensure_minhash_upsert
-
     bands, _sh, _meta = ensure_minhash_upsert(
         spark, sf_dir, num_hashes=_MH_IDX_HASHES, bands=_MH_IDX_BANDS,
-        split_mod=_MH_IDX_MOD, tau_note=_MH_IDX_TAU,
+        split_mod=_MH_IDX_MOD,
     )
     return (
         bands.groupBy("band")
@@ -1726,13 +1615,7 @@ SELECT band::INT AS band, count(*)::BIGINT AS n_rows,
        count(DISTINCT (m0, m1))::BIGINT AS n_buckets,
        sum(m0)::BIGINT AS sum_m0, sum(m1)::BIGINT AS sum_m1
 FROM rows_ GROUP BY band ORDER BY band
-""".format(
-    base_ctes=_mh_idx_sql_parts()[1].format(side="b", op="!="),
-    delta_ctes=_mh_idx_sql_parts()[1].format(side="d", op="=").lstrip(",\n"),
-    mins=_mh_idx_sql_parts()[0],
-    bands=_MH_IDX_BANDS,
-    tau=_MH_IDX_TAU,
-)
+""".format(**_MH_IDX_SQL)
 
 
 def q_near_dup_clusters_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2611,8 +2494,6 @@ def q_ivfpq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     cycle is lossless. 100 TB shape: this is the amortized build step —
     training is 1+iters distributed jobs, encode+assign are map-only,
     and the artifact scan afterwards is a few ints per vector."""
-    from ..sources.ann_index import ensure_ivfpq_index
-
     codes, _centers, _cbs, _meta = ensure_ivfpq_index(
         spark, sf_dir, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K,
         iters=_PQ_ITERS, scale=_PQ_SCALE,
@@ -2671,8 +2552,6 @@ def q_ivfpq_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode-with-base-codebooks, i.e. admission is lossless. 100 TB
     shape: ingest batches cost one map-side encode + an append; the
     retrain trigger bounds quantization drift."""
-    from ..sources.ann_index import ensure_ivfpq_upsert
-
     codes, _centers, _cbs, _meta = ensure_ivfpq_upsert(
         spark, sf_dir, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K,
         iters=_PQ_ITERS, scale=_PQ_SCALE, split_mod=_PQ_UPSERT_MOD,
@@ -2754,7 +2633,6 @@ def q_ivfpq_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (m+2 ints/vector) + one integer-cell equi-join against the
     broadcast query side."""
     from ..operators.similarity import ivfpq_probe
-    from ..sources.ann_index import ensure_ivfpq_index
 
     codes, centers, cbs, _meta = ensure_ivfpq_index(
         spark, sf_dir, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K,
@@ -3003,7 +2881,6 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay doubles as the staleness gate: a stored index that drifted
     from the data would fail the hash."""
     from ..operators.similarity import ivfpq_probe
-    from ..sources.ann_index import ensure_ivfpq_index
 
     codes, centers, cbs, _meta = ensure_ivfpq_index(
         spark, sf_dir, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K,

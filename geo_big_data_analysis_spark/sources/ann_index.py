@@ -21,6 +21,12 @@ This module is that storage layer:
 - ``upsert_ivfpq_index`` / ``upsert_minhash_index`` append delta
   batches with the STORED codebooks/permutations (incremental
   admission — see each docstring).
+- ``build_minhash_index`` / ``load_minhash_index`` /
+  ``ensure_minhash_index`` are the same layer for the MinHash-LSH dedup
+  index (band table + hashed shingle rows, sketched with
+  `operators/dedup`'s MinHash core), and ``_mh_probe_pairs`` is its
+  stored-index probe, shared by `near_dup_probe_stored`, the
+  streaming ingest screen and the upsert's admission.
 
 The stored probe (`operators/similarity.ivfpq_probe`) hash-matches the
 retrain-inline path (`ivfpq_topk`) because every fitted artifact is
@@ -39,6 +45,7 @@ import struct
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import dedup as dd
 from .tables import read_parquet
 
 
@@ -147,10 +154,6 @@ def load_ivfpq_index(
     return codes, centers, meta["codebooks"], meta
 
 
-#: MinHash permutation modulus (2^31 − 1; keeps a·h + b inside int64)
-MINHASH_P = 2_147_483_647
-
-
 def _table_fingerprint(sf_dir: str, table: str) -> str:
     """Size + mtime + footer-content change-detector for any fixture
     table."""
@@ -171,59 +174,15 @@ def _table_fingerprint(sf_dir: str, table: str) -> str:
     return f"{total}_{mtime}_{_footer_digest(parts)}"
 
 
-def minhash_sig_exprs(num_hashes: int) -> list[str]:
-    """The cross-engine MinHash permutation family over the md5-prefix
-    shingle hash ``h``: min over pmod(A_j·h + B_j, P) with
-    A_j = 2654435761·(j+1) mod P, B_j = 40503·(j+1) mod P — the exact
-    integer arithmetic DuckDB replays bit-identically
-    (`lsh_sensitivity_report` idiom)."""
-    out = []
-    for j in range(num_hashes):
-        a = (2654435761 * (j + 1)) % MINHASH_P
-        b = (40503 * (j + 1)) % MINHASH_P
-        out.append(f"min(pmod(h * {a}L + {b}L, {MINHASH_P}L))")
-    return out
-
-
-def shingle_hash_expr() -> str:
-    """2-gram word-shingle rows hashed to the md5-prefix bigint (the
-    cross-engine `simhash_docs` idiom)."""
-    return (
-        "cast(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)"
-        f" % {MINHASH_P}"
-    )
-
-
 def _minhash_sketch(
     docs: DataFrame, num_hashes: int, bands: int
 ) -> tuple[DataFrame, DataFrame]:
     """(shingle_rows, band_rows) for (doc_id, text) docs under the
     index's permutation family — shared by build and upsert so an
     appended sketch is bit-equal to a from-scratch one."""
-    toks = docs.withColumn(
-        "_toks", F.expr("filter(split(text, ' '), x -> x <> '')")
-    ).filter(F.size("_toks") >= 2)
-    sh = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "array_distinct(transform(sequence(0, size(_toks) - 2),"
-                " i -> concat_ws(' ', _toks[i], _toks[i + 1])))"
-            )
-        ).alias("s"),
-    ).select("doc_id", F.expr(shingle_hash_expr()).alias("h"))
-    mins = ", ".join(minhash_sig_exprs(num_hashes))
-    sig = sh.groupBy("doc_id").agg(F.expr(f"array({mins})").alias("sig"))
-    band_rows = sig.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}),"
-                " b -> struct(b AS band, sig[2 * b] AS m0, sig[2 * b + 1] AS m1))"
-            )
-        ).alias("_b"),
-    ).select("doc_id", "_b.band", "_b.m0", "_b.m1")
-    return sh, band_rows
+    sh = dd.bigram_hash_rows(docs)
+    sig = sh.groupBy("doc_id").agg(dd.minhash_signature("h", num_hashes).alias("sig"))
+    return sh, dd.band_rows(sig, bands)
 
 
 def build_minhash_index(
@@ -275,6 +234,60 @@ def load_minhash_index(
     return bands, shingles, meta
 
 
+#: The stored dedup index's configuration: 16 permutations in 8 bands
+#: of 2 rows, sketched over the base split (doc_id % 10 != 0) and
+#: probed with the delta split; a probe pair is kept at exact
+#: hashed-shingle Jaccard ≥ τ (recorded in an upsert's meta.json).
+_MH_IDX_HASHES, _MH_IDX_BANDS, _MH_IDX_MOD, _MH_IDX_TAU = 16, 8, 10, 0.3
+
+
+def _mh_probe_pairs(
+    delta: DataFrame, bands: DataFrame, base_sh: DataFrame
+) -> DataFrame:
+    """Verified near-dup pairs of a delta batch against the stored
+    index: (probe_id, source, base_id, jr) — sketch the batch with the
+    index's permutation family, candidates from the persisted band
+    table, exact hashed-shingle Jaccard ≥ τ. Shared by the batch query,
+    its foreachBatch streaming twin and the upsert's admission screen."""
+    dsh = dd.bigram_hash_rows(delta, "source").localCheckpoint(eager=False)
+    dsig = dsh.groupBy("doc_id").agg(
+        dd.minhash_signature("h", _MH_IDX_HASHES).alias("sig"),
+        F.first("source").alias("source"),
+        F.collect_set("h").alias("hs"),
+    )
+    dbands = dd.band_rows(dsig, _MH_IDX_BANDS).withColumnRenamed("doc_id", "probe_id")
+    cand = (
+        dbands.join(bands, ["band", "m0", "m1"])
+        .select("probe_id", F.col("doc_id").alias("base_id"))
+        .distinct()
+    )
+    base_sets = (
+        base_sh.join(
+            cand.select(F.col("base_id").alias("doc_id")).distinct(), "doc_id"
+        )
+        .groupBy("doc_id")
+        .agg(F.collect_set("h").alias("hs_b"))
+    )
+    return (
+        cand.join(
+            dsig.select(
+                F.col("doc_id").alias("probe_id"), "source", "hs"
+            ),
+            "probe_id",
+        )
+        .join(base_sets.withColumnRenamed("doc_id", "base_id"), "base_id")
+        .withColumn("_i", F.size(F.array_intersect("hs", "hs_b")))
+        .withColumn(
+            "jr",
+            F.round(
+                F.col("_i") / (F.size("hs") + F.size("hs_b") - F.col("_i")), 6
+            ),
+        )
+        .filter(F.col("jr") >= _MH_IDX_TAU)
+        .select("probe_id", "source", "base_id", "jr")
+    )
+
+
 def _minhash_index_dir(
     sf_dir: str,
     num_hashes: int,
@@ -320,8 +333,6 @@ def upsert_minhash_index(
     base_index_dir: str,
     delta: DataFrame,
     out_dir: str,
-    *,
-    tau_note: float,
 ) -> dict:
     """INCREMENTAL ADMISSION (VERDICT r5 "Next" #4): screen a delta
     batch against the stored index, then APPEND the sketches of the
@@ -329,16 +340,13 @@ def upsert_minhash_index(
     tables — the base corpus is never re-sketched, and because per-doc
     sketching carries no cross-doc state, append ≡ from-scratch rebuild
     over base ∪ admitted (the grading query proves this by hash).
-    ``delta`` must carry (doc_id, source, text); the verified-pair τ is
-    the probe pipeline's (`plans/registry._MH_IDX_TAU`), recorded here
-    for the meta trail only.
+    ``delta`` must carry (doc_id, source, text); the screen is
+    :func:`_mh_probe_pairs`, whose τ is recorded in the meta trail.
 
     100 TB shape: the probe is the stored-index candidate equi-join;
     admission writes are append-only parquet of the delta's own sketch
     rows. The only driver values are the two admission counters."""
     import shutil
-
-    from ..plans.registry import _mh_probe_pairs  # late import (cycle)
 
     bands_df, shingles_df, meta = load_minhash_index(spark, base_index_dir)
     pairs = _mh_probe_pairs(delta, bands_df, shingles_df)
@@ -360,7 +368,7 @@ def upsert_minhash_index(
             "n_delta": n_delta,
             "n_admitted": n_admitted,
             "n_rejected": n_delta - n_admitted,
-            "tau": tau_note,
+            "tau": _MH_IDX_TAU,
         },
     }
     with open(os.path.join(out_dir, "meta.json"), "w") as f:
@@ -375,7 +383,6 @@ def ensure_minhash_upsert(
     num_hashes: int,
     bands: int,
     split_mod: int,
-    tau_note: float,
     base_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame, dict]:
     """Post-upsert index over base split ∪ admitted delta docs,
@@ -393,7 +400,7 @@ def ensure_minhash_upsert(
         delta = _t(spark, sf_dir, "documents").filter(
             F.col("doc_id") % split_mod == 0
         ).select("doc_id", "source", "text")
-        upsert_minhash_index(spark, base_index, delta, out_dir, tau_note=tau_note)
+        upsert_minhash_index(spark, base_index, delta, out_dir)
     return load_minhash_index(spark, out_dir)
 
 

@@ -10,7 +10,7 @@ The probe pipeline needs two keyed aggregations (per-doc signature,
 then candidate dedup/verify), which Structured Streaming cannot chain
 declaratively in one query — so this uses ``foreachBatch``, the
 Spark-blessed pattern for exactly this case: each micro-batch runs the
-SAME batch probe (`plans/registry._mh_probe_pairs`) as a bounded batch
+SAME batch probe (`sources/ann_index._mh_probe_pairs`) as a bounded batch
 job and APPENDS the verified pair rows to a parquet sink. Every step
 stays distributed — the driver never touches pair rows; the sink is
 the parquet append an ingest pipeline would write anyway.
@@ -29,6 +29,12 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.ann_index import (
+    _MH_IDX_BANDS,
+    _MH_IDX_HASHES,
+    _mh_probe_pairs,
+    ensure_minhash_index,
+)
 from ..sources.tables import local_frame, parquet_schema
 
 
@@ -49,9 +55,6 @@ def near_dup_probe_stream(
     """Drain the delta split of the document stream through the
     stored-index probe; returns the pair-level sink as a batch
     DataFrame (probe_id, source, base_id, jr)."""
-    from ..plans.registry import _MH_IDX_BANDS, _MH_IDX_HASHES, _mh_probe_pairs
-    from ..sources.ann_index import ensure_minhash_index
-
     bands, base_sh, _meta = ensure_minhash_index(
         spark, sf_dir, num_hashes=_MH_IDX_HASHES, bands=_MH_IDX_BANDS,
         split_mod=split_mod,

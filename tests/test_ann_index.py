@@ -196,18 +196,17 @@ def test_minhash_ensure_caches(spark, sf_dir, tmp_path_factory):
     assert len(os.listdir(root)) == 2
 
 
-def test_minhash_sig_exprs_cross_engine(spark):
+def test_minhash_signature_cross_engine(spark):
     """The Spark signature arithmetic equals a direct integer replay
     (the DuckDB oracle's formula) on a hand-built shingle-hash set."""
-    from geo_big_data_analysis_spark.sources.ann_index import (
+    from geo_big_data_analysis_spark.operators.dedup import (
         MINHASH_P,
-        minhash_sig_exprs,
+        minhash_signature,
     )
 
     hs = [17, 9_999_991, 2_000_000_000, 12345]
     df = spark.createDataFrame([(1, h) for h in hs], "doc_id int, h long")
-    mins = ", ".join(minhash_sig_exprs(4))
-    got = df.groupBy("doc_id").agg(F.expr(f"array({mins})").alias("sig")).collect()[0]["sig"]
+    got = df.groupBy("doc_id").agg(minhash_signature("h", 4).alias("sig")).collect()[0]["sig"]
     for j in range(4):
         a = (2654435761 * (j + 1)) % MINHASH_P
         b = (40503 * (j + 1)) % MINHASH_P
@@ -219,13 +218,13 @@ def test_streaming_probe_pairs_equal_batch(spark, sf_dir, tmp_path_factory):
     batch probe's pair set exactly (availableNow drain over one fixture
     file — the batch-twin contract at row granularity, stronger than
     the aggregated registry comparison)."""
-    from geo_big_data_analysis_spark.plans.registry import (
+    from geo_big_data_analysis_spark.sources.ann_index import (
         _MH_IDX_BANDS,
         _MH_IDX_HASHES,
         _MH_IDX_MOD,
         _mh_probe_pairs,
+        ensure_minhash_index,
     )
-    from geo_big_data_analysis_spark.sources.ann_index import ensure_minhash_index
     from geo_big_data_analysis_spark.streaming.ingest import near_dup_probe_stream
 
     bands, base_sh, _ = ensure_minhash_index(
@@ -279,7 +278,7 @@ def test_minhash_upsert_rejects_dups_admits_novel(spark, tmp_path_factory):
         "doc_id bigint, source string, text string",
     )
     out_dir = base_dir + "_up"
-    meta = upsert_minhash_index(spark, base_dir, delta, out_dir, tau_note=0.3)
+    meta = upsert_minhash_index(spark, base_dir, delta, out_dir)
     assert meta["upsert"] == {
         "n_delta": 2, "n_admitted": 1, "n_rejected": 1, "tau": 0.3,
     }

@@ -174,15 +174,6 @@ def test_knn_grid_matches_bruteforce(spark):
             assert [n for _, n in sorted(by_q[q])] == nbrs
 
 
-def test_exact_dedup_counts(spark):
-    df = spark.createDataFrame(
-        [(1, "Hello  World!"), (2, "hello world"), (3, "different doc")],
-        ["doc_id", "text"],
-    )
-    out = {r.keep_id: r.n_copies for r in dedup.exact_dedup(df, "text", "doc_id").collect()}
-    assert out == {1: 2, 3: 1}
-
-
 def test_minhash_near_dup_finds_planted_pair(spark):
     base = "the quick brown fox jumps over the lazy dog again and again in the park"
     near = base.replace("lazy", "sleepy")
@@ -210,15 +201,6 @@ def test_simhash_similar_docs_close(spark):
         return bin((a ^ b) & ((1 << 64) - 1)).count("1")
     assert all(0 <= v < (1 << dedup.SIMHASH_BITS) for v in sh.values())
     assert hamming(sh[1], sh[2]) < hamming(sh[1], sh[3])
-
-
-def test_ngram_jaccard_identical_is_one(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c d e f g"), (2, "a b c d e f g")], ["doc_id", "text"]
-    )
-    pairs = spark.createDataFrame([(1, 2)], ["doc_a", "doc_b"])
-    out = dedup.ngram_jaccard(df, "text", "doc_id", pairs).first()
-    assert out.jaccard == 1.0
 
 
 def test_ngram_jaccard_all_pairs_exact(spark):

@@ -216,14 +216,14 @@ def _variant_near_dup_probe_fixed_batch(spark, sf_dir):
     under a real growing vocabulary."""
     from pyspark.sql import functions as F
 
-    from geo_big_data_analysis_spark.plans.registry import (
+    from geo_big_data_analysis_spark.plans.registry import _t
+    from geo_big_data_analysis_spark.sources.ann_index import (
         _MH_IDX_BANDS,
         _MH_IDX_HASHES,
         _MH_IDX_MOD,
         _mh_probe_pairs,
-        _t,
+        ensure_minhash_index,
     )
-    from geo_big_data_analysis_spark.sources.ann_index import ensure_minhash_index
 
     bands, base_sh, _ = ensure_minhash_index(
         spark, sf_dir, num_hashes=_MH_IDX_HASHES, bands=_MH_IDX_BANDS,
