@@ -1,14 +1,13 @@
-"""Deterministic distributed Lloyd's KMeans (M3 scale path, oracle-able).
+"""Deterministic distributed Lloyd's KMeans — the package's one k-means
+(M3: the reference's event clusters and Lab-2 KMeans zones).
 
 Reference parity target: sklearn/Spark-ML KMeans used for event
 clustering (实习一 DBSCAN/KMeans comparisons; SURVEY §2.9 M3). Spark
-ML's KMeans is the production path (`ml/pipeline.kmeans_fit_predict`,
-`kmeans_event_clusters`), but its k-means|| init is seeded RNG inside
-the JVM — no external oracle can replay it, so that query is
-rows-only-checked. This module is the complementary *exactly
-replayable* formulation: every arithmetic step is chosen so an
-independent engine (the driver's DuckDB oracle) reproduces bit-equal
-centroids:
+ML's k-means|| init is seeded RNG inside the JVM that no external
+oracle can replay, so the package fits every k-means here instead,
+with each arithmetic step chosen so an independent engine (the
+driver's DuckDB oracle, `plans/registry._sql_lloyd_ctes`) reproduces
+bit-equal centroids:
 
 - **Integer coordinates in, exact centroids out.** Inputs are bigint
   coords, so each cluster's coordinate sum is an exact bigint and the
@@ -18,55 +17,47 @@ centroids:
 - **Deterministic init**: the k points with smallest id, in id order
   (a distributed TakeOrderedAndProject — no RNG, no single-partition
   sort).
-- **Deterministic assignment**: squared distance written as
-  (x−cx)·(x−cx) + (y−cy)·(y−cy) in both engines (no pow(), no
-  reassociation), ties broken by lowest center index.
+- **Deterministic assignment**: squared distance written as the
+  left-folded per-coordinate sum (x−cx)·(x−cx) + (y−cy)·(y−cy) + … in
+  both engines (no pow(), no reassociation), ties broken by lowest
+  center index.
 - **Fixed iteration count** (no data-dependent convergence test), and
   empty clusters keep their previous center.
 
-Execution shape = the classic Spark KMeans loop: points localCheckpoint
-once; per iteration one codegen'd argmin projection + one hash agg
-collecting k rows to the driver; centers re-enter as literals. Nothing
-O(rows) ever reaches the driver.
+Two point layouts share one fit skeleton (`_fit`): `lloyd_kmeans` over
+one bigint column per coordinate, and `lloyd_kmeans_vec` over a bigint
+ARRAY column, whose argmin keeps a d=64 plan small. Execution shape =
+the classic Spark KMeans loop: points localCheckpoint once; per
+iteration one codegen'd argmin projection + one hash agg collecting k
+(or k·d) rows to the driver; centers re-enter as literals. Nothing
+O(rows) ever reaches the driver past `LLOYD_DRIVER_CAP`.
 """
 
 from __future__ import annotations
 
+import operator
+from collections.abc import Callable
+from functools import reduce
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread the iteration working set across the cluster before the
-    checkpoint. The fixtures arrive as single-row-group parquet files →
-    a 1-task scan → every Lloyd iteration's argmin ran on ONE core
-    (guide §2.5 "one huge unsplittable file: repartition immediately
-    after the read"). The target is ``defaultParallelism`` — cluster-
-    derived, not a local constant; when the input already has at least
-    that many partitions (any real at-scale scan) this is a no-op, so
-    the extra exchange is only paid where it buys parallelism.
-    Round-robin repartition keeps results exact: every later step is
-    an integer-sum aggregate or argmin projection, both
-    partitioning-independent. Measured on lloyd_kmeans@sf0.1:
-    3.8→2.5 s (6 iterations at ~0.6 s/iter single-core → ~0.15 s)."""
-    from ..operators.spread import spread
-
-    return spread(df)
-
+from ..operators.spread import spread
 
 #: Below this row count the center-update loop runs as a numpy driver
 #: kernel (r9 — the kcenter/graph bounded-dispatch convention): every
 #: Lloyd iteration otherwise pays a scheduled job whose collect returns
 #: only k (or k·d) aggregate rows, plus an interpreted zip_with argmin
-#: at the vec variant. The kernel is bit-identical: distances are the
+#: at the vec layout. The kernel is bit-identical: distances are the
 #: same left-associated folds (np.cumsum — 0.0 + t0 == t0 exactly),
 #: np.argmin takes the first minimum (the lowest-cid tie break), and
 #: centroid updates stay exact integer sums divided in Python. The
 #: labeled output and all downstream consumers keep reading the
 #: CHECKPOINTED distributed table; past the cap the per-iteration
-#: aggregate loop below is unchanged — at real scale the collect-k-rows
-#: loop is the right shape, the driver kernel only removes per-round
-#: scheduling overhead on bounded fits.
+#: aggregate loop in `_fit` runs instead — at real scale the
+#: collect-k-rows loop is the right shape, the driver kernel only
+#: removes per-round scheduling overhead on bounded fits.
 LLOYD_DRIVER_CAP = 100_000
 
 
@@ -80,85 +71,12 @@ def _driver_rows(pts: DataFrame, cap: int = LLOYD_DRIVER_CAP):
     return pdf if len(pdf) <= cap else None
 
 
-def _argmin_cid(centers: list[tuple[float, float]], x_col: str, y_col: str) -> Column:
-    """Index of the nearest center: sort k (dist, cid) structs, take
-    field 0 — a native SortArray over a k-element literal array (no
-    interpreted lambda, stays in codegen)."""
-    xd = F.col(x_col).cast("double")
-    yd = F.col(y_col).cast("double")
-    structs = []
-    for i, (cx, cy) in enumerate(centers):
-        d = (xd - F.lit(cx)) * (xd - F.lit(cx)) + (yd - F.lit(cy)) * (yd - F.lit(cy))
-        structs.append(F.struct(d.alias("d"), F.lit(i).alias("cid")))
-    return F.array_sort(F.array(*structs))[0]["cid"]
-
-
-def lloyd_kmeans(
-    df: DataFrame,
-    id_col: str,
-    x_col: str,
-    y_col: str,
-    k: int = 5,
-    iters: int = 6,
-) -> tuple[DataFrame, list[tuple[float, float]]]:
-    """Run ``iters`` exact Lloyd updates; returns (points labeled with
-    ``cluster_id`` under the FINAL centers, final centers list)."""
-    pts = _spread(
-        df.select(
-            F.col(id_col).alias("id"),
-            F.col(x_col).cast("bigint").alias("x"),
-            F.col(y_col).cast("bigint").alias("y"),
-        )
-    ).localCheckpoint()
-
-    pdf = _driver_rows(pts)
-    if pdf is not None:
-        import numpy as np
-
-        centers = _centers_driver_nd(
-            pdf["id"].to_numpy(dtype=np.int64),
-            pdf[["x", "y"]].to_numpy(dtype=np.int64),
-            k,
-            iters,
-        )
-        centers = [tuple(c) for c in centers]
-    else:
-        init = pts.orderBy("id").limit(k).collect()
-        if len(init) < k:
-            raise ValueError(f"need at least k={k} points, got {len(init)}")
-        centers = [(float(r["x"]), float(r["y"])) for r in init]
-
-        for _ in range(iters):
-            agg = (
-                pts.withColumn("cid", _argmin_cid(centers, "x", "y"))
-                .groupBy("cid")
-                .agg(
-                    F.sum("x").alias("sx"),
-                    F.sum("y").alias("sy"),
-                    F.count(F.lit(1)).alias("cnt"),
-                )
-                .collect()
-            )
-            got = {r["cid"]: r for r in agg}
-            centers = [
-                (got[i]["sx"] / got[i]["cnt"], got[i]["sy"] / got[i]["cnt"])
-                if i in got
-                else centers[i]
-                for i in range(k)
-            ]
-
-    labeled = pts.withColumn("cluster_id", _argmin_cid(centers, "x", "y"))
-    return labeled, centers
-
-
 def _centers_driver_nd(ids, X, k: int, iters: int) -> list[list[float]]:
-    """Shared numpy center-update kernel for all three Lloyd variants —
-    bit-identical to the distributed loop (see LLOYD_DRIVER_CAP note):
-    distances via per-coordinate left-fold (cumsum), first-minimum
-    argmin (lowest-cid tie break), exact int64 sums divided as Python
-    ints, empty clusters keep their center, init = k smallest ids."""
-    import numpy as np
-
+    """Numpy center-update kernel — bit-identical to the distributed
+    loop (see LLOYD_DRIVER_CAP note): distances via per-coordinate
+    left-fold (cumsum), first-minimum argmin (lowest-cid tie break),
+    exact int64 sums divided as Python ints, empty clusters keep their
+    center, init = k smallest ids (``iters=0`` is the init alone)."""
     if len(ids) < k:
         raise ValueError(f"need at least k={k} points, got {len(ids)}")
     Xd = X.astype(np.float64)
@@ -185,75 +103,84 @@ def _centers_driver_nd(ids, X, k: int, iters: int) -> list[list[float]]:
     return centers
 
 
-def _argmin_cid_nd(centers: list[list[float]], cols: list[str]) -> Column:
-    """N-dimensional argmin-center index — same SortArray trick as
-    `_argmin_cid`, squared distance unrolled per coordinate column."""
-    structs = []
-    for i, ctr in enumerate(centers):
-        d = None
-        for col, cv in zip(cols, ctr):
-            x = F.col(col).cast("double")
-            term = (x - F.lit(cv)) * (x - F.lit(cv))
-            d = term if d is None else d + term
-        structs.append(F.struct(d.alias("d"), F.lit(i).alias("cid")))
+def _fit(
+    pts: DataFrame,
+    k: int,
+    iters: int,
+    matrix: Callable,
+    argmin: Callable[[list[list[float]]], Column],
+    round_sums: Callable[[DataFrame], dict],
+) -> tuple[DataFrame, list[list[float]]]:
+    """The fit skeleton both layouts run. ``pts`` is (id, coordinates…);
+    ``matrix(pdf)`` is a pandas frame of it as an int64 (rows × d)
+    array, ``argmin(centers)`` the nearest-center column, and
+    ``round_sums(df)`` one distributed round's {cid: (coordinate sums,
+    count)} over ``df`` carrying a ``cid`` column. Returns (points
+    labeled with ``cluster_id`` under the FINAL centers, final centers).
+
+    ``spread`` first: the fixtures arrive as single-row-group parquet
+    files → a 1-task scan → every iteration's argmin ran on ONE core
+    (guide §2.5). Round-robin keeps results exact, since every later
+    step is an integer-sum aggregate or an argmin projection. Measured
+    on lloyd_kmeans@sf0.1: 3.8→2.5 s."""
+    pts = spread(pts).localCheckpoint()
+    pdf = _driver_rows(pts)
+    if pdf is not None:
+        centers = _centers_driver_nd(pdf["id"].to_numpy(dtype=np.int64), matrix(pdf), k, iters)
+    else:
+        init = pts.orderBy("id").limit(k).toPandas()
+        centers = _centers_driver_nd(init["id"].to_numpy(dtype=np.int64), matrix(init), k, 0)
+        for _ in range(iters):
+            got = round_sums(pts.withColumn("cid", argmin(centers)))
+            centers = [
+                [s / got[i][1] for s in got[i][0]] if i in got else centers[i]
+                for i in range(k)
+            ]
+    return pts.withColumn("cluster_id", argmin(centers)), centers
+
+
+def _nearest(dists: list[Column]) -> Column:
+    """Index of the smallest of ``dists``: sort k (dist, cid) structs,
+    take field 0 — a native SortArray over a k-element array (no
+    interpreted lambda, stays in codegen); equal distances sort by cid,
+    so the lowest index wins a tie."""
+    structs = [F.struct(d.alias("d"), F.lit(i).alias("cid")) for i, d in enumerate(dists)]
     return F.array_sort(F.array(*structs))[0]["cid"]
 
 
-def lloyd_kmeans_nd(
-    df: DataFrame,
-    id_col: str,
-    cols: list[str],
-    k: int,
-    iters: int,
+def _argmin_cid(centers: list[list[float]], cols: list[str]) -> Column:
+    """Nearest-center index over one column per coordinate, the squared
+    distance unrolled as a left fold of (x−cx)·(x−cx) terms."""
+
+    def sq(col: str, cv: float) -> Column:
+        x = F.col(col).cast("double")
+        return (x - F.lit(cv)) * (x - F.lit(cv))
+
+    return _nearest(
+        [reduce(operator.add, [sq(c, cv) for c, cv in zip(cols, ctr)]) for ctr in centers]
+    )
+
+
+def lloyd_kmeans(
+    df: DataFrame, id_col: str, cols: list[str], k: int, iters: int
 ) -> tuple[DataFrame, list[list[float]]]:
-    """Exact Lloyd in N dimensions over bigint coordinate columns —
-    the same bit-replayable contract as the 2-D version (exact integer
-    sums, smallest-id init, lowest-index tie break, empty clusters keep
-    their center), used as the PQ codebook trainer."""
-    pts = _spread(
-        df.select(
-            F.col(id_col).alias("id"), *[F.col(c).cast("bigint").alias(c) for c in cols]
+    """Run ``iters`` exact Lloyd updates over the bigint coordinate
+    columns ``cols``; returns (points (id, *cols) labeled with
+    ``cluster_id`` under the FINAL centers, final centers list)."""
+    pts = df.select(F.col(id_col).alias("id"), *[F.col(c).cast("bigint").alias(c) for c in cols])
+
+    def round_sums(df: DataFrame) -> dict:
+        rows = df.groupBy("cid").agg(
+            *[F.sum(c).alias(f"s_{c}") for c in cols], F.count(F.lit(1)).alias("cnt")
         )
-    ).localCheckpoint()
+        return {r["cid"]: ([r[f"s_{c}"] for c in cols], r["cnt"]) for r in rows.collect()}
 
-    pdf = _driver_rows(pts)
-    if pdf is not None:
-        import numpy as np
-
-        centers = _centers_driver_nd(
-            pdf["id"].to_numpy(dtype=np.int64),
-            pdf[list(cols)].to_numpy(dtype=np.int64),
-            k,
-            iters,
-        )
-        labeled = pts.withColumn("cluster_id", _argmin_cid_nd(centers, cols))
-        return labeled, centers
-
-    init = pts.orderBy("id").limit(k).collect()
-    if len(init) < k:
-        raise ValueError(f"need at least k={k} points, got {len(init)}")
-    centers = [[float(r[c]) for c in cols] for r in init]
-
-    for _ in range(iters):
-        agg = (
-            pts.withColumn("cid", _argmin_cid_nd(centers, cols))
-            .groupBy("cid")
-            .agg(
-                *[F.sum(c).alias(f"s_{c}") for c in cols],
-                F.count(F.lit(1)).alias("cnt"),
-            )
-            .collect()
-        )
-        got = {r["cid"]: r for r in agg}
-        centers = [
-            [got[i][f"s_{c}"] / got[i]["cnt"] for c in cols]
-            if i in got
-            else centers[i]
-            for i in range(k)
-        ]
-
-    labeled = pts.withColumn("cluster_id", _argmin_cid_nd(centers, cols))
-    return labeled, centers
+    return _fit(
+        pts, k, iters,
+        lambda pdf: pdf[list(cols)].to_numpy(dtype=np.int64),
+        lambda centers: _argmin_cid(centers, cols),
+        round_sums,
+    )
 
 
 def _argmin_cid_vec(centers: list[list[float]], vec_col: str) -> Column:
@@ -263,19 +190,20 @@ def _argmin_cid_vec(centers: list[list[float]], vec_col: str) -> Column:
     unrolled per-column chain, so oracle replays stay bit-equal). Keeps
     plan size O(k·d literals) instead of O(k·d expression nodes per
     distance term) — at d=64 the unrolled form dominates compile time."""
-    structs = []
-    for i, ctr in enumerate(centers):
+    dists = []
+    for ctr in centers:
         arr = F.expr("array(" + ", ".join(f"{float(c)!r}D" for c in ctr) + ")")
-        d = F.aggregate(
-            F.zip_with(
-                F.col(vec_col), arr,
-                lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-            ),
-            F.lit(0.0),
-            lambda a, v: a + v,
+        dists.append(
+            F.aggregate(
+                F.zip_with(
+                    F.col(vec_col), arr,
+                    lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
+                ),
+                F.lit(0.0),
+                lambda a, v: a + v,
+            )
         )
-        structs.append(F.struct(d.alias("d"), F.lit(i).alias("cid")))
-    return F.array_sort(F.array(*structs))[0]["cid"]
+    return _nearest(dists)
 
 
 def lloyd_kmeans_vec(
@@ -286,49 +214,26 @@ def lloyd_kmeans_vec(
     k: int,
     iters: int,
 ) -> tuple[DataFrame, list[list[float]]]:
-    """Exact Lloyd over a bigint ARRAY column (the high-dimensional
-    twin of lloyd_kmeans_nd — same replayable contract: exact integer
-    sums, smallest-id init, lowest-index tie break, empty clusters keep
-    their center). Centroid updates aggregate per (cluster, position)
-    via posexplode — a (k·d)-row collect, never O(rows)."""
-    pts = _spread(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    ).localCheckpoint()
+    """Exact Lloyd over a bigint ARRAY column of length ``dim`` (the
+    high-dimensional layout of `lloyd_kmeans`, same fit). Centroid
+    updates aggregate per (cluster, position) via posexplode — a
+    (k·d)-row collect, never O(rows)."""
+    pts = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
 
-    pdf = _driver_rows(pts)
-    if pdf is not None:
-        import numpy as np
-
-        centers = _centers_driver_nd(
-            pdf["id"].to_numpy(dtype=np.int64),
-            np.asarray(pdf["v"].tolist(), dtype=np.int64),
-            k,
-            iters,
-        )
-        labeled = pts.withColumn("cluster_id", _argmin_cid_vec(centers, "v"))
-        return labeled, centers
-
-    init = pts.orderBy("id").limit(k).collect()
-    if len(init) < k:
-        raise ValueError(f"need at least k={k} points, got {len(init)}")
-    centers = [[float(x) for x in r["v"]] for r in init]
-
-    for _ in range(iters):
-        agg = (
-            pts.withColumn("cid", _argmin_cid_vec(centers, "v"))
-            .select("cid", F.posexplode("v").alias("pos", "x"))
+    def round_sums(df: DataFrame) -> dict:
+        rows = (
+            df.select("cid", F.posexplode("v").alias("pos", "x"))
             .groupBy("cid", "pos")
             .agg(F.sum("x").alias("sx"), F.count(F.lit(1)).alias("cnt"))
-            .collect()
         )
-        got = {(r["cid"], r["pos"]): r for r in agg}
-        centers = [
-            [
-                got[(i, j)]["sx"] / got[(i, j)]["cnt"] if (i, j) in got else centers[i][j]
-                for j in range(dim)
-            ]
-            for i in range(k)
-        ]
+        got: dict = {}
+        for r in rows.collect():
+            got.setdefault(r["cid"], ([0] * dim, r["cnt"]))[0][r["pos"]] = r["sx"]
+        return got
 
-    labeled = pts.withColumn("cluster_id", _argmin_cid_vec(centers, "v"))
-    return labeled, centers
+    return _fit(
+        pts, k, iters,
+        lambda pdf: np.asarray(pdf["v"].tolist(), dtype=np.int64),
+        lambda centers: _argmin_cid_vec(centers, "v"),
+        round_sums,
+    )

@@ -1,10 +1,11 @@
-"""ML operators (SURVEY §2.9 M3/M4/M7/M9/M10) on Spark ML.
+"""ML operators (SURVEY §2.9 M4/M7/M9/M10) on Spark ML.
 
-The reference's "heavy" operators — MiniBatchKMeans (lab2 nb cell 16),
-PCA (cell 16), LightGBM regression with log1p target + RMSLE
-(lx_lightgbmTest.py:71-117) — re-expressed on pyspark.ml, which is
-distributed out of the box (SURVEY §4: mini-batching is unnecessary;
-Spark ML KMeans is the scale path).
+The reference's "heavy" operators — PCA (lab2 nb cell 16), LightGBM
+regression with log1p target + RMSLE (lx_lightgbmTest.py:71-117) —
+re-expressed on pyspark.ml, which is distributed out of the box. Its
+MiniBatchKMeans (cell 16, M3) is the exact Lloyd of `ml/lloyd.py`
+instead, whose distributed loop is the scale path (SURVEY §4:
+mini-batching is unnecessary) and which the oracle can replay.
 
 Model parity contract (SURVEY §7.3): metrics within bands, not bitwise —
 LightGBM and GBTRegressor are different learners. RMSLE / MAE / RMSE /
@@ -20,7 +21,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.ml.clustering import KMeans
 from pyspark.ml.feature import PCA, VectorAssembler
 from pyspark.ml.regression import GBTRegressor
 from pyspark.sql import DataFrame
@@ -29,25 +29,6 @@ from pyspark.sql import functions as F
 
 def assemble(df: DataFrame, cols: list[str], out: str = "features") -> DataFrame:
     return VectorAssembler(inputCols=cols, outputCol=out).transform(df)
-
-
-def kmeans_fit_predict(
-    df: DataFrame,
-    cols: list[str],
-    k: int,
-    seed: int = 42,
-    prediction_col: str = "cluster_id",
-):
-    """KMeans fit + predict (M3). Returns (labeled_df, centers list).
-
-    Seeded k-means|| init → deterministic for a fixed Spark version and
-    input. The fitted centers are driver-side artifacts (apply to other
-    splits per the reference's fit-on-train contract, SURVEY §3.2).
-    """
-    vec = assemble(df, cols)
-    model = KMeans(k=k, seed=seed, featuresCol="features", predictionCol=prediction_col).fit(vec)
-    out = model.transform(vec).drop("features")
-    return out, [list(c) for c in model.clusterCenters()]
 
 
 def pca_fit_transform(df: DataFrame, cols: list[str], k: int = 2, out_col: str = "pca"):
@@ -292,8 +273,9 @@ def assign_nearest_center(
 
 def deterministic_centers(n: int, x0: float, x1: float, y0: float, y1: float) -> list[tuple[float, float]]:
     """Deterministic pseudo-random centers in a bbox (golden-ratio
-    low-discrepancy sequence) — stands in for fitted KMeans centers in
-    oracle-checked queries where the oracle can't run KMeans."""
+    low-discrepancy sequence) — fixed Voronoi seeds for the
+    `assign_nearest_center` queries, which need centers but no fit
+    (fitted centers come from `ml/lloyd.py`)."""
     phi = (math.sqrt(5) - 1) / 2
     return [
         (x0 + ((0.5 + i * phi) % 1.0) * (x1 - x0), y0 + ((0.5 + i * phi * phi) % 1.0) * (y1 - y0))

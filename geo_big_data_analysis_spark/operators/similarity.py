@@ -562,10 +562,11 @@ def embedding_near_dup_pairs(
 # "Product quantization for nearest neighbor search"): split the vector
 # into m sub-blocks, train a small codebook per block, store each vector
 # as m small code ids, search via asymmetric distance (query block
-# distances to codebook centroids, summed over blocks). Training uses
-# the exact integer Lloyd (`ml/lloyd.lloyd_kmeans_nd`) on scaled-int
-# sub-coordinates, so codebooks — and therefore codes and ADC ranks —
-# are bit-replayable by the DuckDB oracle.
+# distances to codebook centroids, summed over blocks). Training runs
+# the exact integer Lloyd of `ml/lloyd` (its `_argmin_cid`, one round
+# for all blocks at once) on scaled-int sub-coordinates, so codebooks —
+# and therefore codes and ADC ranks — are bit-replayable by the DuckDB
+# oracle.
 
 
 def _pq_int_cols(vec_col: str, dims: list[int], scale: int) -> list[Column]:
@@ -639,14 +640,14 @@ def pq_train(
         raise ValueError(f"need at least k={k} vectors to train PQ codebooks")
     codebooks = [by_block[b] for b in range(m)]
 
-    from ..ml.lloyd import _argmin_cid_nd
+    from ..ml.lloyd import _argmin_cid
 
     cols = [f"c{j}" for j in range(dsub)]
     for _ in range(iters):
         # per-block argmin as one when-chain (block 0 is the fallthrough)
         cid = None
         for b in range(m):
-            arm = _argmin_cid_nd(codebooks[b], cols)
+            arm = _argmin_cid(codebooks[b], cols)
             cid = arm if cid is None else F.when(F.col("block") == F.lit(b), arm).otherwise(cid)
         agg = (
             pts.withColumn("cid", cid)
@@ -679,7 +680,7 @@ def pq_encode(
 ) -> DataFrame:
     """Encode each vector as m code columns code_0..code_{m-1} (the
     nearest per-block centroid, lowest-index tie break)."""
-    from ..ml.lloyd import _argmin_cid_nd
+    from ..ml.lloyd import _argmin_cid
 
     m = len(codebooks)
     dsub = len(codebooks[0][0])
@@ -688,7 +689,7 @@ def pq_encode(
         dims = list(range(b * dsub, (b + 1) * dsub))
         cols = [f"c{d}" for d in dims]
         out = out.select("*", *_pq_int_cols(vec_col, dims, scale))
-        out = out.withColumn(f"code_{b}", _argmin_cid_nd(codebooks[b], cols)).drop(*cols)
+        out = out.withColumn(f"code_{b}", _argmin_cid(codebooks[b], cols)).drop(*cols)
     return out.drop(vec_col)
 
 

@@ -26,7 +26,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 from ..functions import stats as st
 from ..functions import temporal, text as tx
@@ -53,30 +52,9 @@ from ..sources.ann_index import (
     ensure_minhash_index,
     ensure_minhash_upsert,
 )
-from ..sources.tables import local_frame, parquet_schema, read_parquet
+from ..sources.tables import _t, local_frame
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-# Columns stored as parquet TIMESTAMP(NANOS) — Spark has no nanos type, so
-# the loader reads them as long (legacy conf) and truncates to microseconds,
-# matching what DuckDB does natively when it reads TIMESTAMP_NS.
-_NANO_TS_COLS = {
-    "events": ["ts"],
-    "lineitem": ["l_shipdate"],
-    "orders": ["o_orderdate"],
-}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/{name}.parquet"
-    df = read_parquet(spark, path)
-    types = {f.name: f.dataType for f in parquet_schema(spark, path)}
-    for c in _NANO_TS_COLS.get(name, []):
-        if isinstance(types.get(c), LongType):
-            df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
-    return df
 
 
 def _derived_points(events: DataFrame) -> DataFrame:
@@ -85,12 +63,61 @@ def _derived_points(events: DataFrame) -> DataFrame:
     return events.withColumn("lon", lon).withColumn("lat", lat)
 
 
+def _event_lattice() -> list:
+    """The integer lattice (x, y) behind `_derived_points` — lon and lat
+    are affine in x and y — on which the exact Lloyd fits run."""
+    return [(F.col("event_id") % 1000).alias("x"), ((F.col("event_id") * 7) % 1000).alias("y")]
+
+
+_SQL_EVENT_LATTICE = "event_id % 1000 AS x, (event_id * 7) % 1000 AS y"
+
+
 _DERIVED_POINTS_SQL = """
     SELECT *,
            -74.3 + (event_id % 1000) / 1000.0 * 0.6 AS lon,
            40.5 + ((event_id * 7) % 1000) / 1000.0 * 0.5 AS lat
     FROM events
 """
+
+
+def _sql_nearest(src: str, cols: list[str], centers: str, keep: list[str], label: str = "cid") -> str:
+    """DuckDB replay of `ml/lloyd._argmin_cid`: each ``src`` row (``keep``
+    columns, keyed by ``id``) with the cid of its nearest row of the
+    ``centers`` CTE as ``label``. The squared distance is the same left
+    fold of per-coordinate products; ties go to the lowest cid."""
+    dist = " + ".join(f"(p.{x}::DOUBLE - c.{x}) * (p.{x}::DOUBLE - c.{x})" for x in cols)
+    return f"""SELECT {', '.join(keep)}, cid AS {label} FROM (
+    SELECT {', '.join(f'p.{x}' for x in keep)}, c.cid,
+           row_number() OVER (PARTITION BY p.id ORDER BY {dist} ASC, c.cid ASC) AS rk
+    FROM {src} p CROSS JOIN {centers} c
+  ) WHERE rk = 1"""
+
+
+def _sql_lloyd_ctes(src: str, cols: list[str], k: int, iters: int, pre: str = "") -> str:
+    """DuckDB replay of `ml/lloyd`'s fit over ``src(id, *cols)``: CTEs
+    ``{pre}c0 … {pre}c{iters}`` hold each round's centers (cid, *cols),
+    with the per-round assignment ``{pre}a{t}`` and integer sums
+    ``{pre}s{t}`` between them. Init is the k smallest ids, a centroid
+    is one exact-sum / count division, and an empty cluster keeps its
+    center."""
+    init = ", ".join(f"{x}::DOUBLE AS {x}" for x in cols)
+    sums = ", ".join(f"sum({x}) AS s_{x}" for x in cols)
+    news = ", ".join(f"coalesce(s.s_{x} / s.cnt, pc.{x}) AS {x}" for x in cols)
+    parts = [
+        f"{pre}c0 AS (SELECT (row_number() OVER (ORDER BY id) - 1)::INT AS cid, {init}"
+        f" FROM (SELECT id, {', '.join(cols)} FROM {src} ORDER BY id LIMIT {k}))"
+    ]
+    for t in range(1, iters + 1):
+        prev = f"{pre}c{t - 1}"
+        parts += [
+            f"{pre}a{t} AS ({_sql_nearest(src, cols, prev, ['id', *cols])})",
+            f"{pre}s{t} AS (SELECT cid, {sums}, count(*) AS cnt FROM {pre}a{t} GROUP BY cid)",
+            f"{pre}c{t} AS (SELECT r.cid, {news}"
+            f" FROM (SELECT range::INT AS cid FROM range({k})) r"
+            f" LEFT JOIN {pre}s{t} s USING (cid)"
+            f" LEFT JOIN {prev} pc ON pc.cid = r.cid)",
+        ]
+    return ",\n".join(parts)
 
 
 # --------------------------------------------------------------------------
@@ -2251,74 +2278,38 @@ def q_pq_codes_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_pq_block_ctes(b: int, train_where: str = "", encode_split: bool = False) -> str:
-    """Per-block Lloyd replay CTEs over scaled-int sub-coordinates.
+    """Per-block Lloyd replay CTEs over scaled-int sub-coordinates: the
+    block's codebook is ``pq{b}_c{_PQ_ITERS}`` and its codes ``code{b}``.
     ``train_where`` restricts the TRAINING rows (e.g. the base split in
     the upsert replay); with ``encode_split`` the code{b} CTE encodes
     ALL rows (ke{b}) with the split-trained codebook instead of just
     the training rows."""
     dsub = _PQ_DIM // _PQ_M
-    dims = list(range(b * dsub, (b + 1) * dsub))
+    cols = [f"c{j}" for j in range(dsub)]
     int_cols = ", ".join(
-        f"CAST(round(embedding[{d + 1}]::DOUBLE * {_PQ_SCALE}) AS BIGINT) AS c{j}"
-        for j, d in enumerate(dims)
+        f"CAST(round(embedding[{b * dsub + j + 1}]::DOUBLE * {_PQ_SCALE}) AS BIGINT) AS c{j}"
+        for j in range(dsub)
     )
-    dist = " + ".join(
-        f"(p.c{j}::DOUBLE - c.x{j}) * (p.c{j}::DOUBLE - c.x{j})" for j in range(dsub)
-    )
-    xcols = ", ".join(f"x{j}" for j in range(dsub))
     parts = [
         f"kp{b} AS (SELECT vec_id AS id, {int_cols} FROM embeddings {train_where})",
-        f"cb{b}_0 AS (SELECT (row_number() OVER (ORDER BY id) - 1)::INT AS cid, "
-        + ", ".join(f"c{j}::DOUBLE AS x{j}" for j in range(dsub))
-        + f" FROM (SELECT * FROM kp{b} ORDER BY id LIMIT {_PQ_K}))",
+        _sql_lloyd_ctes(f"kp{b}", cols, _PQ_K, _PQ_ITERS, pre=f"pq{b}_"),
     ]
-    for t in range(1, _PQ_ITERS + 1):
-        parts.append(
-            f"""a{b}_{t} AS (
-  SELECT id, {', '.join(f'c{j}' for j in range(dsub))}, cid FROM (
-    SELECT p.*, c.cid,
-           row_number() OVER (PARTITION BY p.id ORDER BY {dist} ASC, c.cid ASC) AS rk
-    FROM kp{b} p CROSS JOIN cb{b}_{t - 1} c
-  ) WHERE rk = 1
-)"""
-        )
-        sums = ", ".join(f"sum(c{j}) AS s{j}" for j in range(dsub))
-        parts.append(
-            f"s{b}_{t} AS (SELECT cid, {sums}, count(*) AS cnt FROM a{b}_{t} GROUP BY cid)"
-        )
-        news = ", ".join(
-            f"coalesce(s.s{j} / s.cnt, pc.x{j}) AS x{j}" for j in range(dsub)
-        )
-        parts.append(
-            f"cb{b}_{t} AS (SELECT r.cid, {news}"
-            f" FROM (SELECT range::INT AS cid FROM range({_PQ_K})) r"
-            f" LEFT JOIN s{b}_{t} s USING (cid)"
-            f" LEFT JOIN cb{b}_{t - 1} pc ON pc.cid = r.cid)"
-        )
     enc_src = f"ke{b}" if encode_split else f"kp{b}"
     if encode_split:
         parts.append(f"ke{b} AS (SELECT vec_id AS id, {int_cols} FROM embeddings)")
-    parts.append(
-        f"""code{b} AS (
-  SELECT id, cid AS code FROM (
-    SELECT p.id, c.cid,
-           row_number() OVER (PARTITION BY p.id ORDER BY {dist} ASC, c.cid ASC) AS rk
-    FROM {enc_src} p CROSS JOIN cb{b}_{_PQ_ITERS} c
-  ) WHERE rk = 1
-)"""
-    )
-    _ = xcols
+    nearest = _sql_nearest(enc_src, cols, f"pq{b}_c{_PQ_ITERS}", ["id"], "code")
+    parts.append(f"code{b} AS ({nearest})")
     return ",\n".join(parts)
 
 
 def _sql_pq_codes() -> str:
     dsub = _PQ_DIM // _PQ_M
     blocks = ",\n".join(_sql_pq_block_ctes(b) for b in range(_PQ_M))
-    norm = " + ".join(f"x{j} * x{j}" for j in range(dsub))
+    norm = " + ".join(f"c{j} * c{j}" for j in range(dsub))
     unions = "\nUNION ALL\n".join(
         f"SELECT {b} AS block, g.code, g.n, round(sqrt({norm}), 6) AS centroid_norm\n"
         f"FROM (SELECT code, count(*)::BIGINT AS n FROM code{b} GROUP BY code) g\n"
-        f"JOIN cb{b}_{_PQ_ITERS} c ON c.cid = g.code"
+        f"JOIN pq{b}_c{_PQ_ITERS} c ON c.cid = g.code"
         for b in range(_PQ_M)
     )
     return f"WITH {blocks}\n{unions}\nORDER BY block, code"
@@ -2350,14 +2341,14 @@ def _sql_pq_adc() -> str:
     )
     code_joins = "\n  ".join(
         f"JOIN code{b} cd{b} ON cd{b}.id = b.vec_id"
-        f" JOIN cb{b}_{_PQ_ITERS} cc{b} ON cc{b}.cid = cd{b}.code"
+        f" JOIN pq{b}_c{_PQ_ITERS} cc{b} ON cc{b}.cid = cd{b}.code"
         for b in range(_PQ_M)
     )
     terms = []
     for b in range(_PQ_M):
         for j in range(dsub):
             d = b * dsub + j
-            terms.append(f"(q.q{d}::DOUBLE - cc{b}.x{j}) * (q.q{d}::DOUBLE - cc{b}.x{j})")
+            terms.append(f"(q.q{d}::DOUBLE - cc{b}.c{j}) * (q.q{d}::DOUBLE - cc{b}.c{j})")
     dist = " + ".join(terms)
     return f"""
 WITH {blocks},
@@ -2409,14 +2400,14 @@ def _sql_ivfpq() -> str:
     )
     code_joins = "\n  ".join(
         f"JOIN code{b} cd{b} ON cd{b}.id = b.vec_id"
-        f" JOIN cb{b}_{_PQ_ITERS} cc{b} ON cc{b}.cid = cd{b}.code"
+        f" JOIN pq{b}_c{_PQ_ITERS} cc{b} ON cc{b}.cid = cd{b}.code"
         for b in range(_PQ_M)
     )
     terms = []
     for b in range(_PQ_M):
         for j in range(dsub):
             d = b * dsub + j
-            terms.append(f"(q.q{d}::DOUBLE - cc{b}.x{j}) * (q.q{d}::DOUBLE - cc{b}.x{j})")
+            terms.append(f"(q.q{d}::DOUBLE - cc{b}.c{j}) * (q.q{d}::DOUBLE - cc{b}.c{j})")
     dist = " + ".join(terms)
     return f"""
 WITH {blocks},
@@ -2712,48 +2703,15 @@ def q_semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_semdedup() -> str:
-    k, iters = _SEMDEDUP_K, _SEMDEDUP_ITERS
-    dsub = 64
+    cols = [f"c{d}" for d in range(64)]
     int_cols = ", ".join(
-        f"CAST(round(embedding[{d + 1}]::DOUBLE * 1000) AS BIGINT) AS c{d}" for d in range(dsub)
-    )
-    dist = " + ".join(
-        f"(p.c{j}::DOUBLE - c.x{j}) * (p.c{j}::DOUBLE - c.x{j})" for j in range(dsub)
+        f"CAST(round(embedding[{d + 1}]::DOUBLE * 1000) AS BIGINT) AS c{d}" for d in range(64)
     )
     parts = [
         f"kp AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v, {int_cols} FROM embeddings)",
-        "cb_0 AS (SELECT (row_number() OVER (ORDER BY id) - 1)::INT AS cid, "
-        + ", ".join(f"c{j}::DOUBLE AS x{j}" for j in range(dsub))
-        + f" FROM (SELECT * FROM kp ORDER BY id LIMIT {k}))",
+        _sql_lloyd_ctes("kp", cols, _SEMDEDUP_K, _SEMDEDUP_ITERS),
+        f"lab AS ({_sql_nearest('kp', cols, f'c{_SEMDEDUP_ITERS}', ['id', 'v'], 'cluster')})",
     ]
-    for t in range(1, iters + 1):
-        parts.append(
-            f"""a_{t} AS (
-  SELECT * FROM (
-    SELECT p.*, c.cid,
-           row_number() OVER (PARTITION BY p.id ORDER BY {dist} ASC, c.cid ASC) AS rk
-    FROM kp p CROSS JOIN cb_{t - 1} c
-  ) WHERE rk = 1
-)"""
-        )
-        sums = ", ".join(f"sum(c{j}) AS s{j}" for j in range(dsub))
-        parts.append(f"s_{t} AS (SELECT cid, {sums}, count(*) AS cnt FROM a_{t} GROUP BY cid)")
-        news = ", ".join(f"coalesce(s.s{j} / s.cnt, pc.x{j}) AS x{j}" for j in range(dsub))
-        parts.append(
-            f"cb_{t} AS (SELECT r.cid, {news}"
-            f" FROM (SELECT range::INT AS cid FROM range({k})) r"
-            f" LEFT JOIN s_{t} s USING (cid)"
-            f" LEFT JOIN cb_{t - 1} pc ON pc.cid = r.cid)"
-        )
-    parts.append(
-        f"""lab AS (
-  SELECT id, v, cid AS cluster FROM (
-    SELECT p.id, p.v, c.cid,
-           row_number() OVER (PARTITION BY p.id ORDER BY {dist} ASC, c.cid ASC) AS rk
-    FROM kp p CROSS JOIN cb_{iters} c
-  ) WHERE rk = 1
-)"""
-    )
     parts.append(
         f"""removed AS (
   SELECT DISTINCT b.cluster, b.id
@@ -3187,47 +3145,48 @@ GROUP BY r.event_type
 """
 
 
-def q_kmeans_event_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M3 — seeded Spark-ML KMeans (k=8) over derived points, reported
-    as CENSUS BANDS (VERDICT r2 #5: the raw census is seed- and
-    implementation-dependent, so the hash-checked contract is the
-    structural invariants): the cluster sizes partition exactly the
-    point set (n_points INDEPENDENTLY recomputed by the oracle from the
-    events table), at most k non-empty clusters, every centroid inside
-    the derived-point bbox, and no degenerate all-in-one collapse.
-    Exact-Lloyd with a full iteration-replay oracle lives in
-    `lloyd_kmeans_clusters`; Lloyd convergence is pytest-verified
-    (tests/test_ml.py)."""
-    from ..ml.pipeline import kmeans_fit_predict
+_KMEANS_K, _KMEANS_ITERS = 8, 20
 
-    pts = _derived_points(_t(spark, sf_dir, "events")).select("event_id", "lon", "lat")
-    n_input = pts.count()
-    labeled, _centers = kmeans_fit_predict(pts, ["lon", "lat"], k=8, seed=42)
-    census = (
-        labeled.groupBy("cluster_id")
+
+def q_kmeans_event_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """M3 — k-means (k=8, 20 rounds: Spark ML's default maxIter) over
+    the derived points, fitted with the exact Lloyd of `ml/lloyd.py` on
+    the integer lattice behind them, reported as CENSUS BANDS: the
+    cluster sizes partition exactly the point set (n_points counted
+    from the events scan, and INDEPENDENTLY recomputed by the oracle
+    from the events table), at most k non-empty clusters, every
+    centroid (mean derived lon/lat of its points) inside the
+    derived-point bbox, and no degenerate all-in-one collapse. The
+    full iteration replay of the same fit is `lloyd_kmeans_clusters`'s
+    oracle; Lloyd convergence is pytest-verified (tests/test_ml.py)."""
+    from ..ml.lloyd import lloyd_kmeans
+
+    ev = _t(spark, sf_dir, "events")
+    labeled, _centers = lloyd_kmeans(
+        ev.select("event_id", *_event_lattice()), "event_id", ["x", "y"],
+        k=_KMEANS_K, iters=_KMEANS_ITERS,
+    )
+    clusters = (
+        _derived_points(labeled.withColumnRenamed("id", "event_id"))
+        .groupBy("cluster_id")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.avg("lon").alias("c_lon"),
             F.avg("lat").alias("c_lat"),
         )
-        .agg(
-            F.sum("n").alias("total"),
-            F.count(F.lit(1)).alias("k_used"),
-            F.max("n").alias("max_n"),
-            F.sum(
-                (
-                    F.col("c_lon").between(-74.3, -73.7)
-                    & F.col("c_lat").between(40.5, 41.0)
-                ).cast("bigint")
-            ).alias("in_bbox"),
-        )
-        .collect()[0]
+        .collect()
     )
+    n_input = ev.count()
+    sizes = [r["n"] for r in clusters]
     rows = [
-        ("centroids_in_bbox", bool(census["in_bbox"] == census["k_used"]), n_input),
-        ("k_at_most_8_nonempty", bool(1 <= census["k_used"] <= 8), n_input),
-        ("no_collapse", bool(census["max_n"] < census["total"]), n_input),
-        ("sizes_partition_points", bool(census["total"] == n_input), n_input),
+        (
+            "centroids_in_bbox",
+            all(-74.3 <= r["c_lon"] <= -73.7 and 40.5 <= r["c_lat"] <= 41.0 for r in clusters),
+            n_input,
+        ),
+        ("k_at_most_8_nonempty", 1 <= len(clusters) <= _KMEANS_K, n_input),
+        ("no_collapse", max(sizes) < sum(sizes), n_input),
+        ("sizes_partition_points", sum(sizes) == n_input, n_input),
     ]
     return local_frame(
         spark, rows, "band string, ok boolean, n_points bigint"
@@ -3256,13 +3215,9 @@ def q_lloyd_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-for-value — including the final centroids."""
     from ..ml.lloyd import lloyd_kmeans
 
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id",
-        (F.col("event_id") % 1000).alias("x"),
-        ((F.col("event_id") * 7) % 1000).alias("y"),
-    )
+    ev = _t(spark, sf_dir, "events").select("event_id", *_event_lattice())
     labeled, centers = lloyd_kmeans(
-        ev, "event_id", "x", "y", k=_LLOYD_K, iters=_LLOYD_ITERS
+        ev, "event_id", ["x", "y"], k=_LLOYD_K, iters=_LLOYD_ITERS
     )
     cx_map = F.create_map(
         *[F.lit(v) for i, (cx, _) in enumerate(centers) for v in (i, cx)]
@@ -3284,44 +3239,13 @@ def q_lloyd_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_lloyd() -> str:
-    k, iters = _LLOYD_K, _LLOYD_ITERS
-    dist = (
-        "(p.x::DOUBLE - c.cx)*(p.x::DOUBLE - c.cx)"
-        " + (p.y::DOUBLE - c.cy)*(p.y::DOUBLE - c.cy)"
-    )
-    assign = """a{t} AS (
-  SELECT id, x, y, cid FROM (
-    SELECT p.id, p.x, p.y, c.cid,
-           row_number() OVER (PARTITION BY p.id ORDER BY {dist} ASC, c.cid ASC) AS rk
-    FROM pts p CROSS JOIN c{prev} c
-  ) WHERE rk = 1
-)"""
-    parts = [
-        "pts AS (SELECT event_id AS id, event_id % 1000 AS x,"
-        " (event_id * 7) % 1000 AS y FROM events)",
-        f"c0 AS (SELECT (row_number() OVER (ORDER BY id) - 1)::INT AS cid,"
-        f" x::DOUBLE AS cx, y::DOUBLE AS cy"
-        f" FROM (SELECT id, x, y FROM pts ORDER BY id LIMIT {k}))",
-    ]
-    for t in range(1, iters + 1):
-        parts.append(assign.format(t=t, prev=t - 1, dist=dist))
-        parts.append(
-            f"s{t} AS (SELECT cid, sum(x) AS sx, sum(y) AS sy,"
-            f" count(*) AS cnt FROM a{t} GROUP BY cid)"
-        )
-        parts.append(
-            f"c{t} AS (SELECT r.cid, coalesce(s.sx / s.cnt, pc.cx) AS cx,"
-            f" coalesce(s.sy / s.cnt, pc.cy) AS cy"
-            f" FROM (SELECT range::INT AS cid FROM range({k})) r"
-            f" LEFT JOIN s{t} s USING (cid)"
-            f" LEFT JOIN c{t - 1} pc ON pc.cid = r.cid)"
-        )
-    parts.append(assign.format(t="_final", prev=iters, dist=dist))
-    ctes = ",\n".join(parts)
+    iters = _LLOYD_ITERS
     return f"""
-WITH {ctes}
+WITH pts AS (SELECT event_id AS id, {_SQL_EVENT_LATTICE} FROM events),
+{_sql_lloyd_ctes("pts", ["x", "y"], _LLOYD_K, iters)},
+a_final AS ({_sql_nearest("pts", ["x", "y"], f"c{iters}", ["id"])})
 SELECT f.cid AS cluster_id, count(*)::BIGINT AS n,
-       round(any_value(c.cx), 6) AS c_x, round(any_value(c.cy), 6) AS c_y
+       round(any_value(c.x), 6) AS c_x, round(any_value(c.y), 6) AS c_y
 FROM a_final f JOIN c{iters} c ON c.cid = f.cid
 GROUP BY f.cid
 ORDER BY n DESC, cluster_id ASC
@@ -7617,16 +7541,12 @@ def _lab2_pipeline_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = feats.join(F.broadcast(wdim), "dt").localCheckpoint(eager=False)
     # M3 fit-on-train: exact Lloyd on the integer lattice behind the
     # derived lon/lat (bijective affine), bit-replayable by the oracle
-    lat_x = (F.col("event_id") % 1000).alias("x")
-    lat_y = ((F.col("event_id") * 7) % 1000).alias("y")
-    train_lattice = feats.filter("is_train").select("event_id", lat_x, lat_y)
+    train_lattice = feats.filter("is_train").select("event_id", *_event_lattice())
     _, centers = lloyd_kmeans(
-        train_lattice, "event_id", "x", "y", k=_LAB2_K, iters=_LAB2_ITERS
+        train_lattice, "event_id", ["x", "y"], k=_LAB2_K, iters=_LAB2_ITERS
     )
-    feats = feats.withColumn("x", F.col("event_id") % 1000).withColumn(
-        "y", (F.col("event_id") * 7) % 1000
-    )
-    feats = feats.withColumn("zone", _argmin_cid(centers, "x", "y"))
+    feats = feats.select("*", *_event_lattice())
+    feats = feats.withColumn("zone", _argmin_cid(centers, ["x", "y"]))
     # A6/J9 fit-on-train: per-zone mean speed, global-mean fill
     feats = feats.withColumn(
         "speed_kmh", F.col("hav_km") / ((F.col("value") + 1) / F.lit(3600.0))
@@ -7682,37 +7602,7 @@ def q_lab2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_lab2_pipeline() -> str:
     from ..sources.raster import raster_value_sql
 
-    k, iters = _LAB2_K, _LAB2_ITERS
-    dist = (
-        "(p.x::DOUBLE - c.cx)*(p.x::DOUBLE - c.cx)"
-        " + (p.y::DOUBLE - c.cy)*(p.y::DOUBLE - c.cy)"
-    )
-    assign = """a{t} AS (
-  SELECT id, x, y, cid FROM (
-    SELECT p.id, p.x, p.y, c.cid,
-           row_number() OVER (PARTITION BY p.id ORDER BY {dist} ASC, c.cid ASC) AS rk
-    FROM kpts p CROSS JOIN c{prev} c
-  ) WHERE rk = 1
-)"""
-    lloyd_parts = [
-        f"c0 AS (SELECT (row_number() OVER (ORDER BY id) - 1)::INT AS cid,"
-        f" x::DOUBLE AS cx, y::DOUBLE AS cy"
-        f" FROM (SELECT id, x, y FROM kpts ORDER BY id LIMIT {k}))",
-    ]
-    for t in range(1, iters + 1):
-        lloyd_parts.append(assign.format(t=t, prev=t - 1, dist=dist))
-        lloyd_parts.append(
-            f"s{t} AS (SELECT cid, sum(x) AS sx, sum(y) AS sy,"
-            f" count(*) AS cnt FROM a{t} GROUP BY cid)"
-        )
-        lloyd_parts.append(
-            f"c{t} AS (SELECT r.cid, coalesce(s.sx / s.cnt, pc.cx) AS cx,"
-            f" coalesce(s.sy / s.cnt, pc.cy) AS cy"
-            f" FROM (SELECT range::INT AS cid FROM range({k})) r"
-            f" LEFT JOIN s{t} s USING (cid)"
-            f" LEFT JOIN c{t - 1} pc ON pc.cid = r.cid)"
-        )
-    lloyd_sql = ",\n".join(lloyd_parts)
+    iters = _LAB2_ITERS
     return f"""
 WITH d AS ({_DERIVED_POINTS_SQL}),
 pts AS (
@@ -7739,21 +7629,20 @@ feats AS (
          )), 3) AS hav_km,
          ln(1 + value) AS log_value,
          ((dayofyear(ts::DATE) * 17) % 35 - 5)::DOUBLE AS temp_c,
-         event_id % 1000 AS x,
-         (event_id * 7) % 1000 AS y,
+         {_SQL_EVENT_LATTICE},
          {raster_value_sql('lon', 'lat')} AS pop
   FROM pts, s WHERE value >= 0 AND value <= hi
 ),
 kpts AS (SELECT event_id AS id, x, y FROM feats WHERE is_train),
-{lloyd_sql},
+{_sql_lloyd_ctes("kpts", ["x", "y"], _LAB2_K, iters)},
 sp AS (
   SELECT *, hav_km / ((value + 1) / 3600.0) AS speed_kmh FROM feats
 ),
 zoned AS (
   SELECT sp.*, (
     SELECT c.cid FROM c{iters} c
-    ORDER BY (sp.x::DOUBLE - c.cx)*(sp.x::DOUBLE - c.cx)
-           + (sp.y::DOUBLE - c.cy)*(sp.y::DOUBLE - c.cy) ASC, c.cid ASC
+    ORDER BY (sp.x::DOUBLE - c.x)*(sp.x::DOUBLE - c.x)
+           + (sp.y::DOUBLE - c.y)*(sp.y::DOUBLE - c.y) ASC, c.cid ASC
     LIMIT 1
   ) AS zone
   FROM sp

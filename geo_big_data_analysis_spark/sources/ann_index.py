@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup as dd
-from .tables import read_parquet
+from .tables import _t, read_parquet
 
 
 def _footer_digest(paths: list[str]) -> str:
@@ -314,8 +314,6 @@ def ensure_minhash_index(
     documents (doc_id % split_mod != 0 — the corpus already curated),
     building it if absent or stale. Same fingerprint-keyed cache
     convention as `ensure_ivfpq_index`."""
-    from ..plans.registry import _t  # late import; avoids a cycle at module load
-
     index_dir = _minhash_index_dir(sf_dir, num_hashes, bands, split_mod, base_dir)
     if not os.path.exists(os.path.join(index_dir, "meta.json")):
         docs = _t(spark, sf_dir, "documents").filter(
@@ -388,8 +386,6 @@ def ensure_minhash_upsert(
     """Post-upsert index over base split ∪ admitted delta docs,
     fingerprint-keyed like every other artifact (idempotent across
     re-runs — an upsert never applies twice)."""
-    from ..plans.registry import _t  # late import; avoids a cycle at module load
-
     base_index = _minhash_index_dir(sf_dir, num_hashes, bands, split_mod, base_dir)
     out_dir = base_index + "_upsert"
     if not os.path.exists(os.path.join(out_dir, "meta.json")):
@@ -438,8 +434,6 @@ def ensure_ivfpq_index(
     under spark-warehouse/ann_index/, keyed by params + fingerprint.
     With ``split_mod``, train and encode only the BASE split
     (vec_id % split_mod != 0) — the upsert scenario's starting state."""
-    from ..plans.registry import _t  # late import; avoids a cycle at module load
-
     index_dir = _ivfpq_index_dir(sf_dir, dim, m, k, iters, scale, base_dir, split_mod)
     if not os.path.exists(os.path.join(index_dir, "meta.json")):
         emb = _t(spark, sf_dir, "embeddings").withColumn(
@@ -537,8 +531,6 @@ def ensure_ivfpq_upsert(
 ) -> tuple[DataFrame, list[tuple[int, list[float]]], list[list[list[float]]], dict]:
     """Post-upsert IVF-PQ index: base split trained + delta split
     encoded with the stored codebooks; fingerprint-keyed (idempotent)."""
-    from ..plans.registry import _t  # late import; avoids a cycle at module load
-
     base_index = _ivfpq_index_dir(
         sf_dir, dim, m, k, iters, scale, base_dir, split_mod
     )

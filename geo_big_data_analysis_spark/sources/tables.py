@@ -2,7 +2,9 @@
 
 Parquet reads keep the inferred schema per input (``read_parquet``), and
 rows computed on the driver enter Spark as Arrow batches
-(``local_frame``).
+(``local_frame``). ``_t`` reads a fixture table through
+``read_parquet`` and normalises its nanosecond timestamp columns; the
+query registry and the stored indexes both read their inputs with it.
 
 ``spark.read.parquet(path)`` infers the schema on every call, and Spark
 does it with a Spark job (``SchemaMergeUtils.mergeSchemasInParallel``)
@@ -55,8 +57,9 @@ from collections.abc import Iterable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import DataType, StructType
+from pyspark.sql.types import DataType, LongType, StructType
 
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -107,6 +110,29 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` without the schema-inference job
     once the input has been read in this process."""
     return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+
+
+# Columns stored as parquet TIMESTAMP(NANOS) — Spark has no nanos type, so
+# the loader reads them as long (legacy conf) and truncates to microseconds,
+# matching what DuckDB does natively when it reads TIMESTAMP_NS.
+_NANO_TS_COLS = {
+    "events": ["ts"],
+    "lineitem": ["l_shipdate"],
+    "orders": ["o_orderdate"],
+}
+
+
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The fixture table ``name`` of ``sf_dir`` through ``read_parquet``,
+    its nanosecond timestamp columns normalised to microseconds."""
+    spark.conf.set(_NANOS_AS_LONG, "true")
+    path = f"{sf_dir}/{name}.parquet"
+    df = read_parquet(spark, path)
+    types = {f.name: f.dataType for f in parquet_schema(spark, path)}
+    for c in _NANO_TS_COLS.get(name, []):
+        if isinstance(types.get(c), LongType):
+            df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
+    return df
 
 
 def local_frame(spark: SparkSession, rows: Iterable[tuple], ddl: str) -> DataFrame:

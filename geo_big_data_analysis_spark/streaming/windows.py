@@ -58,7 +58,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (schema pinned from
     the batch inference, `sources/tables.parquet_schema`; nanos
     timestamps take the same long→micros conversion as the batch
-    loader, registry._t)."""
+    loader, `sources/tables._t`)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/events.parquet"
     schema = parquet_schema(spark, path)

@@ -1,6 +1,7 @@
 """ML layer tests (SURVEY §2.9): feature engineering, closed-form PCA
-vs ml.feature.PCA cross-check, metrics, KMeans determinism, Voronoi
-argmin assignment.
+vs ml.feature.PCA cross-check, metrics, the exact Lloyd k-means (its
+driver kernel against its distributed loop, and that it is the
+package's only k-means), Voronoi argmin assignment.
 
 Reference semantics: lab2 nb cells 3/7/16/20/24 (splits, one-hot,
 KMeans/PCA, Voronoi regions), lab4 nb cell 18 (StandardScaler),
@@ -10,6 +11,7 @@ lx_lightgbmTest.py:64-117 (log1p target + metrics).
 from __future__ import annotations
 
 import math
+from functools import partial
 
 import pytest
 
@@ -26,7 +28,6 @@ from geo_big_data_analysis_spark.ml.pipeline import (
     feature_importances,
     gbt_fit,
     gbt_predict,
-    kmeans_fit_predict,
     pca2d_closed_form,
     pca_fit_transform,
     regression_metrics,
@@ -88,20 +89,6 @@ def test_pca_closed_form_matches_mllib(spark):
     assert angle_cf == pytest.approx(angle_ml, abs=1e-6)
     assert closed["lambda1"] > closed["lambda2"] >= 0
     assert 0.5 < closed["explained_ratio"] <= 1.0
-
-
-def test_kmeans_seeded_deterministic(spark):
-    pts = [
-        (float(i % 10) + (100.0 if i % 3 == 0 else 0.0), float(i // 10))
-        for i in range(60)
-    ]
-    df = spark.createDataFrame(pts, ["x", "y"])
-    out1, c1 = kmeans_fit_predict(df, ["x", "y"], k=2, seed=42)
-    out2, c2 = kmeans_fit_predict(df, ["x", "y"], k=2, seed=42)
-    assert c1 == c2
-    sizes1 = sorted(r["count"] for r in out1.groupBy("cluster_id").count().collect())
-    sizes2 = sorted(r["count"] for r in out2.groupBy("cluster_id").count().collect())
-    assert sizes1 == sizes2 == [20, 40]
 
 
 def test_assign_nearest_center_argmin(spark):
@@ -171,7 +158,7 @@ def test_lloyd_kmeans_recovers_separated_clusters(spark):
         blob = i % 3
         rows.append((i, blob * 1000 + (i // 3) % 5, blob * 1000 + (i * 7) % 5))
     df = spark.createDataFrame(rows, ["pid", "x", "y"]).repartition(7)
-    labeled, centers = lloyd_kmeans(df, "pid", "x", "y", k=3, iters=5)
+    labeled, centers = lloyd_kmeans(df, "pid", ["x", "y"], k=3, iters=5)
     got = labeled.collect()
     # every blob maps to exactly one cluster label
     by_blob = {}
@@ -188,12 +175,79 @@ def test_lloyd_kmeans_deterministic(spark):
 
     rows = [(i, (i * 13) % 97, (i * 29) % 89) for i in range(200)]
     df = spark.createDataFrame(rows, ["pid", "x", "y"]).repartition(11)
-    a_lab, a_c = lloyd_kmeans(df, "pid", "x", "y", k=4, iters=4)
-    b_lab, b_c = lloyd_kmeans(df, "pid", "x", "y", k=4, iters=4)
+    a_lab, a_c = lloyd_kmeans(df, "pid", ["x", "y"], k=4, iters=4)
+    b_lab, b_c = lloyd_kmeans(df, "pid", ["x", "y"], k=4, iters=4)
     assert a_c == b_c
     a = {r["id"]: r["cluster_id"] for r in a_lab.collect()}
     b = {r["id"]: r["cluster_id"] for r in b_lab.collect()}
     assert a == b
+
+
+#: ids 0 and 1 sit on the same point, so the first two initial centers
+#: coincide: every point there is at distance 0 from both (a tie, which
+#: cid 0 must win), and cluster 1 never gets a point (it must keep its
+#: center). Id 12 is equidistant from the initial centers 2 and 3 (in
+#: 2-D and 3-D), so round 1 (iters=1) turns on that tie; ids 12 and 13
+#: move from cluster 2 to 3 in later rounds, so each of 3 rounds
+#: changes the centers.
+_LLOYD_PATH_POINTS = [
+    (0, 0, 0, 0), (1, 0, 0, 0), (2, 20, 0, 5), (3, 60, 0, 9),
+    (4, 0, 0, 0), (5, 0, 0, 0), (6, 18, 0, 4), (7, 23, 0, 7),
+    (8, 20, 3, 5), (9, 20, -1, 6), (10, 61, 1, 8), (11, 59, -1, 9),
+    (12, 40, 0, 7), (13, 38, 2, 6), (14, 42, 0, 7), (15, 44, 1, 8),
+]
+
+
+@pytest.mark.parametrize("iters", [1, 3])
+@pytest.mark.parametrize("layout", ["x y", "x y z", "vec"])
+def test_lloyd_distributed_loop_matches_driver_kernel(spark, monkeypatch, layout, iters):
+    """The distributed loop (the bounded probe forced to report "too
+    big") gives bit-equal centers and the same labels as the driver
+    kernel, for the column layout in 2-D and 3-D and the array layout."""
+    from geo_big_data_analysis_spark.ml import lloyd
+
+    if layout == "vec":
+        df = spark.createDataFrame(
+            [(i, [x, y, z]) for i, x, y, z in _LLOYD_PATH_POINTS], "pid bigint, v array<bigint>"
+        ).repartition(5)
+        dim = 3
+        fit = partial(lloyd.lloyd_kmeans_vec, df, "pid", "v", dim=dim, k=4, iters=iters)
+    else:
+        df = spark.createDataFrame(_LLOYD_PATH_POINTS, ["pid", "x", "y", "z"]).repartition(5)
+        dim = len(layout.split())
+        fit = partial(lloyd.lloyd_kmeans, df, "pid", layout.split(), k=4, iters=iters)
+    runs = []
+    for forced in (False, True):
+        if forced:
+            monkeypatch.setattr(lloyd, "_driver_rows", lambda pts: None)
+        labeled, centers = fit()
+        runs.append((centers, {r["id"]: r["cluster_id"] for r in labeled.collect()}))
+    (c_drv, l_drv), (c_dist, l_dist) = runs
+    assert c_dist == c_drv  # bit-equal floats
+    assert l_dist == l_drv
+    assert {l_drv[i] for i in (0, 1, 4, 5)} == {0}  # the tie goes to cid 0
+    assert 1 not in l_drv.values() and c_drv[1] == [0.0] * dim  # empty keeps center
+
+
+def test_no_spark_ml_clustering_import():
+    """`ml/lloyd.py` is the package's only k-means: no module imports
+    Spark ML's clustering package."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "geo_big_data_analysis_spark"
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                mods = [node.module or ""] + [f"{node.module}.{a.name}" for a in node.names]
+            else:
+                continue
+            if any(m.startswith("pyspark.ml.clustering") for m in mods):
+                hits.append(path.relative_to(pkg).as_posix())
+    assert hits == []
 
 
 def test_logreg_binary_metrics_floor(spark, sf_dir):
