@@ -50,11 +50,11 @@ from ..operators.spread import spread
 #: Lloyd iteration otherwise pays a scheduled job whose collect returns
 #: only k (or k·d) aggregate rows, plus an interpreted zip_with argmin
 #: at the vec layout. The kernel is bit-identical: distances are the
-#: same left-associated folds (np.cumsum — 0.0 + t0 == t0 exactly),
-#: np.argmin takes the first minimum (the lowest-cid tie break), and
-#: centroid updates stay exact integer sums divided in Python. The
-#: labeled output and all downstream consumers keep reading the
-#: CHECKPOINTED distributed table; past the cap the per-iteration
+#: same left-associated folds (`_sq_dists`), np.argmin takes the first
+#: minimum (the lowest-cid tie break), and centroid updates stay exact
+#: integer sums divided in Python. The labeled output and all
+#: downstream consumers keep reading the CHECKPOINTED distributed
+#: table; past the cap the per-iteration
 #: aggregate loop in `_fit` runs instead — at real scale the
 #: collect-k-rows loop is the right shape, the driver kernel only
 #: removes per-round scheduling overhead on bounded fits.
@@ -71,26 +71,34 @@ def _driver_rows(pts: DataFrame, cap: int = LLOYD_DRIVER_CAP):
     return pdf if len(pdf) <= cap else None
 
 
+def _sq_dists(XT, centers: list[list[float]]):
+    """(rows × k) squared distances of the points whose coordinate
+    columns are the rows of ``XT`` (d × rows, float64): per center, the
+    left fold t0 + t1 + … of tj = (xj − cj)², in the order the
+    distributed argmin adds its terms."""
+    D = np.empty((XT.shape[1], len(centers)))
+    for i, c in enumerate(centers):
+        acc = (XT[0] - c[0]) ** 2
+        for col, cv in zip(XT[1:], c[1:]):
+            acc += (col - cv) ** 2
+        D[:, i] = acc
+    return D
+
+
 def _centers_driver_nd(ids, X, k: int, iters: int) -> list[list[float]]:
     """Numpy center-update kernel — bit-identical to the distributed
     loop (see LLOYD_DRIVER_CAP note): distances via per-coordinate
-    left-fold (cumsum), first-minimum argmin (lowest-cid tie break),
-    exact int64 sums divided as Python ints, empty clusters keep their
-    center, init = k smallest ids (``iters=0`` is the init alone)."""
+    left-fold (`_sq_dists`), first-minimum argmin (lowest-cid tie
+    break), exact int64 sums divided as Python ints, empty clusters
+    keep their center, init = k smallest ids (``iters=0`` is the init
+    alone)."""
     if len(ids) < k:
         raise ValueError(f"need at least k={k} points, got {len(ids)}")
-    Xd = X.astype(np.float64)
+    XT = np.ascontiguousarray(X.T, dtype=np.float64)
     order = np.argsort(ids, kind="stable")
     centers = [[float(v) for v in X[j]] for j in order[:k]]
     for _ in range(iters):
-        D = np.stack(
-            [
-                np.cumsum((Xd - np.asarray(c, dtype=np.float64)) ** 2, axis=1)[:, -1]
-                for c in centers
-            ],
-            axis=1,
-        )
-        cid = np.argmin(D, axis=1)
+        cid = np.argmin(_sq_dists(XT, centers), axis=1)
         new = []
         for i in range(k):
             m = cid == i

@@ -90,20 +90,21 @@ def bigram_hash_rows(docs: DataFrame, *carry: str) -> DataFrame:
     )
 
 
-def band_rows(sig_df: DataFrame, bands: int) -> DataFrame:
-    """(doc_id, band, m0, m1) LSH bucket rows of a (doc_id, sig) frame
-    at 2 rows per band: band b's bucket is the integer pair
+def band_rows(sig_df: DataFrame, bands: int, *carry: str) -> DataFrame:
+    """(doc_id, *carry, band, m0, m1) LSH bucket rows of a (doc_id, sig)
+    frame at 2 rows per band: band b's bucket is the integer pair
     (sig[2b], sig[2b+1]), so candidate generation is an equi-join on
     (band, m0, m1), never a hash of the pair."""
     return sig_df.select(
         "doc_id",
+        *carry,
         F.explode(
             F.expr(
                 f"transform(sequence(0, {bands - 1}),"
                 " b -> struct(b AS band, sig[2 * b] AS m0, sig[2 * b + 1] AS m1))"
             )
         ).alias("_b"),
-    ).select("doc_id", "_b.band", "_b.m0", "_b.m1")
+    ).select("doc_id", *carry, "_b.band", "_b.m0", "_b.m1")
 
 
 def shingle_hash_rows(

@@ -1399,7 +1399,7 @@ def q_minhash_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DEDUP INDEX AS ARTIFACT — the MinHash-LSH twin of
     `ivfpq_index_build`: sketch the BASE corpus split (doc_id % 10 ≠ 0,
     the already-curated side) ONCE and persist it — band-bucket table
-    (doc_id, band, m0, m1) + hashed shingle rows + meta.json
+    (doc_id, band, m0, m1) + per-doc shingle-hash sets + meta.json
     (`sources/ann_index.build_minhash_index`, fingerprint-keyed cache).
     The returned manifest is computed FROM THE STORED ARTIFACT (read
     back off disk): per band, the row count, distinct-bucket count, and
@@ -1409,7 +1409,7 @@ def q_minhash_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch build. 100 TB shape: sketching is one pass + one
     groupBy; every later ingest batch probes this table instead of
     re-sketching the corpus."""
-    bands, _sh, _meta = ensure_minhash_index(
+    bands, _sets, _meta = ensure_minhash_index(
         spark, sf_dir, num_hashes=_MH_IDX_HASHES, bands=_MH_IDX_BANDS,
         split_mod=_MH_IDX_MOD,
     )
@@ -1452,7 +1452,7 @@ def q_near_dup_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-tuple equi-join against the persisted band table (never
     all-pairs, base corpus never re-sketched), and survivors are
     exact-verified by hashed-shingle Jaccard against the persisted
-    shingle rows. Output: per delta-doc source, how much of the batch
+    per-doc shingle sets. Output: per delta-doc source, how much of the batch
     duplicates the existing corpus.
 
     The oracle never sees the artifact: it recomputes BOTH splits from
@@ -1461,7 +1461,7 @@ def q_near_dup_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves stored-probe ≡ recompute-from-scratch. avg_jaccard sums
     6dp-quantized values in DECIMAL so reassociation can't flip the
     rounding boundary."""
-    bands, base_sh, _meta = ensure_minhash_index(
+    bands, base_sets, _meta = ensure_minhash_index(
         spark, sf_dir, num_hashes=_MH_IDX_HASHES, bands=_MH_IDX_BANDS,
         split_mod=_MH_IDX_MOD,
     )
@@ -1469,7 +1469,7 @@ def q_near_dup_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = docs.filter(F.col("doc_id") % _MH_IDX_MOD == 0).select(
         "doc_id", "source", "text"
     )
-    return _probe_summary(_mh_probe_pairs(delta, bands, base_sh))
+    return _probe_summary(_mh_probe_pairs(delta, bands, base_sets))
 
 
 def q_streaming_near_dup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1572,7 +1572,7 @@ def q_minhash_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup-index admission path: the delta split is screened against the
     STORED index (`near_dup_probe_stored`'s probe), and the admitted
     (non-duplicate) docs are sketched with the index's own permutation
-    family and APPENDED into a copy of the band + shingle tables — the
+    family and APPENDED into a copy of the band + set tables — the
     base corpus is never re-sketched
     (`sources/ann_index.upsert_minhash_index`). The manifest is
     computed FROM THE POST-UPSERT STORED ARTIFACT: per band, row/doc/
@@ -1583,7 +1583,7 @@ def q_minhash_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     append ≡ from-scratch rebuild over base ∪ admitted. 100 TB shape:
     per ingest batch, one stored-index probe + append-only parquet of
     the batch's own sketch rows; nothing rescans the corpus."""
-    bands, _sh, _meta = ensure_minhash_upsert(
+    bands, _sets, _meta = ensure_minhash_upsert(
         spark, sf_dir, num_hashes=_MH_IDX_HASHES, bands=_MH_IDX_BANDS,
         split_mod=_MH_IDX_MOD,
     )

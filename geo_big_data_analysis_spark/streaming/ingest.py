@@ -3,7 +3,7 @@
 The production shape of corpus curation is a continuous ingest: new
 document batches arrive, and each micro-batch is screened for near
 duplicates against the PERSISTED dedup index (`sources/ann_index` —
-band-bucket table + hashed shingle rows) before admission. The base
+band-bucket table + per-doc shingle-hash sets) before admission. The base
 corpus is never re-sketched.
 
 The probe pipeline needs two keyed aggregations (per-doc signature,
@@ -55,7 +55,7 @@ def near_dup_probe_stream(
     """Drain the delta split of the document stream through the
     stored-index probe; returns the pair-level sink as a batch
     DataFrame (probe_id, source, base_id, jr)."""
-    bands, base_sh, _meta = ensure_minhash_index(
+    bands, base_sets, _meta = ensure_minhash_index(
         spark, sf_dir, num_hashes=_MH_IDX_HASHES, bands=_MH_IDX_BANDS,
         split_mod=split_mod,
     )
@@ -88,7 +88,7 @@ def near_dup_probe_stream(
     empty.write.mode("append").parquet(sink)
 
     def screen(batch_df: DataFrame, _batch_id: int) -> None:
-        pairs = _mh_probe_pairs(batch_df, bands, base_sh)
+        pairs = _mh_probe_pairs(batch_df, bands, base_sets)
         pairs.write.mode("append").parquet(sink)
 
     q = (

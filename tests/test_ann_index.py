@@ -152,7 +152,7 @@ def test_minhash_build_load_roundtrip(spark, sf_dir, tmp_path_factory):
     ).select("doc_id", "text")
     d = str(tmp_path_factory.mktemp("mh"))
     meta = build_minhash_index(spark, docs, d, fingerprint="fp0", **MH)
-    bands, sh, meta2 = load_minhash_index(spark, d)
+    bands, sets, meta2 = load_minhash_index(spark, d)
     assert meta2 == meta and meta2["rows_per_band"] == 2
     n_docs = docs.withColumn(
         "_t", F.expr("filter(split(text, ' '), x -> x <> '')")
@@ -160,11 +160,13 @@ def test_minhash_build_load_roundtrip(spark, sf_dir, tmp_path_factory):
     # exactly bands rows per sketchable doc
     assert bands.count() == n_docs * MH["bands"]
     assert bands.groupBy("doc_id").count().agg(F.max("count")).collect()[0][0] == MH["bands"]
-    # shingle rows are distinct per doc and hash into [0, P)
+    # one set row per sketchable doc: sorted, duplicate-free, in [0, P)
     P = 2_147_483_647
-    r = sh.agg(F.min("h"), F.max("h"), F.count(F.lit(1)),
-               F.count_distinct("doc_id", "h")).collect()[0]
-    assert 0 <= r[0] and r[1] < P and r[2] == r[3]
+    rows = sets.collect()
+    assert len(rows) == len({r["doc_id"] for r in rows}) == n_docs
+    for r in rows:
+        hs = r["hs"]
+        assert hs and hs == sorted(set(hs)) and 0 <= hs[0] and hs[-1] < P
 
 
 def test_minhash_num_hashes_band_contract(spark, sf_dir, tmp_path_factory):
@@ -194,6 +196,79 @@ def test_minhash_ensure_caches(spark, sf_dir, tmp_path_factory):
     # a different split keys a different artifact
     ensure_minhash_index(spark, sf_dir, split_mod=7, base_dir=root, **MH)
     assert len(os.listdir(root)) == 2
+
+
+def test_minhash_old_layout_dir_never_loaded(spark, sf_dir, tmp_path_factory):
+    """An index dir in the old layout (meta.json + ``shingles/`` rows,
+    no ``sets/``) under the same root and with the same params and
+    fingerprint is not loaded: the layout is part of the artifact key."""
+    from geo_big_data_analysis_spark.sources.ann_index import (
+        _table_fingerprint,
+        ensure_minhash_index,
+    )
+
+    root = str(tmp_path_factory.mktemp("mh_old"))
+    fp = _table_fingerprint(sf_dir, "documents")
+    old = os.path.join(root, f"minhash_h16_b8_mod10_{fp}")
+    spark.range(3).selectExpr("id AS doc_id", "id * 7 AS h").write.parquet(
+        os.path.join(old, "shingles")
+    )
+    with open(os.path.join(old, "meta.json"), "w") as f:
+        f.write('{"kind": "minhash_lsh", "num_hashes": 16, "bands": 8}')
+    _bands, sets, meta = ensure_minhash_index(
+        spark, sf_dir, split_mod=10, base_dir=root, **MH
+    )
+    assert sets.columns == ["doc_id", "hs"] and meta.get("fingerprint") == fp
+    (new,) = set(os.listdir(root)) - {os.path.basename(old)}
+    assert os.path.isdir(os.path.join(root, new, "sets"))
+    assert sorted(os.listdir(old)) == ["meta.json", "shingles"]
+
+
+def test_minhash_probe_pairs_match_oracle_verified(spark, sf_dir):
+    """Pair level: the stored-index probe's rows equal the DuckDB
+    oracle's ``verified`` pairs at jr ≥ τ — the oracle recomputes both
+    splits from the documents table, so this pins candidates, sets and
+    the Jaccard arithmetic row by row, not only their per-source
+    aggregate."""
+    from collections import Counter
+
+    import duckdb
+
+    from geo_big_data_analysis_spark.plans.registry import _SQL_NEAR_DUP_PROBE
+    from geo_big_data_analysis_spark.sources.ann_index import (
+        _MH_IDX_BANDS,
+        _MH_IDX_HASHES,
+        _MH_IDX_MOD,
+        _MH_IDX_TAU,
+        _mh_probe_pairs,
+        ensure_minhash_index,
+    )
+
+    bands, base_sets, _ = ensure_minhash_index(
+        spark, sf_dir, num_hashes=_MH_IDX_HASHES, bands=_MH_IDX_BANDS,
+        split_mod=_MH_IDX_MOD,
+    )
+    delta = _t(spark, sf_dir, "documents").filter(
+        F.col("doc_id") % _MH_IDX_MOD == 0
+    ).select("doc_id", "source", "text")
+    got = Counter(
+        tuple(r)
+        for r in _mh_probe_pairs(delta, bands, base_sets)
+        .select("source", "probe_id", "jr")
+        .collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/documents.parquet')"
+    )
+    head = _SQL_NEAR_DUP_PROBE[: _SQL_NEAR_DUP_PROBE.rindex("\nSELECT ")]
+    want = Counter(
+        con.execute(
+            f"{head}\nSELECT source, probe_id, jr FROM verified WHERE jr >= {_MH_IDX_TAU}"
+        ).fetchall()
+    )
+    assert got == want and len(got) > 0
 
 
 def test_minhash_signature_cross_engine(spark):
@@ -227,7 +302,7 @@ def test_streaming_probe_pairs_equal_batch(spark, sf_dir, tmp_path_factory):
     )
     from geo_big_data_analysis_spark.streaming.ingest import near_dup_probe_stream
 
-    bands, base_sh, _ = ensure_minhash_index(
+    bands, base_sets, _ = ensure_minhash_index(
         spark, sf_dir, num_hashes=_MH_IDX_HASHES, bands=_MH_IDX_BANDS,
         split_mod=_MH_IDX_MOD,
     )
@@ -236,7 +311,7 @@ def test_streaming_probe_pairs_equal_batch(spark, sf_dir, tmp_path_factory):
     ).select("doc_id", "source", "text")
     batch = {
         tuple(r)
-        for r in _mh_probe_pairs(delta, bands, base_sh).collect()
+        for r in _mh_probe_pairs(delta, bands, base_sets).collect()
     }
     streamed = {
         tuple(r)
@@ -282,7 +357,7 @@ def test_minhash_upsert_rejects_dups_admits_novel(spark, tmp_path_factory):
     assert meta["upsert"] == {
         "n_delta": 2, "n_admitted": 1, "n_rejected": 1, "tau": 0.3,
     }
-    bands, sh, _ = load_minhash_index(spark, out_dir)
+    bands, sets, _ = load_minhash_index(spark, out_dir)
     ids = {r["doc_id"] for r in bands.select("doc_id").distinct().collect()}
     assert ids == {1, 2, 20}
     # append ≡ rebuild: compare against a from-scratch build over 1,2,20
@@ -291,9 +366,11 @@ def test_minhash_upsert_rejects_dups_admits_novel(spark, tmp_path_factory):
         delta.filter("doc_id = 20").select("doc_id", "text")
     )
     build_minhash_index(spark, union_docs, rebuilt_dir, fingerprint="fp", **MH)
-    rb_bands, rb_sh, _ = load_minhash_index(spark, rebuilt_dir)
+    rb_bands, rb_sets, _ = load_minhash_index(spark, rebuilt_dir)
     assert sorted(map(tuple, bands.collect())) == sorted(map(tuple, rb_bands.collect()))
-    assert sorted(map(tuple, sh.collect())) == sorted(map(tuple, rb_sh.collect()))
+    assert sorted(
+        (r["doc_id"], tuple(r["hs"])) for r in sets.collect()
+    ) == sorted((r["doc_id"], tuple(r["hs"])) for r in rb_sets.collect())
 
 
 def test_ivfpq_upsert_drift_counter(spark, sf_dir, tmp_path_factory):

@@ -229,6 +229,33 @@ def test_lloyd_distributed_loop_matches_driver_kernel(spark, monkeypatch, layout
     assert 1 not in l_drv.values() and c_drv[1] == [0.0] * dim  # empty keeps center
 
 
+@pytest.mark.parametrize("d", [2, 3, 64])
+def test_sq_dists_equal_cumsum_fold(d):
+    """The driver kernel's distance matrix is bit-equal to the
+    reference left fold, ``np.cumsum((X - c) ** 2, axis=1)[:, -1]`` per
+    center. The points repeat, one sits halfway between two centers,
+    two centers coincide, and squares reach 1e16, past 2**53, so the
+    sums round and any other summation order shows."""
+    import numpy as np
+
+    from geo_big_data_analysis_spark.ml.lloyd import _sq_dists
+
+    rng = np.random.default_rng(d)
+    X = rng.integers(-(10**8), 10**8, size=(400, d))
+    X[200:300] = X[:100]
+    step = X[2] % 1000
+    X[1] = X[0] + 2 * step
+    X[3] = X[0] + step  # equidistant from X[0] and X[1]
+    centers = [[float(v) for v in X[i]] for i in (0, 0, 1, 5, 6)]
+    Xd = X.astype(np.float64)
+    want = np.stack(
+        [np.cumsum((Xd - np.asarray(c)) ** 2, axis=1)[:, -1] for c in centers], axis=1
+    )
+    got = _sq_dists(np.ascontiguousarray(Xd.T), centers)
+    assert np.array_equal(got, want)
+    assert got[3, 0] == got[3, 2] and np.array_equal(got[:, 0], got[:, 1])
+
+
 def test_no_spark_ml_clustering_import():
     """`ml/lloyd.py` is the package's only k-means: no module imports
     Spark ML's clustering package."""

@@ -225,7 +225,7 @@ def _variant_near_dup_probe_fixed_batch(spark, sf_dir):
         ensure_minhash_index,
     )
 
-    bands, base_sh, _ = ensure_minhash_index(
+    bands, base_sets, _ = ensure_minhash_index(
         spark, sf_dir, num_hashes=_MH_IDX_HASHES, bands=_MH_IDX_BANDS,
         split_mod=_MH_IDX_MOD,
     )
@@ -237,7 +237,7 @@ def _variant_near_dup_probe_fixed_batch(spark, sf_dir):
         )
         .select("doc_id", "source", "text")
     )
-    return _mh_probe_pairs(delta, bands, base_sh)
+    return _mh_probe_pairs(delta, bands, base_sets)
 
 
 #: production-shaped configurations of the fixed-param operators,
