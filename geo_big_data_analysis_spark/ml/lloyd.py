@@ -30,7 +30,8 @@ ARRAY column, whose argmin keeps a d=64 plan small. Execution shape =
 the classic Spark KMeans loop: points localCheckpoint once; per
 iteration one codegen'd argmin projection + one hash agg collecting k
 (or k·d) rows to the driver; centers re-enter as literals. Nothing
-O(rows) ever reaches the driver past `LLOYD_DRIVER_CAP`.
+O(rows) ever reaches the driver past `LLOYD_DRIVER_CAP`; up to it the
+fit runs as a numpy kernel on the probe rows (`operators/dispatch`).
 """
 
 from __future__ import annotations
@@ -43,6 +44,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators import dispatch
 from ..operators.spread import spread
 
 #: Below this row count the center-update loop runs as a numpy driver
@@ -57,18 +59,10 @@ from ..operators.spread import spread
 #: table; past the cap the per-iteration
 #: aggregate loop in `_fit` runs instead — at real scale the
 #: collect-k-rows loop is the right shape, the driver kernel only
-#: removes per-round scheduling overhead on bounded fits.
+#: removes per-round scheduling overhead on bounded fits. The probe is
+#: `operators/dispatch.driver_rows`, whose Arrow transfer moves a
+#: cap-sized table in ~50 ms where Row objects cost ~1-2 s.
 LLOYD_DRIVER_CAP = 100_000
-
-
-def _driver_rows(pts: DataFrame, cap: int = LLOYD_DRIVER_CAP):
-    """Bounded probe: all rows as a pandas frame when ≤ cap, else None
-    (LocalLimit short-circuits per task — probe work bounded at any
-    scale). Arrow transfer (guide §6): a row-object collect of a
-    cap-sized table costs ~1-2 s in Row construction alone; toPandas
-    moves the same ints in ~50 ms."""
-    pdf = pts.limit(cap + 1).toPandas()
-    return pdf if len(pdf) <= cap else None
 
 
 def _sq_dists(XT, centers: list[list[float]]):
@@ -132,8 +126,9 @@ def _fit(
     step is an integer-sum aggregate or an argmin projection. Measured
     on lloyd_kmeans@sf0.1: 3.8→2.5 s."""
     pts = spread(pts).localCheckpoint()
-    pdf = _driver_rows(pts)
-    if pdf is not None:
+    tbl = dispatch.driver_rows(pts, LLOYD_DRIVER_CAP)
+    if tbl is not None:
+        pdf = tbl.to_pandas()
         centers = _centers_driver_nd(pdf["id"].to_numpy(dtype=np.int64), matrix(pdf), k, iters)
     else:
         init = pts.orderBy("id").limit(k).toPandas()

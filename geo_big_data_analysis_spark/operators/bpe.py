@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import local_frame
+from . import dispatch
 
 _PAIRS_EXPR = """
 transform(
@@ -53,40 +54,31 @@ def word_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 #: Vocabulary size at or below which the merge loop runs driver-side on
-#: the collected (word, cnt, seq) rows instead of as per-round Spark
-#: jobs. The distinct-word vocabulary is a BOUNDED fit artifact (it was
-#: already folded to one partition under this same threshold — the loop
-#: was single-core either way); running ~3-4 tiny jobs per round ×
-#: n_merges rounds is pure scheduler overhead. Beyond the cap the
-#: distributed per-round loop is kept unchanged (the web-scale shape).
+#: the (word, cnt, seq) rows of one bounded probe
+#: (`operators/dispatch.driver_rows`) instead of as per-round Spark
+#: jobs. The distinct-word vocabulary is a BOUNDED fit artifact; running
+#: ~3-4 tiny jobs per round × n_merges rounds is pure scheduler
+#: overhead. Beyond the cap the distributed per-round loop runs (the
+#: web-scale shape).
 SMALL_VOCAB_CAP = 100_000
 
 
-def _init_words(vocab: DataFrame) -> tuple[DataFrame, int]:
-    """Suffix-delimit each word into its symbol sequence, refuse
-    delimiter-corrupting words, and return (words_df, n_words) so the
-    trainers can size-dispatch (shared by BPE and WordPiece)."""
+def _init_words(vocab: DataFrame) -> DataFrame:
+    """Suffix-delimit each word into its symbol sequence and refuse
+    delimiter-corrupting words (shared by BPE and WordPiece)."""
     words = vocab.withColumn(
         "seq", F.regexp_replace(F.col("word"), "(.)", "$1|")
     ).localCheckpoint()
     # Delimiter guard: a word containing '|' would silently corrupt the
     # delimited encoding in BOTH engines (the oracle replays the same
     # representation, so a cross-engine check can't catch it) — refuse.
-    stats = words.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("word").contains("|").cast("long")).alias("n_bad"),
-    ).collect()[0]
-    if (stats["n_bad"] or 0) > 0:
+    n_bad = words.agg(F.sum(F.col("word").contains("|").cast("long"))).collect()[0][0]
+    if (n_bad or 0) > 0:
         raise ValueError(
-            f"{stats['n_bad']} vocabulary words contain the '|' suffix "
+            f"{n_bad} vocabulary words contain the '|' suffix "
             "delimiter; strip or remap them before BPE training"
         )
-    n = int(stats["n"])
-    if n > SMALL_VOCAB_CAP:
-        return words, n
-    # Small vocab: fold to one partition for the distributed fallback
-    # path too (callers that bypass the driver loop).
-    return words.coalesce(1).localCheckpoint(), n
+    return words
 
 
 def _toks(seq: str) -> list[str]:
@@ -143,8 +135,11 @@ def _train_driver(
     return merges, out_rows
 
 
-def _driver_rows(words: DataFrame) -> list[tuple[str, int, str]]:
-    return [(r["word"], int(r["cnt"]), r["seq"]) for r in words.select("word", "cnt", "seq").collect()]
+def _driver_vocab(words: DataFrame) -> list[tuple[str, int, str]] | None:
+    """The (word, cnt, seq) rows when the vocabulary fits
+    ``SMALL_VOCAB_CAP``, else None."""
+    tbl = dispatch.driver_rows(words.select("word", "cnt", "seq"), SMALL_VOCAB_CAP)
+    return None if tbl is None else dispatch.tuples(tbl)
 
 
 def _driver_vocab_df(words: DataFrame, out_rows) -> DataFrame:
@@ -159,9 +154,10 @@ def bpe_train(
     """Train ``n_merges`` BPE merges. Returns (merges, final_vocab_df)
     where merges rows are (rank, left, right, merged, pair_count) and
     the vocab DataFrame carries the fully-merged ``seq`` per word."""
-    words, n_words = _init_words(vocab)
-    if n_words <= SMALL_VOCAB_CAP:
-        merges, out_rows = _train_driver(_driver_rows(words), n_merges, wordpiece=False)
+    words = _init_words(vocab)
+    rows = _driver_vocab(words)
+    if rows is not None:
+        merges, out_rows = _train_driver(rows, n_merges, wordpiece=False)
         return merges, _driver_vocab_df(words, out_rows)
     merges: list[tuple[int, str, str, str, int]] = []
     for rank in range(1, n_merges + 1):
@@ -218,9 +214,10 @@ def wordpiece_train(
     codegen'd ``replace`` rewrite — corpus-size-independent after the
     initial word count, same as BPE.
     """
-    words, n_words = _init_words(vocab)
-    if n_words <= SMALL_VOCAB_CAP:
-        merges, out_rows = _train_driver(_driver_rows(words), n_merges, wordpiece=True)
+    words = _init_words(vocab)
+    rows = _driver_vocab(words)
+    if rows is not None:
+        merges, out_rows = _train_driver(rows, n_merges, wordpiece=True)
         return merges, _driver_vocab_df(words, out_rows)
     merges: list[tuple[int, str, str, str, int, float]] = []
     for rank in range(1, n_merges + 1):

@@ -21,19 +21,21 @@ Permutation p-values use conditional randomization: for point i, draw
 its k neighbor z-values from z \\ {z_i} uniformly, 999 times, and count
 permuted I_i at least as extreme (same tail) as observed. That is a
 per-point numpy loop over a broadcast z-vector → Arrow-batched
-mapInPandas, seeded per point id for determinism.
+mapInPandas, seeded per point id for determinism. The z-vector is the
+rows of one bounded probe (`operators/dispatch.driver_rows`, at most
+``Z_POOL_CAP``); past the cap the draws run as a distributed join.
 """
 
 from __future__ import annotations
 
 import math
-import os
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import dispatch
 from .knn import knn_join
 from .spread import spread
 
@@ -89,10 +91,11 @@ def local_morans_i(
 
 
 #: Above this row count the permutation draw switches from the
-#: broadcast-pool numpy path (one driver collect of all z, ≤ 8 MB of
-#: doubles at the cap) to :func:`lisa_permutation_pvalues_dist` — the
-#: distributed EXACT-pool variant where draws are hash-indexed join
-#: rows and nothing driver-side grows with n.
+#: broadcast-pool numpy path (one driver probe of all (id, z) rows,
+#: ≤ 16 MB at the cap; `operators/dispatch.driver_rows`) to
+#: :func:`lisa_permutation_pvalues_dist` — the distributed EXACT-pool
+#: variant where draws are hash-indexed join rows and nothing
+#: driver-side grows with n.
 Z_POOL_CAP = 1_000_000
 
 #: In the distributed exact-pool path, the indexed z-table is sent as a
@@ -106,9 +109,9 @@ Z_POOL_CAP = 1_000_000
 #: materializes UnsafeRows plus a LongHashedRelation on the driver and
 #: every executor, ≈3–5× the raw two-column payload, so budget ~80 B/row.
 #: 2M rows → ≈160 MB resident, safe on a default 2g driver while still
-#: covering every test/bench scale (sf1 ≈ 10⁶ points). Overridable for
-#: clusters with bigger drivers.
-BCAST_POOL_CAP = int(os.environ.get("GBDA_LISA_BCAST_POOL_CAP", 2_000_000))
+#: covering every test/bench scale (sf1 ≈ 10⁶ points). The choice reads
+#: the row count the draw hash needs anyway, so it fires no probe.
+BCAST_POOL_CAP = 2_000_000
 
 
 def lisa_permutation_pvalues(
@@ -116,7 +119,6 @@ def lisa_permutation_pvalues(
     k: int,
     permutations: int = 999,
     seed: int = 42,
-    z_pool_cap: int = Z_POOL_CAP,
 ) -> DataFrame:
     """p_sim via conditional randomization (esda convention: one-sided,
     (extreme_count + 1) / (permutations + 1), same-tail as observed I;
@@ -125,9 +127,10 @@ def lisa_permutation_pvalues(
 
     ``lisa`` is local_morans_i output. m2 comes from a distributed
     aggregate over the full data; the draw pool is the full z-vector
-    when n ≤ ``z_pool_cap`` (self-value excluded per point via an
-    index shift over the id-sorted pool, broadcast once, per-point
-    numpy draws in Arrow batches). Beyond the cap the size dispatch
+    when n ≤ ``Z_POOL_CAP`` (one bounded probe of the (id, z) rows,
+    sorted by id on the driver; self-value excluded per point via an
+    index shift over that pool, broadcast once, per-point numpy draws
+    in Arrow batches). Beyond the cap the size dispatch
     switches to :func:`lisa_permutation_pvalues_dist` — the
     EXACT-AT-ANY-N distributed variant: the full z-vector stays a
     table, draws become integer-keyed join rows, and no driver
@@ -136,8 +139,8 @@ def lisa_permutation_pvalues(
     Per-point draws are seeded by point id — deterministic under any
     partitioning — in both regimes.
     """
-    n_total = lisa.count()
-    if n_total > z_pool_cap:
+    tbl = dispatch.driver_rows(lisa.select("id", "z"), Z_POOL_CAP)
+    if tbl is None:
         return lisa_permutation_pvalues_dist(
             lisa, k, permutations=permutations, seed=seed
         )
@@ -145,11 +148,9 @@ def lisa_permutation_pvalues(
         lisa.agg((F.sum(F.col("z") * F.col("z")) / F.count(F.lit(1))).alias("m2"))
         .collect()[0]["m2"]
     )
-    rows = lisa.select("id", "z").orderBy("id").collect()
-    pool_ids = [int(r["id"]) for r in rows]
-    pool_z = [float(r["z"]) for r in rows]
+    pool = sorted(dispatch.tuples(tbl), key=lambda r: r[0])
     sc = lisa.sparkSession.sparkContext
-    bz = sc.broadcast((pool_ids, pool_z))
+    bz = sc.broadcast(([int(i) for i, _ in pool], [float(z) for _, z in pool]))
 
     schema = "id bigint, i_stat double, p_sim double"
 

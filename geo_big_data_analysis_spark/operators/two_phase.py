@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import dispatch
+
 _PID = "__tp_pid"
 
 #: Below this row count the two-phase plan dispatches to a plain
@@ -48,17 +50,8 @@ _PID = "__tp_pid"
 #: sort (~tens of MB) is strictly cheaper; past the cap the two-phase
 #: plan is mandatory (a global window single-partitions EVERYTHING).
 #: Row numbers are identical on both paths for the documented
-#: total-order contract.
+#: total-order contract. The probe is `operators/dispatch.fits`.
 SMALL_SORT_CAP = 262_144
-
-
-def _fits_small(df: DataFrame, cap: int | None = None) -> bool:
-    """Bounded probe (never a full count): LocalLimit short-circuits per
-    scan task, so probe work is bounded at any input scale. The cap is
-    read at call time so tests can force the two-phase path."""
-    if cap is None:
-        cap = SMALL_SORT_CAP
-    return df.limit(cap + 1).count() <= cap
 
 
 def _ranged(df: DataFrame, order_exprs: list[Column]) -> DataFrame:
@@ -90,7 +83,7 @@ def global_row_number(
 ) -> DataFrame:
     """Global 1-based row_number in ``order_exprs`` order, bigint (an
     int32 row_number overflows past 2.1 B rows — real at 100 TB)."""
-    if _fits_small(df):
+    if dispatch.fits(df, SMALL_SORT_CAP):
         w = Window.orderBy(*order_exprs)
         return df.withColumn(out, F.row_number().over(w).cast("bigint"))
     ranged = _ranged(df, order_exprs)
@@ -108,7 +101,7 @@ def global_cumsum(
     df: DataFrame, order_exprs: list[Column], value_col: str, out: str = "cum"
 ) -> DataFrame:
     """Global running sum of ``value_col`` in ``order_exprs`` order."""
-    if _fits_small(df):
+    if dispatch.fits(df, SMALL_SORT_CAP):
         w = (
             Window.orderBy(*order_exprs)
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -32,6 +32,7 @@ from ..functions import temporal, text as tx
 from ..functions.stats import linregress_aggs
 from ..functions.geo import grid_cell, haversine_km, in_bbox
 from ..operators import dedup as dd
+from ..operators import dispatch
 from ..operators import sessionize as sz
 from ..operators.similarity import (
     cosine_topk_bruteforce,
@@ -16330,6 +16331,8 @@ ORDER BY band
 
 
 _KCENTER_ROUNDS = 8
+#: Row cap of the k-center driver kernel (100k × 64 doubles ≈ 51 MB).
+_KCENTER_DRIVER_CAP = 100_000
 
 
 def q_kcenter_coreset_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -16347,7 +16350,7 @@ def q_kcenter_coreset_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     fetching each selected vector.
 
     Size dispatch (VERDICT r2 #7, r8 "Next" #6): tables that fit the
-    driver (≤100k rows, bounded probe) run the whole greedy loop as a
+    driver (≤ ``_KCENTER_DRIVER_CAP`` rows, `operators/dispatch`) run the whole greedy loop as a
     numpy kernel with bit-identical fp (see the inline note); at real
     corpus scale the table keeps its partitioning, each round
     checkpoints (linear lineage, partial-top-1-then-merge argmax), and
@@ -16369,8 +16372,8 @@ def q_kcenter_coreset_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         norm_sq = norm_sq + F.col("v").getItem(i) * F.col("v").getItem(i)
     pts = emb.withColumn("nv", F.sqrt(norm_sq))
 
-    # Size dispatch via bounded probe (≤100k rows; the Lloyd/BPE/graph
-    # driver-kernel convention — VERDICT r8 "Next" #6): the 8 greedy
+    # Size dispatch (the Lloyd/BPE/graph driver-kernel convention —
+    # VERDICT r8 "Next" #6): the 8 greedy
     # argmax rounds run as a driver-side numpy loop with BIT-IDENTICAL
     # fp — elementwise products + per-row cumsum reproduce the
     # left-associated fold of both the unrolled and the HOF dot (init
@@ -16380,13 +16383,13 @@ def q_kcenter_coreset_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count, and 8 single-partition interpreted-HOF scan jobs (~12
     # scheduled jobs); now one bounded collect + numpy. The distributed
     # path below is unchanged for inputs past the probe cap.
-    probe = emb.limit(100_001).collect()
+    tbl = dispatch.driver_rows(emb, _KCENTER_DRIVER_CAP)
     out_rows = []
-    if len(probe) <= 100_000:
+    if tbl is not None:
         import numpy as np
 
-        ids = np.array([r["vec_id"] for r in probe], dtype=np.int64)
-        V = np.array([list(r["v"]) for r in probe], dtype=np.float64)
+        ids = np.array(tbl.column("vec_id").to_pylist(), dtype=np.int64)
+        V = np.array(tbl.column("v").to_pylist(), dtype=np.float64)
 
         def fold_dot(w):
             # left-fold dot of every row against w: cumsum's last column

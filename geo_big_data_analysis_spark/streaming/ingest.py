@@ -26,6 +26,7 @@ from __future__ import annotations
 import os
 import shutil
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,17 +60,14 @@ def near_dup_probe_stream(
         spark, sf_dir, num_hashes=_MH_IDX_HASHES, bands=_MH_IDX_BANDS,
         split_mod=split_mod,
     )
-    # Per-config sink (a real ingest KEEPS this parquet — it is the
-    # output artifact); cleared up front so repeated drains don't
-    # accumulate stale pairs or checkpoints. Suffixed with the session's
-    # application id: two engine instances sharing one warehouse (e.g.
-    # parallel verification suites) must not rmtree each other's
-    # in-flight checkpoints — a real multi-tenant ingest would own its
-    # sink lifecycle the same way.
+    # Per-config sink under the application's own temp root, which the
+    # driver deletes when the context stops: two engine instances never
+    # share it, and nothing outlives the application. Cleared up front
+    # so repeated drains in one application don't accumulate stale
+    # pairs or checkpoints.
     sink = os.path.join(
-        "spark-warehouse",
-        f"near_dup_stream_mod{split_mod}_{_meta['fingerprint']}"
-        f"_{spark.sparkContext.applicationId}",
+        SparkFiles.getRootDirectory(),
+        f"near_dup_stream_mod{split_mod}_{_meta['fingerprint']}",
     )
     shutil.rmtree(sink, ignore_errors=True)
     shutil.rmtree(sink + "_ckpt", ignore_errors=True)
@@ -98,4 +96,6 @@ def near_dup_probe_stream(
         .start()
     )
     q.awaitTermination()
+    # an availableNow drain never resumes, so its checkpoint is spent
+    shutil.rmtree(sink + "_ckpt", ignore_errors=True)
     return spark.read.parquet(sink)

@@ -29,3 +29,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def force_distributed(monkeypatch):
+    """Return a function that, once called, makes every size dispatch
+    in the package (`operators/dispatch`) report "too big", so each
+    operator takes its distributed branch for the rest of the test. A
+    test runs the default path first, calls it, then runs the forced
+    path and compares the two."""
+    from geo_big_data_analysis_spark.operators import dispatch
+
+    def force():
+        monkeypatch.setattr(dispatch, "driver_rows", lambda df, cap: None)
+        monkeypatch.setattr(dispatch, "fits", lambda df, cap: False)
+
+    return force

@@ -313,13 +313,24 @@ def test_streaming_probe_pairs_equal_batch(spark, sf_dir, tmp_path_factory):
         tuple(r)
         for r in _mh_probe_pairs(delta, bands, base_sets).collect()
     }
+    sink_df = near_dup_probe_stream(spark, sf_dir, split_mod=_MH_IDX_MOD)
     streamed = {
         tuple(r)
-        for r in near_dup_probe_stream(spark, sf_dir, split_mod=_MH_IDX_MOD)
-        .select("probe_id", "source", "base_id", "jr")
-        .collect()
+        for r in sink_df.select("probe_id", "source", "base_id", "jr").collect()
     }
     assert streamed == batch and len(batch) > 0
+    # the sink lives in the application's temp root, which the driver
+    # deletes when the context stops, and the spent checkpoint is gone
+    from urllib.parse import urlparse
+
+    from pyspark import SparkFiles
+
+    sinks = {os.path.dirname(urlparse(f).path) for f in sink_df.inputFiles()}
+    assert len(sinks) == 1
+    (sink,) = sinks
+    assert sink.startswith(SparkFiles.getRootDirectory())
+    assert "spark-warehouse" not in sink
+    assert not os.path.exists(sink + "_ckpt")
 
 
 # ---------------------------------------------------------------------

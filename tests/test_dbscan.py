@@ -130,18 +130,16 @@ def test_cluster_census(spark):
     assert (row.n_clusters, row.n_noise) == (n_clusters_ref, n_noise_ref)
 
 
-def test_cc_distributed_matches_driver(spark):
-    from geo_big_data_analysis_spark.operators.dbscan import (
-        _cc_driver,
-        _connected_components,
-    )
+def test_cc_distributed_matches_driver(spark, force_distributed):
+    from geo_big_data_analysis_spark.operators.dbscan import connected_components
 
     # two chains + one singleton-free triangle, min-id labels
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)],
         "a_id bigint, b_id bigint",
     )
-    want = {r.id: r.comp for r in _cc_driver(edges).collect()}
-    got = {r.id: r.comp for r in _connected_components(edges).collect()}
+    want = {r.id: r.comp for r in connected_components(edges).collect()}
+    force_distributed()
+    got = {r.id: r.comp for r in connected_components(edges).collect()}
     assert want == got
     assert want[3] == 1 and want[11] == 10 and want[22] == 20

@@ -148,14 +148,15 @@ def test_shortest_path_route_unreachable(spark):
     assert shortest_path_route(edf, 0, 5, directed=False).count() == 0
 
 
-def test_shortest_path_route_distributed_matches_driver(spark):
+def test_shortest_path_route_distributed_matches_driver(spark, force_distributed):
+    """Forced, the route runs distributed SSSP, the predecessor join and
+    the per-hop filter walk of the predecessor table."""
     _, edges = _grid_graph()
     edf = spark.createDataFrame(edges, ["src", "dst", "weight"])
     tgt = max(max(s, d) for s, d, _ in edges)
     drv = shortest_path_route(edf, 0, tgt, directed=False).collect()
-    dst = shortest_path_route(
-        edf, 0, tgt, directed=False, driver_threshold=0
-    ).collect()
+    force_distributed()
+    dst = shortest_path_route(edf, 0, tgt, directed=False).collect()
     assert [(r.seq, r.node_id) for r in drv] == [(r.seq, r.node_id) for r in dst]
     for a, b in zip(drv, dst):
         assert abs(a.dist_along - b.dist_along) < 1e-9
@@ -326,7 +327,7 @@ def test_clustering_coefficient_bruteforce(spark):
         assert abs(r.coef - expect) < 1e-9
 
 
-def test_convex_hull_distributed_matches_driver_path(spark):
+def test_convex_hull_distributed_matches_driver_path(spark, force_distributed):
     """A >threshold ring of points: the per-partition-reduce path must
     return exactly the hull the single-collect path returns (hulls
     compose associatively), and interior points never survive."""
@@ -343,8 +344,9 @@ def test_convex_hull_distributed_matches_driver_path(spark):
         "cos(id * 0.7) * 50 AS x", "sin(id * 1.3) * 50 AS y"
     )
     pts = ring.unionByName(interior).repartition(16)
-    small_path = GA.convex_hull(pts, collect_max=10**9)
-    dist_path = GA.convex_hull(pts, collect_max=1000)
+    small_path = GA.convex_hull(pts)
+    force_distributed()
+    dist_path = GA.convex_hull(pts)
     assert dist_path == small_path
     assert len(dist_path) >= 3
     # every hull vertex is from the radius-100 ring, no interior point
@@ -427,7 +429,7 @@ def test_closure_guard_raises_without_exact(spark):
     assert GA.reachability_closure(small, exact=True).count() == 41 * 42 // 2
 
 
-def test_pagerank_distributed_matches_driver_path(spark):
+def test_pagerank_distributed_matches_driver_path(spark, force_distributed):
     """The size dispatch must be a pure physical choice: both paths on
     the same graph, identical ranks to well under the 8dp callers
     round to."""
@@ -436,15 +438,13 @@ def test_pagerank_distributed_matches_driver_path(spark):
     edges = [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2), (3, 0), (1, 3), (2, 3)]
     df = spark.createDataFrame(edges, ["src", "dst"])
     drv = {r["id"]: r["pr"] for r in pagerank(df, iterations=6).collect()}
-    dist = {
-        r["id"]: r["pr"]
-        for r in pagerank(df, iterations=6, driver_threshold=0).collect()
-    }
+    force_distributed()
+    dist = {r["id"]: r["pr"] for r in pagerank(df, iterations=6).collect()}
     assert set(drv) == set(dist)
     assert all(abs(drv[k] - dist[k]) < 1e-12 for k in drv)
 
 
-def test_kcore_distributed_matches_driver_path(spark):
+def test_kcore_distributed_matches_driver_path(spark, force_distributed):
     from geo_big_data_analysis_spark.graph.algorithms import kcore
 
     rnd = random.Random(7)
@@ -454,14 +454,15 @@ def test_kcore_distributed_matches_driver_path(spark):
         (r["id"], r["core_degree"])
         for r in kcore(df, k=3, rounds=6).collect()
     }
+    force_distributed()
     dist = {
         (r["id"], r["core_degree"])
-        for r in kcore(df, k=3, rounds=6, driver_threshold=0).collect()
+        for r in kcore(df, k=3, rounds=6).collect()
     }
     assert drv == dist and len(drv) > 0
 
 
-def test_label_propagation_distributed_matches_driver_path(spark):
+def test_label_propagation_distributed_matches_driver_path(spark, force_distributed):
     from geo_big_data_analysis_spark.graph.algorithms import label_propagation
 
     rnd = random.Random(11)
@@ -471,9 +472,10 @@ def test_label_propagation_distributed_matches_driver_path(spark):
         (r["id"], r["label"])
         for r in label_propagation(df, rounds=4).collect()
     }
+    force_distributed()
     dist = {
         (r["id"], r["label"])
-        for r in label_propagation(df, rounds=4, driver_threshold=0).collect()
+        for r in label_propagation(df, rounds=4).collect()
     }
     assert drv == dist and len(drv) > 0
 

@@ -200,7 +200,7 @@ _LLOYD_PATH_POINTS = [
 
 @pytest.mark.parametrize("iters", [1, 3])
 @pytest.mark.parametrize("layout", ["x y", "x y z", "vec"])
-def test_lloyd_distributed_loop_matches_driver_kernel(spark, monkeypatch, layout, iters):
+def test_lloyd_distributed_loop_matches_driver_kernel(spark, force_distributed, layout, iters):
     """The distributed loop (the bounded probe forced to report "too
     big") gives bit-equal centers and the same labels as the driver
     kernel, for the column layout in 2-D and 3-D and the array layout."""
@@ -219,7 +219,7 @@ def test_lloyd_distributed_loop_matches_driver_kernel(spark, monkeypatch, layout
     runs = []
     for forced in (False, True):
         if forced:
-            monkeypatch.setattr(lloyd, "_driver_rows", lambda pts: None)
+            force_distributed()
         labeled, centers = fit()
         runs.append((centers, {r["id"]: r["cluster_id"] for r in labeled.collect()}))
     (c_drv, l_drv), (c_dist, l_dist) = runs

@@ -78,13 +78,13 @@ def test_global_avg_rank_matches_pandas(numbers):
         assert got[i] == ref[i]
 
 
-def test_no_unpartitioned_window_in_plan(numbers, monkeypatch):
+def test_no_unpartitioned_window_in_plan(numbers, force_distributed):
     # r9 size dispatch: SMALL inputs deliberately take a plain
     # single-partition window (cheaper than the two-phase machinery on
     # one task's worth of data). The at-scale contract is unchanged:
     # past SMALL_SORT_CAP every Window must be keyed on the internal
-    # pid. Force the two-phase path by shrinking the cap.
-    monkeypatch.setattr(tp, "SMALL_SORT_CAP", 0)
+    # pid. Force the two-phase path.
+    force_distributed()
     plan = tp.global_row_number(
         numbers, [F.col("v").asc(), F.col("row_id").asc()]
     )._jdf.queryExecution().executedPlan().toString()
@@ -94,14 +94,14 @@ def test_no_unpartitioned_window_in_plan(numbers, monkeypatch):
             assert "__tp_pid" in line
 
 
-def test_small_dispatch_matches_two_phase(numbers, monkeypatch):
+def test_small_dispatch_matches_two_phase(numbers, force_distributed):
     """Both dispatch paths must number rows identically (total order)."""
     order = [F.col("v").asc(), F.col("row_id").asc()]
     small = {
         (r["row_id"], r["rn"])
         for r in tp.global_row_number(numbers, order).collect()
     }
-    monkeypatch.setattr(tp, "SMALL_SORT_CAP", 0)
+    force_distributed()
     big = {
         (r["row_id"], r["rn"])
         for r in tp.global_row_number(numbers, order).collect()

@@ -15,7 +15,7 @@ Usage:
                            [--plans-dir DIR] query [query ...]
 
 Prints one line per query:
-`<median_sec> <iqr> <compiles> <jobs> <py_s> <jit_s> <gc_s> <task_s> <other_s>  <name>`
+`<median_sec> <iqr> <compiles> <jobs> <paths> <py_s> <jit_s> <gc_s> <task_s> <other_s>  <name>`
 and a total. `compiles` is the number of classes Janino compiled across
 the timed iterations (Spark's `CodegenMetrics`). After the warm run it
 should be 0; a non-zero count points to a plan whose generated code
@@ -23,6 +23,11 @@ changes on every call. `jobs` is the most Spark jobs any timed iteration
 fired while `fn(spark, sf)` built the plan, before the write: eager
 probes, checkpoints and collects (a schema-inference job would show here
 too).
+
+`paths` counts the size-dispatch choices (`operators/dispatch`) one
+timed call made: `d3/x0` is 3 driver-kernel paths and 0 distributed
+ones (the most any timed call made of each). The tool wraps the two
+dispatch helpers to count them; the package has no hook for it.
 
 The `*_s` columns are CPU seconds per timed iteration (the mean), read
 from `/proc` (Linux only):
@@ -52,6 +57,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from geo_big_data_analysis_spark.operators import dispatch  # noqa: E402
 from geo_big_data_analysis_spark.plans.registry import REGISTRY  # noqa: E402
 from geo_big_data_analysis_spark.session import get_spark  # noqa: E402
 
@@ -117,6 +123,27 @@ def _cpu_split(before: dict, after: dict) -> dict[str, float]:
     return {k: v / _TICK for k, v in out.items()}
 
 
+#: dispatch choices since the last reset: "d" driver, "x" distributed
+_PATHS = {"d": 0, "x": 0}
+
+
+def _count_paths() -> None:
+    """Wrap the two dispatch helpers so every choice is counted."""
+    driver_rows, fits = dispatch.driver_rows, dispatch.fits
+
+    def counted_rows(df, cap):
+        tbl = driver_rows(df, cap)
+        _PATHS["x" if tbl is None else "d"] += 1
+        return tbl
+
+    def counted_fits(df, cap):
+        ok = fits(df, cap)
+        _PATHS["d" if ok else "x"] += 1
+        return ok
+
+    dispatch.driver_rows, dispatch.fits = counted_rows, counted_fits
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -128,6 +155,7 @@ def main() -> None:
     args = ap.parse_args()
 
     os.makedirs(args.plans_dir, exist_ok=True)
+    _count_paths()
     spark = get_spark("profileq")
     spark.range(10).count()  # JVM warm
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
@@ -153,8 +181,9 @@ def main() -> None:
             print(f"warm run failed: {name}: {type(e).__name__}: {e}", file=sys.stderr, flush=True)
         compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
         cpu0 = _cpu_snapshot(jvm_pid)
-        runs, jobs = [], 0
+        runs, jobs, paths = [], 0, {"d": 0, "x": 0}
         for i in range(args.iters):
+            _PATHS.update(d=0, x=0)
             build = f"profileq {name} build {i}"
             sc.setJobGroup(build, build)
             t0 = time.time()
@@ -162,6 +191,7 @@ def main() -> None:
             sc.setJobGroup(f"profileq {name} iter {i}", f"profileq {name} iter {i}")
             df.write.format("noop").mode("overwrite").save()
             runs.append(time.time() - t0)
+            paths = {k: max(v, _PATHS[k]) for k, v in paths.items()}
             # job-start events reach the status tracker through the listener bus
             sc._jsc.sc().listenerBus().waitUntilEmpty()
             jobs = max(jobs, len(sc.statusTracker().getJobIdsForGroup(build)))
@@ -176,8 +206,12 @@ def main() -> None:
         split = " ".join(
             f"{cpu[k] / args.iters:7.3f}" for k in ("py", "jit", "gc", "task", "other")
         )
-        print(f"{med:8.3f} {iqr:7.3f} {compiles:5d} {jobs:5d} {split}  {name}", flush=True)
-    print(f"{total:8.3f}{'':63}TOTAL ({len(args.queries)} queries)")
+        path_col = f"d{paths['d']}/x{paths['x']}"
+        print(
+            f"{med:8.3f} {iqr:7.3f} {compiles:5d} {jobs:5d} {path_col:>7} {split}  {name}",
+            flush=True,
+        )
+    print(f"{total:8.3f}{'':71}TOTAL ({len(args.queries)} queries)")
 
 
 if __name__ == "__main__":
