@@ -21,6 +21,9 @@ backtrack, the convex hull, PageRank, k-core, LPA, the SCC closure) asks
 `operators/dispatch` whether its input fits the cap named beside it
 (``DRIVER_EDGE_CAP``, ``PRED_DRIVER_CAP``, ``HULL_COLLECT_MAX_ROWS``,
 ``SCC_DRIVER_VERTEX_CAP``) and runs its distributed loop otherwise.
+The probed input is lazily checkpointed, and each loop reads it in one
+scan per job: both edge directions, or both endpoints, come from one
+``inline``/``explode`` of it, not a union of two projections.
 """
 
 from __future__ import annotations
@@ -521,12 +524,8 @@ def pagerank(
         return _pagerank_driver(
             edges.sparkSession, dispatch.tuples(tbl), iterations, damping
         )
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
+    # one scan of the lazy checkpoint for both endpoints (see `_both_ways`)
+    nodes = e.select(F.explode(F.array("src", "dst")).alias("id")).distinct().localCheckpoint()
     n = nodes.count()
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # edges annotated with the sender's out-degree, reused every round
@@ -569,6 +568,15 @@ def _kcore_driver(
         nbrs = {a: s for a, s in nbrs.items() if s}
     out = sorted((a, len(s)) for a, s in nbrs.items())
     return local_frame(spark, out, "id bigint, core_degree bigint")
+
+
+def _both_ways(und: DataFrame) -> DataFrame:
+    """Undirected (u, v) edges as directed (a, b) rows in both
+    directions, from ONE scan of ``und``. A union of the two projections
+    reads a lazily checkpointed ``und`` twice in its first job: two
+    tasks then want each block at once, and one waits for the other
+    (Spark logs "Block rdd_<n>_<p> already exists")."""
+    return und.select(F.expr("inline(array(struct(u AS a, v AS b), struct(v AS a, u AS b)))"))
 
 
 def kcore(
@@ -615,9 +623,7 @@ def kcore(
     tbl = dispatch.driver_rows(und, DRIVER_EDGE_CAP)
     if tbl is not None:
         return _kcore_driver(edges.sparkSession, dispatch.tuples(tbl), k, rounds)
-    adj = und.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
-        und.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    )
+    adj = _both_ways(und)
     for r in range(rounds):
         deg = adj.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
         keep = deg.filter(F.col("d") >= k).select("a")
@@ -701,9 +707,7 @@ def label_propagation(
     tbl = dispatch.driver_rows(und, DRIVER_EDGE_CAP)
     if tbl is not None:
         return _lpa_driver(edges.sparkSession, dispatch.tuples(tbl), rounds)
-    adj = und.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
-        und.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    ).localCheckpoint()
+    adj = _both_ways(und).localCheckpoint()
     nodes = adj.select(F.col("a").alias("id")).distinct()
     labels = nodes.withColumn("label", F.col("id")).localCheckpoint()
     for _ in range(rounds):
@@ -915,11 +919,7 @@ def scc_labels(
     )
     # the vertex count decides the dispatch; the lazy checkpoint
     # materializes the edge distinct once for whichever path runs.
-    verts = (
-        e.select(F.col("u").alias("id"))
-        .unionByName(e.select(F.col("v").alias("id")))
-        .distinct()
-    )
+    verts = e.select(F.explode(F.array("u", "v")).alias("id")).distinct()
     if dispatch.fits(verts, SCC_DRIVER_VERTEX_CAP):
         # the closure anchor's numpy kernel, minus the Θ(pairs)
         # closure-materialization shuffle join the anchor pays

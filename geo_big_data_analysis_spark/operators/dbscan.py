@@ -111,9 +111,10 @@ def _connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     Convergence detection is shuffle-free: Σcomp is strictly decreasing
     until fixpoint, so an unchanged sum terminates the loop.
     """
-    sym = edges.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-    sym = sym.unionByName(
-        sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    # both directions from one scan of the lazily checkpointed input; a
+    # union of two projections has two tasks contend for each block
+    sym = edges.select(
+        F.expr("inline(array(struct(a_id AS src, b_id AS dst), struct(b_id AS src, a_id AS dst)))")
     ).distinct().localCheckpoint()
     labels = (
         sym.select(F.col("src").alias("id"))

@@ -214,29 +214,6 @@ def cosine_topk_srp(
     return _topk(pairs.withColumn("cosine", _cosine_col("_qv", "_bv", dim)), k)
 
 
-def _srp_sig_expr(planes: list[list[float]], vec_col: str) -> Column:
-    """Signature as ONE parsed expression per table. The dot stays an
-    aggregate/zip_with HOF — bit-identical fp order to the Column-API
-    fold it replaced and the same interpreted evaluation — but parsing
-    one string replaces ~60 py4j round-trips per table (measured ~2 s
-    of driver plan-build across 8 tables). NOTE: an unrolled 64-term
-    constant dot was tried and REVERTED — 8 tables × 4 planes × 64
-    terms in one Generate projection overflows janino's method limit,
-    and the whole-stage fallback ran ~30× slower interpreted."""
-    terms = []
-    for i, plane in enumerate(planes):
-        arr = "array(" + ", ".join(f"{float(v)!r}D" for v in plane) + ")"
-        dot = (
-            f"aggregate(zip_with({vec_col}, {arr}, (x, y) -> x * y), "
-            f"0D, (acc, v) -> acc + v)"
-        )
-        terms.append(
-            f"(CASE WHEN ({dot}) > 0D THEN CAST({1 << i} AS BIGINT)"
-            f" ELSE CAST(0 AS BIGINT) END)"
-        )
-    return F.expr("(" + " + ".join(terms) + ")")
-
-
 def cosine_topk_srp_multi(
     queries: DataFrame,
     base: DataFrame,
@@ -260,14 +237,9 @@ def cosine_topk_srp_multi(
     explode/union."""
     dim = len(tables[0][0])
 
-    def banded(df: DataFrame, idc: str, vecc: str, out_id: str) -> DataFrame:
-        # r9: numpy signature kernel (guide §4.2) — bit-identical to the
-        # former _srp_sig_expr HOF build, see _srp_sig_rows_numpy
-        return _srp_sig_rows_numpy(df, tables, idc, vecc, out_id)
-
     cand = (
-        banded(queries, q_id, q_vec, "query_id")
-        .join(banded(base, b_id, b_vec, "neighbor_id"), ["t", "sig"])
+        _srp_sig_rows_numpy(queries, tables, q_id, q_vec, "query_id")
+        .join(_srp_sig_rows_numpy(base, tables, b_id, b_vec, "neighbor_id"), ["t", "sig"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct()
@@ -321,16 +293,15 @@ def _srp_sig_rows_numpy(
     center: list[float] | None = None,
 ) -> DataFrame:
     """SRP signature ROWS (out_id, t, sig) via an Arrow-batched numpy
-    kernel (guide §4.2) — replaces the interpreted ``aggregate∘zip_with``
-    HOF dots of :func:`_srp_sig_expr` (CodegenFallback, the measured
-    dominant cost of every SRP query) with vectorized native code.
+    kernel (guide §4.2): one vectorized pass per batch in place of a
+    per-row interpreted ``aggregate∘zip_with`` dot.
 
-    Bit-identical fp: the HOF fold is ``((0D + p0) + p1) + …`` and
-    ``np.cumsum(V * p, axis=1)[:, -1]`` is the same left-associated
-    chain (0.0 + p0 == p0 exactly); the sign test and bit packing are
-    integer-exact. With ``center`` the input is shifted elementwise
-    first — the same double subtraction as the ``zip_with(x - y)``
-    centering of the skew-split path."""
+    Fp order: ``np.cumsum(V * p, axis=1)[:, -1]`` is the left-associated
+    chain ``((0 + p0) + p1) + …`` (0.0 + p0 == p0 exactly), the order of
+    the Column-API ``_dot`` fold in :func:`srp_signature`; the sign test
+    and bit packing are integer-exact. With ``center`` the input is
+    shifted elementwise first — the same double subtraction as the
+    ``zip_with(x - y)`` centering of the skew-split path."""
     tbls = [[[float(x) for x in p] for p in tbl] for tbl in tables]
     mu = [float(x) for x in center] if center is not None else None
     schema = f"{out_id} bigint, t int, sig bigint"
@@ -409,11 +380,11 @@ def embedding_near_dup_pairs(
     """
     from .spread import spread
 
-    # The SRP signatures below are interpreted HOF dots (CodegenFallback
-    # — see _srp_sig_expr) and the norms are unrolled dots: per-row cost
-    # is orders of magnitude above the bytes, and the fixture scan is a
-    # single task. Spread before computing either (guide §2.5); every
-    # downstream step is a key join or aggregate, partitioning-free.
+    # The SRP signatures below are a Python-worker numpy kernel and the
+    # norms are unrolled dots: per-row cost is orders of magnitude above
+    # the bytes, and the fixture scan is a single task. Spread before
+    # computing either (guide §2.5); every downstream step is a key join
+    # or aggregate, partitioning-free.
     e = spread(
         emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
     )
@@ -444,11 +415,6 @@ def embedding_near_dup_pairs(
 
     dim = len(tables[0][0])
 
-    def banded(df: DataFrame, out_id: str) -> DataFrame:
-        # r9: numpy signature kernel (guide §4.2) — bit-identical to the
-        # former _srp_sig_expr HOF build, see _srp_sig_rows_numpy
-        return _srp_sig_rows_numpy(df, tables, "vec_id", "embedding", out_id)
-
     # norms once per VECTOR (n of them), not per pair — the verify then
     # evaluates a single unrolled dot per candidate instead of three.
     # The lazy localCheckpoint is a projection barrier: without it the
@@ -459,11 +425,13 @@ def embedding_near_dup_pairs(
     wn = e.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding"), nrm.alias("_n")
     ).localCheckpoint(eager=False)
-    # signatures once: the HOF dot inside _srp_sig_expr is interpreted
-    # (CodegenFallback), so evaluating the banded side twice for the
-    # self-join doubles the dominant cost; the lazy checkpoint
-    # materializes the (id, t, sig) rows — 3 integers per row — once.
-    banded_all = banded(e, "vec_id").localCheckpoint(eager=False)
+    # signatures once: the self-join reads the banded side twice, and
+    # each read would run the Python signature kernel again; the lazy
+    # checkpoint materializes the (id, t, sig) rows — 3 integers per
+    # row — once.
+    banded_all = _srp_sig_rows_numpy(e, tables, "vec_id", "embedding", "vec_id").localCheckpoint(
+        eager=False
+    )
     join_keys = ["t", "sig"]
     if bucket_cap:
         occ = banded_all.groupBy("t", "sig").agg(F.count(F.lit(1)).alias("_occ"))
@@ -507,10 +475,9 @@ def embedding_near_dup_pairs(
         # only the hot rows pay a vector re-join + re-hash; the masked
         # low `_extra` bits of the full extension signature append to
         # the base signature, depth disambiguates split widths.
-        # r9: the 16 centered extension dots run in the numpy kernel
-        # (same fp contract as the base signatures) and ONCE PER DISTINCT
-        # hot VECTOR — the former per-(row, table) HOF evaluated them
-        # L× per hot vector.
+        # the 16 centered extension dots run in the numpy kernel (same
+        # fp contract as the base signatures), once per distinct hot
+        # vector, not once per (row, table).
         hot_marked = marked.filter(F.col("_extra").isNotNull())
         hot_vecs = wn.join(
             hot_marked.select("vec_id"), "vec_id", "left_semi"

@@ -17,6 +17,10 @@ Derived coordinates convention (both sides, identical op order):
 This plants a deterministic NYC-bbox point per event row so the
 reference's geospatial operator suite (bbox filter / grid / haversine /
 spatial join) is oracle-checkable on the driver's relational fixtures.
+
+Per-item Python (the codec round-trips) is a plain function of one row
+run by ``sources/tables.map_rows``; the query keeps only the kernel
+body and its output schema.
 """
 
 from __future__ import annotations
@@ -53,7 +57,7 @@ from ..sources.ann_index import (
     ensure_minhash_index,
     ensure_minhash_upsert,
 )
-from ..sources.tables import _t, local_frame
+from ..sources.tables import _t, local_frame, map_rows
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -4525,40 +4529,26 @@ def q_png_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter type, cross-engine. Integer pixel sums make the comparison
     exact (one final division). Probe set: doc_id % 29 = 0 (codec work
     is per-image Python — bounded like the JW probe set)."""
-    import pandas as pd
-
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 29 == 0).select(
         "doc_id", "source"
     )
 
-    def gen(batches):
+    def roundtrip(doc_id, source):
         import numpy as np
 
         from ..sources.png import read_png, write_png
 
-        for pdf in batches:
-            out = []
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                y, x = np.mgrid[0:16, 0:16]
-                grid = ((int(doc_id) * 31 + y * 16 + x * 7) % 256).astype(np.uint8)
-                px = read_png(write_png(grid, filter_type="mixed"))
-                if not np.array_equal(px, grid):  # codec must be lossless
-                    raise ValueError(f"PNG round-trip corrupted doc {doc_id}")
-                out.append(
-                    (
-                        int(doc_id),
-                        source,
-                        int(px.astype(np.int64).sum()),
-                        int(px.min()),
-                        int(px.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "source", "px_sum", "px_min", "px_max"]
-            )
+        y, x = np.mgrid[0:16, 0:16]
+        grid = ((int(doc_id) * 31 + y * 16 + x * 7) % 256).astype(np.uint8)
+        px = read_png(write_png(grid, filter_type="mixed"))
+        if not np.array_equal(px, grid):  # codec must be lossless
+            raise ValueError(f"PNG round-trip corrupted doc {doc_id}")
+        return (
+            int(doc_id), source, int(px.astype(np.int64).sum()), int(px.min()), int(px.max())
+        )
 
-    per_doc = docs.mapInPandas(
-        gen, "doc_id bigint, source string, px_sum bigint, px_min int, px_max int"
+    per_doc = map_rows(
+        docs, roundtrip, "doc_id bigint, source string, px_sum bigint, px_min int, px_max int"
     )
     return (
         per_doc.groupBy("source")
@@ -4608,50 +4598,35 @@ def q_wav_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     waveform's closed-form arithmetic (zero crossings via a lag window
     over the generated series) — a hash match proves the PCM
     encode/decode round-trip lossless. Probe set doc_id % 31 = 0."""
-    import pandas as pd
-
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 31 == 0).select(
         "doc_id", "source"
     )
 
-    def gen(batches):
+    def roundtrip(doc_id, source):
         import numpy as np
 
         from ..sources.wav import read_wav, write_wav
 
-        for pdf in batches:
-            out = []
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                i = np.arange(256, dtype=np.int64)
-                ch1 = (int(doc_id) * 37 + i * i) % 4001 - 2000
-                ch2 = (int(doc_id) * 53 + i * 7) % 4001 - 2000
-                frames = np.stack([ch1, ch2], axis=1)
-                decoded, rate = read_wav(write_wav(frames, rate=16_000))
-                if rate != 16_000 or not np.array_equal(decoded, frames):
-                    raise ValueError(f"WAV round-trip corrupted doc {doc_id}")
-                zc = int(
-                    ((decoded[1:] >= 0) != (decoded[:-1] >= 0)).sum()
-                )
-                out.append(
-                    (
-                        int(doc_id),
-                        source,
-                        int(decoded.sum()),
-                        int((decoded.astype(np.int64) ** 2).sum()),
-                        int(decoded.min()),
-                        int(decoded.max()),
-                        zc,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "source", "s_sum", "sq_sum", "s_min", "s_max", "zc",
-                ],
-            )
+        i = np.arange(256, dtype=np.int64)
+        ch1 = (int(doc_id) * 37 + i * i) % 4001 - 2000
+        ch2 = (int(doc_id) * 53 + i * 7) % 4001 - 2000
+        frames = np.stack([ch1, ch2], axis=1)
+        decoded, rate = read_wav(write_wav(frames, rate=16_000))
+        if rate != 16_000 or not np.array_equal(decoded, frames):
+            raise ValueError(f"WAV round-trip corrupted doc {doc_id}")
+        return (
+            int(doc_id),
+            source,
+            int(decoded.sum()),
+            int((decoded.astype(np.int64) ** 2).sum()),
+            int(decoded.min()),
+            int(decoded.max()),
+            int(((decoded[1:] >= 0) != (decoded[:-1] >= 0)).sum()),  # zero crossings
+        )
 
-    per_doc = docs.mapInPandas(
-        gen,
+    per_doc = map_rows(
+        docs,
+        roundtrip,
         "doc_id bigint, source string, s_sum bigint, sq_sum bigint,"
         " s_min int, s_max int, zc bigint",
     )
@@ -4716,49 +4691,37 @@ def q_gif_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame arithmetic — a hash match proves LZW encode/decode lossless
     for every frame. Probe set doc_id % 37 = 0 (the modulus-bounded
     per-item-Python discipline of the PNG/WAV/JW probes)."""
-    import pandas as pd
-
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 37 == 0).select(
         "doc_id", "source"
     )
 
-    def gen(batches):
+    def roundtrip(doc_id, source):
         import numpy as np
 
         from ..sources.gif import read_gif, write_gif
 
         pal = np.array([[i * 32, i * 32, i * 32] for i in range(8)], np.uint8)
-        for pdf in batches:
-            out = []
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                y, x = np.mgrid[0:16, 0:16]
-                frames = [
-                    ((int(doc_id) * 11 + f * 97 + y * 16 + x) % 8).astype(np.uint8)
-                    for f in range(4)
-                ]
-                _p, got = read_gif(write_gif(frames, pal))
-                if len(got) != 4 or any(
-                    not np.array_equal(a, b) for a, b in zip(got, frames)
-                ):
-                    raise ValueError(f"GIF round-trip corrupted doc {doc_id}")
-                stacked = np.stack(got).astype(np.int64)
-                out.append(
-                    (
-                        int(doc_id),
-                        source,
-                        len(got),
-                        int(stacked.sum()),
-                        int(stacked.min()),
-                        int(stacked.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "source", "n_frames", "idx_sum", "idx_min", "idx_max"],
-            )
+        y, x = np.mgrid[0:16, 0:16]
+        frames = [
+            ((int(doc_id) * 11 + f * 97 + y * 16 + x) % 8).astype(np.uint8)
+            for f in range(4)
+        ]
+        _p, got = read_gif(write_gif(frames, pal))
+        if len(got) != 4 or any(not np.array_equal(a, b) for a, b in zip(got, frames)):
+            raise ValueError(f"GIF round-trip corrupted doc {doc_id}")
+        stacked = np.stack(got).astype(np.int64)
+        return (
+            int(doc_id),
+            source,
+            len(got),
+            int(stacked.sum()),
+            int(stacked.min()),
+            int(stacked.max()),
+        )
 
-    per_doc = docs.mapInPandas(
-        gen,
+    per_doc = map_rows(
+        docs,
+        roundtrip,
         "doc_id bigint, source string, n_frames int, idx_sum bigint,"
         " idx_min int, idx_max int",
     )
@@ -4816,54 +4779,34 @@ def q_jpeg_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted exact inside the UDF, so the subsampled/DRI machinery is
     pinned by the same hash. Probe set doc_id % 41 = 0 (codec work is
     per-image Python, bounded like the PNG/WAV/GIF probes)."""
-    import pandas as pd
-
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 41 == 0).select(
         "doc_id", "source"
     )
 
-    def gen(batches):
+    def roundtrip(doc_id, source):
         import numpy as np
 
         from ..sources.jpeg import read_jpeg, write_jpeg
 
-        for pdf in batches:
-            out = []
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                y, x = np.mgrid[0:32, 0:32]
-                img = (
-                    (int(doc_id) * 17 + (y // 8) * 8 + (x // 8) * 3) % 256
-                ).astype(np.uint8)
-                px = read_jpeg(write_jpeg(img))
-                if not np.array_equal(px, img):  # exact on this class
-                    raise ValueError(f"JPEG round-trip corrupted doc {doc_id}")
-                # the same grid as gray-valued RGB through the 4:2:0 +
-                # restart-interval path: Y blocks constant and chroma
-                # constant 128 (box-means exactly), so THIS path must
-                # also be lossless — pinned by the same oracle hash
-                rgb = np.stack([img, img, img], axis=-1)
-                px420 = read_jpeg(
-                    write_jpeg(rgb, subsampling="420", restart_interval=2)
-                )
-                if not np.array_equal(px420, rgb):
-                    raise ValueError(
-                        f"JPEG 4:2:0 round-trip corrupted doc {doc_id}"
-                    )
-                out.append(
-                    (
-                        int(doc_id),
-                        source,
-                        int(px.astype(np.int64).sum()),
-                        int(px.min()),
-                        int(px.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "source", "px_sum", "px_min", "px_max"]
-            )
+        y, x = np.mgrid[0:32, 0:32]
+        img = ((int(doc_id) * 17 + (y // 8) * 8 + (x // 8) * 3) % 256).astype(np.uint8)
+        px = read_jpeg(write_jpeg(img))
+        if not np.array_equal(px, img):  # exact on this class
+            raise ValueError(f"JPEG round-trip corrupted doc {doc_id}")
+        # the same grid as gray-valued RGB through the 4:2:0 +
+        # restart-interval path: Y blocks constant and chroma constant
+        # 128 (box-means exactly), so THIS path must also be lossless —
+        # pinned by the same oracle hash
+        rgb = np.stack([img, img, img], axis=-1)
+        px420 = read_jpeg(write_jpeg(rgb, subsampling="420", restart_interval=2))
+        if not np.array_equal(px420, rgb):
+            raise ValueError(f"JPEG 4:2:0 round-trip corrupted doc {doc_id}")
+        return (
+            int(doc_id), source, int(px.astype(np.int64).sum()), int(px.min()), int(px.max())
+        )
 
-    per_doc = docs.mapInPandas(
-        gen, "doc_id bigint, source string, px_sum bigint, px_min int, px_max int"
+    per_doc = map_rows(
+        docs, roundtrip, "doc_id bigint, source string, px_sum bigint, px_min int, px_max int"
     )
     return (
         per_doc.groupBy("source")
@@ -4924,47 +4867,34 @@ def q_image_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (including genuinely-missed pairs whose ≤6 flips straddle all four
     bands) cross-engine. 100 TB shape: per-image Python is map-only
     over a bounded probe set; the joins are integer-keyed shuffles."""
-    import pandas as pd
-
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0).select(
         "doc_id"
     )
 
-    def gen(batches):
+    def dhash(doc_id):
         import numpy as np
 
         from ..sources.png import read_png, write_png
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                g = d % 31
-                y, x = np.mgrid[0:8, 0:9]
-                base = (g * (y + 3) * (x + 5) + y * 29 + x * 13) % 256
-                grid = np.clip(base, 64, 191).astype(np.int64)
-                for j in range(d % 4 + 1):
-                    # scalar-indexed += so coinciding spike positions
-                    # ACCUMULATE (fancy-index += would apply only once,
-                    # diverging from the oracle's summed CASE terms)
-                    grid[(d * 7 + 13 * j) % 8, (d * 11 + 17 * j) % 9] += (
-                        64 * ((d + j) % 3 - 1)
-                    )
-                grid = np.clip(grid, 0, 255).astype(np.uint8)
-                px = read_png(write_png(grid, filter_type="mixed"))
-                if not np.array_equal(px, grid):
-                    raise ValueError(f"PNG round-trip corrupted doc {d}")
-                bits = (
-                    px[:, :8].astype(np.int64) < px[:, 1:].astype(np.int64)
-                ).astype(np.int64).ravel()  # i = y*8 + x
-                bands = [
-                    int((bits[k * 16 : (k + 1) * 16] << np.arange(16)).sum())
-                    for k in range(4)
-                ]
-                out.append((d, g, *bands))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "grp", "b0", "b1", "b2", "b3"]
-            )
+        d = int(doc_id)
+        g = d % 31
+        y, x = np.mgrid[0:8, 0:9]
+        base = (g * (y + 3) * (x + 5) + y * 29 + x * 13) % 256
+        grid = np.clip(base, 64, 191).astype(np.int64)
+        for j in range(d % 4 + 1):
+            # scalar-indexed += so coinciding spike positions ACCUMULATE
+            # (fancy-index += would apply only once, diverging from the
+            # oracle's summed CASE terms)
+            grid[(d * 7 + 13 * j) % 8, (d * 11 + 17 * j) % 9] += 64 * ((d + j) % 3 - 1)
+        grid = np.clip(grid, 0, 255).astype(np.uint8)
+        px = read_png(write_png(grid, filter_type="mixed"))
+        if not np.array_equal(px, grid):
+            raise ValueError(f"PNG round-trip corrupted doc {d}")
+        bits = (
+            px[:, :8].astype(np.int64) < px[:, 1:].astype(np.int64)
+        ).astype(np.int64).ravel()  # i = y*8 + x
+        bands = [int((bits[k * 16 : (k + 1) * 16] << np.arange(16)).sum()) for k in range(4)]
+        return (d, g, *bands)
 
     # r9: `hashes` is consumed THREE times (band explode + both verify
     # sides), so the per-image Python PNG encode→decode ran 3× per
@@ -4974,11 +4904,9 @@ def q_image_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide §5).
     from ..operators.spread import spread
 
-    hashes = (
-        spread(docs)
-        .mapInPandas(gen, "doc_id bigint, grp int, b0 int, b1 int, b2 int, b3 int")
-        .localCheckpoint(eager=False)
-    )
+    hashes = map_rows(
+        spread(docs), dhash, "doc_id bigint, grp int, b0 int, b1 int, b2 int, b3 int"
+    ).localCheckpoint(eager=False)
     bands = hashes.select(
         "doc_id", F.posexplode(F.array("b0", "b1", "b2", "b3")).alias("band", "val")
     )
@@ -5109,46 +5037,37 @@ def q_flac_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the waveform's closed-form arithmetic. Probe set
     doc_id % 37 = 0 (per-clip Python codec work, bounded like the
     PNG/WAV/GIF/JPEG probes)."""
-    import pandas as pd
-
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 37 == 0).select(
         "doc_id", "source"
     )
 
-    def gen(batches):
+    def roundtrip(doc_id, source):
         import numpy as np
 
         from ..sources.flac import read_flac, write_flac
 
-        for pdf in batches:
-            out = []
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                i = np.arange(256, dtype=np.int64)
-                ch1 = (int(doc_id) * 13 + i * 3) % 2001 - 1000
-                ch2 = (int(doc_id) * 29 + i * i) % 1999 - 999
-                frames = np.stack([ch1, ch2], axis=1)
-                enc = write_flac(frames, rate=16_000, bps=16, blocksize=256)
-                decoded, rate = read_flac(enc)
-                if rate != 16_000 or not np.array_equal(decoded, frames):
-                    raise ValueError(f"FLAC round-trip corrupted doc {doc_id}")
-                if len(enc) >= frames.size * 2:  # must beat raw PCM
-                    raise ValueError(f"FLAC failed to compress doc {doc_id}")
-                out.append(
-                    (
-                        int(doc_id),
-                        source,
-                        int(decoded.sum()),
-                        int((decoded.astype(np.int64) ** 2).sum()),
-                        int(decoded.min()),
-                        int(decoded.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "source", "s_sum", "sq_sum", "s_min", "s_max"]
-            )
+        i = np.arange(256, dtype=np.int64)
+        ch1 = (int(doc_id) * 13 + i * 3) % 2001 - 1000
+        ch2 = (int(doc_id) * 29 + i * i) % 1999 - 999
+        frames = np.stack([ch1, ch2], axis=1)
+        enc = write_flac(frames, rate=16_000, bps=16, blocksize=256)
+        decoded, rate = read_flac(enc)
+        if rate != 16_000 or not np.array_equal(decoded, frames):
+            raise ValueError(f"FLAC round-trip corrupted doc {doc_id}")
+        if len(enc) >= frames.size * 2:  # must beat raw PCM
+            raise ValueError(f"FLAC failed to compress doc {doc_id}")
+        return (
+            int(doc_id),
+            source,
+            int(decoded.sum()),
+            int((decoded.astype(np.int64) ** 2).sum()),
+            int(decoded.min()),
+            int(decoded.max()),
+        )
 
-    per_doc = docs.mapInPandas(
-        gen,
+    per_doc = map_rows(
+        docs,
+        roundtrip,
         "doc_id bigint, source string, s_sum bigint, sq_sum bigint,"
         " s_min int, s_max int",
     )
@@ -5207,57 +5126,39 @@ def q_mp4_sample_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs) and the re-mux are exact. This is the layer a 100 TB video
     pipeline actually touches (frame manifests + sample slicing, no
     codec decode). Probe set doc_id % 43 = 0."""
-    import pandas as pd
-
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 43 == 0).select(
         "doc_id", "source"
     )
 
-    def gen(batches):
+    def remux(doc_id, source):
         from ..sources.mp4 import extract_samples, read_mp4, write_mp4
 
-        for pdf in batches:
-            out = []
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                d = int(doc_id)
-                n = 8 + d % 13
-                samples = [
-                    bytes([(d + i) % 256]) * ((d + i * 7) % 200 + 1)
-                    for i in range(n)
-                ]
-                durs = [(i % 5) + 1 for i in range(n)]
-                data = write_mp4(samples, timescale=600, durations=durs)
-                (trk,) = read_mp4(data)
-                if extract_samples(data, trk) != samples or trk.sample_durations != durs:
-                    raise ValueError(f"MP4 sample tables corrupted doc {doc_id}")
-                kept = extract_samples(data, trk)[::3]
-                data2 = write_mp4(
-                    kept, timescale=600, durations=trk.sample_durations[::3]
-                )
-                (trk2,) = read_mp4(data2)
-                if extract_samples(data2, trk2) != samples[::3]:
-                    raise ValueError(f"MP4 re-mux corrupted doc {doc_id}")
-                out.append(
-                    (
-                        d,
-                        source,
-                        n,
-                        sum(len(s) for s in samples),
-                        sum(durs),
-                        len(kept),
-                        sum(len(s) for s in kept),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "source", "n_samples", "total_bytes",
-                    "total_dur", "kept_samples", "kept_bytes",
-                ],
-            )
+        d = int(doc_id)
+        n = 8 + d % 13
+        samples = [bytes([(d + i) % 256]) * ((d + i * 7) % 200 + 1) for i in range(n)]
+        durs = [(i % 5) + 1 for i in range(n)]
+        data = write_mp4(samples, timescale=600, durations=durs)
+        (trk,) = read_mp4(data)
+        if extract_samples(data, trk) != samples or trk.sample_durations != durs:
+            raise ValueError(f"MP4 sample tables corrupted doc {doc_id}")
+        kept = extract_samples(data, trk)[::3]
+        data2 = write_mp4(kept, timescale=600, durations=trk.sample_durations[::3])
+        (trk2,) = read_mp4(data2)
+        if extract_samples(data2, trk2) != samples[::3]:
+            raise ValueError(f"MP4 re-mux corrupted doc {doc_id}")
+        return (
+            d,
+            source,
+            n,
+            sum(len(s) for s in samples),
+            sum(durs),
+            len(kept),
+            sum(len(s) for s in kept),
+        )
 
-    per_doc = docs.mapInPandas(
-        gen,
+    per_doc = map_rows(
+        docs,
+        remux,
         "doc_id bigint, source string, n_samples int, total_bytes bigint,"
         " total_dur bigint, kept_samples int, kept_bytes bigint",
     )
@@ -5326,60 +5227,41 @@ def q_mjpeg_mp4_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     content class. 100 TB shape: map-only per-item Python over a
     bounded probe set inside Arrow batches; the aggregate is a
     doc-keyed hash-agg."""
-    import pandas as pd
-
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 53 == 0).select(
         "doc_id", "source"
     )
 
-    def gen(batches):
+    def roundtrip(doc_id, source):
         import numpy as np
 
         from ..sources.jpeg import write_jpeg
         from ..sources.mp4 import write_mp4
         from ..sources.multimodal import decode_media
 
-        for pdf in batches:
-            out = []
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                d = int(doc_id)
-                n = 2 + d % 3
-                y, x = np.mgrid[0:16, 0:16]
-                frames = [
-                    ((d * 17 + k * 31 + (y // 8) * 8 + (x // 8) * 3) % 256).astype(
-                        np.uint8
-                    )
-                    for k in range(n)
-                ]
-                mp4 = write_mp4(
-                    [write_jpeg(f) for f in frames],
-                    timescale=600,
-                    durations=[25] * n,
-                    handler="vide",
-                    codec="jpeg",
-                )
-                px = decode_media(mp4, "video")  # (n, 16, 16) uint8
-                if px.shape != (n, 16, 16) or not all(
-                    np.array_equal(px[k], frames[k]) for k in range(n)
-                ):
-                    raise ValueError(f"MJPEG-MP4 frame decode corrupted doc {d}")
-                out.append(
-                    (
-                        d,
-                        source,
-                        n,
-                        int(px.astype(np.int64).sum()),
-                        int(px.min()),
-                        int(px.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "source", "n_frames", "px_sum", "px_min", "px_max"],
-            )
+        d = int(doc_id)
+        n = 2 + d % 3
+        y, x = np.mgrid[0:16, 0:16]
+        frames = [
+            ((d * 17 + k * 31 + (y // 8) * 8 + (x // 8) * 3) % 256).astype(np.uint8)
+            for k in range(n)
+        ]
+        mp4 = write_mp4(
+            [write_jpeg(f) for f in frames],
+            timescale=600,
+            durations=[25] * n,
+            handler="vide",
+            codec="jpeg",
+        )
+        px = decode_media(mp4, "video")  # (n, 16, 16) uint8
+        if px.shape != (n, 16, 16) or not all(
+            np.array_equal(px[k], frames[k]) for k in range(n)
+        ):
+            raise ValueError(f"MJPEG-MP4 frame decode corrupted doc {d}")
+        return (d, source, n, int(px.astype(np.int64).sum()), int(px.min()), int(px.max()))
 
-    per_doc = docs.mapInPandas(
-        gen,
+    per_doc = map_rows(
+        docs,
+        roundtrip,
         "doc_id bigint, source string, n_frames int, px_sum bigint,"
         " px_min int, px_max int",
     )
@@ -5439,49 +5321,33 @@ def q_webp_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid's closed-form arithmetic — a hash match proves the prefix-code
     round-trip lossless cross-engine. Probe set doc_id % 59 = 0
     (bounded per-image Python, the `png_roundtrip_stats` pattern)."""
-    import pandas as pd
-
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 59 == 0).select(
         "doc_id", "source"
     )
 
-    def gen(batches):
+    def roundtrip(doc_id, source):
         import numpy as np
 
         from ..sources.multimodal import decode_media
         from ..sources.webp import write_webp
 
-        for pdf in batches:
-            out = []
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                d = int(doc_id)
-                y, x = np.mgrid[0:16, 0:16]
-                img = np.stack(
-                    [
-                        (d * 17 + y * 7 + x * 3) % 256,
-                        (d * 31 + y * 16 + x * 7) % 256,
-                        (d * 13 + y * 5 + x * 11) % 256,
-                    ],
-                    axis=2,
-                ).astype(np.uint8)
-                px = decode_media(write_webp(img), "image")
-                if not np.array_equal(px, img):  # codec must be lossless
-                    raise ValueError(f"WebP round-trip corrupted doc {d}")
-                out.append(
-                    (
-                        d,
-                        source,
-                        int(px.astype(np.int64).sum()),
-                        int(px.min()),
-                        int(px.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "source", "px_sum", "px_min", "px_max"]
-            )
+        d = int(doc_id)
+        y, x = np.mgrid[0:16, 0:16]
+        img = np.stack(
+            [
+                (d * 17 + y * 7 + x * 3) % 256,
+                (d * 31 + y * 16 + x * 7) % 256,
+                (d * 13 + y * 5 + x * 11) % 256,
+            ],
+            axis=2,
+        ).astype(np.uint8)
+        px = decode_media(write_webp(img), "image")
+        if not np.array_equal(px, img):  # codec must be lossless
+            raise ValueError(f"WebP round-trip corrupted doc {d}")
+        return (d, source, int(px.astype(np.int64).sum()), int(px.min()), int(px.max()))
 
-    per_doc = docs.mapInPandas(
-        gen, "doc_id bigint, source string, px_sum bigint, px_min int, px_max int"
+    per_doc = map_rows(
+        docs, roundtrip, "doc_id bigint, source string, px_sum bigint, px_min int, px_max int"
     )
     return (
         per_doc.groupBy("source")
@@ -5533,44 +5399,30 @@ def q_mp3_frame_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula and stream walk exact. Integer-only outputs (sample
     counts, byte totals, summed kbps) keep the comparison exact.
     Probe set doc_id % 47 = 0."""
-    import pandas as pd
-
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 47 == 0).select(
         "doc_id", "source"
     )
 
-    def gen(batches):
+    def walk(doc_id, source):
         from ..sources.mp3 import read_mp3_frames, write_mp3_stream
 
-        for pdf in batches:
-            out = []
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                d = int(doc_id)
-                idxs = [(d + j * 3) % 14 + 1 for j in range(6)]
-                stream = write_mp3_stream(idxs, sr_idx=d % 3)
-                frames = read_mp3_frames(stream)
-                if len(frames) != 6 or len(stream) != sum(f.frame_bytes for f in frames):
-                    raise ValueError(f"MP3 walk lost frames doc {doc_id}")
-                out.append(
-                    (
-                        d,
-                        source,
-                        len(frames),
-                        sum(f.frame_bytes for f in frames),
-                        sum(f.n_samples for f in frames),
-                        sum(f.bitrate_kbps for f in frames),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "source", "n_frames", "stream_bytes",
-                    "pcm_samples", "kbps_sum",
-                ],
-            )
+        d = int(doc_id)
+        stream = write_mp3_stream([(d + j * 3) % 14 + 1 for j in range(6)], sr_idx=d % 3)
+        frames = read_mp3_frames(stream)
+        if len(frames) != 6 or len(stream) != sum(f.frame_bytes for f in frames):
+            raise ValueError(f"MP3 walk lost frames doc {doc_id}")
+        return (
+            d,
+            source,
+            len(frames),
+            sum(f.frame_bytes for f in frames),
+            sum(f.n_samples for f in frames),
+            sum(f.bitrate_kbps for f in frames),
+        )
 
-    per_doc = docs.mapInPandas(
-        gen,
+    per_doc = map_rows(
+        docs,
+        walk,
         "doc_id bigint, source string, n_frames int, stream_bytes bigint,"
         " pcm_samples bigint, kbps_sum bigint",
     )
@@ -5700,51 +5552,32 @@ def q_h264_ipcm_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole bitstream layer round-trips bit-exactly. The CAVLC residual
     path stays a named boundary (`sources/h264.py` docstring). 100 TB
     shape: map-only Arrow-batched probe set; doc-keyed hash-agg."""
-    import pandas as pd
-
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 59 == 0).select(
         "doc_id", "source"
     )
 
-    def gen(batches):
+    def roundtrip(doc_id, source):
         import numpy as np
 
         from ..sources.h264 import write_annexb_ipcm
         from ..sources.multimodal import decode_media
 
-        for pdf in batches:
-            out = []
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                d = int(doc_id)
-                n = 2 + d % 3
-                y, x = np.mgrid[0:16, 0:32]
-                frames = [
-                    ((d * 13 + k * 41 + y * 16 + x * 7) % 256).astype(np.uint8)
-                    for k in range(n)
-                ]
-                enc = write_annexb_ipcm(frames)
-                px = decode_media(enc, "video")  # (n, 16, 32) uint8
-                if px.shape != (n, 16, 32) or not all(
-                    np.array_equal(px[k], frames[k]) for k in range(n)
-                ):
-                    raise ValueError(f"H.264 I_PCM decode corrupted doc {d}")
-                out.append(
-                    (
-                        d,
-                        source,
-                        n,
-                        int(px.astype(np.int64).sum()),
-                        int(px.min()),
-                        int(px.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "source", "n_frames", "px_sum", "px_min", "px_max"],
-            )
+        d = int(doc_id)
+        n = 2 + d % 3
+        y, x = np.mgrid[0:16, 0:32]
+        frames = [
+            ((d * 13 + k * 41 + y * 16 + x * 7) % 256).astype(np.uint8) for k in range(n)
+        ]
+        px = decode_media(write_annexb_ipcm(frames), "video")  # (n, 16, 32) uint8
+        if px.shape != (n, 16, 32) or not all(
+            np.array_equal(px[k], frames[k]) for k in range(n)
+        ):
+            raise ValueError(f"H.264 I_PCM decode corrupted doc {d}")
+        return (d, source, n, int(px.astype(np.int64).sum()), int(px.min()), int(px.max()))
 
-    per_doc = docs.mapInPandas(
-        gen,
+    per_doc = map_rows(
+        docs,
+        roundtrip,
         "doc_id bigint, source string, n_frames int, px_sum bigint,"
         " px_min int, px_max int",
     )

@@ -7,7 +7,9 @@ again (a codegen cache sized to hold their generated classes). The
 ``WindowExec`` "No Partition Defined" warning is silenced; unpartitioned
 windows are counted at plan level by ``tools/planaudit.py`` and
 ``tools/plansnapshot.py``. On a real cluster only ``master`` and memory
-sizing change — the SQL-level behavior is identical.
+sizing change — the SQL-level behavior is identical. ``get_spark``
+applies these defaults only to a session it creates; a running session
+is returned unchanged.
 """
 
 from __future__ import annotations
@@ -57,7 +59,14 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Create (or get) a SparkSession with engine defaults.
+    """Create a SparkSession with engine defaults, or return the running
+    one unchanged.
+
+    The settings below apply only when this call creates the session. A
+    session that is already running (an earlier ``get_spark``, a test
+    fixture, a caller's own session) is returned as it is: no argument
+    or default is applied to it, so a tool driven from inside another
+    session leaves that session's partitioning and confs alone.
 
     Notes on the defaults:
     - ``spark.sql.session.timeZone=UTC``: parquet fixtures carry naive
@@ -76,6 +85,11 @@ def get_spark(
     - ``spark.driver.memory`` is ``SPARK_DRIVER_MEMORY`` if set, else
       ``default_driver_memory`` of this host: half its RAM, 1g-16g.
     """
+    running = SparkSession.getActiveSession()
+    if running is not None:
+        # builder.getOrCreate() would apply the builder's runtime SQL
+        # settings to it
+        return running
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)

@@ -3,7 +3,7 @@
 A 100 TB training-data pipeline carries images/audio/video as opaque
 ``binary`` columns with typed metadata, decoding only inside Arrow
 batches. This module implements that plumbing for real — schema
-convention, mapInPandas batch shape, deterministic feature extraction.
+convention, per-item kernels, deterministic feature extraction.
 The IMAGE path is real for PNG (incl. Adam7), baseline JPEG, BMP, and
 lossless WebP/VP8L (`sources/png.py` / `jpeg.py` / `bmp.py` /
 `webp.py`); AUDIO is real for
@@ -27,21 +27,23 @@ Schema convention:
                     width int, height int,
                     sample_rate int, n_frames int>
 
-Feature extraction is Arrow-batched mapInPandas: per item we compute
-size, sha256, and a 16-bin byte-value histogram normalized to unit L1 —
-a stand-in embedding with the same plumbing (fixed-width float array
-column) a real encoder would produce.
+Feature extraction, resize and frame sampling are per-item kernels:
+plain functions of one row, run inside Arrow batches by
+``sources/tables.map_rows``. Feature extraction computes size, sha256,
+and a 16-bin byte-value histogram normalized to unit L1 — a stand-in
+embedding with the same plumbing (fixed-width float array column) a
+real encoder would produce.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .tables import map_rows
 
 MEDIA_SCHEMA = (
     "media_type string, width int, height int, sample_rate int, n_frames int"
@@ -189,38 +191,29 @@ def byte_histogram(raw: np.ndarray, bins: int = FEATURE_DIM) -> np.ndarray:
 
 
 def extract_features(df: DataFrame, decode=FAKE_DECODE) -> DataFrame:
-    """mapInPandas feature extraction over (item_id, payload, media).
+    """Per-item feature extraction over (item_id, payload, media).
 
     Output: item_id, media_type, n_bytes, sha256, feature array
     (FEATURE_DIM floats). Batches stay Arrow-columnar; the decode
     callable is the only per-item Python and is swappable for a real
     codec."""
-    schema = (
-        f"item_id bigint, media_type string, n_bytes bigint, "
-        f"sha256 string, feature array<double>"
+
+    def features(item_id, payload, media):
+        raw = decode(bytes(payload), media["media_type"])
+        return (
+            int(item_id),
+            media["media_type"],
+            len(payload),
+            hashlib.sha256(bytes(payload)).hexdigest(),
+            byte_histogram(raw).tolist(),
+        )
+
+    return map_rows(
+        df.select("item_id", "payload", "media"),
+        features,
+        "item_id bigint, media_type string, n_bytes bigint, sha256 string,"
+        " feature array<double>",
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for item_id, payload, media in zip(
-                pdf["item_id"], pdf["payload"], pdf["media"]
-            ):
-                raw = decode(bytes(payload), media["media_type"])
-                out.append(
-                    (
-                        int(item_id),
-                        media["media_type"],
-                        len(payload),
-                        hashlib.sha256(bytes(payload)).hexdigest(),
-                        byte_histogram(raw).tolist(),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["item_id", "media_type", "n_bytes", "sha256", "feature"]
-            )
-
-    return df.mapInPandas(gen, schema)
 
 
 def resize_image(df: DataFrame, out_w: int = 32, out_h: int = 32) -> DataFrame:
@@ -237,52 +230,33 @@ def resize_image(df: DataFrame, out_w: int = 32, out_h: int = 32) -> DataFrame:
     (row-major width×height view, trimmed/padded to a full grid) so the
     plumbing stays testable without codecs. Schema is preserved.
     """
-    schema = df.schema
+    cols = df.columns
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def resize(*row):
         from .png import is_png, read_png, write_png
         from .webp import is_webp, read_webp, write_webp
 
-        for pdf in batches:
-            payloads, medias = [], []
-            for p, m in zip(pdf["payload"], pdf["media"]):
-                m = dict(m)
-                p = bytes(p)
-                if m["media_type"] != "image":
-                    payloads.append(p)
-                    medias.append(m)
-                    continue
-                if is_png(p):
-                    px = read_png(p)
-                    h, w = px.shape[0], px.shape[1]
-                    ys = (np.arange(out_h) * h // out_h).astype(int)
-                    xs = (np.arange(out_w) * w // out_w).astype(int)
-                    payloads.append(write_png(px[np.ix_(ys, xs)]))
-                elif is_webp(p):
-                    px = read_webp(p)
-                    h, w = px.shape[0], px.shape[1]
-                    ys = (np.arange(out_h) * h // out_h).astype(int)
-                    xs = (np.arange(out_w) * w // out_w).astype(int)
-                    payloads.append(write_webp(px[np.ix_(ys, xs)]))
-                elif m["width"] and m["height"]:
-                    w, h = int(m["width"]), int(m["height"])
-                    raw = np.frombuffer(p, dtype=np.uint8)
-                    grid = np.resize(raw, (h, w))  # pad-by-repeat when short
-                    ys = (np.arange(out_h) * h // out_h).astype(int)
-                    xs = (np.arange(out_w) * w // out_w).astype(int)
-                    payloads.append(grid[np.ix_(ys, xs)].tobytes())
-                else:
-                    payloads.append(p)
-                    medias.append(m)
-                    continue
-                m["width"], m["height"] = out_w, out_h
-                medias.append(m)
-            pdf = pdf.copy()
-            pdf["payload"] = payloads
-            pdf["media"] = medias
-            yield pdf
+        r = dict(zip(cols, row))
+        m, p = dict(r["media"]), bytes(r["payload"])
+        r["media"], r["payload"] = m, p
+        if m["media_type"] != "image":
+            return tuple(r.values())
+        if is_png(p) or is_webp(p):
+            read, write = (read_png, write_png) if is_png(p) else (read_webp, write_webp)
+            px = read(p)
+        elif m["width"] and m["height"]:
+            # pad-by-repeat when short
+            px = np.resize(np.frombuffer(p, dtype=np.uint8), (int(m["height"]), int(m["width"])))
+            write = np.ndarray.tobytes
+        else:
+            return tuple(r.values())
+        ys = (np.arange(out_h) * px.shape[0] // out_h).astype(int)
+        xs = (np.arange(out_w) * px.shape[1] // out_w).astype(int)
+        r["payload"] = write(px[np.ix_(ys, xs)])
+        m["width"], m["height"] = out_w, out_h
+        return tuple(r.values())
 
-    return df.mapInPandas(gen, schema)
+    return map_rows(df, resize, df.schema)
 
 
 def frame_sample(df: DataFrame, every_k: int = 4) -> DataFrame:
@@ -296,38 +270,30 @@ def frame_sample(df: DataFrame, every_k: int = 4) -> DataFrame:
     keep the deterministic byte-stride stand-in so codec-less plumbing
     stays testable. Non-video rows pass through unchanged; schema is
     preserved."""
-    schema = df.schema
+    cols = df.columns
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def sample(*row):
         from .gif import is_gif, read_gif, write_gif
         from .mp4 import extract_samples, is_mp4, read_mp4, write_mp4
 
-        for pdf in batches:
-            mt = pdf["media"].map(lambda m: m["media_type"])
-            out = []
-            for p, t in zip(pdf["payload"], mt):
-                p = bytes(p)
-                if t != "video":
-                    out.append(p)
-                elif is_gif(p):
-                    pal, frames = read_gif(p)
-                    out.append(write_gif(frames[::every_k], pal))
-                elif is_mp4(p):
-                    trk = read_mp4(p)[0]
-                    kept = extract_samples(p, trk)[::every_k]
-                    out.append(
-                        write_mp4(
-                            kept,
-                            timescale=trk.timescale,
-                            durations=trk.sample_durations[::every_k],
-                            handler=trk.handler or "vide",
-                            codec=trk.codec or "raw ",
-                        )
-                    )
-                else:
-                    out.append(p[::every_k])
-            pdf = pdf.copy()
-            pdf["payload"] = out
-            yield pdf
+        r = dict(zip(cols, row))
+        p = bytes(r["payload"])
+        if r["media"]["media_type"] != "video":
+            r["payload"] = p
+        elif is_gif(p):
+            pal, frames = read_gif(p)
+            r["payload"] = write_gif(frames[::every_k], pal)
+        elif is_mp4(p):
+            trk = read_mp4(p)[0]
+            r["payload"] = write_mp4(
+                extract_samples(p, trk)[::every_k],
+                timescale=trk.timescale,
+                durations=trk.sample_durations[::every_k],
+                handler=trk.handler or "vide",
+                codec=trk.codec or "raw ",
+            )
+        else:
+            r["payload"] = p[::every_k]
+        return tuple(r.values())
 
-    return df.mapInPandas(gen, schema)
+    return map_rows(df, sample, df.schema)

@@ -46,6 +46,14 @@ batches once (``PythonSQLUtils.toDataFrame``, a local relation below
 ``spark.sql.execution.arrow.localRelationThreshold``), and no Python
 worker runs when the frame is scanned. The rows and the schema are the
 same as with the list path.
+
+Per-item Python over a distributed frame (the codec round-trips, the
+multimodal feature and resize kernels) goes through ``map_rows``: the
+kernel is a plain function of one row that returns one tuple, and
+``map_rows`` runs it inside one Arrow-batched ``mapInPandas``. The
+output columns are named by the schema alone. Kernels that work on a
+whole batch at once (numpy matmuls, skyline passes, ``pandas_udf``s)
+call ``mapInPandas`` themselves.
 """
 
 from __future__ import annotations
@@ -53,7 +61,7 @@ from __future__ import annotations
 import os
 import stat
 
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -150,3 +158,25 @@ def local_frame(spark: SparkSession, rows: Iterable[tuple], ddl: str) -> DataFra
         schema=arrow,
     )
     return spark.createDataFrame(table, struct)
+
+
+def map_rows(df: DataFrame, fn: Callable[..., tuple], schema: str | StructType) -> DataFrame:
+    """``fn(*row)`` on every row of ``df`` inside one Arrow-batched
+    ``mapInPandas``: one output row per input row, ``fn`` returning a
+    tuple in ``schema`` order. ``schema`` is what ``mapInPandas``
+    takes, a DDL string or a ``StructType``, and alone names the output
+    columns. ``fn`` receives the values pandas iterates a batch with
+    (Python scalars for numbers, ``bytes`` for binary, dicts for
+    structs, numpy arrays for arrays); an exception it raises fails the
+    job with its message."""
+
+    def gen(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [fn(*row) for row in pdf.itertuples(index=False, name=None)]
+            if rows:
+                # integer column labels: Spark assigns them by position
+                yield pd.DataFrame(rows)
+
+    return df.mapInPandas(gen, schema)

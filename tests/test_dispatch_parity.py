@@ -92,12 +92,5 @@ def test_forced_distributed_matches_oracle(spark, sf_dir, force_distributed, mon
         "REGISTRY",
         {n: (tagged(n, fn), sql) for n, (fn, sql) in selfcheck.REGISTRY.items()},
     )
-    # selfcheck.run's get_spark returns this session and resets its
-    # shuffle partitions; the rest of the suite runs with the old value
-    partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        failures = selfcheck.run(sf_dir, only=list(DISPATCHING))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", partitions)
-    assert failures == 0
+    assert selfcheck.run(sf_dir, only=list(DISPATCHING)) == 0
     assert reached == set(DISPATCHING)

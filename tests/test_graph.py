@@ -499,3 +499,51 @@ def test_scc_driver_matches_closure_and_fwbw(spark):
     fwbw = {r["id"]: r["scc_id"] for r in scc_labels_fwbw(df).collect()}
     via_dispatch = {r["id"]: r["scc_id"] for r in scc_labels(df).collect()}
     assert drv == anchor == fwbw == via_dispatch and len(drv) > 0
+
+
+def test_distributed_cc_and_lpa_scan_their_input_once(spark, force_distributed):
+    """The distributed connected components and label propagation build
+    their symmetric edge lists from one scan of the lazily checkpointed
+    input. Each input row is evaluated once, and the first job (the
+    edge distinct's map side) runs one task per input partition; a union
+    of the two directions ran two."""
+    from geo_big_data_analysis_spark.graph.algorithms import label_propagation
+    from geo_big_data_analysis_spark.operators.dbscan import connected_components
+
+    sc = spark.sparkContext
+    n, parts = 40, 3
+
+    def counted_ring():
+        acc = sc.accumulator(0)
+
+        @F.udf("bigint")
+        def tick(x):
+            acc.add(1)
+            return x
+
+        ring = spark.range(0, n, 1, parts).select(
+            tick.asNondeterministic()(F.col("id")).alias("a"),
+            ((F.col("id") + 1) % n).alias("b"),
+        )
+        return acc, ring
+
+    force_distributed()
+    acc, ring = counted_ring()
+    group = "graph_cc_one_scan"
+    sc.setJobGroup(group, group)
+    try:
+        cc = connected_components(ring, "a", "b").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert {r["comp"] for r in cc} == {0} and len(cc) == n
+    assert acc.value == n
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    first = tracker.getJobInfo(min(tracker.getJobIdsForGroup(group)))
+    assert tracker.getStageInfo(min(first.stageIds)).numTasks == parts
+
+    acc, ring = counted_ring()
+    labels = label_propagation(ring, rounds=2, src="a", dst="b").collect()
+    assert len(labels) == n
+    assert acc.value == n

@@ -1,11 +1,13 @@
 """Engine session defaults that change cost, not results: the codegen
 cache holds a repeated query set's compiled classes, the WindowExec
-warning logger is quiet, and the default driver heap fits the host."""
+warning logger is quiet, and the default driver heap fits the host.
+``get_spark`` applies them only to a session it creates."""
 
 from __future__ import annotations
 
 import pytest
 
+from geo_big_data_analysis_spark import session
 from geo_big_data_analysis_spark.plans.registry import REGISTRY
 from geo_big_data_analysis_spark.session import (
     CODEGEN_CACHE_ENTRIES,
@@ -40,6 +42,20 @@ def test_session_defaults(spark):
         "org.apache.spark.sql.execution.window.WindowExec"
     )
     assert logger.getLevel().toString() == "ERROR"
+
+
+def test_get_spark_leaves_running_session_unchanged(spark, monkeypatch):
+    """A second ``get_spark`` returns the running session as it is: a
+    tool started from inside a test or another tool does not reset the
+    caller's shuffle partitions to its own default."""
+    # a default unlike the suite's 8, whatever SPARK_GRAFT_CPUS is
+    monkeypatch.setattr(session, "DEFAULT_SHUFFLE_PARTITIONS", 3)
+    key = "spark.sql.shuffle.partitions"
+    a = session.get_spark("a", shuffle_partitions=8)
+    assert a.conf.get(key) == "8"
+    b = session.get_spark("b")
+    assert b is a is spark
+    assert spark.conf.get(key) == "8"
 
 
 def test_repeated_cycle_compiles_nothing(spark, sf_dir):
