@@ -188,8 +188,9 @@ def utm_xy_m(lat, lon, zone: int, northern: bool = True) -> tuple[Column, Column
     return x, y
 
 
-def utm_xy_sql(lat_expr: str, lon_expr: str, zone: int, northern: bool = True) -> tuple[str, str]:
-    """DuckDB-SQL twin of :func:`utm_xy_m` for oracle replay — same
+def utm_xy_sql(lat_expr: str, lon_expr: str, zone: int) -> tuple[str, str]:
+    """DuckDB-SQL twin of :func:`utm_xy_m` (northern hemisphere) for
+    oracle replay — same
     Karney series, same Python-computed float constants embedded via
     repr (sinh/cosh/asinh/atanh spelled with exp/ln since DuckDB lacks
     the hyperbolic family; cross-libm disagreement ≲ 1e-9 m)."""
@@ -221,8 +222,6 @@ def utm_xy_sql(lat_expr: str, lon_expr: str, zone: int, northern: bool = True) -
     k0a = UTM_K0 * big_a
     x = f"({UTM_FALSE_EASTING!r} + {k0a!r} * ({' + '.join(eta_terms)}))"
     y = f"({k0a!r} * ({' + '.join(xi_terms)}))"
-    if not northern:
-        y = f"({y} + {UTM_FALSE_NORTHING_SOUTH!r})"
     return x, y
 
 

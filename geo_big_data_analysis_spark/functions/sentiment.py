@@ -279,30 +279,12 @@ NEGATIONS = frozenset({"not", "no", "never", "n't", "cannot", "dont", "didnt", "
 
 
 #: bucket count for the crc32-chained lexicon index. GetMapValue on a
-#: literal map is a LINEAR scan per access — at 336+ entries that made
-#: the fold ~3.5× slower (round-3 bench). Bucketing by crc32(word) mod
-#: 256 (zlib.crc32 == Spark's crc32, so the Python-built table and the
-#: JVM probe agree) turns each token lookup into one O(1) array index
-#: plus a filter over a ≤4-entry chain. The whole nested literal
-#: constant-folds once per plan.
+#: map is a LINEAR scan per access — at 336+ entries that made the fold
+#: ~3.5× slower (round-3 bench). Bucketing by crc32(word) mod 256
+#: (zlib.crc32 == Spark's crc32, so the Python-built table and the JVM
+#: probe agree) turns each token lookup into one O(1) array index plus
+#: a filter over a ≤4-entry chain.
 _LEX_BUCKETS = 256
-_LEX_STRUCT_T = "ARRAY<STRUCT<w: STRING, p: DOUBLE, s: DOUBLE, i: DOUBLE>>"
-
-
-def _pattern_lex_buckets() -> Column:
-    import zlib
-
-    chains: list[list[str]] = [[] for _ in range(_LEX_BUCKETS)]
-    for w, (p, s, i) in PATTERN_LEXICON.items():
-        b = zlib.crc32(w.encode()) % _LEX_BUCKETS
-        chains[b].append(
-            f"named_struct('w', '{w}', 'p', {p!r}D, 's', {s!r}D, 'i', {i!r}D)"
-        )
-    arms = [
-        (f"array({', '.join(c)})" if c else f"CAST(array() AS {_LEX_STRUCT_T})")
-        for c in chains
-    ]
-    return F.expr(f"array({', '.join(arms)})")
 
 
 def _lex_lookup(buckets: Column, w: Column) -> Column:
@@ -337,12 +319,11 @@ def lexicon_df(spark):
     return local_frame(spark, [(chains, sorted(NEGATIONS))], _LEX_ROW_SCHEMA)
 
 
-def with_pattern_scores(df, text_col, out: str = "_sc"):
-    """Attach PatternAnalyzer scores as struct column ``out`` via the
+def with_pattern_scores(df, text_col):
+    """Attach PatternAnalyzer scores as struct column ``_sc`` via the
     1-row broadcast lexicon join (the `holt_trend_revenue` allowlisted
-    NLJ shape: one row, map-side, no shuffle). Preferred over
-    ``pattern_scores`` for production plans — same fold, same results,
-    lexicon-independent plan size."""
+    NLJ shape: one row, map-side, no shuffle): the lexicon rides as a
+    value, so the plan size is independent of the lexicon's."""
     from ..operators.spread import spread
 
     col = F.col(text_col) if isinstance(text_col, str) else text_col
@@ -355,7 +336,7 @@ def with_pattern_scores(df, text_col, out: str = "_sc"):
     return (
         spread(df).join(F.broadcast(lexicon_df(df.sparkSession)))
         .withColumn(
-            out, pattern_scores(col, lex=F.col("lex_buckets"), negs=F.col("lex_negs"))
+            "_sc", pattern_scores(col, lex=F.col("lex_buckets"), negs=F.col("lex_negs"))
         )
         .drop("lex_buckets", "lex_negs")
     )
@@ -365,9 +346,7 @@ def _clamp1(v: Column) -> Column:
     return F.greatest(F.lit(-1.0), F.least(F.lit(1.0), v))
 
 
-def pattern_scores(
-    col, lex: Column | None = None, negs: Column | None = None
-) -> Column:
+def pattern_scores(col, lex: Column, negs: Column) -> Column:
     """TextBlob/PatternAnalyzer sentiment as struct(polarity,
     subjectivity) — the stateful assessment chain as a single JVM
     ``aggregate`` fold. A ``transform`` prepass BINDS each token's
@@ -377,14 +356,9 @@ def pattern_scores(
     re-evaluation was a measured 3.5× slowdown); the fold then touches
     only cheap struct fields.
 
-    ``lex``/``negs`` override the baked-in literal tables with data
-    columns (from `with_pattern_scores`'s 1-row broadcast join) so the
-    plan stays O(1) in lexicon size; omitted, the literal path remains
-    for ad-hoc column-only use."""
-    lex = _pattern_lex_buckets() if lex is None else lex
-    neg_arr = (
-        F.array(*[F.lit(w) for w in sorted(NEGATIONS)]) if negs is None else negs
-    )
+    ``lex``/``negs`` are the bucketed lexicon and the negation list as
+    data columns (from `with_pattern_scores`'s 1-row broadcast join), so
+    the plan stays O(1) in lexicon size."""
 
     init = F.struct(
         F.lit(0.0).alias("sum_p"),
@@ -467,7 +441,7 @@ def pattern_scores(
         tokens(clean_text(col)),
         lambda w: F.struct(
             _lex_lookup(lex, w).alias("e"),
-            F.array_contains(neg_arr, w).alias("isneg"),
+            F.array_contains(negs, w).alias("isneg"),
         ),
     )
     return F.aggregate(bound, init, step, finish)
@@ -486,11 +460,11 @@ def negations_sql_list() -> str:
     return "(" + ", ".join("'" + w.replace("'", "''") + "'" for w in sorted(NEGATIONS)) + ")"
 
 
-def group_sentiment_stats(df, keys: list[str], pol_col: str = "polarity"):
-    """A5 — per-group sentiment aggregation (lab4 cell 13
-    aggregate_restaurant_sentiments): mean/std/count + positive_rate
+def group_sentiment_stats(df, keys: list[str]):
+    """A5 — per-group sentiment aggregation of ``polarity`` (lab4 cell
+    13 aggregate_restaurant_sentiments): mean/std/count + positive_rate
     (share with polarity > 0.1) in one hash aggregation."""
-    p = F.col(pol_col)
+    p = F.col("polarity")
     return df.groupBy(*keys).agg(
         F.avg(p).alias("avg_polarity"),
         F.stddev_samp(p).alias("std_polarity"),

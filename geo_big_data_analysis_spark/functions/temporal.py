@@ -21,15 +21,16 @@ def parse_us_12h(col) -> Column:
     return F.to_timestamp(F.col(col) if isinstance(col, str) else col, US_12H_FORMAT)
 
 
-def to_tz(col, tz: str = "America/New_York") -> Column:
-    """Interpret a (session-TZ) timestamp as wall-clock in ``tz``.
+def to_tz(col) -> Column:
+    """Interpret a (session-TZ) timestamp as wall-clock in
+    America/New_York.
 
-    Matches pandas ``tz_localize(tz)`` semantics for the engine's
-    UTC-session default: the stored instant is shifted so that the
-    wall-clock fields match what a ``tz`` observer would see.
+    Matches pandas ``tz_localize("America/New_York")`` semantics for the
+    engine's UTC-session default: the stored instant is shifted so that
+    the wall-clock fields match what a New York observer would see.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.from_utc_timestamp(c, tz)
+    return F.from_utc_timestamp(c, "America/New_York")
 
 
 def dayofweek_monday0(col) -> Column:
@@ -47,22 +48,16 @@ def is_weekend(col) -> Column:
     return (dayofweek_monday0(col) >= 5).cast("int")
 
 
-def time_interval_bucket(ts_col, is_holiday_col=None) -> Column:
+def time_interval_bucket(ts_col) -> Column:
     """Rule-based time-of-day bucket (lab2 nb cell 7 ``get_time_interval``).
 
-    morning_peak 7-9, evening_peak 17-19 (weekdays, non-holiday),
-    day 6-22 otherwise, night else.
+    morning_peak 7-9, evening_peak 17-19 (weekdays), day 6-22
+    otherwise, night else. Unlike the reference, holidays are not
+    special-cased: no query carries a holiday flag.
     """
     c = F.col(ts_col) if isinstance(ts_col, str) else ts_col
     h = F.hour(c)
     weekday = dayofweek_monday0(c) < 5
-    if is_holiday_col is not None:
-        hol = (
-            F.col(is_holiday_col)
-            if isinstance(is_holiday_col, str)
-            else is_holiday_col
-        )
-        weekday = weekday & ~hol
     return (
         F.when(weekday & h.between(7, 9), F.lit("morning_peak"))
         .when(weekday & h.between(17, 19), F.lit("evening_peak"))

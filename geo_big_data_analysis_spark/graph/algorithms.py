@@ -40,11 +40,11 @@ from ..sources.tables import local_frame
 DRIVER_EDGE_CAP = 200_000
 
 
-def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """G7 — undirected degree per node (counts parallel edges, matching
-    networkx MultiGraph.degree)."""
-    ends = edges.select(F.col(src).alias("id")).unionByName(
-        edges.select(F.col(dst).alias("id"))
+def degrees(edges: DataFrame) -> DataFrame:
+    """G7 — undirected degree per node of a (src, dst) edge list (counts
+    parallel edges, matching networkx MultiGraph.degree)."""
+    ends = edges.select(F.col("src").alias("id")).unionByName(
+        edges.select(F.col("dst").alias("id"))
     )
     return ends.groupBy("id").agg(F.count(F.lit(1)).alias("degree"))
 
@@ -58,7 +58,6 @@ def sssp_distributed(
     directed: bool = True,
     cutoff: float | None = None,
     max_iter: int = 100,
-    check_every: int = 4,
 ) -> DataFrame:
     """G4 scale path — frontier-based distributed relaxation.
 
@@ -67,9 +66,9 @@ def sssp_distributed(
     per-round work decays as the search converges. Each round's frontier
     and distance table are materialized (localCheckpoint) — both are
     consumed twice by the next round, and leaving them lazy recomputes
-    the whole prefix exponentially. The emptiness check runs every
-    ``check_every`` rounds (it is a separate job; extra no-op rounds
-    after convergence are harmless).
+    the whole prefix exponentially. The emptiness check runs every 4th
+    round (it is a separate job; extra no-op rounds after convergence
+    are harmless).
     """
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst"),
@@ -102,7 +101,7 @@ def sssp_distributed(
             .localCheckpoint()
         )
         frontier = improved
-        if (it + 1) % check_every == 0 and frontier.isEmpty():
+        if (it + 1) % 4 == 0 and frontier.isEmpty():
             break
     return dist
 
@@ -174,10 +173,10 @@ def sssp(
 
 
 def shortest_path_length(
-    edges: DataFrame, source: int, target: int, weight: str = "weight", **kw
+    edges: DataFrame, source: int, target: int, **kw
 ) -> float | None:
     """G4 — distance between two nodes (None if unreachable)."""
-    row = sssp(edges, source, weight, **kw).filter(F.col("id") == target).first()
+    row = sssp(edges, source, **kw).filter(F.col("id") == target).first()
     return row["dist"] if row else None
 
 
@@ -237,9 +236,6 @@ def shortest_path_route(
     edges: DataFrame,
     source: int,
     target: int,
-    weight: str = "weight",
-    src: str = "src",
-    dst: str = "dst",
     directed: bool = True,
     **kw,
 ) -> DataFrame:
@@ -264,12 +260,12 @@ def shortest_path_route(
     networks, SURVEY §2.10) skip the join machinery: one collect, same
     Dijkstra, same predecessor rule — identical output, ~4 fewer jobs.
     """
-    tbl = dispatch.driver_rows(_weighted_edges(edges, weight, src, dst), DRIVER_EDGE_CAP)
+    tbl = dispatch.driver_rows(_weighted_edges(edges, "weight", "src", "dst"), DRIVER_EDGE_CAP)
     if tbl is not None:
         return _route_driver(
             edges.sparkSession, dispatch.tuples(tbl), source, target, directed
         )
-    dist = sssp(edges, source, weight, src, dst, directed=directed, **kw)
+    dist = sssp(edges, source, directed=directed, **kw)
     dist = dist.localCheckpoint()
     trow = dist.filter(F.col("id") == target).first()
     if trow is None:
@@ -278,7 +274,7 @@ def shortest_path_route(
         )
     tdist = trow["dist"]
 
-    e = _weighted_edges(edges, weight, src, dst)
+    e = _weighted_edges(edges, "weight", "src", "dst")
     if not directed:
         e = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
     du = dist.select(F.col("id").alias("u"), F.col("dist").alias("du"))
@@ -419,10 +415,9 @@ def points_in_hull(points: DataFrame, hull: list[tuple[float, float]], x: str = 
     return points.filter(pred)
 
 
-def triangle_counts(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Per-node triangle participation counts (undirected).
+def triangle_counts(edges: DataFrame) -> DataFrame:
+    """Per-node triangle participation counts of a (src, dst) edge list
+    (undirected).
 
     Beyond the reference's degree/density analytics (lab3a nb cell 20) —
     the standard clustering building block. Canonicalize each edge to
@@ -438,8 +433,8 @@ def triangle_counts(
     """
     e = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
+            F.least(F.col("src"), F.col("dst")).alias("u"),
+            F.greatest(F.col("src"), F.col("dst")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -489,11 +484,10 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 6,
     damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
     checkpoint_every: int = 4,
 ) -> DataFrame:
-    """Fixed-iteration PageRank as an iterative DataFrame program.
+    """Fixed-iteration PageRank of a (src, dst) edge list as an
+    iterative DataFrame program.
 
     Power iteration: rank(v) = (1-d)/N + d·Σ_{u→v} rank(u)/outdeg(u).
     Requires every node to have ≥1 out-edge (no dangling-mass term —
@@ -511,7 +505,7 @@ def pagerank(
     lazy DAG (measured: per-round eager checkpoints tripled wall time
     on small graphs — driver round-trips dominate).
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    e = edges.select(F.col("src").alias("src"), F.col("dst").alias("dst")).distinct()
     # size dispatch (the sssp/lpa rule): a bounded edge list runs
     # driver-side — `iterations` joins over a few hundred rows is
     # per-round job-scheduling overhead, not compute. The distinct is
@@ -583,16 +577,15 @@ def kcore(
     edges: DataFrame,
     k: int,
     rounds: int,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
-    """k-core decomposition by iterative peeling: repeatedly drop nodes
-    with (distinct-neighbor, undirected) degree < k and their incident
-    edges, a fixed ``rounds`` times. With rounds ≥ the peel depth the
-    result is the exact k-core (monotone: once stable, further rounds
-    are no-ops — choosing a fixed round count is what lets the oracle
-    unroll the loop as chained CTEs, the same contract as PageRank's
-    fixed power iterations).
+    """k-core decomposition of a (src, dst) edge list by iterative
+    peeling: repeatedly drop nodes with (distinct-neighbor, undirected)
+    degree < k and their incident edges, a fixed ``rounds`` times.
+    With rounds ≥ the peel depth the result is the exact k-core
+    (monotone: once stable, further rounds are no-ops — choosing a
+    fixed round count is what lets the oracle unroll the loop as
+    chained CTEs, the same contract as PageRank's fixed power
+    iterations).
 
     Returns (id, core_degree) for nodes surviving in the k-core.
 
@@ -608,8 +601,8 @@ def kcore(
     bounded by the degeneracy ordering length, typically ≪ |V|)."""
     und = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
+            F.least(F.col("src"), F.col("dst")).alias("u"),
+            F.greatest(F.col("src"), F.col("dst")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -666,7 +659,6 @@ def label_propagation(
     rounds: int = 5,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Deterministic synchronous label-propagation community detection
     (Raghavan 2007, with the random tie-break replaced by a total
@@ -724,7 +716,7 @@ def label_propagation(
         labels = labels.join(best, "id", "left").select(
             "id", F.coalesce("new_label", "label").alias("label")
         )
-        if (_ + 1) % checkpoint_every == 0 or _ == rounds - 1:
+        if (_ + 1) % 2 == 0 or _ == rounds - 1:
             labels = labels.localCheckpoint()
     return labels
 
@@ -742,8 +734,9 @@ def _guard_pairs(n: int, exact: bool, what: str) -> None:
             f"{what}: pair table reached {n} rows (> {_CLOSURE_PAIR_GUARD}). "
             "Closure output is Θ(reachable pairs) — intended for "
             "condensation graphs / bounded subgraphs. Pass exact=True to "
-            "materialize anyway, or use scc_labels (forward-backward "
-            "pivoting, Θ(V) output) / landmark sketches for large graphs."
+            "reachability_closure to materialize anyway, or use scc_labels "
+            "(forward-backward pivoting, Θ(V) output) / landmark sketches "
+            "for large graphs."
         )
 
 
@@ -779,18 +772,12 @@ def _closure_driver(
     )
 
 
-def reachability_closure(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 20,
-    exact: bool = False,
-) -> DataFrame:
+def reachability_closure(edges: DataFrame, exact: bool = False) -> DataFrame:
     """Transitive closure (u, v): v reachable from u over directed
-    edges, self-pairs included — by path doubling (R ← R ∪ R∘R), the
-    PRAM-style O(log diameter) join schedule: round k covers all paths
-    of length ≤ 2^k, so 6 rounds close a diameter-64 graph where naive
-    edge-at-a-time relaxation needs 64. Runs to fixpoint (pair count
+    (src, dst) edges, self-pairs included — by path doubling
+    (R ← R ∪ R∘R), the PRAM-style O(log diameter) join schedule: round
+    k covers all paths of length ≤ 2^k, so 6 rounds close a diameter-64
+    graph where naive edge-at-a-time relaxation needs 64. Runs to fixpoint (pair count
     stable), so the result is the exact closure regardless of diameter.
 
     Scale: the OUTPUT is the closure — Θ(reachable pairs) — so this is
@@ -802,13 +789,13 @@ def reachability_closure(
     round is two hash equi-joins on node keys. Size dispatch folds
     small pair tables to one partition (connected_components' rule)."""
     pairs = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .unionByName(
-            edges.select(F.col(src).alias("u"), F.col(src).alias("v"))
+            edges.select(F.col("src").alias("u"), F.col("src").alias("v"))
         )
         .unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(dst).alias("v"))
+            edges.select(F.col("dst").alias("u"), F.col("dst").alias("v"))
         )
         .distinct()
         .localCheckpoint()
@@ -824,7 +811,7 @@ def reachability_closure(
         )
     if n_prev <= 200_000:
         pairs = pairs.coalesce(1).localCheckpoint()
-    for _ in range(max_rounds):
+    for _ in range(20):
         hop2 = (
             pairs.alias("a")
             .join(pairs.alias("b"), F.col("a.v") == F.col("b.u"))
@@ -839,17 +826,15 @@ def reachability_closure(
     return pairs
 
 
-def scc_labels_closure(
-    edges: DataFrame, src: str = "src", dst: str = "dst", exact: bool = False
-) -> DataFrame:
-    """SCC via mutual reachability on the materialized closure: u, v
-    share an SCC iff u→v and v→u; label = minimum member id. Exact and
-    deterministic — this is the ORACLE ANCHOR for `scc_labels` (the
-    DuckDB twin is a recursive-CTE closure, and the FW-BW default is
-    parity-tested against this). Inherits the closure's Θ(reachable
-    pairs) bound and its 200k-pair guard (``exact=True`` to override).
-    Returns (id, scc_id)."""
-    reach = reachability_closure(edges, src, dst, exact=exact)
+def scc_labels_closure(edges: DataFrame) -> DataFrame:
+    """SCC of a (src, dst) edge list via mutual reachability on the
+    materialized closure: u, v share an SCC iff u→v and v→u; label =
+    minimum member id. Exact and deterministic — this is the ORACLE
+    ANCHOR for `scc_labels` (the DuckDB twin is a recursive-CTE
+    closure, and the FW-BW default is parity-tested against this).
+    Inherits the closure's Θ(reachable pairs) bound and its 200k-pair
+    guard. Returns (id, scc_id)."""
+    reach = reachability_closure(edges)
     mutual = (
         reach.alias("f")
         .join(
@@ -895,15 +880,10 @@ def _scc_driver(spark, rows: list[tuple[int, int]]) -> DataFrame:
 SCC_DRIVER_VERTEX_CAP = 2_000
 
 
-def scc_labels(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_outer: int = 100,
-) -> DataFrame:
-    """Strongly connected components, size-dispatched (the knn_join /
-    connected_components convention): graphs small enough that the
-    worst-case closure is an in-memory boolean matrix (≤2k vertices →
+def scc_labels(edges: DataFrame) -> DataFrame:
+    """Strongly connected components of a (src, dst) edge list,
+    size-dispatched (the knn_join / connected_components convention):
+    graphs small enough that the worst-case closure is an in-memory boolean matrix (≤2k vertices →
     ≤4M cells) run the numpy closure+mutual kernel driver-side
     (`_scc_driver`) — no per-BFS-step jobs, no Θ(pairs) shuffle join;
     everything larger runs forward-backward pivoting
@@ -912,7 +892,7 @@ def scc_labels(
     and label each SCC by its minimum member (parity pytest). Returns
     (id, scc_id)."""
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint(eager=False)
@@ -926,14 +906,18 @@ def scc_labels(
         return _scc_driver(
             edges.sparkSession, [(r["u"], r["v"]) for r in e.collect()]
         )
-    return scc_labels_fwbw(e, "u", "v", max_outer=max_outer)
+    return scc_labels_fwbw(e, "u", "v")
+
+
+#: Outer (trim, color, backward) rounds of `scc_labels_fwbw` before it
+#: raises rather than return partial labels.
+SCC_FWBW_MAX_OUTER = 100
 
 
 def scc_labels_fwbw(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_outer: int = 100,
 ) -> DataFrame:
     """Strongly connected components — multi-pivot FORWARD-BACKWARD
     pivoting (Fleischer-Hendrickson-Pinar 2000, the coloring/multi-root
@@ -991,7 +975,7 @@ def scc_labels_fwbw(
         )
         return (out.coalesce(1) if small else out).localCheckpoint()
 
-    for _ in range(max_outer):
+    for _ in range(SCC_FWBW_MAX_OUTER):
         if n_v == 0:
             break
         # ---- 1. trim singleton SCCs (no in- or no out-edge) ----------
@@ -1083,11 +1067,11 @@ def scc_labels_fwbw(
     if n_v > 0:
         # Same explicit-failure contract as reachability_closure's row
         # guard: never return partial labels as if complete (a chain of
-        # >max_outer cycles under one color class would otherwise be
-        # silently dropped from the output).
+        # >SCC_FWBW_MAX_OUTER cycles under one color class would
+        # otherwise be silently dropped from the output).
         raise ValueError(
             f"scc_labels_fwbw: {n_v} vertices unlabeled after "
-            f"max_outer={max_outer} rounds; raise max_outer"
+            f"{SCC_FWBW_MAX_OUTER} outer rounds"
         )
 
     out = done[0]
@@ -1096,14 +1080,9 @@ def scc_labels_fwbw(
     return out
 
 
-def hop_distances(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 20,
-    exact: bool = False,
-) -> DataFrame:
-    """All-pairs hop distances (u, v, d) for reachable pairs, by
+def hop_distances(edges: DataFrame) -> DataFrame:
+    """All-pairs hop distances (u, v, d) of a (src, dst) edge list for
+    reachable pairs, by
     min-plus path doubling: D ← min(D, min_m D(u,m)+D(m,v)) — round k
     is exact for all shortest paths of length ≤ 2^k, so ⌈log₂ diam⌉
     rounds converge (fixpoint-detected, like reachability_closure).
@@ -1114,27 +1093,26 @@ def hop_distances(
     (this engine's graph fixtures) that is the right trade against
     diameter-many edge-relaxation rounds; web-scale all-pairs wants
     landmark/sketch methods instead. The 200k-pair row guard raises
-    ValueError unless ``exact=True`` (same contract as
-    reachability_closure — VERDICT r2 #4)."""
+    ValueError (reachability_closure's guard — VERDICT r2 #4)."""
     dist = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .withColumn("d", F.lit(1))
         .unionByName(
-            edges.select(F.col(src).alias("u"))
-            .unionByName(edges.select(F.col(dst).alias("u")))
+            edges.select(F.col("src").alias("u"))
+            .unionByName(edges.select(F.col("dst").alias("u")))
             .distinct()
             .select("u", F.col("u").alias("v"), F.lit(0).alias("d"))
         )
         .localCheckpoint()
     )
     n0 = dist.count()
-    _guard_pairs(n0, exact, "hop_distances")
+    _guard_pairs(n0, False, "hop_distances")
     if n0 <= 200_000:
         dist = dist.coalesce(1).localCheckpoint()
     prev_key: tuple | None = None
-    for _ in range(max_rounds):
+    for _ in range(20):
         two = (
             dist.alias("a")
             .join(dist.alias("b"), F.col("a.v") == F.col("b.u"))
@@ -1155,7 +1133,7 @@ def hop_distances(
         stat = dist.agg(
             F.count(F.lit(1)).alias("n"), F.sum("d").alias("s")
         ).collect()[0]
-        _guard_pairs(int(stat["n"]), exact, "hop_distances")
+        _guard_pairs(int(stat["n"]), False, "hop_distances")
         key = (stat["n"], stat["s"])
         if key == prev_key:
             break

@@ -41,14 +41,13 @@ def fit_standard_scaler(df: DataFrame, cols: list[str]) -> dict[str, tuple[float
     return {c: (row[f"__mu_{c}"], row[f"__sd_{c}"] or 0.0) for c in cols}
 
 
-def apply_standard_scaler(
-    df: DataFrame, stats: dict[str, tuple[float, float]], suffix: str = "_z"
-) -> DataFrame:
-    """(x-μ)/σ as literal column exprs (σ=0 → 0, avoiding inf)."""
+def apply_standard_scaler(df: DataFrame, stats: dict[str, tuple[float, float]]) -> DataFrame:
+    """(x-μ)/σ into ``<col>_z`` as literal column exprs (σ=0 → 0,
+    avoiding inf)."""
     out = df
     for c, (mu, sd) in stats.items():
         scaled = (F.col(c) - F.lit(mu)) / F.lit(sd) if sd else F.lit(0.0)
-        out = out.withColumn(f"{c}{suffix}", scaled)
+        out = out.withColumn(f"{c}_z", scaled)
     return out
 
 
@@ -74,6 +73,7 @@ def positional_split(df: DataFrame, order_col: str, frac: float = 0.7) -> DataFr
     ).drop("__pos_rn")
 
 
-def log1p_target(df: DataFrame, col: str, out: str | None = None) -> DataFrame:
-    """log(1+x) target transform (lab2 cell 7; lx_lightgbmTest.py:64)."""
-    return df.withColumn(out or f"log_{col}", F.log1p(F.col(col)))
+def log1p_target(df: DataFrame, col: str) -> DataFrame:
+    """log(1+x) target transform into ``log_<col>`` (lab2 cell 7;
+    lx_lightgbmTest.py:64)."""
+    return df.withColumn(f"log_{col}", F.log1p(F.col(col)))

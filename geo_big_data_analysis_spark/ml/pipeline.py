@@ -27,18 +27,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def assemble(df: DataFrame, cols: list[str], out: str = "features") -> DataFrame:
-    return VectorAssembler(inputCols=cols, outputCol=out).transform(df)
+def assemble(df: DataFrame, cols: list[str]) -> DataFrame:
+    return VectorAssembler(inputCols=cols, outputCol="features").transform(df)
 
 
-def pca_fit_transform(df: DataFrame, cols: list[str], k: int = 2, out_col: str = "pca"):
+def pca_fit_transform(df: DataFrame, cols: list[str], k: int = 2):
     """PCA via ml.feature.PCA (M4). Returns (transformed_df, components).
 
     components: k rows × len(cols) principal axes (sign is unspecified —
     compare |projection| or fix sign by convention downstream).
     """
     vec = assemble(df, cols)
-    model = PCA(k=k, inputCol="features", outputCol=out_col).fit(vec)
+    model = PCA(k=k, inputCol="features", outputCol="pca").fit(vec)
     pc = model.pc.toArray()  # (n_features, k)
     out = model.transform(vec).drop("features")
     return out, [[float(pc[i][j]) for i in range(pc.shape[0])] for j in range(pc.shape[1])]
@@ -78,7 +78,6 @@ def gbt_fit(
     label_col: str,
     max_iter: int = 20,
     max_depth: int = 5,
-    seed: int = 42,
 ):
     """GBT regression fit (M7 — GBTRegressor stands in for LightGBM)."""
     vec = assemble(train, feature_cols)
@@ -87,14 +86,14 @@ def gbt_fit(
         labelCol=label_col,
         maxIter=max_iter,
         maxDepth=max_depth,
-        seed=seed,
+        seed=42,
     ).fit(vec)
     return model
 
 
-def gbt_predict(model, df: DataFrame, feature_cols: list[str], out: str = "prediction") -> DataFrame:
+def gbt_predict(model, df: DataFrame, feature_cols: list[str]) -> DataFrame:
     vec = assemble(df, feature_cols)
-    return model.setPredictionCol(out).transform(vec).drop("features")
+    return model.setPredictionCol("prediction").transform(vec).drop("features")
 
 
 def regression_metrics(
@@ -141,8 +140,6 @@ def logreg_fit(
     train: DataFrame,
     feature_cols: list[str],
     label_col: str,
-    max_iter: int = 50,
-    reg_param: float = 0.0,
 ):
     """Binary logistic regression fit (classification counterpart of
     gbt_fit; LBFGS is deterministic given fixed partitioning of the
@@ -153,30 +150,30 @@ def logreg_fit(
     return LogisticRegression(
         featuresCol="features",
         labelCol=label_col,
-        maxIter=max_iter,
-        regParam=reg_param,
+        maxIter=50,
+        regParam=0.0,
     ).fit(vec)
 
 
 def logreg_predict(
-    model, df: DataFrame, feature_cols: list[str], out: str = "p1"
+    model, df: DataFrame, feature_cols: list[str]
 ) -> DataFrame:
     """Score with P(label=1) extracted from the probability vector as a
-    plain double column (vector_to_array keeps it JVM-side)."""
+    plain double column ``p1`` (vector_to_array keeps it JVM-side)."""
     from pyspark.ml.functions import vector_to_array
 
     vec = assemble(df, feature_cols)
     scored = model.transform(vec)
     return scored.withColumn(
-        out, vector_to_array("probability")[1]
+        "p1", vector_to_array("probability")[1]
     ).drop("features", "rawPrediction", "probability")
 
 
 def binary_metrics(
-    df: DataFrame, label_col: str, prob_col: str, threshold: float = 0.5
+    df: DataFrame, label_col: str, prob_col: str
 ) -> DataFrame:
     """Single-row binary-classification metrics, all distributed:
-    accuracy / precision / recall / F1 at ``threshold`` in one
+    accuracy / precision / recall / F1 at threshold 0.5 in one
     conditional-agg pass, plus ROC-AUC via the tied-rank Mann-Whitney
     identity over score GROUPS (probabilities rounded to 6 dp bound the
     group count; the only window runs over those groups, never rows —
@@ -184,7 +181,7 @@ def binary_metrics(
     from pyspark.sql import Window
 
     y = F.col(label_col).cast("bigint")
-    pred = (F.col(prob_col) >= F.lit(threshold)).cast("bigint")
+    pred = (F.col(prob_col) >= F.lit(0.5)).cast("bigint")
     counts = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(y).alias("np"),
@@ -249,9 +246,10 @@ def kth_nn_distance_stats(kdist: DataFrame, dist_col: str = "dist") -> DataFrame
 
 
 def assign_nearest_center(
-    df: DataFrame, x_col: str, y_col: str, centers: list[tuple[float, float]], out: str = "region_id"
+    df: DataFrame, x_col: str, y_col: str, centers: list[tuple[float, float]]
 ) -> DataFrame:
-    """Voronoi-region assignment (lab2 nb cell 20): nearest of a small
+    """Voronoi-region assignment into ``region_id`` (lab2 nb cell 20):
+    nearest of a small
     driver-side center list — the 'Voronoi polygons + sjoin within' of
     the reference collapses to argmin(distance to centers), broadcast as
     a literal distance array (no join, no shuffle). Array form keeps the
@@ -266,7 +264,7 @@ def assign_nearest_center(
     )
     return (
         df.withColumn("__dl", dists)
-        .withColumn(out, (F.array_position("__dl", F.array_min("__dl")) - 1).cast("int"))
+        .withColumn("region_id", (F.array_position("__dl", F.array_min("__dl")) - 1).cast("int"))
         .drop("__dl")
     )
 

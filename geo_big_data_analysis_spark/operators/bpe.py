@@ -42,11 +42,12 @@ transform(
 """
 
 
-def word_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(word, cnt) vocabulary: whitespace split + count. The only
-    corpus-sized job; everything after runs on distinct words."""
+def word_vocab(docs: DataFrame) -> DataFrame:
+    """(word, cnt) vocabulary of the ``text`` column: whitespace split +
+    count. The only corpus-sized job; everything after runs on distinct
+    words."""
     return (
-        docs.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+        docs.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))

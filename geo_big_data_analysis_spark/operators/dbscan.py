@@ -100,7 +100,7 @@ def _cc_driver(spark, rows: list) -> DataFrame:
     return local_frame(spark, out, "id bigint, comp bigint")
 
 
-def _connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
+def _connected_components(edges: DataFrame) -> DataFrame:
     """Min-label propagation + pointer jumping over undirected edges
     (a_id, b_id) → (id, comp) with comp = min reachable id.
 
@@ -109,7 +109,8 @@ def _connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     which doubles propagation distance per round, giving O(log diameter)
     rounds even for chain-shaped clusters (road-network-like data).
     Convergence detection is shuffle-free: Σcomp is strictly decreasing
-    until fixpoint, so an unchanged sum terminates the loop.
+    until fixpoint, so an unchanged sum terminates the loop (at most 50
+    rounds).
     """
     # both directions from one scan of the lazily checkpointed input; a
     # union of two projections has two tasks contend for each block
@@ -122,7 +123,7 @@ def _connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         .withColumn("comp", F.col("id"))
     ).localCheckpoint()
     prev_sum = None
-    for _ in range(max_iter):
+    for _ in range(50):
         cand = (
             sym.join(labels.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
@@ -152,13 +153,11 @@ def dbscan(
     points: DataFrame,
     eps: float,
     min_samples: int,
-    id_col: str = "id",
-    x_col: str = "x",
-    y_col: str = "y",
 ) -> DataFrame:
-    """Returns (id, cluster) with cluster = −1 for noise, else the min
-    point id of the cluster's core-point component (stable labeling,
-    equal to sklearn's partition up to relabeling).
+    """Clusters (id, x, y) points; returns (id, cluster) with cluster =
+    −1 for noise, else the min point id of the cluster's core-point
+    component (stable labeling, equal to sklearn's partition up to
+    relabeling).
 
     Coordinate-contraction prepass: exact-duplicate positions collapse
     to one representative (rep id = min point id there) weighted by
@@ -169,8 +168,8 @@ def dbscan(
     scale) from a quadratic pair blowup into per-location work.
     """
     pts = points.select(
-        F.col(id_col).alias("id"), F.col(x_col).cast("double").alias("x"),
-        F.col(y_col).cast("double").alias("y"),
+        F.col("id").alias("id"), F.col("x").cast("double").alias("x"),
+        F.col("y").cast("double").alias("y"),
     )
     locs = (
         pts.groupBy("x", "y")

@@ -237,7 +237,6 @@ def minhash_near_dup_pairs(
     jaccard_threshold: float = 0.8,
     num_hashes: int = 64,
     bands: int = 16,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup: signatures → banded candidates →
     exact Jaccard verification → pairs above threshold.
@@ -252,7 +251,7 @@ def minhash_near_dup_pairs(
     the join stays candidate-sized.
     """
     # one tokenize+shingle pass for the whole pipeline
-    rows = shingle_hash_rows(df, text_col, id_col, shingle_n).localCheckpoint()
+    rows = shingle_hash_rows(df, text_col, id_col, 3).localCheckpoint()
     # materialize signatures: the banding explode would otherwise inline
     # (and re-evaluate) the per-doc signature expression once per band
     sigs = (
@@ -300,7 +299,6 @@ def ngram_jaccard_capped_df(
     text_col: str,
     id_col: str,
     threshold: float = 0.5,
-    shingle_n: int = 3,
     max_df: int = 64,
 ) -> DataFrame:
     """DF-capped inverted-index Jaccard — the documented scale knob of
@@ -317,7 +315,7 @@ def ngram_jaccard_capped_df(
     With ``max_df >= n_docs`` this is equivalent to the exact operator
     (pinned in pytest).
     """
-    sh = shingle_hash_rows(df, text_col, id_col, shingle_n).distinct()
+    sh = shingle_hash_rows(df, text_col, id_col, 3).distinct()
     sh = sh.localCheckpoint()
     from pyspark.sql import Window
 
@@ -346,7 +344,6 @@ def ngram_jaccard_all_pairs(
     text_col: str,
     id_col: str,
     threshold: float = 0.5,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Exact all-pairs n-gram Jaccard via an inverted shingle index.
 
@@ -375,7 +372,7 @@ def ngram_jaccard_all_pairs(
     """
     from pyspark.sql import Window
 
-    sh = shingle_hash_rows(df, text_col, id_col, shingle_n).distinct()
+    sh = shingle_hash_rows(df, text_col, id_col, 3).distinct()
     sh = sh.withColumn("n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
     sh = sh.localCheckpoint()
     inter = (

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import dispatch
+
 
 def _sq_dist(x1, y1, x2, y2):
     return (F.col(x1) - F.col(x2)) ** 2 + (F.col(y1) - F.col(y2)) ** 2
@@ -31,18 +33,16 @@ def knn_join_bruteforce(
     b_id: str = "id",
     q_xy: tuple[str, str] = ("x", "y"),
     b_xy: tuple[str, str] = ("x", "y"),
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Exact KNN: broadcast the smaller base side, rank by distance.
 
-    Output: (query_id, neighbor_id, dist, knn_rank). Ties broken by
-    neighbor id for determinism.
+    Output: (query_id, neighbor_id, dist, knn_rank), self pairs
+    excluded. Ties broken by neighbor id for determinism.
     """
     q = queries.select(F.col(q_id).alias("query_id"), F.col(q_xy[0]).alias("_qx"), F.col(q_xy[1]).alias("_qy"))
     b = base.select(F.col(b_id).alias("neighbor_id"), F.col(b_xy[0]).alias("_bx"), F.col(b_xy[1]).alias("_by"))
     pairs = q.crossJoin(F.broadcast(b))
-    if exclude_self:
-        pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+    pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
     pairs = pairs.withColumn(
         "dist", F.sqrt(_sq_dist("_qx", "_qy", "_bx", "_by"))
     )
@@ -63,11 +63,11 @@ def knn_join_grid(
     b_id: str = "id",
     q_xy: tuple[str, str] = ("x", "y"),
     b_xy: tuple[str, str] = ("x", "y"),
-    exclude_self: bool = True,
 ) -> DataFrame:
-    """Grid-bucketed KNN: each query point probes its 3×3 neighborhood of
-    cells of side ``cell``. Exact iff the true k-th neighbor lies within
-    one cell ring (guaranteed when cell ≥ expected kth-NN distance).
+    """Grid-bucketed KNN (self pairs excluded): each query point probes
+    its 3×3 neighborhood of cells of side ``cell``. Exact iff the true
+    k-th neighbor lies within one cell ring (guaranteed when cell ≥
+    expected kth-NN distance).
 
     Plan shape: explode queries ×9 (cheap, integer math) → hash
     equi-join on cell id → per-query top-k window. The shuffle key is
@@ -95,8 +95,7 @@ def knn_join_grid(
         F.floor(F.col(b_xy[1]) / cell).cast("bigint").alias("cy"),
     )
     pairs = q9.join(b, ["cx", "cy"], "inner")
-    if exclude_self:
-        pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+    pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
     pairs = pairs.withColumn("dist", F.sqrt(_sq_dist("_qx", "_qy", "_bx", "_by")))
     w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("neighbor_id").asc())
     return (
@@ -106,10 +105,11 @@ def knn_join_grid(
     )
 
 
-#: Above this base-side row count, ``knn_join`` switches from the
-#: broadcast brute-force plan to the grid-bucketed plan. 100k doubles
-#: ×4 cols ≈ 3 MB broadcast — comfortably under executor memory; past
-#: that the cross product's pair count (n·m) dominates anyway.
+#: Above this base-side row count (`operators/dispatch.fits`),
+#: ``knn_join`` switches from the broadcast brute-force plan to the
+#: grid-bucketed plan. 100k doubles ×4 cols ≈ 3 MB broadcast —
+#: comfortably under executor memory; past that the cross product's
+#: pair count (n·m) dominates anyway.
 BRUTEFORCE_MAX_ROWS = 100_000
 
 
@@ -121,25 +121,25 @@ def knn_join(
     b_id: str = "id",
     q_xy: tuple[str, str] = ("x", "y"),
     b_xy: tuple[str, str] = ("x", "y"),
-    exclude_self: bool = True,
-    cell: float | None = None,
-    bruteforce_max_rows: int = BRUTEFORCE_MAX_ROWS,
 ) -> DataFrame:
-    """Size-dispatched EXACT KNN join — the default entry point.
+    """Size-dispatched EXACT KNN join (self pairs excluded) — the
+    default entry point.
 
-    Small base (≤ ``bruteforce_max_rows``): broadcast brute-force (one
-    scan, no shuffle of the big side). Large base: grid-bucketed
-    candidate join at an auto-estimated cell size, then an exactness
-    completion pass — queries whose k-th candidate distance ≥ cell (or
-    with < k candidates) are NOT guaranteed exact by the 3×3 ring, so
-    they re-probe via a broadcast of the (small) deficient query set
-    over one extra base scan. Result is exact for every query at any
-    scale; the completion set is empty for near-uniform data when the
-    cell estimate holds.
+    Small base (≤ ``BRUTEFORCE_MAX_ROWS``, one bounded probe): broadcast
+    brute-force (one scan, no shuffle of the big side). Large base:
+    grid-bucketed candidate join at an auto-estimated cell size, then
+    an exactness completion pass — queries whose k-th candidate
+    distance ≥ cell (or with < k candidates) are NOT guaranteed exact
+    by the 3×3 ring, so they re-probe via a broadcast of the (small)
+    deficient query set over one extra base scan. Result is exact for
+    every query at any scale; the completion set is empty for
+    near-uniform data when the cell estimate holds.
 
-    One 1-row aggregate on the base side (count + bbox) drives the
-    dispatch and the cell estimate — the two-phase scalar pattern.
+    On the grid path one 1-row aggregate on the base side (count +
+    bbox) gives the cell estimate — the two-phase scalar pattern.
     """
+    if dispatch.fits(base, BRUTEFORCE_MAX_ROWS):
+        return knn_join_bruteforce(queries, base, k, q_id, b_id, q_xy, b_xy)
     stats = base.agg(
         F.count(F.lit(1)).alias("n"),
         F.min(F.col(b_xy[0]).cast("double")).alias("xmin"),
@@ -147,20 +147,17 @@ def knn_join(
         F.min(F.col(b_xy[1]).cast("double")).alias("ymin"),
         F.max(F.col(b_xy[1]).cast("double")).alias("ymax"),
     ).collect()[0]
-    n = int(stats["n"] or 0)
-    if n <= bruteforce_max_rows:
-        return knn_join_bruteforce(queries, base, k, q_id, b_id, q_xy, b_xy, exclude_self)
-    if cell is None:
-        # expected k-th-NN radius for a uniform point field of density
-        # ρ = n/area is sqrt(k/(π·ρ)); 3× margin keeps the completion
-        # set tiny for mildly clustered data.
-        import math as _math
+    n = int(stats["n"])
+    # expected k-th-NN radius for a uniform point field of density
+    # ρ = n/area is sqrt(k/(π·ρ)); 3× margin keeps the completion set
+    # tiny for mildly clustered data.
+    import math as _math
 
-        area = max(
-            (stats["xmax"] - stats["xmin"]) * (stats["ymax"] - stats["ymin"]), 1e-12
-        )
-        cell = 3.0 * _math.sqrt((k + 1) * area / (_math.pi * n))
-    first = knn_join_grid(queries, base, k, cell, q_id, b_id, q_xy, b_xy, exclude_self)
+    area = max(
+        (stats["xmax"] - stats["xmin"]) * (stats["ymax"] - stats["ymin"]), 1e-12
+    )
+    cell = 3.0 * _math.sqrt((k + 1) * area / (_math.pi * n))
+    first = knn_join_grid(queries, base, k, cell, q_id, b_id, q_xy, b_xy)
     q = queries.select(F.col(q_id).alias("query_id"), F.col(q_xy[0]).alias("_qx"), F.col(q_xy[1]).alias("_qy"))
     per_q = first.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("_found"), F.max("dist").alias("_maxd")
@@ -172,8 +169,7 @@ def knn_join(
     deficient = q.join(exact_ids, "query_id", "left_anti")
     b = base.select(F.col(b_id).alias("neighbor_id"), F.col(b_xy[0]).alias("_bx"), F.col(b_xy[1]).alias("_by"))
     pairs = F.broadcast(deficient).crossJoin(b)
-    if exclude_self:
-        pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+    pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
     pairs = pairs.withColumn("dist", F.sqrt(_sq_dist("_qx", "_qy", "_bx", "_by")))
     w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("neighbor_id").asc())
     completion = (

@@ -44,11 +44,8 @@ def local_morans_i(
     points: DataFrame,
     value_col: str,
     k: int = 5,
-    id_col: str = "id",
-    x_col: str = "x",
-    y_col: str = "y",
 ) -> DataFrame:
-    """Analytic LISA: (id, z, lag, i_stat, quadrant) per point.
+    """Analytic LISA: (id, z, lag, i_stat, quadrant) per (id, x, y) point.
 
     quadrant: HH (z>0, lag>0), LL (z<0, lag<0), LH (z<0, lag>0),
     HL (z>0, lag<0) — significance is NOT applied here (see
@@ -56,9 +53,9 @@ def local_morans_i(
     classify as the non-positive side, matching numpy sign conventions.
     """
     pts = points.select(
-        F.col(id_col).alias("id"),
-        F.col(x_col).cast("double").alias("x"),
-        F.col(y_col).cast("double").alias("y"),
+        F.col("id").alias("id"),
+        F.col("x").cast("double").alias("x"),
+        F.col("y").cast("double").alias("y"),
         F.col(value_col).cast("double").alias("v"),
     )
     row = pts.agg(
@@ -315,11 +312,12 @@ def morans_i_global(lisa: DataFrame) -> DataFrame:
     return lisa.agg(F.avg("i_stat").alias("mean_i"), F.count(F.lit(1)).alias("n"))
 
 
-def sig_hotspots(lisa_p: DataFrame, lisa: DataFrame, alpha: float = 0.05) -> DataFrame:
-    """Significant HH/LL points (the reference's hot/cold spot output)."""
+def sig_hotspots(lisa_p: DataFrame, lisa: DataFrame) -> DataFrame:
+    """Significant (p_sim ≤ 0.05) HH/LL points (the reference's hot/cold
+    spot output)."""
     return (
         lisa.join(lisa_p.select("id", "p_sim"), "id")
-        .filter((F.col("p_sim") <= alpha) & F.col("quadrant").isin("HH", "LL"))
+        .filter((F.col("p_sim") <= 0.05) & F.col("quadrant").isin("HH", "LL"))
         .select("id", "quadrant", "i_stat", "p_sim")
     )
 

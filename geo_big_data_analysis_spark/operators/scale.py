@@ -68,30 +68,32 @@ def salted_agg_count(df: DataFrame, key: str, n_salts: int = 16) -> DataFrame:
     return partial.groupBy(key).agg(F.sum("_partial").cast("bigint").alias("count"))
 
 
-def salted_join_inner(
-    big: DataFrame, small: DataFrame, key: str, n_salts: int = 16
-) -> DataFrame:
+def salted_join_inner(big: DataFrame, small: DataFrame, key: str) -> DataFrame:
     """Inner equi-join resilient to big-side key skew: the big side gets
     a random-ish salt, the small side is replicated once per salt value,
-    and the join key becomes (key, salt) — a hot key's rows land in
-    ``n_salts`` tasks instead of one straggler."""
-    salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias("_salt")
+    and the join key becomes (key, salt) — a hot key's rows land in 16
+    tasks instead of one straggler."""
+    salts = F.explode(F.sequence(F.lit(0), F.lit(15))).alias("_salt")
     small_rep = small.select("*", salts)
-    big_salted = big.withColumn("_salt", _salt(n_salts))
+    big_salted = big.withColumn("_salt", _salt(16))
     return big_salted.join(small_rep, [key, "_salt"]).drop("_salt")
 
 
-def bloom_bitmap(
-    keys: DataFrame, key_col: str, n_bits: int = 2048, n_hashes: int = 3
-) -> DataFrame:
+#: Bloom filter size and hash count, shared by the bitmap build and the
+#: probe so the two always agree.
+BLOOM_BITS = 2048
+BLOOM_HASHES = 3
+
+
+def bloom_bitmap(keys: DataFrame, key_col: str) -> DataFrame:
     """Build a Bloom-filter bitmap from a key column, as a DataFrame of
     (word_idx, mask) rows — 32 bits per word so masks stay far from
     bigint sign/overflow territory on every engine.
 
     Hashes are md5-prefix (engine-neutral, deterministic): position_i =
-    int(md5(key || '#' || i)[:15 hex]) mod n_bits. The build is one
+    int(md5(key || '#' || i)[:15 hex]) mod BLOOM_BITS. The build is one
     explode (k rows per key) + one bit_or aggregation — fully
-    distributed, output is n_bits/32 rows regardless of key count.
+    distributed, output is BLOOM_BITS/32 rows regardless of key count.
 
     This is the explicit form of the runtime-filter/semi-join-reduction
     technique (Spark's own runtime row-group filtering, Bloom join
@@ -100,7 +102,7 @@ def bloom_bitmap(
     that a later join will drop.
     """
     pos_rows = []
-    for i in range(n_hashes):
+    for i in range(BLOOM_HASHES):
         h = F.conv(
             F.substring(
                 F.md5(F.concat(F.col(key_col).cast("string"), F.lit(f"#{i}"))), 1, 15
@@ -108,10 +110,10 @@ def bloom_bitmap(
             16,
             10,
         ).cast("bigint")
-        pos_rows.append((h % n_bits).alias(f"p{i}"))
+        pos_rows.append((h % BLOOM_BITS).alias(f"p{i}"))
     pos = keys.select(*pos_rows)
     stacked = pos.select(
-        F.explode(F.array(*[F.col(f"p{i}") for i in range(n_hashes)])).alias("pos")
+        F.explode(F.array(*[F.col(f"p{i}") for i in range(BLOOM_HASHES)])).alias("pos")
     )
     return (
         stacked.select(
@@ -125,13 +127,7 @@ def bloom_bitmap(
     )
 
 
-def bloom_flag(
-    facts: DataFrame,
-    key_col: str,
-    bitmap: DataFrame,
-    n_bits: int = 2048,
-    n_hashes: int = 3,
-) -> DataFrame:
+def bloom_flag(facts: DataFrame, key_col: str, bitmap: DataFrame) -> DataFrame:
     """Annotate ``facts`` with a ``bloom_pass`` boolean: definite-reject
     / probable-accept against the bitmap. The tiny bitmap broadcasts
     once per hash function (k broadcast equi-joins on word_idx);
@@ -140,7 +136,7 @@ def bloom_flag(
     (coalesce mask to 0)."""
     out = facts
     passed = F.lit(True)
-    for i in range(n_hashes):
+    for i in range(BLOOM_HASHES):
         h = F.conv(
             F.substring(
                 F.md5(F.concat(F.col(key_col).cast("string"), F.lit(f"#{i}"))), 1, 15
@@ -148,7 +144,7 @@ def bloom_flag(
             16,
             10,
         ).cast("bigint")
-        pos = h % n_bits
+        pos = h % BLOOM_BITS
         out = out.withColumn(f"_w{i}", (pos / 32).cast("int")).withColumn(
             f"_b{i}", (pos % 32).cast("int")
         )
@@ -159,20 +155,14 @@ def bloom_flag(
         passed = passed & F.expr(
             f"shiftright(coalesce(_m{i}, CAST(0 AS BIGINT)), _b{i}) % 2 = 1"
         )
-    drop_cols = [c for i in range(n_hashes) for c in (f"_w{i}", f"_b{i}", f"_m{i}")]
+    drop_cols = [c for i in range(BLOOM_HASHES) for c in (f"_w{i}", f"_b{i}", f"_m{i}")]
     return out.withColumn("bloom_pass", passed).drop(*drop_cols)
 
 
-def bloom_probe(
-    facts: DataFrame,
-    key_col: str,
-    bitmap: DataFrame,
-    n_bits: int = 2048,
-    n_hashes: int = 3,
-) -> DataFrame:
+def bloom_probe(facts: DataFrame, key_col: str, bitmap: DataFrame) -> DataFrame:
     """Filter ``facts`` to rows whose key passes the Bloom bitmap."""
     return (
-        bloom_flag(facts, key_col, bitmap, n_bits=n_bits, n_hashes=n_hashes)
+        bloom_flag(facts, key_col, bitmap)
         .filter(F.col("bloom_pass"))
         .drop("bloom_pass")
     )

@@ -18,15 +18,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def hourly_counts(df: DataFrame, ts_col: str, keys: list[str] | None = None) -> DataFrame:
+def hourly_counts(df: DataFrame, ts_col: str) -> DataFrame:
     """A14 — tumbling 1-hour counts (test.py:636-639)."""
-    grp = [F.date_trunc("hour", F.col(ts_col)).alias("bucket_ts")] + [
-        F.col(k) for k in (keys or [])
-    ]
-    return df.groupBy(*grp).agg(F.count(F.lit(1)).alias("n"))
+    return df.groupBy(F.date_trunc("hour", F.col(ts_col)).alias("bucket_ts")).agg(
+        F.count(F.lit(1)).alias("n")
+    )
 
 
-def anomaly_threshold_filter(counts: DataFrame, n_col: str = "n", sigmas: float = 2.0) -> DataFrame:
+def anomaly_threshold_filter(counts: DataFrame, sigmas: float = 2.0) -> DataFrame:
     """Keep buckets with n > μ + sigmas·σ (population σ, matching numpy).
 
     Implemented as a broadcast cross-join of the 1-row global stats —
@@ -34,11 +33,11 @@ def anomaly_threshold_filter(counts: DataFrame, n_col: str = "n", sigmas: float 
     partial-aggregated scan at any scale.
     """
     stats = counts.agg(
-        F.avg(n_col).alias("_mu"), F.coalesce(F.stddev_pop(n_col), F.lit(0.0)).alias("_sigma")
+        F.avg("n").alias("_mu"), F.coalesce(F.stddev_pop("n"), F.lit(0.0)).alias("_sigma")
     )
     return (
         counts.crossJoin(F.broadcast(stats))
-        .filter(F.col(n_col) > F.col("_mu") + sigmas * F.col("_sigma"))
+        .filter(F.col("n") > F.col("_mu") + sigmas * F.col("_sigma"))
         .drop("_mu", "_sigma")
     )
 
@@ -48,10 +47,9 @@ def sessionize(
     ts_col: str,
     gap_minutes: float,
     keys: list[str] | None = None,
-    session_col: str = "session_id",
 ) -> DataFrame:
     """W2 — gap>threshold starts a new session ((diff>gap).cumsum(),
-    test.py:668-669). Adds an integer ``session_col`` per key."""
+    test.py:668-669). Adds an integer ``session_id`` per key."""
     keys = keys or []
     w = Window.partitionBy(*keys).orderBy(ts_col) if keys else Window.orderBy(ts_col)
     # full-precision epoch seconds: unix_timestamp() TRUNCATES to whole
@@ -71,35 +69,33 @@ def sessionize(
     ) if keys else Window.orderBy(ts_col).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    return df.withColumn(session_col, F.sum(new_session).over(running))
+    return df.withColumn("session_id", F.sum(new_session).over(running))
 
 
 def session_stats(
     sessions: DataFrame,
     ts_col: str,
     keys: list[str] | None = None,
-    session_col: str = "session_id",
 ) -> DataFrame:
-    """A4 — per-session start/end/count (test.py:672-677)."""
+    """A4 — per-``session_id`` start/end/count (test.py:672-677)."""
     keys = keys or []
-    return sessions.groupBy(*(keys + [session_col])).agg(
+    return sessions.groupBy(*(keys + ["session_id"])).agg(
         F.min(ts_col).alias("session_start"),
         F.max(ts_col).alias("session_end"),
         F.count(F.lit(1)).alias("n_events"),
     )
 
 
-def range_join_periods(
-    df: DataFrame, periods: DataFrame, ts_col: str, start_col: str = "session_start", end_col: str = "session_end"
-) -> DataFrame:
-    """J8 — events within [start, end] of each period (test.py:703-704).
+def range_join_periods(df: DataFrame, periods: DataFrame, ts_col: str) -> DataFrame:
+    """J8 — events within [session_start, session_end] of each period
+    (test.py:703-704).
 
     Periods are few (anomaly output) → broadcast, making the range join a
     broadcast-nested-loop with a cheap predicate instead of a shuffle.
     """
     return df.join(
         F.broadcast(periods),
-        (F.col(ts_col) >= F.col(start_col)) & (F.col(ts_col) <= F.col(end_col)),
+        (F.col(ts_col) >= F.col("session_start")) & (F.col(ts_col) <= F.col("session_end")),
         "inner",
     )
 
@@ -108,11 +104,10 @@ def bucketed_range_join(
     df: DataFrame,
     periods: DataFrame,
     ts_col: str,
-    start_col: str = "session_start",
-    end_col: str = "session_end",
     end_exclusive: bool = True,
 ) -> DataFrame:
-    """J8 at scale — same semantics as :func:`range_join_periods`, but
+    """J8 at scale — same semantics as :func:`range_join_periods`
+    ([session_start, session_end], or an end-exclusive period), but
     as a *hash* join: each period explodes to its covering hour buckets,
     both sides equi-join on the bucket, and the exact range predicate
     refines the matches (the temporal twin of the spatial grid-join,
@@ -121,28 +116,28 @@ def bucketed_range_join(
     periods covering its hour, and the join itself is hashed, so it
     survives period lists too large to predicate-scan per row."""
     end_bound = (
-        F.col(end_col) - F.expr("INTERVAL 1 MICROSECOND")
+        F.col("session_end") - F.expr("INTERVAL 1 MICROSECOND")
         if end_exclusive
-        else F.col(end_col)
+        else F.col("session_end")
     )
     pk = periods.withColumn(
         "__bucket",
         F.explode(
             F.sequence(
-                F.date_trunc("hour", F.col(start_col)),
+                F.date_trunc("hour", F.col("session_start")),
                 F.date_trunc("hour", end_bound),
                 F.expr("INTERVAL 1 HOUR"),
             )
         ),
     )
     upper = (
-        (F.col(ts_col) < F.col(end_col))
+        (F.col(ts_col) < F.col("session_end"))
         if end_exclusive
-        else (F.col(ts_col) <= F.col(end_col))
+        else (F.col(ts_col) <= F.col("session_end"))
     )
     return (
         df.withColumn("__bucket", F.date_trunc("hour", F.col(ts_col)))
         .join(F.broadcast(pk), "__bucket", "inner")
-        .filter((F.col(ts_col) >= F.col(start_col)) & upper)
+        .filter((F.col(ts_col) >= F.col("session_start")) & upper)
         .drop("__bucket")
     )

@@ -71,10 +71,8 @@ def _cosine_col(qv: str, bv: str, dim: int | None) -> Column:
     return _dot(F.col(qv), F.col(bv)) / (_norm(F.col(qv)) * _norm(F.col(bv)))
 
 
-def with_cosine(
-    df: DataFrame, a_col: str, b_col: str, out: str = "cosine", dim: int | None = None
-) -> DataFrame:
-    return df.withColumn(out, _cosine_col(a_col, b_col, dim))
+def with_cosine(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    return df.withColumn("cosine", _cosine_col(a_col, b_col, None))
 
 
 def _topk(pairs: DataFrame, k: int) -> DataFrame:
@@ -92,18 +90,15 @@ def cosine_topk_bruteforce(
     queries: DataFrame,
     base: DataFrame,
     k: int,
-    q_id: str = "vec_id",
-    b_id: str = "vec_id",
-    q_vec: str = "embedding",
-    b_vec: str = "embedding",
     exclude_self: bool = True,
     dim: int | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k: broadcast queries against the partitioned
-    base, per-query top-k window. Output (query_id, neighbor_id,
-    cosine, sim_rank); ties broken by neighbor id."""
-    q = queries.select(F.col(q_id).alias("query_id"), F.col(q_vec).alias("_qv"))
-    b = base.select(F.col(b_id).alias("neighbor_id"), F.col(b_vec).alias("_bv"))
+    """Exact cosine top-k over (vec_id, embedding) rows: broadcast
+    queries against the partitioned base, per-query top-k window.
+    Output (query_id, neighbor_id, cosine, sim_rank); ties broken by
+    neighbor id."""
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv"))
+    b = base.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_bv"))
     pairs = b.crossJoin(F.broadcast(q))
     if exclude_self:
         pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
@@ -114,13 +109,9 @@ def cosine_topk_pandas(
     queries: DataFrame,
     base: DataFrame,
     k: int,
-    q_id: str = "vec_id",
-    b_id: str = "vec_id",
-    q_vec: str = "embedding",
-    b_vec: str = "embedding",
-    exclude_self: bool = True,
 ) -> DataFrame:
-    """Exact cosine top-k, Arrow/numpy path: the vectorized-Pandas-UDF
+    """Exact cosine top-k over (vec_id, embedding) rows, self pairs
+    excluded, Arrow/numpy path: the vectorized-Pandas-UDF
     alternative to the codegen'd unrolled cosine
     (:func:`cosine_topk_bruteforce`). The (small) query matrix is
     row-normalized on the driver and broadcast; each base Arrow batch
@@ -134,7 +125,7 @@ def cosine_topk_pandas(
     import numpy as np
     import pandas as pd
 
-    qrows = queries.select(q_id, q_vec).collect()
+    qrows = queries.select("vec_id", "embedding").collect()
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     Q = np.array([r[1] for r in qrows], dtype=np.float64)
     Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
@@ -155,7 +146,7 @@ def cosine_topk_pandas(
                 col = S[:, j]
                 top = np.argpartition(-col, kk - 1)[:kk]
                 for t in top:
-                    if exclude_self and ids[t] == qid:
+                    if ids[t] == qid:
                         continue
                     out_q.append(qid)
                     out_n.append(ids[t])
@@ -165,22 +156,20 @@ def cosine_topk_pandas(
             )
 
     cand = base.select(
-        F.col(b_id).alias("_bid"), F.col(b_vec).alias("_bv")
+        F.col("vec_id").alias("_bid"), F.col("embedding").alias("_bv")
     ).mapInPandas(gen, "query_id bigint, neighbor_id bigint, cosine double")
     return _topk(cand, k)
 
 
-def srp_signature(
-    df: DataFrame, vec_col: str, planes: list[list[float]], out: str = "srp_sig"
-) -> DataFrame:
-    """Signed-random-projection signature: one bit per hyperplane
-    (deterministic plane list, supplied by the caller/planner). The
-    signature is an integer — the LSH bucket key."""
+def srp_signature(df: DataFrame, vec_col: str, planes: list[list[float]]) -> DataFrame:
+    """Signed-random-projection signature ``srp_sig``: one bit per
+    hyperplane (deterministic plane list, supplied by the
+    caller/planner). The signature is an integer — the LSH bucket key."""
     sig = F.lit(0).cast("bigint")
     for i, plane in enumerate(planes):
         bit = (_dot(F.col(vec_col), _const_array(plane)) > 0).cast("bigint")
         sig = sig + bit * F.lit(1 << i).cast("bigint")
-    return df.withColumn(out, sig)
+    return df.withColumn("srp_sig", sig)
 
 
 def cosine_topk_srp(
@@ -188,23 +177,20 @@ def cosine_topk_srp(
     base: DataFrame,
     k: int,
     planes: list[list[float]],
-    q_id: str = "vec_id",
-    b_id: str = "vec_id",
-    q_vec: str = "embedding",
-    b_vec: str = "embedding",
 ) -> DataFrame:
-    """Approximate cosine top-k: SRP-bucket both sides, equi-join on the
+    """Approximate cosine top-k over (vec_id, embedding) rows:
+    SRP-bucket both sides, equi-join on the
     bucket signature, exact rerank within buckets. Recall is tuned by
     the number of planes (fewer planes → bigger buckets → higher recall,
     more compute). The equi-join on an integer key is the 100 TB path."""
     dim = len(planes[0]) if planes else None
     qs = srp_signature(
-        queries.select(F.col(q_id).alias("query_id"), F.col(q_vec).alias("_qv")),
+        queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")),
         "_qv",
         planes,
     )
     bs = srp_signature(
-        base.select(F.col(b_id).alias("neighbor_id"), F.col(b_vec).alias("_bv")),
+        base.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_bv")),
         "_bv",
         planes,
     )
@@ -219,12 +205,9 @@ def cosine_topk_srp_multi(
     base: DataFrame,
     k: int,
     tables: list[list[list[float]]],
-    q_id: str = "vec_id",
-    b_id: str = "vec_id",
-    q_vec: str = "embedding",
-    b_vec: str = "embedding",
 ) -> DataFrame:
-    """Multi-table SRP-LSH — the standard recall amplifier: L
+    """Multi-table SRP-LSH over (vec_id, embedding) rows — the
+    standard recall amplifier: L
     independent plane sets, candidates = UNION of per-table bucket
     matches (a near-neighbor is missed only if it collides in NONE of
     the L tables: miss ≈ (1-p^b)^L vs (1-p^b) single-table), then one
@@ -238,14 +221,14 @@ def cosine_topk_srp_multi(
     dim = len(tables[0][0])
 
     cand = (
-        _srp_sig_rows_numpy(queries, tables, q_id, q_vec, "query_id")
-        .join(_srp_sig_rows_numpy(base, tables, b_id, b_vec, "neighbor_id"), ["t", "sig"])
+        _srp_sig_rows_numpy(queries, tables, "vec_id", "embedding", "query_id")
+        .join(_srp_sig_rows_numpy(base, tables, "vec_id", "embedding", "neighbor_id"), ["t", "sig"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    qv = queries.select(F.col(q_id).alias("query_id"), F.col(q_vec).alias("_qv"))
-    bv = base.select(F.col(b_id).alias("neighbor_id"), F.col(b_vec).alias("_bv"))
+    qv = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv"))
+    bv = base.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_bv"))
     pairs = cand.join(qv, "query_id").join(bv, "neighbor_id")
     return _topk(pairs.withColumn("cosine", _cosine_col("_qv", "_bv", dim)), k)
 
@@ -343,14 +326,12 @@ def embedding_near_dup_pairs(
     emb: DataFrame,
     threshold: float,
     tables: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exact: bool = False,
     force_exact: bool = False,
     exact_max_rows: int = EXACT_NEAR_DUP_MAX_ROWS,
     bucket_cap: int | None = None,
 ) -> DataFrame:
-    """Near-duplicate embedding pairs (cosine ≥ threshold), DEFAULT
+    """Near-duplicate (vec_id, embedding) pairs (cosine ≥ threshold), DEFAULT
     path = multi-table SRP-LSH candidate generation + exact cosine
     verification — banding equi-join on (table, signature), no cross
     product, the 100 TB shape. A true near-dup pair is missed only if
@@ -386,7 +367,7 @@ def embedding_near_dup_pairs(
     # computing either (guide §2.5); every downstream step is a key join
     # or aggregate, partitioning-free.
     e = spread(
-        emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
+        emb.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("embedding"))
     )
     if exact:
         if not force_exact:
@@ -665,9 +646,6 @@ def pq_adc_topk(
     codes: DataFrame,
     codebooks: list[list[list[float]]],
     k: int,
-    q_id: str = "vec_id",
-    q_vec: str = "embedding",
-    b_id: str = "vec_id",
     scale: int = 1000,
 ) -> DataFrame:
     """Asymmetric-distance top-k: broadcast the (small) query side into
@@ -677,11 +655,11 @@ def pq_adc_topk(
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     q = queries.select(
-        F.col(q_id).alias("query_id"),
-        *_pq_int_cols(q_vec, list(range(m * dsub)), scale),
+        F.col("vec_id").alias("query_id"),
+        *_pq_int_cols("embedding", list(range(m * dsub)), scale),
     )
     b = codes.select(
-        F.col(b_id).alias("neighbor_id"), *[F.col(f"code_{i}") for i in range(m)]
+        F.col("vec_id").alias("neighbor_id"), *[F.col(f"code_{i}") for i in range(m)]
     )
     pairs = b.crossJoin(F.broadcast(q)).filter(F.col("query_id") != F.col("neighbor_id"))
     pairs = pairs.withColumn("adc_dist", _adc_dist_col(codebooks))
@@ -745,10 +723,6 @@ def ivfpq_topk(
     k: int,
     centers: list[tuple[int, list[float]]],
     nprobe: int = 3,
-    q_id: str = "vec_id",
-    b_id: str = "vec_id",
-    q_vec: str = "embedding",
-    b_vec: str = "embedding",
     scale: int = 1000,
 ) -> DataFrame:
     """IVF-PQ composed index probe — the FAISS ``IVFPQ`` shape and the
@@ -764,7 +738,7 @@ def ivfpq_topk(
     Output (query_id, neighbor_id, adc_dist, pq_rank)."""
     m = len(codebooks)
     bs = (
-        base.select(F.col(b_id).alias("neighbor_id"), F.col(b_vec).alias("_bv"))
+        base.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_bv"))
         .withColumn("_n", F.expr(_norm_sql("_bv")))
         .withColumn(
             "cell",
@@ -775,11 +749,11 @@ def ivfpq_topk(
         .select("neighbor_id", "cell")
     )
     bcodes = codes.select(
-        F.col(b_id).alias("neighbor_id"), *[F.col(f"code_{i}") for i in range(m)]
+        F.col("vec_id").alias("neighbor_id"), *[F.col(f"code_{i}") for i in range(m)]
     ).join(bs, "neighbor_id")
     return ivfpq_probe(
         queries, bcodes, codebooks, centers, k,
-        nprobe=nprobe, q_id=q_id, q_vec=q_vec, scale=scale,
+        nprobe=nprobe, scale=scale,
     )
 
 
@@ -790,8 +764,6 @@ def ivfpq_probe(
     centers: list[tuple[int, list[float]]],
     k: int,
     nprobe: int = 3,
-    q_id: str = "vec_id",
-    q_vec: str = "embedding",
     scale: int = 1000,
 ) -> DataFrame:
     """Probe a PREPARED IVF-PQ index: ``coded_base`` already carries
@@ -805,9 +777,9 @@ def ivfpq_probe(
     dsub = len(codebooks[0][0])
     qs = (
         queries.select(
-            F.col(q_id).alias("query_id"),
-            F.col(q_vec).alias("_qv"),
-            *_pq_int_cols(q_vec, list(range(m * dsub)), scale),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("_qv"),
+            *_pq_int_cols("embedding", list(range(m * dsub)), scale),
         )
         .withColumn("_n", F.expr(_norm_sql("_qv")))
         .withColumn(
@@ -897,10 +869,6 @@ def cosine_topk_ivf(
     k: int,
     centers: list[tuple[int, list[float]]],
     nprobe: int = 3,
-    q_id: str = "vec_id",
-    b_id: str = "vec_id",
-    q_vec: str = "embedding",
-    b_vec: str = "embedding",
 ) -> DataFrame:
     """IVF-style approximate cosine top-k: a coarse quantizer (`centers`,
     e.g. KMeans or per-label centroids) partitions the base into cells;
@@ -920,7 +888,7 @@ def cosine_topk_ivf(
     # the broadcast probe join below there is no exchange after this
     # point, so scan parallelism IS the stage parallelism
     bs = (
-        spread(base.select(F.col(b_id).alias("neighbor_id"), F.col(b_vec).alias("_bv")))
+        spread(base.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_bv")))
         .withColumn("_n", F.expr(_norm_sql("_bv")))
         .withColumn(
             "cell",
@@ -931,7 +899,7 @@ def cosine_topk_ivf(
         .drop("_n")
     )
     qs = (
-        queries.select(F.col(q_id).alias("query_id"), F.col(q_vec).alias("_qv"))
+        queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv"))
         .withColumn("_n", F.expr(_norm_sql("_qv")))
         .withColumn(
             "cell",
@@ -962,9 +930,6 @@ def cosine_topk_ivf(
 def ivf_cell_base(
     base: DataFrame,
     centers: list[tuple[int, list[float]]],
-    b_id: str = "vec_id",
-    b_vec: str = "embedding",
-    b_label: str = "label",
 ) -> DataFrame:
     """Assign every base vector to its nearest coarse-quantizer cell:
     (negative_id, negative_label, _bv, cell). The per-row cell-score
@@ -976,9 +941,9 @@ def ivf_cell_base(
     return (
         spread(
             base.select(
-                F.col(b_id).alias("negative_id"),
-                F.col(b_label).alias("negative_label"),
-                F.col(b_vec).alias("_bv"),
+                F.col("vec_id").alias("negative_id"),
+                F.col("label").alias("negative_label"),
+                F.col("embedding").alias("_bv"),
             )
         )
         .withColumn("_n", F.expr(_norm_sql("_bv")))
@@ -998,12 +963,6 @@ def hard_negatives_ivf(
     k: int,
     centers: list[tuple[int, list[float]]],
     nprobe: int = 3,
-    q_id: str = "vec_id",
-    b_id: str = "vec_id",
-    q_vec: str = "embedding",
-    b_vec: str = "embedding",
-    q_label: str = "label",
-    b_label: str = "label",
     celled_base: DataFrame | None = None,
 ) -> DataFrame:
     """Index-driven hard-negative mining (VERDICT r3 "Next" #4): the
@@ -1029,15 +988,15 @@ def hard_negatives_ivf(
     probe_label, rank, negative_id, negative_label, cosine)."""
     dim = len(centers[0][1])
     bs = (
-        ivf_cell_base(base, centers, b_id, b_vec, b_label)
+        ivf_cell_base(base, centers)
         if celled_base is None
         else celled_base
     )
     qs = (
         queries.select(
-            F.col(q_id).alias("query_id"),
-            F.col(q_label).alias("probe_label"),
-            F.col(q_vec).alias("_qv"),
+            F.col("vec_id").alias("query_id"),
+            F.col("label").alias("probe_label"),
+            F.col("embedding").alias("_qv"),
         )
         .withColumn("_n", F.expr(_norm_sql("_qv")))
         .withColumn(

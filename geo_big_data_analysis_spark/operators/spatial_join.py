@@ -24,33 +24,23 @@ def tag_cells(
     return df.withColumn("gx", gx).withColumn("gy", gy)
 
 
-def point_in_rect_join(
-    points: DataFrame,
-    rects: DataFrame,
-    lat: str = "lat",
-    lon: str = "lon",
-    lon_min: str = "cell_lon_min",
-    lat_min: str = "cell_lat_min",
-    lon_max: str = "cell_lon_max",
-    lat_max: str = "cell_lat_max",
-    how: str = "inner",
-    broadcast_rects: bool = True,
-) -> DataFrame:
-    """J5 (axis-aligned polygon case): point-within-rectangle join.
+def point_in_rect_join(points: DataFrame, rects: DataFrame) -> DataFrame:
+    """J5 (axis-aligned polygon case): inner join of (lat, lon) points
+    to the rectangles [cell_lon_min, cell_lon_max) × [cell_lat_min,
+    cell_lat_max) that contain them.
 
-    When the rectangle side is small (Voronoi cells, isochrone hulls,
-    analysis grids — hundreds to thousands of rows) broadcast it; the
-    join is then a map-side nested loop with a cheap predicate and no
-    shuffle of the big point table.
+    The rectangle side is small (Voronoi cells, isochrone hulls,
+    analysis grids — hundreds to thousands of rows), so it is
+    broadcast; the join is then a map-side nested loop with a cheap
+    predicate and no shuffle of the big point table.
     """
-    rhs = F.broadcast(rects) if broadcast_rects else rects
     pred = (
-        (F.col(lon) >= F.col(lon_min))
-        & (F.col(lon) < F.col(lon_max))
-        & (F.col(lat) >= F.col(lat_min))
-        & (F.col(lat) < F.col(lat_max))
+        (F.col("lon") >= F.col("cell_lon_min"))
+        & (F.col("lon") < F.col("cell_lon_max"))
+        & (F.col("lat") >= F.col("cell_lat_min"))
+        & (F.col("lat") < F.col("cell_lat_max"))
     )
-    return points.join(rhs, pred, how)
+    return points.join(F.broadcast(rects), pred, "inner")
 
 
 def point_in_cell_join(
@@ -61,15 +51,14 @@ def point_in_cell_join(
     origin_lat: float,
     origin_lon: float,
     cell_deg: float,
-    how: str = "inner",
 ) -> DataFrame:
-    """J5 (general case): tag points with (gx, gy) → equi-join with a
+    """J5 (general case): tag points with (gx, gy) → inner equi-join with a
     cell table keyed by (gx, gy). Pure hash join, shuffles only on the
     integer cell key — the scalable plan shape for point-in-polygon when
     the polygon side is itself huge (each polygon pre-expanded to its
     covering cells; refinement predicate applied after the equi-join)."""
     tagged = tag_cells(points, lat, lon, origin_lat, origin_lon, cell_deg)
-    return tagged.join(cells, ["gx", "gy"], how)
+    return tagged.join(cells, ["gx", "gy"], "inner")
 
 
 def point_in_polygon_refine(df: DataFrame, lat: str, lon: str, poly_col: str):
@@ -106,13 +95,10 @@ def segment_grid_overlap(
     origin_x: float,
     origin_y: float,
     cell: float,
-    x1: str = "x1",
-    y1: str = "y1",
-    x2: str = "x2",
-    y2: str = "y2",
 ) -> DataFrame:
-    """J6 — line-segment × grid-cell overlap length (the Spark-first
-    rewrite of lab3c cell 5's O(cells×edges) nested loop, SURVEY §4).
+    """J6 — (x1, y1)–(x2, y2) line-segment × grid-cell overlap length
+    (the Spark-first rewrite of lab3c cell 5's O(cells×edges) nested
+    loop, SURVEY §4).
 
     Candidate generation: each segment explodes only to the cells its
     bounding box covers (sequence over cell index ranges — segments
@@ -125,10 +111,10 @@ def segment_grid_overlap(
     segments (dx or dy = 0) take the degenerate branch: the axis
     constrains membership instead of a t-interval.
     """
-    gx0 = F.floor((F.least(F.col(x1), F.col(x2)) - origin_x) / cell).cast("bigint")
-    gx1 = F.floor((F.greatest(F.col(x1), F.col(x2)) - origin_x) / cell).cast("bigint")
-    gy0 = F.floor((F.least(F.col(y1), F.col(y2)) - origin_y) / cell).cast("bigint")
-    gy1 = F.floor((F.greatest(F.col(y1), F.col(y2)) - origin_y) / cell).cast("bigint")
+    gx0 = F.floor((F.least(F.col("x1"), F.col("x2")) - origin_x) / cell).cast("bigint")
+    gx1 = F.floor((F.greatest(F.col("x1"), F.col("x2")) - origin_x) / cell).cast("bigint")
+    gy0 = F.floor((F.least(F.col("y1"), F.col("y2")) - origin_y) / cell).cast("bigint")
+    gy1 = F.floor((F.greatest(F.col("y1"), F.col("y2")) - origin_y) / cell).cast("bigint")
     e = (
         segs.withColumn("gx", F.explode(F.sequence(gx0, gx1)))
         .withColumn("gy", F.explode(F.sequence(gy0, gy1)))
@@ -137,8 +123,8 @@ def segment_grid_overlap(
     xmax = F.lit(origin_x) + (F.col("gx") + 1) * F.lit(cell)
     ymin = F.lit(origin_y) + F.col("gy") * F.lit(cell)
     ymax = F.lit(origin_y) + (F.col("gy") + 1) * F.lit(cell)
-    dx = F.col(x2) - F.col(x1)
-    dy = F.col(y2) - F.col(y1)
+    dx = F.col("x2") - F.col("x1")
+    dy = F.col("y2") - F.col("y1")
 
     # per-axis entry/exit params; degenerate axis -> (-inf, +inf) if the
     # fixed coordinate lies inside the slab, else empty interval
@@ -154,8 +140,8 @@ def segment_grid_overlap(
         )
         return t_lo, t_hi
 
-    tx_lo, tx_hi = axis_interval(F.col(x1), dx, xmin, xmax)
-    ty_lo, ty_hi = axis_interval(F.col(y1), dy, ymin, ymax)
+    tx_lo, tx_hi = axis_interval(F.col("x1"), dx, xmin, xmax)
+    ty_lo, ty_hi = axis_interval(F.col("y1"), dy, ymin, ymax)
     t_in = F.greatest(tx_lo, ty_lo, F.lit(0.0))
     t_out = F.least(tx_hi, ty_hi, F.lit(1.0))
     seg_len = F.sqrt(dx * dx + dy * dy)

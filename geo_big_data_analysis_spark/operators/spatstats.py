@@ -31,15 +31,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def queen_neighbor_pairs(cells: DataFrame, gx: str = "gx", gy: str = "gy") -> DataFrame:
-    """All ordered (i, j) cell pairs under queen contiguity (8-adjacent
-    cells are neighbors, binary weight 1). Equi-join on the shifted
-    integer cell id — the scalable contiguity-matrix materialization."""
+def queen_neighbor_pairs(cells: DataFrame) -> DataFrame:
+    """All ordered (i, j) pairs of (gx, gy) cells under queen contiguity
+    (8-adjacent cells are neighbors, binary weight 1). Equi-join on the
+    shifted integer cell id — the scalable contiguity-matrix
+    materialization."""
     offsets = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0)]
     right = cells.select(
-        F.col(gx).alias("_jx"),
-        F.col(gy).alias("_jy"),
-        *[F.col(c).alias(f"j_{c}") for c in cells.columns if c not in (gx, gy)],
+        F.col("gx").alias("_jx"),
+        F.col("gy").alias("_jy"),
+        *[F.col(c).alias(f"j_{c}") for c in cells.columns if c not in ("gx", "gy")],
     )
     probe = (
         cells.select(
@@ -48,8 +49,8 @@ def queen_neighbor_pairs(cells: DataFrame, gx: str = "gx", gy: str = "gy") -> Da
                 F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in offsets])
             ).alias("_o"),
         )
-        .withColumn("_jx", F.col(gx) + F.col("_o.dx"))
-        .withColumn("_jy", F.col(gy) + F.col("_o.dy"))
+        .withColumn("_jx", F.col("gx") + F.col("_o.dx"))
+        .withColumn("_jy", F.col("gy") + F.col("_o.dy"))
         .drop("_o")
     )
     return probe.join(right, ["_jx", "_jy"]).drop("_jx", "_jy")
@@ -129,11 +130,10 @@ def ripley_k(
     origin_lat: float,
     origin_lon: float,
     cover_cell_deg: float,
-    lat: str = "lat",
-    lon: str = "lon",
 ) -> DataFrame:
-    """Naive (no edge correction) Ripley K̂(r) and Besag L̂(r) at each
-    radius: K̂(r) = A·Σ_i Σ_{j≠i} 1[d_ij ≤ r] / (n(n-1)), L̂ = √(K̂/π).
+    """Naive (no edge correction) Ripley K̂(r) and Besag L̂(r) of (lat,
+    lon) points at each radius:
+    K̂(r) = A·Σ_i Σ_{j≠i} 1[d_ij ≤ r] / (n(n-1)), L̂ = √(K̂/π).
 
     Pair counting runs through the 3×3 covering-cell equi-join;
     ``cover_cell_deg`` must be ≥ max(radii) in degrees on both axes so
@@ -165,7 +165,7 @@ def ripley_k(
             f"radius {rmax_check} km: the 3x3 covering cell would miss pairs"
         )
 
-    p = pts.select(F.col(lat).alias("_lat"), F.col(lon).alias("_lon"))
+    p = pts.select(F.col("lat").alias("_lat"), F.col("lon").alias("_lon"))
     gx, gy = grid_cell("_lat", "_lon", origin_lat, origin_lon, cover_cell_deg)
     b = p.withColumn("bgx", gx).withColumn("bgy", gy).select(
         F.col("_lat").alias("b_lat"), F.col("_lon").alias("b_lon"), "bgx", "bgy"

@@ -603,7 +603,7 @@ FROM events GROUP BY 1 ORDER BY dow
 
 
 def q_time_interval_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2.8 — rule-based time-of-day bucketing (holiday-aware when chain)."""
+    """2.8 — rule-based time-of-day bucketing (weekday-aware when chain)."""
     ev = _t(spark, sf_dir, "events")
     return (
         ev.withColumn("bucket", temporal.time_interval_bucket("ts"))
@@ -2169,11 +2169,12 @@ FROM (
 """
 
 
-def _srp_tables(n_tables: int = 8, n_planes: int = 4, dim: int = 64) -> list[list[list[float]]]:
-    """L independent deterministic plane sets = the 32-plane LCG stream
-    chunked into 8 tables of 4 bits (same dyadic-rational construction
-    as _srp_planes, so both engines round-trip bit-exactly)."""
-    flat = _srp_planes(n_tables * n_planes, dim)
+def _srp_tables(n_tables: int = 8, n_planes: int = 4) -> list[list[list[float]]]:
+    """L independent deterministic 64-d plane sets = the 32-plane LCG
+    stream chunked into 8 tables of 4 bits (same dyadic-rational
+    construction as _srp_planes, so both engines round-trip
+    bit-exactly)."""
+    flat = _srp_planes(n_tables * n_planes, 64)
     return [flat[t * n_planes : (t + 1) * n_planes] for t in range(n_tables)]
 
 
@@ -14090,13 +14091,13 @@ def q_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_centroid_separation(dim: int = 64) -> str:
+def _sql_centroid_separation() -> str:
     cols = ", ".join(
-        f"avg(embedding[{i + 1}]::DOUBLE) AS c{i}" for i in range(dim)
+        f"avg(embedding[{i + 1}]::DOUBLE) AS c{i}" for i in range(_EMB_DIM)
     )
-    dot = " + ".join(f"a.c{i} * b.c{i}" for i in range(dim))
-    na = " + ".join(f"a.c{i} * a.c{i}" for i in range(dim))
-    nb = " + ".join(f"b.c{i} * b.c{i}" for i in range(dim))
+    dot = " + ".join(f"a.c{i} * b.c{i}" for i in range(_EMB_DIM))
+    na = " + ".join(f"a.c{i} * a.c{i}" for i in range(_EMB_DIM))
+    nb = " + ".join(f"b.c{i} * b.c{i}" for i in range(_EMB_DIM))
     return f"""
 WITH cents AS (
   SELECT label, {cols} FROM embeddings GROUP BY label
@@ -14231,12 +14232,12 @@ def q_silhouette_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_silhouette(dim: int = _EMB_DIM) -> str:
-    cols = ", ".join(f"avg(embedding[{i + 1}]::DOUBLE) AS c{i}" for i in range(dim))
+def _sql_silhouette() -> str:
+    cols = ", ".join(f"avg(embedding[{i + 1}]::DOUBLE) AS c{i}" for i in range(_EMB_DIM))
     d2 = " + ".join(
         f"(e.embedding[{i + 1}]::DOUBLE - c.c{i})"
         f" * (e.embedding[{i + 1}]::DOUBLE - c.c{i})"
-        for i in range(dim)
+        for i in range(_EMB_DIM)
     )
     return f"""
 WITH cents AS (SELECT label AS cl, {cols} FROM embeddings GROUP BY label),

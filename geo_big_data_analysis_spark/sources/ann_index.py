@@ -476,8 +476,6 @@ def upsert_ivfpq_index(
     new_emb: DataFrame,
     out_dir: str,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     retrain_ratio: float = IVFPQ_RETRAIN_RATIO,
 ) -> dict:
     """INCREMENTAL ADMISSION for the vector index (VERDICT r5 "Next"
@@ -495,11 +493,10 @@ def upsert_ivfpq_index(
     codes, centers, codebooks, meta = load_ivfpq_index(spark, base_index_dir)
     n_base = int(meta.get("n_vectors") or codes.count())
     coded = pq_encode(
-        new_emb.select(id_col, vec_col), codebooks, id_col=id_col,
-        vec_col=vec_col, scale=meta["scale"],
+        new_emb.select("vec_id", "embedding"), codebooks, scale=meta["scale"]
     )
     cells = (
-        new_emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_bv"))
+        new_emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_bv"))
         .withColumn("_n", F.expr(_norm_sql("_bv")))
         .withColumn(
             "cell",
@@ -509,7 +506,7 @@ def upsert_ivfpq_index(
         )
         .select("neighbor_id", "cell")
     )
-    new_codes = coded.withColumnRenamed(id_col, "neighbor_id").join(cells, "neighbor_id")
+    new_codes = coded.withColumnRenamed("vec_id", "neighbor_id").join(cells, "neighbor_id")
     n_new = new_codes.count()
     if os.path.exists(out_dir):
         shutil.rmtree(out_dir)

@@ -27,7 +27,6 @@ def read_csv(
     path: str,
     schema: StructType | str | None = None,
     sep: str = ",",
-    header: bool = True,
     limit: int | None = None,
     ts_formats: dict[str, str] | None = None,
 ) -> DataFrame:
@@ -36,7 +35,7 @@ def read_csv(
     Columns listed in ``ts_formats`` should be STRING in the schema;
     they are parsed with ``to_timestamp`` after the scan."""
     reader = (
-        spark.read.option("header", str(header).lower())
+        spark.read.option("header", "true")
         .option("sep", sep)
         .option("mode", "PERMISSIVE")
     )
@@ -56,8 +55,6 @@ def read_csv_with_rejects(
     spark: SparkSession,
     path: str,
     schema: StructType,
-    sep: str = ",",
-    header: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """CSV scan with a malformed-row side output (the NDJSON reader's
     audit contract, S4, applied to CSV): rows that fail the declared
@@ -81,8 +78,8 @@ def read_csv_with_rejects(
     # _corrupt_record column into later reads using the same object
     aug = StructType(list(schema.fields) + [StructField("_corrupt_record", StringType())])
     df = (
-        spark.read.option("header", str(header).lower())
-        .option("sep", sep)
+        spark.read.option("header", "true")
+        .option("sep", ",")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .schema(aug)

@@ -74,27 +74,21 @@ def filter_geometry_type(df: DataFrame, keep: list[str]) -> DataFrame:
     return df.filter(F.col("geom_type").isin(keep))
 
 
-def promote_csv_points(
-    df: DataFrame,
-    lat_col: str | None = None,
-    lon_col: str | None = None,
-) -> DataFrame:
+def promote_csv_points(df: DataFrame) -> DataFrame:
     """S7 — promote a raw (string-typed) table to a point table:
     resolve lat/lon column aliases case-insensitively, coerce to
     double, drop rows that fail to parse or fall outside valid
     lat/lon ranges (visualize_noise.py:33-52 semantics)."""
     cols = {c.lower(): c for c in df.columns}
 
-    def resolve(explicit: str | None, aliases: list[str]) -> str:
-        if explicit:
-            return explicit
+    def resolve(aliases: list[str]) -> str:
         for a in aliases:
             if a in cols:
                 return cols[a]
         raise ValueError(f"no coordinate column among {aliases} in {df.columns}")
 
-    lat_c = resolve(lat_col, LAT_ALIASES)
-    lon_c = resolve(lon_col, LON_ALIASES)
+    lat_c = resolve(LAT_ALIASES)
+    lon_c = resolve(LON_ALIASES)
     out = df.withColumn("lat", F.col(lat_c).cast("double")).withColumn(
         "lon", F.col(lon_c).cast("double")
     )
@@ -106,16 +100,17 @@ def promote_csv_points(
     )
 
 
-def to_feature_structs(df: DataFrame, lon: str = "lon", lat: str = "lat") -> DataFrame:
-    """S8 — rows → GeoJSON Feature JSON strings (distributed; one
-    feature per row, remaining columns as properties)."""
-    props = [c for c in df.columns if c not in (lon, lat)]
+def to_feature_structs(df: DataFrame) -> DataFrame:
+    """S8 — (lon, lat) rows → GeoJSON Feature JSON strings
+    (distributed; one feature per row, remaining columns as
+    properties)."""
+    props = [c for c in df.columns if c not in ("lon", "lat")]
     feature = F.to_json(
         F.struct(
             F.lit("Feature").alias("type"),
             F.struct(
                 F.lit("Point").alias("type"),
-                F.array(F.col(lon), F.col(lat)).alias("coordinates"),
+                F.array(F.col("lon"), F.col("lat")).alias("coordinates"),
             ).alias("geometry"),
             F.struct(*[F.col(c).alias(c) for c in props]).alias("properties"),
         )
@@ -123,10 +118,11 @@ def to_feature_structs(df: DataFrame, lon: str = "lon", lat: str = "lat") -> Dat
     return df.select(feature.alias("feature_json"))
 
 
-def write_geojson(df: DataFrame, path: str, lon: str = "lon", lat: str = "lat") -> None:
-    """S8 — driver-side FeatureCollection export for small results
-    (mirrors the reference's to_file on aggregate outputs; big tables
+def write_geojson(df: DataFrame, path: str) -> None:
+    """S8 — driver-side FeatureCollection export of (lon, lat) points
+    for small results (mirrors the reference's to_file on aggregate
+    outputs; big tables
     belong in Parquet)."""
-    feats = [json.loads(r["feature_json"]) for r in to_feature_structs(df, lon, lat).collect()]
+    feats = [json.loads(r["feature_json"]) for r in to_feature_structs(df).collect()]
     with open(path, "w") as fh:
         json.dump({"type": "FeatureCollection", "features": feats}, fh)

@@ -261,7 +261,6 @@ def _pal_table(pal: np.ndarray) -> tuple[np.ndarray, int]:
 def write_gif(
     frames: list[np.ndarray],
     palette: np.ndarray,
-    delay_cs: int = 4,
     local_palettes: list[np.ndarray | None] | None = None,
 ) -> bytes:
     """Encode full-canvas (H, W) uint8 index frames + an (n, 3) palette
@@ -282,7 +281,7 @@ def write_gif(
     for i, fr in enumerate(frames):
         assert fr.shape == (h, w)
         lct = local_palettes[i] if local_palettes is not None else None
-        out += b"\x21\xf9\x04\x00" + struct.pack("<H", delay_cs) + b"\x00\x00"
+        out += b"\x21\xf9\x04\x00" + struct.pack("<H", 4) + b"\x00\x00"  # 4 cs delay
         if lct is None:
             out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
             min_code = max(2, bits)

@@ -152,10 +152,10 @@ def stream_stats(data: bytes) -> dict:
 
 
 def write_mp3_stream(bitrate_indices: list[int], sr_idx: int = 0,
-                     version1: bool = True, payload_byte: int = 0xAA) -> bytes:
+                     version1: bool = True) -> bytes:
     """Synthesize a spec-valid Layer III stream: one frame per bitrate
     index (1-14), headers exactly per §2.4.1, payload filled with
-    `payload_byte`. Used to test the walker against closed-form frame
+    0xAA. Used to test the walker against closed-form frame
     arithmetic; real MP3s walk through the same code path."""
     out = bytearray()
     ver_bits = 3 if version1 else 2
@@ -175,5 +175,5 @@ def write_mp3_stream(bitrate_indices: list[int], sr_idx: int = 0,
                 0xC0,                                     # mono
             ]
         )
-        out += hdr + bytes([payload_byte]) * (nbytes - 4)
+        out += hdr + bytes([0xAA]) * (nbytes - 4)
     return bytes(out)

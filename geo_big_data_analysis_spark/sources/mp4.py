@@ -207,8 +207,8 @@ def _box(fourcc: bytes, body: bytes) -> bytes:
     return struct.pack(">I", 8 + len(body)) + fourcc + body
 
 
-def _full(fourcc: bytes, body: bytes, version: int = 0, flags: int = 0) -> bytes:
-    return _box(fourcc, struct.pack(">I", (version << 24) | flags) + body)
+def _full(fourcc: bytes, body: bytes, flags: int = 0) -> bytes:
+    return _box(fourcc, struct.pack(">I", flags) + body)  # version 0
 
 
 def write_mp4(

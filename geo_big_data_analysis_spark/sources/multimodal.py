@@ -181,12 +181,12 @@ def FAKE_DECODE(payload: bytes, media_type: str) -> np.ndarray:
     return np.frombuffer(payload, dtype=np.uint8)
 
 
-def byte_histogram(raw: np.ndarray, bins: int = FEATURE_DIM) -> np.ndarray:
+def byte_histogram(raw: np.ndarray) -> np.ndarray:
     """L1-normalized byte-value histogram — the deterministic stand-in
     embedding (all-zero for empty payloads)."""
     if raw.size == 0:
-        return np.zeros(bins)
-    h, _ = np.histogram(raw, bins=bins, range=(0, 256))
+        return np.zeros(FEATURE_DIM)
+    h, _ = np.histogram(raw, bins=FEATURE_DIM, range=(0, 256))
     return h / raw.size
 
 

@@ -231,12 +231,10 @@ def sample_raster(
     arr: np.ndarray,
     t: Affine,
     nodata: float,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    out: str = "raster_value",
     fill: float | None = None,
 ) -> DataFrame:
-    """S11/J7 — sample the broadcast raster at each point.
+    """S11/J7 — sample the broadcast raster at each (lon, lat) point
+    into ``raster_value``.
 
     Reference behavior (get_population_density): indices clipped into
     bounds (points off the raster take the edge pixel), nodata → the
@@ -256,25 +254,30 @@ def sample_raster(
         v = a[row, col]
         return pd.Series(np.where(v == nodata, fill_v, v))
 
-    return df.withColumn(out, _sample(F.col(lon_col), F.col(lat_col)))
+    return df.withColumn("raster_value", _sample(F.col("lon"), F.col("lat")))
 
 
-def tiled_raster_df(spark, tile_h: int = 25, tile_w: int = 30) -> DataFrame:
+#: Tile shape of the tiled raster layout (pixels per tile row, column),
+#: shared by `tiled_raster_df` and `sample_raster_tiled`.
+TILE_H, TILE_W = 25, 30
+
+
+def tiled_raster_df(spark) -> DataFrame:
     """S10 scale path (SURVEY §1.1 "large raster"): the raster as a
     (tile_row, tile_col, vals) DataFrame — one row per tile, pixel
     values flattened row-major. This is the parquet landing format for
     rasters too big to broadcast; here the tiles are generated from the
     synthetic raster's closed form entirely in SQL expressions, so no
     array ever ships from the driver."""
-    assert RASTER_H % tile_h == 0 and RASTER_W % tile_w == 0
-    n_tc = RASTER_W // tile_w
-    n_tiles = (RASTER_H // tile_h) * n_tc
-    r = f"((id div {n_tc}) * {tile_h} + i div {tile_w})"
-    c = f"((id % {n_tc}) * {tile_w} + i % {tile_w})"
+    assert RASTER_H % TILE_H == 0 and RASTER_W % TILE_W == 0
+    n_tc = RASTER_W // TILE_W
+    n_tiles = (RASTER_H // TILE_H) * n_tc
+    r = f"((id div {n_tc}) * {TILE_H} + i div {TILE_W})"
+    c = f"((id % {n_tc}) * {TILE_W} + i % {TILE_W})"
     return spark.range(n_tiles).selectExpr(
         f"id div {n_tc} AS tile_row",
         f"id % {n_tc} AS tile_col",
-        f"transform(sequence(0, {tile_h * tile_w - 1}), i -> "
+        f"transform(sequence(0, {TILE_H * TILE_W - 1}), i -> "
         f"CASE WHEN ({r} * 31 + {c} * 13) % 97 = 0 THEN {RASTER_NODATA}D "
         f"ELSE (({r} * 37 + {c} * 17) % 1000) / 10.0 END) AS vals",
     )
@@ -286,44 +289,38 @@ def sample_raster_tiled(
     t: Affine,
     nodata: float,
     fill: float,
-    tile_h: int = 25,
-    tile_w: int = 30,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
     out: str = "raster_value",
-    broadcast_tiles: bool = True,
 ) -> DataFrame:
-    """S11/J7 over the tiled layout: points compute their clipped
+    """S11/J7 over the tiled layout: (lon, lat) points compute their clipped
     (row, col), derive (tile_row, tile_col) + within-tile offset, hash
     equi-join the tile table on the tile key, and `element_at` into the
     tile's value array — all JVM-side, the raster-lookup twin of the
     grid spatial join. Identical clip/nodata/mean-fill semantics to the
-    broadcast `sample_raster` path (tests assert bit-parity). At scale
-    drop ``broadcast_tiles`` and co-partition points and tiles on the
-    tile key."""
+    broadcast `sample_raster` path (tests assert bit-parity), into
+    ``out``. The tile table is broadcast; at scale points and
+    tiles would instead be co-partitioned on the tile key."""
     row = F.least(
         F.greatest(
-            F.floor((F.lit(t.y0) - F.col(lat_col)) / F.lit(t.dy)), F.lit(0)
+            F.floor((F.lit(t.y0) - F.col("lat")) / F.lit(t.dy)), F.lit(0)
         ),
         F.lit(RASTER_H - 1),
     ).cast("bigint")
     col = F.least(
         F.greatest(
-            F.floor((F.col(lon_col) - F.lit(t.x0)) / F.lit(t.dx)), F.lit(0)
+            F.floor((F.col("lon") - F.lit(t.x0)) / F.lit(t.dx)), F.lit(0)
         ),
         F.lit(RASTER_W - 1),
     ).cast("bigint")
     tagged = (
         df.withColumn("__r", row)
         .withColumn("__c", col)
-        .withColumn("tile_row", F.expr(f"__r div {tile_h}"))
-        .withColumn("tile_col", F.expr(f"__c div {tile_w}"))
-        .withColumn("__idx", (F.col("__r") % tile_h) * tile_w + F.col("__c") % tile_w)
+        .withColumn("tile_row", F.expr(f"__r div {TILE_H}"))
+        .withColumn("tile_col", F.expr(f"__c div {TILE_W}"))
+        .withColumn("__idx", (F.col("__r") % TILE_H) * TILE_W + F.col("__c") % TILE_W)
     )
-    rhs = F.broadcast(tiles) if broadcast_tiles else tiles
     v = F.element_at("vals", (F.col("__idx") + 1).cast("int"))
     return (
-        tagged.join(rhs, ["tile_row", "tile_col"])
+        tagged.join(F.broadcast(tiles), ["tile_row", "tile_col"])
         .withColumn(out, F.when(v == nodata, F.lit(fill)).otherwise(v))
         .drop("__r", "__c", "__idx", "tile_row", "tile_col", "vals")
     )

@@ -26,9 +26,9 @@ def write_parquet_checkpoint(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").parquet(path)
 
 
-def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
+def write_csv(df: DataFrame, path: str) -> None:
     """S15 compatibility sink (distributed; one file per partition)."""
-    df.write.mode("overwrite").option("header", str(header).lower()).csv(path)
+    df.write.mode("overwrite").option("header", "true").csv(path)
 
 
 def write_json_stats(df: DataFrame, path: str, max_rows: int = 10_000) -> dict:

@@ -223,13 +223,14 @@ def _ima_quantize(diff: int, step: int) -> int:
     return nib
 
 
-def _adpcm_encode(a: np.ndarray, data_bytes_per_ch: int = 128) -> tuple[bytes, int]:
+def _adpcm_encode(a: np.ndarray) -> tuple[bytes, int]:
     """Encode (n_frames, n_ch) int16-range samples; returns (payload,
     block_align). The final block is padded by repeating the last
-    sample (the fact chunk trims on decode)."""
+    sample (the fact chunk trims on decode). Each block carries 128
+    data bytes per channel."""
     n_frames, n_ch = a.shape
-    spb = data_bytes_per_ch * 2 + 1
-    block_align = n_ch * (4 + data_bytes_per_ch)
+    spb = 128 * 2 + 1
+    block_align = n_ch * (4 + 128)
     idx = [0] * n_ch
     blocks = []
     for bstart in range(0, n_frames, spb):

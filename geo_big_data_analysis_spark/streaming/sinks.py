@@ -23,15 +23,14 @@ def hourly_counts_upsert_stream(
     events: DataFrame,
     out_path: str,
     checkpoint_path: str,
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
 ):
     """Start (and return) a streaming query maintaining a parquet table
-    of hourly (n, sum_value) at ``out_path``, keyed/partitioned by
-    ``hour_key`` (epoch seconds of the hour start)."""
+    of hourly (n, sum_value) over ``ts`` (2-hour watermark) at
+    ``out_path``, keyed/partitioned by ``hour_key`` (epoch seconds of
+    the hour start)."""
     agg = (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, "1 hour").alias("w"))
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
         .select(
             F.unix_timestamp(F.col("w.start")).alias("hour_key"),

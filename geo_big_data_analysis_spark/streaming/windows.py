@@ -32,8 +32,8 @@ from ..sources.tables import parquet_schema
 
 
 @contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int = 8):
-    """Scope ``spark.sql.shuffle.partitions`` for a streaming drain.
+def scoped_shuffle_partitions(spark: SparkSession):
+    """Scope ``spark.sql.shuffle.partitions`` to 8 for a streaming drain.
 
     State-store instances = shuffle partitions × stateful operators,
     and their INIT cost dominates wall time at test scale factors
@@ -45,7 +45,7 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int = 8):
     setting is per-query state parallelism, not a global.
     """
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         yield
     finally:
@@ -94,34 +94,30 @@ def run_to_memory(stream_df: DataFrame, output_mode: str = "complete") -> DataFr
     return stream_df.sparkSession.table(name)
 
 
-def hourly_event_counts_stream(
-    events: DataFrame, ts_col: str = "ts", watermark: str = "2 hours"
-) -> DataFrame:
-    """A14 streamed — tumbling 1-hour event-time windows with watermark
-    (late rows beyond the watermark drop; with availableNow over files
-    nothing is late, so batch parity is exact)."""
+def hourly_event_counts_stream(events: DataFrame) -> DataFrame:
+    """A14 streamed — tumbling 1-hour windows over ``ts`` with a 2-hour
+    watermark (late rows beyond the watermark drop; with availableNow
+    over files nothing is late, so batch parity is exact)."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, "1 hour").alias("w"))
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("hour_start"), "n")
     )
 
 
-def sliding_counts_stream(
-    events: DataFrame, ts_col: str = "ts", watermark: str = "4 hours"
-) -> DataFrame:
-    """A14's sliding-window variant — 2-hour windows advancing every
-    hour, so each event lands in exactly two overlapping windows
-    (Spark expands the row per covering window before the windowed
-    hash agg; state = one row per open (window, event_type)). The
-    watermark closes a window once event time passes window_end +
-    watermark. Batch oracle: explode each event to its two covering
+def sliding_counts_stream(events: DataFrame) -> DataFrame:
+    """A14's sliding-window variant — 2-hour windows over ``ts``
+    advancing every hour, so each event lands in exactly two
+    overlapping windows (Spark expands the row per covering window
+    before the windowed hash agg; state = one row per open (window,
+    event_type)). The 4-hour watermark closes a window once event time
+    passes window_end + 4 hours. Batch oracle: explode each event to its two covering
     window starts and aggregate — the algebraic identity the sliding
     window implements incrementally."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, "2 hours", "1 hour").alias("w"), "event_type")
+        events.withWatermark("ts", "4 hours")
+        .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("value"), 4).alias("val_sum"),
@@ -130,25 +126,17 @@ def sliding_counts_stream(
     )
 
 
-def dedup_stream(
-    events: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def dedup_stream(events: DataFrame, keys: list[str]) -> DataFrame:
     """F2 streamed — exactly-once-per-key emission with bounded state:
     ``dropDuplicatesWithinWatermark`` keeps a key's fingerprint only
-    until the watermark passes it, so state size tracks the watermark
-    horizon, not the stream's lifetime (the unbounded-state version of
-    streaming dedup is a slow OOM at 100 TB/day)."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
+    until the 2-hour watermark on ``ts`` passes it, so state size
+    tracks the watermark horizon, not the stream's lifetime (the
+    unbounded-state version of streaming dedup is a slow OOM at
+    100 TB/day)."""
+    return events.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(keys)
 
 
-def user_running_stats_stream(
-    events: DataFrame,
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def user_running_stats_stream(events: DataFrame) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState`` (the
     engine's pattern for operators Structured Streaming lacks): per-user
     running event count, value sum, and distinct-event_type count kept
@@ -202,7 +190,7 @@ def user_running_stats_stream(
             }
         )
 
-    return events.select("user_id", "event_type", "value", ts_col).groupBy(
+    return events.select("user_id", "event_type", "value", "ts").groupBy(
         "user_id"
     ).applyInPandasWithState(
         update,
@@ -217,18 +205,17 @@ def enriched_counts_stream(
     events: DataFrame,
     dim: DataFrame,
     join_key: str,
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Stream–static enrichment join — the standard dimension-join
     pattern: the static side broadcasts into every micro-batch (no
-    state, no watermark needed on the dim), then a watermarked windowed
-    aggregation over the enriched stream. At scale the dim refresh is a
-    re-broadcast per batch, never a stateful stream-stream join."""
+    state, no watermark needed on the dim), then a windowed aggregation
+    over the enriched stream, watermarked 2 hours on ``ts``. At scale
+    the dim refresh is a re-broadcast per batch, never a stateful
+    stream-stream join."""
     return (
-        events.withWatermark(ts_col, watermark)
+        events.withWatermark("ts", "2 hours")
         .join(F.broadcast(dim), join_key, "inner")
-        .groupBy(F.window(ts_col, "1 hour").alias("w"), "category")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "category")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum(F.col("value") * F.col("weight")), 4).alias("wsum"),
@@ -241,14 +228,12 @@ def interval_join_stream(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    ts_col: str = "ts",
-    right_val_col: str = "value",
     max_delay_minutes: int = 120,
-    watermark: str = "4 hours",
     how: str = "inner",
 ) -> DataFrame:
     """Stream–stream join on ``key`` with an event-time interval
-    condition: a right row matches a left row when it lands in
+    condition on ``ts``: a right row (its ``value`` carried as
+    ``r_value``) matches a left row when it lands in
     ``[left_ts, left_ts + max_delay]`` (click→conversion attribution
     shape). ``how='left_outer'`` additionally emits never-matched left
     rows with NULL right columns — but only once the watermark proves
@@ -258,7 +243,8 @@ def interval_join_stream(
     at drain time; consumers must restrict to the closed region (see
     q_streaming_click_nopurchase).
 
-    The scale story is the state bound: both sides are watermarked and
+    The scale story is the state bound: both sides are watermarked
+    (4 hours) and
     the join condition carries explicit event-time bounds, so Spark
     derives a state-eviction horizon per side — buffered rows age out
     ``watermark + max_delay`` behind the stream head instead of
@@ -268,13 +254,13 @@ def interval_join_stream(
     what the oracle checks.
     """
     l = left.select(
-        F.col(key).alias("l_key"), F.col(ts_col).alias("l_ts")
-    ).withWatermark("l_ts", watermark)
+        F.col(key).alias("l_key"), F.col("ts").alias("l_ts")
+    ).withWatermark("l_ts", "4 hours")
     r = right.select(
         F.col(key).alias("r_key"),
-        F.col(ts_col).alias("r_ts"),
-        F.col(right_val_col).alias("r_value"),
-    ).withWatermark("r_ts", watermark)
+        F.col("ts").alias("r_ts"),
+        F.col("value").alias("r_value"),
+    ).withWatermark("r_ts", "4 hours")
     cond = (
         (F.col("l_key") == F.col("r_key"))
         & (F.col("r_ts") >= F.col("l_ts"))
@@ -290,18 +276,17 @@ def interval_join_stream(
 
 def session_window_stream(
     events: DataFrame,
-    ts_col: str = "ts",
     gap_minutes: float = 30.0,
     keys: list[str] | None = None,
-    watermark: str = "2 hours",
 ) -> DataFrame:
-    """W2 streamed — native session windows per key: session count and
-    per-session event counts without the batch global-window sort."""
+    """W2 streamed — native session windows over ``ts`` per key (2-hour
+    watermark): session count and per-session event counts without the
+    batch global-window sort."""
     keys = keys or []
     gap = f"{int(gap_minutes * 60)} seconds"
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(*keys, F.session_window(ts_col, gap).alias("sw"))
+        events.withWatermark("ts", "2 hours")
+        .groupBy(*keys, F.session_window("ts", gap).alias("sw"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             *keys,

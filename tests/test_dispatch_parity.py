@@ -35,9 +35,11 @@ DISPATCHING = (
     "isochrone_poi_access",
     "kcenter_coreset_embeddings",
     "kcore_mod",
+    "kdist_curve_stats",
     "kmeans_event_clusters",
     "lab2_pipeline",
     "label_propagation_mod",
+    "lisa_moran_events",
     "lisa_perm_band",
     "lisa_perm_band_dist",
     "lloyd_kmeans_clusters",

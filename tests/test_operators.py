@@ -510,7 +510,7 @@ def test_rolling_wau_bounds_and_bruteforce(spark, sf_dir):
         assert len(users) == r.wau, day
 
 
-def test_knn_join_dispatch_and_completion(spark):
+def test_knn_join_dispatch_and_completion(spark, force_distributed):
     """knn_join (VERDICT r1 #2): brute-force below the row threshold,
     grid + exactness-completion above. A far-outlier cluster whose kth
     neighbors lie outside the 3x3 cell ring forces the completion pass;
@@ -524,19 +524,20 @@ def test_knn_join_dispatch_and_completion(spark):
     pts += [(1000, 50.0, 50.0), (1001, 50.3, 50.3)]
     df = spark.createDataFrame(pts, ["id", "x", "y"])
     expected = _brute_knn(pts, 3)
-    # force the grid path by dropping the dispatch threshold to 0
-    got = knn.knn_join(df, df, 3, bruteforce_max_rows=0)
+    # small input -> brute-force path
+    got_small = knn.knn_join(df, df, 3)
+    by_q2 = {}
+    for r in got_small.collect():
+        by_q2.setdefault(r.query_id, []).append((r.knn_rank, r.neighbor_id))
+    # forced past the size dispatch -> grid + completion path
+    force_distributed()
+    got = knn.knn_join(df, df, 3)
     by_q = {}
     for r in got.collect():
         by_q.setdefault(r.query_id, []).append((r.knn_rank, r.neighbor_id))
     assert set(by_q) == set(expected)
     for q, nbrs in expected.items():
         assert [n for _, n in sorted(by_q[q])] == nbrs
-    # small input + default threshold -> brute-force path, same answer
-    got_small = knn.knn_join(df, df, 3)
-    by_q2 = {}
-    for r in got_small.collect():
-        by_q2.setdefault(r.query_id, []).append((r.knn_rank, r.neighbor_id))
     assert by_q2 == by_q
 
 

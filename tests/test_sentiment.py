@@ -94,7 +94,7 @@ def test_pattern_scores_match_textblob_pinned_phrases(spark):
     entries PATTERN_LEXICON reproduces (pattern-en sense averages):
     intensifier multiply+clamp, negation x-0.5, negation-inverted
     intensity, unknown-word chain break, empty -> (0, 0)."""
-    from geo_big_data_analysis_spark.functions.sentiment import pattern_scores
+    from geo_big_data_analysis_spark.functions.sentiment import with_pattern_scores
 
     cases = [
         ("good", 0.7, 0.6),
@@ -112,8 +112,8 @@ def test_pattern_scores_match_textblob_pinned_phrases(spark):
     ]
     df = spark.createDataFrame([(i, t) for i, (t, _, _) in enumerate(cases)], "id bigint, text string")
     out = {
-        r["id"]: (r["sc"]["polarity"], r["sc"]["subjectivity"])
-        for r in df.select("id", pattern_scores("text").alias("sc")).collect()
+        r["id"]: (r["_sc"]["polarity"], r["_sc"]["subjectivity"])
+        for r in with_pattern_scores(df, "text").select("id", "_sc").collect()
     }
     for i, (text, ep, es) in enumerate(cases):
         gp, gs = out[i]
@@ -183,8 +183,6 @@ def test_pattern_fold_vs_independent_reimplementation(spark):
     independent Python walk of the same published rules to 1e-9."""
     import itertools
 
-    from geo_big_data_analysis_spark.functions.sentiment import pattern_scores
-
     words = [
         "good", "bad", "terrible", "delicious", "slow", "charming",
         "cozy", "rude", "bland", "nice", "dirty", "sweet",
@@ -205,11 +203,11 @@ def test_pattern_fold_vs_independent_reimplementation(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(phrases)], "id bigint, text string"
     )
-    from geo_big_data_analysis_spark.functions.sentiment import pattern_scores
+    from geo_big_data_analysis_spark.functions.sentiment import with_pattern_scores
 
     got = {
-        r["id"]: (r["sc"]["polarity"], r["sc"]["subjectivity"])
-        for r in df.select("id", pattern_scores("text").alias("sc")).collect()
+        r["id"]: (r["_sc"]["polarity"], r["_sc"]["subjectivity"])
+        for r in with_pattern_scores(df, "text").select("id", "_sc").collect()
     }
     for i, text in enumerate(phrases):
         ep, es = _py_pattern_score(text.split())
@@ -219,32 +217,6 @@ def test_pattern_fold_vs_independent_reimplementation(spark):
 
 
 # --- broadcast-borne lexicon (VERDICT r5 "wrong" #1) -----------------------
-
-def test_with_pattern_scores_matches_literal_path(spark):
-    """The 1-row broadcast-join lexicon must produce bit-identical
-    scores to the baked-literal path."""
-    from geo_big_data_analysis_spark.functions.sentiment import (
-        pattern_scores,
-        with_pattern_scores,
-    )
-
-    phrases = [
-        "very good", "not very good", "good food terrible staff",
-        "the weather report arrived", "", "not not good",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(phrases)], "id bigint, text string"
-    )
-    lit = {
-        r["id"]: (r["sc"]["polarity"], r["sc"]["subjectivity"])
-        for r in df.select("id", pattern_scores("text").alias("sc")).collect()
-    }
-    bc = {
-        r["id"]: (r["_sc"]["polarity"], r["_sc"]["subjectivity"])
-        for r in with_pattern_scores(df, "text").select("id", "_sc").collect()
-    }
-    assert lit == bc
-
 
 def test_broadcast_lexicon_plan_size_survives_tier_add(spark, monkeypatch):
     """Plan size must be O(1) in lexicon size: adding 500 lexicon

@@ -1,6 +1,8 @@
 """Surface-count generator — the single source of truth for the
 "N registry queries, M oracle-checked, K rows-only" claims in
-README.md and COVERAGE.md.
+README.md and COVERAGE.md, and for the package-size figures quoted in
+CHANGES.md: code lines (non-blank, not comments, not docstrings) and
+defaulted parameters of the package's top-level functions.
 
 The counts drifted in rounds 2-3 because both documents hand-held
 them (VERDICT r3 "What's wrong" #3). This script derives them from
@@ -14,21 +16,77 @@ Usage:
 
 from __future__ import annotations
 
+import ast
+import io
 import os
 import re
 import sys
+import tokenize
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from geo_big_data_analysis_spark.plans.registry import REGISTRY  # noqa: E402
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = "geo_big_data_analysis_spark"
 
 
 def counts() -> dict[str, int]:
     total = len(REGISTRY)
     oracle = sum(1 for _, sql in REGISTRY.values() if sql is not None)
     return {"total": total, "oracle": oracle, "rows_only": total - oracle}
+
+
+_NON_CODE = {
+    tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE, tokenize.INDENT,
+    tokenize.DEDENT, tokenize.ENCODING, tokenize.ENDMARKER,
+}
+
+
+def code_lines(src: str) -> int:
+    """Lines covered by a code token (a multi-line string counts every
+    line it spans), less module, class and function docstrings."""
+    lines: set[int] = set()
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type not in _NON_CODE:
+            lines.update(range(tok.start[0], tok.end[0] + 1))
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+            first = node.body[0] if node.body else None
+            if (
+                isinstance(first, ast.Expr)
+                and isinstance(first.value, ast.Constant)
+                and isinstance(first.value.value, str)
+            ):
+                lines -= set(range(first.lineno, first.end_lineno + 1))
+    return len(lines)
+
+
+def defaulted_params(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> list[str]:
+    """Names of the parameters of ``fn`` that carry a default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    names = [p.arg for p in pos[len(pos) - len(a.defaults):]] if a.defaults else []
+    return names + [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+
+
+def size_counts() -> dict[str, int]:
+    """Package code lines and defaulted parameters of top-level
+    functions."""
+    lines = params = 0
+    for base, _dirs, files in os.walk(os.path.join(ROOT, PACKAGE)):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            with open(os.path.join(base, name), encoding="utf-8") as fh:
+                src = fh.read()
+            lines += code_lines(src)
+            params += sum(
+                len(defaulted_params(n))
+                for n in ast.parse(src).body
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            )
+    return {"code_lines": lines, "defaulted_params": params}
 
 
 def _patch(path: str, pattern: str, repl: str) -> bool:
@@ -72,6 +130,11 @@ def main() -> int:
     print(
         f"registry queries: {c['total']}  oracle-checked: {c['oracle']}  "
         f"rows-only: {c['rows_only']}"
+    )
+    z = size_counts()
+    print(
+        f"package code lines: {z['code_lines']}  "
+        f"defaulted parameters: {z['defaulted_params']}"
     )
     if len(sys.argv) > 1 and sys.argv[1] == "write":
         write(c)

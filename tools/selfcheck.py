@@ -31,6 +31,42 @@ from geo_big_data_analysis_spark.plans.registry import REGISTRY  # noqa: E402
 from geo_big_data_analysis_spark.session import TPCH_TABLES, get_spark  # noqa: E402
 
 
+def compare(sdf, odf) -> list[str]:
+    """The oracle comparison of a Spark result with its DuckDB oracle
+    (pandas frames): row count, column names, then the
+    (column-name-sorted, row-sorted) values, exact with NaN-aware
+    floats. Returns the mismatch messages, [] on a match."""
+    msgs: list[str] = []
+    if len(sdf) != len(odf):
+        msgs.append(f"rowcount spark={len(sdf)} oracle={len(odf)}")
+    s_cols, o_cols = sorted(sdf.columns), sorted(odf.columns)
+    if s_cols != o_cols:
+        msgs.append(f"cols spark={s_cols} oracle={o_cols}")
+    if msgs:
+        return msgs
+    a = sdf[s_cols].sort_values(s_cols).reset_index(drop=True)
+    b = odf[o_cols].sort_values(o_cols).reset_index(drop=True)
+    n_bad, max_rel = 0, 0.0
+    for c in s_cols:
+        for x, y in zip(a[c].tolist(), b[c].tolist()):
+            if x is None and y is None:
+                continue
+            if isinstance(x, float) or isinstance(y, float):
+                if x is None or y is None or (math.isnan(x) != math.isnan(y)):
+                    n_bad += 1
+                    continue
+                if math.isnan(x):
+                    continue
+                if x != y:
+                    max_rel = max(max_rel, abs(x - y) / max(abs(x), abs(y), 1e-300))
+                    n_bad += 1
+            elif x != y:
+                n_bad += 1
+    if n_bad:
+        msgs.append(f"{n_bad} value mismatches (max_rel={max_rel:.2e})")
+    return msgs
+
+
 def run(sf_dir: str, only: list[str] | None = None) -> int:
     spark = get_spark("selfcheck")
     con = duckdb.connect()
@@ -61,41 +97,8 @@ def run(sf_dir: str, only: list[str] | None = None) -> int:
             failures += 1
             continue
 
-        ok = True
-        msgs = []
-        if len(sdf) != len(odf):
-            ok = False
-            msgs.append(f"rowcount spark={len(sdf)} oracle={len(odf)}")
-        s_cols, o_cols = sorted(sdf.columns), sorted(odf.columns)
-        if s_cols != o_cols:
-            ok = False
-            msgs.append(f"cols spark={s_cols} oracle={o_cols}")
-        if ok:
-            a = sdf[s_cols].sort_values(s_cols).reset_index(drop=True)
-            b = odf[o_cols].sort_values(o_cols).reset_index(drop=True)
-            n_bad = 0
-            max_rel = 0.0
-            for c in s_cols:
-                av, bv = a[c].tolist(), b[c].tolist()
-                for x, y in zip(av, bv):
-                    if x is None and y is None:
-                        continue
-                    if isinstance(x, float) or isinstance(y, float):
-                        if x is None or y is None or (math.isnan(x) != math.isnan(y)):
-                            n_bad += 1
-                            continue
-                        if math.isnan(x):
-                            continue
-                        if x != y:
-                            rel = abs(x - y) / max(abs(x), abs(y), 1e-300)
-                            max_rel = max(max_rel, rel)
-                            n_bad += 1
-                    elif x != y:
-                        n_bad += 1
-            if n_bad:
-                ok = False
-                msgs.append(f"{n_bad} value mismatches (max_rel={max_rel:.2e})")
-        if ok:
+        msgs = compare(sdf, odf)
+        if not msgs:
             print(f"PASS {name}: rows={len(sdf)} [{spark_s:.1f}s]")
         else:
             print(f"FAIL {name}: {'; '.join(msgs)}")

@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import math
 import os
 import sys
 import threading
@@ -43,6 +42,7 @@ import duckdb  # noqa: E402
 
 from geo_big_data_analysis_spark.plans.registry import REGISTRY  # noqa: E402
 from geo_big_data_analysis_spark.session import TPCH_TABLES, get_spark  # noqa: E402
+from selfcheck import compare  # noqa: E402
 
 TIMEOUT_S = int(os.environ.get("SF1CHECK_TIMEOUT_S", "300"))
 GOLDEN_PATH = os.path.join(os.path.dirname(__file__), "SF1_GOLDENS.json")
@@ -214,40 +214,6 @@ def _value_matrix_hash(df) -> str:
     return h.hexdigest()
 
 
-def _compare(sdf, odf) -> list[str]:
-    """selfcheck's compare semantics: rowcount, columns, then exact
-    values (float NaN-aware)."""
-    msgs: list[str] = []
-    if len(sdf) != len(odf):
-        msgs.append(f"rowcount spark={len(sdf)} oracle={len(odf)}")
-    s_cols, o_cols = sorted(sdf.columns), sorted(odf.columns)
-    if s_cols != o_cols:
-        msgs.append(f"cols spark={s_cols} oracle={o_cols}")
-    if msgs:
-        return msgs
-    a = sdf[s_cols].sort_values(s_cols).reset_index(drop=True)
-    b = odf[o_cols].sort_values(o_cols).reset_index(drop=True)
-    n_bad, max_rel = 0, 0.0
-    for c in s_cols:
-        for x, y in zip(a[c].tolist(), b[c].tolist()):
-            if x is None and y is None:
-                continue
-            if isinstance(x, float) or isinstance(y, float):
-                if x is None or y is None or (math.isnan(x) != math.isnan(y)):
-                    n_bad += 1
-                    continue
-                if math.isnan(x):
-                    continue
-                if x != y:
-                    max_rel = max(max_rel, abs(x - y) / max(abs(x), abs(y), 1e-300))
-                    n_bad += 1
-            elif x != y:
-                n_bad += 1
-    if n_bad:
-        msgs.append(f"{n_bad} value mismatches (max_rel={max_rel:.2e})")
-    return msgs
-
-
 def _with_timeout(fn, cancel, timeout_s: float):
     """Run fn(); fire cancel() from a watchdog thread at timeout —
     REPEATEDLY (every 5 s) until fn returns, because iterative queries
@@ -394,7 +360,7 @@ def run(sf_dir: str, only: list[str] | None = None) -> int:
             print(f"{tag} {name}: duckdb: {str(o_err)[:200]} [{oracle_s:.1f}s]")
             failures += 1
             continue
-        msgs = _compare(sdf, odf)
+        msgs = compare(sdf, odf)
         if msgs:
             print(f"FAIL {name}: {'; '.join(msgs)}")
             failures += 1

@@ -136,7 +136,7 @@ def check(name: str, spark, sf_dir: str, full_sdf, ctx: dict) -> list[str]:
     full-sf1 Spark output (pandas) the sweep already computed; ``ctx``
     caches the sample dir, its doc_id set, and per-query oracle frames
     across calls within one sweep. Returns [] on pass."""
-    from sf1check import _compare  # local import: avoid a cycle at module load
+    from selfcheck import compare
 
     if "sample_dir" not in ctx:
         ctx["sample_dir"] = ensure_sample_dir(sf_dir)
@@ -160,7 +160,7 @@ def check(name: str, spark, sf_dir: str, full_sdf, ctx: dict) -> list[str]:
 
     # check 1: engine-on-sample vs oracle-on-sample (full cross-engine)
     sdf_sample = REGISTRY[name][0](spark, sample_dir).toPandas()
-    for m in _compare(sdf_sample, odf):
+    for m in compare(sdf_sample, odf):
         msgs.append(f"engine-on-sample: {m}")
 
     # check 2 (pair queries): the FULL run restricted to sample
@@ -170,7 +170,7 @@ def check(name: str, spark, sf_dir: str, full_sdf, ctx: dict) -> list[str]:
         restricted = full_sdf[
             full_sdf["doc_a"].isin(ids) & full_sdf["doc_b"].isin(ids)
         ].reset_index(drop=True)
-        for m in _compare(restricted, odf):
+        for m in compare(restricted, odf):
             msgs.append(f"full-run-restricted: {m}")
     return msgs
 
