@@ -30,6 +30,8 @@ import struct
 
 import numpy as np
 
+from .bitstream import MsbReader, MsbWriter
+
 _BLOCKSIZE_FIXED = {1: 192, 2: 576, 3: 1152, 4: 2304, 5: 4608,
                     8: 256, 9: 512, 10: 1024, 11: 2048,
                     12: 4096, 13: 8192, 14: 16384, 15: 32768}
@@ -63,69 +65,7 @@ def _crc16(data: bytes) -> int:
     return crc
 
 
-class _BitReader:
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.byte = pos
-        self.bit = 0
-
-    def read(self, n: int) -> int:
-        if self.byte + (self.bit + n + 7) // 8 > len(self.data):
-            raise ValueError("truncated FLAC stream (CRC would not verify)")
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | ((self.data[self.byte] >> (7 - self.bit)) & 1)
-            self.bit += 1
-            if self.bit == 8:
-                self.bit = 0
-                self.byte += 1
-        return v
-
-    def read_signed(self, n: int) -> int:
-        v = self.read(n)
-        return v - (1 << n) if v >= (1 << (n - 1)) else v
-
-    def read_unary(self) -> int:
-        q = 0
-        while self.read(1) == 0:
-            q += 1
-        return q
-
-    def align(self):
-        if self.bit:
-            self.bit = 0
-            self.byte += 1
-
-
-class _BitWriter:
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, n: int):
-        self.acc = (self.acc << n) | (value & ((1 << n) - 1))
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def write_unary(self, q: int):
-        for _ in range(q):
-            self.write(0, 1)
-        self.write(1, 1)
-
-    def align(self):
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def bytes(self) -> bytes:
-        assert self.nbits == 0
-        return bytes(self.buf)
-
-
-def _read_utf8_number(r: _BitReader) -> int:
+def _read_utf8_number(r: MsbReader) -> int:
     """Frame/sample number: UTF-8-style variable-length big-endian."""
     b0 = r.read(8)
     if b0 < 0x80:
@@ -141,7 +81,7 @@ def _read_utf8_number(r: _BitReader) -> int:
     return v
 
 
-def _write_utf8_number(w: _BitWriter, v: int):
+def _write_utf8_number(w: MsbWriter, v: int):
     if v < 0x80:
         w.write(v, 8)
         return
@@ -156,7 +96,7 @@ def _write_utf8_number(w: _BitWriter, v: int):
         w.write(0x80 | ((v >> (6 * i)) & 0x3F), 8)
 
 
-def _decode_residual(r: _BitReader, blocksize: int, order: int) -> np.ndarray:
+def _decode_residual(r: MsbReader, blocksize: int, order: int) -> np.ndarray:
     method = r.read(2)
     if method > 1:
         raise NotImplementedError(f"reserved residual coding method {method}")
@@ -172,31 +112,31 @@ def _decode_residual(r: _BitReader, blocksize: int, order: int) -> np.ndarray:
         if k == escape:
             raw = r.read(5)
             for i in range(n):
-                out[pos + i] = r.read_signed(raw) if raw else 0
+                out[pos + i] = r.signed(raw) if raw else 0
         else:
             for i in range(n):
-                q = r.read_unary()
+                q = r.unary()
                 folded = (q << k) | r.read(k)
                 out[pos + i] = (folded >> 1) ^ -(folded & 1)
         pos += n
     return out
 
 
-def _decode_subframe(r: _BitReader, blocksize: int, bps: int) -> np.ndarray:
+def _decode_subframe(r: MsbReader, blocksize: int, bps: int) -> np.ndarray:
     if r.read(1):
         raise ValueError("subframe sync bit set")
     stype = r.read(6)
     wasted = 0
     if r.read(1):
-        wasted = 1 + r.read_unary()
+        wasted = 1 + r.unary()
         bps -= wasted
     if stype == 0:  # CONSTANT
-        s = np.full(blocksize, r.read_signed(bps), dtype=np.int64)
+        s = np.full(blocksize, r.signed(bps), dtype=np.int64)
     elif stype == 1:  # VERBATIM
-        s = np.array([r.read_signed(bps) for _ in range(blocksize)], dtype=np.int64)
+        s = np.array([r.signed(bps) for _ in range(blocksize)], dtype=np.int64)
     elif 8 <= stype <= 12:  # FIXED, order = stype - 8
         order = stype - 8
-        warm = [r.read_signed(bps) for _ in range(order)]
+        warm = [r.signed(bps) for _ in range(order)]
         res = _decode_residual(r, blocksize, order)
         s = np.empty(blocksize, dtype=np.int64)
         s[:order] = warm
@@ -206,16 +146,16 @@ def _decode_subframe(r: _BitReader, blocksize: int, bps: int) -> np.ndarray:
             s[i] = res[i - order] + pred
     elif stype >= 32:  # LPC, order = stype - 31
         order = stype - 31
-        warm = [r.read_signed(bps) for _ in range(order)]
+        warm = [r.signed(bps) for _ in range(order)]
         precision = r.read(4) + 1
         if precision == 16:
             raise ValueError("invalid LPC precision escape")
-        shift = r.read_signed(5)
+        shift = r.signed(5)
         if shift < 0:
             # Spec-reserved: RFC 9639 §9.2.6 says the shift is signed on
             # the wire but MUST be non-negative.
             raise ValueError(f"invalid negative LPC shift {shift}")
-        coefs = [r.read_signed(precision) for _ in range(order)]
+        coefs = [r.signed(precision) for _ in range(order)]
         res = _decode_residual(r, blocksize, order)
         s = np.empty(blocksize, dtype=np.int64)
         s[:order] = warm
@@ -253,12 +193,13 @@ def read_flac(data: bytes) -> tuple[np.ndarray, int]:
         raise ValueError("FLAC missing STREAMINFO")
 
     out_parts: list[np.ndarray] = []
-    while pos < len(data):
-        frame_start = pos
-        r = _BitReader(data, pos)
+    frames = data[pos:]
+    r = MsbReader(frames, "FLAC stream (CRC would not verify)")
+    while r.pos < r.end:
+        frame_start = r.pos >> 3
         sync = r.read(14)
         if sync != 0x3FFE:
-            raise ValueError(f"bad frame sync at byte {pos}")
+            raise ValueError(f"bad frame sync at byte {pos + frame_start}")
         if r.read(1):
             raise ValueError("frame reserved bit set")
         blocking = r.read(1)
@@ -286,7 +227,7 @@ def read_flac(data: bytes) -> tuple[np.ndarray, int]:
         bps = info["bps"] if ss_code == 0 else _SAMPLE_SIZES[ss_code]
         r.align()
         hdr_crc = r.read(8)
-        if _crc8(data[frame_start : r.byte - 1]) != hdr_crc:
+        if _crc8(frames[frame_start : (r.pos >> 3) - 1]) != hdr_crc:
             raise ValueError("frame header CRC-8 mismatch")
 
         if ch_code < 8:
@@ -309,10 +250,9 @@ def read_flac(data: bytes) -> tuple[np.ndarray, int]:
             raise NotImplementedError(f"reserved channel assignment {ch_code}")
         r.align()
         frame_crc = r.read(16)
-        if _crc16(data[frame_start : r.byte - 2]) != frame_crc:
+        if _crc16(frames[frame_start : (r.pos >> 3) - 2]) != frame_crc:
             raise ValueError("frame CRC-16 mismatch")
         out_parts.append(np.stack(subs, axis=1))
-        pos = r.byte
     samples = np.concatenate(out_parts, axis=0) if out_parts else np.empty((0, info["channels"]), dtype=np.int64)
     if info["total"]:
         samples = samples[: info["total"]]
@@ -329,14 +269,14 @@ def _best_rice_k(res: np.ndarray) -> int:
     return best_k
 
 
-def _write_residual(w: _BitWriter, res: np.ndarray):
+def _write_residual(w: MsbWriter, res: np.ndarray):
     w.write(0, 2)   # Rice method 0 (4-bit params)
     w.write(0, 4)   # partition order 0 — one partition
     k = _best_rice_k(res)
     w.write(k, 4)
     for v in res:
         folded = (int(v) << 1) ^ (int(v) >> 63)  # zigzag
-        w.write_unary(folded >> k)
+        w.unary(folded >> k)
         if k:
             w.write(folded & ((1 << k) - 1), k)
 
@@ -366,7 +306,7 @@ def write_flac(samples: np.ndarray, rate: int, bps: int = 16,
         bs = len(block)
         if bs == 0:
             break
-        w = _BitWriter()
+        w = MsbWriter()
         w.write(0x3FFE, 14)
         w.write(0, 1)
         w.write(0, 1)                  # fixed blocksize
@@ -381,11 +321,7 @@ def write_flac(samples: np.ndarray, rate: int, bps: int = 16,
         w.write(bs - 1, 16)
         if sr_code == 14:
             w.write(rate // 10, 16)
-        w.align()
-        hdr = w.bytes()
-        w2 = _BitWriter()
-        w2.buf = bytearray(hdr)
-        w2.buf.append(_crc8(hdr))
+        w.write(_crc8(w.getvalue()), 8)  # the header is whole bytes
         for c in range(n_ch):
             s = block[:, c]
             # pick the fixed order with the smallest residual magnitude
@@ -399,13 +335,12 @@ def write_flac(samples: np.ndarray, rate: int, bps: int = 16,
                 if cost < best[2]:
                     best = (order, cur, cost)
             order, res, _ = best
-            w2.write(0, 1)
-            w2.write(8 + order, 6)     # FIXED subframe
-            w2.write(0, 1)             # no wasted bits
+            w.write(0, 1)
+            w.write(8 + order, 6)     # FIXED subframe
+            w.write(0, 1)             # no wasted bits
             for i in range(order):
-                w2.write(int(s[i]), bps)
-            _write_residual(w2, res)
-        w2.align()
-        frame = w2.bytes()
+                w.write(int(s[i]), bps)
+            _write_residual(w, res)
+        frame = w.getvalue()
         out += frame + struct.pack(">H", _crc16(frame))
     return bytes(out)

@@ -31,6 +31,8 @@ import struct
 
 import numpy as np
 
+from .bitstream import LsbReader, LsbWriter
+
 GIF_MAGICS = (b"GIF87a", b"GIF89a")
 
 
@@ -44,21 +46,7 @@ def _lzw_decode(min_code_size: int, data: bytes, n_expected: int) -> bytes:
     clear = 1 << min_code_size
     eoi = clear + 1
     out = bytearray()
-    # bit reader, LSB-first
-    bitpos = 0
-    total_bits = len(data) * 8
-
-    def read_code(width: int) -> int | None:
-        nonlocal bitpos
-        if bitpos + width > total_bits:
-            return None
-        v = 0
-        for i in range(width):
-            byte = data[(bitpos + i) >> 3]
-            if byte >> ((bitpos + i) & 7) & 1:
-                v |= 1 << i
-        bitpos += width
-        return v
+    br = LsbReader(data, "GIF LZW data")
 
     def reset():
         table = [bytes([i]) for i in range(clear)] + [b"", b""]
@@ -66,9 +54,10 @@ def _lzw_decode(min_code_size: int, data: bytes, n_expected: int) -> bytes:
 
     table, width = reset()
     prev: bytes | None = None
-    while True:
-        code = read_code(width)
-        if code is None or code == eoi:
+    # a stream whose data ends without EOI stops there
+    while br.end - br.pos >= width:
+        code = br.read(width)
+        if code == eoi:
             break
         if code == clear:
             table, width = reset()
@@ -94,18 +83,8 @@ def _lzw_decode(min_code_size: int, data: bytes, n_expected: int) -> bytes:
 def _lzw_encode(min_code_size: int, pixels: bytes) -> bytes:
     clear = 1 << min_code_size
     eoi = clear + 1
-    out = bytearray()
-    bitbuf = 0
-    bitcnt = 0
-
-    def emit(code: int, width: int):
-        nonlocal bitbuf, bitcnt
-        bitbuf |= code << bitcnt
-        bitcnt += width
-        while bitcnt >= 8:
-            out.append(bitbuf & 0xFF)
-            bitbuf >>= 8
-            bitcnt -= 8
+    bw = LsbWriter()
+    emit = bw.write
 
     def reset():
         return {bytes([i]): i for i in range(clear)}, eoi + 1, min_code_size + 1
@@ -130,9 +109,7 @@ def _lzw_encode(min_code_size: int, pixels: bytes) -> bytes:
     if prev:
         emit(table[prev], width)
     emit(eoi, width)
-    if bitcnt:
-        out.append(bitbuf & 0xFF)
-    return bytes(out)
+    return bw.getvalue()
 
 
 def _sub_blocks(data: bytes, pos: int) -> tuple[bytes, int]:

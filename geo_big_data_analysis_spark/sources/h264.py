@@ -35,90 +35,7 @@ from __future__ import annotations
 
 import numpy as np
 
-# ------------------------------------------------------------ bit I/O
-
-
-class _BitReader:
-    """MSB-first bit reader over an RBSP (emulation bytes removed)."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def read(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            byte = self.pos >> 3
-            if byte >= len(self.data):
-                raise ValueError("H.264 bitstream truncated")
-            v = (v << 1) | ((self.data[byte] >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return v
-
-    def ue(self) -> int:
-        """Unsigned exp-Golomb."""
-        zeros = 0
-        while self.read(1) == 0:
-            zeros += 1
-            if zeros > 31:
-                raise ValueError("invalid exp-Golomb code")
-        return (1 << zeros) - 1 + (self.read(zeros) if zeros else 0)
-
-    def se(self) -> int:
-        """Signed exp-Golomb: k -> (-1)^(k+1) * ceil(k/2)."""
-        k = self.ue()
-        return (k + 1) // 2 if k % 2 else -(k // 2)
-
-    def byte_align(self) -> None:
-        while self.pos & 7:
-            if self.read(1) != 0:
-                raise ValueError("nonzero pcm_alignment bit")
-
-    def bytes_at(self, n: int) -> bytes:
-        assert self.pos % 8 == 0
-        byte = self.pos >> 3
-        if byte + n > len(self.data):
-            raise ValueError("H.264 bitstream truncated in PCM samples")
-        self.pos += 8 * n
-        return self.data[byte : byte + n]
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.nbits = 0
-
-    def write(self, v: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            if self.nbits % 8 == 0:
-                self.buf.append(0)
-            if (v >> i) & 1:
-                self.buf[-1] |= 1 << (7 - (self.nbits % 8))
-            self.nbits += 1
-
-    def ue(self, v: int) -> None:
-        k = v + 1
-        n = k.bit_length()
-        self.write(0, n - 1)
-        self.write(k, n)
-
-    def se(self, v: int) -> None:
-        self.ue(2 * v - 1 if v > 0 else -2 * v)
-
-    def byte_align_zero(self) -> None:
-        while self.nbits % 8:
-            self.write(0, 1)
-
-    def raw(self, b: bytes) -> None:
-        assert self.nbits % 8 == 0
-        self.buf.extend(b)
-        self.nbits += 8 * len(b)
-
-    def rbsp_trailing(self) -> bytes:
-        self.write(1, 1)  # rbsp_stop_one_bit
-        self.byte_align_zero()
-        return bytes(self.buf)
-
+from .bitstream import MsbReader, MsbWriter
 
 # ------------------------------------------------- Annex-B framing
 
@@ -200,7 +117,7 @@ def parse_sps(rbsp: bytes) -> dict:
     """Sequence parameter set → dims + the fields slice decode needs.
     Supports baseline/main/extended (profile_idc < 100; the high-
     profile chroma/bit-depth extension block is out of scope here)."""
-    br = _BitReader(rbsp)
+    br = MsbReader(rbsp, "H.264 bitstream")
     profile = br.read(8)
     br.read(8)  # constraint flags + reserved
     level = br.read(8)
@@ -249,7 +166,7 @@ def parse_sps(rbsp: bytes) -> dict:
 
 
 def parse_pps(rbsp: bytes) -> dict:
-    br = _BitReader(rbsp)
+    br = MsbReader(rbsp, "H.264 bitstream")
     pps_id = br.ue()
     sps_id = br.ue()
     entropy_cabac = br.read(1)
@@ -279,12 +196,18 @@ def parse_pps(rbsp: bytes) -> dict:
 # ------------------------------------------------------ slice decode
 
 
+def _pcm_samples(br: MsbReader, side: int) -> np.ndarray:
+    """One side×side block of byte-aligned 8-bit PCM samples."""
+    n = side * side
+    return np.frombuffer(br.read(8 * n).to_bytes(n, "big"), dtype=np.uint8).reshape(side, side)
+
+
 def _decode_islice(
     rbsp: bytes, sps: dict, pps: dict, idr: bool
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """I-slice decode covering the I_PCM macroblock path. Returns
     (luma HxW, cb H/2xW/2, cr H/2xW/2)."""
-    br = _BitReader(rbsp)
+    br = MsbReader(rbsp, "H.264 bitstream")
     first_mb = br.ue()
     slice_type = br.ue()
     if slice_type % 5 != 2:  # 2/7 = I
@@ -323,18 +246,13 @@ def _decode_islice(
                 "decode out of scope (install libav/PyAV); I_PCM "
                 "macroblocks decode natively"
             )
-        br.byte_align()
+        if br.align():
+            raise ValueError("nonzero pcm_alignment bit")
         my, mx = (mb // wmb) * 16, (mb % wmb) * 16
-        luma[my : my + 16, mx : mx + 16] = np.frombuffer(
-            br.bytes_at(256), dtype=np.uint8
-        ).reshape(16, 16)
+        luma[my : my + 16, mx : mx + 16] = _pcm_samples(br, 16)
         cy, cx = my // 2, mx // 2
-        cb[cy : cy + 8, cx : cx + 8] = np.frombuffer(
-            br.bytes_at(64), dtype=np.uint8
-        ).reshape(8, 8)
-        cr[cy : cy + 8, cx : cx + 8] = np.frombuffer(
-            br.bytes_at(64), dtype=np.uint8
-        ).reshape(8, 8)
+        cb[cy : cy + 8, cx : cx + 8] = _pcm_samples(br, 8)
+        cr[cy : cy + 8, cx : cx + 8] = _pcm_samples(br, 8)
     h, w = sps["height"], sps["width"]
     return luma[:h, :w], cb[: h // 2, : w // 2], cr[: h // 2, : w // 2]
 
@@ -371,6 +289,12 @@ def _nal(nal_type: int, ref_idc: int, rbsp: bytes) -> bytes:
     return b"\x00\x00\x00\x01" + bytes([(ref_idc << 5) | nal_type]) + _add_emulation(rbsp)
 
 
+def _rbsp(bw: MsbWriter) -> bytes:
+    """The RBSP so far closed by its stop bit (rbsp_trailing_bits, 7.3.2.11)."""
+    bw.write(1, 1)
+    return bw.getvalue()
+
+
 def write_annexb_ipcm(frames: list[np.ndarray]) -> bytes:
     """Conformant baseline (profile 66) Annex-B stream of I_PCM-only
     IDR frames. Frames are (H, W) uint8 luma with H, W multiples of
@@ -382,7 +306,8 @@ def write_annexb_ipcm(frames: list[np.ndarray]) -> bytes:
     if h % 16 or w % 16:
         raise ValueError("I_PCM writer needs 16-aligned dimensions")
     wmb, hmb = w // 16, h // 16
-    sps = _BitWriter()
+    gray = int.from_bytes(b"\x80" * 128, "big")
+    sps = MsbWriter()
     sps.write(66, 8)  # profile_idc baseline
     sps.write(0, 8)  # constraint flags
     sps.write(20, 8)  # level 2.0
@@ -397,7 +322,7 @@ def write_annexb_ipcm(frames: list[np.ndarray]) -> bytes:
     sps.write(0, 1)  # direct_8x8_inference
     sps.write(0, 1)  # frame_cropping
     sps.write(0, 1)  # vui_present
-    pps = _BitWriter()
+    pps = MsbWriter()
     pps.ue(0)  # pps_id
     pps.ue(0)  # sps_id
     pps.write(0, 1)  # CAVLC
@@ -413,24 +338,22 @@ def write_annexb_ipcm(frames: list[np.ndarray]) -> bytes:
     pps.write(0, 1)  # no deblock ctrl in header
     pps.write(0, 1)
     pps.write(0, 1)
-    out = [_nal(7, 3, sps.rbsp_trailing()), _nal(8, 3, pps.rbsp_trailing())]
+    out = [_nal(7, 3, _rbsp(sps)), _nal(8, 3, _rbsp(pps))]
     for k, f in enumerate(frames):
         if f.shape != (h, w) or f.dtype != np.uint8:
             raise ValueError("frames must share (H, W) uint8 shape")
-        sl = _BitWriter()
+        sl = MsbWriter()
         sl.ue(0)  # first_mb_in_slice
         sl.ue(7)  # slice_type I (all slices in pic)
         sl.ue(0)  # pps_id
         sl.write(0, 4)  # frame_num (log2_max_frame_num = 4; IDR -> 0)
         sl.ue(k & 1)  # idr_pic_id (consecutive IDRs must differ)
         sl.se(0)  # slice_qp_delta
-        gray = np.full((8, 8), 128, dtype=np.uint8).tobytes()
         for mb in range(wmb * hmb):
             sl.ue(25)  # I_PCM
-            sl.byte_align_zero()
+            sl.align()
             my, mx = (mb // wmb) * 16, (mb % wmb) * 16
-            sl.raw(f[my : my + 16, mx : mx + 16].tobytes())
-            sl.raw(gray)  # cb
-            sl.raw(gray)  # cr
-        out.append(_nal(5, 3, sl.rbsp_trailing()))
+            sl.write(int.from_bytes(f[my : my + 16, mx : mx + 16].tobytes(), "big"), 2048)
+            sl.write(gray, 1024)  # cb, cr: 64 samples each
+        out.append(_nal(5, 3, _rbsp(sl)))
     return b"".join(out)

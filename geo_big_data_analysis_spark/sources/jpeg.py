@@ -32,9 +32,12 @@ images via PIL); this replaces that dependency for baseline JPEG.
 
 from __future__ import annotations
 
+import re
 import struct
 
 import numpy as np
+
+from .bitstream import MsbReader, MsbWriter, canonical_codes, decode_table, read_code
 
 JPEG_MAGIC = b"\xff\xd8"
 
@@ -123,101 +126,40 @@ _AC_CHR = (
 _QTABLE = np.full(64, 8, dtype=np.int32)
 
 
-def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
-    """value → (code, length) per T.81 Annex C canonical construction."""
-    if sum(bits) != len(vals):
+def _huffman_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
+    """value → (code, length) of a BITS/HUFFVAL table (T.81 Annex C)."""
+    lengths = [ln for ln in range(1, 17) for _ in range(bits[ln - 1])]
+    if len(lengths) != len(vals):
         raise ValueError("invalid Huffman spec: BITS/HUFFVAL mismatch")
-    out: dict[int, tuple[int, int]] = {}
-    code, k = 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[vals[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
+    return canonical_codes(zip(vals, lengths))
+
+
+#: a marker (FF then a non-zero byte) inside or ending entropy-coded data
+_MARKER = re.compile(rb"\xff[^\x00]")
+_ENTROPY = "JPEG entropy-coded interval (data ends or a marker interrupts it)"
+
+
+def _stuffed(bw: MsbWriter) -> bytes:
+    """One restart interval's entropy-coded bytes: 1-fill the last byte
+    (F.1.2.3), then stuff every FF data byte as FF 00 (B.1.1.5)."""
+    bw.align(1)
+    return bw.getvalue().replace(b"\xff", b"\xff\x00")
+
+
+def _intervals(data: bytes, pos: int) -> list[tuple[int, bytes]]:
+    """The entropy-coded data from ``pos`` split at its RSTn markers:
+    (n, unstuffed bytes) per restart interval, n = −1 for the first.
+    Ends at the first other marker (EOI) or at the end of ``data``."""
+    out: list[tuple[int, bytes]] = []
+    rst = -1
+    for m in _MARKER.finditer(data, pos):
+        out.append((rst, data[pos : m.start()].replace(b"\xff\x00", b"\xff")))
+        rst = data[m.start() + 1] - 0xD0
+        if not 0 <= rst <= 7:
+            return out
+        pos = m.end()
+    out.append((rst, data[pos:].replace(b"\xff\x00", b"\xff")))
     return out
-
-
-def _decode_table(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """(length, code) → value, the decoder-side view."""
-    return {(l, c): v for v, (c, l) in _canonical_codes(bits, vals).items()}
-
-
-# ---------------------------------------------------------------------------
-# bit I/O
-# ---------------------------------------------------------------------------
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self._acc = 0
-        self._n = 0
-
-    def write(self, code: int, length: int) -> None:
-        self._acc = (self._acc << length) | code
-        self._n += length
-        while self._n >= 8:
-            byte = (self._acc >> (self._n - 8)) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:  # B.1.1.5 byte stuffing
-                self.out.append(0x00)
-            self._n -= 8
-        self._acc &= (1 << self._n) - 1
-
-    def flush(self) -> None:
-        if self._n:
-            pad = 8 - self._n
-            self.write((1 << pad) - 1, pad)  # 1-fill per F.1.2.3
-
-
-class _BitReader:
-    """MSB-first reader over entropy-coded data with FF00 unstuffing;
-    stops (raises ValueError) at any real marker."""
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self._acc = 0
-        self._n = 0
-
-    def _fill(self) -> None:
-        b = self.data[self.pos]
-        self.pos += 1
-        if b == 0xFF:
-            nxt = self.data[self.pos]
-            if nxt == 0x00:
-                self.pos += 1
-            else:
-                raise ValueError("unexpected marker inside entropy data")
-        self._acc = (self._acc << 8) | b
-        self._n += 8
-
-    def bit(self) -> int:
-        if self._n == 0:
-            self._fill()
-        self._n -= 1
-        return (self._acc >> self._n) & 1
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
-
-    def restart(self, expected: int) -> None:
-        """Consume an RSTn marker at a restart boundary (T.81 B.2.1.2):
-        discard pad bits to the byte boundary, then the next two bytes
-        must be FF D0+expected (markers cycle 0-7)."""
-        self._acc = 0
-        self._n = 0
-        if self.data[self.pos] != 0xFF or self.data[self.pos + 1] != (
-            0xD0 + expected
-        ):
-            raise ValueError(
-                f"expected RST{expected} at byte {self.pos}, got "
-                f"{self.data[self.pos]:02x}{self.data[self.pos + 1]:02x}"
-            )
-        self.pos += 2
 
 
 def _extend(v: int, t: int) -> int:
@@ -263,7 +205,7 @@ def _encode_plane_block(
     pred: int,
     dc_codes: dict,
     ac_codes: dict,
-    bw: _BitWriter,
+    bw: MsbWriter,
 ) -> int:
     f = _A @ (block.astype(np.float64) - 128.0) @ _A.T
     zz = np.array(
@@ -353,8 +295,8 @@ def write_jpeg(
         planes = [img]
         samp = [(1, 1)]
     n_comp = len(planes)
-    dc_lum, ac_lum = _canonical_codes(*_DC_LUM), _canonical_codes(*_AC_LUM)
-    dc_chr, ac_chr = _canonical_codes(*_DC_CHR), _canonical_codes(*_AC_CHR)
+    dc_lum, ac_lum = _huffman_codes(*_DC_LUM), _huffman_codes(*_AC_LUM)
+    dc_chr, ac_chr = _huffman_codes(*_DC_CHR), _huffman_codes(*_AC_CHR)
 
     out = bytearray(b"\xff\xd8")  # SOI
     out += _dqt_segment(0, _QTABLE)
@@ -376,7 +318,7 @@ def write_jpeg(
     sos += bytes([0, 63, 0])
     out += b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos
 
-    bw = _BitWriter()
+    bw = MsbWriter()
     preds = [0] * n_comp
     tables = [
         (dc_lum, ac_lum) if c == 0 else (dc_chr, ac_chr) for c in range(n_comp)
@@ -391,10 +333,11 @@ def write_jpeg(
                 and mcu_done
                 and mcu_done % restart_interval == 0
             ):
-                bw.flush()
-                bw.out += bytes(
+                out += _stuffed(bw)
+                out += bytes(
                     [0xFF, 0xD0 + ((mcu_done // restart_interval - 1) % 8)]
                 )
+                bw = MsbWriter()
                 preds = [0] * n_comp
             mcu_done += 1
             for c in range(n_comp):
@@ -408,8 +351,7 @@ def write_jpeg(
                             block, _QTABLE, preds[c],
                             tables[c][0], tables[c][1], bw,
                         )
-    bw.flush()
-    out += bw.out
+    out += _stuffed(bw)
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 
@@ -418,17 +360,6 @@ def write_jpeg(
 # decode
 # ---------------------------------------------------------------------------
 
-def _read_huffman(br: _BitReader, table: dict[tuple[int, int], int]) -> int:
-    code, length = 0, 0
-    while length < 16:
-        code = (code << 1) | br.bit()
-        length += 1
-        v = table.get((length, code))
-        if v is not None:
-            return v
-    raise ValueError("invalid Huffman code in entropy data")
-
-
 def read_jpeg(data: bytes) -> np.ndarray:
     """Decode baseline JPEG to (H, W) uint8 (grayscale) or (H, W, 3)
     uint8 RGB. See the module feature matrix for supported subsets."""
@@ -436,7 +367,7 @@ def read_jpeg(data: bytes) -> np.ndarray:
         raise ValueError("not a JPEG stream")
     pos = 2
     qtables: dict[int, np.ndarray] = {}
-    htables: dict[int, dict[tuple[int, int], int]] = {}
+    htables: dict[int, dict[int, int]] = {}
     restart_interval = 0
     h = w = 0
     comps: list[tuple[int, int, int, int]] = []  # (cid, h_i, v_i, qtable id)
@@ -489,7 +420,7 @@ def read_jpeg(data: bytes) -> np.ndarray:
                 bits = list(seg[p + 1 : p + 17])
                 n = sum(bits)
                 vals = list(seg[p + 17 : p + 17 + n])
-                htables[tc_th] = _decode_table(bits, vals)
+                htables[tc_th] = decode_table(_huffman_codes(bits, vals))
                 p += 17 + n
         elif marker == 0xDD:  # DRI
             restart_interval = struct.unpack(">H", seg[:2])[0]
@@ -508,7 +439,8 @@ def read_jpeg(data: bytes) -> np.ndarray:
     if not comps or not scan:
         raise ValueError("missing SOF/SOS")
 
-    br = _BitReader(data, pos)
+    intervals = _intervals(data, pos)
+    br = MsbReader(intervals[0][1], _ENTROPY)
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
     n_mcux, n_mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
@@ -521,7 +453,11 @@ def read_jpeg(data: bytes) -> np.ndarray:
     for my in range(n_mcuy):
         for mx in range(n_mcux):
             if restart_interval and mcu_done and mcu_done % restart_interval == 0:
-                br.restart((mcu_done // restart_interval - 1) % 8)
+                # T.81 B.2.1.2: each interval opens at its cycling RST0-7
+                i = mcu_done // restart_interval
+                if i >= len(intervals) or intervals[i][0] != (i - 1) % 8:
+                    raise ValueError(f"expected RST{(i - 1) % 8} before MCU {mcu_done}")
+                br = MsbReader(intervals[i][1], _ENTROPY)
                 preds = [0] * len(comps)
             mcu_done += 1
             for ci, tdc, tac in scan:
@@ -531,12 +467,12 @@ def read_jpeg(data: bytes) -> np.ndarray:
                 for byy in range(vi):
                     for bxx in range(hi):
                         zz = np.zeros(64, dtype=np.int64)
-                        t = _read_huffman(br, dc_tbl)
-                        preds[ci] += _extend(br.bits(t), t)
+                        t = read_code(br, dc_tbl, 16)
+                        preds[ci] += _extend(br.read(t), t)
                         zz[0] = preds[ci]
                         k = 1
                         while k < 64:
-                            rs = _read_huffman(br, ac_tbl)
+                            rs = read_code(br, ac_tbl, 16)
                             r, t = rs >> 4, rs & 0xF
                             if rs == 0x00:  # EOB
                                 break
@@ -548,7 +484,7 @@ def read_jpeg(data: bytes) -> np.ndarray:
                                 raise ValueError(
                                     "coefficient index out of range"
                                 )
-                            zz[k] = _extend(br.bits(t), t)
+                            zz[k] = _extend(br.read(t), t)
                             k += 1
                         coef = np.zeros((8, 8), dtype=np.float64)
                         for k, (r, c) in enumerate(_ZZ):

@@ -11,15 +11,18 @@ PCM/float/G.711 WAV and compressed FLAC (`sources/wav.py` /
 `flac.py`); VIDEO is real at the pixel level for animated GIF
 (`sources/gif.py`) AND for MJPEG-in-MP4 (sample slicing via
 `sources/mp4.py` composed with the baseline-JPEG decoder in
-`sources/jpeg.py`), and at the container level for every MP4 —
-sample-table parse + re-mux, the layer a curation job actually
+`sources/jpeg.py`) AND for Annex-B H.264 streams of I_PCM
+macroblocks (`sources/h264.py`), and at the container level for every
+MP4 — sample-table parse + re-mux, the layer a curation job actually
 touches. MP3 streams get a real frame-header walk (`sources/mp3.py`,
 duration/bitrate metadata without audio decode). ``resize_image``
 does a true decode→resample→re-encode round-trip. Codec *pixel*
-decode beyond these (H.264, lossy WebP, MP3 audio…) raises
-NotImplementedError naming the swap-in point, and ``FAKE_DECODE``
-substitutes a deterministic byte-level "decode" so those stages stay
-testable without the libraries.
+decode beyond these (entropy-coded H.264 slices, lossy WebP, MP3
+audio…) raises NotImplementedError naming the swap-in point, and
+``FAKE_DECODE`` substitutes a deterministic byte-level "decode" so
+those stages stay testable without the libraries. The codecs share
+their bit-level plumbing (bit readers and writers, canonical prefix
+codes, RIFF chunks) through `sources/bitstream.py`.
 
 Schema convention:
     payload  binary                    -- the encoded media bytes
@@ -75,13 +78,14 @@ def synthesize_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def decode_media(payload: bytes, media_type: str) -> np.ndarray:
-    """Codec decode. Images and audio are REAL: PNG payloads decode
-    through the pure-Python reader (`sources/png.py` — zlib + unfilter)
-    to the (H, W[, C]) uint8 pixel array; RIFF/WAVE payloads decode
-    through `sources/wav.py` to (n_frames, n_channels) int32 PCM.
-    Video codecs (and other image/audio formats) remain environment
-    stubs — libav/pillow are not available here; the error names the
-    swap-in point."""
+    """Codec decode with the pure-Python codecs, chosen by the
+    payload's magic bytes. Images (PNG incl. Adam7, baseline JPEG, BMP,
+    lossless WebP) decode to the (H, W[, C]) uint8 pixel array; audio
+    (WAV: PCM, float, G.711, IMA ADPCM; FLAC) to (n_frames, n_channels)
+    samples; video (animated GIF, MJPEG-in-MP4, Annex-B H.264 of I_PCM
+    macroblocks) to (n_frames, H, W). Any other format or codec feature
+    (lossy WebP, MP3 audio, entropy-coded H.264, …) raises
+    NotImplementedError naming the library to install."""
     if media_type == "image":
         from .bmp import is_bmp, read_bmp
         from .jpeg import is_jpeg, read_jpeg

@@ -21,6 +21,8 @@ import struct
 
 import numpy as np
 
+from .bitstream import riff, riff_chunks
+
 _PCM_DTYPES = {8: np.uint8, 16: np.dtype("<i2"), 32: np.dtype("<i4")}
 
 
@@ -34,21 +36,16 @@ def read_wav(data: bytes) -> tuple[np.ndarray, int]:
     the PCM convention)."""
     if not is_wav(data):
         raise ValueError("not a RIFF/WAVE stream")
-    pos = 12
     fmt = None
     raw = None
     fact_frames = None
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : pos + 8 + size]
+    for cid, body in riff_chunks(data):
         if cid == b"fmt ":
             fmt = struct.unpack("<HHIIHH", body[:16])
         elif cid == b"data":
             raw = body
-        elif cid == b"fact" and size >= 4:
+        elif cid == b"fact" and len(body) >= 4:
             (fact_frames,) = struct.unpack("<I", body[:4])
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
     if fmt is None or raw is None:
         raise ValueError("WAV missing fmt/data chunk")
     audio_fmt, n_ch, rate, _byte_rate, _align, bits = fmt
@@ -284,15 +281,10 @@ def write_wav(
             "<HHIIHHHH", 0x11, n_ch, rate,
             rate * block_align // spb, block_align, 4, 2, spb,
         )
-        chunks = b"".join(
-            [
-                b"fmt ", struct.pack("<I", len(fmt)), fmt,
-                b"fact", struct.pack("<II", 4, n_frames),
-                b"data", struct.pack("<I", len(raw)), raw,
-                b"" if len(raw) % 2 == 0 else b"\x00",
-            ]
+        return riff(
+            b"WAVE",
+            [(b"fmt ", fmt), (b"fact", struct.pack("<I", n_frames)), (b"data", raw)],
         )
-        return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
     if g711 is not None:
         if g711 == "ulaw":
             raw, audio_fmt = ulaw_encode(a.ravel()).tobytes(), 7
@@ -320,11 +312,4 @@ def write_wav(
     fmt = struct.pack(
         "<HHIIHH", audio_fmt, n_ch, rate, rate * block_align, block_align, bits
     )
-    chunks = b"".join(
-        [
-            b"fmt ", struct.pack("<I", len(fmt)), fmt,
-            b"data", struct.pack("<I", len(raw)), raw,
-            b"" if len(raw) % 2 == 0 else b"\x00",
-        ]
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    return riff(b"WAVE", [(b"fmt ", fmt), (b"data", raw)])

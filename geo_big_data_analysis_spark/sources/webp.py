@@ -40,10 +40,17 @@ codec layer at all — this continues SURVEY §2.10's multimodal plumbing.
 
 from __future__ import annotations
 
-import heapq
-import struct
-
 import numpy as np
+
+from .bitstream import (
+    LsbReader,
+    LsbWriter,
+    canonical_codes,
+    decode_table,
+    read_code,
+    riff,
+    riff_chunks,
+)
 
 #: code-length-code symbol order (RFC 9649 §4.6.2.2)
 _CL_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15]
@@ -73,97 +80,20 @@ def _distance_map() -> list[tuple[int, int]]:
 _DIST_MAP = _distance_map()
 
 
-# ---------------------------------------------------------------- bits
+# ------------------------------------------------------ prefix codes
 
-class _BitReader:
-    """LSB-first bit reader (VP8L packs bits little-endian within
-    bytes, like DEFLATE)."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def read(self, n: int) -> int:
-        v = 0
-        for i in range(n):
-            byte = self.pos >> 3
-            if byte >= len(self.data):
-                raise ValueError("VP8L bitstream truncated")
-            v |= ((self.data[byte] >> (self.pos & 7)) & 1) << i
-            self.pos += 1
-        return v
-
-    def read_code(self, table: dict[tuple[int, int], int], max_len: int) -> int:
-        """Walk a canonical prefix code bit by bit (codes are packed
-        MSB-of-code first, as in DEFLATE)."""
-        code = 0
-        for length in range(1, max_len + 1):
-            code = (code << 1) | self.read(1)
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid prefix code in VP8L stream")
-
-
-class _BitWriter:
-    def __init__(self):
-        self.bytes = bytearray()
-        self.bitpos = 0
-
-    def write(self, value: int, n: int) -> None:
-        if not 0 <= value < (1 << n):
-            raise ValueError(f"value {value} does not fit in {n} bits")
-        for i in range(n):
-            if self.bitpos == 0:
-                self.bytes.append(0)
-            if (value >> i) & 1:
-                self.bytes[-1] |= 1 << self.bitpos
-            self.bitpos = (self.bitpos + 1) & 7
-
-    def write_code(self, code: int, length: int) -> None:
-        """Emit a prefix code MSB-first."""
-        for i in range(length - 1, -1, -1):
-            self.write((code >> i) & 1, 1)
-
-
-# ------------------------------------------------------ canonical codes
-
-def _canonical_table(lengths: list[int]) -> tuple[dict[tuple[int, int], int], int]:
-    """(length, code) → symbol decode table from code lengths (canonical
-    assignment: by length, then symbol order — DEFLATE/VP8L rule).
-    A degenerate code (exactly one symbol) decodes with zero bits and is
-    handled by the caller."""
+def _code_table(lengths: list[int]) -> tuple[dict[int, int], int]:
+    """(`decode_table`, max length) of a multi-symbol VP8L prefix code.
+    The (length, symbol) canonical rule alone would misdecode an over-
+    or under-subscribed length set silently, so VP8L requires Kraft
+    completeness, sum(2^-len) == 1 (ADVICE r5); JPEG allows incomplete
+    codes, so the check lives here. A 1-symbol code decodes with zero
+    bits and is handled by the caller."""
     max_len = max(lengths)
-    bl_count = [0] * (max_len + 1)
-    for ln in lengths:
-        if ln:
-            bl_count[ln] += 1
-    code = 0
-    next_code = [0] * (max_len + 2)
-    for ln in range(1, max_len + 1):
-        code = (code + bl_count[ln - 1]) << 1
-        next_code[ln] = code
-    table: dict[tuple[int, int], int] = {}
-    for sym, ln in enumerate(lengths):
-        if ln:
-            table[(ln, next_code[ln])] = sym
-            next_code[ln] += 1
-    if len(table) > 1:
-        # Kraft completeness: a multi-symbol canonical code must satisfy
-        # sum(2^-len) == 1 exactly; over- or under-subscribed length sets
-        # would otherwise misdecode silently (ADVICE r5).
-        kraft = sum(1 << (max_len - ln) for ln in lengths if ln)
-        if kraft != (1 << max_len):
-            raise ValueError(
-                f"invalid prefix code: Kraft sum {kraft}/{1 << max_len}"
-            )
-    return table, max_len
-
-
-def _canonical_codes(lengths: list[int]) -> dict[int, tuple[int, int]]:
-    """symbol → (code, length) encode table (same canonical rule)."""
-    table, _ = _canonical_table(lengths)
-    return {sym: (code, ln) for (ln, code), sym in table.items()}
+    kraft = sum(1 << (max_len - ln) for ln in lengths if ln)
+    if kraft != (1 << max_len):
+        raise ValueError(f"invalid prefix code: Kraft sum {kraft}/{1 << max_len}")
+    return decode_table(canonical_codes(enumerate(lengths))), max_len
 
 
 def _limited_lengths(freqs: dict[int, int], max_len: int = _MAX_CODE_LEN) -> list[int]:
@@ -209,11 +139,7 @@ def is_webp(data: bytes) -> bool:
 def _vp8l_payload(data: bytes) -> bytes:
     if not is_webp(data):
         raise ValueError("not a RIFF/WEBP container")
-    pos = 12
-    while pos + 8 <= len(data):
-        fourcc = data[pos : pos + 4]
-        (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        payload = data[pos + 8 : pos + 8 + size]
+    for fourcc, payload in riff_chunks(data):
         if fourcc == b"VP8L":
             return payload
         if fourcc == b"VP8 ":
@@ -227,13 +153,12 @@ def _vp8l_payload(data: bytes) -> bytes:
                 "extended (VP8X) container: animation/EXIF framing not "
                 "implemented — still-image VP8L decodes natively"
             )
-        pos += 8 + size + (size & 1)
     raise ValueError("no VP8L chunk in WEBP container")
 
 
 # --------------------------------------------------------------- decode
 
-def _read_prefix_code(br: _BitReader, alphabet_size: int) -> list[int]:
+def _read_prefix_code(br: LsbReader, alphabet_size: int) -> list[int]:
     """One prefix code: 'simple' (1-2 symbols) or code-length-coded
     (RFC 9649 §4.6.2)."""
     if br.read(1):  # simple code
@@ -265,11 +190,11 @@ def _read_prefix_code(br: _BitReader, alphabet_size: int) -> list[int]:
         # The single used symbol may have any declared length (not
         # necessarily 1); it decodes with zero bits (ADVICE r5).
         cl_only = next(i for i, x in enumerate(cl_lengths) if x)
-        cl_table: dict[tuple[int, int], int] = {}
+        cl_table: dict[int, int] = {}
         cl_max = 0
     else:
         cl_only = -1
-        cl_table, cl_max = _canonical_table(cl_lengths)
+        cl_table, cl_max = _code_table(cl_lengths)
 
     if br.read(1):  # use max_symbol short-circuit
         length_nbits = 2 + 2 * br.read(3)
@@ -283,7 +208,7 @@ def _read_prefix_code(br: _BitReader, alphabet_size: int) -> list[int]:
         if max_symbol == 0:
             break
         max_symbol -= 1
-        cl = cl_only if cl_degenerate else br.read_code(cl_table, cl_max)
+        cl = cl_only if cl_degenerate else read_code(br, cl_table, cl_max)
         if cl < 16:
             lengths[sym] = cl
             sym += 1
@@ -316,19 +241,19 @@ class _Code:
         nz = [s for s, ln in enumerate(lengths) if ln]
         if len(nz) == 1:
             self.only: int | None = nz[0]
-            self.table: dict[tuple[int, int], int] = {}
+            self.table: dict[int, int] = {}
             self.max_len = 0
         else:
             self.only = None
-            self.table, self.max_len = _canonical_table(lengths)
+            self.table, self.max_len = _code_table(lengths)
 
-    def read(self, br: _BitReader) -> int:
+    def read(self, br: LsbReader) -> int:
         if self.only is not None:
             return self.only
-        return br.read_code(self.table, self.max_len)
+        return read_code(br, self.table, self.max_len)
 
 
-def _copy_length(br: _BitReader, sym: int) -> int:
+def _copy_length(br: LsbReader, sym: int) -> int:
     """LZ77 length/distance prefix decoding (RFC 9649 §4.6.2.3)."""
     if sym < 4:
         return sym + 1
@@ -338,7 +263,7 @@ def _copy_length(br: _BitReader, sym: int) -> int:
 
 
 def _decode_image_stream(
-    br: _BitReader, width: int, height: int, is_root: bool
+    br: LsbReader, width: int, height: int, is_root: bool
 ) -> np.ndarray:
     """Decode one ARGB image (shape (h, w, 4) uint8, channels A,R,G,B).
     Transforms are only present (and applied) at the root level."""
@@ -600,7 +525,7 @@ def read_webp(data: bytes) -> np.ndarray:
     """Decode a lossless WebP to (H, W, 3) uint8 RGB, or (H, W, 4) RGBA
     when any alpha < 255."""
     payload = _vp8l_payload(data)
-    br = _BitReader(payload)
+    br = LsbReader(payload, "VP8L bitstream")
     if br.read(8) != 0x2F:
         raise ValueError("bad VP8L signature byte")
     width = br.read(14) + 1
@@ -618,7 +543,7 @@ def read_webp(data: bytes) -> np.ndarray:
 
 # --------------------------------------------------------------- encode
 
-def _write_prefix_code(bw: _BitWriter, lengths: list[int]) -> None:
+def _write_prefix_code(bw: LsbWriter, lengths: list[int]) -> None:
     """Emit one prefix code: simple form when ≤2 symbols (all ≤ 255),
     else code-length-coded with zero runs via repeat codes 17/18."""
     nz = [s for s, ln in enumerate(lengths) if ln]
@@ -677,7 +602,7 @@ def _write_prefix_code(bw: _BitWriter, lengths: list[int]) -> None:
     bw.write(num_cl - 4, 4)
     for i in range(num_cl):
         bw.write(cl_lengths[_CL_ORDER[i]], 3)
-    cl_codes = _canonical_codes(cl_lengths)
+    cl_codes = canonical_codes(enumerate(cl_lengths))
     cl_degenerate = sum(1 for x in cl_lengths if x) == 1
     bw.write(0, 1)  # no max_symbol short-circuit
     # degenerate code-length code: symbols cost zero bits; extras still go
@@ -701,7 +626,7 @@ def write_webp(arr: np.ndarray) -> bytes:
     has_alpha = arr.shape[2] == 4
     alpha = arr[:, :, 3] if has_alpha else np.full((h, w), 255, dtype=np.uint8)
 
-    bw = _BitWriter()
+    bw = LsbWriter()
     bw.write(0x2F, 8)
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
@@ -729,7 +654,7 @@ def write_webp(arr: np.ndarray) -> bytes:
         lengths = _limited_lengths(freqs)
         lengths += [0] * (alphabet - len(lengths))
         _write_prefix_code(bw, lengths)
-        tables[name] = (_canonical_codes(lengths), len(vals) == 1)
+        tables[name] = (canonical_codes(enumerate(lengths)), len(vals) == 1)
     # distance code: unused (no LZ77) — a 1-symbol simple code
     _write_prefix_code(bw, [1] + [0] * 39)
 
@@ -749,9 +674,4 @@ def write_webp(arr: np.ndarray) -> bytes:
         if not a_one:
             bw.write_code(*a_codes[int(a)])
 
-    payload = bytes(bw.bytes)
-    chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-    if len(payload) & 1:
-        chunk += b"\x00"
-    riff = b"WEBP" + chunk
-    return b"RIFF" + struct.pack("<I", len(riff)) + riff
+    return riff(b"WEBP", [(b"VP8L", bw.getvalue())])

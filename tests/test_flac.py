@@ -16,8 +16,8 @@ import struct
 import numpy as np
 import pytest
 
+from geo_big_data_analysis_spark.sources.bitstream import MsbWriter
 from geo_big_data_analysis_spark.sources.flac import (
-    _BitWriter,
     _crc8,
     _crc16,
     _write_utf8_number,
@@ -90,7 +90,7 @@ def _streaminfo(rate, n_ch, bps, total, blocksize):
     return b"fLaC" + bytes([0x80]) + len(si).to_bytes(3, "big") + bytes(si)
 
 
-def _frame_header(w: _BitWriter, blocksize, ch_code, bps_code):
+def _frame_header(w: MsbWriter, blocksize, ch_code, bps_code):
     w.write(0x3FFE, 14)
     w.write(0, 2)          # fixed blocksize
     w.write(7, 4)          # 16-bit blocksize-1 follows
@@ -100,14 +100,11 @@ def _frame_header(w: _BitWriter, blocksize, ch_code, bps_code):
     w.write(0, 1)
     _write_utf8_number(w, 0)
     w.write(blocksize - 1, 16)
-    w.align()
-    hdr = w.bytes()
-    w.buf.append(_crc8(hdr))
+    w.write(_crc8(w.getvalue()), 8)
 
 
-def _finish_frame(w: _BitWriter) -> bytes:
-    w.align()
-    frame = w.bytes()
+def _finish_frame(w: MsbWriter) -> bytes:
+    frame = w.getvalue()
     return frame + struct.pack(">H", _crc16(frame))
 
 
@@ -121,7 +118,7 @@ def _write_rice(w, res, k, part_order=0, order=0, blocksize=None):
         w.write(k, 4)
         for v in res[pos : pos + n]:
             folded = (int(v) << 1) ^ (int(v) >> 63)
-            w.write_unary(folded >> k)
+            w.unary(folded >> k)
             if k:
                 w.write(folded & ((1 << k) - 1), k)
         pos += n
@@ -134,7 +131,7 @@ def test_decode_verbatim_and_escape_partition():
     rng = np.random.RandomState(11)
     c0 = rng.randint(-200, 200, bs).astype(np.int64)
     c1 = rng.randint(-200, 200, bs).astype(np.int64)
-    w = _BitWriter()
+    w = MsbWriter()
     _frame_header(w, bs, ch_code=1, bps_code=4)  # 2 independent ch, 16-bit
     # ch0 VERBATIM
     w.write(0, 1); w.write(1, 6); w.write(0, 1)
@@ -163,7 +160,7 @@ def test_decode_lpc_subframe():
     warm = [100, 103]
     res = (np.arange(bs - 2) % 7 - 3).astype(np.int64)
     coefs, shift, precision = [3, -1], 1, 5
-    w = _BitWriter()
+    w = MsbWriter()
     _frame_header(w, bs, ch_code=0, bps_code=4)
     w.write(0, 1); w.write(32 + 1, 6); w.write(0, 1)  # LPC order 2 = 0b100001+... type 1xxxxx, order-1=1
     for v in warm:
@@ -186,7 +183,7 @@ def test_decode_lpc_negative_shift_named_error():
     """A (spec-invalid) negative LPC shift raises a named format error,
     not a bare 'negative shift count' from the '>>' operator."""
     bs = 16
-    w = _BitWriter()
+    w = MsbWriter()
     _frame_header(w, bs, ch_code=0, bps_code=4)
     w.write(0, 1); w.write(32 + 1, 6); w.write(0, 1)  # LPC order 2
     for v in (10, 11):
@@ -202,7 +199,7 @@ def test_reserved_blocksize_code_named_error():
     """bs_code 0 is reserved — decoder names the malformed field instead
     of raising a bare KeyError."""
     bs = 16
-    w = _BitWriter()
+    w = MsbWriter()
     w.write(0x3FFE, 14)
     w.write(0, 2)          # fixed blocksize
     w.write(0, 4)          # RESERVED blocksize code
@@ -211,9 +208,7 @@ def test_reserved_blocksize_code_named_error():
     w.write(4, 3)          # 16-bit
     w.write(0, 1)
     _write_utf8_number(w, 0)
-    w.align()
-    hdr = w.bytes()
-    w.buf.append(_crc8(hdr))
+    w.write(_crc8(w.getvalue()), 8)
     data = _streaminfo(16000, 1, 16, bs, bs) + _finish_frame(w)
     with pytest.raises(ValueError, match="reserved blocksize"):
         read_flac(data)
@@ -230,7 +225,7 @@ def test_decode_stereo_decorrelation(ch_code):
     right = rng.randint(-1000, 1000, bs).astype(np.int64)
     side = left - right
     mid = (left + right) >> 1
-    w = _BitWriter()
+    w = MsbWriter()
     _frame_header(w, bs, ch_code=ch_code, bps_code=4)
 
     def verbatim(vals, bits):
@@ -257,11 +252,11 @@ def test_decode_wasted_bits_and_multipartition():
     rng = np.random.RandomState(5)
     s = (rng.randint(-100, 100, bs) * 4).astype(np.int64)
     eff = s >> 2
-    w = _BitWriter()
+    w = MsbWriter()
     _frame_header(w, bs, ch_code=0, bps_code=4)
     w.write(0, 1); w.write(8, 6, )  # FIXED order 0
     w.write(1, 1)                   # wasted-bits flag
-    w.write_unary(1)                # unary(1) => wasted = 1 + 1 = 2
+    w.unary(1)                # unary(1) => wasted = 1 + 1 = 2
     _write_rice(w, eff, k=3, part_order=2, order=0, blocksize=bs)
     data = _streaminfo(16000, 1, 16, bs, bs) + _finish_frame(w)
     dec, _ = read_flac(data)

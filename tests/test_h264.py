@@ -7,10 +7,10 @@ computed from the spec in the test, not via the decoder."""
 import numpy as np
 import pytest
 
+from geo_big_data_analysis_spark.sources.bitstream import MsbReader, MsbWriter
 from geo_big_data_analysis_spark.sources.h264 import (
-    _BitReader,
-    _BitWriter,
     _add_emulation,
+    _rbsp,
     _strip_emulation,
     is_annexb_h264,
     parse_pps,
@@ -29,15 +29,15 @@ def _rng(seed=0):
 
 def test_exp_golomb_vectors():
     """Spec table 9-1: ue codes 0..8 → 1, 010, 011, 00100, ..."""
-    bw = _BitWriter()
+    bw = MsbWriter()
     for v in range(9):
         bw.ue(v)
-    br = _BitReader(bytes(bw.buf))
+    br = MsbReader(bw.getvalue(), "H.264 bitstream")
     assert [br.ue() for _ in range(9)] == list(range(9))
-    bw2 = _BitWriter()
+    bw2 = MsbWriter()
     for v in (0, 1, -1, 2, -2, 7, -7):
         bw2.se(v)
-    br2 = _BitReader(bytes(bw2.buf))
+    br2 = MsbReader(bw2.getvalue(), "H.264 bitstream")
     assert [br2.se() for _ in range(7)] == [0, 1, -1, 2, -2, 7, -7]
 
 
@@ -109,7 +109,7 @@ def test_sps_cropping_arithmetic():
     """Hand-built SPS with frame cropping: 2-sample crop units in 4:2:0
     frame coding (spec 7.4.2.1.1) — 176x144 coded, crop right 3 / bottom
     1 → 170x142."""
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(66, 8)
     bw.write(0, 8)
     bw.write(30, 8)
@@ -128,7 +128,7 @@ def test_sps_cropping_arithmetic():
     bw.ue(0)   # top
     bw.ue(1)   # bottom
     bw.write(0, 1)  # vui
-    sps = parse_sps(bw.rbsp_trailing())
+    sps = parse_sps(_rbsp(bw))
     assert (sps["width"], sps["height"]) == (176 - 6, 144 - 2)
 
 
@@ -144,7 +144,7 @@ def test_cavlc_macroblock_raises_named_boundary():
     sps_rbsp, pps_rbsp = (_strip_emulation(n[1:]) for n in nals[:2])
     from geo_big_data_analysis_spark.sources.h264 import _decode_islice
 
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.ue(0)      # first_mb_in_slice
     bw.ue(7)      # slice_type I
     bw.ue(0)      # pps_id
@@ -154,7 +154,7 @@ def test_cavlc_macroblock_raises_named_boundary():
     bw.ue(0)      # mb_type 0 = I_4x4 — CAVLC territory
     with pytest.raises(NotImplementedError, match="CAVLC"):
         _decode_islice(
-            bw.rbsp_trailing(), parse_sps(sps_rbsp), parse_pps(pps_rbsp), idr=True
+            _rbsp(bw), parse_sps(sps_rbsp), parse_pps(pps_rbsp), idr=True
         )
 
 
@@ -165,19 +165,19 @@ def test_p_slice_and_cabac_raise():
     pps = parse_pps(_strip_emulation(nals[1][1:]))
     from geo_big_data_analysis_spark.sources.h264 import _decode_islice
 
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.ue(0)
     bw.ue(5)  # slice_type P (5 % 5 == 0)
     with pytest.raises(NotImplementedError, match="P/B slice"):
-        _decode_islice(bw.rbsp_trailing(), sps, pps, idr=False)
+        _decode_islice(_rbsp(bw), sps, pps, idr=False)
     with pytest.raises(NotImplementedError, match="CABAC"):
-        bw2 = _BitWriter()
+        bw2 = MsbWriter()
         bw2.ue(0)
         bw2.ue(7)
         bw2.ue(0)
         bw2.write(0, 4)
         bw2.ue(0)
-        _decode_islice(bw2.rbsp_trailing(), sps, {**pps, "entropy_cabac": 1}, idr=True)
+        _decode_islice(_rbsp(bw2), sps, {**pps, "entropy_cabac": 1}, idr=True)
 
 
 def test_truncated_stream_raises():

@@ -8,9 +8,13 @@ directly in the test from the spec arithmetic, not via the decoder."""
 import numpy as np
 import pytest
 
+from geo_big_data_analysis_spark.sources.bitstream import (
+    LsbReader,
+    LsbWriter,
+    canonical_codes,
+)
 from geo_big_data_analysis_spark.sources.webp import (
     _DIST_MAP,
-    _BitWriter,
     _copy_length,
     _write_prefix_code,
     is_webp,
@@ -94,7 +98,7 @@ def _header(bw, w, h):
 def _container(bw):
     import struct
 
-    payload = bytes(bw.bytes)
+    payload = bw.getvalue()
     chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
     if len(payload) & 1:
         chunk += b"\x00"
@@ -157,7 +161,7 @@ def test_len_sym_inverts_copy_length():
 def test_lz77_direct_distance():
     # 4x1: one literal pixel then a length-3 copy at direct distance 1
     # (dist_code = 121) → solid row
-    bw = _BitWriter()
+    bw = LsbWriter()
     _header(bw, 4, 1)
     bw.write(0, 1)  # no transforms
     bw.write(0, 1)  # no color cache
@@ -190,7 +194,7 @@ def test_lz77_direct_distance():
 def test_lz77_mapped_distance_copies_row_above():
     # 3x2: three literals, then dist_code 1 → map entry (0, 1) → dist =
     # width → the second row copies the first
-    bw = _BitWriter()
+    bw = LsbWriter()
     _header(bw, 3, 2)
     bw.write(0, 1)
     bw.write(0, 1)
@@ -230,7 +234,7 @@ def test_color_cache_hit():
     a, r, g, b = 255, 60, 50, 70
     val = (a << 24) | (r << 16) | (g << 8) | b
     idx = ((0x1E35A7BD * val) & 0xFFFFFFFF) >> (32 - cache_bits)
-    bw = _BitWriter()
+    bw = LsbWriter()
     _header(bw, 2, 1)
     bw.write(0, 1)  # no transforms
     bw.write(1, 1)  # color cache
@@ -254,7 +258,7 @@ def test_color_cache_hit():
 
 def test_subtract_green_transform():
     # residual (r=10, g=100, b=20) → final r = 110, b = 120 (mod 256)
-    bw = _BitWriter()
+    bw = LsbWriter()
     _header(bw, 1, 1)
     bw.write(1, 1)  # a transform follows
     bw.write(2, 2)  # subtract green
@@ -291,7 +295,7 @@ def test_predictor_transform_mode_T():
     # (0,0): pred black(a=255) → px = res + (0,0,0) with a += 255
     # (0,1): pred L            (1,0): pred T (x==0 col rule)
     # (1,1): pred T (mode 2)
-    bw = _BitWriter()
+    bw = LsbWriter()
     _header(bw, 2, 2)
     bw.write(1, 1)
     bw.write(0, 2)  # predictor transform
@@ -323,8 +327,6 @@ def _channel_code(bw, syms, alphabet):
     """Write a prefix code for one channel's symbol multiset; return
     sym → (code, nbits). Multi-symbol codes are built COMPLETE (Kraft
     sum 1) with lengths L-1/L — the decoder rejects incomplete codes."""
-    from geo_big_data_analysis_spark.sources.webp import _canonical_codes
-
     used = sorted(set(syms))
     if len(used) == 1:
         _simple1(bw, used[0])
@@ -335,7 +337,7 @@ def _channel_code(bw, syms, alphabet):
     for i, s in enumerate(used):
         lengths[s] = (nbits - 1) if i < short else nbits
     _write_prefix_code(bw, lengths)
-    return _canonical_codes(lengths)
+    return canonical_codes(enumerate(lengths))
 
 
 def _ref_predict(mode, L, T, TL, TR):
@@ -406,7 +408,7 @@ def test_predictor_all_modes(mode):
         [0, 0, 0, 0],
         [0, 0, 0, 0],
     ]
-    bw = _BitWriter()
+    bw = LsbWriter()
     _header(bw, 3, 2)
     bw.write(1, 1)
     bw.write(0, 2)  # predictor transform
@@ -442,18 +444,18 @@ def test_predictor_all_modes(mode):
 def test_kraft_incomplete_code_raises():
     """An under-subscribed multi-symbol length set must raise, not
     misdecode (three symbols all at length 2 leaves a dangling code)."""
-    from geo_big_data_analysis_spark.sources.webp import _canonical_table
+    from geo_big_data_analysis_spark.sources.webp import _code_table
 
     lengths = [0] * 16
     lengths[1] = lengths[2] = lengths[3] = 2
     with pytest.raises(ValueError, match="Kraft"):
-        _canonical_table(lengths)
+        _code_table(lengths)
     lengths[4] = 2  # complete
-    table, _ = _canonical_table(lengths)
+    table, _ = _code_table(lengths)
     assert len(table) == 4
     lengths[5] = 2  # over-subscribed
     with pytest.raises(ValueError, match="Kraft"):
-        _canonical_table(lengths)
+        _code_table(lengths)
 
 
 def test_degenerate_cl_code_with_length_gt_one():
@@ -464,12 +466,9 @@ def test_degenerate_cl_code_with_length_gt_one():
     CL length 3 is the only declared entry (_CL_ORDER slot 11), so every
     zero-bit read yields literal length 8 for the first max_symbol
     entries."""
-    from geo_big_data_analysis_spark.sources.webp import (
-        _BitReader,
-        _read_prefix_code,
-    )
+    from geo_big_data_analysis_spark.sources.webp import _read_prefix_code
 
-    bw = _BitWriter()
+    bw = LsbWriter()
     bw.write(0, 1)  # not simple
     bw.write(8, 4)  # num_cl = 12 → order slots 17,18,0,1,2,3,4,5,16,6,7,8
     for slot in range(12):
@@ -477,14 +476,14 @@ def test_degenerate_cl_code_with_length_gt_one():
     bw.write(1, 1)  # max_symbol short-circuit on
     bw.write(0, 3)  # length_nbits = 2
     bw.write(2, 2)  # max_symbol = 2 + 2 = 4 → first 4 syms get len 8
-    lengths = _read_prefix_code(_BitReader(bytes(bw.bytes)), 280)
+    lengths = _read_prefix_code(LsbReader(bw.getvalue(), "VP8L bitstream"), 280)
     assert lengths[:4] == [8, 8, 8, 8] and not any(lengths[4:])
 
 
 def test_color_transform_delta():
     # 1x1 color transform with green_to_red = 64 (delta = (64*g)>>5),
     # residual green 32 → red delta = (64*32)>>5 = 64
-    bw = _BitWriter()
+    bw = LsbWriter()
     _header(bw, 1, 1)
     bw.write(1, 1)
     bw.write(1, 2)  # color transform
@@ -510,7 +509,7 @@ def test_color_indexing_with_bundling():
     # 4-color palette → wbits 2 → 4 indices per packed green byte.
     # Palette (delta-coded): entries argb deltas; width 8, so packed
     # width 2. Indices 0..3 repeating.
-    bw = _BitWriter()
+    bw = LsbWriter()
     _header(bw, 8, 1)
     bw.write(1, 1)
     bw.write(3, 2)  # color indexing
@@ -557,7 +556,7 @@ def test_color_indexing_with_bundling():
 def test_meta_prefix_two_groups():
     # width 8, meta_bits 2 → entropy image 2x1; left block group 0
     # (green 11), right block group 1 (green 22)
-    bw = _BitWriter()
+    bw = LsbWriter()
     _header(bw, 8, 1)
     bw.write(0, 1)  # no transforms
     bw.write(0, 1)  # no cache
@@ -636,7 +635,7 @@ def test_truncated_stream_raises():
 
 def test_lz77_overrun_raises():
     # copy longer than pixels remaining
-    bw = _BitWriter()
+    bw = LsbWriter()
     _header(bw, 2, 1)
     bw.write(0, 1)
     bw.write(0, 1)

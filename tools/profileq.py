@@ -2,8 +2,9 @@
 `.explain("formatted")` capture for a set of registry queries.
 
 For each named query:
-  - builds the DataFrame once and writes plans/r08/<name>_<tag>.txt with
-    the formatted physical plan,
+  - with `--plans-dir DIR`, builds the DataFrame once and writes
+    DIR/<name>_<tag>.txt with the formatted physical plan (no plan is
+    written without it, so a timing run leaves committed plans alone),
   - times `df.write.format("noop")` (eagerly computes every column —
     guide §1.4) for N iterations, reporting the median,
   - labels jobs with a job group per phase (plan build, timed write) so
@@ -149,12 +150,12 @@ def main() -> None:
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--tag", default="before")
     ap.add_argument("--iters", type=int, default=3)
-    ap.add_argument("--plans-dir", default=os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r08"))
-    ap.add_argument("--no-plan", action="store_true", help="skip plan capture (timing only)")
+    ap.add_argument("--plans-dir", help="write each query's formatted plan here")
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    os.makedirs(args.plans_dir, exist_ok=True)
+    if args.plans_dir:
+        os.makedirs(args.plans_dir, exist_ok=True)
     _count_paths()
     spark = get_spark("profileq")
     spark.range(10).count()  # JVM warm
@@ -166,7 +167,7 @@ def main() -> None:
         fn, _ = REGISTRY[name]
         sc = spark.sparkContext
         # plan capture (once, pre-timing)
-        if not args.no_plan:
+        if args.plans_dir:
             df = fn(spark, args.sf)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
