@@ -28,8 +28,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return registry.queries()
+    return {name: fn for name, (fn, _) in registry.REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return registry.oracle_sql()
+    return {name: sql for name, (_, sql) in registry.REGISTRY.items()}

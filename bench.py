@@ -1,5 +1,7 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) and prints ONE JSON line.
+The headline queries are ``registry.BENCHED``: every ``@query`` not
+marked ``bench=False``, in registry order.
 
 Per-query wall time includes plan + execution + a count() materialization
 (no driver-side data transfer beyond the count), mirroring how a
@@ -22,242 +24,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from geo_big_data_analysis_spark.plans.registry import REGISTRY  # noqa: E402
+from geo_big_data_analysis_spark.plans.registry import BENCHED, REGISTRY  # noqa: E402
 from geo_big_data_analysis_spark.session import get_spark  # noqa: E402
-
-HEADLINE = [
-    "pricing_summary",
-    "top_revenue_customers",
-    "region_nation_rollup",
-    "user_sessions",
-    "high_density_hours",
-    "session_drilldown",
-    "dow_eventtype_pivot",
-    "geo_grid_density",
-    "haversine_stats",
-    "pareto_user_share",
-    "exact_dedup_docs",
-    "token_stats_docs",
-    "quality_score_docs",
-    "knn_embeddings",
-    "embedding_label_centroids",
-    "minhash_near_dup_docs",
-    "training_corpus_pipeline",
-    "sentiment_docs",
-    "sentiment_source_ranks",
-    "lisa_moran_events",
-    "road_density_grid",
-    "raster_sample_stats",
-    "multimodal_stats",
-    "kdist_curve_stats",
-    "dbscan_event_clusters",
-    "lloyd_kmeans_clusters",
-    "streaming_hourly_counts",
-    "lab1_noise_pipeline",
-    "lab2_taxi_features",
-    "kde_grid_density",
-    "ndjson_scan_docs",
-    "ngram_jaccard_pairs",
-    "ivf_topk_embeddings",
-    "value_distribution_stats",
-    "hot_cold_grid_cells",
-    "csv_roundtrip_events",
-    "part_type_revenue",
-    "network_summary",
-    "bias_audit_summary",
-    "shortest_path_route_grid",
-    "avg_rank_suppliers",
-    "top_keywords_docs",
-    "pii_scrub_docs",
-    "near_dup_clusters_docs",
-    "srp_multi_topk_embeddings",
-    "shipping_priority",
-    "large_order_customers",
-    "asof_last_purchase",
-    "knn_embeddings_pandas",
-    "hypertable_rollup",
-    "custdist_orders",
-    "small_quantity_revenue",
-    "exists_priority_orders",
-    "latest_event_per_user",
-    "pagerank_mod",
-    "stratified_sample_docs",
-    "pack_sequences_docs",
-    "cube_priority_status",
-    "incremental_hourly_merge",
-    "interleave_corpus_docs",
-    "decontaminate_docs",
-    "shuffled_export_manifest",
-    "top_customers_per_nation",
-    "variant_extract_events",
-    "chunk_docs_manifest",
-    "local_supplier_volume",
-    "volume_shipping_pairs",
-    "product_profit_by_nation",
-    "returned_items_topk",
-    "window_suite_orders",
-    "kmv_distinct_sketch",
-    "auc_rank_metric",
-    "tfidf_top_terms",
-    "gap_fill_daily_revenue",
-    "funnel_conversion",
-    "cohort_retention",
-    "forecast_revenue_change",
-    "priority_by_returnflag",
-    "min_cost_supplier",
-    "late_shipper_suppliers",
-    "grouped_percentiles",
-    "robust_outlier_stats",
-    "skyline_parts",
-    "repetition_ratio_docs",
-    "order_item_arrays",
-    "bloom_prune_orders",
-    "rolling_anomaly_days",
-    "source_lang_divergence",
-    "fuzzy_dup_docs",
-    "heavy_hitter_brands",
-    "copurchase_pairs",
-    "event_transition_matrix",
-    "embedding_quantization",
-    "profile_lineitem",
-    "twap_value_by_type",
-    "user_trajectory_stats",
-    "ks_statistic_values",
-    "except_all_orders",
-    "value_deciles_by_type",
-    "value_trend_by_type",
-    "rolling_active_users",
-    "clustering_coefficient_mod",
-    "kcore_mod",
-    "weighted_sample_docs",
-    "quantile_normalize_values",
-    "distance_band_pairs",
-    "snapshot_diff_orders",
-    "attribution_touchpoints",
-    "user_type_map",
-    "capped_sessions",
-    "debounced_event_counts",
-    "rolling_correlation_days",
-    "bearing_sector_counts",
-    "order_fulfillment_lag",
-    "rfm_segments",
-    "mean_shift_scan",
-    "benford_first_digit",
-    "max_open_orders",
-    "skew_report_lineitem",
-    "weighted_median_price",
-    "ewma_daily_revenue",
-    "seasonal_index_dow",
-    "autocorrelation_daily",
-    "unigram_logprob_docs",
-    "pit_features_purchases",
-    "topk_with_ties_parts",
-    "sql_frontend_revenue",
-    "isochrone_hull_geometry",
-    "kmv_overlap_sketch",
-    "inverted_index_docs",
-    "chi2_type_dow",
-    "frame_sample_manifest",
-    "top_decile_spenders_by_nation",
-    "gini_by_nation",
-    "concentration_by_type",
-    "temporal_state_lookup",
-    "share_of_parent_rollup",
-    "spend_quartile_migration",
-    "seasonal_naive_eval",
-    "prorated_monthly_revenue",
-    "user_survival_curve",
-    "ab_test_conversion",
-    "staypoint_detection",
-    "degree_assortativity_mod",
-    "centroid_separation",
-    "business_day_lag",
-    "silhouette_by_label",
-    "shingle_containment_pairs",
-    "shipment_waves",
-    "interarrival_stats",
-    "backlog_age_at_month_end",
-    "repurchase_cycle",
-    "price_volume_mix",
-    "referential_integrity_audit",
-    "utm_project_events",
-    "sentiment_pattern_docs",
-    "srp_near_dup_pairs",
-    "lab2_pipeline",
-    "gopher_quality_docs",
-    "dup_ngram_share_docs",
-    "semdedup_embeddings",
-    "dsir_select_docs",
-    "hex_density_events",
-    "snap_to_road",
-    "global_moran_events",
-    "ripley_k_events",
-    "emerging_hotspots",
-    "bpe_merges_docs",
-    "span_dedup_docs",
-    "sorted_neighborhood_docs",
-    "label_propagation_mod",
-    "hll_distinct_words",
-    "mrl_truncation_recall",
-    "trajectory_hausdorff",
-    "item_item_cf",
-    "sampled_quantile_bands",
-    "jw_entity_resolution",
-    "k_anonymity_audit",
-    "kcenter_coreset_embeddings",
-    "polygon_clip_areas",
-    "zonal_polygon_coverage",
-    "kaplan_meier_users",
-    "readability_docs",
-    "bm25_retrieval_docs",
-    "dp_noised_counts",
-    "l_diversity_audit",
-    "scc_mod",
-    "holt_trend_revenue",
-    "bpe_encode_docs",
-    "orc_roundtrip_events",
-    "png_roundtrip_stats",
-    "jpeg_roundtrip_stats",
-    "lab4_sentiment_golden",
-    "hard_negative_mining",
-    "hard_negative_mining_ivf",
-    "rrf_hybrid_retrieval",
-    "ppl_bucket_census",
-    "quality_funnel_docs",
-    "domain_mix_budget",
-    "self_bleu_pairs",
-    "zipf_slope_words",
-    "tokenizer_fertility_by_lang",
-    "split_leakage_audit",
-    "wav_roundtrip_stats",
-    "gif_roundtrip_stats",
-    "lsh_sensitivity_report",
-    "flac_roundtrip_stats",
-    "mp4_sample_manifest",
-    "mp3_frame_census",
-    "wordpiece_merges_docs",
-    "image_phash_near_dup",
-    "dup_span_islands_docs",
-    "temperature_mix_docs",
-    "kn_bigram_ppl_docs",
-    "gopher_repetition_docs",
-    # round 5
-    "mjpeg_mp4_frame_stats",
-    "ivfpq_index_build",
-    "ivfpq_probe_stored",
-    "lisa_perm_band_dist",
-    "webp_roundtrip_stats",
-    "minhash_index_build",
-    "near_dup_probe_stored",
-    # round 6
-    "geocode_places",
-    "web_mercator_tiles",
-    "h264_ipcm_roundtrip_stats",
-    "minhash_index_upsert",
-    "ivfpq_index_upsert",
-    # round 7
-    "srp_near_dup_split",
-]
 
 
 def main() -> None:
@@ -268,14 +36,14 @@ def main() -> None:
         sf = -1.0
     spark = get_spark("bench")
     # Warm the session outside the timed region: JVM, then one pass of
-    # every headline query at sf0.001 so whole-stage-codegen classes
+    # every benched query at sf0.001 so whole-stage-codegen classes
     # (cached by generated-code hash, independent of input path) are
     # compiled before timing. The metric is steady-state throughput at
     # the target SF, not cold-start JIT.
     spark.range(10).count()
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir) and warm_dir != sf_dir:
-        for name in HEADLINE:
+        for name in BENCHED:
             try:
                 REGISTRY[name][0](spark, warm_dir).count()
             except Exception:
@@ -409,7 +177,7 @@ def main() -> None:
     iqrs: dict[str, float] = {}
     raw: dict[str, list[float]] = {}
     q_bracket: dict[str, tuple[int, int]] = {}
-    for qi, name in enumerate(HEADLINE):
+    for qi, name in enumerate(BENCHED):
         fn, _ = REGISTRY[name]
         raw[name] = _timed_runs(fn)
         times[name] = round(statistics.median(raw[name]), 3)
@@ -423,7 +191,7 @@ def main() -> None:
             else 0.0
         )
         q_bracket[name] = (len(st_samples) - 1, len(st_samples))
-        if (qi + 1) % ST_EVERY == 0 or qi == len(HEADLINE) - 1:
+        if (qi + 1) % ST_EVERY == 0 or qi == len(BENCHED) - 1:
             st_samples.append(_st_sample())
         else:
             q_bracket[name] = (len(st_samples) - 1, len(st_samples) - 1)
@@ -436,14 +204,14 @@ def main() -> None:
         lo, hi = q_bracket[name]
         return st_bad[lo] or st_bad[min(hi, len(st_samples) - 1)]
 
-    taint = {name: _window_tainted(name) for name in HEADLINE}
+    taint = {name: _window_tainted(name) for name in BENCHED}
     rerun: dict[str, dict] = {}
     n_tainted = sum(taint.values())
     # Re-run each tainted query once; a contaminated-everywhere run
     # (most queries tainted) is hopeless and the reruns would be just
     # as dirty, so skip them and let the taint flags speak.
-    if 0 < n_tainted <= len(HEADLINE) // 2:
-        for name in HEADLINE:
+    if 0 < n_tainted <= len(BENCHED) // 2:
+        for name in BENCHED:
             if not taint[name]:
                 continue
             s_before = _st_sample()

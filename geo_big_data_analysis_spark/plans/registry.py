@@ -3,8 +3,23 @@
 Each entry is one implemented operator (or operator composition) from
 SURVEY.md §2, run against the driver's parquet tables, paired with the
 ANSI-SQL oracle DuckDB runs side-by-side (CORRECTNESS gate). Column
-names and float rounding are aligned on both sides; genuinely
-non-SQL-expressible ops register ``oracle=None`` (rows-only check).
+names and float rounding are aligned on both sides.
+
+To add a query, write three things in this order, in the family section
+it belongs to:
+
+1. its oracle: a ``_SQL_*`` constant or a ``_sql_*()`` builder (a shared
+   oracle sits above its first user);
+2. ``@query(_SQL_X)`` -- or ``@query(_SQL_X, bench=False)`` to keep it
+   out of ``bench.py`` -- which registers it in ``REGISTRY`` under its
+   name without ``q_`` and returns the function unchanged;
+3. ``def q_<name>(spark, sf_dir) -> DataFrame``, calling the layers
+   through the module aliases imported at the top (``ga.sssp``,
+   ``sim.pq_encode``, ``win.stream_events``), so a traced run's
+   wrappers are what each call reaches. No top-level function here
+   imports in its body (``tests/test_registry_names.py``); only a
+   kernel nested inside a query, which runs in a Python worker, imports
+   what it needs itself.
 
 Float policy: aggregates that sum many doubles are rounded so the
 rounding unit exceeds worst-case fp reassociation error (sums → 2dp,
@@ -26,38 +41,74 @@ body and its output schema.
 from __future__ import annotations
 
 import math
+import tempfile
 from collections.abc import Callable
 
+import numpy as np
+from pyspark.ml.evaluation import RegressionEvaluator
+from pyspark.ml.regression import GBTRegressor
+from pyspark.ml.tuning import ParamGridBuilder, TrainValidationSplit
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import stats as st
-from ..functions import temporal, text as tx
-from ..functions.stats import linregress_aggs
-from ..functions.geo import grid_cell, haversine_km, in_bbox
-from ..operators import dedup as dd
-from ..operators import dispatch
-from ..operators import sessionize as sz
-from ..operators.similarity import (
-    cosine_topk_bruteforce,
-    cosine_topk_ivf,
-    cosine_topk_srp,
-    cosine_topk_srp_multi,
-    label_centroids,
-    with_cosine,
+from ..functions import geo, polyclip, sentiment as sn, stats as st, strings, temporal, text as tx
+from ..graph import algorithms as ga
+from ..ml import features as mf, lloyd, pipeline as mlp
+from ..operators import (
+    asof,
+    bpe,
+    cleaning,
+    dbscan,
+    dedup as dd,
+    dispatch,
+    kde,
+    knn,
+    lisa as lm,
+    scale as sc,
+    scd,
+    sessionize as sz,
+    similarity as sim,
+    skyline,
+    spatial_join as sj,
+    spatstats,
+    spread as spr,
+    two_phase as tp,
 )
+from ..sources import ann_index as ann, csv as csvs, multimodal as mm, ndjson, raster, tables as tb
 from ..sources.ann_index import (
     _MH_IDX_BANDS,
     _MH_IDX_HASHES,
     _MH_IDX_MOD,
     _MH_IDX_TAU,
     _mh_probe_pairs,
-    ensure_ivfpq_index,
-    ensure_ivfpq_upsert,
-    ensure_minhash_index,
-    ensure_minhash_upsert,
 )
-from ..sources.tables import _t, local_frame, map_rows
+from ..sources.tables import _t
+from ..streaming import ingest, windows as win
+
+#: name -> (query function, its DuckDB oracle SQL), in file order
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {}
+#: the names ``bench.py`` times, in REGISTRY order
+BENCHED: list[str] = []
+
+
+def query(oracle: str, bench: bool = True) -> Callable:
+    """Register the decorated ``q_<name>`` as ``name`` with ``oracle``;
+    ``bench=False`` keeps it out of ``bench.py``'s run. The function is
+    returned unchanged."""
+
+    def register(fn: Callable[[SparkSession, str], DataFrame]):
+        name = fn.__name__.removeprefix("q_")
+        if name == fn.__name__:
+            raise ValueError(f"{fn.__name__}: a query function is named q_<name>")
+        if name in REGISTRY:
+            raise ValueError(f"query {name!r} is registered twice")
+        REGISTRY[name] = (fn, oracle)
+        if bench:
+            BENCHED.append(name)
+        return fn
+
+    return register
+
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -129,6 +180,23 @@ def _sql_lloyd_ctes(src: str, cols: list[str], k: int, iters: int, pre: str = ""
 # Relational core (SURVEY §2.2-§2.7)
 # --------------------------------------------------------------------------
 
+_SQL_PRICING = """
+SELECT l_returnflag, l_linestatus,
+       round(sum(l_quantity), 2) AS sum_qty,
+       round(sum(l_extendedprice), 2) AS sum_base_price,
+       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
+       round(avg(l_quantity), 6) AS avg_qty,
+       round(avg(l_extendedprice), 6) AS avg_price,
+       round(avg(l_discount), 6) AS avg_disc,
+       count(*)::BIGINT AS count_order
+FROM lineitem
+WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+GROUP BY l_returnflag, l_linestatus
+"""
+
+
+@query(_SQL_PRICING)
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4/A7 flagship: TPC-H-Q1-shaped pricing summary over lineitem.
 
@@ -153,22 +221,19 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_PRICING = """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-       round(avg(l_quantity), 6) AS avg_qty,
-       round(avg(l_extendedprice), 6) AS avg_price,
-       round(avg(l_discount), 6) AS avg_disc,
-       count(*)::BIGINT AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
+_SQL_PART_TYPE_REVENUE = """
+SELECT p_type,
+       count(*)::BIGINT AS n_items,
+       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+       round(avg(l_discount), 6) AS avg_discount,
+       count(DISTINCT l_partkey)::BIGINT AS n_parts
+FROM lineitem JOIN part ON l_partkey = p_partkey
+GROUP BY p_type
+ORDER BY p_type
 """
 
 
+@query(_SQL_PART_TYPE_REVENUE)
 def q_part_type_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1/A5 over the part dim (TPC-H-Q14 shape): lineitem ⋈ part on
     partkey with per-type revenue and discount stats. part is a dim
@@ -191,18 +256,18 @@ def q_part_type_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_PART_TYPE_REVENUE = """
-SELECT p_type,
-       count(*)::BIGINT AS n_items,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-       round(avg(l_discount), 6) AS avg_discount,
-       count(DISTINCT l_partkey)::BIGINT AS n_parts
-FROM lineitem JOIN part ON l_partkey = p_partkey
-GROUP BY p_type
-ORDER BY p_type
+_SQL_TOP_REV = """
+SELECT c_custkey, c_name, revenue, n_orders
+FROM (
+  SELECT o_custkey, round(sum(o_totalprice), 2) AS revenue, count(*)::BIGINT AS n_orders
+  FROM orders GROUP BY o_custkey
+) r JOIN customer ON o_custkey = c_custkey
+ORDER BY revenue DESC, c_custkey ASC
+LIMIT 10
 """
 
 
+@query(_SQL_TOP_REV)
 def q_top_revenue_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2+A+O2: orders⋈customer revenue top-10 (broadcast dim join)."""
     orders = _t(spark, sf_dir, "orders")
@@ -218,17 +283,15 @@ def q_top_revenue_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TOP_REV = """
-SELECT c_custkey, c_name, revenue, n_orders
-FROM (
-  SELECT o_custkey, round(sum(o_totalprice), 2) AS revenue, count(*)::BIGINT AS n_orders
-  FROM orders GROUP BY o_custkey
-) r JOIN customer ON o_custkey = c_custkey
-ORDER BY revenue DESC, c_custkey ASC
-LIMIT 10
+_SQL_REGION_ROLLUP = """
+SELECT r_name, n_name, count(*)::BIGINT AS n_customers, round(avg(c_acctbal), 6) AS avg_acctbal
+FROM customer JOIN nation ON c_nationkey = n_nationkey
+JOIN region ON n_regionkey = r_regionkey
+GROUP BY r_name, n_name
 """
 
 
+@query(_SQL_REGION_ROLLUP)
 def q_region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1: two broadcast dim joins + grouped agg (region→nation→customer)."""
     cust = _t(spark, sf_dir, "customer")
@@ -245,14 +308,13 @@ def q_region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_REGION_ROLLUP = """
-SELECT r_name, n_name, count(*)::BIGINT AS n_customers, round(avg(c_acctbal), 6) AS avg_acctbal
-FROM customer JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name, n_name
+_SQL_SEMI = """
+SELECT c_custkey, c_name, c_mktsegment FROM customer
+WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
 """
 
 
+@query(_SQL_SEMI, bench=False)
 def q_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 — left_semi join (EXISTS semantics)."""
     cust = _t(spark, sf_dir, "customer")
@@ -262,12 +324,13 @@ def q_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("c_custkey", "c_name", "c_mktsegment")
 
 
-_SQL_SEMI = """
-SELECT c_custkey, c_name, c_mktsegment FROM customer
-WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+_SQL_ANTI = """
+SELECT c_custkey, c_name FROM customer
+WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
 """
 
 
+@query(_SQL_ANTI, bench=False)
 def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4/U3 — left_anti join (set-difference semantics)."""
     cust = _t(spark, sf_dir, "customer")
@@ -277,12 +340,13 @@ def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("c_custkey", "c_name")
 
 
-_SQL_ANTI = """
-SELECT c_custkey, c_name FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+_SQL_VALUE_COUNTS = """
+SELECT o_orderpriority, count(*)::BIGINT AS n FROM orders
+GROUP BY o_orderpriority ORDER BY n DESC, o_orderpriority ASC
 """
 
 
+@query(_SQL_VALUE_COUNTS, bench=False)
 def q_orderpriority_value_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 — value_counts (group-count ordered desc, deterministic tiebreak)."""
     orders = _t(spark, sf_dir, "orders")
@@ -290,23 +354,6 @@ def q_orderpriority_value_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col("o_orderpriority").asc())
-    )
-
-
-_SQL_VALUE_COUNTS = """
-SELECT o_orderpriority, count(*)::BIGINT AS n FROM orders
-GROUP BY o_orderpriority ORDER BY n DESC, o_orderpriority ASC
-"""
-
-
-def q_missing_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A9 — per-column missing-value census (single pass)."""
-    orders = _t(spark, sf_dir, "orders")
-    return orders.agg(
-        *[
-            F.sum(F.col(c).isNull().cast("bigint")).alias(f"null_{c}")
-            for c in orders.columns
-        ]
     )
 
 
@@ -322,14 +369,15 @@ _SQL_MISSING = _sql_missing(
 )
 
 
-def q_histogram_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A11 — fixed-width histogram banding."""
-    li = _t(spark, sf_dir, "lineitem")
-    band = F.floor((F.col("l_quantity") - 1) / 5).cast("bigint")
-    return (
-        li.groupBy(band.alias("band"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("band")
+@query(_SQL_MISSING, bench=False)
+def q_missing_census(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A9 — per-column missing-value census (single pass)."""
+    orders = _t(spark, sf_dir, "orders")
+    return orders.agg(
+        *[
+            F.sum(F.col(c).isNull().cast("bigint")).alias(f"null_{c}")
+            for c in orders.columns
+        ]
     )
 
 
@@ -339,12 +387,16 @@ FROM lineitem GROUP BY 1 ORDER BY band
 """
 
 
-def q_linregress_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 — correlation + closed-form linear regression."""
+@query(_SQL_HISTOGRAM, bench=False)
+def q_histogram_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A11 — fixed-width histogram banding."""
     li = _t(spark, sf_dir, "lineitem")
-    aggs = linregress_aggs("l_quantity", "l_extendedprice")
-    out = li.agg(*aggs)
-    return out.select(*[F.round(F.col(c), 6).alias(c) for c in out.columns])
+    band = F.floor((F.col("l_quantity") - 1) / 5).cast("bigint")
+    return (
+        li.groupBy(band.alias("band"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .orderBy("band")
+    )
 
 
 _SQL_LINREGRESS = """
@@ -363,6 +415,22 @@ FROM s
 """
 
 
+@query(_SQL_LINREGRESS, bench=False)
+def q_linregress_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A12 — correlation + closed-form linear regression."""
+    li = _t(spark, sf_dir, "lineitem")
+    aggs = st.linregress_aggs("l_quantity", "l_extendedprice")
+    out = li.agg(*aggs)
+    return out.select(*[F.round(F.col(c), 6).alias(c) for c in out.columns])
+
+
+_SQL_PERCENTILE = """
+SELECT count(*)::BIGINT AS n_above, round(avg(o_totalprice), 4) AS avg_above
+FROM orders WHERE o_totalprice > (SELECT quantile_cont(o_totalprice, 0.95) FROM orders)
+"""
+
+
+@query(_SQL_PERCENTILE, bench=False)
 def q_percentile_filter_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F17/F18 — exact-percentile threshold filter (two-phase, stays lazy
     via broadcast cross-join of the 1-row stat)."""
@@ -378,12 +446,15 @@ def q_percentile_filter_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_PERCENTILE = """
-SELECT count(*)::BIGINT AS n_above, round(avg(o_totalprice), 4) AS avg_above
-FROM orders WHERE o_totalprice > (SELECT quantile_cont(o_totalprice, 0.95) FROM orders)
+_SQL_UNION = """
+WITH u AS (
+  SELECT l_partkey AS key FROM lineitem UNION ALL SELECT l_suppkey FROM lineitem
+), g AS (SELECT key, count(*)::BIGINT AS n FROM u GROUP BY key)
+SELECT count(*)::BIGINT AS n_distinct_keys, sum(n)::BIGINT AS n_total FROM g
 """
 
 
+@query(_SQL_UNION, bench=False)
 def q_union_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1/U4 — vertical union of two projections + distinct count."""
     li = _t(spark, sf_dir, "lineitem")
@@ -400,29 +471,6 @@ def q_union_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_UNION = """
-WITH u AS (
-  SELECT l_partkey AS key FROM lineitem UNION ALL SELECT l_suppkey FROM lineitem
-), g AS (SELECT key, count(*)::BIGINT AS n FROM u GROUP BY key)
-SELECT count(*)::BIGINT AS n_distinct_keys, sum(n)::BIGINT AS n_total FROM g
-"""
-
-
-def q_rank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3 — rank over global ordering, via the two-phase
-    range-partitioned plan (`operators/two_phase.global_rank`): the
-    supplier table is a dim at sf0.1 but grows with SF, and a naive
-    global window would single-partition it."""
-    from ..operators.two_phase import global_rank
-
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal")
-    return global_rank(
-        sup, [F.col("s_acctbal").desc()], rank_keys=["s_acctbal"], out="bal_rank"
-    ).select(
-        "s_suppkey", "s_name", F.round("s_acctbal", 4).alias("acctbal"), "bal_rank"
-    )
-
-
 _SQL_RANK = """
 SELECT s_suppkey, s_name, round(s_acctbal, 4) AS acctbal,
        rank() OVER (ORDER BY s_acctbal DESC)::BIGINT AS bal_rank
@@ -430,21 +478,18 @@ FROM supplier
 """
 
 
-def q_avg_rank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3 with the reference's *actual* tie semantics — pandas
-    ``rank(method='average')`` (lab4 nb cell 13: `.rank(ascending=False)`
-    averages ordinal positions over ties), not SQL ``rank``. Two-phase
-    range-partitioned row_number + avg over the tie group
-    (`operators/two_phase.global_avg_rank`)."""
-    from ..operators.two_phase import global_avg_rank
-
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
-    return global_avg_rank(
-        sup,
-        [F.col("s_acctbal").desc(), F.col("s_suppkey").asc()],
-        rank_keys=["s_acctbal"],
-        out="avg_rank",
-    ).select("s_suppkey", F.round("s_acctbal", 4).alias("acctbal"), "avg_rank")
+@query(_SQL_RANK, bench=False)
+def q_rank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """W3 — rank over global ordering, via the two-phase
+    range-partitioned plan (`operators/two_phase.global_rank`): the
+    supplier table is a dim at sf0.1 but grows with SF, and a naive
+    global window would single-partition it."""
+    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal")
+    return tp.global_rank(
+        sup, [F.col("s_acctbal").desc()], rank_keys=["s_acctbal"], out="bal_rank"
+    ).select(
+        "s_suppkey", "s_name", F.round("s_acctbal", 4).alias("acctbal"), "bal_rank"
+    )
 
 
 _SQL_AVG_RANK = """
@@ -459,18 +504,41 @@ FROM rn
 """
 
 
+@query(_SQL_AVG_RANK)
+def q_avg_rank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """W3 with the reference's *actual* tie semantics — pandas
+    ``rank(method='average')`` (lab4 nb cell 13: `.rank(ascending=False)`
+    averages ordinal positions over ties), not SQL ``rank``. Two-phase
+    range-partitioned row_number + avg over the tie group
+    (`operators/two_phase.global_avg_rank`)."""
+    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
+    return tp.global_avg_rank(
+        sup,
+        [F.col("s_acctbal").desc(), F.col("s_suppkey").asc()],
+        rank_keys=["s_acctbal"],
+        out="avg_rank",
+    ).select("s_suppkey", F.round("s_acctbal", 4).alias("acctbal"), "avg_rank")
+
+
+_SQL_PARETO = """
+SELECT user_id, n,
+       round(sum(n) OVER (ORDER BY n DESC, user_id ASC ROWS UNBOUNDED PRECEDING)
+             / (SELECT sum(n) FROM (SELECT count(*) AS n FROM events GROUP BY user_id)), 6) AS cum_share
+FROM (SELECT user_id, count(*)::BIGINT AS n FROM events GROUP BY user_id)
+"""
+
+
+@query(_SQL_PARETO)
 def q_pareto_user_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A15/W4 — cumulative contribution share (top-users Pareto audit).
     The running sum is the two-phase range-partitioned kind
     (`operators/two_phase.global_cumsum`): distinct users scale with
     the data, so the naive global cumsum window would single-partition
     the aggregate. Order (n desc, user_id) is total → deterministic."""
-    from ..operators.two_phase import global_cumsum
-
     ev = _t(spark, sf_dir, "events")
     counts = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     total = counts.agg(F.sum("n").alias("_total"))
-    cum = global_cumsum(
+    cum = tp.global_cumsum(
         counts,
         [F.col("n").desc(), F.col("user_id").asc()],
         "n",
@@ -483,23 +551,9 @@ def q_pareto_user_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_PARETO = """
-SELECT user_id, n,
-       round(sum(n) OVER (ORDER BY n DESC, user_id ASC ROWS UNBOUNDED PRECEDING)
-             / (SELECT sum(n) FROM (SELECT count(*) AS n FROM events GROUP BY user_id)), 6) AS cum_share
-FROM (SELECT user_id, count(*)::BIGINT AS n FROM events GROUP BY user_id)
-"""
-
-
 # --------------------------------------------------------------------------
 # Temporal analytics (SURVEY §2.5, §2.8, lab-1 pipeline)
 # --------------------------------------------------------------------------
-
-def q_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A14 — tumbling 1-hour counts."""
-    ev = _t(spark, sf_dir, "events")
-    return sz.hourly_counts(ev, "ts").orderBy("bucket_ts")
-
 
 _SQL_HOURLY = """
 SELECT date_trunc('hour', ts) AS bucket_ts, count(*)::BIGINT AS n
@@ -507,10 +561,11 @@ FROM events GROUP BY 1 ORDER BY bucket_ts
 """
 
 
-def q_high_density_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lab-1 anomaly detection: hourly buckets with n > μ+2σ (population σ)."""
+@query(_SQL_HOURLY, bench=False)
+def q_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A14 — tumbling 1-hour counts."""
     ev = _t(spark, sf_dir, "events")
-    return sz.anomaly_threshold_filter(sz.hourly_counts(ev, "ts"), sigmas=2.0)
+    return sz.hourly_counts(ev, "ts").orderBy("bucket_ts")
 
 
 _SQL_HIGH_DENSITY = """
@@ -521,11 +576,11 @@ SELECT bucket_ts, n FROM h, s WHERE n > mu + 2.0 * sigma
 """
 
 
-def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W2+A4 — gap-based sessionization (30-min gap) + per-session stats."""
+@query(_SQL_HIGH_DENSITY)
+def q_high_density_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lab-1 anomaly detection: hourly buckets with n > μ+2σ (population σ)."""
     ev = _t(spark, sf_dir, "events")
-    sessions = sz.sessionize(ev, "ts", gap_minutes=30.0, keys=["user_id"])
-    return sz.session_stats(sessions, "ts", keys=["user_id"])
+    return sz.anomaly_threshold_filter(sz.hourly_counts(ev, "ts"), sigmas=2.0)
 
 
 _SQL_SESSIONS = """
@@ -545,6 +600,27 @@ FROM s GROUP BY user_id, session_id
 """
 
 
+@query(_SQL_SESSIONS)
+def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """W2+A4 — gap-based sessionization (30-min gap) + per-session stats."""
+    ev = _t(spark, sf_dir, "events")
+    sessions = sz.sessionize(ev, "ts", gap_minutes=30.0, keys=["user_id"])
+    return sz.session_stats(sessions, "ts", keys=["user_id"])
+
+
+_SQL_DRILLDOWN = """
+WITH h AS (SELECT date_trunc('hour', ts) AS bucket_ts, count(*)::BIGINT AS n
+           FROM events GROUP BY 1),
+s AS (SELECT avg(n) AS mu, coalesce(stddev_pop(n), 0.0) AS sigma FROM h),
+p AS (SELECT bucket_ts AS session_start, bucket_ts + INTERVAL 1 HOUR AS session_end
+      FROM h, s WHERE n > mu + 1.0 * sigma)
+SELECT p.session_start, e.event_type, count(*)::BIGINT AS n, round(sum(e.value), 4) AS sum_value
+FROM events e JOIN p ON e.ts >= p.session_start AND e.ts < p.session_end
+GROUP BY p.session_start, e.event_type
+"""
+
+
+@query(_SQL_DRILLDOWN)
 def q_session_drilldown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J8 — range join of events into high-density periods, executed as
     the bucketed hash join (`sessionize.bucketed_range_join`): periods
@@ -566,31 +642,6 @@ def q_session_drilldown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_DRILLDOWN = """
-WITH h AS (SELECT date_trunc('hour', ts) AS bucket_ts, count(*)::BIGINT AS n
-           FROM events GROUP BY 1),
-s AS (SELECT avg(n) AS mu, coalesce(stddev_pop(n), 0.0) AS sigma FROM h),
-p AS (SELECT bucket_ts AS session_start, bucket_ts + INTERVAL 1 HOUR AS session_end
-      FROM h, s WHERE n > mu + 1.0 * sigma)
-SELECT p.session_start, e.event_type, count(*)::BIGINT AS n, round(sum(e.value), 4) AS sum_value
-FROM events e JOIN p ON e.ts >= p.session_start AND e.ts < p.session_end
-GROUP BY p.session_start, e.event_type
-"""
-
-
-def q_dow_eventtype_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2 — dow(Monday=0) × event_type pivoted count matrix."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.withColumn("dow", temporal.dayofweek_monday0("ts"))
-        .groupBy("dow")
-        .pivot("event_type", EVENT_TYPES)
-        .count()
-        .na.fill(0)
-        .orderBy("dow")
-    )
-
-
 _SQL_PIVOT = """
 SELECT (isodow(ts) - 1)::INT AS dow,
        sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)::BIGINT AS click,
@@ -602,13 +653,17 @@ FROM events GROUP BY 1 ORDER BY dow
 """
 
 
-def q_time_interval_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2.8 — rule-based time-of-day bucketing (weekday-aware when chain)."""
+@query(_SQL_PIVOT)
+def q_dow_eventtype_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A2 — dow(Monday=0) × event_type pivoted count matrix."""
     ev = _t(spark, sf_dir, "events")
     return (
-        ev.withColumn("bucket", temporal.time_interval_bucket("ts"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.avg("value"), 6).alias("avg_value"))
+        ev.withColumn("dow", temporal.dayofweek_monday0("ts"))
+        .groupBy("dow")
+        .pivot("event_type", EVENT_TYPES)
+        .count()
+        .na.fill(0)
+        .orderBy("dow")
     )
 
 
@@ -624,16 +679,14 @@ FROM events GROUP BY 1
 """
 
 
-def q_event_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5 — multi-agg with share-of-group (positive-rate pattern)."""
+@query(_SQL_TIME_BUCKETS, bench=False)
+def q_time_interval_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """2.8 — rule-based time-of-day bucketing (weekday-aware when chain)."""
     ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.avg("value"), 6).alias("avg_value"),
-        F.round(F.stddev_samp("value"), 6).alias("std_value"),
-        F.round(F.min("value"), 4).alias("min_value"),
-        F.round(F.max("value"), 4).alias("max_value"),
-        F.round(F.avg((F.col("value") > 100).cast("double")), 6).alias("high_rate"),
+    return (
+        ev.withColumn("bucket", temporal.time_interval_bucket("ts"))
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("n"), F.round(F.avg("value"), 6).alias("avg_value"))
     )
 
 
@@ -648,6 +701,28 @@ FROM events GROUP BY event_type
 """
 
 
+@query(_SQL_VALUE_STATS, bench=False)
+def q_event_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A5 — multi-agg with share-of-group (positive-rate pattern)."""
+    ev = _t(spark, sf_dir, "events")
+    return ev.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.round(F.avg("value"), 6).alias("avg_value"),
+        F.round(F.stddev_samp("value"), 6).alias("std_value"),
+        F.round(F.min("value"), 4).alias("min_value"),
+        F.round(F.max("value"), 4).alias("max_value"),
+        F.round(F.avg((F.col("value") > 100).cast("double")), 6).alias("high_rate"),
+    )
+
+
+_SQL_JSON = """
+SELECT (json_extract_string(props, '$.k')::BIGINT % 10) AS k_mod,
+       count(*)::BIGINT AS n, sum(json_extract_string(props, '$.k')::BIGINT)::BIGINT AS sum_k
+FROM events GROUP BY 1 ORDER BY k_mod
+"""
+
+
+@query(_SQL_JSON, bench=False)
 def q_json_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4-adjacent — JSON field extraction from the props column."""
     ev = _t(spark, sf_dir, "events")
@@ -660,13 +735,15 @@ def q_json_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_JSON = """
-SELECT (json_extract_string(props, '$.k')::BIGINT % 10) AS k_mod,
-       count(*)::BIGINT AS n, sum(json_extract_string(props, '$.k')::BIGINT)::BIGINT AS sum_k
-FROM events GROUP BY 1 ORDER BY k_mod
+_SQL_NDJSON_SCAN = """
+SELECT source, count(*)::BIGINT AS n_docs, sum(n_chars)::BIGINT AS sum_chars,
+       min(doc_id) AS min_id, max(doc_id) AS max_id
+FROM documents WHERE doc_id % 3 = 0
+GROUP BY source ORDER BY source
 """
 
 
+@query(_SQL_NDJSON_SCAN)
 def q_ndjson_scan_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4+S5 — NDJSON scan with malformed-row skip and semi-join
     pushdown (lab4 load_business_data / load_review_data, cell 6,
@@ -674,22 +751,18 @@ def q_ndjson_scan_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrupt lines), scan back keeping only doc_ids ≡ 0 (mod 3), then
     aggregate per source. The oracle reads the parquet directly — a
     match proves the NDJSON path loses/garbles nothing."""
-    import tempfile
-
-    from ..sources.ndjson import read_ndjson_semi
-
     docs = _t(spark, sf_dir, "documents")
     tmp = tempfile.mkdtemp(prefix="ndjson_scan_")
     path = f"{tmp}/docs.ndjson"
     docs.select(F.to_json(F.struct(*docs.columns)).alias("value")).write.mode(
         "overwrite"
     ).text(path)
-    local_frame(
+    tb.local_frame(
         spark,
         [("this line is {{{ not json",), ('{"doc_id": 1 "bad": true}',)], "value string"
     ).write.mode("append").text(path)
     ids = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id")
-    back = read_ndjson_semi(spark, path, ids, "doc_id", docs.schema)
+    back = ndjson.read_ndjson_semi(spark, path, ids, "doc_id", docs.schema)
     return (
         back.groupBy("source")
         .agg(
@@ -702,14 +775,14 @@ def q_ndjson_scan_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_NDJSON_SCAN = """
-SELECT source, count(*)::BIGINT AS n_docs, sum(n_chars)::BIGINT AS sum_chars,
-       min(doc_id) AS min_id, max(doc_id) AS max_id
-FROM documents WHERE doc_id % 3 = 0
-GROUP BY source ORDER BY source
+_SQL_CSV_SCAN = """
+SELECT hour(ts) AS hour, count(*)::BIGINT AS n,
+       round(sum(value), 4) AS sum_value, min(event_id) AS min_id
+FROM events GROUP BY 1
 """
 
 
+@query(_SQL_CSV_SCAN)
 def q_csv_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1+S2+S3 — CSV scan with declared schema, custom ';' delimiter
     and 12-hour timestamp parsing (the reference's
@@ -719,10 +792,6 @@ def q_csv_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly. The oracle reads the parquet directly — a match proves the
     CSV scan + format parse lose nothing (incl. the AM/PM noon/midnight
     edge)."""
-    import tempfile
-
-    from ..sources.csv import read_csv
-
     ev = _t(spark, sf_dir, "events")
     tmp = tempfile.mkdtemp(prefix="csv_scan_")
     path = f"{tmp}/events.csv"
@@ -733,7 +802,7 @@ def q_csv_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     ).write.mode("overwrite").option("header", "true").option("sep", ";").csv(path)
-    back = read_csv(
+    back = csvs.read_csv(
         spark,
         path,
         schema="event_id bigint, ts string, user_id bigint, event_type string, value double",
@@ -748,13 +817,6 @@ def q_csv_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("event_id").alias("min_id"),
         )
     )
-
-
-_SQL_CSV_SCAN = """
-SELECT hour(ts) AS hour, count(*)::BIGINT AS n,
-       round(sum(value), 4) AS sum_value, min(event_id) AS min_id
-FROM events GROUP BY 1
-"""
 
 
 # --------------------------------------------------------------------------
@@ -790,6 +852,17 @@ def _inside_convex_sql(poly: list[tuple[float, float]]) -> str:
     return " AND ".join(terms)
 
 
+def _sql_polygon_points() -> str:
+    selects = [
+        f"SELECT {pid} AS poly_id, count(*)::BIGINT AS n_points,"
+        f" round(avg(value), 6) AS avg_value FROM pts WHERE {_inside_convex_sql(poly)}"
+        for pid, poly in enumerate(_POLYGONS)
+    ]
+    body = "\nUNION ALL\n".join(selects)
+    return f"WITH pts AS ({_DERIVED_POINTS_SQL})\n{body}\nORDER BY poly_id"
+
+
+@query(_sql_polygon_points(), bench=False)
 def q_polygon_points_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5, the full grid-join shape (gpd.sjoin predicate='within',
     lab2 nb cell 20 / lab3a cell 15): polygons pre-expand to covering
@@ -799,8 +872,6 @@ def q_polygon_points_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-polygon point count + mean value. The oracle skips the grid
     (a physical detail) and tests the same half-planes directly —
     a match proves the cell cover loses no points."""
-    from ..operators.spatial_join import point_in_cell_join
-
     o_lat, o_lon, cell = 40.5, -74.3, 0.05
     cell_rows = []
     for pid, poly in enumerate(_POLYGONS):
@@ -813,10 +884,10 @@ def q_polygon_points_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             for gx in range(gx0, gx1 + 1)
             for gy in range(gy0, gy1 + 1)
         ]
-    cells = local_frame(spark, cell_rows, "gx bigint, gy bigint, poly_id int")
+    cells = tb.local_frame(spark, cell_rows, "gx bigint, gy bigint, poly_id int")
 
     pts = _derived_points(_t(spark, sf_dir, "events"))
-    joined = point_in_cell_join(pts, F.broadcast(cells), "lat", "lon", o_lat, o_lon, cell)
+    joined = sj.point_in_cell_join(pts, F.broadcast(cells), "lat", "lon", o_lat, o_lon, cell)
     inside = F.lit(False)
     for pid, poly in enumerate(_POLYGONS):
         inside = F.when(F.col("poly_id") == pid, _inside_convex_expr(poly, "lon", "lat")).otherwise(inside)
@@ -831,29 +902,6 @@ def q_polygon_points_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_polygon_points() -> str:
-    selects = [
-        f"SELECT {pid} AS poly_id, count(*)::BIGINT AS n_points,"
-        f" round(avg(value), 6) AS avg_value FROM pts WHERE {_inside_convex_sql(poly)}"
-        for pid, poly in enumerate(_POLYGONS)
-    ]
-    body = "\nUNION ALL\n".join(selects)
-    return f"WITH pts AS ({_DERIVED_POINTS_SQL})\n{body}\nORDER BY poly_id"
-
-
-def q_geo_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F4 + grid-cell assignment + A13-style 2-D bin density."""
-    pts = _derived_points(_t(spark, sf_dir, "events"))
-    pts = pts.filter(in_bbox("lat", "lon", 40.55, 40.95, -74.25, -73.75))
-    gx, gy = grid_cell("lat", "lon", 40.5, -74.3, 0.05)
-    return (
-        pts.withColumn("gx", gx)
-        .withColumn("gy", gy)
-        .groupBy("gx", "gy")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.avg("value"), 6).alias("avg_value"))
-    )
-
-
 _SQL_GRID = f"""
 WITH p AS ({_DERIVED_POINTS_SQL})
 SELECT CAST(floor((lon - (-74.3)) / 0.05) AS BIGINT) AS gx,
@@ -865,6 +913,31 @@ GROUP BY 1, 2
 """
 
 
+@query(_SQL_GRID)
+def q_geo_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F4 + grid-cell assignment + A13-style 2-D bin density."""
+    pts = _derived_points(_t(spark, sf_dir, "events"))
+    pts = pts.filter(geo.in_bbox("lat", "lon", 40.55, 40.95, -74.25, -73.75))
+    gx, gy = geo.grid_cell("lat", "lon", 40.5, -74.3, 0.05)
+    return (
+        pts.withColumn("gx", gx)
+        .withColumn("gy", gy)
+        .groupBy("gx", "gy")
+        .agg(F.count(F.lit(1)).alias("n"), F.round(F.avg("value"), 6).alias("avg_value"))
+    )
+
+
+_SQL_EXTENT = f"""
+WITH p AS ({_DERIVED_POINTS_SQL})
+SELECT event_type,
+       round(min(lon), 6) AS min_lon, round(min(lat), 6) AS min_lat,
+       round(max(lon), 6) AS max_lon, round(max(lat), 6) AS max_lat,
+       count(*)::BIGINT AS n
+FROM p GROUP BY event_type
+"""
+
+
+@query(_SQL_EXTENT, bench=False)
 def q_spatial_extent_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A16 — spatial extent aggregate (nodes.total_bounds, lab3a nb
     cell 5): per-type bbox (min/max lon/lat) + point count in one
@@ -880,23 +953,31 @@ def q_spatial_extent_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_EXTENT = f"""
-WITH p AS ({_DERIVED_POINTS_SQL})
-SELECT event_type,
-       round(min(lon), 6) AS min_lon, round(min(lat), 6) AS min_lat,
-       round(max(lon), 6) AS max_lon, round(max(lat), 6) AS max_lat,
-       count(*)::BIGINT AS n
-FROM p GROUP BY event_type
+_SQL_HOT_COLD = f"""
+WITH p AS ({_DERIVED_POINTS_SQL}),
+cells AS (
+  SELECT CAST(floor((lon - (-74.3)) / 0.05) AS BIGINT) AS gx,
+         CAST(floor((lat - 40.5) / 0.05) AS BIGINT) AS gy,
+         count(*)::BIGINT AS n, avg(value) AS avg_value
+  FROM p GROUP BY 1, 2
+),
+t AS (SELECT quantile_cont(n, 0.75) AS q75, quantile_cont(n, 0.25) AS q25 FROM cells)
+SELECT CASE WHEN n >= q75 THEN 'hot' WHEN n <= q25 THEN 'cold' ELSE 'mid' END AS band,
+       count(*)::BIGINT AS n_cells, sum(n)::BIGINT AS n_points,
+       round(avg(avg_value), 6) AS avg_cell_value
+FROM cells CROSS JOIN t
+GROUP BY 1
 """
 
 
+@query(_SQL_HOT_COLD)
 def q_hot_cold_grid_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M13+F18 — hot/cold-spot extraction (lab4 nb cell 18: cluster
     stats → quantile threshold): grid-cell densities → exact q75/q25
     thresholds of the per-cell counts (two-phase, broadcast 1-row
     stat) → hot/mid/cold banding, summarized per band."""
     pts = _derived_points(_t(spark, sf_dir, "events"))
-    gx, gy = grid_cell("lat", "lon", 40.5, -74.3, 0.05)
+    gx, gy = geo.grid_cell("lat", "lon", 40.5, -74.3, 0.05)
     cells = (
         pts.withColumn("gx", gx)
         .withColumn("gy", gy)
@@ -920,37 +1001,6 @@ def q_hot_cold_grid_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_HOT_COLD = f"""
-WITH p AS ({_DERIVED_POINTS_SQL}),
-cells AS (
-  SELECT CAST(floor((lon - (-74.3)) / 0.05) AS BIGINT) AS gx,
-         CAST(floor((lat - 40.5) / 0.05) AS BIGINT) AS gy,
-         count(*)::BIGINT AS n, avg(value) AS avg_value
-  FROM p GROUP BY 1, 2
-),
-t AS (SELECT quantile_cont(n, 0.75) AS q75, quantile_cont(n, 0.25) AS q25 FROM cells)
-SELECT CASE WHEN n >= q75 THEN 'hot' WHEN n <= q25 THEN 'cold' ELSE 'mid' END AS band,
-       count(*)::BIGINT AS n_cells, sum(n)::BIGINT AS n_points,
-       round(avg(avg_value), 6) AS avg_cell_value
-FROM cells CROSS JOIN t
-GROUP BY 1
-"""
-
-
-def q_haversine_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2.8-geo — haversine distance to a fixed center, per event type."""
-    pts = _derived_points(_t(spark, sf_dir, "events"))
-    d = haversine_km("lat", "lon", F.lit(40.7580), F.lit(-73.9855))
-    return (
-        pts.withColumn("dist_km", d)
-        .groupBy("event_type")
-        .agg(
-            F.round(F.avg("dist_km"), 6).alias("avg_dist_km"),
-            F.round(F.max("dist_km"), 6).alias("max_dist_km"),
-        )
-    )
-
-
 _SQL_HAVERSINE = f"""
 WITH p AS ({_DERIVED_POINTS_SQL})
 SELECT event_type,
@@ -966,10 +1016,39 @@ FROM p GROUP BY event_type
 """
 
 
+@query(_SQL_HAVERSINE)
+def q_haversine_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """2.8-geo — haversine distance to a fixed center, per event type."""
+    pts = _derived_points(_t(spark, sf_dir, "events"))
+    d = geo.haversine_km("lat", "lon", F.lit(40.7580), F.lit(-73.9855))
+    return (
+        pts.withColumn("dist_km", d)
+        .groupBy("event_type")
+        .agg(
+            F.round(F.avg("dist_km"), 6).alias("avg_dist_km"),
+            F.round(F.max("dist_km"), 6).alias("max_dist_km"),
+        )
+    )
+
+
 # --------------------------------------------------------------------------
 # Text / LLM-pipeline operators (documents table)
 # --------------------------------------------------------------------------
 
+_CLEAN_SQL = (
+    "trim(regexp_replace(regexp_replace(regexp_replace(lower(text),"
+    " 'http\\S+|www\\S+|https\\S+', ' ', 'g'),"
+    " '[^a-zA-Z\\s]', ' ', 'g'), '\\s+', ' ', 'g'))"
+)
+
+
+_SQL_DEDUP = f"""
+SELECT min(doc_id)::BIGINT AS keep_id, count(*)::BIGINT AS n_copies
+FROM documents GROUP BY {_CLEAN_SQL}
+"""
+
+
+@query(_SQL_DEDUP)
 def q_exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup groups on normalized text (hash-groupBy scale path;
     oracle groups on the normalized text itself)."""
@@ -982,18 +1061,16 @@ def q_exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CLEAN_SQL = (
-    "trim(regexp_replace(regexp_replace(regexp_replace(lower(text),"
-    " 'http\\S+|www\\S+|https\\S+', ' ', 'g'),"
-    " '[^a-zA-Z\\s]', ' ', 'g'), '\\s+', ' ', 'g'))"
-)
-
-_SQL_DEDUP = f"""
-SELECT min(doc_id)::BIGINT AS keep_id, count(*)::BIGINT AS n_copies
-FROM documents GROUP BY {_CLEAN_SQL}
+_SQL_TOKENS = """
+SELECT source, count(*)::BIGINT AS n_docs,
+       sum(len(regexp_split_to_array(trim(text), '\\s+')))::BIGINT AS total_tokens,
+       round(avg(len(regexp_split_to_array(trim(text), '\\s+'))), 6) AS avg_tokens,
+       sum(length(text))::BIGINT AS total_chars
+FROM documents GROUP BY source
 """
 
 
+@query(_SQL_TOKENS)
 def q_token_stats_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting per source (whitespace tokens + char length)."""
     docs = _t(spark, sf_dir, "documents")
@@ -1009,15 +1086,46 @@ def q_token_stats_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TOKENS = """
-SELECT source, count(*)::BIGINT AS n_docs,
-       sum(len(regexp_split_to_array(trim(text), '\\s+')))::BIGINT AS total_tokens,
-       round(avg(len(regexp_split_to_array(trim(text), '\\s+'))), 6) AS avg_tokens,
-       sum(length(text))::BIGINT AS total_chars
-FROM documents GROUP BY source
+_PII_PLANT_SQL = (
+    "text || ' contact user' || doc_id::VARCHAR || '@mail.example.com ref '"
+    " || (doc_id * 37 + 100000)::VARCHAR"
+    " || ' via https://ex.example.com/t?u=' || doc_id::VARCHAR"
+)
+
+
+_PII_URL = r"https?://\S+"
+
+
+_PII_EMAIL = r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"
+
+
+_PII_DIGITS = r"[0-9]{6,}"
+
+
+_SQL_PII_SCRUB = f"""
+WITH planted AS (SELECT source, {_PII_PLANT_SQL} AS ptext FROM documents),
+scrubbed AS (
+  SELECT source, ptext,
+         regexp_replace(regexp_replace(regexp_replace(ptext,
+           '{_PII_URL}', '<URL>', 'g'),
+           '{_PII_EMAIL}', '<EMAIL>', 'g'),
+           '{_PII_DIGITS}', '<NUM>', 'g') AS stext
+  FROM planted
+)
+SELECT source,
+       count(*)::BIGINT AS n_docs,
+       sum(len(regexp_extract_all(ptext, '{_PII_URL}')))::BIGINT AS n_urls,
+       sum(len(regexp_extract_all(ptext, '{_PII_EMAIL}')))::BIGINT AS n_emails,
+       sum(len(regexp_extract_all(ptext, '{_PII_DIGITS}')))::BIGINT AS n_digit_runs,
+       sum(length(ptext) - length(stext))::BIGINT AS chars_removed,
+       sum(len(regexp_extract_all(stext, '{_PII_URL}'))
+           + len(regexp_extract_all(stext, '{_PII_EMAIL}'))
+           + len(regexp_extract_all(stext, '{_PII_DIGITS}')))::BIGINT AS n_residual
+FROM scrubbed GROUP BY source ORDER BY source
 """
 
 
+@query(_SQL_PII_SCRUB)
 def q_pii_scrub_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-corpus PII scrub + audit (extension op, same family as
     quality/token stats): deterministic synthetic PII is planted per doc
@@ -1065,38 +1173,19 @@ def q_pii_scrub_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PII_PLANT_SQL = (
-    "text || ' contact user' || doc_id::VARCHAR || '@mail.example.com ref '"
-    " || (doc_id * 37 + 100000)::VARCHAR"
-    " || ' via https://ex.example.com/t?u=' || doc_id::VARCHAR"
+def _sql_top_keywords() -> str:
+    stoplist = ", ".join(f"'{w}'" for w in tx.STOPWORDS)
+    return f"""
+WITH toks AS (
+  SELECT unnest(string_split({_CLEAN_SQL}, ' ')) AS tok FROM documents
 )
-_PII_URL = r"https?://\S+"
-_PII_EMAIL = r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"
-_PII_DIGITS = r"[0-9]{6,}"
-
-_SQL_PII_SCRUB = f"""
-WITH planted AS (SELECT source, {_PII_PLANT_SQL} AS ptext FROM documents),
-scrubbed AS (
-  SELECT source, ptext,
-         regexp_replace(regexp_replace(regexp_replace(ptext,
-           '{_PII_URL}', '<URL>', 'g'),
-           '{_PII_EMAIL}', '<EMAIL>', 'g'),
-           '{_PII_DIGITS}', '<NUM>', 'g') AS stext
-  FROM planted
-)
-SELECT source,
-       count(*)::BIGINT AS n_docs,
-       sum(len(regexp_extract_all(ptext, '{_PII_URL}')))::BIGINT AS n_urls,
-       sum(len(regexp_extract_all(ptext, '{_PII_EMAIL}')))::BIGINT AS n_emails,
-       sum(len(regexp_extract_all(ptext, '{_PII_DIGITS}')))::BIGINT AS n_digit_runs,
-       sum(length(ptext) - length(stext))::BIGINT AS chars_removed,
-       sum(len(regexp_extract_all(stext, '{_PII_URL}'))
-           + len(regexp_extract_all(stext, '{_PII_EMAIL}'))
-           + len(regexp_extract_all(stext, '{_PII_DIGITS}')))::BIGINT AS n_residual
-FROM scrubbed GROUP BY source ORDER BY source
+SELECT tok, count(*)::BIGINT AS n FROM toks
+WHERE length(tok) > 3 AND tok NOT IN ({stoplist})
+GROUP BY tok ORDER BY n DESC, tok ASC LIMIT 15
 """
 
 
+@query(_sql_top_keywords())
 def q_top_keywords_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyword extraction (lab4 nb cell 16, json 991 ``extract_keywords``):
     clean → tokenize → stopword + length>3 filter → global top-15 by
@@ -1113,18 +1202,13 @@ def q_top_keywords_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_top_keywords() -> str:
-    stoplist = ", ".join(f"'{w}'" for w in tx.STOPWORDS)
-    return f"""
-WITH toks AS (
-  SELECT unnest(string_split({_CLEAN_SQL}, ' ')) AS tok FROM documents
-)
-SELECT tok, count(*)::BIGINT AS n FROM toks
-WHERE length(tok) > 3 AND tok NOT IN ({stoplist})
-GROUP BY tok ORDER BY n DESC, tok ASC LIMIT 15
+_SQL_LANG = f"""
+SELECT lang, {tx.lang_id_oracle_sql('text')} AS pred_lang, count(*)::BIGINT AS n
+FROM documents GROUP BY 1, 2
 """
 
 
+@query(_SQL_LANG, bench=False)
 def q_lang_id_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-based language-ID heuristic vs the labeled lang column."""
     docs = _t(spark, sf_dir, "documents")
@@ -1135,19 +1219,8 @@ def q_lang_id_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_LANG = f"""
-SELECT lang, {tx.lang_id_oracle_sql('text')} AS pred_lang, count(*)::BIGINT AS n
-FROM documents GROUP BY 1, 2
-"""
-
-
-def q_quality_score_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Doc-quality scoring: length/punct/stopword composite per doc."""
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", tx.quality_score("text").alias("quality"))
-
-
 _STOPWORDS_SQL = "[" + ", ".join(f"'{w}'" for w in tx.STOPWORDS) + "]"
+
 
 _SQL_QUALITY = f"""
 WITH q AS (
@@ -1167,23 +1240,18 @@ FROM q
 """
 
 
-def q_minhash_near_dup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup detection (shingle→minhash→band→bucket-join→
-    exact-Jaccard verify). 64 hashes / 32 bands × 2 rows ⇒ candidate
-    recall ≈ 1-(1-j²)^32 (>1-1e-13 at j=0.8), so the output equals the
-    oracle's brute-force all-pairs Jaccard≥0.8 — LSH is purely the scale
-    path (no cross product; integer band-hash shuffle keys)."""
+@query(_SQL_QUALITY)
+def q_quality_score_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Doc-quality scoring: length/punct/stopword composite per doc."""
     docs = _t(spark, sf_dir, "documents")
-    out = dd.minhash_near_dup_pairs(
-        docs, "text", "doc_id", jaccard_threshold=0.8, num_hashes=64, bands=32
-    )
-    return out.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+    return docs.select("doc_id", tx.quality_score("text").alias("quality"))
 
 
 _SHINGLES_SQL = (
     "list_distinct([array_to_string(toks[i:i+2], ' ') "
     "for i in range(1, greatest(len(toks)-2, 1)+1)])"
 )
+
 
 _SQL_MINHASH_NEAR_DUP = f"""
 WITH docs AS (SELECT doc_id, {_CLEAN_SQL} AS ct FROM documents),
@@ -1201,6 +1269,91 @@ SELECT doc_a, doc_b, round(jaccard, 6) AS jaccard FROM pairs WHERE jaccard >= 0.
 """
 
 
+@query(_SQL_MINHASH_NEAR_DUP)
+def q_minhash_near_dup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash+LSH near-dup detection (shingle→minhash→band→bucket-join→
+    exact-Jaccard verify). 64 hashes / 32 bands × 2 rows ⇒ candidate
+    recall ≈ 1-(1-j²)^32 (>1-1e-13 at j=0.8), so the output equals the
+    oracle's brute-force all-pairs Jaccard≥0.8 — LSH is purely the scale
+    path (no cross product; integer band-hash shuffle keys)."""
+    docs = _t(spark, sf_dir, "documents")
+    out = dd.minhash_near_dup_pairs(
+        docs, "text", "doc_id", jaccard_threshold=0.8, num_hashes=64, bands=32
+    )
+    return out.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+
+
+def _duckdb_minhash_mins(num_hashes: int) -> str:
+    """DuckDB replay of `dd.minhash_signature` over column h: the body
+    of the oracles' ``[{mins}] AS sig`` list, same integers."""
+    return ", ".join(
+        f"min((h * {a} + {b}) % {dd.MINHASH_P})"
+        for a, b in dd.minhash_coeffs(num_hashes)
+    )
+
+
+_SQL_LSH_SENSITIVITY = """
+WITH t AS (
+  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
+  FROM documents WHERE doc_id % 3 = 0
+),
+sh AS (
+  SELECT doc_id,
+         ('0x' || substr(md5(s), 1, 15))::BIGINT % 2147483647 AS h
+  FROM (
+    SELECT doc_id,
+           unnest(list_distinct([array_to_string(toks[i:i+1], ' ')
+                                 for i in range(1, len(toks))])) AS s
+    FROM t WHERE len(toks) >= 2
+  )
+),
+per_doc AS MATERIALIZED (
+  SELECT doc_id, [{mins}] AS sig, list_distinct(list(h)) AS hs
+  FROM sh GROUP BY doc_id
+),
+rare AS (SELECT h FROM sh GROUP BY h HAVING count(*) <= 20),
+pairs AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM sh a JOIN rare USING (h) JOIN sh b USING (h)
+  WHERE a.doc_id < b.doc_id
+),
+scored AS (
+  SELECT p.doc_a, p.doc_b,
+         round(len(list_intersect(da.hs, db.hs))::DOUBLE
+               / (len(da.hs) + len(db.hs) - len(list_intersect(da.hs, db.hs))),
+               6) AS jr,
+         da.sig AS sig_a, db.sig AS sig_b
+  FROM pairs p
+  JOIN per_doc da ON da.doc_id = p.doc_a
+  JOIN per_doc db ON db.doc_id = p.doc_b
+),
+flagged AS (
+  SELECT jr,
+         CASE WHEN EXISTS (
+           SELECT 1 FROM range(0, 8) r(b)
+           WHERE sig_a[b * 2 + 1] = sig_b[b * 2 + 1]
+             AND sig_a[b * 2 + 2] = sig_b[b * 2 + 2]
+         ) THEN 1 ELSE 0 END AS detected,
+         1.0 - (((1.0 - jr * jr) * (1.0 - jr * jr))
+              * ((1.0 - jr * jr) * (1.0 - jr * jr)))
+             * (((1.0 - jr * jr) * (1.0 - jr * jr))
+              * ((1.0 - jr * jr) * (1.0 - jr * jr))) AS expected,
+         CASE WHEN jr < 0.05 THEN 'j_0.02-0.05'
+              WHEN jr < 0.1 THEN 'j_0.05-0.10'
+              WHEN jr < 0.2 THEN 'j_0.10-0.20'
+              ELSE 'j_0.20-1.00' END AS bucket
+  FROM scored WHERE jr >= 0.02
+)
+SELECT bucket, count(*)::BIGINT AS n_pairs,
+       sum(detected)::BIGINT AS n_detected,
+       round(sum(detected)::DOUBLE / count(*), 6) AS detect_rate,
+       round(sum(round(expected, 6)::DECIMAL(20,10))::DOUBLE / count(*), 6)
+         AS expected_rate
+FROM flagged GROUP BY bucket ORDER BY bucket
+""".format(mins=_duckdb_minhash_mins(16))
+
+
+@query(_SQL_LSH_SENSITIVITY)
 def q_lsh_sensitivity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH parameter-sensitivity report — the tuning artifact a dedup
     operator reads before picking (bands, rows): for every candidate
@@ -1330,76 +1483,50 @@ def q_lsh_sensitivity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _duckdb_minhash_mins(num_hashes: int) -> str:
-    """DuckDB replay of `dd.minhash_signature` over column h: the body
-    of the oracles' ``[{mins}] AS sig`` list, same integers."""
-    return ", ".join(
-        f"min((h * {a} + {b}) % {dd.MINHASH_P})"
-        for a, b in dd.minhash_coeffs(num_hashes)
-    )
-
-
-_SQL_LSH_SENSITIVITY = """
-WITH t AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-  FROM documents WHERE doc_id % 3 = 0
+_MH_IDX_SHINGLE_CTES = """
+t{side} AS (
+  SELECT doc_id, source, list_filter(string_split(text, ' '), x -> x <> '') AS toks
+  FROM documents WHERE doc_id % 10 {op} 0
 ),
-sh AS (
-  SELECT doc_id,
+sh{side} AS (
+  SELECT doc_id, source,
          ('0x' || substr(md5(s), 1, 15))::BIGINT % 2147483647 AS h
   FROM (
-    SELECT doc_id,
+    SELECT doc_id, source,
            unnest(list_distinct([array_to_string(toks[i:i+1], ' ')
                                  for i in range(1, len(toks))])) AS s
-    FROM t WHERE len(toks) >= 2
+    FROM t{side} WHERE len(toks) >= 2
   )
-),
-per_doc AS MATERIALIZED (
-  SELECT doc_id, [{mins}] AS sig, list_distinct(list(h)) AS hs
-  FROM sh GROUP BY doc_id
-),
-rare AS (SELECT h FROM sh GROUP BY h HAVING count(*) <= 20),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM sh a JOIN rare USING (h) JOIN sh b USING (h)
-  WHERE a.doc_id < b.doc_id
-),
-scored AS (
-  SELECT p.doc_a, p.doc_b,
-         round(len(list_intersect(da.hs, db.hs))::DOUBLE
-               / (len(da.hs) + len(db.hs) - len(list_intersect(da.hs, db.hs))),
-               6) AS jr,
-         da.sig AS sig_a, db.sig AS sig_b
-  FROM pairs p
-  JOIN per_doc da ON da.doc_id = p.doc_a
-  JOIN per_doc db ON db.doc_id = p.doc_b
-),
-flagged AS (
-  SELECT jr,
-         CASE WHEN EXISTS (
-           SELECT 1 FROM range(0, 8) r(b)
-           WHERE sig_a[b * 2 + 1] = sig_b[b * 2 + 1]
-             AND sig_a[b * 2 + 2] = sig_b[b * 2 + 2]
-         ) THEN 1 ELSE 0 END AS detected,
-         1.0 - (((1.0 - jr * jr) * (1.0 - jr * jr))
-              * ((1.0 - jr * jr) * (1.0 - jr * jr)))
-             * (((1.0 - jr * jr) * (1.0 - jr * jr))
-              * ((1.0 - jr * jr) * (1.0 - jr * jr))) AS expected,
-         CASE WHEN jr < 0.05 THEN 'j_0.02-0.05'
-              WHEN jr < 0.1 THEN 'j_0.05-0.10'
-              WHEN jr < 0.2 THEN 'j_0.10-0.20'
-              ELSE 'j_0.20-1.00' END AS bucket
-  FROM scored WHERE jr >= 0.02
+)"""
+
+
+# Placeholders shared by the three stored-index oracles.
+_MH_IDX_SQL = dict(
+    base_ctes=_MH_IDX_SHINGLE_CTES.format(side="b", op="!="),
+    delta_ctes=_MH_IDX_SHINGLE_CTES.format(side="d", op="=").lstrip(",\n"),
+    mins=_duckdb_minhash_mins(_MH_IDX_HASHES),
+    bands=_MH_IDX_BANDS,
+    tau=_MH_IDX_TAU,
 )
-SELECT bucket, count(*)::BIGINT AS n_pairs,
-       sum(detected)::BIGINT AS n_detected,
-       round(sum(detected)::DOUBLE / count(*), 6) AS detect_rate,
-       round(sum(round(expected, 6)::DECIMAL(20,10))::DOUBLE / count(*), 6)
-         AS expected_rate
-FROM flagged GROUP BY bucket ORDER BY bucket
-""".format(mins=_duckdb_minhash_mins(16))
 
 
+_SQL_MINHASH_INDEX_BUILD = """
+WITH {base_ctes},
+sig AS (
+  SELECT doc_id, [{mins}] AS sig FROM shb GROUP BY doc_id
+),
+rows_ AS (
+  SELECT b.range AS band, sig[b.range * 2 + 1] AS m0, sig[b.range * 2 + 2] AS m1
+  FROM sig, range({bands}) b
+)
+SELECT band::INT AS band, count(*)::BIGINT AS n_rows,
+       count(DISTINCT (m0, m1))::BIGINT AS n_buckets,
+       sum(m0)::BIGINT AS sum_m0, sum(m1)::BIGINT AS sum_m1
+FROM rows_ GROUP BY band ORDER BY band
+""".format(**_MH_IDX_SQL)
+
+
+@query(_SQL_MINHASH_INDEX_BUILD)
 def q_minhash_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DEDUP INDEX AS ARTIFACT — the MinHash-LSH twin of
     `ivfpq_index_build`: sketch the BASE corpus split (doc_id % 10 ≠ 0,
@@ -1414,7 +1541,7 @@ def q_minhash_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch build. 100 TB shape: sketching is one pass + one
     groupBy; every later ingest batch probes this table instead of
     re-sketching the corpus."""
-    bands, _sets, _meta = ensure_minhash_index(
+    bands, _sets, _meta = ann.ensure_minhash_index(
         spark, sf_dir, num_hashes=_MH_IDX_HASHES, bands=_MH_IDX_BANDS,
         split_mod=_MH_IDX_MOD,
     )
@@ -1447,92 +1574,6 @@ def _probe_summary(pairs: DataFrame) -> DataFrame:
         )
         .orderBy("source")
     )
-
-
-def q_near_dup_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental near-dup screening against the STORED dedup index —
-    the build-once/probe-many shape a 100 TB ingest pipeline actually
-    runs: each NEW batch (the delta split, doc_id % 10 = 0) is sketched
-    with the index's own permutation family, candidates come from an
-    integer-tuple equi-join against the persisted band table (never
-    all-pairs, base corpus never re-sketched), and survivors are
-    exact-verified by hashed-shingle Jaccard against the persisted
-    per-doc shingle sets. Output: per delta-doc source, how much of the batch
-    duplicates the existing corpus.
-
-    The oracle never sees the artifact: it recomputes BOTH splits from
-    the documents table (same md5-prefix hash, same (a·h+b) mod P
-    integer permutations, same band-tuple rule, same τ) — a hash match
-    proves stored-probe ≡ recompute-from-scratch. avg_jaccard sums
-    6dp-quantized values in DECIMAL so reassociation can't flip the
-    rounding boundary."""
-    bands, base_sets, _meta = ensure_minhash_index(
-        spark, sf_dir, num_hashes=_MH_IDX_HASHES, bands=_MH_IDX_BANDS,
-        split_mod=_MH_IDX_MOD,
-    )
-    docs = _t(spark, sf_dir, "documents")
-    delta = docs.filter(F.col("doc_id") % _MH_IDX_MOD == 0).select(
-        "doc_id", "source", "text"
-    )
-    return _probe_summary(_mh_probe_pairs(delta, bands, base_sets))
-
-
-def q_streaming_near_dup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.11 + index-as-artifact — CONTINUOUS ingest screening: the
-    document stream's delta split drains through ``foreachBatch``
-    (`streaming/ingest.near_dup_probe_stream`); every micro-batch runs
-    the stored-index probe (`_mh_probe_pairs` — the exact batch
-    pipeline) and appends verified pairs to a parquet sink, base corpus
-    never re-sketched, driver never touching pair rows. availableNow
-    drain ⇒ the sink re-aggregates to the batch answer, so
-    `near_dup_probe_stored`'s DuckDB oracle applies verbatim."""
-    from ..streaming.ingest import near_dup_probe_stream
-    from ..streaming.windows import scoped_shuffle_partitions
-
-    with scoped_shuffle_partitions(spark):
-        pairs = near_dup_probe_stream(spark, sf_dir, split_mod=_MH_IDX_MOD)
-    return _probe_summary(pairs)
-
-
-_MH_IDX_SHINGLE_CTES = """
-t{side} AS (
-  SELECT doc_id, source, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-  FROM documents WHERE doc_id % 10 {op} 0
-),
-sh{side} AS (
-  SELECT doc_id, source,
-         ('0x' || substr(md5(s), 1, 15))::BIGINT % 2147483647 AS h
-  FROM (
-    SELECT doc_id, source,
-           unnest(list_distinct([array_to_string(toks[i:i+1], ' ')
-                                 for i in range(1, len(toks))])) AS s
-    FROM t{side} WHERE len(toks) >= 2
-  )
-)"""
-# Placeholders shared by the three stored-index oracles.
-_MH_IDX_SQL = dict(
-    base_ctes=_MH_IDX_SHINGLE_CTES.format(side="b", op="!="),
-    delta_ctes=_MH_IDX_SHINGLE_CTES.format(side="d", op="=").lstrip(",\n"),
-    mins=_duckdb_minhash_mins(_MH_IDX_HASHES),
-    bands=_MH_IDX_BANDS,
-    tau=_MH_IDX_TAU,
-)
-
-
-_SQL_MINHASH_INDEX_BUILD = """
-WITH {base_ctes},
-sig AS (
-  SELECT doc_id, [{mins}] AS sig FROM shb GROUP BY doc_id
-),
-rows_ AS (
-  SELECT b.range AS band, sig[b.range * 2 + 1] AS m0, sig[b.range * 2 + 2] AS m1
-  FROM sig, range({bands}) b
-)
-SELECT band::INT AS band, count(*)::BIGINT AS n_rows,
-       count(DISTINCT (m0, m1))::BIGINT AS n_buckets,
-       sum(m0)::BIGINT AS sum_m0, sum(m1)::BIGINT AS sum_m1
-FROM rows_ GROUP BY band ORDER BY band
-""".format(**_MH_IDX_SQL)
 
 
 _SQL_NEAR_DUP_PROBE = """
@@ -1572,37 +1613,48 @@ GROUP BY source ORDER BY source
 """.format(**_MH_IDX_SQL)
 
 
-def q_minhash_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL INDEX MAINTENANCE (VERDICT r5 "Next" #4) — the
-    dedup-index admission path: the delta split is screened against the
-    STORED index (`near_dup_probe_stored`'s probe), and the admitted
-    (non-duplicate) docs are sketched with the index's own permutation
-    family and APPENDED into a copy of the band + set tables — the
-    base corpus is never re-sketched
-    (`sources/ann_index.upsert_minhash_index`). The manifest is
-    computed FROM THE POST-UPSERT STORED ARTIFACT: per band, row/doc/
-    bucket counts and order-free integer sums over the two min columns.
-    The oracle replays base sketching, the probe (candidates + exact
-    Jaccard ≥ τ), the admission rule, AND the union sketch from the
-    documents table alone — a hash match proves
-    append ≡ from-scratch rebuild over base ∪ admitted. 100 TB shape:
-    per ingest batch, one stored-index probe + append-only parquet of
-    the batch's own sketch rows; nothing rescans the corpus."""
-    bands, _sets, _meta = ensure_minhash_upsert(
+@query(_SQL_NEAR_DUP_PROBE)
+def q_near_dup_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental near-dup screening against the STORED dedup index —
+    the build-once/probe-many shape a 100 TB ingest pipeline actually
+    runs: each NEW batch (the delta split, doc_id % 10 = 0) is sketched
+    with the index's own permutation family, candidates come from an
+    integer-tuple equi-join against the persisted band table (never
+    all-pairs, base corpus never re-sketched), and survivors are
+    exact-verified by hashed-shingle Jaccard against the persisted
+    per-doc shingle sets. Output: per delta-doc source, how much of the batch
+    duplicates the existing corpus.
+
+    The oracle never sees the artifact: it recomputes BOTH splits from
+    the documents table (same md5-prefix hash, same (a·h+b) mod P
+    integer permutations, same band-tuple rule, same τ) — a hash match
+    proves stored-probe ≡ recompute-from-scratch. avg_jaccard sums
+    6dp-quantized values in DECIMAL so reassociation can't flip the
+    rounding boundary."""
+    bands, base_sets, _meta = ann.ensure_minhash_index(
         spark, sf_dir, num_hashes=_MH_IDX_HASHES, bands=_MH_IDX_BANDS,
         split_mod=_MH_IDX_MOD,
     )
-    return (
-        bands.groupBy("band")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count_distinct("doc_id").alias("n_docs"),
-            F.count_distinct("m0", "m1").alias("n_buckets"),
-            F.sum("m0").alias("sum_m0"),
-            F.sum("m1").alias("sum_m1"),
-        )
-        .orderBy("band")
+    docs = _t(spark, sf_dir, "documents")
+    delta = docs.filter(F.col("doc_id") % _MH_IDX_MOD == 0).select(
+        "doc_id", "source", "text"
     )
+    return _probe_summary(_mh_probe_pairs(delta, bands, base_sets))
+
+
+@query(_SQL_NEAR_DUP_PROBE, bench=False)
+def q_streaming_near_dup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.11 + index-as-artifact — CONTINUOUS ingest screening: the
+    document stream's delta split drains through ``foreachBatch``
+    (`streaming/ingest.near_dup_probe_stream`); every micro-batch runs
+    the stored-index probe (`_mh_probe_pairs` — the exact batch
+    pipeline) and appends verified pairs to a parquet sink, base corpus
+    never re-sketched, driver never touching pair rows. availableNow
+    drain ⇒ the sink re-aggregates to the batch answer, so
+    `near_dup_probe_stored`'s DuckDB oracle applies verbatim."""
+    with win.scoped_shuffle_partitions(spark):
+        pairs = ingest.near_dup_probe_stream(spark, sf_dir, split_mod=_MH_IDX_MOD)
+    return _probe_summary(pairs)
 
 
 _SQL_MINHASH_INDEX_UPSERT = """
@@ -1650,25 +1702,37 @@ FROM rows_ GROUP BY band ORDER BY band
 """.format(**_MH_IDX_SQL)
 
 
-def q_near_dup_clusters_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-cluster census: MinHash-LSH near-dup pairs (Jaccard ≥
-    0.8) grouped into duplicate clusters via connected components
-    (`operators/dbscan.connected_components` — union-find / min-label
-    propagation, size-dispatched). The canonical corpus-dedup shape:
-    keep one representative per component, not per pair. Output one row
-    per cluster (rep = min doc_id, n_members ≥ 2). Oracle replays
-    brute-force pairs + a recursive-CTE reachability closure."""
-    from ..operators.dbscan import connected_components
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = dd.minhash_near_dup_pairs(
-        docs, "text", "doc_id", jaccard_threshold=0.8, num_hashes=64, bands=32
+@query(_SQL_MINHASH_INDEX_UPSERT)
+def q_minhash_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """INCREMENTAL INDEX MAINTENANCE (VERDICT r5 "Next" #4) — the
+    dedup-index admission path: the delta split is screened against the
+    STORED index (`near_dup_probe_stored`'s probe), and the admitted
+    (non-duplicate) docs are sketched with the index's own permutation
+    family and APPENDED into a copy of the band + set tables — the
+    base corpus is never re-sketched
+    (`sources/ann_index.upsert_minhash_index`). The manifest is
+    computed FROM THE POST-UPSERT STORED ARTIFACT: per band, row/doc/
+    bucket counts and order-free integer sums over the two min columns.
+    The oracle replays base sketching, the probe (candidates + exact
+    Jaccard ≥ τ), the admission rule, AND the union sketch from the
+    documents table alone — a hash match proves
+    append ≡ from-scratch rebuild over base ∪ admitted. 100 TB shape:
+    per ingest batch, one stored-index probe + append-only parquet of
+    the batch's own sketch rows; nothing rescans the corpus."""
+    bands, _sets, _meta = ann.ensure_minhash_upsert(
+        spark, sf_dir, num_hashes=_MH_IDX_HASHES, bands=_MH_IDX_BANDS,
+        split_mod=_MH_IDX_MOD,
     )
-    comp = connected_components(pairs, "doc_a", "doc_b")
     return (
-        comp.groupBy(F.col("comp").alias("cluster_rep"))
-        .agg(F.count(F.lit(1)).alias("n_members"))
-        .orderBy("cluster_rep")
+        bands.groupBy("band")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.count_distinct("doc_id").alias("n_docs"),
+            F.count_distinct("m0", "m1").alias("n_buckets"),
+            F.sum("m0").alias("sum_m0"),
+            F.sum("m1").alias("sum_m1"),
+        )
+        .orderBy("band")
     )
 
 
@@ -1701,6 +1765,70 @@ FROM comp GROUP BY comp ORDER BY cluster_rep
 """
 
 
+@query(_SQL_NEAR_DUP_CLUSTERS)
+def q_near_dup_clusters_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Duplicate-cluster census: MinHash-LSH near-dup pairs (Jaccard ≥
+    0.8) grouped into duplicate clusters via connected components
+    (`operators/dbscan.connected_components` — union-find / min-label
+    propagation, size-dispatched). The canonical corpus-dedup shape:
+    keep one representative per component, not per pair. Output one row
+    per cluster (rep = min doc_id, n_members ≥ 2). Oracle replays
+    brute-force pairs + a recursive-CTE reachability closure."""
+    docs = _t(spark, sf_dir, "documents")
+    pairs = dd.minhash_near_dup_pairs(
+        docs, "text", "doc_id", jaccard_threshold=0.8, num_hashes=64, bands=32
+    )
+    comp = dbscan.connected_components(pairs, "doc_a", "doc_b")
+    return (
+        comp.groupBy(F.col("comp").alias("cluster_rep"))
+        .agg(F.count(F.lit(1)).alias("n_members"))
+        .orderBy("cluster_rep")
+    )
+
+
+_SQL_CORPUS_PIPELINE = f"""
+WITH docs0 AS (SELECT doc_id, source, text, {_CLEAN_SQL} AS ct FROM documents),
+keep AS (SELECT min(doc_id) AS doc_id FROM docs0 GROUP BY ct),
+uniq AS (SELECT d.doc_id, d.source, d.text, d.ct FROM docs0 d JOIN keep k USING (doc_id)),
+sh AS (
+  SELECT doc_id, {_SHINGLES_SQL} AS shingles
+  FROM (SELECT doc_id, string_split(ct, ' ') AS toks FROM uniq)
+),
+dup_pairs AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM sh a, sh b
+  WHERE a.doc_id < b.doc_id
+    AND len(list_intersect(a.shingles, b.shingles))::DOUBLE
+          / len(list_distinct(list_concat(a.shingles, b.shingles))) >= 0.8
+),
+survivors AS (
+  SELECT * FROM uniq WHERE doc_id NOT IN (SELECT doc_b FROM dup_pairs)
+),
+q AS (
+  SELECT source, text,
+         least(length(text) / 200.0, 1.0) AS len_score,
+         1.0 - least(((length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')))::DOUBLE
+                      / greatest(length(text), 1)) * 4, 1.0) AS punct_score,
+         (len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
+                          x -> list_contains({_STOPWORDS_SQL}, x)))::DOUBLE
+          / greatest(len(regexp_split_to_array(lower(text), '\\s+')), 1)) AS sw
+  FROM survivors
+),
+scored AS (
+  SELECT source, text,
+         round((len_score + punct_score
+          + CASE WHEN sw > 0.05 AND sw < 0.6 THEN 1.0 ELSE 0.5 END) / 3.0, 6) AS quality
+  FROM q
+)
+SELECT source, count(*)::BIGINT AS n_docs,
+       sum(len(regexp_split_to_array(trim(text), '\\s+')))::BIGINT AS total_tokens,
+       round(sum(quality::DECIMAL(20,10))::DOUBLE / count(*), 6) AS avg_quality
+FROM scored WHERE quality >= 0.8
+GROUP BY source ORDER BY source
+"""
+
+
+@query(_SQL_CORPUS_PIPELINE)
 def q_training_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship training-data pipeline, end-to-end in ONE lazy DAG:
     raw documents → exact dedup (keep min doc_id per normalized text)
@@ -1757,66 +1885,13 @@ def q_training_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CORPUS_PIPELINE = f"""
-WITH docs0 AS (SELECT doc_id, source, text, {_CLEAN_SQL} AS ct FROM documents),
-keep AS (SELECT min(doc_id) AS doc_id FROM docs0 GROUP BY ct),
-uniq AS (SELECT d.doc_id, d.source, d.text, d.ct FROM docs0 d JOIN keep k USING (doc_id)),
-sh AS (
-  SELECT doc_id, {_SHINGLES_SQL} AS shingles
-  FROM (SELECT doc_id, string_split(ct, ' ') AS toks FROM uniq)
-),
-dup_pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM sh a, sh b
-  WHERE a.doc_id < b.doc_id
-    AND len(list_intersect(a.shingles, b.shingles))::DOUBLE
-          / len(list_distinct(list_concat(a.shingles, b.shingles))) >= 0.8
-),
-survivors AS (
-  SELECT * FROM uniq WHERE doc_id NOT IN (SELECT doc_b FROM dup_pairs)
-),
-q AS (
-  SELECT source, text,
-         least(length(text) / 200.0, 1.0) AS len_score,
-         1.0 - least(((length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')))::DOUBLE
-                      / greatest(length(text), 1)) * 4, 1.0) AS punct_score,
-         (len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                          x -> list_contains({_STOPWORDS_SQL}, x)))::DOUBLE
-          / greatest(len(regexp_split_to_array(lower(text), '\\s+')), 1)) AS sw
-  FROM survivors
-),
-scored AS (
-  SELECT source, text,
-         round((len_score + punct_score
-          + CASE WHEN sw > 0.05 AND sw < 0.6 THEN 1.0 ELSE 0.5 END) / 3.0, 6) AS quality
-  FROM q
-)
-SELECT source, count(*)::BIGINT AS n_docs,
-       sum(len(regexp_split_to_array(trim(text), '\\s+')))::BIGINT AS total_tokens,
-       round(sum(quality::DECIMAL(20,10))::DOUBLE / count(*), 6) AS avg_quality
-FROM scored WHERE quality >= 0.8
-GROUP BY source ORDER BY source
-"""
-
-
-def q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash fingerprints (60-bit sign-sum over token md5-prefix
-    bits). The md5-prefix hash is bit-identical in DuckDB, so the
-    oracle recomputes the exact fingerprints; the hamming-distance
-    contract is additionally pytest-verified (tests/test_operators.py)."""
-    docs = _t(spark, sf_dir, "documents")
-    return dd.simhash60(docs, "text", "doc_id")
-
-
 def _sql_simhash() -> str:
-    from ..operators.dedup import SIMHASH_BITS
-
     bit_cols = ", ".join(
         f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
-        for b in range(SIMHASH_BITS)
+        for b in range(dd.SIMHASH_BITS)
     )
     recombine = " + ".join(
-        f"(CASE WHEN b{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(SIMHASH_BITS)
+        f"(CASE WHEN b{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(dd.SIMHASH_BITS)
     )
     return f"""
 WITH docs AS (SELECT doc_id, {_CLEAN_SQL} AS ct FROM documents),
@@ -1829,14 +1904,14 @@ SELECT doc_id, ({recombine})::BIGINT AS simhash FROM bits
 """
 
 
-def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact all-pairs word-3-gram Jaccard ≥ 0.5 via an inverted
-    shingle index (integer-keyed equi-join; no cross product). The
-    exact counterpart of minhash_near_dup_docs at a looser threshold;
-    oracle is brute-force all-pairs Jaccard."""
+@query(_sql_simhash(), bench=False)
+def q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash fingerprints (60-bit sign-sum over token md5-prefix
+    bits). The md5-prefix hash is bit-identical in DuckDB, so the
+    oracle recomputes the exact fingerprints; the hamming-distance
+    contract is additionally pytest-verified (tests/test_operators.py)."""
     docs = _t(spark, sf_dir, "documents")
-    out = dd.ngram_jaccard_all_pairs(docs, "text", "doc_id", threshold=0.5)
-    return out.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+    return dd.simhash60(docs, "text", "doc_id")
 
 
 _SQL_NGRAM_JACCARD = f"""
@@ -1855,6 +1930,31 @@ SELECT doc_a, doc_b, round(jaccard, 6) AS jaccard FROM pairs WHERE jaccard >= 0.
 """
 
 
+@query(_SQL_NGRAM_JACCARD)
+def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact all-pairs word-3-gram Jaccard ≥ 0.5 via an inverted
+    shingle index (integer-keyed equi-join; no cross product). The
+    exact counterpart of minhash_near_dup_docs at a looser threshold;
+    oracle is brute-force all-pairs Jaccard."""
+    docs = _t(spark, sf_dir, "documents")
+    out = dd.ngram_jaccard_all_pairs(docs, "text", "doc_id", threshold=0.5)
+    return out.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+
+
+_SQL_FINGERPRINT = f"""
+WITH g AS (
+  SELECT {_CLEAN_SQL} AS ct, count(*)::BIGINT AS n
+  FROM documents GROUP BY 1
+)
+SELECT sum(n)::BIGINT AS n_docs, count(*)::BIGINT AS n_distinct,
+       sum(CASE WHEN n > 1 THEN 1 ELSE 0 END)::BIGINT AS n_dup_groups,
+       sum(CASE WHEN n > 1 THEN n ELSE 0 END)::BIGINT AS n_dup_docs,
+       max(n)::BIGINT AS max_group
+FROM g
+"""
+
+
+@query(_SQL_FINGERPRINT, bench=False)
 def q_doc_fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level fingerprint census: 64-bit content fingerprints
     (xxhash64 of normalized text, functions.text.fingerprint64) →
@@ -1877,53 +1977,44 @@ def q_doc_fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_FINGERPRINT = f"""
-WITH g AS (
-  SELECT {_CLEAN_SQL} AS ct, count(*)::BIGINT AS n
-  FROM documents GROUP BY 1
-)
-SELECT sum(n)::BIGINT AS n_docs, count(*)::BIGINT AS n_distinct,
-       sum(CASE WHEN n > 1 THEN 1 ELSE 0 END)::BIGINT AS n_dup_groups,
-       sum(CASE WHEN n > 1 THEN n ELSE 0 END)::BIGINT AS n_dup_docs,
-       max(n)::BIGINT AS max_group
-FROM g
-"""
-
-
 # --------------------------------------------------------------------------
 # Embeddings / similarity search
 # --------------------------------------------------------------------------
 
+_SQL_EMB_NEAR_DUP = """
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+p AS (
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+         list_dot_product(a.v, b.v)
+           / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) AS cosine
+  FROM e a, e b WHERE a.vec_id < b.vec_id
+)
+SELECT id_a, id_b, round(cosine, 6) AS cosine FROM p WHERE cosine >= 0.45
+"""
+
+
+@query(_SQL_EMB_NEAR_DUP, bench=False)
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (cosine ≥ 0.45), EXACT baseline —
     the oracle anchor for srp_near_dup_pairs. Explicit ``exact=True``
     through the size-guarded operator (ValueError past 100k rows unless
     forced), so the O(n²) plan is unreachable by accident; the default
     SRP-LSH path is the production shape."""
-    from ..operators.similarity import embedding_near_dup_pairs
-
     emb = _t(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    return embedding_near_dup_pairs(emb, 0.45, _srp_tables(), exact=True).select(
+    return sim.embedding_near_dup_pairs(emb, 0.45, _srp_tables(), exact=True).select(
         "id_a", "id_b", F.round("cosine", 6).alias("cosine")
     )
 
 
-def q_srp_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup via the DEFAULT scale path: 8-table SRP-LSH
-    banding equi-join candidates → exact cosine ≥ 0.45 verify — no
-    cross product anywhere (VERDICT r1 #4 fix). Deterministic planes ⇒
-    the oracle independently recomputes every bucket and the candidate
-    union, making the approximate result value-checked end-to-end;
-    recall vs the exact baseline is pytest-asserted separately."""
-    from ..operators.similarity import embedding_near_dup_pairs
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    return embedding_near_dup_pairs(emb, 0.45, _srp_tables(8, 8)).select(
-        "id_a", "id_b", F.round("cosine", 6).alias("cosine")
+def _sql_srp_bits(planes: list[list[float]], col: str = "v") -> str:
+    """DuckDB replay of the SRP signature of ``col``: bit i is set when
+    its dot product with ``planes[i]`` is positive."""
+    return " + ".join(
+        f"(CASE WHEN list_inner_product({col}, [{', '.join(repr(x) for x in p)}]) > 0"
+        f" THEN {1 << i} ELSE 0 END)"
+        for i, p in enumerate(planes)
     )
 
 
@@ -1935,11 +2026,7 @@ def _sql_srp_near_dup() -> str:
     tables = _srp_tables(8, 8)
     selects = []
     for planes in tables:
-        sig_terms = " + ".join(
-            f"(CASE WHEN list_inner_product(v, [{', '.join(repr(x) for x in p)}]) > 0"
-            f" THEN {1 << i} ELSE 0 END)"
-            for i, p in enumerate(planes)
-        )
+        sig_terms = _sql_srp_bits(planes)
         selects.append(
             f"SELECT a.vec_id AS id_a, b.vec_id AS id_b\n"
             f"  FROM (SELECT vec_id, {sig_terms} AS s FROM emb) a\n"
@@ -1962,64 +2049,57 @@ SELECT id_a, id_b, round(cosine, 6) AS cosine FROM pairs WHERE cosine >= 0.45
 """
 
 
-_SQL_EMB_NEAR_DUP = """
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-p AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         list_dot_product(a.v, b.v)
-           / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) AS cosine
-  FROM e a, e b WHERE a.vec_id < b.vec_id
-)
-SELECT id_a, id_b, round(cosine, 6) AS cosine FROM p WHERE cosine >= 0.45
-"""
+def _srp_planes(n_planes: int = 4, dim: int = 64) -> list[list[float]]:
+    """Deterministic pseudo-random hyperplanes (LCG over plane·dim
+    index) — exact dyadic rationals, so both Spark literals and the
+    DuckDB oracle's list literals round-trip bit-exactly."""
+    return [
+        [(((1103515245 * (p * dim + d) + 12345) % 2147483648) / 2147483648.0) - 0.5
+         for d in range(dim)]
+        for p in range(n_planes)
+    ]
+
+
+def _srp_tables(n_tables: int = 8, n_planes: int = 4) -> list[list[list[float]]]:
+    """L independent deterministic 64-d plane sets = the 32-plane LCG
+    stream chunked into 8 tables of 4 bits (same dyadic-rational
+    construction as _srp_planes, so both engines round-trip
+    bit-exactly)."""
+    flat = _srp_planes(n_tables * n_planes, 64)
+    return [flat[t * n_planes : (t + 1) * n_planes] for t in range(n_tables)]
+
+
+@query(_sql_srp_near_dup())
+def q_srp_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding near-dup via the DEFAULT scale path: 8-table SRP-LSH
+    banding equi-join candidates → exact cosine ≥ 0.45 verify — no
+    cross product anywhere (VERDICT r1 #4 fix). Deterministic planes ⇒
+    the oracle independently recomputes every bucket and the candidate
+    union, making the approximate result value-checked end-to-end;
+    recall vs the exact baseline is pytest-asserted separately."""
+    emb = _t(spark, sf_dir, "embeddings").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+    return sim.embedding_near_dup_pairs(emb, 0.45, _srp_tables(8, 8)).select(
+        "id_a", "id_b", F.round("cosine", 6).alias("cosine")
+    )
 
 
 _SPLIT_CAP = 16
 
 
-def q_srp_near_dup_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-adaptive SRP-LSH near-dup (r7): deliberately COARSE tables
-    (4 × 2 planes → 4 buckets/table, every bucket hot at any sf) so the
-    bucket_cap path must engage — occupancy census, ceil(log2(occ/16))
-    extra signature bits from the splitmix64 plane family over
-    mean-centered vectors, candidate join on (table, depth, extended
-    sig), exact cosine verify. The oracle replays ALL of it: base
-    signatures from the same plane literals, the occupancy census, the
-    decimal-sum mean, the centered extension bits, the depth-keyed
-    join, and the verify — making the skew-split operator itself
-    value-checked cross-engine, not just pytest-bounded."""
-    from ..operators.similarity import embedding_near_dup_pairs
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    return embedding_near_dup_pairs(
-        emb, 0.35, _srp_tables(4, 2), bucket_cap=_SPLIT_CAP
-    ).select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-
-
 def _sql_srp_near_dup_split() -> str:
-    from ..operators.similarity import _SPLIT_MAX_EXTRA, _split_planes
-
     tables = _srp_tables(4, 2)
     dim = 64
-    split = _split_planes(_SPLIT_MAX_EXTRA, dim)
+    split = sim._split_planes(sim._SPLIT_MAX_EXTRA, dim)
     sig_selects = []
     for t, planes in enumerate(tables):
-        sig_terms = " + ".join(
-            f"(CASE WHEN list_inner_product(v, [{', '.join(repr(x) for x in p)}]) > 0"
-            f" THEN {1 << i} ELSE 0 END)"
-            for i, p in enumerate(planes)
-        )
+        sig_terms = _sql_srp_bits(planes)
         sig_selects.append(
             f"SELECT {t} AS t, vec_id, CAST({sig_terms} AS BIGINT) AS sig FROM emb"
         )
     banded = "\nUNION ALL\n".join(sig_selects)
-    ext_terms = " + ".join(
-        f"(CASE WHEN list_inner_product(cv, [{', '.join(repr(x) for x in p)}]) > 0"
-        f" THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(split)
-    )
+    ext_terms = _sql_srp_bits(split, col="cv")
     mu_cols = ", ".join(
         f"CAST(sum(CAST(v[{d + 1}] AS DECIMAL(30,10))) AS DOUBLE) / count(*) AS mu{d}"
         for d in range(dim)
@@ -2033,7 +2113,7 @@ banded AS MATERIALIZED (
 occ AS (SELECT t, sig, count(*) AS _occ FROM banded GROUP BY t, sig),
 hot AS (
   SELECT t, sig,
-         CAST(least({_SPLIT_MAX_EXTRA},
+         CAST(least({sim._SPLIT_MAX_EXTRA},
                     ceil(log2(_occ / {float(_SPLIT_CAP)!r}))) AS INT) AS _extra
   FROM occ WHERE _occ > {_SPLIT_CAP}
 ),
@@ -2066,41 +2146,29 @@ SELECT id_a, id_b, round(cosine, 6) AS cosine FROM pairs WHERE cosine >= 0.35
 """
 
 
-def _srp_planes(n_planes: int = 4, dim: int = 64) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes (LCG over plane·dim
-    index) — exact dyadic rationals, so both Spark literals and the
-    DuckDB oracle's list literals round-trip bit-exactly."""
-    return [
-        [(((1103515245 * (p * dim + d) + 12345) % 2147483648) / 2147483648.0) - 0.5
-         for d in range(dim)]
-        for p in range(n_planes)
-    ]
-
-
-def q_srp_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate ANN: signed-random-projection buckets → equi-join →
-    exact rerank. The planes are deterministic literals, so the oracle
-    recomputes the SAME buckets independently (DuckDB
-    list_inner_product sign bits) and the approximate result is
-    value-checked end-to-end, not just rows-only. Rank omitted from
-    the output so fp tie-ordering can't flip rows; per-query recall vs
-    the exact baseline is additionally pytest-verified."""
+@query(_sql_srp_near_dup_split())
+def q_srp_near_dup_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Skew-adaptive SRP-LSH near-dup (r7): deliberately COARSE tables
+    (4 × 2 planes → 4 buckets/table, every bucket hot at any sf) so the
+    bucket_cap path must engage — occupancy census, ceil(log2(occ/16))
+    extra signature bits from the splitmix64 plane family over
+    mean-centered vectors, candidate join on (table, depth, extended
+    sig), exact cosine verify. The oracle replays ALL of it: base
+    signatures from the same plane literals, the occupancy census, the
+    decimal-sum mean, the centered extension bits, the depth-keyed
+    join, and the verify — making the skew-split operator itself
+    value-checked cross-engine, not just pytest-bounded."""
     emb = _t(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    queries = emb.filter(F.col("vec_id") < 32)
-    return cosine_topk_srp(queries, emb, k=5, planes=_srp_planes()).select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine")
-    )
+    return sim.embedding_near_dup_pairs(
+        emb, 0.35, _srp_tables(4, 2), bucket_cap=_SPLIT_CAP
+    ).select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 
 def _sql_srp() -> str:
     planes = _srp_planes()
-    sig_terms = " + ".join(
-        f"(CASE WHEN list_inner_product(v, [{', '.join(repr(x) for x in p)}]) > 0"
-        f" THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(planes)
-    )
+    sig_terms = _sql_srp_bits(planes)
     return f"""
 WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 sig AS (SELECT vec_id, v, {sig_terms} AS srp_sig FROM emb),
@@ -2118,20 +2186,20 @@ FROM (
 """
 
 
-def q_ivf_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN: per-label centroid coarse quantizer → each query
-    probes its 3 nearest cells → exact cosine rerank inside the probed
-    cells (top-5). Fully deterministic (centroids are per-label means),
-    so unlike SRP this approximate path is oracle-checked end-to-end:
-    the DuckDB SQL replicates quantize→probe→rerank exactly. Rank is
-    omitted from the output so fp tie-ordering can't flip rows."""
+@query(_sql_srp(), bench=False)
+def q_srp_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate ANN: signed-random-projection buckets → equi-join →
+    exact rerank. The planes are deterministic literals, so the oracle
+    recomputes the SAME buckets independently (DuckDB
+    list_inner_product sign bits) and the approximate result is
+    value-checked end-to-end, not just rows-only. Rank omitted from
+    the output so fp tie-ordering can't flip rows; per-query recall vs
+    the exact baseline is additionally pytest-verified."""
     emb = _t(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    centers = label_centroids(emb, "embedding", "label")
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
-    out = cosine_topk_ivf(queries, emb, k=5, centers=centers, nprobe=3)
-    return out.select(
+    queries = emb.filter(F.col("vec_id") < 32)
+    return sim.cosine_topk_srp(queries, emb, k=5, planes=_srp_planes()).select(
         "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine")
     )
 
@@ -2169,27 +2237,23 @@ FROM (
 """
 
 
-def _srp_tables(n_tables: int = 8, n_planes: int = 4) -> list[list[list[float]]]:
-    """L independent deterministic 64-d plane sets = the 32-plane LCG
-    stream chunked into 8 tables of 4 bits (same dyadic-rational
-    construction as _srp_planes, so both engines round-trip
-    bit-exactly)."""
-    flat = _srp_planes(n_tables * n_planes, 64)
-    return [flat[t * n_planes : (t + 1) * n_planes] for t in range(n_tables)]
-
-
-def q_srp_multi_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-table SRP-LSH ANN (8 tables × 4 bits): union of per-table
-    bucket candidates → exact rerank. The recall amplification over the
-    single-table path is measured by `ann_recall`; the oracle
-    recomputes every table's buckets and the candidate union."""
+@query(_SQL_IVF)
+def q_ivf_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-style ANN: per-label centroid coarse quantizer → each query
+    probes its 3 nearest cells → exact cosine rerank inside the probed
+    cells (top-5). Fully deterministic (centroids are per-label means),
+    so unlike SRP this approximate path is oracle-checked end-to-end:
+    the DuckDB SQL replicates quantize→probe→rerank exactly. Rank is
+    omitted from the output so fp tie-ordering can't flip rows."""
     emb = _t(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    queries = emb.filter(F.col("vec_id") < 32)
-    return cosine_topk_srp_multi(
-        queries, emb, k=5, tables=_srp_tables()
-    ).select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"))
+    centers = sim.label_centroids(emb, "embedding", "label")
+    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    out = sim.cosine_topk_ivf(queries, emb, k=5, centers=centers, nprobe=3)
+    return out.select(
+        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine")
+    )
 
 
 def _sql_srp_multi_cand() -> str:
@@ -2197,11 +2261,7 @@ def _sql_srp_multi_cand() -> str:
     tables = _srp_tables()
     selects = []
     for planes in tables:
-        sig_terms = " + ".join(
-            f"(CASE WHEN list_inner_product(v, [{', '.join(repr(x) for x in p)}]) > 0"
-            f" THEN {1 << i} ELSE 0 END)"
-            for i, p in enumerate(planes)
-        )
+        sig_terms = _sql_srp_bits(planes)
         selects.append(
             f"SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id\n"
             f"  FROM (SELECT vec_id, {sig_terms} AS s FROM emb WHERE vec_id < 32) q\n"
@@ -2230,57 +2290,31 @@ SELECT query_id, neighbor_id, round(cosine, 6) AS cosine FROM ranked WHERE rn <=
 """
 
 
+@query(_sql_srp_multi())
+def q_srp_multi_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-table SRP-LSH ANN (8 tables × 4 bits): union of per-table
+    bucket candidates → exact rerank. The recall amplification over the
+    single-table path is measured by `ann_recall`; the oracle
+    recomputes every table's buckets and the candidate union."""
+    emb = _t(spark, sf_dir, "embeddings").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+    queries = emb.filter(F.col("vec_id") < 32)
+    return sim.cosine_topk_srp_multi(
+        queries, emb, k=5, tables=_srp_tables()
+    ).select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"))
+
+
 _PQ_M, _PQ_K, _PQ_ITERS, _PQ_SCALE, _PQ_DIM = 8, 4, 2, 1000, 64
 
 
 def _pq_codebooks(spark: SparkSession, sf_dir: str):
-    from ..operators.similarity import pq_train
-
     emb = _t(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    return emb, pq_train(
+    return emb, sim.pq_train(
         emb, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K, iters=_PQ_ITERS, scale=_PQ_SCALE
     )
-
-
-def q_pq_codes_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN index family #3 — product quantization (Jégou et al. 2011):
-    8 per-block codebooks (k=4, 8 dims each) trained with the exact
-    integer Lloyd on scaled sub-coordinates, every vector encoded as 8
-    code ids. Output: per-(block, code) population + centroid norm.
-    The oracle re-trains ALL codebooks (per-block Lloyd iterations as
-    unrolled CTEs) and re-encodes every vector — training, assignment,
-    and centroid arithmetic are value-checked end-to-end."""
-    from ..operators.similarity import pq_encode
-
-    emb, cbs = _pq_codebooks(spark, sf_dir)
-    codes = pq_encode(emb, cbs, scale=_PQ_SCALE)
-    parts = []
-    for b in range(_PQ_M):
-        import math as _math
-
-        norm_map = F.create_map(
-            *[
-                F.lit(v)
-                for c, ctr in enumerate(cbs[b])
-                for v in (c, _math.sqrt(sum(x * x for x in ctr)))
-            ]
-        )
-        parts.append(
-            codes.groupBy(F.col(f"code_{b}").alias("code"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.lit(b).alias("block"),
-                "code",
-                "n",
-                F.round(norm_map[F.col("code")], 6).alias("centroid_norm"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("block", "code")
 
 
 def _sql_pq_block_ctes(b: int, train_where: str = "", encode_split: bool = False) -> str:
@@ -2321,21 +2355,40 @@ def _sql_pq_codes() -> str:
     return f"WITH {blocks}\n{unions}\nORDER BY block, code"
 
 
-def q_pq_adc_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ asymmetric-distance search: queries (vec_id < 32) against the
-    PQ-encoded base — per pair Σ_b ‖q_b − C_b[code_b]‖² in the scaled
-    space via element_at into literal centroid arrays (all codegen),
-    top-5 per query. The oracle re-trains the codebooks, re-encodes the
-    base, and recomputes every ADC distance."""
-    from ..operators.similarity import pq_adc_topk, pq_encode
-
+@query(_sql_pq_codes(), bench=False)
+def q_pq_codes_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN index family #3 — product quantization (Jégou et al. 2011):
+    8 per-block codebooks (k=4, 8 dims each) trained with the exact
+    integer Lloyd on scaled sub-coordinates, every vector encoded as 8
+    code ids. Output: per-(block, code) population + centroid norm.
+    The oracle re-trains ALL codebooks (per-block Lloyd iterations as
+    unrolled CTEs) and re-encodes every vector — training, assignment,
+    and centroid arithmetic are value-checked end-to-end."""
     emb, cbs = _pq_codebooks(spark, sf_dir)
-    codes = pq_encode(emb, cbs, scale=_PQ_SCALE)
-    queries = emb.filter(F.col("vec_id") < 32)
-    out = pq_adc_topk(queries, codes, cbs, k=5, scale=_PQ_SCALE)
-    return out.select(
-        "query_id", "neighbor_id", F.round("adc_dist", 4).alias("adc_dist"), "pq_rank"
-    )
+    codes = sim.pq_encode(emb, cbs, scale=_PQ_SCALE)
+    parts = []
+    for b in range(_PQ_M):
+        norm_map = F.create_map(
+            *[
+                F.lit(v)
+                for c, ctr in enumerate(cbs[b])
+                for v in (c, math.sqrt(sum(x * x for x in ctr)))
+            ]
+        )
+        parts.append(
+            codes.groupBy(F.col(f"code_{b}").alias("code"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(
+                F.lit(b).alias("block"),
+                "code",
+                "n",
+                F.round(norm_map[F.col("code")], 6).alias("centroid_norm"),
+            )
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out.orderBy("block", "code")
 
 
 def _sql_pq_adc() -> str:
@@ -2374,24 +2427,17 @@ FROM ranked WHERE pq_rank <= 5
 """
 
 
-def q_ivfpq_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ composed index probe (the FAISS ``IVFPQ`` layout — the
-    production 100 TB ANN shape): the label-centroid coarse quantizer
-    restricts each query (vec_id % 25 = 0) to its 3 nearest cells, and
-    ranking INSIDE the probed cells uses the PQ codes' asymmetric
-    distance — the search never touches raw base vectors, only m=8
-    2-bit codes per vector. Top-5 per query by (adc_dist, neighbor_id).
-    The oracle replays codebook training, encoding, coarse assignment,
-    the probe restriction, and every ADC distance in pure SQL."""
-    from ..operators.similarity import ivfpq_topk, label_centroids, pq_encode
-
+@query(_sql_pq_adc(), bench=False)
+def q_pq_adc_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PQ asymmetric-distance search: queries (vec_id < 32) against the
+    PQ-encoded base — per pair Σ_b ‖q_b − C_b[code_b]‖² in the scaled
+    space via element_at into literal centroid arrays (all codegen),
+    top-5 per query. The oracle re-trains the codebooks, re-encodes the
+    base, and recomputes every ADC distance."""
     emb, cbs = _pq_codebooks(spark, sf_dir)
-    codes = pq_encode(emb, cbs, scale=_PQ_SCALE)
-    centers = label_centroids(emb, "embedding", "label")
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
-    out = ivfpq_topk(
-        queries, emb, codes, cbs, k=5, centers=centers, nprobe=3, scale=_PQ_SCALE
-    )
+    codes = sim.pq_encode(emb, cbs, scale=_PQ_SCALE)
+    queries = emb.filter(F.col("vec_id") < 32)
+    out = sim.pq_adc_topk(queries, codes, cbs, k=5, scale=_PQ_SCALE)
     return out.select(
         "query_id", "neighbor_id", F.round("adc_dist", 4).alias("adc_dist"), "pq_rank"
     )
@@ -2455,6 +2501,28 @@ FROM ranked WHERE pq_rank <= 5
 """
 
 
+@query(_sql_ivfpq(), bench=False)
+def q_ivfpq_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-PQ composed index probe (the FAISS ``IVFPQ`` layout — the
+    production 100 TB ANN shape): the label-centroid coarse quantizer
+    restricts each query (vec_id % 25 = 0) to its 3 nearest cells, and
+    ranking INSIDE the probed cells uses the PQ codes' asymmetric
+    distance — the search never touches raw base vectors, only m=8
+    2-bit codes per vector. Top-5 per query by (adc_dist, neighbor_id).
+    The oracle replays codebook training, encoding, coarse assignment,
+    the probe restriction, and every ADC distance in pure SQL."""
+    emb, cbs = _pq_codebooks(spark, sf_dir)
+    codes = sim.pq_encode(emb, cbs, scale=_PQ_SCALE)
+    centers = sim.label_centroids(emb, "embedding", "label")
+    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    out = sim.ivfpq_topk(
+        queries, emb, codes, cbs, k=5, centers=centers, nprobe=3, scale=_PQ_SCALE
+    )
+    return out.select(
+        "query_id", "neighbor_id", F.round("adc_dist", 4).alias("adc_dist"), "pq_rank"
+    )
+
+
 _SQL_IVF_CELL_CTES = """
 iemb AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
 idims AS (SELECT unnest(range(1, len(v) + 1)) AS i, vec_id FROM iemb),
@@ -2474,40 +2542,6 @@ iscored AS (
 ),
 icells AS (SELECT vec_id, cell FROM iscored WHERE rn = 1)
 """
-
-
-def q_ivfpq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INDEX-AS-ARTIFACT build (VERDICT r4 "Next" #2): train the IVF-PQ
-    index ONCE and persist it — codes parquet (m+2 small ints per
-    vector: neighbor_id, coarse cell, 8 PQ code ids) + meta.json
-    (centers, codebooks, params, data fingerprint) under
-    spark-warehouse/ann_index/ (`sources/ann_index.py`). The returned
-    manifest is computed FROM THE STORED ARTIFACT (read back off disk,
-    never from the in-memory build): per coarse cell, the vector count
-    and an order-free integer checksum Σ_vec Σ_b code_b·4^b over the
-    stored codes. The oracle replays codebook training, encoding, and
-    coarse assignment in pure SQL — a hash match proves the persisted
-    artifact is bit-equal to a from-scratch train, i.e. the store/load
-    cycle is lossless. 100 TB shape: this is the amortized build step —
-    training is 1+iters distributed jobs, encode+assign are map-only,
-    and the artifact scan afterwards is a few ints per vector."""
-    codes, _centers, _cbs, _meta = ensure_ivfpq_index(
-        spark, sf_dir, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K,
-        iters=_PQ_ITERS, scale=_PQ_SCALE,
-    )
-    checksum = None
-    for b in range(_PQ_M):
-        term = F.col(f"code_{b}").cast("bigint") * F.lit(4 ** b).cast("bigint")
-        checksum = term if checksum is None else checksum + term
-    return (
-        codes.withColumn("_ck", checksum)
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.sum("_ck").alias("codes_checksum"),
-        )
-        .orderBy("cell")
-    )
 
 
 def _sql_ivfpq_build() -> str:
@@ -2530,28 +2564,25 @@ FROM percode GROUP BY cell ORDER BY cell
 """
 
 
-_PQ_UPSERT_MOD = 10
-
-
-def q_ivfpq_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL INDEX MAINTENANCE (VERDICT r5 "Next" #4) — the
-    vector-index admission path: the base split (vec_id % 10 ≠ 0) is
-    trained + encoded once and persisted; the delta split is then
-    encoded with the STORED codebooks and coarse centers (map-only, no
-    retrain) and appended to a copy of the code table, with a drift
-    counter in meta that flips ``retrain_due`` past 50% appended
-    (`sources/ann_index.upsert_ivfpq_index`). The manifest is computed
-    FROM THE POST-UPSERT STORED ARTIFACT: per coarse cell, total
-    vectors, how many arrived via upsert, and the order-free
-    Σ code_b·4^b checksum. The oracle replays base-split training +
-    whole-table encoding in pure SQL — a hash match proves
-    append-with-stored-codebooks ≡ from-scratch
-    encode-with-base-codebooks, i.e. admission is lossless. 100 TB
-    shape: ingest batches cost one map-side encode + an append; the
-    retrain trigger bounds quantization drift."""
-    codes, _centers, _cbs, _meta = ensure_ivfpq_upsert(
+@query(_sql_ivfpq_build())
+def q_ivfpq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """INDEX-AS-ARTIFACT build (VERDICT r4 "Next" #2): train the IVF-PQ
+    index ONCE and persist it — codes parquet (m+2 small ints per
+    vector: neighbor_id, coarse cell, 8 PQ code ids) + meta.json
+    (centers, codebooks, params, data fingerprint) under
+    spark-warehouse/ann_index/ (`sources/ann_index.py`). The returned
+    manifest is computed FROM THE STORED ARTIFACT (read back off disk,
+    never from the in-memory build): per coarse cell, the vector count
+    and an order-free integer checksum Σ_vec Σ_b code_b·4^b over the
+    stored codes. The oracle replays codebook training, encoding, and
+    coarse assignment in pure SQL — a hash match proves the persisted
+    artifact is bit-equal to a from-scratch train, i.e. the store/load
+    cycle is lossless. 100 TB shape: this is the amortized build step —
+    training is 1+iters distributed jobs, encode+assign are map-only,
+    and the artifact scan afterwards is a few ints per vector."""
+    codes, _centers, _cbs, _meta = ann.ensure_ivfpq_index(
         spark, sf_dir, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K,
-        iters=_PQ_ITERS, scale=_PQ_SCALE, split_mod=_PQ_UPSERT_MOD,
+        iters=_PQ_ITERS, scale=_PQ_SCALE,
     )
     checksum = None
     for b in range(_PQ_M):
@@ -2559,17 +2590,16 @@ def q_ivfpq_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         checksum = term if checksum is None else checksum + term
     return (
         codes.withColumn("_ck", checksum)
-        .withColumn(
-            "_new", (F.col("neighbor_id") % _PQ_UPSERT_MOD == 0).cast("bigint")
-        )
         .groupBy("cell")
         .agg(
             F.count(F.lit(1)).alias("n_vecs"),
-            F.sum("_new").alias("n_new"),
             F.sum("_ck").alias("codes_checksum"),
         )
         .orderBy("cell")
     )
+
+
+_PQ_UPSERT_MOD = 10
 
 
 def _sql_ivfpq_upsert() -> str:
@@ -2618,6 +2648,47 @@ FROM percode GROUP BY cell ORDER BY cell
 """
 
 
+@query(_sql_ivfpq_upsert())
+def q_ivfpq_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """INCREMENTAL INDEX MAINTENANCE (VERDICT r5 "Next" #4) — the
+    vector-index admission path: the base split (vec_id % 10 ≠ 0) is
+    trained + encoded once and persisted; the delta split is then
+    encoded with the STORED codebooks and coarse centers (map-only, no
+    retrain) and appended to a copy of the code table, with a drift
+    counter in meta that flips ``retrain_due`` past 50% appended
+    (`sources/ann_index.upsert_ivfpq_index`). The manifest is computed
+    FROM THE POST-UPSERT STORED ARTIFACT: per coarse cell, total
+    vectors, how many arrived via upsert, and the order-free
+    Σ code_b·4^b checksum. The oracle replays base-split training +
+    whole-table encoding in pure SQL — a hash match proves
+    append-with-stored-codebooks ≡ from-scratch
+    encode-with-base-codebooks, i.e. admission is lossless. 100 TB
+    shape: ingest batches cost one map-side encode + an append; the
+    retrain trigger bounds quantization drift."""
+    codes, _centers, _cbs, _meta = ann.ensure_ivfpq_upsert(
+        spark, sf_dir, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K,
+        iters=_PQ_ITERS, scale=_PQ_SCALE, split_mod=_PQ_UPSERT_MOD,
+    )
+    checksum = None
+    for b in range(_PQ_M):
+        term = F.col(f"code_{b}").cast("bigint") * F.lit(4 ** b).cast("bigint")
+        checksum = term if checksum is None else checksum + term
+    return (
+        codes.withColumn("_ck", checksum)
+        .withColumn(
+            "_new", (F.col("neighbor_id") % _PQ_UPSERT_MOD == 0).cast("bigint")
+        )
+        .groupBy("cell")
+        .agg(
+            F.count(F.lit(1)).alias("n_vecs"),
+            F.sum("_new").alias("n_new"),
+            F.sum("_ck").alias("codes_checksum"),
+        )
+        .orderBy("cell")
+    )
+
+
+@query(_sql_ivfpq())
 def q_ivfpq_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe-from-STORED-index — the build-once/probe-many production
     shape: load the persisted IVF-PQ artifact (build if absent/stale;
@@ -2629,9 +2700,7 @@ def q_ivfpq_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     same ranks). At scale the probe is a parquet scan of the code
     table (m+2 ints/vector) + one integer-cell equi-join against the
     broadcast query side."""
-    from ..operators.similarity import ivfpq_probe
-
-    codes, centers, cbs, _meta = ensure_ivfpq_index(
+    codes, centers, cbs, _meta = ann.ensure_ivfpq_index(
         spark, sf_dir, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K,
         iters=_PQ_ITERS, scale=_PQ_SCALE,
     )
@@ -2639,7 +2708,7 @@ def q_ivfpq_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding", F.col("embedding").cast("array<double>")
     )
     queries = emb.filter(F.col("vec_id") % 25 == 0)
-    out = ivfpq_probe(
+    out = sim.ivfpq_probe(
         queries, codes, cbs, centers, k=5, nprobe=3, scale=_PQ_SCALE
     )
     return out.select(
@@ -2648,64 +2717,6 @@ def q_ivfpq_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SEMDEDUP_K, _SEMDEDUP_ITERS, _SEMDEDUP_TAU = 8, 2, 0.45
-
-
-def q_semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic deduplication (SemDeDup, Abbas et al. 2023): cluster
-    the embedding space (exact replayable Lloyd, k=8, scaled-int
-    coords), then WITHIN each cluster remove any vector whose cosine to
-    a lower-id cluster-mate is ≥ τ — pairwise work is confined to
-    clusters, the property that makes semantic dedup tractable at
-    corpus scale. Output: per-cluster census (n, n_removed, keep_rate).
-    The oracle replays clustering, assignment, and the within-cluster
-    EXISTS rule end-to-end."""
-    from ..ml.lloyd import _argmin_cid_vec, lloyd_kmeans_vec
-    from ..operators.similarity import _dot_sql
-    from ..operators.spread import spread
-
-    # single-file fixture scan = 1 task; the unrolled 64-dim dots (norm
-    # + within-cluster pairwise) dominate and are partitioning-free —
-    # spread first (guide §2.5; measured 8.7 → 4.9 s interleaved A/B)
-    emb = spread(_t(spark, sf_dir, "embeddings")).withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    vint = F.expr(
-        "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000.0, 0) AS BIGINT))"
-    )
-    pts = emb.select("vec_id", "embedding", vint.alias("vint"))
-    _, centers = lloyd_kmeans_vec(
-        pts.select("vec_id", "vint"), "vec_id", "vint", dim=64, k=_SEMDEDUP_K, iters=_SEMDEDUP_ITERS
-    )
-    nrm = F.sqrt(F.expr(f"({_dot_sql('embedding', 'embedding', 64)})"))
-    lab = pts.select(
-        "vec_id", "embedding", nrm.alias("_n"), _argmin_cid_vec(centers, "vint").alias("cluster")
-    ).localCheckpoint(eager=False)
-    a = lab.select(
-        F.col("cluster"), F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"), F.col("_n").alias("na")
-    )
-    b = lab.select(
-        F.col("cluster"), F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"), F.col("_n").alias("nb")
-    )
-    cos = F.expr(f"({_dot_sql('va', 'vb', 64)})") / (F.col("na") * F.col("nb"))
-    removed = (
-        a.join(b, "cluster")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= _SEMDEDUP_TAU)
-        .select("cluster", F.col("id_b").alias("vec_id"))
-        .distinct()
-    )
-    return (
-        lab.select("cluster", "vec_id")
-        .join(removed.withColumn("rm", F.lit(1)), ["cluster", "vec_id"], "left")
-        .groupBy("cluster")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.coalesce(F.col("rm"), F.lit(0)).cast("bigint")).alias("n_removed"),
-        )
-        .withColumn("keep_rate", F.round(1 - F.col("n_removed") / F.col("n"), 6))
-        .orderBy("cluster")
-    )
 
 
 def _sql_semdedup() -> str:
@@ -2738,44 +2749,61 @@ GROUP BY l.cluster ORDER BY l.cluster
 """
 
 
-def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN quality evaluation — recall@5 of the two approximate paths
-    (SRP-LSH buckets, IVF probe) against the exact brute-force top-5 on
-    their own query sets. recall = Σ|approx ∩ exact| / (5·n_queries),
-    computed identically in both engines (sum-then-divide, no
-    per-query averaging ambiguity). The oracle nests the already-proven
-    exact/SRP/IVF SQL replays as subqueries — the engine literally
-    grades its own index structures."""
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
+@query(_sql_semdedup())
+def q_semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semantic deduplication (SemDeDup, Abbas et al. 2023): cluster
+    the embedding space (exact replayable Lloyd, k=8, scaled-int
+    coords), then WITHIN each cluster remove any vector whose cosine to
+    a lower-id cluster-mate is ≥ τ — pairwise work is confined to
+    clusters, the property that makes semantic dedup tractable at
+    corpus scale. Output: per-cluster census (n, n_removed, keep_rate).
+    The oracle replays clustering, assignment, and the within-cluster
+    EXISTS rule end-to-end."""
+    # single-file fixture scan = 1 task; the unrolled 64-dim dots (norm
+    # + within-cluster pairwise) dominate and are partitioning-free —
+    # spread first (guide §2.5; measured 8.7 → 4.9 s interleaved A/B)
+    emb = spr.spread(_t(spark, sf_dir, "embeddings")).withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-
-    def recall_row(method, queries, approx):
-        exact = cosine_topk_bruteforce(queries, emb, k=5, dim=64).select(
-            "query_id", "neighbor_id"
-        )
-        hits = exact.join(
-            approx.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"]
-        ).agg(F.count(F.lit(1)).alias("s"))
-        nq = queries.agg(F.count(F.lit(1)).alias("n"))
-        return hits.crossJoin(nq).select(
-            F.lit(method).alias("method"),
-            F.col("n").cast("bigint").alias("n_queries"),
-            F.round(F.col("s") / (F.lit(5.0) * F.col("n")), 6).alias("recall_at_5"),
-        )
-
-    q_srp = emb.filter(F.col("vec_id") < 32)
-    srp = cosine_topk_srp(q_srp, emb, k=5, planes=_srp_planes())
-    srp_multi = cosine_topk_srp_multi(q_srp, emb, k=5, tables=_srp_tables())
-    q_ivf = emb.filter(F.col("vec_id") % 25 == 0)
-    ivf = cosine_topk_ivf(
-        q_ivf, emb, k=5, centers=label_centroids(emb, "embedding", "label"), nprobe=3
+    vint = F.expr(
+        "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000.0, 0) AS BIGINT))"
+    )
+    pts = emb.select("vec_id", "embedding", vint.alias("vint"))
+    _, centers = lloyd.lloyd_kmeans_vec(
+        pts.select("vec_id", "vint"), "vec_id", "vint", dim=64, k=_SEMDEDUP_K, iters=_SEMDEDUP_ITERS
+    )
+    nrm = F.sqrt(F.expr(f"({sim._dot_sql('embedding', 'embedding', 64)})"))
+    lab = pts.select(
+        "vec_id",
+        "embedding",
+        nrm.alias("_n"),
+        lloyd._argmin_cid_vec(centers, "vint").alias("cluster"),
+    ).localCheckpoint(eager=False)
+    a = lab.select(
+        F.col("cluster"), F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"), F.col("_n").alias("na")
+    )
+    b = lab.select(
+        F.col("cluster"), F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"), F.col("_n").alias("nb")
+    )
+    cos = F.expr(f"({sim._dot_sql('va', 'vb', 64)})") / (F.col("na") * F.col("nb"))
+    removed = (
+        a.join(b, "cluster")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .withColumn("cosine", cos)
+        .filter(F.col("cosine") >= _SEMDEDUP_TAU)
+        .select("cluster", F.col("id_b").alias("vec_id"))
+        .distinct()
     )
     return (
-        recall_row("ivf", q_ivf, ivf)
-        .unionByName(recall_row("srp", q_srp, srp))
-        .unionByName(recall_row("srp_multi", q_srp, srp_multi))
-        .orderBy("method")
+        lab.select("cluster", "vec_id")
+        .join(removed.withColumn("rm", F.lit(1)), ["cluster", "vec_id"], "left")
+        .groupBy("cluster")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.coalesce(F.col("rm"), F.lit(0)).cast("bigint")).alias("n_removed"),
+        )
+        .withColumn("keep_rate", F.round(1 - F.col("n_removed") / F.col("n"), 6))
+        .orderBy("cluster")
     )
 
 
@@ -2828,46 +2856,45 @@ ORDER BY method
 """
 
 
-def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 grading of the COMPOSED IVF-PQ index against the exact
-    brute-force top-5 (the `ann_recall` pattern applied to
-    `ivfpq_topk_embeddings`): quantifies what the two approximations
-    stack to — coarse-cell candidate loss (IVF) plus code-quantization
-    ranking loss (PQ). recall = Σ|approx ∩ exact| / (5·n_queries),
-    sum-then-divide. The oracle nests the full IVF-PQ replay (codebook
-    training included) and the exact top-5 SQL as subqueries.
-
-    Grades the STORED index (VERDICT r4 "Next" #2): the approximate
-    side probes the persisted artifact via `sources/ann_index.py`
-    (built once per fixture fingerprint, loaded afterwards) — the shape
-    a production recall job has, and the reason a full-suite sweep no
-    longer pays a per-query retrain here. The oracle's from-scratch
-    replay doubles as the staleness gate: a stored index that drifted
-    from the data would fail the hash."""
-    from ..operators.similarity import ivfpq_probe
-
-    codes, centers, cbs, _meta = ensure_ivfpq_index(
-        spark, sf_dir, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K,
-        iters=_PQ_ITERS, scale=_PQ_SCALE,
-    )
+@query(_sql_ann_recall(), bench=False)
+def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN quality evaluation — recall@5 of the two approximate paths
+    (SRP-LSH buckets, IVF probe) against the exact brute-force top-5 on
+    their own query sets. recall = Σ|approx ∩ exact| / (5·n_queries),
+    computed identically in both engines (sum-then-divide, no
+    per-query averaging ambiguity). The oracle nests the already-proven
+    exact/SRP/IVF SQL replays as subqueries — the engine literally
+    grades its own index structures."""
     emb = _t(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
-    approx = ivfpq_probe(
-        queries, codes, cbs, centers, k=5, nprobe=3, scale=_PQ_SCALE
-    ).select("query_id", "neighbor_id")
-    exact = cosine_topk_bruteforce(queries, emb, k=5, dim=64).select(
-        "query_id", "neighbor_id"
+
+    def recall_row(method, queries, approx):
+        exact = sim.cosine_topk_bruteforce(queries, emb, k=5, dim=64).select(
+            "query_id", "neighbor_id"
+        )
+        hits = exact.join(
+            approx.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"]
+        ).agg(F.count(F.lit(1)).alias("s"))
+        nq = queries.agg(F.count(F.lit(1)).alias("n"))
+        return hits.crossJoin(nq).select(
+            F.lit(method).alias("method"),
+            F.col("n").cast("bigint").alias("n_queries"),
+            F.round(F.col("s") / (F.lit(5.0) * F.col("n")), 6).alias("recall_at_5"),
+        )
+
+    q_srp = emb.filter(F.col("vec_id") < 32)
+    srp = sim.cosine_topk_srp(q_srp, emb, k=5, planes=_srp_planes())
+    srp_multi = sim.cosine_topk_srp_multi(q_srp, emb, k=5, tables=_srp_tables())
+    q_ivf = emb.filter(F.col("vec_id") % 25 == 0)
+    ivf = sim.cosine_topk_ivf(
+        q_ivf, emb, k=5, centers=sim.label_centroids(emb, "embedding", "label"), nprobe=3
     )
-    hits = exact.join(approx, ["query_id", "neighbor_id"]).agg(
-        F.count(F.lit(1)).alias("s")
-    )
-    nq = queries.agg(F.count(F.lit(1)).alias("n"))
-    return hits.crossJoin(nq).select(
-        F.lit("ivfpq").alias("method"),
-        F.col("n").cast("bigint").alias("n_queries"),
-        F.round(F.col("s") / (F.lit(5.0) * F.col("n")), 6).alias("recall_at_5"),
+    return (
+        recall_row("ivf", q_ivf, ivf)
+        .unionByName(recall_row("srp", q_srp, srp))
+        .unionByName(recall_row("srp_multi", q_srp, srp_multi))
+        .orderBy("method")
     )
 
 
@@ -2884,40 +2911,46 @@ SELECT 'ivfpq' AS method,
 """
 
 
-def q_knn_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J10/ANN — exact cosine top-5 neighbors for a query subset.
+@query(_sql_ivfpq_recall(), bench=False)
+def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@5 grading of the COMPOSED IVF-PQ index against the exact
+    brute-force top-5 (the `ann_recall` pattern applied to
+    `ivfpq_topk_embeddings`): quantifies what the two approximations
+    stack to — coarse-cell candidate loss (IVF) plus code-quantization
+    ranking loss (PQ). recall = Σ|approx ∩ exact| / (5·n_queries),
+    sum-then-divide. The oracle nests the full IVF-PQ replay (codebook
+    training included) and the exact top-5 SQL as subqueries.
 
-    Rank omitted from the output (returns the top-k *set* with rounded
-    cosine) so fp tie-ordering can't flip rows vs the oracle.
-    """
-    from ..operators.spread import spread
-
-    # spread the base side: the unrolled 64-dim cosine against every
-    # broadcast query runs in the scan stage, which is 1 task on the
-    # single-file fixture (guide §2.5; measured 2.04 → 1.36 s A/B)
-    emb = spread(_t(spark, sf_dir, "embeddings"))
-    emb = emb.withColumn("embedding", F.col("embedding").cast("array<double>"))
-    queries = emb.filter(F.col("vec_id") < 32)
-    out = cosine_topk_bruteforce(queries, emb, k=5, dim=64)
-    return out.select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"))
-
-
-def q_knn_embeddings_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same exact top-k as ``knn_embeddings``, via the Arrow/numpy
-    matmul path (`cosine_topk_pandas`): per-batch BLAS matmul +
-    argpartition local top-k, global window merge. Measured 4× faster
-    than the codegen'd unrolled cosine at sf0.1 (0.50 s vs 2.12 s
-    warm) and the gap grows with base size — this is the production
-    brute-force path; the JVM expression version remains the
-    dependency-free baseline. Shares the oracle with knn_embeddings
-    (cosines agree to ~1e-12 relative; both round 6dp)."""
-    from ..operators.similarity import cosine_topk_pandas
-
-    emb = _t(spark, sf_dir, "embeddings")
-    emb = emb.withColumn("embedding", F.col("embedding").cast("array<double>"))
-    queries = emb.filter(F.col("vec_id") < 32)
-    out = cosine_topk_pandas(queries, emb, k=5)
-    return out.select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"))
+    Grades the STORED index (VERDICT r4 "Next" #2): the approximate
+    side probes the persisted artifact via `sources/ann_index.py`
+    (built once per fixture fingerprint, loaded afterwards) — the shape
+    a production recall job has, and the reason a full-suite sweep no
+    longer pays a per-query retrain here. The oracle's from-scratch
+    replay doubles as the staleness gate: a stored index that drifted
+    from the data would fail the hash."""
+    codes, centers, cbs, _meta = ann.ensure_ivfpq_index(
+        spark, sf_dir, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K,
+        iters=_PQ_ITERS, scale=_PQ_SCALE,
+    )
+    emb = _t(spark, sf_dir, "embeddings").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    approx = sim.ivfpq_probe(
+        queries, codes, cbs, centers, k=5, nprobe=3, scale=_PQ_SCALE
+    ).select("query_id", "neighbor_id")
+    exact = sim.cosine_topk_bruteforce(queries, emb, k=5, dim=64).select(
+        "query_id", "neighbor_id"
+    )
+    hits = exact.join(approx, ["query_id", "neighbor_id"]).agg(
+        F.count(F.lit(1)).alias("s")
+    )
+    nq = queries.agg(F.count(F.lit(1)).alias("n"))
+    return hits.crossJoin(nq).select(
+        F.lit("ivfpq").alias("method"),
+        F.col("n").cast("bigint").alias("n_queries"),
+        F.round(F.col("s") / (F.lit(5.0) * F.col("n")), 6).alias("recall_at_5"),
+    )
 
 
 _SQL_KNN = """
@@ -2936,6 +2969,54 @@ SELECT query_id, neighbor_id, round(cosine, 6) AS cosine FROM ranked WHERE rn <=
 """
 
 
+@query(_SQL_KNN)
+def q_knn_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J10/ANN — exact cosine top-5 neighbors for a query subset.
+
+    Rank omitted from the output (returns the top-k *set* with rounded
+    cosine) so fp tie-ordering can't flip rows vs the oracle.
+    """
+    # spread the base side: the unrolled 64-dim cosine against every
+    # broadcast query runs in the scan stage, which is 1 task on the
+    # single-file fixture (guide §2.5; measured 2.04 → 1.36 s A/B)
+    emb = spr.spread(_t(spark, sf_dir, "embeddings"))
+    emb = emb.withColumn("embedding", F.col("embedding").cast("array<double>"))
+    queries = emb.filter(F.col("vec_id") < 32)
+    out = sim.cosine_topk_bruteforce(queries, emb, k=5, dim=64)
+    return out.select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"))
+
+
+@query(_SQL_KNN)
+def q_knn_embeddings_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Same exact top-k as ``knn_embeddings``, via the Arrow/numpy
+    matmul path (`cosine_topk_pandas`): per-batch BLAS matmul +
+    argpartition local top-k, global window merge. Measured 4× faster
+    than the codegen'd unrolled cosine at sf0.1 (0.50 s vs 2.12 s
+    warm) and the gap grows with base size — this is the production
+    brute-force path; the JVM expression version remains the
+    dependency-free baseline. Shares the oracle with knn_embeddings
+    (cosines agree to ~1e-12 relative; both round 6dp)."""
+    emb = _t(spark, sf_dir, "embeddings")
+    emb = emb.withColumn("embedding", F.col("embedding").cast("array<double>"))
+    queries = emb.filter(F.col("vec_id") < 32)
+    out = sim.cosine_topk_pandas(queries, emb, k=5)
+    return out.select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"))
+
+
+_SQL_CENTROIDS = """
+WITH e AS (
+  SELECT label, unnest(embedding::DOUBLE[]) AS v,
+         generate_subscripts(embedding, 1) - 1 AS pos
+  FROM embeddings
+), c AS (SELECT label, pos, avg(v) AS c FROM e GROUP BY label, pos)
+SELECT c.label, round(sqrt(sum(c.c * c.c)), 6) AS centroid_norm, n
+FROM c JOIN (SELECT label, count(*)::BIGINT AS n FROM embeddings GROUP BY label) cnt
+  ON c.label = cnt.label
+GROUP BY c.label, n ORDER BY c.label
+"""
+
+
+@query(_SQL_CENTROIDS)
 def q_embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector aggregation: per-label centroid norm + count (the shuffle
     shape of a KMeans iteration, oracle-checkable)."""
@@ -2955,36 +3036,9 @@ def q_embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CENTROIDS = """
-WITH e AS (
-  SELECT label, unnest(embedding::DOUBLE[]) AS v,
-         generate_subscripts(embedding, 1) - 1 AS pos
-  FROM embeddings
-), c AS (SELECT label, pos, avg(v) AS c FROM e GROUP BY label, pos)
-SELECT c.label, round(sqrt(sum(c.c * c.c)), 6) AS centroid_norm, n
-FROM c JOIN (SELECT label, count(*)::BIGINT AS n FROM embeddings GROUP BY label) cnt
-  ON c.label = cnt.label
-GROUP BY c.label, n ORDER BY c.label
-"""
-
-
 # --------------------------------------------------------------------------
 # ML / feature-engineering (SURVEY §2.9)
 # --------------------------------------------------------------------------
-
-def q_one_hot_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M5 — one-hot dummies (fixed category list, pd.get_dummies parity)
-    summed per dow: proves the dummy columns, not just the counts."""
-    from ..ml.features import one_hot
-
-    ev = _t(spark, sf_dir, "events")
-    d = one_hot(
-        ev.withColumn("dow", temporal.dayofweek_monday0("ts")), "event_type", EVENT_TYPES, "et"
-    )
-    return d.groupBy("dow").agg(
-        *[F.sum(f"et_{c}").alias(f"et_{c}") for c in EVENT_TYPES]
-    ).orderBy("dow")
-
 
 _SQL_ONE_HOT = """
 SELECT (isodow(ts) - 1)::INT AS dow,
@@ -2997,19 +3051,17 @@ FROM events GROUP BY 1 ORDER BY dow
 """
 
 
-def q_positional_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F15 — deterministic positional 70/30 split (np.split parity) by
-    event_id order, summarized per split."""
-    from ..ml.features import positional_split
-
+@query(_SQL_ONE_HOT, bench=False)
+def q_one_hot_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """M5 — one-hot dummies (fixed category list, pd.get_dummies parity)
+    summed per dow: proves the dummy columns, not just the counts."""
     ev = _t(spark, sf_dir, "events")
-    s = positional_split(ev, "event_id", 0.7)
-    return s.groupBy("split").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("event_id").alias("min_id"),
-        F.max("event_id").alias("max_id"),
-        F.round(F.avg("value"), 6).alias("avg_value"),
-    ).orderBy("split")
+    d = mf.one_hot(
+        ev.withColumn("dow", temporal.dayofweek_monday0("ts")), "event_type", EVENT_TYPES, "et"
+    )
+    return d.groupBy("dow").agg(
+        *[F.sum(f"et_{c}").alias(f"et_{c}") for c in EVENT_TYPES]
+    ).orderBy("dow")
 
 
 _SQL_POS_SPLIT = """
@@ -3025,19 +3077,18 @@ FROM r GROUP BY 1 ORDER BY split
 """
 
 
-def q_scaled_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M6 — standard scaling with fit/apply artifact split (fit global
-    μ/σ, apply as literals), then per-type stats of the z-scores."""
-    from ..ml.features import apply_standard_scaler, fit_standard_scaler
-
+@query(_SQL_POS_SPLIT, bench=False)
+def q_positional_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F15 — deterministic positional 70/30 split (np.split parity) by
+    event_id order, summarized per split."""
     ev = _t(spark, sf_dir, "events")
-    stats = fit_standard_scaler(ev, ["value"])
-    z = apply_standard_scaler(ev, stats)
-    return z.groupBy("event_type").agg(
-        F.round(F.avg("value_z"), 6).alias("avg_z"),
-        F.round(F.min("value_z"), 6).alias("min_z"),
-        F.round(F.max("value_z"), 6).alias("max_z"),
-    )
+    s = mf.positional_split(ev, "event_id", 0.7)
+    return s.groupBy("split").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("event_id").alias("min_id"),
+        F.max("event_id").alias("max_id"),
+        F.round(F.avg("value"), 6).alias("avg_value"),
+    ).orderBy("split")
 
 
 _SQL_SCALED = """
@@ -3050,15 +3101,18 @@ FROM events, s GROUP BY event_type
 """
 
 
-def q_pca_axis_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M4 — closed-form 2-D PCA (eigenvalues/axis angle of the coord
-    covariance matrix). Cross-checked against ml.feature.PCA in
-    tests/test_ml.py; the closed form is what the oracle can express."""
-    from ..ml.pipeline import pca2d_closed_form
-
-    pts = _derived_points(_t(spark, sf_dir, "events"))
-    out = pca2d_closed_form(pts, "lon", "lat")
-    return out.select(*[F.round(F.col(c), 6).alias(c) for c in out.columns])
+@query(_SQL_SCALED, bench=False)
+def q_scaled_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """M6 — standard scaling with fit/apply artifact split (fit global
+    μ/σ, apply as literals), then per-type stats of the z-scores."""
+    ev = _t(spark, sf_dir, "events")
+    stats = mf.fit_standard_scaler(ev, ["value"])
+    z = mf.apply_standard_scaler(ev, stats)
+    return z.groupBy("event_type").agg(
+        F.round(F.avg("value_z"), 6).alias("avg_z"),
+        F.round(F.min("value_z"), 6).alias("min_z"),
+        F.round(F.max("value_z"), 6).alias("max_z"),
+    )
 
 
 _SQL_PCA = f"""
@@ -3076,30 +3130,24 @@ FROM a
 """
 
 
+@query(_SQL_PCA, bench=False)
+def q_pca_axis_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """M4 — closed-form 2-D PCA (eigenvalues/axis angle of the coord
+    covariance matrix). Cross-checked against ml.feature.PCA in
+    tests/test_ml.py; the closed form is what the oracle can express."""
+    pts = _derived_points(_t(spark, sf_dir, "events"))
+    out = mlp.pca2d_closed_form(pts, "lon", "lat")
+    return out.select(*[F.round(F.col(c), 6).alias(c) for c in out.columns])
+
+
 _VORONOI_CENTERS: list[tuple[float, float]] | None = None
 
 
 def _voronoi_centers() -> list[tuple[float, float]]:
     global _VORONOI_CENTERS
     if _VORONOI_CENTERS is None:
-        from ..ml.pipeline import deterministic_centers
-
-        _VORONOI_CENTERS = deterministic_centers(15, -74.3, -73.7, 40.5, 41.0)
+        _VORONOI_CENTERS = mlp.deterministic_centers(15, -74.3, -73.7, 40.5, 41.0)
     return _VORONOI_CENTERS
-
-
-def q_voronoi_region_speed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J5/M3 composition (lab2 nb cell 20): Voronoi-region assignment =
-    argmin distance to 15 driver-side centers (broadcast literal
-    when-chain — zero shuffle), then per-region mean feature."""
-    from ..ml.pipeline import assign_nearest_center
-
-    pts = _derived_points(_t(spark, sf_dir, "events"))
-    r = assign_nearest_center(pts, "lon", "lat", _voronoi_centers())
-    return r.groupBy("region_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.avg("value"), 6).alias("avg_value"),
-    ).orderBy("region_id")
 
 
 def _sql_voronoi() -> str:
@@ -3115,23 +3163,17 @@ FROM d GROUP BY 1 ORDER BY region_id
 """
 
 
-def q_region_speed_joinback(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J9+A6 — the lab2 cell-20 two-step: per-region mean feature,
-    then joined BACK onto the row stream by the carried region key
-    (the reference's ``reindex(df.index)``; here a broadcast equi-join
-    on region_id — the aggregated side is tiny by construction). Output
-    is each point's deviation from its region mean, per event type."""
-    from ..ml.pipeline import assign_nearest_center
-
+@query(_sql_voronoi(), bench=False)
+def q_voronoi_region_speed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J5/M3 composition (lab2 nb cell 20): Voronoi-region assignment =
+    argmin distance to 15 driver-side centers (broadcast literal
+    when-chain — zero shuffle), then per-region mean feature."""
     pts = _derived_points(_t(spark, sf_dir, "events"))
-    r = assign_nearest_center(pts, "lon", "lat", _voronoi_centers())
-    region_means = r.groupBy("region_id").agg(F.avg("value").alias("region_avg"))
-    back = r.join(F.broadcast(region_means), "region_id", "left")
-    return back.groupBy("event_type").agg(
+    r = mlp.assign_nearest_center(pts, "lon", "lat", _voronoi_centers())
+    return r.groupBy("region_id").agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(F.avg(F.col("value") - F.col("region_avg")), 6).alias("avg_dev"),
-        F.round(F.max(F.abs(F.col("value") - F.col("region_avg"))), 6).alias("max_abs_dev"),
-    )
+        F.round(F.avg("value"), 6).alias("avg_value"),
+    ).orderBy("region_id")
 
 
 def _sql_region_joinback() -> str:
@@ -3151,9 +3193,37 @@ GROUP BY r.event_type
 """
 
 
+@query(_sql_region_joinback(), bench=False)
+def q_region_speed_joinback(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J9+A6 — the lab2 cell-20 two-step: per-region mean feature,
+    then joined BACK onto the row stream by the carried region key
+    (the reference's ``reindex(df.index)``; here a broadcast equi-join
+    on region_id — the aggregated side is tiny by construction). Output
+    is each point's deviation from its region mean, per event type."""
+    pts = _derived_points(_t(spark, sf_dir, "events"))
+    r = mlp.assign_nearest_center(pts, "lon", "lat", _voronoi_centers())
+    region_means = r.groupBy("region_id").agg(F.avg("value").alias("region_avg"))
+    back = r.join(F.broadcast(region_means), "region_id", "left")
+    return back.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.round(F.avg(F.col("value") - F.col("region_avg")), 6).alias("avg_dev"),
+        F.round(F.max(F.abs(F.col("value") - F.col("region_avg"))), 6).alias("max_abs_dev"),
+    )
+
+
 _KMEANS_K, _KMEANS_ITERS = 8, 20
 
 
+_SQL_KMEANS_BAND = """
+WITH n AS (SELECT count(*)::BIGINT AS c FROM events)
+SELECT t.band, t.ok, n.c AS n_points
+FROM (VALUES ('centroids_in_bbox', true), ('k_at_most_8_nonempty', true),
+             ('no_collapse', true), ('sizes_partition_points', true)) AS t(band, ok), n
+ORDER BY t.band
+"""
+
+
+@query(_SQL_KMEANS_BAND, bench=False)
 def q_kmeans_event_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M3 — k-means (k=8, 20 rounds: Spark ML's default maxIter) over
     the derived points, fitted with the exact Lloyd of `ml/lloyd.py` on
@@ -3165,10 +3235,8 @@ def q_kmeans_event_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived-point bbox, and no degenerate all-in-one collapse. The
     full iteration replay of the same fit is `lloyd_kmeans_clusters`'s
     oracle; Lloyd convergence is pytest-verified (tests/test_ml.py)."""
-    from ..ml.lloyd import lloyd_kmeans
-
     ev = _t(spark, sf_dir, "events")
-    labeled, _centers = lloyd_kmeans(
+    labeled, _centers = lloyd.lloyd_kmeans(
         ev.select("event_id", *_event_lattice()), "event_id", ["x", "y"],
         k=_KMEANS_K, iters=_KMEANS_ITERS,
     )
@@ -3194,23 +3262,29 @@ def q_kmeans_event_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("no_collapse", max(sizes) < sum(sizes), n_input),
         ("sizes_partition_points", sum(sizes) == n_input, n_input),
     ]
-    return local_frame(
+    return tb.local_frame(
         spark, rows, "band string, ok boolean, n_points bigint"
     ).orderBy("band")
-
-
-_SQL_KMEANS_BAND = """
-WITH n AS (SELECT count(*)::BIGINT AS c FROM events)
-SELECT t.band, t.ok, n.c AS n_points
-FROM (VALUES ('centroids_in_bbox', true), ('k_at_most_8_nonempty', true),
-             ('no_collapse', true), ('sizes_partition_points', true)) AS t(band, ok), n
-ORDER BY t.band
-"""
 
 
 _LLOYD_K, _LLOYD_ITERS = 5, 6
 
 
+def _sql_lloyd() -> str:
+    iters = _LLOYD_ITERS
+    return f"""
+WITH pts AS (SELECT event_id AS id, {_SQL_EVENT_LATTICE} FROM events),
+{_sql_lloyd_ctes("pts", ["x", "y"], _LLOYD_K, iters)},
+a_final AS ({_sql_nearest("pts", ["x", "y"], f"c{iters}", ["id"])})
+SELECT f.cid AS cluster_id, count(*)::BIGINT AS n,
+       round(any_value(c.x), 6) AS c_x, round(any_value(c.y), 6) AS c_y
+FROM a_final f JOIN c{iters} c ON c.cid = f.cid
+GROUP BY f.cid
+ORDER BY n DESC, cluster_id ASC
+"""
+
+
+@query(_sql_lloyd())
 def q_lloyd_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M3 (oracle-able formulation) — deterministic distributed Lloyd's
     KMeans (`ml/lloyd.py`) on the integer event grid coords
@@ -3219,10 +3293,8 @@ def q_lloyd_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums make every iteration bit-replayable, so the DuckDB oracle
     unrolls ALL 6 Lloyd updates as CTEs and the census must match
     value-for-value — including the final centroids."""
-    from ..ml.lloyd import lloyd_kmeans
-
     ev = _t(spark, sf_dir, "events").select("event_id", *_event_lattice())
-    labeled, centers = lloyd_kmeans(
+    labeled, centers = lloyd.lloyd_kmeans(
         ev, "event_id", ["x", "y"], k=_LLOYD_K, iters=_LLOYD_ITERS
     )
     cx_map = F.create_map(
@@ -3244,20 +3316,16 @@ def q_lloyd_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_lloyd() -> str:
-    iters = _LLOYD_ITERS
-    return f"""
-WITH pts AS (SELECT event_id AS id, {_SQL_EVENT_LATTICE} FROM events),
-{_sql_lloyd_ctes("pts", ["x", "y"], _LLOYD_K, iters)},
-a_final AS ({_sql_nearest("pts", ["x", "y"], f"c{iters}", ["id"])})
-SELECT f.cid AS cluster_id, count(*)::BIGINT AS n,
-       round(any_value(c.x), 6) AS c_x, round(any_value(c.y), 6) AS c_y
-FROM a_final f JOIN c{iters} c ON c.cid = f.cid
-GROUP BY f.cid
-ORDER BY n DESC, cluster_id ASC
+_SQL_GBT_VALUE_BAND = """
+WITH n AS (SELECT count(*)::BIGINT AS c FROM events WHERE value >= 0)
+SELECT t.band, t.ok, n.c AS n_rows
+FROM (VALUES ('mae_finite_positive', true), ('r2_at_most_one', true),
+             ('rmse_ge_mae', true), ('rmsle_finite', true)) AS t(band, ok), n
+ORDER BY t.band
 """
 
 
+@query(_SQL_GBT_VALUE_BAND, bench=False)
 def q_gbt_value_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M7+M9 — GBT regression (LightGBM stand-in) on a log1p target with
     the Lab-2 shape: feature engineering → seeded 70/30 random split →
@@ -3267,22 +3335,19 @@ def q_gbt_value_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariants): errors finite-positive, RMSE ≥ MAE (Jensen), R² ≤ 1,
     with the eligible-row count INDEPENDENTLY recomputed by the oracle.
     The learnable-target twin with tight bands is `gbt_band_lab2`."""
-    from ..ml.features import log1p_target
-    from ..ml.pipeline import gbt_fit, gbt_predict, regression_metrics
-
     ev = _derived_points(_t(spark, sf_dir, "events"))
     feats = (
         ev.withColumn("hour", F.hour("ts"))
         .withColumn("dow", temporal.dayofweek_monday0("ts"))
-        .withColumn("dist_km", haversine_km("lat", "lon", F.lit(40.7580), F.lit(-73.9855)))
+        .withColumn("dist_km", geo.haversine_km("lat", "lon", F.lit(40.7580), F.lit(-73.9855)))
     )
-    feats = log1p_target(feats.filter(F.col("value") >= 0), "value")
+    feats = mf.log1p_target(feats.filter(F.col("value") >= 0), "value")
     n_rows = feats.count()
     fcols = ["hour", "dow", "lon", "lat", "dist_km"]
     train, valid = feats.randomSplit([0.7, 0.3], seed=42)
-    model = gbt_fit(train, fcols, "log_value", max_iter=10, max_depth=4)
-    pred = gbt_predict(model, valid, fcols)
-    m = regression_metrics(
+    model = mlp.gbt_fit(train, fcols, "log_value", max_iter=10, max_depth=4)
+    pred = mlp.gbt_predict(model, valid, fcols)
+    m = mlp.regression_metrics(
         pred, "log_value", "prediction", log_space=True
     ).collect()[0]
     rows = [
@@ -3291,18 +3356,9 @@ def q_gbt_value_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("rmse_ge_mae", bool(m["rmse"] >= m["mae"]), n_rows),
         ("rmsle_finite", bool(math.isfinite(m["rmsle"])), n_rows),
     ]
-    return local_frame(
+    return tb.local_frame(
         spark, rows, "band string, ok boolean, n_rows bigint"
     ).orderBy("band")
-
-
-_SQL_GBT_VALUE_BAND = """
-WITH n AS (SELECT count(*)::BIGINT AS c FROM events WHERE value >= 0)
-SELECT t.band, t.ok, n.c AS n_rows
-FROM (VALUES ('mae_finite_positive', true), ('r2_at_most_one', true),
-             ('rmse_ge_mae', true), ('rmsle_finite', true)) AS t(band, ok), n
-ORDER BY t.band
-"""
 
 
 # --------------------------------------------------------------------------
@@ -3325,25 +3381,6 @@ _ROAD_SEGMENTS_SQL = f"""
   FROM dp a JOIN dp b ON b.event_id = a.event_id + 1
   WHERE a.event_id < 999 AND b.event_id < 1000
 """
-
-
-def q_road_density_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G9/J6 — road length per grid cell (lab3c cell 5, but as a
-    cell-exploded equi-join + Liang-Barsky clip instead of the
-    reference's O(cells×edges) nested loop): per-cell total overlap
-    length + segment count over a 0.05° grid."""
-    from ..operators.spatial_join import segment_grid_overlap
-
-    segs = _road_segments(spark, sf_dir)
-    ov = segment_grid_overlap(segs, origin_x=-74.3, origin_y=40.5, cell=0.05)
-    return (
-        ov.groupBy("gx", "gy")
-        .agg(
-            F.round(F.sum("overlap_len"), 6).alias("road_len"),
-            F.count(F.lit(1)).alias("n_segments"),
-        )
-        .orderBy("gx", "gy")
-    )
 
 
 _SQL_ROAD_DENSITY = f"""
@@ -3398,66 +3435,35 @@ GROUP BY gx, gy ORDER BY gx, gy
 """
 
 
-def q_isochrone_poi_access(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G6+G8 composition (lab3a cells 12/15): bounded weighted SSSP from
-    a center node over a deterministic 30×30 road grid → reachable set →
-    convex hull → POI accessibility share per event_type (half-plane
-    point-in-hull filter, no UDF).
-
-    Geometry runs on the common INTEGER lattice (node col·100, POI
-    m·3 — the per-axis affine image of lon/lat, which preserves hull
-    membership): cross products are exact bigint arithmetic, so the
-    oracle replays the whole chain — recursive-CTE bounded SSSP (edge
-    times 60/k are exact doubles), hull membership as a NOT EXISTS over
-    supporting pairs of the reachable set's per-row extremes — with
-    zero fp ambiguity. Dijkstra/hull/membership parity is additionally
-    pytest-verified (tests/test_graph.py, tests/test_overlay.py)."""
-    from ..graph.algorithms import convex_hull, isochrone_nodes, points_in_hull
-
-    n = 30
-    ids = spark.range(n * n).select(F.col("id").cast("bigint"))
-    nodes = ids.select(
-        "id",
-        ((F.col("id") % n) * 100).alias("ix"),
-        ((F.col("id") / n).cast("bigint") * 100).alias("iy"),
+@query(_SQL_ROAD_DENSITY)
+def q_road_density_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """G9/J6 — road length per grid cell (lab3c cell 5, but as a
+    cell-exploded equi-join + Liang-Barsky clip instead of the
+    reference's O(cells×edges) nested loop): per-cell total overlap
+    length + segment count over a 0.05° grid."""
+    segs = _road_segments(spark, sf_dir)
+    ov = sj.segment_grid_overlap(segs, origin_x=-74.3, origin_y=40.5, cell=0.05)
+    return (
+        ov.groupBy("gx", "gy")
+        .agg(
+            F.round(F.sum("overlap_len"), 6).alias("road_len"),
+            F.count(F.lit(1)).alias("n_segments"),
+        )
+        .orderBy("gx", "gy")
     )
+
+
+def _grid_graph(spark: SparkSession, n: int) -> tuple[DataFrame, DataFrame]:
+    """The node ids and (src, dst) edges of the n×n grid graph: node id
+    links to its right (id + 1) and lower (id + n) neighbour."""
+    ids = spark.range(n * n).select(F.col("id").cast("bigint"))
     right = ids.filter((F.col("id") % n) < n - 1).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
     down = ids.filter(F.col("id") < n * (n - 1)).select(
         F.col("id").alias("src"), (F.col("id") + n).alias("dst")
     )
-    # travel_time: unit edge length / deterministic per-edge speed class
-    edges = right.unionByName(down).withColumn(
-        "travel_time",
-        F.lit(60.0) / (F.lit(1) + (F.col("src") * F.col("dst")) % 5),
-    )
-    center = n * n // 2 + n // 2  # node 465
-    reach = isochrone_nodes(edges, nodes, center, radius=300.0, directed=False)
-    hull = convex_hull(reach, x="ix", y="iy")
-    pois = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 1000)
-        .select(
-            "event_id",
-            "event_type",
-            ((F.col("event_id") % 1000) * 3).alias("ix"),
-            (((F.col("event_id") * 7) % 1000) * 3).alias("iy"),
-        )
-    )
-    inside = points_in_hull(pois, hull, x="ix", y="iy").select("event_id").withColumn(
-        "acc", F.lit(1)
-    )
-    return (
-        pois.join(inside.select("event_id", "acc"), "event_id", "left")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.sum(F.coalesce(F.col("acc"), F.lit(0))).alias("n_accessible"),
-            F.round(F.avg(F.coalesce(F.col("acc"), F.lit(0)).cast("double")), 6).alias("pct_accessible"),
-        )
-        .orderBy("event_type")
-    )
+    return ids, right.unionByName(down)
 
 
 _SQL_ISOCHRONE = """
@@ -3515,73 +3521,67 @@ FROM acc GROUP BY event_type ORDER BY event_type
 """
 
 
+@query(_SQL_ISOCHRONE, bench=False)
+def q_isochrone_poi_access(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """G6+G8 composition (lab3a cells 12/15): bounded weighted SSSP from
+    a center node over a deterministic 30×30 road grid → reachable set →
+    convex hull → POI accessibility share per event_type (half-plane
+    point-in-hull filter, no UDF).
+
+    Geometry runs on the common INTEGER lattice (node col·100, POI
+    m·3 — the per-axis affine image of lon/lat, which preserves hull
+    membership): cross products are exact bigint arithmetic, so the
+    oracle replays the whole chain — recursive-CTE bounded SSSP (edge
+    times 60/k are exact doubles), hull membership as a NOT EXISTS over
+    supporting pairs of the reachable set's per-row extremes — with
+    zero fp ambiguity. Dijkstra/hull/membership parity is additionally
+    pytest-verified (tests/test_graph.py, tests/test_overlay.py)."""
+    n = 30
+    ids, grid = _grid_graph(spark, n)
+    nodes = ids.select(
+        "id",
+        ((F.col("id") % n) * 100).alias("ix"),
+        ((F.col("id") / n).cast("bigint") * 100).alias("iy"),
+    )
+    # travel_time: unit edge length / deterministic per-edge speed class
+    edges = grid.withColumn(
+        "travel_time",
+        F.lit(60.0) / (F.lit(1) + (F.col("src") * F.col("dst")) % 5),
+    )
+    center = n * n // 2 + n // 2  # node 465
+    reach = ga.isochrone_nodes(edges, nodes, center, radius=300.0, directed=False)
+    hull = ga.convex_hull(reach, x="ix", y="iy")
+    pois = (
+        _t(spark, sf_dir, "events")
+        .filter(F.col("event_id") < 1000)
+        .select(
+            "event_id",
+            "event_type",
+            ((F.col("event_id") % 1000) * 3).alias("ix"),
+            (((F.col("event_id") * 7) % 1000) * 3).alias("iy"),
+        )
+    )
+    inside = ga.points_in_hull(pois, hull, x="ix", y="iy").select("event_id").withColumn(
+        "acc", F.lit(1)
+    )
+    return (
+        pois.join(inside.select("event_id", "acc"), "event_id", "left")
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_total"),
+            F.sum(F.coalesce(F.col("acc"), F.lit(0))).alias("n_accessible"),
+            F.round(F.avg(F.coalesce(F.col("acc"), F.lit(0)).cast("double")), 6).alias("pct_accessible"),
+        )
+        .orderBy("event_type")
+    )
+
+
 # --------------------------------------------------------------------------
 # Raster sampling (SURVEY §2.1 S10/S11, §2.3 J7)
 # --------------------------------------------------------------------------
 
-def q_raster_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S11/J7 — broadcast-raster point sampling (rowcol + clip + nodata
-    mean-fill, get_population_density semantics) over derived event
-    points; per-type stats of the sampled density. The deterministic
-    synthetic raster is closed-form, so the oracle recomputes pixels in
-    SQL without seeing the array."""
-    from ..sources.raster import (
-        RASTER_NODATA,
-        RASTER_T,
-        sample_raster,
-        synthetic_raster,
-    )
-
-    pts = _derived_points(_t(spark, sf_dir, "events"))
-    s = sample_raster(pts, synthetic_raster(), RASTER_T, RASTER_NODATA)
-    return (
-        s.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg("raster_value"), 6).alias("avg_density"),
-            F.round(F.min("raster_value"), 6).alias("min_density"),
-            F.round(F.max("raster_value"), 6).alias("max_density"),
-        )
-        .orderBy("event_type")
-    )
-
-
-def q_raster_tiled_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S10/S11 scale path — the SAME sampling semantics as
-    `raster_sample_stats`, but over the tiled raster layout
-    (tile-table equi-join + element_at instead of a broadcast numpy
-    array; `sources/raster.sample_raster_tiled`). Shares the broadcast
-    path's oracle — a match proves layout equivalence."""
-    from ..sources.raster import (
-        RASTER_NODATA,
-        RASTER_T,
-        raster_valid_mean,
-        sample_raster_tiled,
-        synthetic_raster,
-        tiled_raster_df,
-    )
-
-    pts = _derived_points(_t(spark, sf_dir, "events"))
-    fill = raster_valid_mean(synthetic_raster(), RASTER_NODATA)
-    s = sample_raster_tiled(
-        pts, tiled_raster_df(spark), RASTER_T, RASTER_NODATA, fill
-    )
-    return (
-        s.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg("raster_value"), 6).alias("avg_density"),
-            F.round(F.min("raster_value"), 6).alias("min_density"),
-            F.round(F.max("raster_value"), 6).alias("max_density"),
-        )
-        .orderBy("event_type")
-    )
-
-
 def _sql_raster_stats() -> str:
-    from ..sources.raster import raster_value_sql
-
-    rv = raster_value_sql("lon", "lat")
+    rv = raster.raster_value_sql("lon", "lat")
     return f"""
 WITH p AS ({_DERIVED_POINTS_SQL}),
 s AS (SELECT event_type, {rv} AS raster_value FROM p)
@@ -3593,40 +3593,63 @@ FROM s GROUP BY event_type ORDER BY event_type
 """
 
 
+@query(_sql_raster_stats())
+def q_raster_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S11/J7 — broadcast-raster point sampling (rowcol + clip + nodata
+    mean-fill, get_population_density semantics) over derived event
+    points; per-type stats of the sampled density. The deterministic
+    synthetic raster is closed-form, so the oracle recomputes pixels in
+    SQL without seeing the array."""
+    pts = _derived_points(_t(spark, sf_dir, "events"))
+    s = raster.sample_raster(pts, raster.synthetic_raster(), raster.RASTER_T, raster.RASTER_NODATA)
+    return (
+        s.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.avg("raster_value"), 6).alias("avg_density"),
+            F.round(F.min("raster_value"), 6).alias("min_density"),
+            F.round(F.max("raster_value"), 6).alias("max_density"),
+        )
+        .orderBy("event_type")
+    )
+
+
+@query(_sql_raster_stats(), bench=False)
+def q_raster_tiled_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S10/S11 scale path — the SAME sampling semantics as
+    `raster_sample_stats`, but over the tiled raster layout
+    (tile-table equi-join + element_at instead of a broadcast numpy
+    array; `sources/raster.sample_raster_tiled`). Shares the broadcast
+    path's oracle — a match proves layout equivalence."""
+    pts = _derived_points(_t(spark, sf_dir, "events"))
+    fill = raster.raster_valid_mean(raster.synthetic_raster(), raster.RASTER_NODATA)
+    s = raster.sample_raster_tiled(
+        pts, raster.tiled_raster_df(spark), raster.RASTER_T, raster.RASTER_NODATA, fill
+    )
+    return (
+        s.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.avg("raster_value"), 6).alias("avg_density"),
+            F.round(F.min("raster_value"), 6).alias("min_density"),
+            F.round(F.max("raster_value"), 6).alias("max_density"),
+        )
+        .orderBy("event_type")
+    )
+
+
 # --------------------------------------------------------------------------
 # k-distance curve (M2) + hyperparameter search (M8)
 # --------------------------------------------------------------------------
 
-def q_kdist_curve_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M2 — DBSCAN eps-tuning support: per-point k-th-NN distance
-    (k=4) over 500 derived points, summarized (the reference sorts the
-    curve and eyeballs the elbow; the curve's summary stats are the
-    checkable artifact)."""
-    from ..ml.pipeline import kth_nn_distance_stats
-    from ..operators.knn import kth_nn_distance
-
-    from ..functions.geo import utm_xy_m
-
-    pts = _derived_points(_t(spark, sf_dir, "events")).filter(F.col("event_id") < 500)
-    ux, uy = utm_xy_m("lat", "lon", zone=18)
-    pts = pts.select(F.col("event_id").alias("id"), ux.alias("x"), uy.alias("y"))
-    kd = kth_nn_distance(pts, k=4, id_col="id", x="x", y="y")
-    s = kth_nn_distance_stats(kd, dist_col="kth_dist")
-    return s.select(
-        "n",
-        *[F.round(F.col(c), 4).alias(c) for c in ["mean_dist", "median_dist", "p90_dist", "max_dist"]],
-    )
-
-
 def _sql_utm_xy() -> tuple[str, str]:
     """DuckDB twin of the engine's exact UTM zone-18N projection
     (functions.geo.utm_xy_sql) over lon/lat columns in scope."""
-    from ..functions.geo import utm_xy_sql
-
-    return utm_xy_sql("lat", "lon", zone=18)
+    return geo.utm_xy_sql("lat", "lon", zone=18)
 
 
 _UTM_X_SQL, _UTM_Y_SQL = _sql_utm_xy()
+
 
 _SQL_KDIST = f"""
 WITH d AS ({_DERIVED_POINTS_SQL}),
@@ -3650,18 +3673,29 @@ FROM kd
 """
 
 
+@query(_SQL_KDIST)
+def q_kdist_curve_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """M2 — DBSCAN eps-tuning support: per-point k-th-NN distance
+    (k=4) over 500 derived points, summarized (the reference sorts the
+    curve and eyeballs the elbow; the curve's summary stats are the
+    checkable artifact)."""
+    pts = _derived_points(_t(spark, sf_dir, "events")).filter(F.col("event_id") < 500)
+    ux, uy = geo.utm_xy_m("lat", "lon", zone=18)
+    pts = pts.select(F.col("event_id").alias("id"), ux.alias("x"), uy.alias("y"))
+    kd = knn.kth_nn_distance(pts, k=4, id_col="id", x="x", y="y")
+    s = mlp.kth_nn_distance_stats(kd, dist_col="kth_dist")
+    return s.select(
+        "n",
+        *[F.round(F.col(c), 4).alias(c) for c in ["mean_dist", "median_dist", "p90_dist", "max_dist"]],
+    )
+
+
 def _param_search_gbt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M8 — hyperparameter search re-expressed on TrainValidationSplit
     (the reference drives Optuna over LightGBM; grid + TVS is the
     Spark-ML-native equivalent, SURVEY §2.9). Returns the tried grid
     with per-candidate validation RMSE and a best flag. Stochastic
     learner → rows-only."""
-    from pyspark.ml.evaluation import RegressionEvaluator
-    from pyspark.ml.regression import GBTRegressor
-    from pyspark.ml.tuning import ParamGridBuilder, TrainValidationSplit
-
-    from ..ml.pipeline import assemble
-
     ev = _derived_points(_t(spark, sf_dir, "events"))
     feats = (
         ev.withColumn("hour", F.hour("ts"))
@@ -3669,7 +3703,7 @@ def _param_search_gbt(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value") >= 0)
         .withColumn("log_value", F.log1p("value"))
     )
-    vec = assemble(feats, ["hour", "dow", "lon", "lat"]).select("features", "log_value")
+    vec = mlp.assemble(feats, ["hour", "dow", "lon", "lat"]).select("features", "log_value")
     gbt = GBTRegressor(featuresCol="features", labelCol="log_value", maxIter=5, seed=42)
     grid = (
         ParamGridBuilder()
@@ -3694,7 +3728,7 @@ def _param_search_gbt(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for i, (pm, m) in enumerate(zip(grid, model.validationMetrics))
     ]
-    return local_frame(
+    return tb.local_frame(
         spark, rows, "max_depth int, step_size double, val_rmse double, is_best boolean"
     ).orderBy("max_depth", "step_size")
 
@@ -3703,29 +3737,23 @@ def _param_search_gbt(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Structured Streaming (SURVEY §2.11)
 # --------------------------------------------------------------------------
 
+_SQL_STREAM_HOURLY = """
+SELECT time_bucket(INTERVAL 1 HOUR, ts) AS hour_start, count(*)::BIGINT AS n
+FROM events GROUP BY 1 ORDER BY hour_start
+"""
+
+
+@query(_SQL_STREAM_HOURLY)
 def q_streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.11 — the Lab-1 hourly tumbling count as a Structured
     Streaming job: file-source stream → watermark → 1-hour event-time
     windows → availableNow drain to a memory sink. Incremental
     execution must reproduce the batch answer over the same files, so
     the batch SQL oracle applies verbatim."""
-    from ..streaming.windows import (
-        hourly_event_counts_stream,
-        run_to_memory,
-        scoped_shuffle_partitions,
-        stream_events,
-    )
-
-    ev = stream_events(spark, sf_dir)
-    with scoped_shuffle_partitions(spark):
-        out = run_to_memory(hourly_event_counts_stream(ev))
+    ev = win.stream_events(spark, sf_dir)
+    with win.scoped_shuffle_partitions(spark):
+        out = win.run_to_memory(win.hourly_event_counts_stream(ev))
     return out.orderBy("hour_start")
-
-
-_SQL_STREAM_HOURLY = """
-SELECT time_bucket(INTERVAL 1 HOUR, ts) AS hour_start, count(*)::BIGINT AS n
-FROM events GROUP BY 1 ORDER BY hour_start
-"""
 
 
 # static event_type → (category, weight) dim for the stream-static join;
@@ -3739,29 +3767,6 @@ _EVENT_DIM = [
 ]
 
 
-def q_streaming_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.11 — stream–static dimension join: the event stream broadcast-
-    joins a static event_type→(category, weight) dim inside each
-    micro-batch, then watermarked 1-hour windows aggregate per category.
-    availableNow drain ⇒ the batch SQL oracle (VALUES dim join) applies
-    verbatim."""
-    from ..streaming.windows import (
-        enriched_counts_stream,
-        run_to_memory,
-        scoped_shuffle_partitions,
-        stream_events,
-    )
-
-    dim = local_frame(
-        spark, _EVENT_DIM, "event_type string, category string, weight double"
-    )
-    with scoped_shuffle_partitions(spark):
-        out = run_to_memory(
-            enriched_counts_stream(stream_events(spark, sf_dir), dim, "event_type")
-        )
-    return out.orderBy("hour_start", "category")
-
-
 def _sql_stream_enriched() -> str:
     rows = ", ".join(f"('{t}', '{c}', {w!r})" for t, c, w in _EVENT_DIM)
     return f"""
@@ -3773,26 +3778,21 @@ GROUP BY 1, 2 ORDER BY hour_start, category
 """
 
 
-def q_streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F2 streamed — watermarked streaming dedup on (user_id,
-    event_type): with an availableNow drain every key emits exactly
-    once, so per-type distinct-user counts equal the batch DISTINCT."""
-    from ..streaming.windows import (
-        dedup_stream,
-        run_to_memory,
-        scoped_shuffle_partitions,
-        stream_events,
+@query(_sql_stream_enriched(), bench=False)
+def q_streaming_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.11 — stream–static dimension join: the event stream broadcast-
+    joins a static event_type→(category, weight) dim inside each
+    micro-batch, then watermarked 1-hour windows aggregate per category.
+    availableNow drain ⇒ the batch SQL oracle (VALUES dim join) applies
+    verbatim."""
+    dim = tb.local_frame(
+        spark, _EVENT_DIM, "event_type string, category string, weight double"
     )
-
-    ev = stream_events(spark, sf_dir)
-    dd_s = dedup_stream(ev, ["user_id", "event_type"])
-    with scoped_shuffle_partitions(spark):
-        out = run_to_memory(dd_s, output_mode="append")
-    return (
-        out.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_distinct_users"))
-        .orderBy("event_type")
-    )
+    with win.scoped_shuffle_partitions(spark):
+        out = win.run_to_memory(
+            win.enriched_counts_stream(win.stream_events(spark, sf_dir), dim, "event_type")
+        )
+    return out.orderBy("hour_start", "category")
 
 
 _SQL_STREAM_DEDUP = """
@@ -3801,31 +3801,20 @@ FROM events GROUP BY event_type ORDER BY event_type
 """
 
 
-def q_streaming_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState):
-    per-user running (count, value sum, distinct types) GroupState.
-    Final state after an availableNow drain ≡ the batch groupBy — the
-    oracle below. Update-mode emits one row per user per micro-batch;
-    the last row per user is the final state (max n_events)."""
-    from ..streaming.windows import (
-        run_to_memory,
-        scoped_shuffle_partitions,
-        stream_events,
-        user_running_stats_stream,
+@query(_SQL_STREAM_DEDUP, bench=False)
+def q_streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F2 streamed — watermarked streaming dedup on (user_id,
+    event_type): with an availableNow drain every key emits exactly
+    once, so per-type distinct-user counts equal the batch DISTINCT."""
+    ev = win.stream_events(spark, sf_dir)
+    dd_s = win.dedup_stream(ev, ["user_id", "event_type"])
+    with win.scoped_shuffle_partitions(spark):
+        out = win.run_to_memory(dd_s, output_mode="append")
+    return (
+        out.groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n_distinct_users"))
+        .orderBy("event_type")
     )
-
-    ev = stream_events(spark, sf_dir)
-    st = user_running_stats_stream(ev)
-    with scoped_shuffle_partitions(spark):
-        out = run_to_memory(st, output_mode="update")
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    final = out.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") == 1)
-    return final.select(
-        "user_id",
-        "n_events",
-        F.round("sum_value", 4).alias("sum_value"),
-        "n_types",
-    ).orderBy("user_id")
 
 
 _SQL_STREAM_STATE = """
@@ -3836,32 +3825,25 @@ FROM events GROUP BY user_id ORDER BY user_id
 """
 
 
-def q_streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.11/W2 — native session windows (30-min gap, per user) on a
-    stream, drained availableNow; summarized per user (n_sessions,
-    events, max session length). Session-window semantics match the
-    batch sessionize operator at every non-boundary timestamp, so the
-    batch lag/cumsum SQL is the oracle."""
-    from ..streaming.windows import (
-        run_to_memory,
-        scoped_shuffle_partitions,
-        session_window_stream,
-        stream_events,
-    )
-
-    ev = stream_events(spark, sf_dir)
-    sw = session_window_stream(ev, gap_minutes=30.0, keys=["user_id"])
-    with scoped_shuffle_partitions(spark):
-        out = run_to_memory(sw)
-    return (
-        out.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_sessions"),
-            F.sum("n_events").alias("n_events"),
-            F.max("n_events").alias("max_session_events"),
-        )
-        .orderBy("user_id")
-    )
+@query(_SQL_STREAM_STATE, bench=False)
+def q_streaming_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Custom stateful streaming operator (applyInPandasWithState):
+    per-user running (count, value sum, distinct types) GroupState.
+    Final state after an availableNow drain ≡ the batch groupBy — the
+    oracle below. Update-mode emits one row per user per micro-batch;
+    the last row per user is the final state (max n_events)."""
+    ev = win.stream_events(spark, sf_dir)
+    st = win.user_running_stats_stream(ev)
+    with win.scoped_shuffle_partitions(spark):
+        out = win.run_to_memory(st, output_mode="update")
+    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
+    final = out.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") == 1)
+    return final.select(
+        "user_id",
+        "n_events",
+        F.round("sum_value", 4).alias("sum_value"),
+        "n_types",
+    ).orderBy("user_id")
 
 
 _SQL_STREAM_SESSIONS = """
@@ -3883,32 +3865,23 @@ FROM per GROUP BY user_id ORDER BY user_id
 """
 
 
-def q_streaming_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.11 — stream–stream interval join (the one stateful join shape
-    the other streaming queries don't cover): every click pairs with the
-    same user's purchases landing within 2 h after it, both sides
-    watermarked so join state is bounded by watermark + interval width.
-    availableNow drain ⇒ the batch interval-join SQL is the oracle.
-    Summarized per user (pair count, attributed purchase value)."""
-    from ..streaming.windows import (
-        interval_join_stream,
-        run_to_memory,
-        scoped_shuffle_partitions,
-        stream_events,
-    )
-
-    clicks = stream_events(spark, sf_dir).filter(F.col("event_type") == "click")
-    purchases = stream_events(spark, sf_dir).filter(F.col("event_type") == "purchase")
-    joined = interval_join_stream(
-        clicks, purchases, key="user_id", max_delay_minutes=120
-    )
-    with scoped_shuffle_partitions(spark):
-        out = run_to_memory(joined, output_mode="append")
+@query(_SQL_STREAM_SESSIONS, bench=False)
+def q_streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.11/W2 — native session windows (30-min gap, per user) on a
+    stream, drained availableNow; summarized per user (n_sessions,
+    events, max session length). Session-window semantics match the
+    batch sessionize operator at every non-boundary timestamp, so the
+    batch lag/cumsum SQL is the oracle."""
+    ev = win.stream_events(spark, sf_dir)
+    sw = win.session_window_stream(ev, gap_minutes=30.0, keys=["user_id"])
+    with win.scoped_shuffle_partitions(spark):
+        out = win.run_to_memory(sw)
     return (
         out.groupBy("user_id")
         .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.round(F.sum("r_value"), 4).alias("attributed_value"),
+            F.count(F.lit(1)).alias("n_sessions"),
+            F.sum("n_events").alias("n_events"),
+            F.max("n_events").alias("max_session_events"),
         )
         .orderBy("user_id")
     )
@@ -3925,52 +3898,26 @@ GROUP BY c.user_id ORDER BY c.user_id
 """
 
 
-def q_streaming_click_nopurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.11 — stream–stream LEFT OUTER interval join: clicks that did
-    NOT convert within 2 h emit with NULL right columns, but only after
-    the watermark proves no purchase can still arrive. Outer rows
-    within watermark+delay of the stream head are not final at drain
-    time, so both engine and oracle restrict to the CLOSED region —
-    and the horizon must come from the GLOBAL watermark, which is the
-    MIN of the per-stream watermarks: the purchase stream's max event
-    time trails the click stream's, so the closed region is
-    l_ts ≤ least(max click ts, max purchase ts) − 7 h (4 h watermark +
-    2 h join window + 1 h margin). Using the global max-ts instead
-    loses tail outer rows the join state hasn't evicted yet (caught by
-    the sf0.001 oracle). Per user: clicks, conversions, unconverted
-    clicks."""
-    from ..streaming.windows import (
-        interval_join_stream,
-        run_to_memory,
-        scoped_shuffle_partitions,
-        stream_events,
+@query(_SQL_STREAM_CLICK_PURCHASE, bench=False)
+def q_streaming_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.11 — stream–stream interval join (the one stateful join shape
+    the other streaming queries don't cover): every click pairs with the
+    same user's purchases landing within 2 h after it, both sides
+    watermarked so join state is bounded by watermark + interval width.
+    availableNow drain ⇒ the batch interval-join SQL is the oracle.
+    Summarized per user (pair count, attributed purchase value)."""
+    clicks = win.stream_events(spark, sf_dir).filter(F.col("event_type") == "click")
+    purchases = win.stream_events(spark, sf_dir).filter(F.col("event_type") == "purchase")
+    joined = win.interval_join_stream(
+        clicks, purchases, key="user_id", max_delay_minutes=120
     )
-
-    clicks = stream_events(spark, sf_dir).filter(F.col("event_type") == "click")
-    purchases = stream_events(spark, sf_dir).filter(F.col("event_type") == "purchase")
-    joined = interval_join_stream(
-        clicks, purchases, key="user_id", max_delay_minutes=120, how="left_outer"
-    )
-    with scoped_shuffle_partitions(spark):
-        out = run_to_memory(joined, output_mode="append")
-    ev = _t(spark, sf_dir, "events")
-    horizon = ev.agg(
-        (
-            F.least(
-                F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
-                F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-            )
-            - F.expr("INTERVAL 7 HOUR")
-        ).alias("h")
-    )
+    with win.scoped_shuffle_partitions(spark):
+        out = win.run_to_memory(joined, output_mode="append")
     return (
-        out.join(F.broadcast(horizon))
-        .filter(F.col("l_ts") <= F.col("h"))
-        .groupBy("user_id")
+        out.groupBy("user_id")
         .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("r_ts").isNotNull().cast("bigint")).alias("n_converted"),
-            F.sum(F.col("r_ts").isNull().cast("bigint")).alias("n_unconverted"),
+            F.count(F.lit(1)).alias("n_pairs"),
+            F.round(F.sum("r_value"), 4).alias("attributed_value"),
         )
         .orderBy("user_id")
     )
@@ -3996,6 +3943,80 @@ GROUP BY c.user_id ORDER BY c.user_id
 """
 
 
+@query(_SQL_STREAM_CLICK_NOPURCHASE, bench=False)
+def q_streaming_click_nopurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.11 — stream–stream LEFT OUTER interval join: clicks that did
+    NOT convert within 2 h emit with NULL right columns, but only after
+    the watermark proves no purchase can still arrive. Outer rows
+    within watermark+delay of the stream head are not final at drain
+    time, so both engine and oracle restrict to the CLOSED region —
+    and the horizon must come from the GLOBAL watermark, which is the
+    MIN of the per-stream watermarks: the purchase stream's max event
+    time trails the click stream's, so the closed region is
+    l_ts ≤ least(max click ts, max purchase ts) − 7 h (4 h watermark +
+    2 h join window + 1 h margin). Using the global max-ts instead
+    loses tail outer rows the join state hasn't evicted yet (caught by
+    the sf0.001 oracle). Per user: clicks, conversions, unconverted
+    clicks."""
+    clicks = win.stream_events(spark, sf_dir).filter(F.col("event_type") == "click")
+    purchases = win.stream_events(spark, sf_dir).filter(F.col("event_type") == "purchase")
+    joined = win.interval_join_stream(
+        clicks, purchases, key="user_id", max_delay_minutes=120, how="left_outer"
+    )
+    with win.scoped_shuffle_partitions(spark):
+        out = win.run_to_memory(joined, output_mode="append")
+    ev = _t(spark, sf_dir, "events")
+    horizon = ev.agg(
+        (
+            F.least(
+                F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
+                F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
+            )
+            - F.expr("INTERVAL 7 HOUR")
+        ).alias("h")
+    )
+    return (
+        out.join(F.broadcast(horizon))
+        .filter(F.col("l_ts") <= F.col("h"))
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.col("r_ts").isNotNull().cast("bigint")).alias("n_converted"),
+            F.sum(F.col("r_ts").isNull().cast("bigint")).alias("n_unconverted"),
+        )
+        .orderBy("user_id")
+    )
+
+
+_SQL_AUC_RANK = """
+WITH scored AS (
+  SELECT round(1.0 / (1.0 + exp(-(l_discount * 10.0 - 0.5
+                                  + (l_quantity - 25.0) / 50.0))), 9) AS score,
+         CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS pos
+  FROM lineitem
+),
+grouped AS (
+  SELECT score, count(*)::BIGINT AS n, sum(pos)::BIGINT AS np
+  FROM scored GROUP BY score
+),
+ranked AS (
+  SELECT *,
+         coalesce(sum(n) OVER (ORDER BY score
+                               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                  0) AS cum_prev
+  FROM grouped
+)
+SELECT round((sum(np * (cum_prev + (n + 1) / 2.0))
+              - sum(np) * (sum(np) + 1) / 2.0)
+             / (sum(np) * (sum(n) - sum(np))), 6) AS auc,
+       sum(np)::BIGINT AS n_pos,
+       (sum(n) - sum(np))::BIGINT AS n_neg,
+       count(*)::BIGINT AS n_score_groups
+FROM ranked
+"""
+
+
+@query(_SQL_AUC_RANK)
 def q_auc_rank_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed ROC-AUC via the tied-rank Mann-Whitney identity —
     the classifier-evaluation primitive a training pipeline needs at
@@ -4046,34 +4067,37 @@ def q_auc_rank_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_AUC_RANK = """
-WITH scored AS (
-  SELECT round(1.0 / (1.0 + exp(-(l_discount * 10.0 - 0.5
-                                  + (l_quantity - 25.0) / 50.0))), 9) AS score,
-         CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS pos
-  FROM lineitem
+_SQL_TFIDF = """
+WITH toks AS (
+  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+  FROM documents
 ),
-grouped AS (
-  SELECT score, count(*)::BIGINT AS n, sum(pos)::BIGINT AS np
-  FROM scored GROUP BY score
+toks4 AS (SELECT * FROM toks WHERE length(tok) > 3),
+df_tbl AS (
+  SELECT tok, count(*)::BIGINT AS df
+  FROM (SELECT DISTINCT doc_id, tok FROM toks4) GROUP BY tok
+),
+tf_tbl AS (
+  SELECT doc_id, tok, count(*)::BIGINT AS tf
+  FROM toks4 WHERE doc_id % 97 = 0 GROUP BY doc_id, tok
+),
+scored AS (
+  SELECT t.doc_id, t.tok, t.tf, d.df,
+         round(t.tf * (ln(((SELECT count(*) FROM documents) + 1.0)
+                          / (d.df + 1.0)) + 1.0), 6) AS tfidf
+  FROM tf_tbl t JOIN df_tbl d ON t.tok = d.tok
 ),
 ranked AS (
-  SELECT *,
-         coalesce(sum(n) OVER (ORDER BY score
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                  0) AS cum_prev
-  FROM grouped
+  SELECT *, row_number() OVER (PARTITION BY doc_id
+                               ORDER BY tfidf DESC, tok) AS rnk
+  FROM scored
 )
-SELECT round((sum(np * (cum_prev + (n + 1) / 2.0))
-              - sum(np) * (sum(np) + 1) / 2.0)
-             / (sum(np) * (sum(n) - sum(np))), 6) AS auc,
-       sum(np)::BIGINT AS n_pos,
-       (sum(n) - sum(np))::BIGINT AS n_neg,
-       count(*)::BIGINT AS n_score_groups
-FROM ranked
+SELECT doc_id, rnk::INT AS rnk, tok, tfidf, df
+FROM ranked WHERE rnk <= 3 ORDER BY doc_id, rnk
 """
 
 
+@query(_SQL_TFIDF)
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF term scoring over the corpus: document frequency from a
     distinct (term, doc) explode, smoothed idf = ln((N+1)/(df+1))+1,
@@ -4116,44 +4140,12 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TFIDF = """
-WITH toks AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-  FROM documents
-),
-toks4 AS (SELECT * FROM toks WHERE length(tok) > 3),
-df_tbl AS (
-  SELECT tok, count(*)::BIGINT AS df
-  FROM (SELECT DISTINCT doc_id, tok FROM toks4) GROUP BY tok
-),
-tf_tbl AS (
-  SELECT doc_id, tok, count(*)::BIGINT AS tf
-  FROM toks4 WHERE doc_id % 97 = 0 GROUP BY doc_id, tok
-),
-scored AS (
-  SELECT t.doc_id, t.tok, t.tf, d.df,
-         round(t.tf * (ln(((SELECT count(*) FROM documents) + 1.0)
-                          / (d.df + 1.0)) + 1.0), 6) AS tfidf
-  FROM tf_tbl t JOIN df_tbl d ON t.tok = d.tok
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY doc_id
-                               ORDER BY tfidf DESC, tok) AS rnk
-  FROM scored
-)
-SELECT doc_id, rnk::INT AS rnk, tok, tfidf, df
-FROM ranked WHERE rnk <= 3 ORDER BY doc_id, rnk
-"""
-
-
 def _logreg_raw_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw binary-classification metrics (accuracy/precision/recall/F1
     at 0.5 + tied-rank AUC) for the separable-label logistic regression
     — kept as the pytest surface (tests/test_ml.py pins the AUC floor);
     the registry entry `logreg_return_metrics` wraps this in
     hash-checked metric-floor bands."""
-    from ..ml.pipeline import binary_metrics, logreg_fit, logreg_predict
-
     li = _t(spark, sf_dir, "lineitem")
     base = li.select(
         "l_discount",
@@ -4171,9 +4163,9 @@ def _logreg_raw_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fcols = ["l_discount", "l_quantity", "l_tax", "log_price"]
     train, valid = base.randomSplit([0.7, 0.3], seed=42)
-    model = logreg_fit(train, fcols, "label")
-    pred = logreg_predict(model, valid, fcols)
-    m = binary_metrics(pred, "label", "p1")
+    model = mlp.logreg_fit(train, fcols, "label")
+    pred = mlp.logreg_predict(model, valid, fcols)
+    m = mlp.binary_metrics(pred, "label", "p1")
     return m.select(
         *[
             F.round(F.col(c), 4).alias(c) if c not in ("n_pos", "n_neg") else c
@@ -4182,6 +4174,20 @@ def _logreg_raw_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_SQL_LOGREG_BAND = """
+WITH n AS (
+  SELECT count(*)::BIGINT AS c FROM lineitem
+  WHERE l_discount * 10.0 + l_quantity / 50.0
+        + ((l_orderkey % 13) / 13.0 - 0.5) * 0.4 > 0.8
+)
+SELECT t.band, t.ok, n.c AS n_pos_total
+FROM (VALUES ('accuracy_above_08', true), ('auc_above_09', true),
+             ('precision_in_unit', true), ('recall_in_unit', true)) AS t(band, ok), n
+ORDER BY t.band
+"""
+
+
+@query(_SQL_LOGREG_BAND, bench=False)
 def q_logreg_return_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary classification (the ML-surface gap next to M7's
     regression): logistic regression on a deterministic,
@@ -4208,24 +4214,36 @@ def q_logreg_return_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("precision_in_unit", bool(0.0 < m["precision"] <= 1.0), n_pos_total),
         ("recall_in_unit", bool(0.0 < m["recall"] <= 1.0), n_pos_total),
     ]
-    return local_frame(
+    return tb.local_frame(
         spark, rows, "band string, ok boolean, n_pos_total bigint"
     ).orderBy("band")
 
 
-_SQL_LOGREG_BAND = """
-WITH n AS (
-  SELECT count(*)::BIGINT AS c FROM lineitem
-  WHERE l_discount * 10.0 + l_quantity / 50.0
-        + ((l_orderkey % 13) / 13.0 - 0.5) * 0.4 > 0.8
+_SQL_GAP_FILL = """
+WITH daily AS (
+  SELECT date_trunc('day', o_orderdate) AS day,
+         count(*)::BIGINT AS n_orders, round(sum(o_totalprice), 2) AS revenue
+  FROM orders GROUP BY 1
+),
+cal AS (
+  SELECT unnest(generate_series(
+           (SELECT date_trunc('day', min(o_orderdate)) FROM orders),
+           (SELECT date_trunc('day', max(o_orderdate)) FROM orders),
+           INTERVAL 1 DAY)) AS day
 )
-SELECT t.band, t.ok, n.c AS n_pos_total
-FROM (VALUES ('accuracy_above_08', true), ('auc_above_09', true),
-             ('precision_in_unit', true), ('recall_in_unit', true)) AS t(band, ok), n
-ORDER BY t.band
+SELECT cal.day,
+       coalesce(n_orders, 0)::BIGINT AS n_orders,
+       coalesce(revenue, 0.0) AS revenue,
+       (CASE WHEN n_orders IS NULL THEN 1 ELSE 0 END)::INT AS is_gap,
+       coalesce(last_value(revenue IGNORE NULLS)
+                  OVER (ORDER BY cal.day ROWS UNBOUNDED PRECEDING),
+                0.0) AS filled_revenue
+FROM cal LEFT JOIN daily ON cal.day = daily.day
+ORDER BY cal.day
 """
 
 
+@query(_SQL_GAP_FILL)
 def q_gap_fill_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series gap filling: a dense calendar (codegen'd
     sequence+explode between the observed min/max day — no driver
@@ -4268,30 +4286,38 @@ def q_gap_fill_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_GAP_FILL = """
-WITH daily AS (
-  SELECT date_trunc('day', o_orderdate) AS day,
-         count(*)::BIGINT AS n_orders, round(sum(o_totalprice), 2) AS revenue
-  FROM orders GROUP BY 1
+_SQL_FUNNEL = """
+WITH v AS (
+  SELECT user_id, min(ts) AS tv FROM events WHERE event_type = 'view'
+  GROUP BY user_id
 ),
-cal AS (
-  SELECT unnest(generate_series(
-           (SELECT date_trunc('day', min(o_orderdate)) FROM orders),
-           (SELECT date_trunc('day', max(o_orderdate)) FROM orders),
-           INTERVAL 1 DAY)) AS day
+c AS (
+  SELECT e.user_id, min(e.ts) AS tc
+  FROM events e JOIN v ON e.user_id = v.user_id
+  WHERE e.event_type = 'click' AND e.ts >= v.tv
+  GROUP BY e.user_id
+),
+p AS (
+  SELECT e.user_id, min(e.ts) AS tp
+  FROM events e JOIN c ON e.user_id = c.user_id
+  WHERE e.event_type = 'purchase' AND e.ts >= c.tc
+  GROUP BY e.user_id
 )
-SELECT cal.day,
-       coalesce(n_orders, 0)::BIGINT AS n_orders,
-       coalesce(revenue, 0.0) AS revenue,
-       (CASE WHEN n_orders IS NULL THEN 1 ELSE 0 END)::INT AS is_gap,
-       coalesce(last_value(revenue IGNORE NULLS)
-                  OVER (ORDER BY cal.day ROWS UNBOUNDED PRECEDING),
-                0.0) AS filled_revenue
-FROM cal LEFT JOIN daily ON cal.day = daily.day
-ORDER BY cal.day
+SELECT count(*)::BIGINT AS n_view,
+       sum(CASE WHEN tc IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
+         AS n_click_after_view,
+       sum(CASE WHEN tp IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
+         AS n_purchase_after_click,
+       round(sum(CASE WHEN tc IS NOT NULL THEN 1 ELSE 0 END)
+             / count(*)::DOUBLE, 6) AS view_to_click,
+       round(sum(CASE WHEN tp IS NOT NULL THEN 1 ELSE 0 END)
+             / sum(CASE WHEN tc IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE, 6)
+         AS click_to_purchase
+FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)
 """
 
 
+@query(_SQL_FUNNEL)
 def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel (view → click → purchase): per user the first
     view, the first click AT OR AFTER that view, and the first purchase
@@ -4333,37 +4359,22 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_FUNNEL = """
-WITH v AS (
-  SELECT user_id, min(ts) AS tv FROM events WHERE event_type = 'view'
-  GROUP BY user_id
-),
-c AS (
-  SELECT e.user_id, min(e.ts) AS tc
-  FROM events e JOIN v ON e.user_id = v.user_id
-  WHERE e.event_type = 'click' AND e.ts >= v.tv
-  GROUP BY e.user_id
-),
-p AS (
-  SELECT e.user_id, min(e.ts) AS tp
-  FROM events e JOIN c ON e.user_id = c.user_id
-  WHERE e.event_type = 'purchase' AND e.ts >= c.tc
-  GROUP BY e.user_id
+_SQL_COHORT = """
+WITH first_seen AS (
+  SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
+  FROM events GROUP BY user_id
 )
-SELECT count(*)::BIGINT AS n_view,
-       sum(CASE WHEN tc IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-         AS n_click_after_view,
-       sum(CASE WHEN tp IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-         AS n_purchase_after_click,
-       round(sum(CASE WHEN tc IS NOT NULL THEN 1 ELSE 0 END)
-             / count(*)::DOUBLE, 6) AS view_to_click,
-       round(sum(CASE WHEN tp IS NOT NULL THEN 1 ELSE 0 END)
-             / sum(CASE WHEN tc IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE, 6)
-         AS click_to_purchase
-FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)
+SELECT cohort_week,
+       ((epoch(date_trunc('week', ts)) - epoch(cohort_week))
+        / (7 * 86400))::BIGINT AS week_offset,
+       count(DISTINCT e.user_id)::BIGINT AS n_active
+FROM events e JOIN first_seen f ON e.user_id = f.user_id
+GROUP BY 1, 2
+ORDER BY 1, 2
 """
 
 
+@query(_SQL_COHORT)
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention matrix: users cohorted by the Monday
     week of their first event; each (cohort_week, week_offset) cell
@@ -4396,49 +4407,9 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_COHORT = """
-WITH first_seen AS (
-  SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
-  FROM events GROUP BY user_id
-)
-SELECT cohort_week,
-       ((epoch(date_trunc('week', ts)) - epoch(cohort_week))
-        / (7 * 86400))::BIGINT AS week_offset,
-       count(DISTINCT e.user_id)::BIGINT AS n_active
-FROM events e JOIN first_seen f ON e.user_id = f.user_id
-GROUP BY 1, 2
-ORDER BY 1, 2
-"""
-
-
 # --------------------------------------------------------------------------
 # Multimodal binary columns (training-data pipeline extension)
 # --------------------------------------------------------------------------
-
-def q_multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing, oracle-checkable half: documents → opaque
-    binary payloads + typed media metadata, then per-media-type size and
-    content-hash stats (dedup-by-hash is the exact-dedup primitive for
-    binary corpora). sha256/byte-length run JVM-side on both engines."""
-    from ..sources.multimodal import synthesize_media
-
-    docs = _t(spark, sf_dir, "documents")
-    m = synthesize_media(docs, "doc_id", "text")
-    return (
-        m.select(
-            F.col("media.media_type").alias("media_type"),
-            F.length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("h"),
-        )
-        .groupBy("media_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_items"),
-            F.sum("n_bytes").alias("total_bytes"),
-            F.countDistinct("h").alias("n_distinct_payloads"),
-        )
-        .orderBy("media_type")
-    )
-
 
 _SQL_MULTIMODAL = """
 WITH m AS (
@@ -4457,35 +4428,25 @@ FROM m GROUP BY media_type ORDER BY media_type
 """
 
 
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal feature extraction: Arrow-batched mapInPandas decode
-    (deterministic byte-level stand-in — real codecs slot into the same
-    batch shape) → sha256 + 16-bin byte-histogram embedding; per-type
-    feature-vector centroids. The corpus text is printable ASCII, so
-    the stand-in decode's byte histogram equals per-char-class counts —
-    the oracle recomputes the Python/numpy path exactly in SQL (regex
-    char classes per 16-codepoint bin), value-checking the whole
-    mapInPandas plumbing. Averages sum in decimal (order-free); the
-    histogram ratios themselves are single exact divisions, identical
-    across engines."""
-    from ..sources.multimodal import extract_features, synthesize_media
-
+@query(_SQL_MULTIMODAL)
+def q_multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multimodal plumbing, oracle-checkable half: documents → opaque
+    binary payloads + typed media metadata, then per-media-type size and
+    content-hash stats (dedup-by-hash is the exact-dedup primitive for
+    binary corpora). sha256/byte-length run JVM-side on both engines."""
     docs = _t(spark, sf_dir, "documents")
-    feats = extract_features(synthesize_media(docs, "doc_id", "text"))
-    cnt = F.count(F.lit(1))
+    m = mm.synthesize_media(docs, "doc_id", "text")
     return (
-        feats.groupBy("media_type")
+        m.select(
+            F.col("media.media_type").alias("media_type"),
+            F.length("payload").alias("n_bytes"),
+            F.sha2("payload", 256).alias("h"),
+        )
+        .groupBy("media_type")
         .agg(
-            cnt.alias("n_items"),
-            F.round(F.sum("n_bytes") / cnt, 6).alias("avg_bytes"),
-            *[
-                F.round(
-                    F.sum(F.col("feature")[i].cast("decimal(20,10)")).cast("double")
-                    / cnt,
-                    6,
-                ).alias(f"f{i}")
-                for i in range(4)
-            ],
+            F.count(F.lit(1)).alias("n_items"),
+            F.sum("n_bytes").alias("total_bytes"),
+            F.countDistinct("h").alias("n_distinct_payloads"),
         )
         .orderBy("media_type")
     )
@@ -4513,6 +4474,39 @@ SELECT media_type, count(*)::BIGINT AS n_items,
        round(sum(n_bytes)::DOUBLE / count(*), 6) AS avg_bytes, {fcols}
 FROM m GROUP BY media_type ORDER BY media_type
 """
+
+
+@query(_sql_multimodal_features(), bench=False)
+def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multimodal feature extraction: Arrow-batched mapInPandas decode
+    (deterministic byte-level stand-in — real codecs slot into the same
+    batch shape) → sha256 + 16-bin byte-histogram embedding; per-type
+    feature-vector centroids. The corpus text is printable ASCII, so
+    the stand-in decode's byte histogram equals per-char-class counts —
+    the oracle recomputes the Python/numpy path exactly in SQL (regex
+    char classes per 16-codepoint bin), value-checking the whole
+    mapInPandas plumbing. Averages sum in decimal (order-free); the
+    histogram ratios themselves are single exact divisions, identical
+    across engines."""
+    docs = _t(spark, sf_dir, "documents")
+    feats = mm.extract_features(mm.synthesize_media(docs, "doc_id", "text"))
+    cnt = F.count(F.lit(1))
+    return (
+        feats.groupBy("media_type")
+        .agg(
+            cnt.alias("n_items"),
+            F.round(F.sum("n_bytes") / cnt, 6).alias("avg_bytes"),
+            *[
+                F.round(
+                    F.sum(F.col("feature")[i].cast("decimal(20,10)")).cast("double")
+                    / cnt,
+                    6,
+                ).alias(f"f{i}")
+                for i in range(4)
+            ],
+        )
+        .orderBy("media_type")
+    )
 
 
 def _image_px_stats(per_doc: DataFrame, px_per_image: int) -> DataFrame:
@@ -4553,6 +4547,26 @@ def _video_px_stats(per_doc: DataFrame, px_per_frame: int) -> DataFrame:
     )
 
 
+_SQL_PNG_ROUNDTRIP = """
+WITH d AS (SELECT doc_id, source FROM documents WHERE doc_id % 29 = 0),
+px AS (
+  SELECT d.doc_id, d.source,
+         (d.doc_id * 31 + y.range * 16 + x.range * 7) % 256 AS px
+  FROM d, range(16) y, range(16) x
+),
+per_doc AS (
+  SELECT doc_id, source, sum(px)::BIGINT AS px_sum,
+         min(px) AS mn, max(px) AS mx
+  FROM px GROUP BY 1, 2
+)
+SELECT source, count(*)::BIGINT AS n_images,
+       round(sum(px_sum)::DOUBLE / (count(*) * 256), 6) AS avg_px_mean,
+       min(mn)::INT AS min_px, max(mx)::INT AS max_px
+FROM per_doc GROUP BY source ORDER BY source
+"""
+
+
+@query(_SQL_PNG_ROUNDTRIP)
 def q_png_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image-codec round-trip (the un-stubbed multimodal image
     path, VERDICT r2 missing #2): a deterministic 16×16 greyscale grid
@@ -4586,31 +4600,45 @@ def q_png_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             int(doc_id), source, int(px.astype(np.int64).sum()), int(px.min()), int(px.max())
         )
 
-    per_doc = map_rows(
+    per_doc = tb.map_rows(
         docs, roundtrip, "doc_id bigint, source string, px_sum bigint, px_min int, px_max int"
     )
     return _image_px_stats(per_doc, 256)
 
 
-_SQL_PNG_ROUNDTRIP = """
-WITH d AS (SELECT doc_id, source FROM documents WHERE doc_id % 29 = 0),
-px AS (
-  SELECT d.doc_id, d.source,
-         (d.doc_id * 31 + y.range * 16 + x.range * 7) % 256 AS px
-  FROM d, range(16) y, range(16) x
+_SQL_WAV_ROUNDTRIP = """
+WITH d AS (SELECT doc_id, source FROM documents WHERE doc_id % 31 = 0),
+s AS (
+  SELECT d.doc_id, d.source, i.range AS i,
+         (d.doc_id * 37 + i.range * i.range) % 4001 - 2000 AS c1,
+         (d.doc_id * 53 + i.range * 7) % 4001 - 2000 AS c2
+  FROM d, range(256) i
+),
+lagged AS (
+  SELECT *, lag(c1) OVER (PARTITION BY doc_id ORDER BY i) AS p1,
+            lag(c2) OVER (PARTITION BY doc_id ORDER BY i) AS p2
+  FROM s
 ),
 per_doc AS (
-  SELECT doc_id, source, sum(px)::BIGINT AS px_sum,
-         min(px) AS mn, max(px) AS mx
-  FROM px GROUP BY 1, 2
+  SELECT doc_id, source,
+         sum(c1 + c2)::BIGINT AS s_sum,
+         sum(c1 * c1 + c2 * c2)::BIGINT AS sq_sum,
+         least(min(c1), min(c2))::INT AS s_min,
+         greatest(max(c1), max(c2))::INT AS s_max,
+         (sum(CASE WHEN p1 IS NOT NULL AND (c1 >= 0) <> (p1 >= 0) THEN 1 ELSE 0 END)
+          + sum(CASE WHEN p2 IS NOT NULL AND (c2 >= 0) <> (p2 >= 0) THEN 1 ELSE 0 END))::BIGINT AS zc
+  FROM lagged GROUP BY 1, 2
 )
-SELECT source, count(*)::BIGINT AS n_images,
-       round(sum(px_sum)::DOUBLE / (count(*) * 256), 6) AS avg_px_mean,
-       min(mn)::INT AS min_px, max(mx)::INT AS max_px
+SELECT source, count(*)::BIGINT AS n_clips,
+       sum(s_sum)::BIGINT AS sample_sum,
+       round(sqrt(sum(sq_sum)::DOUBLE / (count(*) * 512)), 6) AS rms,
+       min(s_min)::INT AS min_sample, max(s_max)::INT AS max_sample,
+       sum(zc)::BIGINT AS zero_crossings
 FROM per_doc GROUP BY source ORDER BY source
 """
 
 
+@query(_SQL_WAV_ROUNDTRIP)
 def q_wav_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio-codec round-trip (the un-stubbed multimodal audio
     path, the WAV twin of `png_roundtrip_stats`): a deterministic
@@ -4652,7 +4680,7 @@ def q_wav_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             int(((decoded[1:] >= 0) != (decoded[:-1] >= 0)).sum()),  # zero crossings
         )
 
-    per_doc = map_rows(
+    per_doc = tb.map_rows(
         docs,
         roundtrip,
         "doc_id bigint, source string, s_sum bigint, sq_sum bigint,"
@@ -4674,38 +4702,27 @@ def q_wav_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_WAV_ROUNDTRIP = """
-WITH d AS (SELECT doc_id, source FROM documents WHERE doc_id % 31 = 0),
-s AS (
-  SELECT d.doc_id, d.source, i.range AS i,
-         (d.doc_id * 37 + i.range * i.range) % 4001 - 2000 AS c1,
-         (d.doc_id * 53 + i.range * 7) % 4001 - 2000 AS c2
-  FROM d, range(256) i
-),
-lagged AS (
-  SELECT *, lag(c1) OVER (PARTITION BY doc_id ORDER BY i) AS p1,
-            lag(c2) OVER (PARTITION BY doc_id ORDER BY i) AS p2
-  FROM s
+_SQL_GIF_ROUNDTRIP = """
+WITH d AS (SELECT doc_id, source FROM documents WHERE doc_id % 37 = 0),
+px AS (
+  SELECT d.doc_id, d.source,
+         (d.doc_id * 11 + f.range * 97 + p.range) % 8 AS idx
+  FROM d, range(4) f, range(256) p
 ),
 per_doc AS (
-  SELECT doc_id, source,
-         sum(c1 + c2)::BIGINT AS s_sum,
-         sum(c1 * c1 + c2 * c2)::BIGINT AS sq_sum,
-         least(min(c1), min(c2))::INT AS s_min,
-         greatest(max(c1), max(c2))::INT AS s_max,
-         (sum(CASE WHEN p1 IS NOT NULL AND (c1 >= 0) <> (p1 >= 0) THEN 1 ELSE 0 END)
-          + sum(CASE WHEN p2 IS NOT NULL AND (c2 >= 0) <> (p2 >= 0) THEN 1 ELSE 0 END))::BIGINT AS zc
-  FROM lagged GROUP BY 1, 2
+  SELECT doc_id, source, 4 AS n_frames, sum(idx)::BIGINT AS idx_sum,
+         min(idx)::INT AS idx_min, max(idx)::INT AS idx_max
+  FROM px GROUP BY 1, 2
 )
-SELECT source, count(*)::BIGINT AS n_clips,
-       sum(s_sum)::BIGINT AS sample_sum,
-       round(sqrt(sum(sq_sum)::DOUBLE / (count(*) * 512)), 6) AS rms,
-       min(s_min)::INT AS min_sample, max(s_max)::INT AS max_sample,
-       sum(zc)::BIGINT AS zero_crossings
+SELECT source, count(*)::BIGINT AS n_videos,
+       sum(n_frames)::BIGINT AS total_frames,
+       sum(idx_sum)::BIGINT AS index_sum,
+       min(idx_min)::INT AS min_index, max(idx_max)::INT AS max_index
 FROM per_doc GROUP BY source ORDER BY source
 """
 
 
+@query(_SQL_GIF_ROUNDTRIP)
 def q_gif_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video-codec round-trip (the un-stubbed multimodal video
     path — animated GIF with genuine LZW, `sources/gif.py`): per probe
@@ -4747,7 +4764,7 @@ def q_gif_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             int(stacked.max()),
         )
 
-    per_doc = map_rows(
+    per_doc = tb.map_rows(
         docs,
         roundtrip,
         "doc_id bigint, source string, n_frames int, idx_sum bigint,"
@@ -4766,26 +4783,26 @@ def q_gif_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_GIF_ROUNDTRIP = """
-WITH d AS (SELECT doc_id, source FROM documents WHERE doc_id % 37 = 0),
-px AS (
+_SQL_JPEG_ROUNDTRIP = """
+WITH d AS (SELECT doc_id, source FROM documents WHERE doc_id % 41 = 0),
+blocks AS (
   SELECT d.doc_id, d.source,
-         (d.doc_id * 11 + f.range * 97 + p.range) % 8 AS idx
-  FROM d, range(4) f, range(256) p
+         (d.doc_id * 17 + by.range * 8 + bx.range * 3) % 256 AS bval
+  FROM d, range(4) by, range(4) bx
 ),
 per_doc AS (
-  SELECT doc_id, source, 4 AS n_frames, sum(idx)::BIGINT AS idx_sum,
-         min(idx)::INT AS idx_min, max(idx)::INT AS idx_max
-  FROM px GROUP BY 1, 2
+  SELECT doc_id, source, sum(bval * 64)::BIGINT AS px_sum,
+         min(bval) AS mn, max(bval) AS mx
+  FROM blocks GROUP BY 1, 2
 )
-SELECT source, count(*)::BIGINT AS n_videos,
-       sum(n_frames)::BIGINT AS total_frames,
-       sum(idx_sum)::BIGINT AS index_sum,
-       min(idx_min)::INT AS min_index, max(idx_max)::INT AS max_index
+SELECT source, count(*)::BIGINT AS n_images,
+       round(sum(px_sum)::DOUBLE / (count(*) * 1024), 6) AS avg_px_mean,
+       min(mn)::INT AS min_px, max(mx)::INT AS max_px
 FROM per_doc GROUP BY source ORDER BY source
 """
 
 
+@query(_SQL_JPEG_ROUNDTRIP)
 def q_jpeg_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL lossy-image-codec round-trip (the baseline-JPEG twin of
     `png_roundtrip_stats`, VERDICT r3 "Next" #6): a deterministic
@@ -4833,142 +4850,10 @@ def q_jpeg_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             int(doc_id), source, int(px.astype(np.int64).sum()), int(px.min()), int(px.max())
         )
 
-    per_doc = map_rows(
+    per_doc = tb.map_rows(
         docs, roundtrip, "doc_id bigint, source string, px_sum bigint, px_min int, px_max int"
     )
     return _image_px_stats(per_doc, 1024)
-
-
-_SQL_JPEG_ROUNDTRIP = """
-WITH d AS (SELECT doc_id, source FROM documents WHERE doc_id % 41 = 0),
-blocks AS (
-  SELECT d.doc_id, d.source,
-         (d.doc_id * 17 + by.range * 8 + bx.range * 3) % 256 AS bval
-  FROM d, range(4) by, range(4) bx
-),
-per_doc AS (
-  SELECT doc_id, source, sum(bval * 64)::BIGINT AS px_sum,
-         min(bval) AS mn, max(bval) AS mx
-  FROM blocks GROUP BY 1, 2
-)
-SELECT source, count(*)::BIGINT AS n_images,
-       round(sum(px_sum)::DOUBLE / (count(*) * 1024), 6) AS avg_px_mean,
-       min(mn)::INT AS min_px, max(mx)::INT AS max_px
-FROM per_doc GROUP BY source ORDER BY source
-"""
-
-
-def q_image_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual-hash IMAGE near-duplicate detection end-to-end through
-    the REAL PNG codec: each probe doc (doc_id % 3 = 0) renders a
-    deterministic 8×9 greyscale thumbnail whose base pattern depends on
-    a latent duplicate group g = doc_id % 31 —
-    base(y, x) = clamp((g·(y+3)·(x+5) + y·29 + x·13) mod 256, 64, 191)
-    — plus k = (doc_id mod 4)+1 per-doc perturbed pixels at
-    ((doc_id·7 + 13j) mod 8, (doc_id·11 + 17j) mod 9) of amplitude
-    64·((doc_id+j) mod 3 − 1), final clamp to [0, 255]; each ±64 spike
-    flips ≤2 difference-hash comparisons, so same-group thumbnails
-    spread over Hamming 0–6 while cross-group thumbnails sit ~32 bits
-    apart. The thumbnail is ENCODED to PNG and DECODED back
-    (`sources/png.py`) inside one Arrow-batched mapInPandas; the 64-bit
-    dHash — bit(y, x) = px[y, x] < px[y, x+1] — is computed from the
-    DECODED pixels and packed into four 16-bit band values.
-
-    Candidate pairs come from a banded-LSH equi-join (any shared
-    16-bit band), exact-verified with bit_count(xor) Hamming ≤ 6 —
-    never all-pairs, the same bucketed shape as the MinHash text path
-    (`operators/dedup.py`). The oracle recomputes pixels, dHash bits,
-    bands, the band join, and the Hamming census in pure SQL from the
-    closed-form arithmetic — it never sees a PNG, so a hash match
-    proves decode-loop fidelity AND the LSH candidate semantics
-    (including genuinely-missed pairs whose ≤6 flips straddle all four
-    bands) cross-engine. 100 TB shape: per-image Python is map-only
-    over a bounded probe set; the joins are integer-keyed shuffles."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0).select(
-        "doc_id"
-    )
-
-    def dhash(doc_id):
-        import numpy as np
-
-        from ..sources.png import read_png, write_png
-
-        d = int(doc_id)
-        g = d % 31
-        y, x = np.mgrid[0:8, 0:9]
-        base = (g * (y + 3) * (x + 5) + y * 29 + x * 13) % 256
-        grid = np.clip(base, 64, 191).astype(np.int64)
-        for j in range(d % 4 + 1):
-            # scalar-indexed += so coinciding spike positions ACCUMULATE
-            # (fancy-index += would apply only once, diverging from the
-            # oracle's summed CASE terms)
-            grid[(d * 7 + 13 * j) % 8, (d * 11 + 17 * j) % 9] += 64 * ((d + j) % 3 - 1)
-        grid = np.clip(grid, 0, 255).astype(np.uint8)
-        px = read_png(write_png(grid, filter_type="mixed"))
-        if not np.array_equal(px, grid):
-            raise ValueError(f"PNG round-trip corrupted doc {d}")
-        bits = (
-            px[:, :8].astype(np.int64) < px[:, 1:].astype(np.int64)
-        ).astype(np.int64).ravel()  # i = y*8 + x
-        bands = [int((bits[k * 16 : (k + 1) * 16] << np.arange(16)).sum()) for k in range(4)]
-        return (d, g, *bands)
-
-    # r9: `hashes` is consumed THREE times (band explode + both verify
-    # sides), so the per-image Python PNG encode→decode ran 3× per
-    # image; and the probe scan is one task at fixture scale, so it ran
-    # single-core. Spread the compact doc_id rows before the Python
-    # boundary (guide §2.5/§4) and materialize the 6-int hash rows once
-    # (guide §5).
-    from ..operators.spread import spread
-
-    hashes = map_rows(
-        spread(docs), dhash, "doc_id bigint, grp int, b0 int, b1 int, b2 int, b3 int"
-    ).localCheckpoint(eager=False)
-    bands = hashes.select(
-        "doc_id", F.posexplode(F.array("b0", "b1", "b2", "b3")).alias("band", "val")
-    )
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("ida"), F.col("b.doc_id").alias("idb"))
-        .distinct()
-    )
-    ha = hashes.select(
-        F.col("doc_id").alias("ida"),
-        F.col("grp").alias("ga"),
-        *[F.col(c).alias(c + "a") for c in ["b0", "b1", "b2", "b3"]],
-    )
-    hb = hashes.select(
-        F.col("doc_id").alias("idb"),
-        F.col("grp").alias("gb"),
-        *[F.col(c).alias(c + "b") for c in ["b0", "b1", "b2", "b3"]],
-    )
-    return (
-        cand.join(ha, "ida")
-        .join(hb, "idb")
-        .withColumn(
-            "hamming",
-            F.expr(
-                "bit_count(b0a ^ b0b) + bit_count(b1a ^ b1b)"
-                " + bit_count(b2a ^ b2b) + bit_count(b3a ^ b3b)"
-            ),
-        )
-        .filter(F.col("hamming") <= 6)
-        .groupBy("hamming")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum(F.when(F.col("ga") == F.col("gb"), 1).otherwise(0)).alias(
-                "n_same_group"
-            ),
-            F.sum(F.col("ida") + F.col("idb")).alias("id_sum"),
-        )
-        .orderBy("hamming")
-    )
 
 
 _SQL_IMAGE_PHASH = """
@@ -5035,6 +4920,144 @@ GROUP BY 1 ORDER BY 1
 """
 
 
+@query(_SQL_IMAGE_PHASH)
+def q_image_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Perceptual-hash IMAGE near-duplicate detection end-to-end through
+    the REAL PNG codec: each probe doc (doc_id % 3 = 0) renders a
+    deterministic 8×9 greyscale thumbnail whose base pattern depends on
+    a latent duplicate group g = doc_id % 31 —
+    base(y, x) = clamp((g·(y+3)·(x+5) + y·29 + x·13) mod 256, 64, 191)
+    — plus k = (doc_id mod 4)+1 per-doc perturbed pixels at
+    ((doc_id·7 + 13j) mod 8, (doc_id·11 + 17j) mod 9) of amplitude
+    64·((doc_id+j) mod 3 − 1), final clamp to [0, 255]; each ±64 spike
+    flips ≤2 difference-hash comparisons, so same-group thumbnails
+    spread over Hamming 0–6 while cross-group thumbnails sit ~32 bits
+    apart. The thumbnail is ENCODED to PNG and DECODED back
+    (`sources/png.py`) inside one Arrow-batched mapInPandas; the 64-bit
+    dHash — bit(y, x) = px[y, x] < px[y, x+1] — is computed from the
+    DECODED pixels and packed into four 16-bit band values.
+
+    Candidate pairs come from a banded-LSH equi-join (any shared
+    16-bit band), exact-verified with bit_count(xor) Hamming ≤ 6 —
+    never all-pairs, the same bucketed shape as the MinHash text path
+    (`operators/dedup.py`). The oracle recomputes pixels, dHash bits,
+    bands, the band join, and the Hamming census in pure SQL from the
+    closed-form arithmetic — it never sees a PNG, so a hash match
+    proves decode-loop fidelity AND the LSH candidate semantics
+    (including genuinely-missed pairs whose ≤6 flips straddle all four
+    bands) cross-engine. 100 TB shape: per-image Python is map-only
+    over a bounded probe set; the joins are integer-keyed shuffles."""
+    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0).select(
+        "doc_id"
+    )
+
+    def dhash(doc_id):
+        import numpy as np
+
+        from ..sources.png import read_png, write_png
+
+        d = int(doc_id)
+        g = d % 31
+        y, x = np.mgrid[0:8, 0:9]
+        base = (g * (y + 3) * (x + 5) + y * 29 + x * 13) % 256
+        grid = np.clip(base, 64, 191).astype(np.int64)
+        for j in range(d % 4 + 1):
+            # scalar-indexed += so coinciding spike positions ACCUMULATE
+            # (fancy-index += would apply only once, diverging from the
+            # oracle's summed CASE terms)
+            grid[(d * 7 + 13 * j) % 8, (d * 11 + 17 * j) % 9] += 64 * ((d + j) % 3 - 1)
+        grid = np.clip(grid, 0, 255).astype(np.uint8)
+        px = read_png(write_png(grid, filter_type="mixed"))
+        if not np.array_equal(px, grid):
+            raise ValueError(f"PNG round-trip corrupted doc {d}")
+        bits = (
+            px[:, :8].astype(np.int64) < px[:, 1:].astype(np.int64)
+        ).astype(np.int64).ravel()  # i = y*8 + x
+        bands = [int((bits[k * 16 : (k + 1) * 16] << np.arange(16)).sum()) for k in range(4)]
+        return (d, g, *bands)
+
+    # r9: `hashes` is consumed THREE times (band explode + both verify
+    # sides), so the per-image Python PNG encode→decode ran 3× per
+    # image; and the probe scan is one task at fixture scale, so it ran
+    # single-core. Spread the compact doc_id rows before the Python
+    # boundary (guide §2.5/§4) and materialize the 6-int hash rows once
+    # (guide §5).
+
+    hashes = tb.map_rows(
+        spr.spread(docs), dhash, "doc_id bigint, grp int, b0 int, b1 int, b2 int, b3 int"
+    ).localCheckpoint(eager=False)
+    bands = hashes.select(
+        "doc_id", F.posexplode(F.array("b0", "b1", "b2", "b3")).alias("band", "val")
+    )
+    cand = (
+        bands.alias("a")
+        .join(
+            bands.alias("b"),
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.val") == F.col("b.val"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("ida"), F.col("b.doc_id").alias("idb"))
+        .distinct()
+    )
+    ha = hashes.select(
+        F.col("doc_id").alias("ida"),
+        F.col("grp").alias("ga"),
+        *[F.col(c).alias(c + "a") for c in ["b0", "b1", "b2", "b3"]],
+    )
+    hb = hashes.select(
+        F.col("doc_id").alias("idb"),
+        F.col("grp").alias("gb"),
+        *[F.col(c).alias(c + "b") for c in ["b0", "b1", "b2", "b3"]],
+    )
+    return (
+        cand.join(ha, "ida")
+        .join(hb, "idb")
+        .withColumn(
+            "hamming",
+            F.expr(
+                "bit_count(b0a ^ b0b) + bit_count(b1a ^ b1b)"
+                " + bit_count(b2a ^ b2b) + bit_count(b3a ^ b3b)"
+            ),
+        )
+        .filter(F.col("hamming") <= 6)
+        .groupBy("hamming")
+        .agg(
+            F.count(F.lit(1)).alias("n_pairs"),
+            F.sum(F.when(F.col("ga") == F.col("gb"), 1).otherwise(0)).alias(
+                "n_same_group"
+            ),
+            F.sum(F.col("ida") + F.col("idb")).alias("id_sum"),
+        )
+        .orderBy("hamming")
+    )
+
+
+_SQL_FLAC_ROUNDTRIP = """
+WITH d AS (SELECT doc_id, source FROM documents WHERE doc_id % 37 = 0),
+s AS (
+  SELECT d.doc_id, d.source,
+         (d.doc_id * 13 + i.range * 3) % 2001 - 1000 AS c1,
+         (d.doc_id * 29 + i.range * i.range) % 1999 - 999 AS c2
+  FROM d, range(256) i
+),
+per_doc AS (
+  SELECT doc_id, source,
+         sum(c1 + c2)::BIGINT AS s_sum,
+         sum(c1 * c1 + c2 * c2)::BIGINT AS sq_sum,
+         least(min(c1), min(c2))::INT AS s_min,
+         greatest(max(c1), max(c2))::INT AS s_max
+  FROM s GROUP BY 1, 2
+)
+SELECT source, count(*)::BIGINT AS n_clips,
+       sum(s_sum)::BIGINT AS sample_sum,
+       round(sqrt(sum(sq_sum)::DOUBLE / (count(*) * 512)), 6) AS rms,
+       min(s_min)::INT AS min_sample, max(s_max)::INT AS max_sample
+FROM per_doc GROUP BY source ORDER BY source
+"""
+
+
+@query(_SQL_FLAC_ROUNDTRIP)
 def q_flac_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL compressed-audio-codec round-trip (the FLAC twin of
     `wav_roundtrip_stats` — genuine Rice entropy coding + fixed linear
@@ -5082,7 +5105,7 @@ def q_flac_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             int(decoded.max()),
         )
 
-    per_doc = map_rows(
+    per_doc = tb.map_rows(
         docs,
         roundtrip,
         "doc_id bigint, source string, s_sum bigint, sq_sum bigint,"
@@ -5103,30 +5126,36 @@ def q_flac_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_FLAC_ROUNDTRIP = """
-WITH d AS (SELECT doc_id, source FROM documents WHERE doc_id % 37 = 0),
+_SQL_MP4_MANIFEST = """
+WITH d AS (SELECT doc_id, source, 8 + doc_id % 13 AS n
+           FROM documents WHERE doc_id % 43 = 0),
 s AS (
-  SELECT d.doc_id, d.source,
-         (d.doc_id * 13 + i.range * 3) % 2001 - 1000 AS c1,
-         (d.doc_id * 29 + i.range * i.range) % 1999 - 999 AS c2
-  FROM d, range(256) i
+  SELECT d.doc_id, d.source, i.range AS i,
+         (d.doc_id + i.range * 7) % 200 + 1 AS len,
+         (i.range % 5) + 1 AS dur
+  FROM d, range(20) i
+  WHERE i.range < d.n
 ),
 per_doc AS (
   SELECT doc_id, source,
-         sum(c1 + c2)::BIGINT AS s_sum,
-         sum(c1 * c1 + c2 * c2)::BIGINT AS sq_sum,
-         least(min(c1), min(c2))::INT AS s_min,
-         greatest(max(c1), max(c2))::INT AS s_max
+         count(*)::INT AS n_samples,
+         sum(len)::BIGINT AS total_bytes,
+         sum(dur)::BIGINT AS total_dur,
+         sum(CASE WHEN i % 3 = 0 THEN 1 ELSE 0 END)::INT AS kept_samples,
+         sum(CASE WHEN i % 3 = 0 THEN len ELSE 0 END)::BIGINT AS kept_bytes
   FROM s GROUP BY 1, 2
 )
-SELECT source, count(*)::BIGINT AS n_clips,
-       sum(s_sum)::BIGINT AS sample_sum,
-       round(sqrt(sum(sq_sum)::DOUBLE / (count(*) * 512)), 6) AS rms,
-       min(s_min)::INT AS min_sample, max(s_max)::INT AS max_sample
+SELECT source, count(*)::BIGINT AS n_videos,
+       sum(n_samples)::BIGINT AS samples,
+       sum(total_bytes)::BIGINT AS sample_bytes,
+       sum(total_dur)::BIGINT AS duration_ticks,
+       sum(kept_samples)::BIGINT AS kept_samples,
+       sum(kept_bytes)::BIGINT AS kept_bytes
 FROM per_doc GROUP BY source ORDER BY source
 """
 
 
+@query(_SQL_MP4_MANIFEST)
 def q_mp4_sample_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video-CONTAINER round-trip (`sources/mp4.py`, ISO/IEC
     14496-12): per probe doc a deterministic single-track MP4 —
@@ -5173,7 +5202,7 @@ def q_mp4_sample_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             sum(len(s) for s in kept),
         )
 
-    per_doc = map_rows(
+    per_doc = tb.map_rows(
         docs,
         remux,
         "doc_id bigint, source string, n_samples int, total_bytes bigint,"
@@ -5193,35 +5222,31 @@ def q_mp4_sample_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_MP4_MANIFEST = """
-WITH d AS (SELECT doc_id, source, 8 + doc_id % 13 AS n
-           FROM documents WHERE doc_id % 43 = 0),
-s AS (
-  SELECT d.doc_id, d.source, i.range AS i,
-         (d.doc_id + i.range * 7) % 200 + 1 AS len,
-         (i.range % 5) + 1 AS dur
-  FROM d, range(20) i
-  WHERE i.range < d.n
+_SQL_MJPEG_MP4 = """
+WITH d AS (SELECT doc_id, source, 2 + doc_id % 3 AS n
+           FROM documents WHERE doc_id % 53 = 0),
+blocks AS (
+  SELECT d.doc_id, d.source, d.n,
+         (d.doc_id * 17 + k.range * 31 + by.range * 8 + bx.range * 3) % 256
+           AS bval
+  FROM d, range(5) k, range(2) by, range(2) bx
+  WHERE k.range < d.n
 ),
 per_doc AS (
-  SELECT doc_id, source,
-         count(*)::INT AS n_samples,
-         sum(len)::BIGINT AS total_bytes,
-         sum(dur)::BIGINT AS total_dur,
-         sum(CASE WHEN i % 3 = 0 THEN 1 ELSE 0 END)::INT AS kept_samples,
-         sum(CASE WHEN i % 3 = 0 THEN len ELSE 0 END)::BIGINT AS kept_bytes
-  FROM s GROUP BY 1, 2
+  SELECT doc_id, source, max(n)::INT AS n_frames,
+         sum(bval * 64)::BIGINT AS px_sum,
+         min(bval)::INT AS mn, max(bval)::INT AS mx
+  FROM blocks GROUP BY 1, 2
 )
 SELECT source, count(*)::BIGINT AS n_videos,
-       sum(n_samples)::BIGINT AS samples,
-       sum(total_bytes)::BIGINT AS sample_bytes,
-       sum(total_dur)::BIGINT AS duration_ticks,
-       sum(kept_samples)::BIGINT AS kept_samples,
-       sum(kept_bytes)::BIGINT AS kept_bytes
+       sum(n_frames)::BIGINT AS frames,
+       round(sum(px_sum)::DOUBLE / (sum(n_frames) * 256), 6) AS avg_px_mean,
+       min(mn)::INT AS min_px, max(mx)::INT AS max_px
 FROM per_doc GROUP BY source ORDER BY source
 """
 
 
+@query(_SQL_MJPEG_MP4)
 def q_mjpeg_mp4_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END video FRAME pixel decode (VERDICT r4 "Next" #4):
     Motion-JPEG in MP4 — the composition of the two real codecs. Per
@@ -5276,7 +5301,7 @@ def q_mjpeg_mp4_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise ValueError(f"MJPEG-MP4 frame decode corrupted doc {d}")
         return (d, source, n, int(px.astype(np.int64).sum()), int(px.min()), int(px.max()))
 
-    per_doc = map_rows(
+    per_doc = tb.map_rows(
         docs,
         roundtrip,
         "doc_id bigint, source string, n_frames int, px_sum bigint,"
@@ -5285,30 +5310,28 @@ def q_mjpeg_mp4_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _video_px_stats(per_doc, 256)
 
 
-_SQL_MJPEG_MP4 = """
-WITH d AS (SELECT doc_id, source, 2 + doc_id % 3 AS n
-           FROM documents WHERE doc_id % 53 = 0),
-blocks AS (
-  SELECT d.doc_id, d.source, d.n,
-         (d.doc_id * 17 + k.range * 31 + by.range * 8 + bx.range * 3) % 256
-           AS bval
-  FROM d, range(5) k, range(2) by, range(2) bx
-  WHERE k.range < d.n
+_SQL_WEBP_ROUNDTRIP = """
+WITH d AS (SELECT doc_id, source FROM documents WHERE doc_id % 59 = 0),
+px AS (
+  SELECT d.doc_id, d.source, ch.v AS px
+  FROM d, range(16) y, range(16) x,
+       LATERAL (VALUES ((d.doc_id * 17 + y.range * 7 + x.range * 3) % 256),
+                       ((d.doc_id * 31 + y.range * 16 + x.range * 7) % 256),
+                       ((d.doc_id * 13 + y.range * 5 + x.range * 11) % 256)) ch(v)
 ),
 per_doc AS (
-  SELECT doc_id, source, max(n)::INT AS n_frames,
-         sum(bval * 64)::BIGINT AS px_sum,
-         min(bval)::INT AS mn, max(bval)::INT AS mx
-  FROM blocks GROUP BY 1, 2
+  SELECT doc_id, source, sum(px)::BIGINT AS px_sum,
+         min(px) AS mn, max(px) AS mx
+  FROM px GROUP BY 1, 2
 )
-SELECT source, count(*)::BIGINT AS n_videos,
-       sum(n_frames)::BIGINT AS frames,
-       round(sum(px_sum)::DOUBLE / (sum(n_frames) * 256), 6) AS avg_px_mean,
+SELECT source, count(*)::BIGINT AS n_images,
+       round(sum(px_sum)::DOUBLE / (count(*) * 768), 6) AS avg_px_mean,
        min(mn)::INT AS min_px, max(mx)::INT AS max_px
 FROM per_doc GROUP BY source ORDER BY source
 """
 
 
+@query(_SQL_WEBP_ROUNDTRIP)
 def q_webp_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL WebP-lossless round-trip (the VP8L codec `sources/webp.py`
     — RFC 9649 §4 — continuing the PNG/JPEG/BMP image-codec family): a
@@ -5351,33 +5374,42 @@ def q_webp_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise ValueError(f"WebP round-trip corrupted doc {d}")
         return (d, source, int(px.astype(np.int64).sum()), int(px.min()), int(px.max()))
 
-    per_doc = map_rows(
+    per_doc = tb.map_rows(
         docs, roundtrip, "doc_id bigint, source string, px_sum bigint, px_min int, px_max int"
     )
     return _image_px_stats(per_doc, 768)
 
 
-_SQL_WEBP_ROUNDTRIP = """
-WITH d AS (SELECT doc_id, source FROM documents WHERE doc_id % 59 = 0),
-px AS (
-  SELECT d.doc_id, d.source, ch.v AS px
-  FROM d, range(16) y, range(16) x,
-       LATERAL (VALUES ((d.doc_id * 17 + y.range * 7 + x.range * 3) % 256),
-                       ((d.doc_id * 31 + y.range * 16 + x.range * 7) % 256),
-                       ((d.doc_id * 13 + y.range * 5 + x.range * 11) % 256)) ch(v)
+_SQL_MP3_CENSUS = """
+WITH kb(idx, kbps) AS (VALUES (1,32),(2,40),(3,48),(4,56),(5,64),(6,80),(7,96),
+                              (8,112),(9,128),(10,160),(11,192),(12,224),(13,256),(14,320)),
+d AS (SELECT doc_id, source,
+             CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000 ELSE 32000 END AS rate
+      FROM documents WHERE doc_id % 47 = 0),
+f AS (
+  SELECT d.doc_id, d.source, d.rate, kb.kbps,
+         (144 * kb.kbps * 1000) // d.rate AS frame_bytes
+  FROM d, range(6) j
+  JOIN kb ON kb.idx = (d.doc_id + j.range * 3) % 14 + 1
 ),
 per_doc AS (
-  SELECT doc_id, source, sum(px)::BIGINT AS px_sum,
-         min(px) AS mn, max(px) AS mx
-  FROM px GROUP BY 1, 2
+  SELECT doc_id, source,
+         count(*)::INT AS n_frames,
+         sum(frame_bytes)::BIGINT AS stream_bytes,
+         (count(*) * 1152)::BIGINT AS pcm_samples,
+         sum(kbps)::BIGINT AS kbps_sum
+  FROM f GROUP BY 1, 2
 )
-SELECT source, count(*)::BIGINT AS n_images,
-       round(sum(px_sum)::DOUBLE / (count(*) * 768), 6) AS avg_px_mean,
-       min(mn)::INT AS min_px, max(mx)::INT AS max_px
+SELECT source, count(*)::BIGINT AS n_streams,
+       sum(n_frames)::BIGINT AS frames,
+       sum(stream_bytes)::BIGINT AS stream_bytes,
+       sum(pcm_samples)::BIGINT AS pcm_samples,
+       round(sum(kbps_sum)::DOUBLE / sum(n_frames), 6) AS mean_kbps
 FROM per_doc GROUP BY source ORDER BY source
 """
 
 
+@query(_SQL_MP3_CENSUS)
 def q_mp3_frame_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL MPEG-audio metadata walk (`sources/mp3.py`, ISO/IEC
     11172-3 §2.4.1): per probe doc a spec-valid Layer III stream of 6
@@ -5414,7 +5446,7 @@ def q_mp3_frame_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             sum(f.bitrate_kbps for f in frames),
         )
 
-    per_doc = map_rows(
+    per_doc = tb.map_rows(
         docs,
         walk,
         "doc_id bigint, source string, n_frames int, stream_bytes bigint,"
@@ -5434,35 +5466,6 @@ def q_mp3_frame_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_MP3_CENSUS = """
-WITH kb(idx, kbps) AS (VALUES (1,32),(2,40),(3,48),(4,56),(5,64),(6,80),(7,96),
-                              (8,112),(9,128),(10,160),(11,192),(12,224),(13,256),(14,320)),
-d AS (SELECT doc_id, source,
-             CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000 ELSE 32000 END AS rate
-      FROM documents WHERE doc_id % 47 = 0),
-f AS (
-  SELECT d.doc_id, d.source, d.rate, kb.kbps,
-         (144 * kb.kbps * 1000) // d.rate AS frame_bytes
-  FROM d, range(6) j
-  JOIN kb ON kb.idx = (d.doc_id + j.range * 3) % 14 + 1
-),
-per_doc AS (
-  SELECT doc_id, source,
-         count(*)::INT AS n_frames,
-         sum(frame_bytes)::BIGINT AS stream_bytes,
-         (count(*) * 1152)::BIGINT AS pcm_samples,
-         sum(kbps)::BIGINT AS kbps_sum
-  FROM f GROUP BY 1, 2
-)
-SELECT source, count(*)::BIGINT AS n_streams,
-       sum(n_frames)::BIGINT AS frames,
-       sum(stream_bytes)::BIGINT AS stream_bytes,
-       sum(pcm_samples)::BIGINT AS pcm_samples,
-       round(sum(kbps_sum)::DOUBLE / sum(n_frames), 6) AS mean_kbps
-FROM per_doc GROUP BY source ORDER BY source
-"""
-
-
 # --------------------------------------------------------------------------
 # Sentiment (SURVEY §2.9 M11 + A5/W3)
 # --------------------------------------------------------------------------
@@ -5474,36 +5477,7 @@ _CLEAN_TEXT_SQL = (
 )
 
 
-def q_sentiment_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M11 — lexicon polarity/subjectivity (TextBlob-shaped: mean
-    valence of matched tokens, 0.0 when none) + 3-way categorization at
-    ±0.1, summarized per category. All JVM column expressions."""
-    from ..functions import sentiment as sn
-
-    docs = _t(spark, sf_dir, "documents")
-    # per-doc scores rounded to 6dp BEFORE the ±0.1 threshold: engines
-    # agree to ~1e-15 but a doc landing within fp-noise of the boundary
-    # would otherwise classify differently on the two sides
-    scored = docs.select(
-        "doc_id",
-        F.round(sn.polarity("text"), 6).alias("pol"),
-        F.round(sn.subjectivity("text"), 6).alias("subj"),
-    )
-    return (
-        scored.select(sn.sentiment_category(F.col("pol")).alias("category"), "pol", "subj")
-        .groupBy("category")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg("pol"), 6).alias("avg_polarity"),
-            F.round(F.avg("subj"), 6).alias("avg_subjectivity"),
-        )
-        .orderBy("category")
-    )
-
-
 def _sql_sentiment_docs() -> str:
-    from ..functions import sentiment as sn
-
     return f"""
 WITH toks AS (
   SELECT doc_id, unnest(regexp_split_to_array({_CLEAN_TEXT_SQL}, '\\s+')) AS w
@@ -5531,6 +5505,57 @@ FROM scored GROUP BY 1 ORDER BY category
 """
 
 
+@query(_sql_sentiment_docs())
+def q_sentiment_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """M11 — lexicon polarity/subjectivity (TextBlob-shaped: mean
+    valence of matched tokens, 0.0 when none) + 3-way categorization at
+    ±0.1, summarized per category. All JVM column expressions."""
+    docs = _t(spark, sf_dir, "documents")
+    # per-doc scores rounded to 6dp BEFORE the ±0.1 threshold: engines
+    # agree to ~1e-15 but a doc landing within fp-noise of the boundary
+    # would otherwise classify differently on the two sides
+    scored = docs.select(
+        "doc_id",
+        F.round(sn.polarity("text"), 6).alias("pol"),
+        F.round(sn.subjectivity("text"), 6).alias("subj"),
+    )
+    return (
+        scored.select(sn.sentiment_category(F.col("pol")).alias("category"), "pol", "subj")
+        .groupBy("category")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.avg("pol"), 6).alias("avg_polarity"),
+            F.round(F.avg("subj"), 6).alias("avg_subjectivity"),
+        )
+        .orderBy("category")
+    )
+
+
+_SQL_H264_IPCM = """
+WITH d AS (SELECT doc_id, source, 2 + doc_id % 3 AS n
+           FROM documents WHERE doc_id % 59 = 0),
+px AS (
+  SELECT d.doc_id, d.source, d.n,
+         (d.doc_id * 13 + k.range * 41 + y.range * 16 + x.range * 7) % 256
+           AS pval
+  FROM d, range(5) k, range(16) y, range(32) x
+  WHERE k.range < d.n
+),
+per_doc AS (
+  SELECT doc_id, source, max(n)::INT AS n_frames,
+         sum(pval)::BIGINT AS px_sum,
+         min(pval)::INT AS mn, max(pval)::INT AS mx
+  FROM px GROUP BY 1, 2
+)
+SELECT source, count(*)::BIGINT AS n_videos,
+       sum(n_frames)::BIGINT AS frames,
+       round(sum(px_sum)::DOUBLE / (sum(n_frames) * 512), 6) AS avg_px_mean,
+       min(mn)::INT AS min_px, max(mx)::INT AS max_px
+FROM per_doc GROUP BY source ORDER BY source
+"""
+
+
+@query(_SQL_H264_IPCM)
 def q_h264_ipcm_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H.264 decode through the production path (VERDICT r5 "Next"
     #6): per probe doc (doc_id % 59 = 0), n = 2 + doc_id mod 3 frames
@@ -5569,7 +5594,7 @@ def q_h264_ipcm_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise ValueError(f"H.264 I_PCM decode corrupted doc {d}")
         return (d, source, n, int(px.astype(np.int64).sum()), int(px.min()), int(px.max()))
 
-    per_doc = map_rows(
+    per_doc = tb.map_rows(
         docs,
         roundtrip,
         "doc_id bigint, source string, n_frames int, px_sum bigint,"
@@ -5578,66 +5603,11 @@ def q_h264_ipcm_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _video_px_stats(per_doc, 512)
 
 
-_SQL_H264_IPCM = """
-WITH d AS (SELECT doc_id, source, 2 + doc_id % 3 AS n
-           FROM documents WHERE doc_id % 59 = 0),
-px AS (
-  SELECT d.doc_id, d.source, d.n,
-         (d.doc_id * 13 + k.range * 41 + y.range * 16 + x.range * 7) % 256
-           AS pval
-  FROM d, range(5) k, range(16) y, range(32) x
-  WHERE k.range < d.n
-),
-per_doc AS (
-  SELECT doc_id, source, max(n)::INT AS n_frames,
-         sum(pval)::BIGINT AS px_sum,
-         min(pval)::INT AS mn, max(pval)::INT AS mx
-  FROM px GROUP BY 1, 2
-)
-SELECT source, count(*)::BIGINT AS n_videos,
-       sum(n_frames)::BIGINT AS frames,
-       round(sum(px_sum)::DOUBLE / (sum(n_frames) * 512), 6) AS avg_px_mean,
-       min(mn)::INT AS min_px, max(mx)::INT AS max_px
-FROM per_doc GROUP BY source ORDER BY source
-"""
-
-
-def q_sentiment_pattern_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M11 at TextBlob parity — PatternAnalyzer's stateful assessment
-    chain (intensifier multiply+clamp, negation ×−0.5 with inverted
-    pending intensity, unknown-word chain break) as one JVM `aggregate`
-    fold per document; per-category census + mean polarity /
-    subjectivity. The oracle replays the FULL state machine as a
-    recursive CTE stepping token positions — every branch of the fold
-    is value-checked cross-engine (lab4 nb cell 13 semantics)."""
-    from ..functions import sentiment as sn
-
-    # only the columns the fold reads cross the spread exchange
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    scored = sn.with_pattern_scores(docs, "text").select(
-        "doc_id",
-        F.round(F.col("_sc")["polarity"], 6).alias("pol"),
-        F.round(F.col("_sc")["subjectivity"], 6).alias("subj"),
-    )
-    return (
-        scored.select(sn.sentiment_category(F.col("pol")).alias("category"), "pol", "subj")
-        .groupBy("category")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg("pol"), 6).alias("avg_polarity"),
-            F.round(F.avg("subj"), 6).alias("avg_subjectivity"),
-        )
-        .orderBy("category")
-    )
-
-
 def _sql_pattern_walk(src: str = "documents") -> str:
     """The PatternAnalyzer state machine as a recursive CTE over any
     (doc_id, text) source CTE/table — emits CTEs `toks`, `walk`,
     `final`, `scored` (doc_id, pol, subj). Shared by the corpus query
     and the lab-4 golden fixture."""
-    from ..functions import sentiment as sn
-
     negs = sn.negations_sql_list()
     clamp_pi = "greatest(-1.0, least(1.0, lex.p * w.oi))"
     clamp_si = "greatest(-1.0, least(1.0, lex.s * w.oi))"
@@ -5699,6 +5669,34 @@ FROM scored GROUP BY 1 ORDER BY category
 """
 
 
+@query(_sql_sentiment_pattern_docs())
+def q_sentiment_pattern_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """M11 at TextBlob parity — PatternAnalyzer's stateful assessment
+    chain (intensifier multiply+clamp, negation ×−0.5 with inverted
+    pending intensity, unknown-word chain break) as one JVM `aggregate`
+    fold per document; per-category census + mean polarity /
+    subjectivity. The oracle replays the FULL state machine as a
+    recursive CTE stepping token positions — every branch of the fold
+    is value-checked cross-engine (lab4 nb cell 13 semantics)."""
+    # only the columns the fold reads cross the spread exchange
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    scored = sn.with_pattern_scores(docs, "text").select(
+        "doc_id",
+        F.round(F.col("_sc")["polarity"], 6).alias("pol"),
+        F.round(F.col("_sc")["subjectivity"], 6).alias("subj"),
+    )
+    return (
+        scored.select(sn.sentiment_category(F.col("pol")).alias("category"), "pol", "subj")
+        .groupBy("category")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.avg("pol"), 6).alias("avg_polarity"),
+            F.round(F.avg("subj"), 6).alias("avg_subjectivity"),
+        )
+        .orderBy("category")
+    )
+
+
 # Lab-4 golden band (VERDICT r2 #3): a reference-distribution fixture —
 # review-shaped texts drawn deterministically so the engine's sentiment
 # pipeline reproduces BASELINE.md's lab-4 aggregates (80.73% pos /
@@ -5742,67 +5740,6 @@ _LAB4_TARGETS = [
     ("pos_share", 0.8073, 0.01),
 ]
 _LAB4_MULT = 2654435761  # Knuth 2^32/phi, odd & coprime to 1000
-
-
-def q_lab4_sentiment_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lab-4 sentiment GOLDEN BAND: the BASELINE.md review-sentiment
-    aggregates re-derived on a reference-distribution fixture. doc_id →
-    bucket b = (doc_id·2654435761) mod 1000; b<807 draws a mild-positive
-    review template, b<854 a negative one, else neutral (template index
-    b mod pool size) — so the PatternAnalyzer pipeline must land the
-    3-way split at 80.73/4.63/14.64 (±1pt), mean polarity 0.2663
-    (±0.02), mean subjectivity 0.5751 (±0.03). Output: (metric, value,
-    target, ok) — values are EXACT cross-engine (decimal polarity sums,
-    one final division; the oracle replays fixture + full state machine
-    as a recursive CTE), and tests/test_lab_goldens.py asserts every
-    ok. Scale: one projection + one aggregate over the corpus; the
-    explode runs on a 1-row aggregate."""
-    from ..functions import sentiment as sn
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    b = (F.col("doc_id") * F.lit(_LAB4_MULT)) % 1000
-    pos_a = F.array(*[F.lit(t) for t in _LAB4_POS_TPL])
-    neg_a = F.array(*[F.lit(t) for t in _LAB4_NEG_TPL])
-    neu_a = F.array(*[F.lit(t) for t in _LAB4_NEU_TPL])
-    text = (
-        F.when(b < 807, F.element_at(pos_a, (b % len(_LAB4_POS_TPL)).cast("int") + 1))
-        .when(b < 854, F.element_at(neg_a, (b % len(_LAB4_NEG_TPL)).cast("int") + 1))
-        .otherwise(F.element_at(neu_a, (b % len(_LAB4_NEU_TPL)).cast("int") + 1))
-    )
-    scored = sn.with_pattern_scores(docs, text).select(
-        F.round(F.col("_sc")["polarity"], 6).alias("pol"),
-        F.round(F.col("_sc")["subjectivity"], 6).alias("subj"),
-    )
-    agg = scored.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("pol") > 0.1).cast("bigint")).alias("n_pos"),
-        F.sum((F.col("pol") < -0.1).cast("bigint")).alias("n_neg"),
-        F.sum(F.col("pol").cast("decimal(20,10)")).alias("sp"),
-        F.sum(F.col("subj").cast("decimal(20,10)")).alias("ss"),
-    )
-    vals = {
-        "pos_share": F.round(F.col("n_pos") / F.col("n"), 6),
-        "neg_share": F.round(F.col("n_neg") / F.col("n"), 6),
-        "neu_share": F.round((F.col("n") - F.col("n_pos") - F.col("n_neg")) / F.col("n"), 6),
-        "mean_polarity": F.round(F.col("sp").cast("double") / F.col("n"), 6),
-        "mean_subjectivity": F.round(F.col("ss").cast("double") / F.col("n"), 6),
-    }
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(m).alias("metric"),
-                vals[m].alias("value"),
-                F.lit(t).alias("target"),
-                (F.abs(vals[m] - F.lit(t)) <= F.lit(tol)).alias("ok"),
-            )
-            for m, t, tol in _LAB4_TARGETS
-        ]
-    )
-    return (
-        agg.select(F.explode(rows).alias("r"))
-        .select("r.metric", "r.value", "r.target", "r.ok")
-        .orderBy("metric")
-    )
 
 
 def _sql_lab4_golden() -> str:
@@ -5849,32 +5786,68 @@ ORDER BY metric
 """
 
 
-def q_gopher_quality_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LLM-curation quality gate — Gopher/MassiveText filtering rules
-    (Rae et al. 2021 §A.1.1) per document, censused per source: pass
-    counts per rule + overall pass rate. Pure column expressions; the
-    oracle recomputes every rule independently."""
-    from ..functions.text import gopher_rules
-
-    docs = _t(spark, sf_dir, "documents")
-    g = gopher_rules("text")
-    rules = ["word_count_ok", "mean_word_len_ok", "alpha_share_ok", "symbol_ratio_ok", "common_words_ok"]
-    scored = docs.select("source", g.alias("g"))
+@query(_sql_lab4_golden())
+def q_lab4_sentiment_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lab-4 sentiment GOLDEN BAND: the BASELINE.md review-sentiment
+    aggregates re-derived on a reference-distribution fixture. doc_id →
+    bucket b = (doc_id·2654435761) mod 1000; b<807 draws a mild-positive
+    review template, b<854 a negative one, else neutral (template index
+    b mod pool size) — so the PatternAnalyzer pipeline must land the
+    3-way split at 80.73/4.63/14.64 (±1pt), mean polarity 0.2663
+    (±0.02), mean subjectivity 0.5751 (±0.03). Output: (metric, value,
+    target, ok) — values are EXACT cross-engine (decimal polarity sums,
+    one final division; the oracle replays fixture + full state machine
+    as a recursive CTE), and tests/test_lab_goldens.py asserts every
+    ok. Scale: one projection + one aggregate over the corpus; the
+    explode runs on a 1-row aggregate."""
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    b = (F.col("doc_id") * F.lit(_LAB4_MULT)) % 1000
+    pos_a = F.array(*[F.lit(t) for t in _LAB4_POS_TPL])
+    neg_a = F.array(*[F.lit(t) for t in _LAB4_NEG_TPL])
+    neu_a = F.array(*[F.lit(t) for t in _LAB4_NEU_TPL])
+    text = (
+        F.when(b < 807, F.element_at(pos_a, (b % len(_LAB4_POS_TPL)).cast("int") + 1))
+        .when(b < 854, F.element_at(neg_a, (b % len(_LAB4_NEG_TPL)).cast("int") + 1))
+        .otherwise(F.element_at(neu_a, (b % len(_LAB4_NEU_TPL)).cast("int") + 1))
+    )
+    scored = sn.with_pattern_scores(docs, text).select(
+        F.round(F.col("_sc")["polarity"], 6).alias("pol"),
+        F.round(F.col("_sc")["subjectivity"], 6).alias("subj"),
+    )
+    agg = scored.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum((F.col("pol") > 0.1).cast("bigint")).alias("n_pos"),
+        F.sum((F.col("pol") < -0.1).cast("bigint")).alias("n_neg"),
+        F.sum(F.col("pol").cast("decimal(20,10)")).alias("sp"),
+        F.sum(F.col("subj").cast("decimal(20,10)")).alias("ss"),
+    )
+    vals = {
+        "pos_share": F.round(F.col("n_pos") / F.col("n"), 6),
+        "neg_share": F.round(F.col("n_neg") / F.col("n"), 6),
+        "neu_share": F.round((F.col("n") - F.col("n_pos") - F.col("n_neg")) / F.col("n"), 6),
+        "mean_polarity": F.round(F.col("sp").cast("double") / F.col("n"), 6),
+        "mean_subjectivity": F.round(F.col("ss").cast("double") / F.col("n"), 6),
+    }
+    rows = F.array(
+        *[
+            F.struct(
+                F.lit(m).alias("metric"),
+                vals[m].alias("value"),
+                F.lit(t).alias("target"),
+                (F.abs(vals[m] - F.lit(t)) <= F.lit(tol)).alias("ok"),
+            )
+            for m, t, tol in _LAB4_TARGETS
+        ]
+    )
     return (
-        scored.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            *[F.sum(F.col("g")[r].cast("bigint")).alias(f"n_{r}") for r in rules],
-            F.round(F.avg(F.col("g")["pass_all"].cast("double")), 6).alias("pass_rate"),
-        )
-        .orderBy("source")
+        agg.select(F.explode(rows).alias("r"))
+        .select("r.metric", "r.value", "r.target", "r.ok")
+        .orderBy("metric")
     )
 
 
 def _sql_gopher_quality() -> str:
-    from ..functions.text import gopher_rules_sql
-
-    r = gopher_rules_sql("text")
+    r = tx.gopher_rules_sql("text")
     rules = ["word_count_ok", "mean_word_len_ok", "alpha_share_ok", "symbol_ratio_ok", "common_words_ok"]
     sums = ",\n       ".join(
         f"sum(CASE WHEN {r[k]} THEN 1 ELSE 0 END)::BIGINT AS n_{k}" for k in rules
@@ -5888,53 +5861,22 @@ FROM documents GROUP BY source ORDER BY source
 """
 
 
-def q_dup_ngram_share_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LLM-curation duplication diagnostic — per-document share of
-    distinct word 5-grams that also occur in ANOTHER document
-    (cross-doc duplicate n-gram rate, the streaming-friendly stand-in
-    for exact substring dedup à la Lee et al. 2022), summarized per
-    source. Plan shape: explode distinct shingles → inverted index
-    (groupBy shingle, distinct-doc count) → join back — equi-joins on
-    the shingle key throughout, no pairwise comparisons anywhere."""
-    from ..operators.dedup import shingle_hash_rows
-
+@query(_sql_gopher_quality())
+def q_gopher_quality_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LLM-curation quality gate — Gopher/MassiveText filtering rules
+    (Rae et al. 2021 §A.1.1) per document, censused per source: pass
+    counts per rule + overall pass rate. Pure column expressions; the
+    oracle recomputes every rule independently."""
     docs = _t(spark, sf_dir, "documents")
-    # r9: the interpreted-HOF shingle chain (zip_with×4 + filter per
-    # row — CodegenFallback) was the dominant cost here. The dedup
-    # family's window-lag builder (`shingle_hash_rows`) constructs the
-    # same shingle set fully whole-stage-codegen'd (posexplode + lag +
-    # multi-arg xxhash64; tuple↔string bijection per its contract), and
-    # the query only consumes COUNTS — per-doc distinct shingles and
-    # cross-doc document frequency — which are identical on the hashed
-    # tuple space. One (doc_id, shingle) distinct replaces the per-row
-    # array_distinct; the hashed int rows materialize once for the
-    # index build and the join-back, as before. The oracle still works
-    # on the raw strings, so a hash collision surfaces as a mismatch,
-    # not silently.
-    sh = (
-        shingle_hash_rows(docs.select("doc_id", "text"), "text", "doc_id", n=5)
-        .distinct()
-        .withColumnRenamed("shingle", "sh")
-        .localCheckpoint(eager=False)
-    )
-    idx = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-    per_doc = (
-        sh.join(idx, "sh")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_shingles"),
-            F.sum((F.col("df") >= 2).cast("bigint")).alias("n_dup"),
-        )
-        .withColumn("dup_share", F.col("n_dup") / F.col("n_shingles"))
-        .join(docs.select("doc_id", "source"), "doc_id")
-    )
+    g = tx.gopher_rules("text")
+    rules = ["word_count_ok", "mean_word_len_ok", "alpha_share_ok", "symbol_ratio_ok", "common_words_ok"]
+    scored = docs.select("source", g.alias("g"))
     return (
-        per_doc.groupBy("source")
+        scored.groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.round(F.avg("dup_share"), 6).alias("avg_dup_share"),
-            F.round(F.max("dup_share"), 6).alias("max_dup_share"),
-            F.sum((F.col("dup_share") > 0).cast("bigint")).alias("n_docs_with_dup"),
+            *[F.sum(F.col("g")[r].cast("bigint")).alias(f"n_{r}") for r in rules],
+            F.round(F.avg(F.col("g")["pass_all"].cast("double")), 6).alias("pass_rate"),
         )
         .orderBy("source")
     )
@@ -5966,26 +5908,58 @@ FROM per_doc GROUP BY source ORDER BY source
 """
 
 
-def q_lab4_sentiment_linregress(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed Lab-4 correlation stage (SURVEY §3.3, A12+M11): per-doc
-    lexicon polarity vs quality score → closed-form linear regression
-    (slope/intercept/r/R², the scipy.linregress surface the reference
-    reports as 'stars↔sentiment r=0.744')."""
-    from ..functions import sentiment as sn
-
+@query(_SQL_DUP_NGRAM)
+def q_dup_ngram_share_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LLM-curation duplication diagnostic — per-document share of
+    distinct word 5-grams that also occur in ANOTHER document
+    (cross-doc duplicate n-gram rate, the streaming-friendly stand-in
+    for exact substring dedup à la Lee et al. 2022), summarized per
+    source. Plan shape: explode distinct shingles → inverted index
+    (groupBy shingle, distinct-doc count) → join back — equi-joins on
+    the shingle key throughout, no pairwise comparisons anywhere."""
     docs = _t(spark, sf_dir, "documents")
-    scored = docs.select(
-        "doc_id",
-        F.round(sn.polarity("text"), 6).alias("pol"),
-        F.round(tx.quality_score("text"), 6).alias("quality"),
+    # r9: the interpreted-HOF shingle chain (zip_with×4 + filter per
+    # row — CodegenFallback) was the dominant cost here. The dedup
+    # family's window-lag builder (`shingle_hash_rows`) constructs the
+    # same shingle set fully whole-stage-codegen'd (posexplode + lag +
+    # multi-arg xxhash64; tuple↔string bijection per its contract), and
+    # the query only consumes COUNTS — per-doc distinct shingles and
+    # cross-doc document frequency — which are identical on the hashed
+    # tuple space. One (doc_id, shingle) distinct replaces the per-row
+    # array_distinct; the hashed int rows materialize once for the
+    # index build and the join-back, as before. The oracle still works
+    # on the raw strings, so a hash collision surfaces as a mismatch,
+    # not silently.
+    sh = (
+        dd.shingle_hash_rows(docs.select("doc_id", "text"), "text", "doc_id", n=5)
+        .distinct()
+        .withColumnRenamed("shingle", "sh")
+        .localCheckpoint(eager=False)
     )
-    out = scored.agg(*linregress_aggs("pol", "quality"))
-    return out.select(*[F.round(F.col(c), 6).alias(c) for c in out.columns])
+    idx = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
+    per_doc = (
+        sh.join(idx, "sh")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_shingles"),
+            F.sum((F.col("df") >= 2).cast("bigint")).alias("n_dup"),
+        )
+        .withColumn("dup_share", F.col("n_dup") / F.col("n_shingles"))
+        .join(docs.select("doc_id", "source"), "doc_id")
+    )
+    return (
+        per_doc.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.round(F.avg("dup_share"), 6).alias("avg_dup_share"),
+            F.round(F.max("dup_share"), 6).alias("max_dup_share"),
+            F.sum((F.col("dup_share") > 0).cast("bigint")).alias("n_docs_with_dup"),
+        )
+        .orderBy("source")
+    )
 
 
 def _sql_lab4_linregress() -> str:
-    from ..functions import sentiment as sn
-
     return f"""
 WITH toks AS (
   SELECT doc_id, unnest(regexp_split_to_array({_CLEAN_TEXT_SQL}, '\\s+')) AS w
@@ -6019,28 +5993,23 @@ FROM scored
 """
 
 
-def q_sentiment_source_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5 + W3 — per-source sentiment aggregation (mean/std/count/
-    positive-rate in one hash agg) ranked by avg polarity desc (the
-    per-restaurant shape of lab4 cell 13)."""
-    from ..functions import sentiment as sn
-
+@query(_sql_lab4_linregress(), bench=False)
+def q_lab4_sentiment_linregress(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Composed Lab-4 correlation stage (SURVEY §3.3, A12+M11): per-doc
+    lexicon polarity vs quality score → closed-form linear regression
+    (slope/intercept/r/R², the scipy.linregress surface the reference
+    reports as 'stars↔sentiment r=0.744')."""
     docs = _t(spark, sf_dir, "documents")
-    scored = docs.select("source", F.round(sn.polarity("text"), 6).alias("polarity"))
-    stats = sn.group_sentiment_stats(scored, ["source"])
-    w = Window.orderBy(F.col("avg_polarity").desc(), F.col("source").asc())
-    return stats.select(
-        "source",
-        F.round("avg_polarity", 6).alias("avg_polarity"),
-        F.round("std_polarity", 6).alias("std_polarity"),
-        "n",
-        F.round("positive_rate", 6).alias("positive_rate"),
-    ).withColumn("sentiment_rank", F.rank().over(w))
+    scored = docs.select(
+        "doc_id",
+        F.round(sn.polarity("text"), 6).alias("pol"),
+        F.round(tx.quality_score("text"), 6).alias("quality"),
+    )
+    out = scored.agg(*st.linregress_aggs("pol", "quality"))
+    return out.select(*[F.round(F.col(c), 6).alias(c) for c in out.columns])
 
 
 def _sql_sentiment_ranks() -> str:
-    from ..functions import sentiment as sn
-
     return f"""
 WITH toks AS (
   SELECT doc_id, source, unnest(regexp_split_to_array({_CLEAN_TEXT_SQL}, '\\s+')) AS w
@@ -6066,6 +6035,24 @@ FROM stats
 """
 
 
+@query(_sql_sentiment_ranks())
+def q_sentiment_source_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A5 + W3 — per-source sentiment aggregation (mean/std/count/
+    positive-rate in one hash agg) ranked by avg polarity desc (the
+    per-restaurant shape of lab4 cell 13)."""
+    docs = _t(spark, sf_dir, "documents")
+    scored = docs.select("source", F.round(sn.polarity("text"), 6).alias("polarity"))
+    stats = sn.group_sentiment_stats(scored, ["source"])
+    w = Window.orderBy(F.col("avg_polarity").desc(), F.col("source").asc())
+    return stats.select(
+        "source",
+        F.round("avg_polarity", 6).alias("avg_polarity"),
+        F.round("std_polarity", 6).alias("std_polarity"),
+        "n",
+        F.round("positive_rate", 6).alias("positive_rate"),
+    ).withColumn("sentiment_rank", F.rank().over(w))
+
+
 # --------------------------------------------------------------------------
 # Spatial statistics (SURVEY §2.9 M12)
 # --------------------------------------------------------------------------
@@ -6077,22 +6064,6 @@ def _lisa_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lon").alias("x"),
         F.col("lat").alias("y"),
         "value",
-    )
-
-
-def q_lisa_moran_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M12 — analytic local Moran's I (KNN k=5, row-standardized 1/k
-    weights, esda formulation) over 1,000 derived event points; per-point
-    z, spatial lag, I_i and HH/LL/LH/HL quadrant."""
-    from ..operators.lisa import local_morans_i
-
-    lisa = local_morans_i(_lisa_points(spark, sf_dir), "value", k=5)
-    return lisa.select(
-        F.col("id").alias("event_id"),
-        F.round("z", 6).alias("z"),
-        F.round("lag", 6).alias("lag"),
-        F.round("i_stat", 6).alias("i_stat"),
-        "quadrant",
     )
 
 
@@ -6121,22 +6092,24 @@ FROM z JOIN lag USING (id), s
 """
 
 
+@query(_SQL_LISA)
+def q_lisa_moran_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """M12 — analytic local Moran's I (KNN k=5, row-standardized 1/k
+    weights, esda formulation) over 1,000 derived event points; per-point
+    z, spatial lag, I_i and HH/LL/LH/HL quadrant."""
+    lisa = lm.local_morans_i(_lisa_points(spark, sf_dir), "value", k=5)
+    return lisa.select(
+        F.col("id").alias("event_id"),
+        F.round("z", 6).alias("z"),
+        F.round("lag", 6).alias("lag"),
+        F.round("i_stat", 6).alias("i_stat"),
+        "quadrant",
+    )
+
+
 # --------------------------------------------------------------------------
 # Graph / clustering / composed pipelines
 # --------------------------------------------------------------------------
-
-def q_graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G7 — node degree over the part–supplier bipartite graph derived
-    from lineitem (part nodes = 2·partkey, supplier nodes = 2·suppkey+1)."""
-    from ..graph.algorithms import degrees
-
-    li = _t(spark, sf_dir, "lineitem")
-    edges = li.select(
-        (F.col("l_partkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    ).distinct()
-    return degrees(edges).withColumnRenamed("id", "node_id")
-
 
 _SQL_DEGREE = """
 WITH e AS (SELECT DISTINCT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst FROM lineitem),
@@ -6145,6 +6118,30 @@ SELECT node_id::BIGINT AS node_id, count(*)::BIGINT AS degree FROM ends GROUP BY
 """
 
 
+@query(_SQL_DEGREE, bench=False)
+def q_graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """G7 — node degree over the part–supplier bipartite graph derived
+    from lineitem (part nodes = 2·partkey, supplier nodes = 2·suppkey+1)."""
+    li = _t(spark, sf_dir, "lineitem")
+    edges = li.select(
+        (F.col("l_partkey") * 2).alias("src"),
+        (F.col("l_suppkey") * 2 + 1).alias("dst"),
+    ).distinct()
+    return ga.degrees(edges).withColumnRenamed("id", "node_id")
+
+
+_SQL_PEAK_HOUR = """
+WITH h AS (
+  SELECT event_type, hour(ts) AS hour, count(*)::BIGINT AS n
+  FROM events GROUP BY 1, 2
+)
+SELECT event_type, max_by(hour, n * 100 + (23 - hour)) AS peak_hour,
+       max(n) AS peak_count
+FROM h GROUP BY event_type ORDER BY event_type
+"""
+
+
+@query(_SQL_PEAK_HOUR, bench=False)
 def q_peak_hour_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O4 — argmax per group via ``max_by`` (idxmax peak hour,
     test.py:255-256): for each event_type, the hour with the most
@@ -6164,29 +6161,33 @@ def q_peak_hour_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_PEAK_HOUR = """
-WITH h AS (
-  SELECT event_type, hour(ts) AS hour, count(*)::BIGINT AS n
-  FROM events GROUP BY 1, 2
+_SQL_DEGREE_BANDS = """
+WITH e AS (SELECT DISTINCT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst FROM lineitem),
+ends AS (SELECT src AS node_id FROM e UNION ALL SELECT dst FROM e),
+deg AS (SELECT node_id, count(*)::BIGINT AS degree FROM ends GROUP BY node_id),
+banded AS (
+  SELECT degree, CASE WHEN degree = 1 THEN 'endpoint' WHEN degree = 2 THEN 'mid'
+                      ELSE 'intersection' END AS band
+  FROM deg
 )
-SELECT event_type, max_by(hour, n * 100 + (23 - hour)) AS peak_hour,
-       max(n) AS peak_count
-FROM h GROUP BY event_type ORDER BY event_type
+SELECT band, count(*)::BIGINT AS n_nodes,
+       round(count(*) / (SELECT count(*)::DOUBLE FROM deg), 6) AS share,
+       round(avg(degree), 6) AS avg_degree
+FROM banded GROUP BY band ORDER BY band
 """
 
 
+@query(_SQL_DEGREE_BANDS, bench=False)
 def q_node_degree_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G8 — degree class bands over the graph nodes (lab3a nb cell 20:
     endpoint deg=1 / mid-segment deg=2 / intersection deg≥3) with counts
     and share-of-nodes, the BASELINE.md 'intersections 97.2%' shape."""
-    from ..graph.algorithms import degrees
-
     li = _t(spark, sf_dir, "lineitem")
     edges = li.select(
         (F.col("l_partkey") * 2).alias("src"),
         (F.col("l_suppkey") * 2 + 1).alias("dst"),
     ).distinct()
-    deg = degrees(edges)
+    deg = ga.degrees(edges)
     banded = deg.withColumn(
         "band",
         F.when(F.col("degree") == 1, "endpoint")
@@ -6205,22 +6206,23 @@ def q_node_degree_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_DEGREE_BANDS = """
-WITH e AS (SELECT DISTINCT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst FROM lineitem),
-ends AS (SELECT src AS node_id FROM e UNION ALL SELECT dst FROM e),
-deg AS (SELECT node_id, count(*)::BIGINT AS degree FROM ends GROUP BY node_id),
-banded AS (
-  SELECT degree, CASE WHEN degree = 1 THEN 'endpoint' WHEN degree = 2 THEN 'mid'
-                      ELSE 'intersection' END AS band
-  FROM deg
-)
-SELECT band, count(*)::BIGINT AS n_nodes,
-       round(count(*) / (SELECT count(*)::DOUBLE FROM deg), 6) AS share,
-       round(avg(degree), 6) AS avg_degree
-FROM banded GROUP BY band ORDER BY band
+_SQL_DISTRIBUTION = """
+SELECT event_type,
+       round(quantile_cont(value, 0.1), 6) AS q10,
+       round(quantile_cont(value, 0.25), 6) AS q25,
+       round(quantile_cont(value, 0.5), 6) AS q50,
+       round(quantile_cont(value, 0.75), 6) AS q75,
+       round(quantile_cont(value, 0.9), 6) AS q90,
+       round((avg(value*value*value) - 3*avg(value)*avg(value*value) + 2*pow(avg(value), 3))
+             / pow(avg(value*value) - avg(value)*avg(value), 1.5), 6) AS skew_pop,
+       round((avg(value*value*value*value) - 4*avg(value)*avg(value*value*value)
+              + 6*pow(avg(value), 2)*avg(value*value) - 3*pow(avg(value), 4))
+             / pow(avg(value*value) - avg(value)*avg(value), 2) - 3, 6) AS kurt_pop
+FROM events GROUP BY event_type
 """
 
 
+@query(_SQL_DISTRIBUTION)
 def q_value_distribution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10 — per-group quantile spread (0.1/0.25/0.5/0.75/0.9) plus
     population skewness and excess kurtosis (lab3c nb cell 7:
@@ -6241,22 +6243,26 @@ def q_value_distribution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_DISTRIBUTION = """
-SELECT event_type,
-       round(quantile_cont(value, 0.1), 6) AS q10,
-       round(quantile_cont(value, 0.25), 6) AS q25,
-       round(quantile_cont(value, 0.5), 6) AS q50,
-       round(quantile_cont(value, 0.75), 6) AS q75,
-       round(quantile_cont(value, 0.9), 6) AS q90,
-       round((avg(value*value*value) - 3*avg(value)*avg(value*value) + 2*pow(avg(value), 3))
-             / pow(avg(value*value) - avg(value)*avg(value), 1.5), 6) AS skew_pop,
-       round((avg(value*value*value*value) - 4*avg(value)*avg(value*value*value)
-              + 6*pow(avg(value), 2)*avg(value*value) - 3*pow(avg(value), 4))
-             / pow(avg(value*value) - avg(value)*avg(value), 2) - 3, 6) AS kurt_pop
-FROM events GROUP BY event_type
+_SQL_SUMMARY = """
+SELECT 'l_quantity' AS "column", count(l_quantity)::BIGINT AS n,
+       round(avg(l_quantity), 6) AS mean, round(stddev_pop(l_quantity), 6) AS std,
+       round(min(l_quantity), 6) AS min, round(quantile_cont(l_quantity, 0.5), 6) AS median,
+       round(max(l_quantity), 6) AS max FROM lineitem
+UNION ALL
+SELECT 'l_extendedprice', count(l_extendedprice)::BIGINT,
+       round(avg(l_extendedprice), 6), round(stddev_pop(l_extendedprice), 6),
+       round(min(l_extendedprice), 6), round(quantile_cont(l_extendedprice, 0.5), 6),
+       round(max(l_extendedprice), 6) FROM lineitem
+UNION ALL
+SELECT 'l_discount', count(l_discount)::BIGINT,
+       round(avg(l_discount), 6), round(stddev_pop(l_discount), 6),
+       round(min(l_discount), 6), round(quantile_cont(l_discount, 0.5), 6),
+       round(max(l_discount), 6) FROM lineitem
+ORDER BY "column"
 """
 
 
+@query(_SQL_SUMMARY, bench=False)
 def q_summary_stats_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8 — describe()-style per-column summary (count/mean/std/min/
     max/median) as explicit aggregates (exact percentile so the oracle
@@ -6281,40 +6287,6 @@ def q_summary_stats_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("column")
 
 
-_SQL_SUMMARY = """
-SELECT 'l_quantity' AS "column", count(l_quantity)::BIGINT AS n,
-       round(avg(l_quantity), 6) AS mean, round(stddev_pop(l_quantity), 6) AS std,
-       round(min(l_quantity), 6) AS min, round(quantile_cont(l_quantity, 0.5), 6) AS median,
-       round(max(l_quantity), 6) AS max FROM lineitem
-UNION ALL
-SELECT 'l_extendedprice', count(l_extendedprice)::BIGINT,
-       round(avg(l_extendedprice), 6), round(stddev_pop(l_extendedprice), 6),
-       round(min(l_extendedprice), 6), round(quantile_cont(l_extendedprice, 0.5), 6),
-       round(max(l_extendedprice), 6) FROM lineitem
-UNION ALL
-SELECT 'l_discount', count(l_discount)::BIGINT,
-       round(avg(l_discount), 6), round(stddev_pop(l_discount), 6),
-       round(min(l_discount), 6), round(quantile_cont(l_discount, 0.5), 6),
-       round(max(l_discount), 6) FROM lineitem
-ORDER BY "column"
-"""
-
-
-def q_knn_grid_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J10 — grid-bucketed KNN join on derived 2-D points, exact vs the
-    oracle's brute-force ranking (ties broken by neighbor id)."""
-    from ..operators.knn import knn_join_grid
-
-    pts = _derived_points(_t(spark, sf_dir, "events")).select(
-        F.col("event_id").alias("id"), F.col("lon").alias("x"), F.col("lat").alias("y")
-    )
-    q = pts.filter(F.col("id") < 200)
-    out = knn_join_grid(q, pts, k=5, cell=0.05)
-    return out.select(
-        "query_id", "neighbor_id", F.round("dist", 9).alias("dist"), "knn_rank"
-    )
-
-
 _SQL_KNN_GRID = f"""
 WITH p AS (SELECT event_id AS id,
                   -74.3 + (event_id % 1000) / 1000.0 * 0.6 AS x,
@@ -6333,28 +6305,17 @@ FROM ranked WHERE knn_rank <= 5
 """
 
 
-def q_dbscan_event_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M1 — distributed DBSCAN over derived event points in local meters
-    (eps=500 m, min_samples=5). The engine's labeling is fully
-    deterministic (cluster = min core-location id of the core
-    component; border → min adjacent cluster; exact-duplicate
-    coordinates contracted), so the oracle replays the complete
-    algorithm in SQL — location contraction, weighted degree, core
-    flagging, connected components as a recursive CTE, border
-    assignment — and the per-cluster census must match label-for-label.
-    The partition contract is additionally pytest-verified against a
-    pure-python reference (tests/test_dbscan.py)."""
-    from ..functions.geo import utm_xy_m
-    from ..operators.dbscan import dbscan
-
-    pts = _derived_points(_t(spark, sf_dir, "events"))
-    x, y = utm_xy_m("lat", "lon", zone=18)  # exact EPSG:32618, test.py:81
-    pts = pts.select(F.col("event_id").alias("id"), x.alias("x"), y.alias("y"))
-    labels = dbscan(pts, eps=500.0, min_samples=5)
-    return (
-        labels.groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("n_points"))
-        .orderBy(F.col("n_points").desc(), F.col("cluster").asc())
+@query(_SQL_KNN_GRID, bench=False)
+def q_knn_grid_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J10 — grid-bucketed KNN join on derived 2-D points, exact vs the
+    oracle's brute-force ranking (ties broken by neighbor id)."""
+    pts = _derived_points(_t(spark, sf_dir, "events")).select(
+        F.col("event_id").alias("id"), F.col("lon").alias("x"), F.col("lat").alias("y")
+    )
+    q = pts.filter(F.col("id") < 200)
+    out = knn.knn_join_grid(q, pts, k=5, cell=0.05)
+    return out.select(
+        "query_id", "neighbor_id", F.round("dist", 9).alias("dist"), "knn_rank"
     )
 
 
@@ -6397,21 +6358,26 @@ ORDER BY n_points DESC, cluster ASC
 """
 
 
-def q_utm_project_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2.8 geo scalars — exact UTM zone-18N (EPSG:32618) projection of
-    1,000 derived event points (reference: test.py:81,161 pyproj
-    Transformer to 32618). Karney/Krüger order-n⁶ series as pure column
-    expressions; the oracle replays the identical series in DuckDB SQL
-    (exp/ln-spelled hyperbolics). Rounded to cm — cross-libm trig
-    disagreement is ~1e-9 m, six orders below the rounding step."""
-    from ..functions.geo import utm_xy_m
-
-    pts = _derived_points(_t(spark, sf_dir, "events")).filter(F.col("event_id") < 1000)
-    x, y = utm_xy_m("lat", "lon", zone=18)
-    return pts.select(
-        "event_id",
-        F.round(x, 2).alias("easting_m"),
-        F.round(y, 2).alias("northing_m"),
+@query(_sql_dbscan())
+def q_dbscan_event_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """M1 — distributed DBSCAN over derived event points in local meters
+    (eps=500 m, min_samples=5). The engine's labeling is fully
+    deterministic (cluster = min core-location id of the core
+    component; border → min adjacent cluster; exact-duplicate
+    coordinates contracted), so the oracle replays the complete
+    algorithm in SQL — location contraction, weighted degree, core
+    flagging, connected components as a recursive CTE, border
+    assignment — and the per-cluster census must match label-for-label.
+    The partition contract is additionally pytest-verified against a
+    pure-python reference (tests/test_dbscan.py)."""
+    pts = _derived_points(_t(spark, sf_dir, "events"))
+    x, y = geo.utm_xy_m("lat", "lon", zone=18)  # exact EPSG:32618, test.py:81
+    pts = pts.select(F.col("event_id").alias("id"), x.alias("x"), y.alias("y"))
+    labels = dbscan.dbscan(pts, eps=500.0, min_samples=5)
+    return (
+        labels.groupBy("cluster")
+        .agg(F.count(F.lit(1)).alias("n_points"))
+        .orderBy(F.col("n_points").desc(), F.col("cluster").asc())
     )
 
 
@@ -6424,6 +6390,48 @@ FROM d WHERE event_id < 1000
 """
 
 
+@query(_SQL_UTM_PROJECT)
+def q_utm_project_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """2.8 geo scalars — exact UTM zone-18N (EPSG:32618) projection of
+    1,000 derived event points (reference: test.py:81,161 pyproj
+    Transformer to 32618). Karney/Krüger order-n⁶ series as pure column
+    expressions; the oracle replays the identical series in DuckDB SQL
+    (exp/ln-spelled hyperbolics). Rounded to cm — cross-libm trig
+    disagreement is ~1e-9 m, six orders below the rounding step."""
+    pts = _derived_points(_t(spark, sf_dir, "events")).filter(F.col("event_id") < 1000)
+    x, y = geo.utm_xy_m("lat", "lon", zone=18)
+    return pts.select(
+        "event_id",
+        F.round(x, 2).alias("easting_m"),
+        F.round(y, 2).alias("northing_m"),
+    )
+
+
+def _sql_web_mercator_tiles() -> str:
+    tx, ty = geo.slippy_tile_sql("lat", "lon", zoom=12)
+    pi_r = math.pi * geo.WGS84_A
+    return f"""
+WITH d AS ({_DERIVED_POINTS_SQL}),
+p AS (
+  SELECT {tx} AS tile_x, {ty} AS tile_y,
+         CAST(round(lat * 1000000) AS BIGINT) AS latu,
+         CAST(round(lon * 1000000) AS BIGINT) AS lonu
+  FROM d
+),
+g AS (
+  SELECT tile_x, tile_y, count(*) AS n,
+         round(sum(latu) / (1000000.0 * count(*)), 6) AS avg_lat,
+         round(sum(lonu) / (1000000.0 * count(*)), 6) AS avg_lon
+  FROM p GROUP BY tile_x, tile_y
+)
+SELECT tile_x, tile_y, n, avg_lat, avg_lon,
+       round({pi_r!r} * (2.0 * (tile_x + 0.5) / 4096.0 - 1.0), 2) AS center_x_m,
+       round({pi_r!r} * (1.0 - 2.0 * (tile_y + 0.5) / 4096.0), 2) AS center_y_m
+FROM g ORDER BY tile_x, tile_y
+"""
+
+
+@query(_sql_web_mercator_tiles())
 def q_web_mercator_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2.8 geo — EPSG:3857 web-mercator projection + OSM slippy-tile
     binning of the derived event points (reference lab2 nb cell 20,
@@ -6433,14 +6441,10 @@ def q_web_mercator_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds, immune to float reassociation across partitionings); one
     division at the end. Shape: two codegen expressions + one hash
     aggregate — no shuffle beyond the groupBy."""
-    from ..functions.geo import slippy_tile
-
-    from ..functions.geo import WGS84_A
-
     pts = _derived_points(_t(spark, sf_dir, "events"))
-    tx, ty = slippy_tile("lat", "lon", zoom=12)
+    tx, ty = geo.slippy_tile("lat", "lon", zoom=12)
     n_tiles = F.lit(float(1 << 12))
-    pi_r = F.lit(math.pi * WGS84_A)
+    pi_r = F.lit(math.pi * geo.WGS84_A)
     # tile centers in EPSG:3857 meters are LINEAR in the tile indices
     # (mercator y is the tiling axis), so the compared floats carry no
     # transcendentals — the asinh lives only inside floor() above,
@@ -6469,32 +6473,6 @@ def q_web_mercator_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_web_mercator_tiles() -> str:
-    from ..functions.geo import WGS84_A, slippy_tile_sql
-
-    tx, ty = slippy_tile_sql("lat", "lon", zoom=12)
-    pi_r = math.pi * WGS84_A
-    return f"""
-WITH d AS ({_DERIVED_POINTS_SQL}),
-p AS (
-  SELECT {tx} AS tile_x, {ty} AS tile_y,
-         CAST(round(lat * 1000000) AS BIGINT) AS latu,
-         CAST(round(lon * 1000000) AS BIGINT) AS lonu
-  FROM d
-),
-g AS (
-  SELECT tile_x, tile_y, count(*) AS n,
-         round(sum(latu) / (1000000.0 * count(*)), 6) AS avg_lat,
-         round(sum(lonu) / (1000000.0 * count(*)), 6) AS avg_lon
-  FROM p GROUP BY tile_x, tile_y
-)
-SELECT tile_x, tile_y, n, avg_lat, avg_lon,
-       round({pi_r!r} * (2.0 * (tile_x + 0.5) / 4096.0 - 1.0), 2) AS center_x_m,
-       round({pi_r!r} * (1.0 - 2.0 * (tile_y + 0.5) / 4096.0), 2) AS center_y_m
-FROM g ORDER BY tile_x, tile_y
-"""
-
-
 #: gazetteer synthesis constants — shared verbatim by the Spark plan
 #: and the DuckDB oracle so both engines geocode the same world
 _GEO_SYL1 = ["new", "port", "san", "east", "west", "lake", "fort", "mont"]
@@ -6505,9 +6483,7 @@ _GEO_PLACES_PER_NATION = 40
 def _geocode_norm(col) -> F.Column:
     """Geocoder name normalization: ASCII lowercase (translate-based —
     NOT Spark 4's ICU lower) + strip everything but [a-z0-9 ]."""
-    from ..functions.text import ascii_lower
-
-    return F.regexp_replace(ascii_lower(col), "[^a-z0-9 ]", "")
+    return F.regexp_replace(tx.ascii_lower(col), "[^a-z0-9 ]", "")
 
 
 def _gazetteer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6543,101 +6519,6 @@ def _gazetteer(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.lit(-180.0) + ((pid * 73) % 3600) / F.lit(10.0)).alias("lon"),
         )
     )
-
-
-def q_geocode_places(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S13/S14 — offline gazetteer geocoder (closes the last two
-    inventory rows; reference lab3a nb cell 8, json 302 ``ox.geocode``
-    resolved place names to lat/lon via a web service — here the same
-    contract runs against a persisted gazetteer dim table). Probe
-    names are customer-derived queries in three deterministic shapes:
-    exact, one-char-deleted (typo), and punctuation-noised. Resolution:
-    normalize → country-blocked exact equi-join on the broadcast
-    gazetteer; misses fall back to Jaro-Winkler best-match within the
-    SAME country block (≤40 candidates per probe — blocked, never
-    all-pairs), ranked (round(jw,6) DESC, place_id ASC) for
-    cross-engine determinism (the `jw_entity_resolution` convention;
-    oracle uses DuckDB's independent C++ jaro_winkler_similarity).
-    Scale: probes stream map-side against the broadcast gazetteer;
-    the only shuffle is the per-distinct-query argmax window over ≤40
-    rows (distinct queries are bounded by the gazetteer universe)."""
-    from ..functions.strings import jaro_winkler_pandas
-
-    gaz = _gazetteer(spark, sf_dir).withColumn(
-        "gname_norm", _geocode_norm(F.col("place_name"))
-    )
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") % 7 == 0)
-    probe_base = cust.select(
-        F.col("c_custkey").alias("probe_id"),
-        F.col("c_nationkey").cast("bigint").alias("nat"),
-        (
-            F.col("c_nationkey").cast("bigint") * 64
-            + (F.col("c_custkey") * 13) % _GEO_PLACES_PER_NATION
-        ).alias("target_pid"),
-        (F.col("c_custkey") % 3).alias("m"),
-    )
-    named = probe_base.join(
-        F.broadcast(gaz.select(F.col("place_id").alias("target_pid"), "place_name")),
-        "target_pid",
-    )
-    raw = F.col("place_name")
-    query = (
-        F.when(F.col("m") == 0, raw)
-        .when(F.col("m") == 1, F.concat(F.substring(raw, 1, 2), F.expr("substring(place_name, 4)")))
-        .otherwise(F.concat(raw, F.lit("!")))
-    )
-    probes = named.select(
-        "probe_id", "nat", _geocode_norm(query).alias("q_norm")
-    )
-    gsel = gaz.select("nat", "gname_norm", "place_id", "lat", "lon")
-    exact = probes.join(
-        F.broadcast(gsel),
-        (probes["nat"] == gsel["nat"]) & (probes["q_norm"] == gsel["gname_norm"]),
-    ).select(
-        "probe_id",
-        "place_id",
-        F.lit("exact").alias("method"),
-        F.lit(1.0).alias("score"),
-        "lat",
-        "lon",
-    )
-    missed = probes.join(exact.select("probe_id"), "probe_id", "left_anti")
-    # Fuzzy resolution is a pure function of (nat, q_norm): evaluate
-    # each DISTINCT missed query once against its ≤40-candidate country
-    # block (bounded by the gazetteer universe, so JW work stops
-    # growing with probe volume), then equi-join the resolved match
-    # back onto every probe (VERDICT r6 "What's wrong" #2). JW itself
-    # crosses to an Arrow-batched pandas scalar (~5 µs/pair vs ~0.4 ms
-    # for the codegen fold) — the §2.12-warranted crossing: this is the
-    # hot inner loop, distinct-queries × 40 candidates per batch.
-    dq = missed.select("nat", "q_norm").distinct()
-    fz = dq.join(F.broadcast(gsel), "nat").withColumn(
-        "jw", jaro_winkler_pandas("q_norm", "gname_norm")
-    )
-    w = Window.partitionBy("nat", "q_norm").orderBy(
-        F.desc(F.round("jw", 6)), F.asc("place_id")
-    )
-    best = (
-        fz.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(
-            "nat",
-            "q_norm",
-            "place_id",
-            F.round("jw", 6).alias("score"),
-            "lat",
-            "lon",
-        )
-    )
-    fuzzy = missed.join(best, ["nat", "q_norm"]).select(
-        "probe_id",
-        "place_id",
-        F.lit("fuzzy").alias("method"),
-        "score",
-        "lat",
-        "lon",
-    )
-    return exact.unionByName(fuzzy).orderBy("probe_id")
 
 
 def _sql_geocode_places() -> str:
@@ -6687,74 +6568,101 @@ SELECT * FROM exact UNION ALL SELECT * FROM fuzzy ORDER BY probe_id
 """
 
 
-_SNAP_CELL = 0.02  # degrees — snap radius AND candidate-grid cell size
-
-
-def q_snap_to_road(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Map-matching-lite (G3 extended): snap each event point to the
-    nearest road segment within 0.02° — exact point-to-segment
-    projection (clamped parametric t), candidates via a grid equi-join:
-    each street segment registers the cells of its bbox expanded by one
-    ring, each point probes its own cell, so every segment within the
-    snap radius is provably a candidate (no cross product). Long
-    connector segments (bbox diagonal > 0.05°) are generator artifacts
-    of the derived chain, excluded as non-streets. Output: per-type
-    snap census + mean snap distance. The oracle replays cell
-    registration, projection, and the min-distance tie-break."""
-    segs = _road_segments(spark, sf_dir).filter(
-        (F.abs(F.col("x2") - F.col("x1")) <= 0.05)
-        & (F.abs(F.col("y2") - F.col("y1")) <= 0.05)
+@query(_sql_geocode_places())
+def q_geocode_places(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S13/S14 — offline gazetteer geocoder (closes the last two
+    inventory rows; reference lab3a nb cell 8, json 302 ``ox.geocode``
+    resolved place names to lat/lon via a web service — here the same
+    contract runs against a persisted gazetteer dim table). Probe
+    names are customer-derived queries in three deterministic shapes:
+    exact, one-char-deleted (typo), and punctuation-noised. Resolution:
+    normalize → country-blocked exact equi-join on the broadcast
+    gazetteer; misses fall back to Jaro-Winkler best-match within the
+    SAME country block (≤40 candidates per probe — blocked, never
+    all-pairs), ranked (round(jw,6) DESC, place_id ASC) for
+    cross-engine determinism (the `jw_entity_resolution` convention;
+    oracle uses DuckDB's independent C++ jaro_winkler_similarity).
+    Scale: probes stream map-side against the broadcast gazetteer;
+    the only shuffle is the per-distinct-query argmax window over ≤40
+    rows (distinct queries are bounded by the gazetteer universe)."""
+    gaz = _gazetteer(spark, sf_dir).withColumn(
+        "gname_norm", _geocode_norm(F.col("place_name"))
     )
-    c = _SNAP_CELL
-    seg_cells = segs.select(
-        "*",
-        F.explode(
-            F.sequence(
-                F.floor(F.least("x1", "x2") / c).cast("bigint") - 1,
-                F.floor(F.greatest("x1", "x2") / c).cast("bigint") + 1,
-            )
-        ).alias("cx"),
+    cust = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") % 7 == 0)
+    probe_base = cust.select(
+        F.col("c_custkey").alias("probe_id"),
+        F.col("c_nationkey").cast("bigint").alias("nat"),
+        (
+            F.col("c_nationkey").cast("bigint") * 64
+            + (F.col("c_custkey") * 13) % _GEO_PLACES_PER_NATION
+        ).alias("target_pid"),
+        (F.col("c_custkey") % 3).alias("m"),
+    )
+    named = probe_base.join(
+        F.broadcast(gaz.select(F.col("place_id").alias("target_pid"), "place_name")),
+        "target_pid",
+    )
+    raw = F.col("place_name")
+    query = (
+        F.when(F.col("m") == 0, raw)
+        .when(F.col("m") == 1, F.concat(F.substring(raw, 1, 2), F.expr("substring(place_name, 4)")))
+        .otherwise(F.concat(raw, F.lit("!")))
+    )
+    probes = named.select(
+        "probe_id", "nat", _geocode_norm(query).alias("q_norm")
+    )
+    gsel = gaz.select("nat", "gname_norm", "place_id", "lat", "lon")
+    exact = probes.join(
+        F.broadcast(gsel),
+        (probes["nat"] == gsel["nat"]) & (probes["q_norm"] == gsel["gname_norm"]),
     ).select(
-        "*",
-        F.explode(
-            F.sequence(
-                F.floor(F.least("y1", "y2") / c).cast("bigint") - 1,
-                F.floor(F.greatest("y1", "y2") / c).cast("bigint") + 1,
-            )
-        ).alias("cy"),
+        "probe_id",
+        "place_id",
+        F.lit("exact").alias("method"),
+        F.lit(1.0).alias("score"),
+        "lat",
+        "lon",
     )
-    pts = _derived_points(_t(spark, sf_dir, "events")).select(
-        "event_id", "event_type", "lon", "lat",
-        F.floor(F.col("lon") / c).cast("bigint").alias("cx"),
-        F.floor(F.col("lat") / c).cast("bigint").alias("cy"),
+    missed = probes.join(exact.select("probe_id"), "probe_id", "left_anti")
+    # Fuzzy resolution is a pure function of (nat, q_norm): evaluate
+    # each DISTINCT missed query once against its ≤40-candidate country
+    # block (bounded by the gazetteer universe, so JW work stops
+    # growing with probe volume), then equi-join the resolved match
+    # back onto every probe (VERDICT r6 "What's wrong" #2). JW itself
+    # crosses to an Arrow-batched pandas scalar (~5 µs/pair vs ~0.4 ms
+    # for the codegen fold) — the §2.12-warranted crossing: this is the
+    # hot inner loop, distinct-queries × 40 candidates per batch.
+    dq = missed.select("nat", "q_norm").distinct()
+    fz = dq.join(F.broadcast(gsel), "nat").withColumn(
+        "jw", strings.jaro_winkler_pandas("q_norm", "gname_norm")
     )
-    j = pts.join(seg_cells, ["cx", "cy"])
-    dx = F.col("x2") - F.col("x1")
-    dy = F.col("y2") - F.col("y1")
-    len2 = dx * dx + dy * dy
-    t_raw = ((F.col("lon") - F.col("x1")) * dx + (F.col("lat") - F.col("y1")) * dy) / len2
-    t = F.greatest(F.lit(0.0), F.least(F.lit(1.0), t_raw))
-    px = F.col("x1") + t * dx
-    py = F.col("y1") + t * dy
-    dist = F.sqrt((F.col("lon") - px) * (F.col("lon") - px) + (F.col("lat") - py) * (F.col("lat") - py))
-    j = j.filter(len2 > 0).withColumn("snap_dist", dist).filter(F.col("snap_dist") <= c)
-    w = Window.partitionBy("event_id").orderBy(F.col("snap_dist").asc(), F.col("seg_id").asc())
+    w = Window.partitionBy("nat", "q_norm").orderBy(
+        F.desc(F.round("jw", 6)), F.asc("place_id")
+    )
     best = (
-        j.withColumn("rk", F.row_number().over(w))
+        fz.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") == 1)
-        .select("event_id", "event_type", "seg_id", "snap_dist")
-    )
-    return (
-        pts.select("event_id", "event_type")
-        .join(best.select("event_id", "snap_dist"), "event_id", "left")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("snap_dist").isNotNull().cast("bigint")).alias("n_snapped"),
-            F.coalesce(F.round(F.avg("snap_dist"), 6), F.lit(-1.0)).alias("avg_snap_dist"),
+        .select(
+            "nat",
+            "q_norm",
+            "place_id",
+            F.round("jw", 6).alias("score"),
+            "lat",
+            "lon",
         )
-        .orderBy("event_type")
     )
+    fuzzy = missed.join(best, ["nat", "q_norm"]).select(
+        "probe_id",
+        "place_id",
+        F.lit("fuzzy").alias("method"),
+        "score",
+        "lat",
+        "lon",
+    )
+    return exact.unionByName(fuzzy).orderBy("probe_id")
+
+
+_SNAP_CELL = 0.02  # degrees — snap radius AND candidate-grid cell size
 
 
 def _sql_snap_to_road() -> str:
@@ -6826,41 +6734,76 @@ GROUP BY p.event_type ORDER BY p.event_type
 """
 
 
-def q_hex_density_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A14/2.8-geo — hexagonal density binning (H3-style axial cells,
-    1 km circumradius) over UTM-projected event points: the hex twin of
-    `geo_grid_density`. Cube-rounding is exact column math; the oracle
-    recomputes projection + hex assignment + census independently.
-    Hexes with n ≥ 5 reported (boundary-stable: a cell's census moves
-    only if a point's cell flips, and both engines run identical
-    arithmetic)."""
-    from ..functions.geo import hex_cell, utm_xy_m
-
-    pts = _derived_points(_t(spark, sf_dir, "events"))
-    x, y = utm_xy_m("lat", "lon", zone=18)
-    # MATERIALIZE the two Karney projections behind a repartition
-    # barrier before hex assignment: hex_cell references each input
-    # ~8x, and Catalyst's projection collapse re-inlines a plain
-    # two-step select, so without the barrier every reference
-    # re-evaluates the full n^6 series (measured 5.1 s -> 1.4 s at
-    # sf0.1). The extra exchange moves 16 bytes/row — far cheaper than
-    # 8x the series — and the map-side partial agg after it still
-    # bounds the groupBy shuffle to one row per hex per task.
-    proj = pts.select(x.alias("_x"), y.alias("_y")).repartition(32)
-    q, r = hex_cell(F.col("_x"), F.col("_y"), 1000.0)
+@query(_sql_snap_to_road())
+def q_snap_to_road(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Map-matching-lite (G3 extended): snap each event point to the
+    nearest road segment within 0.02° — exact point-to-segment
+    projection (clamped parametric t), candidates via a grid equi-join:
+    each street segment registers the cells of its bbox expanded by one
+    ring, each point probes its own cell, so every segment within the
+    snap radius is provably a candidate (no cross product). Long
+    connector segments (bbox diagonal > 0.05°) are generator artifacts
+    of the derived chain, excluded as non-streets. Output: per-type
+    snap census + mean snap distance. The oracle replays cell
+    registration, projection, and the min-distance tie-break."""
+    segs = _road_segments(spark, sf_dir).filter(
+        (F.abs(F.col("x2") - F.col("x1")) <= 0.05)
+        & (F.abs(F.col("y2") - F.col("y1")) <= 0.05)
+    )
+    c = _SNAP_CELL
+    seg_cells = segs.select(
+        "*",
+        F.explode(
+            F.sequence(
+                F.floor(F.least("x1", "x2") / c).cast("bigint") - 1,
+                F.floor(F.greatest("x1", "x2") / c).cast("bigint") + 1,
+            )
+        ).alias("cx"),
+    ).select(
+        "*",
+        F.explode(
+            F.sequence(
+                F.floor(F.least("y1", "y2") / c).cast("bigint") - 1,
+                F.floor(F.greatest("y1", "y2") / c).cast("bigint") + 1,
+            )
+        ).alias("cy"),
+    )
+    pts = _derived_points(_t(spark, sf_dir, "events")).select(
+        "event_id", "event_type", "lon", "lat",
+        F.floor(F.col("lon") / c).cast("bigint").alias("cx"),
+        F.floor(F.col("lat") / c).cast("bigint").alias("cy"),
+    )
+    j = pts.join(seg_cells, ["cx", "cy"])
+    dx = F.col("x2") - F.col("x1")
+    dy = F.col("y2") - F.col("y1")
+    len2 = dx * dx + dy * dy
+    t_raw = ((F.col("lon") - F.col("x1")) * dx + (F.col("lat") - F.col("y1")) * dy) / len2
+    t = F.greatest(F.lit(0.0), F.least(F.lit(1.0), t_raw))
+    px = F.col("x1") + t * dx
+    py = F.col("y1") + t * dy
+    dist = F.sqrt((F.col("lon") - px) * (F.col("lon") - px) + (F.col("lat") - py) * (F.col("lat") - py))
+    j = j.filter(len2 > 0).withColumn("snap_dist", dist).filter(F.col("snap_dist") <= c)
+    w = Window.partitionBy("event_id").orderBy(F.col("snap_dist").asc(), F.col("seg_id").asc())
+    best = (
+        j.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") == 1)
+        .select("event_id", "event_type", "seg_id", "snap_dist")
+    )
     return (
-        proj.select(q.alias("hex_q"), r.alias("hex_r"))
-        .groupBy("hex_q", "hex_r")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 5)
-        .orderBy(F.col("n").desc(), "hex_q", "hex_r")
+        pts.select("event_id", "event_type")
+        .join(best.select("event_id", "snap_dist"), "event_id", "left")
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("snap_dist").isNotNull().cast("bigint")).alias("n_snapped"),
+            F.coalesce(F.round(F.avg("snap_dist"), 6), F.lit(-1.0)).alias("avg_snap_dist"),
+        )
+        .orderBy("event_type")
     )
 
 
 def _sql_hex_density() -> str:
-    from ..functions.geo import hex_cell_sql
-
-    qs, rs = hex_cell_sql(_UTM_X_SQL, _UTM_Y_SQL, 1000.0)
+    qs, rs = geo.hex_cell_sql(_UTM_X_SQL, _UTM_Y_SQL, 1000.0)
     return f"""
 WITH d AS ({_DERIVED_POINTS_SQL}),
 h AS (SELECT {qs} AS hex_q, {rs} AS hex_r FROM d)
@@ -6870,30 +6813,34 @@ ORDER BY n DESC, hex_q, hex_r
 """
 
 
-def q_sssp_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G4 — weighted SSSP from node 0 over a deterministic 20×20 grid
-    graph (edge weight = 1 + (src·dst mod 7)). The oracle replays the
-    full shortest-path computation as a recursive CTE: enumerate
-    (node, path-distance) states, dedup via UNION, prune at the
-    provable distance bound (a monotone staircase path has ≤38 edges of
-    weight ≤7 → every true shortest distance ≤266, so pruning partial
-    sums >266 never cuts a shortest-path prefix), then min per node.
-    Dijkstra-parity is additionally pytest-verified
-    (tests/test_graph.py)."""
-    from ..graph.algorithms import sssp
-
-    n = 20
-    ids = spark.range(n * n).select(F.col("id").cast("bigint"))
-    right = ids.filter((F.col("id") % n) < n - 1).select(
-        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+@query(_sql_hex_density())
+def q_hex_density_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A14/2.8-geo — hexagonal density binning (H3-style axial cells,
+    1 km circumradius) over UTM-projected event points: the hex twin of
+    `geo_grid_density`. Cube-rounding is exact column math; the oracle
+    recomputes projection + hex assignment + census independently.
+    Hexes with n ≥ 5 reported (boundary-stable: a cell's census moves
+    only if a point's cell flips, and both engines run identical
+    arithmetic)."""
+    pts = _derived_points(_t(spark, sf_dir, "events"))
+    x, y = geo.utm_xy_m("lat", "lon", zone=18)
+    # MATERIALIZE the two Karney projections behind a repartition
+    # barrier before hex assignment: hex_cell references each input
+    # ~8x, and Catalyst's projection collapse re-inlines a plain
+    # two-step select, so without the barrier every reference
+    # re-evaluates the full n^6 series (measured 5.1 s -> 1.4 s at
+    # sf0.1). The extra exchange moves 16 bytes/row — far cheaper than
+    # 8x the series — and the map-side partial agg after it still
+    # bounds the groupBy shuffle to one row per hex per task.
+    proj = pts.select(x.alias("_x"), y.alias("_y")).repartition(32)
+    q, r = geo.hex_cell(F.col("_x"), F.col("_y"), 1000.0)
+    return (
+        proj.select(q.alias("hex_q"), r.alias("hex_r"))
+        .groupBy("hex_q", "hex_r")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") >= 5)
+        .orderBy(F.col("n").desc(), "hex_q", "hex_r")
     )
-    down = ids.filter(F.col("id") < n * (n - 1)).select(
-        F.col("id").alias("src"), (F.col("id") + n).alias("dst")
-    )
-    edges = right.unionByName(down).withColumn(
-        "weight", (F.lit(1) + (F.col("src") * F.col("dst")) % 7).cast("double")
-    )
-    return sssp(edges, 0, directed=False).orderBy("id")
 
 
 _SQL_SSSP_GRID = """
@@ -6918,28 +6865,23 @@ SELECT id, min(dist) AS dist FROM walk GROUP BY id ORDER BY id
 """
 
 
-def q_shortest_path_route_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G4 route reconstruction — the actual shortest node sequence
-    0→399 on the deterministic 20×20 grid graph (``nx.shortest_path``
-    parity: the reference returns the 16-node ESB→Times-Sq route, lab3a
-    nb cell 8, json 302, not just its length). Tree-edge predecessors
-    (dist(u)+w = dist(v), min-id tie-break) are derived distributedly;
-    the oracle replays distances via the bounded recursive CTE, the
-    same predecessor rule, and a recursive backtrack."""
-    from ..graph.algorithms import shortest_path_route
-
+@query(_SQL_SSSP_GRID, bench=False)
+def q_sssp_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """G4 — weighted SSSP from node 0 over a deterministic 20×20 grid
+    graph (edge weight = 1 + (src·dst mod 7)). The oracle replays the
+    full shortest-path computation as a recursive CTE: enumerate
+    (node, path-distance) states, dedup via UNION, prune at the
+    provable distance bound (a monotone staircase path has ≤38 edges of
+    weight ≤7 → every true shortest distance ≤266, so pruning partial
+    sums >266 never cuts a shortest-path prefix), then min per node.
+    Dijkstra-parity is additionally pytest-verified
+    (tests/test_graph.py)."""
     n = 20
-    ids = spark.range(n * n).select(F.col("id").cast("bigint"))
-    right = ids.filter((F.col("id") % n) < n - 1).select(
-        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
-    )
-    down = ids.filter(F.col("id") < n * (n - 1)).select(
-        F.col("id").alias("src"), (F.col("id") + n).alias("dst")
-    )
-    edges = right.unionByName(down).withColumn(
+    _, grid = _grid_graph(spark, n)
+    edges = grid.withColumn(
         "weight", (F.lit(1) + (F.col("src") * F.col("dst")) % 7).cast("double")
     )
-    return shortest_path_route(edges, 0, n * n - 1, directed=False).orderBy("seq")
+    return ga.sssp(edges, 0, directed=False).orderBy("id")
 
 
 _SQL_ROUTE_GRID = """
@@ -6984,31 +6926,21 @@ ORDER BY seq
 """
 
 
-def q_network_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G7/G8 composite — the lab-3 network scorecard (sta_html.py:33-36
-    golden shape: node/edge counts, avg degree 4.29, endpoints deg=1,
-    intersections deg≥3 = 97.2%) over the part–supplier bipartite graph.
-    Single hash-agg over the degree table; map-side partial agg, one
-    exchange."""
-    from ..graph.algorithms import degrees
-
-    li = _t(spark, sf_dir, "lineitem")
-    edges = li.select(
-        (F.col("l_partkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    ).distinct()
-    deg = degrees(edges)
-    return deg.agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        (F.sum("degree") / 2).cast("bigint").alias("n_edges"),
-        F.round(F.avg("degree"), 6).alias("avg_degree"),
-        F.round(F.avg((F.col("degree") == 1).cast("double")) * 100, 6).alias(
-            "pct_endpoints"
-        ),
-        F.round(F.avg((F.col("degree") >= 3).cast("double")) * 100, 6).alias(
-            "pct_intersections"
-        ),
+@query(_SQL_ROUTE_GRID)
+def q_shortest_path_route_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """G4 route reconstruction — the actual shortest node sequence
+    0→399 on the deterministic 20×20 grid graph (``nx.shortest_path``
+    parity: the reference returns the 16-node ESB→Times-Sq route, lab3a
+    nb cell 8, json 302, not just its length). Tree-edge predecessors
+    (dist(u)+w = dist(v), min-id tie-break) are derived distributedly;
+    the oracle replays distances via the bounded recursive CTE, the
+    same predecessor rule, and a recursive backtrack."""
+    n = 20
+    _, grid = _grid_graph(spark, n)
+    edges = grid.withColumn(
+        "weight", (F.lit(1) + (F.col("src") * F.col("dst")) % 7).cast("double")
     )
+    return ga.shortest_path_route(edges, 0, n * n - 1, directed=False).orderBy("seq")
 
 
 _SQL_NETWORK_SUMMARY = """
@@ -7024,57 +6956,29 @@ FROM deg
 """
 
 
-def q_bias_audit_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lab-4 bias-audit composite (analyze_data_bias.py:49-517): the
-    dataset scorecard the reference prints ("score 2/9, low") —
-    coverage (customers with ≥1 order, J4/A9), concentration (top-20%
-    most-active customers' share of orders, A15 Pareto via the
-    range-partitioned two-phase row_number), temporal imbalance (max
-    month share), and the flag-count bias score. Scalar stats collect
-    to literals (two-phase, SURVEY §4.3); the ranked share never
-    single-partitions."""
-    from ..operators.two_phase import global_row_number
-
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    counts = orders.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n"))
-    n_cust = cust.count()
-    n_active, total_orders = counts.agg(
-        F.count(F.lit(1)), F.sum("n")
-    ).first()
-    k = -(-n_active // 5)  # ceil(0.2 * n_active)
-    ranked = global_row_number(
-        counts, [F.col("n").desc(), F.col("o_custkey").asc()], out="rn"
-    )
-    top_n = ranked.filter(F.col("rn") <= k).agg(F.sum("n")).first()[0]
-    max_month, _tot = (
-        orders.groupBy(F.date_trunc("month", "o_orderdate").alias("m"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .agg(F.max("cnt"), F.sum("cnt"))
-        .first()
-    )
-    coverage_pct = n_active * 100.0 / n_cust
-    top20_share_pct = top_n * 100.0 / total_orders
-    max_month_share_pct = max_month * 100.0 / total_orders
-    score = int(top20_share_pct > 50) + int(coverage_pct < 99) + int(
-        max_month_share_pct > 20
-    )
-    return local_frame(
-        spark,
-        [
-            (
-                int(n_cust),
-                int(n_active),
-                round(coverage_pct, 6),
-                int(k),
-                round(top20_share_pct, 6),
-                round(max_month_share_pct, 6),
-                score,
-            )
-        ],
-        "n_customers bigint, n_active bigint, coverage_pct double, "
-        "top20_n bigint, top20_share_pct double, max_month_share_pct double, "
-        "bias_score bigint",
+@query(_SQL_NETWORK_SUMMARY)
+def q_network_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """G7/G8 composite — the lab-3 network scorecard (sta_html.py:33-36
+    golden shape: node/edge counts, avg degree 4.29, endpoints deg=1,
+    intersections deg≥3 = 97.2%) over the part–supplier bipartite graph.
+    Single hash-agg over the degree table; map-side partial agg, one
+    exchange."""
+    li = _t(spark, sf_dir, "lineitem")
+    edges = li.select(
+        (F.col("l_partkey") * 2).alias("src"),
+        (F.col("l_suppkey") * 2 + 1).alias("dst"),
+    ).distinct()
+    deg = ga.degrees(edges)
+    return deg.agg(
+        F.count(F.lit(1)).alias("n_nodes"),
+        (F.sum("degree") / 2).cast("bigint").alias("n_edges"),
+        F.round(F.avg("degree"), 6).alias("avg_degree"),
+        F.round(F.avg((F.col("degree") == 1).cast("double")) * 100, 6).alias(
+            "pct_endpoints"
+        ),
+        F.round(F.avg((F.col("degree") >= 3).cast("double")) * 100, 6).alias(
+            "pct_intersections"
+        ),
     )
 
 
@@ -7106,28 +7010,56 @@ FROM tot, act, top20, mon
 """
 
 
-def q_lab1_noise_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed Lab-1 pipeline (SURVEY §3.1) on the events table:
-    type filter → bbox filter → hourly counts → μ+2σ anomaly → 2-hour-gap
-    sessionization → per-session stats, ordered by peak size.
-    One lazy DAG end-to-end."""
-    ev = _derived_points(_t(spark, sf_dir, "events"))
-    cleaned = ev.filter(
-        (F.col("event_type") == "error")
-        & in_bbox("lat", "lon", 40.55, 40.95, -74.25, -73.75)
+@query(_SQL_BIAS_AUDIT)
+def q_bias_audit_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lab-4 bias-audit composite (analyze_data_bias.py:49-517): the
+    dataset scorecard the reference prints ("score 2/9, low") —
+    coverage (customers with ≥1 order, J4/A9), concentration (top-20%
+    most-active customers' share of orders, A15 Pareto via the
+    range-partitioned two-phase row_number), temporal imbalance (max
+    month share), and the flag-count bias score. Scalar stats collect
+    to literals (two-phase, SURVEY §4.3); the ranked share never
+    single-partitions."""
+    orders = _t(spark, sf_dir, "orders")
+    cust = _t(spark, sf_dir, "customer")
+    counts = orders.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n"))
+    n_cust = cust.count()
+    n_active, total_orders = counts.agg(
+        F.count(F.lit(1)), F.sum("n")
+    ).first()
+    k = -(-n_active // 5)  # ceil(0.2 * n_active)
+    ranked = tp.global_row_number(
+        counts, [F.col("n").desc(), F.col("o_custkey").asc()], out="rn"
     )
-    hourly = sz.hourly_counts(cleaned, "ts")
-    dense = sz.anomaly_threshold_filter(hourly, sigmas=1.0)
-    sessions = sz.sessionize(dense, "bucket_ts", gap_minutes=120.0)
-    return (
-        sessions.groupBy("session_id")
-        .agg(
-            F.min("bucket_ts").alias("start_time"),
-            F.max("bucket_ts").alias("end_time"),
-            F.max("n").alias("max_count"),
-            F.round(F.avg("n"), 6).alias("avg_count"),
-        )
-        .orderBy(F.col("max_count").desc(), F.col("start_time").asc())
+    top_n = ranked.filter(F.col("rn") <= k).agg(F.sum("n")).first()[0]
+    max_month, _tot = (
+        orders.groupBy(F.date_trunc("month", "o_orderdate").alias("m"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .agg(F.max("cnt"), F.sum("cnt"))
+        .first()
+    )
+    coverage_pct = n_active * 100.0 / n_cust
+    top20_share_pct = top_n * 100.0 / total_orders
+    max_month_share_pct = max_month * 100.0 / total_orders
+    score = int(top20_share_pct > 50) + int(coverage_pct < 99) + int(
+        max_month_share_pct > 20
+    )
+    return tb.local_frame(
+        spark,
+        [
+            (
+                int(n_cust),
+                int(n_active),
+                round(coverage_pct, 6),
+                int(k),
+                round(top20_share_pct, 6),
+                round(max_month_share_pct, 6),
+                score,
+            )
+        ],
+        "n_customers bigint, n_active bigint, coverage_pct double, "
+        "top20_n bigint, top20_share_pct double, max_month_share_pct double, "
+        "bias_score bigint",
     )
 
 
@@ -7159,26 +7091,29 @@ ORDER BY max_count DESC, start_time ASC
 """
 
 
-def q_kde_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A13 — Gaussian-smoothed 2-D density surface: bin derived points
-    to 0.05° cells, convolve with a 3×3 binomial stencil (neighbor-
-    offset explode + re-aggregate; grid-sized, point-count-free second
-    pass). Summarized per gx stripe to keep the result compact."""
-    from ..operators.kde import kde_grid
-
-    pts = _derived_points(_t(spark, sf_dir, "events"))
-    pts = pts.filter(in_bbox("lat", "lon", 40.55, 40.95, -74.25, -73.75))
-    gx, gy = grid_cell("lat", "lon", 40.5, -74.3, 0.05)
-    pts = pts.withColumn("gx", gx).withColumn("gy", gy)
-    surface = kde_grid(pts, "gx", "gy")
+@query(_SQL_LAB1)
+def q_lab1_noise_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Composed Lab-1 pipeline (SURVEY §3.1) on the events table:
+    type filter → bbox filter → hourly counts → μ+2σ anomaly → 2-hour-gap
+    sessionization → per-session stats, ordered by peak size.
+    One lazy DAG end-to-end."""
+    ev = _derived_points(_t(spark, sf_dir, "events"))
+    cleaned = ev.filter(
+        (F.col("event_type") == "error")
+        & geo.in_bbox("lat", "lon", 40.55, 40.95, -74.25, -73.75)
+    )
+    hourly = sz.hourly_counts(cleaned, "ts")
+    dense = sz.anomaly_threshold_filter(hourly, sigmas=1.0)
+    sessions = sz.sessionize(dense, "bucket_ts", gap_minutes=120.0)
     return (
-        surface.groupBy("gx")
+        sessions.groupBy("session_id")
         .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            F.round(F.sum("density"), 6).alias("total_density"),
-            F.round(F.max("density"), 6).alias("peak_density"),
+            F.min("bucket_ts").alias("start_time"),
+            F.max("bucket_ts").alias("end_time"),
+            F.max("n").alias("max_count"),
+            F.round(F.avg("n"), 6).alias("avg_count"),
         )
-        .orderBy("gx")
+        .orderBy(F.col("max_count").desc(), F.col("start_time").asc())
     )
 
 
@@ -7204,47 +7139,25 @@ FROM surface GROUP BY gx ORDER BY gx
 """
 
 
-def q_lab2_taxi_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed Lab-2 feature pipeline (SURVEY §3.2) on the events
-    table: 3σ outlier filter (F11, two-phase) → time features (hour,
-    Monday=0 dow, weekend flag, rule-based time-interval bucket) →
-    trip geometry (haversine 3dp / bearing / manhattan between the
-    derived pickup point and a second derived dropoff point) → log1p
-    target → one-hot time_interval (M5) → per-event_type feature
-    summary. One lazy DAG after the scalar-stat collect."""
-    from ..functions.stats import three_sigma_bounds
-    from ..ml.features import one_hot
-
-    ev = _derived_points(_t(spark, sf_dir, "events"))
-    ev = ev.withColumn(
-        "lon2", F.lit(-74.3) + ((F.col("event_id") * 3) % 1000) / F.lit(1000.0) * F.lit(0.6)
-    ).withColumn(
-        "lat2", F.lit(40.5) + ((F.col("event_id") * 11) % 1000) / F.lit(1000.0) * F.lit(0.5)
-    )
-    _, hi = three_sigma_bounds(ev, "value")
-    feats = (
-        ev.filter((F.col("value") >= 0) & (F.col("value") <= F.lit(hi)))
-        .withColumn("hour", F.hour("ts"))
-        .withColumn("dow", temporal.dayofweek_monday0("ts"))
-        .withColumn("is_weekend", temporal.is_weekend("ts"))
-        .withColumn("ti", temporal.time_interval_bucket("ts"))
-        .withColumn("hav_km", haversine_km("lat", "lon", "lat2", "lon2", decimals=3))
-        .withColumn("log_value", F.log1p("value"))
-    )
-    feats = one_hot(feats, "ti", ["morning_peak", "evening_peak", "day", "night"])
+@query(_SQL_KDE)
+def q_kde_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A13 — Gaussian-smoothed 2-D density surface: bin derived points
+    to 0.05° cells, convolve with a 3×3 binomial stencil (neighbor-
+    offset explode + re-aggregate; grid-sized, point-count-free second
+    pass). Summarized per gx stripe to keep the result compact."""
+    pts = _derived_points(_t(spark, sf_dir, "events"))
+    pts = pts.filter(geo.in_bbox("lat", "lon", 40.55, 40.95, -74.25, -73.75))
+    gx, gy = geo.grid_cell("lat", "lon", 40.5, -74.3, 0.05)
+    pts = pts.withColumn("gx", gx).withColumn("gy", gy)
+    surface = kde.kde_grid(pts, "gx", "gy")
     return (
-        feats.groupBy("event_type")
+        surface.groupBy("gx")
         .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg("hav_km"), 6).alias("avg_hav_km"),
-            F.round(F.avg("log_value"), 6).alias("avg_log_value"),
-            F.round(F.avg("is_weekend"), 6).alias("weekend_share"),
-            F.sum("ti_morning_peak").alias("n_morning_peak"),
-            F.sum("ti_evening_peak").alias("n_evening_peak"),
-            F.sum("ti_day").alias("n_day"),
-            F.sum("ti_night").alias("n_night"),
+            F.count(F.lit(1)).alias("n_cells"),
+            F.round(F.sum("density"), 6).alias("total_density"),
+            F.round(F.max("density"), 6).alias("peak_density"),
         )
-        .orderBy("event_type")
+        .orderBy("gx")
     )
 
 
@@ -7284,6 +7197,48 @@ FROM f GROUP BY event_type ORDER BY event_type
 """
 
 
+@query(_SQL_LAB2)
+def q_lab2_taxi_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Composed Lab-2 feature pipeline (SURVEY §3.2) on the events
+    table: 3σ outlier filter (F11, two-phase) → time features (hour,
+    Monday=0 dow, weekend flag, rule-based time-interval bucket) →
+    trip geometry (haversine 3dp / bearing / manhattan between the
+    derived pickup point and a second derived dropoff point) → log1p
+    target → one-hot time_interval (M5) → per-event_type feature
+    summary. One lazy DAG after the scalar-stat collect."""
+    ev = _derived_points(_t(spark, sf_dir, "events"))
+    ev = ev.withColumn(
+        "lon2", F.lit(-74.3) + ((F.col("event_id") * 3) % 1000) / F.lit(1000.0) * F.lit(0.6)
+    ).withColumn(
+        "lat2", F.lit(40.5) + ((F.col("event_id") * 11) % 1000) / F.lit(1000.0) * F.lit(0.5)
+    )
+    _, hi = st.three_sigma_bounds(ev, "value")
+    feats = (
+        ev.filter((F.col("value") >= 0) & (F.col("value") <= F.lit(hi)))
+        .withColumn("hour", F.hour("ts"))
+        .withColumn("dow", temporal.dayofweek_monday0("ts"))
+        .withColumn("is_weekend", temporal.is_weekend("ts"))
+        .withColumn("ti", temporal.time_interval_bucket("ts"))
+        .withColumn("hav_km", geo.haversine_km("lat", "lon", "lat2", "lon2", decimals=3))
+        .withColumn("log_value", F.log1p("value"))
+    )
+    feats = mf.one_hot(feats, "ti", ["morning_peak", "evening_peak", "day", "night"])
+    return (
+        feats.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.avg("hav_km"), 6).alias("avg_hav_km"),
+            F.round(F.avg("log_value"), 6).alias("avg_log_value"),
+            F.round(F.avg("is_weekend"), 6).alias("weekend_share"),
+            F.sum("ti_morning_peak").alias("n_morning_peak"),
+            F.sum("ti_evening_peak").alias("n_evening_peak"),
+            F.sum("ti_day").alias("n_day"),
+            F.sum("ti_night").alias("n_night"),
+        )
+        .orderBy("event_type")
+    )
+
+
 _LAB2_K, _LAB2_ITERS = 4, 4
 
 
@@ -7303,16 +7258,6 @@ def _lab2_pipeline_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     fill mean) are fitted artifacts applied to both splits — the
     manual fit/transform distinction the reference implements (lab2 nb
     cells 16, 20)."""
-    from ..ml.lloyd import _argmin_cid, lloyd_kmeans
-    from ..sources.raster import (
-        RASTER_NODATA,
-        RASTER_T,
-        raster_valid_mean,
-        sample_raster_tiled,
-        synthetic_raster,
-        tiled_raster_df,
-    )
-
     ev = _derived_points(_t(spark, sf_dir, "events"))
     pts = (
         ev.withColumn(
@@ -7335,7 +7280,7 @@ def _lab2_pipeline_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("dow", temporal.dayofweek_monday0("ts"))
         .withColumn("is_weekend", temporal.is_weekend("ts"))
         .withColumn("ti", temporal.time_interval_bucket("ts"))
-        .withColumn("hav_km", haversine_km("lat", "lon", "lat2", "lon2", decimals=3))
+        .withColumn("hav_km", geo.haversine_km("lat", "lon", "lat2", "lon2", decimals=3))
         .withColumn("log_value", F.log1p("value"))
         .withColumn("dt", F.to_date("ts"))
     )
@@ -7358,11 +7303,11 @@ def _lab2_pipeline_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # M3 fit-on-train: exact Lloyd on the integer lattice behind the
     # derived lon/lat (bijective affine), bit-replayable by the oracle
     train_lattice = feats.filter("is_train").select("event_id", *_event_lattice())
-    _, centers = lloyd_kmeans(
+    _, centers = lloyd.lloyd_kmeans(
         train_lattice, "event_id", ["x", "y"], k=_LAB2_K, iters=_LAB2_ITERS
     )
     feats = feats.select("*", *_event_lattice())
-    feats = feats.withColumn("zone", _argmin_cid(centers, ["x", "y"]))
+    feats = feats.withColumn("zone", lloyd._argmin_cid(centers, ["x", "y"]))
     # A6/J9 fit-on-train: per-zone mean speed, global-mean fill
     feats = feats.withColumn(
         "speed_kmh", F.col("hav_km") / ((F.col("value") + 1) / F.lit(3600.0))
@@ -7379,45 +7324,19 @@ def _lab2_pipeline_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "zone_speed", F.coalesce(F.col("zone_speed_raw"), F.lit(fill))
     )
     # J7: population density at the pickup point (tiled JVM path)
-    arr = synthetic_raster()
-    feats = sample_raster_tiled(
+    arr = raster.synthetic_raster()
+    feats = raster.sample_raster_tiled(
         feats,
-        tiled_raster_df(spark),
-        RASTER_T,
-        RASTER_NODATA,
-        fill=raster_valid_mean(arr, RASTER_NODATA),
+        raster.tiled_raster_df(spark),
+        raster.RASTER_T,
+        raster.RASTER_NODATA,
+        fill=raster.raster_valid_mean(arr, raster.RASTER_NODATA),
         out="pop_density",
     )
     return feats
 
 
-def q_lab2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic Lab-2 composite (SURVEY §3.2 end-to-end): the full
-    fitted-feature matrix summarized per event_type — the oracle replays
-    split, train-fitted 3σ bound, time/weather/haversine features, all
-    KMeans iterations, zone speeds, and raster sampling in SQL."""
-    feats = _lab2_pipeline_features(spark, sf_dir)
-    return (
-        feats.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("is_train").cast("bigint")).alias("n_train"),
-            F.round(F.avg("log_value"), 6).alias("avg_log_value"),
-            F.round(F.avg("hav_km"), 6).alias("avg_hav_km"),
-            F.round(F.avg("zone_speed"), 6).alias("avg_zone_speed"),
-            F.round(F.avg("pop_density"), 6).alias("avg_pop_density"),
-            F.round(F.avg("temp_c"), 6).alias("avg_temp_c"),
-            F.round(F.avg(F.col("is_weekend").cast("double")), 6).alias("weekend_share"),
-            F.sum((F.col("ti") == "morning_peak").cast("bigint")).alias("n_morning_peak"),
-            F.sum((F.col("ti") == "evening_peak").cast("bigint")).alias("n_evening_peak"),
-        )
-        .orderBy("event_type")
-    )
-
-
 def _sql_lab2_pipeline() -> str:
-    from ..sources.raster import raster_value_sql
-
     iters = _LAB2_ITERS
     return f"""
 WITH d AS ({_DERIVED_POINTS_SQL}),
@@ -7446,7 +7365,7 @@ feats AS (
          ln(1 + value) AS log_value,
          ((dayofyear(ts::DATE) * 17) % 35 - 5)::DOUBLE AS temp_c,
          {_SQL_EVENT_LATTICE},
-         {raster_value_sql('lon', 'lat')} AS pop
+         {raster.raster_value_sql('lon', 'lat')} AS pop
   FROM pts, s WHERE value >= 0 AND value <= hi
 ),
 kpts AS (SELECT event_id AS id, x, y FROM feats WHERE is_train),
@@ -7483,6 +7402,31 @@ FROM fin GROUP BY event_type ORDER BY event_type
 """
 
 
+@query(_sql_lab2_pipeline())
+def q_lab2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic Lab-2 composite (SURVEY §3.2 end-to-end): the full
+    fitted-feature matrix summarized per event_type — the oracle replays
+    split, train-fitted 3σ bound, time/weather/haversine features, all
+    KMeans iterations, zone speeds, and raster sampling in SQL."""
+    feats = _lab2_pipeline_features(spark, sf_dir)
+    return (
+        feats.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("is_train").cast("bigint")).alias("n_train"),
+            F.round(F.avg("log_value"), 6).alias("avg_log_value"),
+            F.round(F.avg("hav_km"), 6).alias("avg_hav_km"),
+            F.round(F.avg("zone_speed"), 6).alias("avg_zone_speed"),
+            F.round(F.avg("pop_density"), 6).alias("avg_pop_density"),
+            F.round(F.avg("temp_c"), 6).alias("avg_temp_c"),
+            F.round(F.avg(F.col("is_weekend").cast("double")), 6).alias("weekend_share"),
+            F.sum((F.col("ti") == "morning_peak").cast("bigint")).alias("n_morning_peak"),
+            F.sum((F.col("ti") == "evening_peak").cast("bigint")).alias("n_evening_peak"),
+        )
+        .orderBy("event_type")
+    )
+
+
 def _lab2_pipeline_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lab-2 ML tail (M7/M8/M9 over the VERDICT-r1-#7 composite): GBT
     on the fully-fitted feature matrix (time + weather + zone-speed +
@@ -7490,8 +7434,6 @@ def _lab2_pipeline_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     split, metrics on the held-out split. Stochastic learner →
     rows-only; an R² floor on this exact pipeline is pytest-enforced
     (tests/test_ml.py)."""
-    from ..ml.pipeline import gbt_fit, gbt_predict, regression_metrics
-
     feats = _lab2_pipeline_features(spark, sf_dir).withColumn(
         "is_weekend_d", F.col("is_weekend").cast("double")
     )
@@ -7515,9 +7457,9 @@ def _lab2_pipeline_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     train = feats.filter("is_train")
     valid = feats.filter("NOT is_train")
-    model = gbt_fit(train, fcols, "log_duration", max_iter=10, max_depth=4)
-    pred = gbt_predict(model, valid, fcols)
-    m = regression_metrics(pred, "log_duration", "prediction", log_space=True)
+    model = mlp.gbt_fit(train, fcols, "log_duration", max_iter=10, max_depth=4)
+    pred = mlp.gbt_predict(model, valid, fcols)
+    m = mlp.regression_metrics(pred, "log_duration", "prediction", log_space=True)
     return m.select(*[F.round(F.col(c), 4).alias(c) for c in m.columns])
 
 
@@ -7533,6 +7475,14 @@ def _lab2_pipeline_model(spark: SparkSession, sf_dir: str) -> DataFrame:
 # empty split, collapsed clusters, sign-flipped R²) fails the hash.
 
 
+_SQL_GBT_BAND = """
+SELECT * FROM (VALUES ('mae_finite_positive', true), ('r2_above_half', true),
+                      ('rmsle_below_half', true)) AS t(band, ok)
+ORDER BY band
+"""
+
+
+@query(_SQL_GBT_BAND, bench=False)
 def q_gbt_band_lab2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded twin of lab2_pipeline_model (M7/M9): the physics-derived
     duration target must be learned (R² > 0.5), log-space error bounded
@@ -7543,16 +7493,17 @@ def q_gbt_band_lab2(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("r2_above_half", bool(m["r2"] > 0.5)),
         ("rmsle_below_half", bool(m["rmsle"] < 0.5)),
     ]
-    return local_frame(spark, rows, "band string, ok boolean").orderBy("band")
+    return tb.local_frame(spark, rows, "band string, ok boolean").orderBy("band")
 
 
-_SQL_GBT_BAND = """
-SELECT * FROM (VALUES ('mae_finite_positive', true), ('r2_above_half', true),
-                      ('rmsle_below_half', true)) AS t(band, ok)
+_SQL_PARAM_SEARCH_BAND = """
+SELECT * FROM (VALUES ('all_rmse_positive', true), ('best_is_minimum', true),
+                      ('grid_fully_explored', true)) AS t(band, ok)
 ORDER BY band
 """
 
 
+@query(_SQL_PARAM_SEARCH_BAND, bench=False)
 def q_param_search_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded twin of param_search_gbt (M8): the grid is fully explored
     (candidate count = grid size), every candidate produced a finite
@@ -7569,23 +7520,22 @@ def q_param_search_band(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("best_is_minimum", bool(abs(agg["best_rmse"] - agg["min_rmse"]) < 1e-12)),
         ("grid_fully_explored", bool(agg["n"] == 4)),
     ]
-    return local_frame(spark, rows, "band string, ok boolean").orderBy("band")
+    return tb.local_frame(spark, rows, "band string, ok boolean").orderBy("band")
 
 
-_SQL_PARAM_SEARCH_BAND = """
-SELECT * FROM (VALUES ('all_rmse_positive', true), ('best_is_minimum', true),
-                      ('grid_fully_explored', true)) AS t(band, ok)
+_SQL_IMPORTANCES_BAND = """
+SELECT * FROM (VALUES ('all_nonnegative', true), ('one_per_feature', true),
+                      ('sums_to_one', true), ('top_feature_is_distance', true)) AS t(band, ok)
 ORDER BY band
 """
 
 
+@query(_SQL_IMPORTANCES_BAND, bench=False)
 def q_importances_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded twin of feature_importances (M10): importances are a
     probability vector (sum 1 ± 1e-6, all ≥ 0, one per feature) and the
     dominant distance feature carries the most signal for the
     physics-derived target."""
-    from ..ml.pipeline import gbt_fit
-
     feats = _lab2_pipeline_features(spark, sf_dir).withColumn(
         "is_weekend_d", F.col("is_weekend").cast("double")
     )
@@ -7599,7 +7549,7 @@ def q_importances_band(spark: SparkSession, sf_dir: str) -> DataFrame:
         "log_duration", F.log1p(F.col("hav_km") / speed_kmh * 3600.0 + F.col("value") % 30)
     )
     fcols = ["hour", "dow", "is_weekend_d", "hav_km", "temp_c", "zone_speed", "pop_density"]
-    model = gbt_fit(feats.filter("is_train"), fcols, "log_duration", max_iter=10, max_depth=4)
+    model = mlp.gbt_fit(feats.filter("is_train"), fcols, "log_duration", max_iter=10, max_depth=4)
     imps = list(model.featureImportances.toArray())
     rows = [
         ("all_nonnegative", bool(all(v >= 0 for v in imps))),
@@ -7607,49 +7557,7 @@ def q_importances_band(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("sums_to_one", bool(abs(sum(imps) - 1.0) < 1e-6)),
         ("top_feature_is_distance", bool(fcols[max(range(len(imps)), key=imps.__getitem__)] == "hav_km")),
     ]
-    return local_frame(spark, rows, "band string, ok boolean").orderBy("band")
-
-
-_SQL_IMPORTANCES_BAND = """
-SELECT * FROM (VALUES ('all_nonnegative', true), ('one_per_feature', true),
-                      ('sums_to_one', true), ('top_feature_is_distance', true)) AS t(band, ok)
-ORDER BY band
-"""
-
-
-def q_lisa_perm_band(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded twin of lisa_hotspot_summary (M12): the Monte-Carlo census
-    partitions exactly the point set (n_points is INDEPENDENTLY
-    recomputed by the oracle from the events table — a real cross-engine
-    check), categories stay in the legal set, p-values land in (0, 1],
-    and on the iid-noise fixture the non-significant share is the
-    overwhelming majority (≥ 50% band — chance-level significance at
-    α=0.05 is ~5% per tail)."""
-    from ..operators.lisa import lisa_permutation_pvalues, lisa_summary, local_morans_i
-
-    lisa = local_morans_i(_lisa_points(spark, sf_dir), "value", k=5).localCheckpoint()
-    pvals = lisa_permutation_pvalues(lisa, k=5, permutations=999, seed=42)
-    summ = lisa_summary(pvals, lisa, alpha=0.05)
-    agg = summ.agg(
-        F.sum("n").alias("total"),
-        F.sum(F.when(F.col("category") == "ns", F.col("n")).otherwise(F.lit(0))).alias("n_ns"),
-        F.sum(
-            F.when(F.col("category").isin("HH", "LL", "LH", "HL", "ns"), F.lit(0)).otherwise(F.lit(1))
-        ).alias("bad_cats"),
-    ).collect()[0]
-    p_ok = pvals.agg(
-        F.sum(((F.col("p_sim") > 0) & (F.col("p_sim") <= 1)).cast("bigint")).alias("ok"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    return local_frame(
-        spark,
-        [
-            ("categories_legal", bool(agg["bad_cats"] == 0), int(agg["total"])),
-            ("ns_majority", bool(agg["n_ns"] >= agg["total"] * 0.5), int(agg["total"])),
-            ("pvalues_in_unit", bool(p_ok["ok"] == p_ok["n"]), int(agg["total"])),
-        ],
-        "band string, ok boolean, n_points bigint",
-    ).orderBy("band")
+    return tb.local_frame(spark, rows, "band string, ok boolean").orderBy("band")
 
 
 _SQL_LISA_PERM_BAND = f"""
@@ -7661,6 +7569,50 @@ ORDER BY t.band
 """
 
 
+@query(_SQL_LISA_PERM_BAND, bench=False)
+def q_lisa_perm_band(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Banded twin of lisa_hotspot_summary (M12): the Monte-Carlo census
+    partitions exactly the point set (n_points is INDEPENDENTLY
+    recomputed by the oracle from the events table — a real cross-engine
+    check), categories stay in the legal set, p-values land in (0, 1],
+    and on the iid-noise fixture the non-significant share is the
+    overwhelming majority (≥ 50% band — chance-level significance at
+    α=0.05 is ~5% per tail)."""
+    lisa = lm.local_morans_i(_lisa_points(spark, sf_dir), "value", k=5).localCheckpoint()
+    pvals = lm.lisa_permutation_pvalues(lisa, k=5, permutations=999, seed=42)
+    summ = lm.lisa_summary(pvals, lisa, alpha=0.05)
+    agg = summ.agg(
+        F.sum("n").alias("total"),
+        F.sum(F.when(F.col("category") == "ns", F.col("n")).otherwise(F.lit(0))).alias("n_ns"),
+        F.sum(
+            F.when(F.col("category").isin("HH", "LL", "LH", "HL", "ns"), F.lit(0)).otherwise(F.lit(1))
+        ).alias("bad_cats"),
+    ).collect()[0]
+    p_ok = pvals.agg(
+        F.sum(((F.col("p_sim") > 0) & (F.col("p_sim") <= 1)).cast("bigint")).alias("ok"),
+        F.count(F.lit(1)).alias("n"),
+    ).collect()[0]
+    return tb.local_frame(
+        spark,
+        [
+            ("categories_legal", bool(agg["bad_cats"] == 0), int(agg["total"])),
+            ("ns_majority", bool(agg["n_ns"] >= agg["total"] * 0.5), int(agg["total"])),
+            ("pvalues_in_unit", bool(p_ok["ok"] == p_ok["n"]), int(agg["total"])),
+        ],
+        "band string, ok boolean, n_points bigint",
+    ).orderBy("band")
+
+
+_SQL_LISA_PERM_BAND_DIST = f"""
+WITH d AS ({_DERIVED_POINTS_SQL}), n AS (SELECT count(*)::BIGINT AS c FROM d WHERE event_id < 1000)
+SELECT t.band, t.ok, n.c AS n_points
+FROM (VALUES ('dist_covers_all_points', true), ('dist_pvalues_in_unit', true),
+             ('mean_p_agrees', true), ('sig_share_agrees', true)) AS t(band, ok), n
+ORDER BY t.band
+"""
+
+
+@query(_SQL_LISA_PERM_BAND_DIST)
 def q_lisa_perm_band_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band oracle for the DISTRIBUTED exact-pool LISA permutation
     variant (`operators/lisa.lisa_permutation_pvalues_dist`, the
@@ -7673,15 +7625,9 @@ def q_lisa_perm_band_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     Monte-Carlo standard error at n≈1000 × 999 permutations, so a
     pass means same-distribution, not luck). n_points is independently
     recomputed by the oracle from the events table."""
-    from ..operators.lisa import (
-        lisa_permutation_pvalues,
-        lisa_permutation_pvalues_dist,
-        local_morans_i,
-    )
-
-    lisa = local_morans_i(_lisa_points(spark, sf_dir), "value", k=5).localCheckpoint()
-    p_b = lisa_permutation_pvalues(lisa, k=5, permutations=999, seed=42)
-    p_d = lisa_permutation_pvalues_dist(lisa, k=5, permutations=999, seed=42)
+    lisa = lm.local_morans_i(_lisa_points(spark, sf_dir), "value", k=5).localCheckpoint()
+    p_b = lm.lisa_permutation_pvalues(lisa, k=5, permutations=999, seed=42)
+    p_d = lm.lisa_permutation_pvalues_dist(lisa, k=5, permutations=999, seed=42)
 
     # Both legs' summary stats in ONE action: tag + union lets Spark
     # schedule the broadcast-pool and distributed branches in the same
@@ -7700,7 +7646,7 @@ def q_lisa_perm_band_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     legs = {r["_leg"]: r for r in both}
     sb, sd = legs["b"], legs["d"]
-    return local_frame(
+    return tb.local_frame(
         spark,
         [
             ("dist_covers_all_points", bool(sd["n"] == sb["n"]), int(sd["n"])),
@@ -7720,30 +7666,6 @@ def q_lisa_perm_band_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("band")
 
 
-_SQL_LISA_PERM_BAND_DIST = f"""
-WITH d AS ({_DERIVED_POINTS_SQL}), n AS (SELECT count(*)::BIGINT AS c FROM d WHERE event_id < 1000)
-SELECT t.band, t.ok, n.c AS n_points
-FROM (VALUES ('dist_covers_all_points', true), ('dist_pvalues_in_unit', true),
-             ('mean_p_agrees', true), ('sig_share_agrees', true)) AS t(band, ok), n
-ORDER BY t.band
-"""
-
-
-def q_status_remap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F5+F10 — set-membership filter + value remap (passenger-count
-    remap pattern, lab2 nb cell 5), on order status/priority."""
-    from ..operators.cleaning import replace_values
-
-    orders = _t(spark, sf_dir, "orders")
-    filtered = orders.filter(
-        F.col("o_orderpriority").isin("1-URGENT", "2-HIGH", "3-MEDIUM")
-    )
-    remapped = replace_values(filtered, "o_orderstatus", {"P": "O"})
-    return remapped.groupBy("o_orderstatus", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-
-
 _SQL_REMAP = """
 SELECT CASE WHEN o_orderstatus = 'P' THEN 'O' ELSE o_orderstatus END AS o_orderstatus,
        o_orderpriority, count(*)::BIGINT AS n
@@ -7753,17 +7675,18 @@ GROUP BY 1, 2
 """
 
 
-def q_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DF-capped inverted-index Jaccard (max_df=8): candidates only
-    from shingles in ≤8 docs (kills the quadratic hot-shingle join
-    rows), exact verify on full shingle sets. Oracle replays the cap in
-    SQL: unnest shingles → df census → candidate pairs from rare
-    shingles → exact list_intersect Jaccard on candidates."""
-    docs = _t(spark, sf_dir, "documents")
-    out = dd.ngram_jaccard_capped_df(
-        docs, "text", "doc_id", threshold=0.5, max_df=8
+@query(_SQL_REMAP, bench=False)
+def q_status_remap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F5+F10 — set-membership filter + value remap (passenger-count
+    remap pattern, lab2 nb cell 5), on order status/priority."""
+    orders = _t(spark, sf_dir, "orders")
+    filtered = orders.filter(
+        F.col("o_orderpriority").isin("1-URGENT", "2-HIGH", "3-MEDIUM")
     )
-    return out.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+    remapped = cleaning.replace_values(filtered, "o_orderstatus", {"P": "O"})
+    return remapped.groupBy("o_orderstatus", "o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n")
+    )
 
 
 _SQL_NGRAM_CAPPED = f"""
@@ -7793,25 +7716,18 @@ SELECT doc_a, doc_b, round(jaccard, 6) AS jaccard FROM scored WHERE jaccard >= 0
 """
 
 
-def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD2 collapse (gaps-and-islands): each user's event_type stream
-    becomes versioned validity ranges — consecutive equal states merge,
-    a version closes when the next different state begins. One hash
-    exchange on user_id; closed-history merge path tested in pytest
-    (`operators/scd.scd2_merge`). effective_to coalesces to a 2100
-    sentinel (comparator nulls); is_current as int."""
-    from ..operators.scd import scd2_collapse
-
-    ev = _t(spark, sf_dir, "events")
-    out = scd2_collapse(ev, "user_id", "event_type", "ts")
-    hi = F.lit("2100-01-01 00:00:00").cast("timestamp")
-    return out.select(
-        "user_id",
-        "event_type",
-        "effective_from",
-        F.coalesce("effective_to", hi).alias("effective_to"),
-        F.col("is_current").cast("int").alias("is_current"),
+@query(_SQL_NGRAM_CAPPED, bench=False)
+def q_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DF-capped inverted-index Jaccard (max_df=8): candidates only
+    from shingles in ≤8 docs (kills the quadratic hot-shingle join
+    rows), exact verify on full shingle sets. Oracle replays the cap in
+    SQL: unnest shingles → df census → candidate pairs from rare
+    shingles → exact list_intersect Jaccard on candidates."""
+    docs = _t(spark, sf_dir, "documents")
+    out = dd.ngram_jaccard_capped_df(
+        docs, "text", "doc_id", threshold=0.5, max_df=8
     )
+    return out.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
 
 
 _SQL_SCD2 = """
@@ -7829,6 +7745,45 @@ FROM p
 """
 
 
+@query(_SQL_SCD2, bench=False)
+def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SCD2 collapse (gaps-and-islands): each user's event_type stream
+    becomes versioned validity ranges — consecutive equal states merge,
+    a version closes when the next different state begins. One hash
+    exchange on user_id; closed-history merge path tested in pytest
+    (`operators/scd.scd2_merge`). effective_to coalesces to a 2100
+    sentinel (comparator nulls); is_current as int."""
+    ev = _t(spark, sf_dir, "events")
+    out = scd.scd2_collapse(ev, "user_id", "event_type", "ts")
+    hi = F.lit("2100-01-01 00:00:00").cast("timestamp")
+    return out.select(
+        "user_id",
+        "event_type",
+        "effective_from",
+        F.coalesce("effective_to", hi).alias("effective_to"),
+        F.col("is_current").cast("int").alias("is_current"),
+    )
+
+
+_SQL_TRAILING = """
+WITH daily AS (
+  SELECT date_trunc('day', o_orderdate) AS day,
+         round(sum(o_totalprice), 2) AS rev, count(*) AS n
+  FROM orders GROUP BY 1
+), t AS (
+  SELECT day, rev,
+         round(sum(rev) OVER w, 2) AS t_sum,
+         sum(n) OVER w AS t_n
+  FROM daily
+  WINDOW w AS (ORDER BY day RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW)
+)
+SELECT day, rev, t_sum,
+       t_sum / t_n AS t_avg_per_order
+FROM t ORDER BY day
+"""
+
+
+@query(_SQL_TRAILING, bench=False)
 def q_trailing_7day_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE-frame window (the interval frame no other query uses):
     7-day trailing revenue sum/avg over daily order totals, frame keyed
@@ -7867,24 +7822,21 @@ def q_trailing_7day_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TRAILING = """
-WITH daily AS (
-  SELECT date_trunc('day', o_orderdate) AS day,
-         round(sum(o_totalprice), 2) AS rev, count(*) AS n
-  FROM orders GROUP BY 1
-), t AS (
-  SELECT day, rev,
-         round(sum(rev) OVER w, 2) AS t_sum,
-         sum(n) OVER w AS t_n
-  FROM daily
-  WINDOW w AS (ORDER BY day RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW)
+_SQL_UNPIVOT = """
+WITH wide AS (
+  SELECT l_returnflag,
+         round(sum(l_quantity), 2) AS sum_qty,
+         round(sum(l_extendedprice), 2) AS sum_price,
+         round(sum(l_discount), 2) AS sum_disc
+  FROM lineitem GROUP BY 1
 )
-SELECT day, rev, t_sum,
-       t_sum / t_n AS t_avg_per_order
-FROM t ORDER BY day
+SELECT l_returnflag, measure, value
+FROM wide UNPIVOT (value FOR measure IN (sum_qty, sum_price, sum_disc))
+ORDER BY l_returnflag, measure
 """
 
 
+@query(_SQL_UNPIVOT, bench=False)
 def q_unpivot_pricing_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot/melt (the inverse of A2's pivot): per-returnflag totals
     of three measures rotate into (flag, measure, value) long form via
@@ -7903,20 +7855,13 @@ def q_unpivot_pricing_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_returnflag", "measure")
 
 
-_SQL_UNPIVOT = """
-WITH wide AS (
-  SELECT l_returnflag,
-         round(sum(l_quantity), 2) AS sum_qty,
-         round(sum(l_extendedprice), 2) AS sum_price,
-         round(sum(l_discount), 2) AS sum_disc
-  FROM lineitem GROUP BY 1
-)
-SELECT l_returnflag, measure, value
-FROM wide UNPIVOT (value FOR measure IN (sum_qty, sum_price, sum_disc))
-ORDER BY l_returnflag, measure
+_SQL_SALTED = """
+SELECT event_type, count(*)::BIGINT AS count
+FROM events GROUP BY event_type ORDER BY event_type
 """
 
 
+@query(_SQL_SALTED, bench=False)
 def q_salted_event_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew fallback on the oracle surface: two-phase salted
     aggregation (partial agg on (key, salt) → final agg on key) over
@@ -7924,18 +7869,19 @@ def q_salted_event_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     low-cardinality-hot-key shape AQE can't rebalance (one reducer per
     key at best). Semantics-preserving by construction; the oracle is
     the plain GROUP BY."""
-    from ..operators.scale import salted_agg_count
-
     ev = _t(spark, sf_dir, "events")
-    return salted_agg_count(ev, "event_type", n_salts=16).orderBy("event_type")
+    return sc.salted_agg_count(ev, "event_type", n_salts=16).orderBy("event_type")
 
 
-_SQL_SALTED = """
-SELECT event_type, count(*)::BIGINT AS count
-FROM events GROUP BY event_type ORDER BY event_type
+_SQL_HYPERTABLE = """
+SELECT date_trunc('day', ts) AS day, count(*)::BIGINT AS n_events,
+       round(sum(value), 2) AS sum_value, max(value) AS max_value,
+       round(round(sum(value), 2) / count(*), 6) AS avg_value
+FROM events GROUP BY 1 ORDER BY day
 """
 
 
+@query(_SQL_HYPERTABLE)
 def q_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style continuous-aggregate rollup: the DAILY answer
     is computed FROM the hourly pre-aggregate, not from raw events —
@@ -7965,14 +7911,19 @@ def q_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_HYPERTABLE = """
-SELECT date_trunc('day', ts) AS day, count(*)::BIGINT AS n_events,
-       round(sum(value), 2) AS sum_value, max(value) AS max_value,
-       round(round(sum(value), 2) / count(*), 6) AS avg_value
-FROM events GROUP BY 1 ORDER BY day
+_SQL_LARGE_ORDERS = """
+SELECT c.c_custkey, c.c_name, o.o_orderkey, o.o_totalprice, b.sum_qty
+FROM orders o
+JOIN (SELECT l_orderkey, sum(l_quantity) AS sum_qty
+      FROM lineitem GROUP BY 1 HAVING sum(l_quantity) > 250) b
+  ON o.o_orderkey = b.l_orderkey
+JOIN customer c ON o.o_custkey = c.c_custkey
+ORDER BY o.o_totalprice DESC, o.o_orderkey
+LIMIT 20
 """
 
 
+@query(_SQL_LARGE_ORDERS)
 def q_large_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q18-shaped HAVING-threshold join (the group-filter relational
     shape: aggregate → threshold → join back to dims). Spark-first
@@ -8000,18 +7951,22 @@ def q_large_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_LARGE_ORDERS = """
-SELECT c.c_custkey, c.c_name, o.o_orderkey, o.o_totalprice, b.sum_qty
-FROM orders o
-JOIN (SELECT l_orderkey, sum(l_quantity) AS sum_qty
-      FROM lineitem GROUP BY 1 HAVING sum(l_quantity) > 250) b
-  ON o.o_orderkey = b.l_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-ORDER BY o.o_totalprice DESC, o.o_orderkey
-LIMIT 20
+_SQL_SHIPPING_PRIORITY = """
+SELECT l.l_orderkey, round(sum(l.l_extendedprice * (1.0 - l.l_discount)), 2) AS revenue,
+       o.o_orderdate, o.o_orderpriority
+FROM customer c
+JOIN orders o ON c.c_custkey = o.o_custkey
+JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+WHERE c.c_mktsegment = 'BUILDING'
+  AND o.o_orderdate < TIMESTAMP '1998-01-01'
+  AND l.l_shipdate > TIMESTAMP '1998-01-01'
+GROUP BY 1, 3, 4
+ORDER BY revenue DESC, l.l_orderkey
+LIMIT 10
 """
 
 
+@query(_SQL_SHIPPING_PRIORITY)
 def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3-shaped 3-way join + date-window filter + grouped revenue
     top-k. customer filters on segment then broadcasts; orders filters
@@ -8046,21 +8001,19 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SHIPPING_PRIORITY = """
-SELECT l.l_orderkey, round(sum(l.l_extendedprice * (1.0 - l.l_discount)), 2) AS revenue,
-       o.o_orderdate, o.o_orderpriority
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-WHERE c.c_mktsegment = 'BUILDING'
-  AND o.o_orderdate < TIMESTAMP '1998-01-01'
-  AND l.l_shipdate > TIMESTAMP '1998-01-01'
-GROUP BY 1, 3, 4
-ORDER BY revenue DESC, l.l_orderkey
-LIMIT 10
+_SQL_ROLLUP_REVENUE = """
+SELECT coalesce(r_name, 'ALL') AS r_name, coalesce(n_name, 'ALL') AS n_name,
+       count(*)::BIGINT AS n_orders, round(sum(o_totalprice), 2) AS revenue,
+       GROUPING(r_name, n_name)::BIGINT AS lvl
+FROM orders
+JOIN customer ON o_custkey = c_custkey
+JOIN nation ON c_nationkey = n_nationkey
+JOIN region ON n_regionkey = r_regionkey
+GROUP BY ROLLUP(r_name, n_name)
 """
 
 
+@query(_SQL_ROLLUP_REVENUE, bench=False)
 def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy agg (region → nation → total): Catalyst's
     Expand-based grouping sets — one scan produces all three grouping
@@ -8094,26 +8047,23 @@ def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_ROLLUP_REVENUE = """
-SELECT coalesce(r_name, 'ALL') AS r_name, coalesce(n_name, 'ALL') AS n_name,
-       count(*)::BIGINT AS n_orders, round(sum(o_totalprice), 2) AS revenue,
-       GROUPING(r_name, n_name)::BIGINT AS lvl
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY ROLLUP(r_name, n_name)
+_SQL_ASOF = """
+SELECT c.event_id, c.user_id, c.ts,
+       coalesce(p.ts, TIMESTAMP '1970-01-01 00:00:00') AS asof_ts,
+       coalesce(p.value, -1.0) AS asof_value
+FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') c
+ASOF LEFT JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') p
+  ON c.user_id = p.user_id AND p.ts <= c.ts
 """
 
 
+@query(_SQL_ASOF)
 def q_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of backward join (operators/asof): every click gets the same
     user's latest purchase at-or-before it. One hash exchange on
     user_id + partition-local sort — no range explode, no NLJ. DuckDB's
     native ASOF LEFT JOIN is the oracle; (user_id, ts) is unique among
     purchases so the match is deterministic."""
-    from ..operators.asof import asof_join_backward
-
     ev = _t(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
@@ -8121,7 +8071,7 @@ def q_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "value"
     )
-    out = asof_join_backward(
+    out = asof.asof_join_backward(
         clicks, purchases, key="user_id", left_ts="ts", right_ts="ts",
         payload_cols=["value"],
     )
@@ -8137,16 +8087,20 @@ def q_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_ASOF = """
-SELECT c.event_id, c.user_id, c.ts,
-       coalesce(p.ts, TIMESTAMP '1970-01-01 00:00:00') AS asof_ts,
-       coalesce(p.value, -1.0) AS asof_value
-FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') c
-ASOF LEFT JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') p
-  ON c.user_id = p.user_id AND p.ts <= c.ts
+_SQL_CUSTDIST = """
+SELECT c_count, count(*)::BIGINT AS custdist
+FROM (
+  SELECT c_custkey, count(o_orderkey)::BIGINT AS c_count
+  FROM customer
+  LEFT JOIN orders ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
+  GROUP BY c_custkey
+)
+GROUP BY c_count
+ORDER BY custdist DESC, c_count DESC
 """
 
 
+@query(_SQL_CUSTDIST)
 def q_custdist_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q13-shaped order-count distribution: customer LEFT OUTER JOIN a
     filtered orders side, count per customer (including zero-order
@@ -8170,19 +8124,20 @@ def q_custdist_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CUSTDIST = """
-SELECT c_count, count(*)::BIGINT AS custdist
-FROM (
-  SELECT c_custkey, count(o_orderkey)::BIGINT AS c_count
-  FROM customer
-  LEFT JOIN orders ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-  GROUP BY c_custkey
-)
-GROUP BY c_count
-ORDER BY custdist DESC, c_count DESC
+_SQL_SMALL_QTY = """
+SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly,
+       count(*)::BIGINT AS n_rows
+FROM lineitem
+JOIN part ON p_partkey = l_partkey
+WHERE p_brand = 'Brand#1'
+  AND l_quantity < (
+    SELECT 0.2 * avg(l2.l_quantity)
+    FROM lineitem l2 WHERE l2.l_partkey = lineitem.l_partkey
+  )
 """
 
 
+@query(_SQL_SMALL_QTY)
 def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q17-shaped correlated scalar subquery, decorrelated: revenue from
     Brand#1 line items whose quantity is below 20% of that part's average
@@ -8216,19 +8171,21 @@ def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SMALL_QTY = """
-SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly,
-       count(*)::BIGINT AS n_rows
-FROM lineitem
-JOIN part ON p_partkey = l_partkey
-WHERE p_brand = 'Brand#1'
-  AND l_quantity < (
-    SELECT 0.2 * avg(l2.l_quantity)
-    FROM lineitem l2 WHERE l2.l_partkey = lineitem.l_partkey
-  )
+_SQL_EXISTS_PRIORITY = """
+SELECT o_orderpriority, count(*)::BIGINT AS order_count
+FROM orders o
+WHERE EXISTS (
+  SELECT 1 FROM lineitem l
+  WHERE l.l_orderkey = o.o_orderkey
+    AND l.l_returnflag = 'R'
+    AND l.l_shipdate > o.o_orderdate
+)
+GROUP BY o_orderpriority
+ORDER BY o_orderpriority
 """
 
 
+@query(_SQL_EXISTS_PRIORITY)
 def q_exists_priority_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4-shaped EXISTS: count orders per priority having at least one
     returned line item shipped after the order date. The correlated
@@ -8254,20 +8211,19 @@ def q_exists_priority_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_EXISTS_PRIORITY = """
-SELECT o_orderpriority, count(*)::BIGINT AS order_count
-FROM orders o
-WHERE EXISTS (
-  SELECT 1 FROM lineitem l
-  WHERE l.l_orderkey = o.o_orderkey
-    AND l.l_returnflag = 'R'
-    AND l.l_shipdate > o.o_orderdate
+_SQL_LATEST_EVENT = """
+SELECT user_id, ts AS last_ts, event_id AS last_event_id,
+       event_type AS last_event_type, value AS last_value
+FROM (
+  SELECT *, row_number() OVER (
+    PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+  FROM events
 )
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
+WHERE rn = 1
 """
 
 
+@query(_SQL_LATEST_EVENT)
 def q_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest-row-per-key dedup (the mutable-table "current state" read,
     complementing SCD2's full history): one ``max_by`` over a struct
@@ -8292,18 +8248,6 @@ def q_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("last.event_type").alias("last_event_type"),
         F.col("last.value").alias("last_value"),
     )
-
-
-_SQL_LATEST_EVENT = """
-SELECT user_id, ts AS last_ts, event_id AS last_event_id,
-       event_type AS last_event_type, value AS last_value
-FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-  FROM events
-)
-WHERE rn = 1
-"""
 
 
 # Deterministic modular graph for triangle/PageRank queries: 300 nodes,
@@ -8338,17 +8282,6 @@ def _mod_graph_edges(spark: SparkSession) -> DataFrame:
     return raw.filter(F.col("src") != F.col("dst")).distinct()
 
 
-def q_triangle_counts_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graph triangle counting (extension beyond lab-3's degree/density
-    analytics; `graph/algorithms.triangle_counts`): per-node triangle
-    participation over the deterministic modular graph. The oracle
-    replays edge canonicalization and the wedge-close 3-way join in SQL.
-    """
-    from ..graph.algorithms import triangle_counts
-
-    return triangle_counts(_mod_graph_edges(spark)).orderBy("id")
-
-
 _SQL_TRIANGLES = f"""
 WITH {_SQL_MOD_GRAPH},
 und AS (
@@ -8369,25 +8302,14 @@ SELECT id, count(*)::BIGINT AS tri_count FROM corners GROUP BY id ORDER BY id
 """
 
 
-def q_pagerank_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-iteration PageRank (6 rounds, d=0.85) over the modular
-    graph — the iterative-DataFrame-program pattern shared with SSSP and
-    Lloyd's KMeans (`graph/algorithms.pagerank`). Every node has an
-    out-edge by construction (no dangling mass). The oracle unrolls all
-    six power iterations as chained CTEs, so the rank values themselves
-    are checked, not just the shape. Rounded to 8dp (sums of ≤~20 terms
-    of ~3e-3: reassociation error ≪ 1e-8 unit).
+@query(_SQL_TRIANGLES, bench=False)
+def q_triangle_counts_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Graph triangle counting (extension beyond lab-3's degree/density
+    analytics; `graph/algorithms.triangle_counts`): per-node triangle
+    participation over the deterministic modular graph. The oracle
+    replays edge canonicalization and the wedge-close 3-way join in SQL.
     """
-    from ..graph.algorithms import pagerank
-
-    # 6 rounds run as ONE lazy DAG (checkpoint_every > iterations):
-    # measured 1.0-1.4 s vs 3.6 s with per-round localCheckpoints —
-    # rank lineage is linear, so eager materialization only buys
-    # plan-depth bounds, which 6 rounds don't need.
-    ranks = pagerank(
-        _mod_graph_edges(spark), iterations=6, damping=0.85, checkpoint_every=10
-    )
-    return ranks.select("id", F.round("pr", 8).alias("pr")).orderBy("id")
+    return ga.triangle_counts(_mod_graph_edges(spark)).orderBy("id")
 
 
 def _sql_pagerank() -> str:
@@ -8417,6 +8339,45 @@ SELECT id, round(pr, 8) AS pr FROM r6 ORDER BY id
 """
 
 
+@query(_sql_pagerank())
+def q_pagerank_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fixed-iteration PageRank (6 rounds, d=0.85) over the modular
+    graph — the iterative-DataFrame-program pattern shared with SSSP and
+    Lloyd's KMeans (`graph/algorithms.pagerank`). Every node has an
+    out-edge by construction (no dangling mass). The oracle unrolls all
+    six power iterations as chained CTEs, so the rank values themselves
+    are checked, not just the shape. Rounded to 8dp (sums of ≤~20 terms
+    of ~3e-3: reassociation error ≪ 1e-8 unit).
+    """
+    # 6 rounds run as ONE lazy DAG (checkpoint_every > iterations):
+    # measured 1.0-1.4 s vs 3.6 s with per-round localCheckpoints —
+    # rank lineage is linear, so eager materialization only buys
+    # plan-depth bounds, which 6 rounds don't need.
+    ranks = ga.pagerank(
+        _mod_graph_edges(spark), iterations=6, damping=0.85, checkpoint_every=10
+    )
+    return ranks.select("id", F.round("pr", 8).alias("pr")).orderBy("id")
+
+
+_SQL_STRATIFIED = """
+SELECT source,
+       count(*)::BIGINT AS n_docs,
+       sum(CASE WHEN kept THEN 1 ELSE 0 END)::BIGINT AS n_kept,
+       round(sum(CASE WHEN kept THEN 1 ELSE 0 END) / count(*), 6) AS kept_frac,
+       coalesce(round(avg(CASE WHEN kept THEN n_chars END), 6), -1.0)
+         AS kept_avg_chars
+FROM (
+  SELECT source, n_chars,
+         ((doc_id * 2654435761) % 1000003) % 1000
+           < (substr(source, 4)::INT * 50) % 900 + 50 AS kept
+  FROM documents
+)
+GROUP BY source
+ORDER BY source
+"""
+
+
+@query(_SQL_STRATIFIED)
 def q_stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-stratum deterministic sampling for corpus mixing (the
     training-data twin of F14's seeded `sample`): each source gets its
@@ -8450,24 +8411,30 @@ def q_stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_STRATIFIED = """
-SELECT source,
-       count(*)::BIGINT AS n_docs,
-       sum(CASE WHEN kept THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-       round(sum(CASE WHEN kept THEN 1 ELSE 0 END) / count(*), 6) AS kept_frac,
-       coalesce(round(avg(CASE WHEN kept THEN n_chars END), 6), -1.0)
-         AS kept_avg_chars
-FROM (
-  SELECT source, n_chars,
-         ((doc_id * 2654435761) % 1000003) % 1000
-           < (substr(source, 4)::INT * 50) % 900 + 50 AS kept
+_SQL_PACK = """
+WITH t AS (
+  SELECT source, doc_id,
+         len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS n_tokens
   FROM documents
+),
+c AS (
+  SELECT *, sum(n_tokens) OVER (
+    PARTITION BY source ORDER BY doc_id
+    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+  FROM t
 )
-GROUP BY source
-ORDER BY source
+SELECT source, ((cum - n_tokens) // 2048)::BIGINT AS bin,
+       count(*)::BIGINT AS n_docs,
+       sum(n_tokens)::BIGINT AS bin_tokens,
+       min(doc_id)::BIGINT AS first_doc,
+       max(doc_id)::BIGINT AS last_doc
+FROM c
+GROUP BY source, bin
+ORDER BY source, bin
 """
 
 
+@query(_SQL_PACK)
 def q_pack_sequences_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing for training batches: per source, docs in
     doc_id order are packed into fixed token-budget bins (2048) by
@@ -8504,29 +8471,18 @@ def q_pack_sequences_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_PACK = """
-WITH t AS (
-  SELECT source, doc_id,
-         len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS n_tokens
-  FROM documents
-),
-c AS (
-  SELECT *, sum(n_tokens) OVER (
-    PARTITION BY source ORDER BY doc_id
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-  FROM t
-)
-SELECT source, ((cum - n_tokens) // 2048)::BIGINT AS bin,
-       count(*)::BIGINT AS n_docs,
-       sum(n_tokens)::BIGINT AS bin_tokens,
-       min(doc_id)::BIGINT AS first_doc,
-       max(doc_id)::BIGINT AS last_doc
-FROM c
-GROUP BY source, bin
-ORDER BY source, bin
+_SQL_CUBE = """
+SELECT coalesce(o_orderpriority, 'ALL') AS o_orderpriority,
+       coalesce(o_orderstatus, 'ALL') AS o_orderstatus,
+       count(*)::BIGINT AS n_orders,
+       round(sum(o_totalprice), 2) AS revenue,
+       GROUPING(o_orderpriority, o_orderstatus)::BIGINT AS lvl
+FROM orders
+GROUP BY CUBE(o_orderpriority, o_orderstatus)
 """
 
 
+@query(_SQL_CUBE)
 def q_cube_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE grouping sets over orders (priority × status): all four
     grouping levels — (both), (priority), (status), () — from ONE scan
@@ -8551,17 +8507,20 @@ def q_cube_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CUBE = """
-SELECT coalesce(o_orderpriority, 'ALL') AS o_orderpriority,
-       coalesce(o_orderstatus, 'ALL') AS o_orderstatus,
-       count(*)::BIGINT AS n_orders,
-       round(sum(o_totalprice), 2) AS revenue,
-       GROUPING(o_orderpriority, o_orderstatus)::BIGINT AS lvl
-FROM orders
-GROUP BY CUBE(o_orderpriority, o_orderstatus)
+_SQL_INCREMENTAL = """
+SELECT date_trunc('hour', ts) AS bucket_ts,
+       count(*)::BIGINT AS n,
+       sum(round(value * 100)::BIGINT) / 100.0 AS sum_value,
+       round(sum(round(value * 100)::BIGINT) / 100.0 / count(*), 6) AS avg_value,
+       min(value) AS mn,
+       max(value) AS mx
+FROM events
+GROUP BY 1
+ORDER BY bucket_ts
 """
 
 
+@query(_SQL_INCREMENTAL)
 def q_incremental_hourly_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental aggregate maintenance: a new micro-batch's partial
     hourly aggregates merge into the stored rollup state by
@@ -8615,19 +8574,20 @@ def q_incremental_hourly_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_INCREMENTAL = """
-SELECT date_trunc('hour', ts) AS bucket_ts,
-       count(*)::BIGINT AS n,
-       sum(round(value * 100)::BIGINT) / 100.0 AS sum_value,
-       round(sum(round(value * 100)::BIGINT) / 100.0 / count(*), 6) AS avg_value,
-       min(value) AS mn,
-       max(value) AS mx
-FROM events
-GROUP BY 1
-ORDER BY bucket_ts
+_SQL_INTERLEAVE = """
+SELECT source, doc_id, vt
+FROM (
+  SELECT source, doc_id,
+         round(row_number() OVER (PARTITION BY source ORDER BY doc_id)
+               / ((substr(source, 4)::INT % 4 + 1)::DOUBLE), 6) AS vt
+  FROM documents
+)
+ORDER BY vt, source, doc_id
+LIMIT 100
 """
 
 
+@query(_SQL_INTERLEAVE)
 def q_interleave_corpus_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted corpus interleave (training-data scheduling): each
     source gets a mixing weight (1–4×, derived from its id); docs are
@@ -8652,19 +8612,36 @@ def q_interleave_corpus_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_INTERLEAVE = """
-SELECT source, doc_id, vt
-FROM (
-  SELECT source, doc_id,
-         round(row_number() OVER (PARTITION BY source ORDER BY doc_id)
-               / ((substr(source, 4)::INT % 4 + 1)::DOUBLE), 6) AS vt
-  FROM documents
-)
-ORDER BY vt, source, doc_id
-LIMIT 100
+_SQL_DECONTAMINATE = f"""
+WITH docs AS (SELECT doc_id, {_CLEAN_SQL} AS ct FROM documents),
+sh AS (
+  SELECT doc_id, unnest(shingles) AS shingle
+  FROM (
+    SELECT doc_id, {_SHINGLES_SQL} AS shingles
+    FROM (SELECT doc_id, string_split(ct, ' ') AS toks FROM docs)
+  )
+),
+ov AS (
+  SELECT t.doc_id
+  FROM (SELECT * FROM sh WHERE doc_id % 50 <> 0) t
+  JOIN (SELECT * FROM sh WHERE doc_id % 50 = 0) b ON t.shingle = b.shingle
+  GROUP BY t.doc_id, b.doc_id
+  HAVING count(*) >= 3
+),
+flagged AS (SELECT DISTINCT doc_id FROM ov)
+SELECT d.source,
+       count(*)::BIGINT AS n_train,
+       sum(CASE WHEN f.doc_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_flagged,
+       round(sum(CASE WHEN f.doc_id IS NOT NULL THEN 1 ELSE 0 END) / count(*), 6)
+         AS flagged_frac
+FROM (SELECT doc_id, source FROM documents WHERE doc_id % 50 <> 0) d
+LEFT JOIN flagged f ON f.doc_id = d.doc_id
+GROUP BY d.source
+ORDER BY d.source
 """
 
 
+@query(_SQL_DECONTAMINATE)
 def q_decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination (training-data pipeline op): flag
     training docs sharing ≥3 distinct 3-gram shingles with any held-out
@@ -8710,35 +8687,25 @@ def q_decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_DECONTAMINATE = f"""
-WITH docs AS (SELECT doc_id, {_CLEAN_SQL} AS ct FROM documents),
-sh AS (
-  SELECT doc_id, unnest(shingles) AS shingle
-  FROM (
-    SELECT doc_id, {_SHINGLES_SQL} AS shingles
-    FROM (SELECT doc_id, string_split(ct, ' ') AS toks FROM docs)
-  )
-),
-ov AS (
-  SELECT t.doc_id
-  FROM (SELECT * FROM sh WHERE doc_id % 50 <> 0) t
-  JOIN (SELECT * FROM sh WHERE doc_id % 50 = 0) b ON t.shingle = b.shingle
-  GROUP BY t.doc_id, b.doc_id
-  HAVING count(*) >= 3
-),
-flagged AS (SELECT DISTINCT doc_id FROM ov)
-SELECT d.source,
-       count(*)::BIGINT AS n_train,
-       sum(CASE WHEN f.doc_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_flagged,
-       round(sum(CASE WHEN f.doc_id IS NOT NULL THEN 1 ELSE 0 END) / count(*), 6)
-         AS flagged_frac
-FROM (SELECT doc_id, source FROM documents WHERE doc_id % 50 <> 0) d
-LEFT JOIN flagged f ON f.doc_id = d.doc_id
-GROUP BY d.source
-ORDER BY d.source
+_SQL_SHUFFLED_EXPORT = """
+SELECT shard,
+       count(*)::BIGINT AS n_docs,
+       count(DISTINCT source)::BIGINT AS n_sources,
+       sum(n_chars)::BIGINT AS total_chars,
+       min(h)::BIGINT AS h_min,
+       max(h)::BIGINT AS h_max
+FROM (
+  SELECT source, n_chars,
+         (doc_id * 2654435761 + 40503) % 1000003 AS h,
+         ((doc_id * 2654435761 + 40503) % 1000003) % 8 AS shard
+  FROM documents
+)
+GROUP BY shard
+ORDER BY shard
 """
 
 
+@query(_SQL_SHUFFLED_EXPORT)
 def q_shuffled_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global shuffle for training export: every doc gets
     a multiplicative-hash position, shard = hash % 8 — the
@@ -8771,24 +8738,21 @@ def q_shuffled_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SHUFFLED_EXPORT = """
-SELECT shard,
-       count(*)::BIGINT AS n_docs,
-       count(DISTINCT source)::BIGINT AS n_sources,
-       sum(n_chars)::BIGINT AS total_chars,
-       min(h)::BIGINT AS h_min,
-       max(h)::BIGINT AS h_max
+_SQL_TOP_PER_NATION = """
+SELECT n_name, rn, c_custkey, c_name, c_acctbal
 FROM (
-  SELECT source, n_chars,
-         (doc_id * 2654435761 + 40503) % 1000003 AS h,
-         ((doc_id * 2654435761 + 40503) % 1000003) % 8 AS shard
-  FROM documents
+  SELECT c_nationkey, c_custkey, c_name, c_acctbal,
+         row_number() OVER (
+           PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey ASC) AS rn
+  FROM customer
 )
-GROUP BY shard
-ORDER BY shard
+JOIN nation ON c_nationkey = n_nationkey
+WHERE rn <= 3
+ORDER BY n_name, rn
 """
 
 
+@query(_SQL_TOP_PER_NATION)
 def q_top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-K per group (the canonical partitioned-window shape, distinct
     from `rank_suppliers`' GLOBAL ranking): top-3 customers by account
@@ -8813,20 +8777,16 @@ def q_top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TOP_PER_NATION = """
-SELECT n_name, rn, c_custkey, c_name, c_acctbal
-FROM (
-  SELECT c_nationkey, c_custkey, c_name, c_acctbal,
-         row_number() OVER (
-           PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey ASC) AS rn
-  FROM customer
-)
-JOIN nation ON c_nationkey = n_nationkey
-WHERE rn <= 3
-ORDER BY n_name, rn
+_SQL_VARIANT = """
+SELECT (json_extract_string(props, '$.k')::BIGINT % 7) AS k_mod,
+       count(*)::BIGINT AS n,
+       sum(json_extract_string(props, '$.k')::BIGINT)::BIGINT AS sum_k,
+       round(sum(value), 2) AS sum_value
+FROM events GROUP BY 1 ORDER BY k_mod
 """
 
 
+@query(_SQL_VARIANT)
 def q_variant_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured analytics via Spark 4's VARIANT type — the
     parse-once twin of `json_extract_events`' per-path string
@@ -8857,15 +8817,29 @@ def q_variant_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_VARIANT = """
-SELECT (json_extract_string(props, '$.k')::BIGINT % 7) AS k_mod,
-       count(*)::BIGINT AS n,
-       sum(json_extract_string(props, '$.k')::BIGINT)::BIGINT AS sum_k,
-       round(sum(value), 2) AS sum_value
-FROM events GROUP BY 1 ORDER BY k_mod
+_SQL_CHUNKS = """
+WITH t AS (
+  SELECT source,
+         len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS n
+  FROM documents
+),
+ch AS (
+  SELECT source, n,
+         unnest(range(0, greatest(CAST(ceil((n - 32) / 24.0) AS BIGINT), 0) + 1))
+           AS start
+  FROM t
+)
+SELECT source,
+       count(*)::BIGINT AS n_chunks,
+       sum(least(32, n - start * 24))::BIGINT AS chunk_token_load,
+       round(avg(least(32, n - start * 24)), 6) AS avg_chunk_fill
+FROM ch
+GROUP BY source
+ORDER BY source
 """
 
 
+@query(_SQL_CHUNKS)
 def q_chunk_docs_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document chunking for embedding pipelines (the RAG/similarity
     prep op): fixed 32-token windows with stride 24 (8-token overlap),
@@ -8902,28 +8876,6 @@ def q_chunk_docs_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CHUNKS = """
-WITH t AS (
-  SELECT source,
-         len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS n
-  FROM documents
-),
-ch AS (
-  SELECT source, n,
-         unnest(range(0, greatest(CAST(ceil((n - 32) / 24.0) AS BIGINT), 0) + 1))
-           AS start
-  FROM t
-)
-SELECT source,
-       count(*)::BIGINT AS n_chunks,
-       sum(least(32, n - start * 24))::BIGINT AS chunk_token_load,
-       round(avg(least(32, n - start * 24)), 6) AS avg_chunk_fill
-FROM ch
-GROUP BY source
-ORDER BY source
-"""
-
-
 # --------------------------------------------------------------------------
 # TPC-H relational-breadth suite (adapted to the fixture schemas: no
 # partsupp / l_shipmode / l_commitdate columns exist, so Q12/Q21 and the
@@ -8933,6 +8885,23 @@ ORDER BY source
 # --------------------------------------------------------------------------
 
 
+_SQL_LOCAL_SUPPLIER_VOLUME = """
+SELECT n_name,
+       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
+       count(*)::BIGINT AS n_items
+FROM customer, orders, lineitem, supplier, nation, region
+WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
+  AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
+  AND r_name = 'ASIA'
+  AND o_orderdate >= TIMESTAMP '1996-01-01'
+  AND o_orderdate < TIMESTAMP '1998-01-01'
+GROUP BY n_name
+ORDER BY revenue DESC
+"""
+
+
+@query(_SQL_LOCAL_SUPPLIER_VOLUME)
 def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q5 shape: 6-table snowflake join (customer⋈orders⋈lineitem⋈
     supplier⋈nation⋈region) with the extra c_nationkey = s_nationkey
@@ -8975,22 +8944,24 @@ def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_LOCAL_SUPPLIER_VOLUME = """
-SELECT n_name,
-       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
-       count(*)::BIGINT AS n_items
-FROM customer, orders, lineitem, supplier, nation, region
-WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-  AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-  AND r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate < TIMESTAMP '1998-01-01'
-GROUP BY n_name
-ORDER BY revenue DESC
+_SQL_VOLUME_SHIPPING = """
+SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+       year(l_shipdate)::INT AS l_year,
+       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
+FROM lineitem
+JOIN supplier ON l_suppkey = s_suppkey
+JOIN nation n1 ON s_nationkey = n1.n_nationkey
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN nation n2 ON c_nationkey = n2.n_nationkey
+WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
+GROUP BY 1, 2, 3
+ORDER BY 1, 2, 3
 """
 
 
+@query(_SQL_VOLUME_SHIPPING)
 def q_volume_shipping_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q7 shape: bidirectional nation-pair trade volume by ship year.
     The nation dimension joins TWICE under different roles (supplier
@@ -9036,23 +9007,28 @@ def q_volume_shipping_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_VOLUME_SHIPPING = """
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-       year(l_shipdate)::INT AS l_year,
-       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
+_SQL_MARKET_SHARE = """
+SELECT year(o_orderdate)::INT AS o_year,
+       round(sum(CASE WHEN n1.n_name = 'NATION_3'
+                      THEN l_extendedprice * (1.0 - l_discount)
+                      ELSE 0.0 END)
+             / sum(l_extendedprice * (1.0 - l_discount)), 6) AS mkt_share,
+       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS total_volume
 FROM lineitem
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation n1 ON s_nationkey = n1.n_nationkey
+JOIN part ON l_partkey = p_partkey
 JOIN orders ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
 JOIN nation n2 ON c_nationkey = n2.n_nationkey
-WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
-GROUP BY 1, 2, 3
-ORDER BY 1, 2, 3
+JOIN region ON n2.n_regionkey = r_regionkey
+JOIN supplier ON l_suppkey = s_suppkey
+JOIN nation n1 ON s_nationkey = n1.n_nationkey
+WHERE r_name = 'AMERICA' AND p_type = 'PROMO'
+GROUP BY 1
+ORDER BY 1
 """
 
 
+@query(_SQL_MARKET_SHARE, bench=False)
 def q_market_share_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q8 shape: conditional share-of-total per group —
     sum(CASE WHEN nation THEN volume)/sum(volume) by order year, over a
@@ -9105,27 +9081,22 @@ def q_market_share_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_MARKET_SHARE = """
-SELECT year(o_orderdate)::INT AS o_year,
-       round(sum(CASE WHEN n1.n_name = 'NATION_3'
-                      THEN l_extendedprice * (1.0 - l_discount)
-                      ELSE 0.0 END)
-             / sum(l_extendedprice * (1.0 - l_discount)), 6) AS mkt_share,
-       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS total_volume
+_SQL_PRODUCT_PROFIT = """
+SELECT n_name AS nation, year(o_orderdate)::INT AS o_year,
+       round(sum(l_extendedprice * (1.0 - l_discount)
+                 - 0.6 * p_retailprice * l_quantity), 2) AS sum_profit
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation n2 ON c_nationkey = n2.n_nationkey
-JOIN region ON n2.n_regionkey = r_regionkey
 JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation n1 ON s_nationkey = n1.n_nationkey
-WHERE r_name = 'AMERICA' AND p_type = 'PROMO'
-GROUP BY 1
-ORDER BY 1
+JOIN nation ON s_nationkey = n_nationkey
+JOIN orders ON l_orderkey = o_orderkey
+WHERE p_name LIKE '%widget%'
+GROUP BY 1, 2
+ORDER BY nation, o_year DESC
 """
 
 
+@query(_SQL_PRODUCT_PROFIT)
 def q_product_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q9 shape: profit by supplier nation × order year with a
     substring part-name filter. The fixture has no partsupp, so supply
@@ -9162,21 +9133,23 @@ def q_product_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_PRODUCT_PROFIT = """
-SELECT n_name AS nation, year(o_orderdate)::INT AS o_year,
-       round(sum(l_extendedprice * (1.0 - l_discount)
-                 - 0.6 * p_retailprice * l_quantity), 2) AS sum_profit
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN orders ON l_orderkey = o_orderkey
-WHERE p_name LIKE '%widget%'
-GROUP BY 1, 2
-ORDER BY nation, o_year DESC
+_SQL_RETURNED_ITEMS = """
+SELECT c_custkey, c_name, c_acctbal, n_name,
+       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
+FROM orders
+JOIN lineitem ON o_orderkey = l_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN nation ON c_nationkey = n_nationkey
+WHERE o_orderdate >= TIMESTAMP '1997-01-01'
+  AND o_orderdate < TIMESTAMP '1997-07-01'
+  AND l_returnflag = 'R'
+GROUP BY 1, 2, 3, 4
+ORDER BY revenue DESC, c_custkey
+LIMIT 20
 """
 
 
+@query(_SQL_RETURNED_ITEMS)
 def q_returned_items_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q10 shape: lost-revenue ranking of customers on returned items
     (l_returnflag='R') within one quarter-year order window. Group keys
@@ -9209,22 +9182,23 @@ def q_returned_items_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_RETURNED_ITEMS = """
-SELECT c_custkey, c_name, c_acctbal, n_name,
-       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
-FROM orders
-JOIN lineitem ON o_orderkey = l_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-  AND o_orderdate < TIMESTAMP '1997-07-01'
-  AND l_returnflag = 'R'
-GROUP BY 1, 2, 3, 4
-ORDER BY revenue DESC, c_custkey
-LIMIT 20
+_SQL_TOP_SUPPLIER = """
+WITH revenue AS (
+  SELECT l_suppkey,
+         round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS total_revenue
+  FROM lineitem
+  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+    AND l_shipdate < TIMESTAMP '1997-04-01'
+  GROUP BY l_suppkey
+)
+SELECT s_suppkey, s_name, total_revenue
+FROM supplier JOIN revenue ON s_suppkey = l_suppkey
+WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
+ORDER BY s_suppkey
 """
 
 
+@query(_SQL_TOP_SUPPLIER, bench=False)
 def q_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q15 shape: revenue view + scalar-subquery max — supplier(s)
     whose quarter revenue equals the global maximum. The max is NOT
@@ -9256,22 +9230,17 @@ def q_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TOP_SUPPLIER = """
-WITH revenue AS (
-  SELECT l_suppkey,
-         round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS total_revenue
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-    AND l_shipdate < TIMESTAMP '1997-04-01'
-  GROUP BY l_suppkey
-)
-SELECT s_suppkey, s_name, total_revenue
-FROM supplier JOIN revenue ON s_suppkey = l_suppkey
-WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
-ORDER BY s_suppkey
+_SQL_DISJUNCTIVE = """
+SELECT round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
+       count(*)::BIGINT AS n_items
+FROM lineitem JOIN part ON l_partkey = p_partkey
+WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 1 AND 15)
+   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 20 AND l_quantity BETWEEN 5 AND 25)
+   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 30 AND l_quantity BETWEEN 10 AND 40)
 """
 
 
+@query(_SQL_DISJUNCTIVE, bench=False)
 def q_disjunctive_pred_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q19 shape: join with OR-of-conjunction residual predicates
     (brand/size/quantity brackets). The equi-key (partkey) still drives
@@ -9299,16 +9268,24 @@ def q_disjunctive_pred_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_DISJUNCTIVE = """
-SELECT round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
-       count(*)::BIGINT AS n_items
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 1 AND 15)
-   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 20 AND l_quantity BETWEEN 5 AND 25)
-   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 30 AND l_quantity BETWEEN 10 AND 40)
+_SQL_GLOBAL_SALES_OPP = """
+WITH cust AS (
+  SELECT *, substr(c_name, 16, 2) AS cntrycode FROM customer
+  WHERE substr(c_name, 16, 2) IN ('00','01','02','03','04','05','06')
+)
+SELECT cntrycode, count(*)::BIGINT AS numcust,
+       round(sum(c_acctbal), 2) AS totacctbal
+FROM cust
+WHERE c_acctbal > (SELECT avg(c_acctbal) FROM cust WHERE c_acctbal > 0.0)
+  AND NOT EXISTS (SELECT 1 FROM orders
+                  WHERE o_custkey = c_custkey
+                    AND o_orderdate >= TIMESTAMP '2001-01-01')
+GROUP BY cntrycode
+ORDER BY cntrycode
 """
 
 
+@query(_SQL_GLOBAL_SALES_OPP, bench=False)
 def q_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q22 shape: customers with above-average balance and NO orders,
     grouped by a derived code (digits 7-8 of the customer name — the
@@ -9346,23 +9323,26 @@ def q_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_GLOBAL_SALES_OPP = """
-WITH cust AS (
-  SELECT *, substr(c_name, 16, 2) AS cntrycode FROM customer
-  WHERE substr(c_name, 16, 2) IN ('00','01','02','03','04','05','06')
-)
-SELECT cntrycode, count(*)::BIGINT AS numcust,
-       round(sum(c_acctbal), 2) AS totacctbal
-FROM cust
-WHERE c_acctbal > (SELECT avg(c_acctbal) FROM cust WHERE c_acctbal > 0.0)
-  AND NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey
-                    AND o_orderdate >= TIMESTAMP '2001-01-01')
-GROUP BY cntrycode
-ORDER BY cntrycode
+_SQL_WINDOW_SUITE = """
+SELECT o_custkey, o_orderkey,
+       round(o_totalprice, 2) AS price,
+       round(lead(o_totalprice, 1) OVER w, 2) AS next_price,
+       round(first_value(o_totalprice) OVER w, 2) AS first_price,
+       round(last_value(o_totalprice) OVER
+             (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING), 2)
+         AS last_price,
+       ntile(4) OVER w AS quartile,
+       round(percent_rank() OVER w, 6) AS pct_rank,
+       round(cume_dist() OVER w, 6) AS cum_dist
+FROM orders
+WHERE o_custkey % 37 = 0
+WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+ORDER BY o_custkey, o_orderkey
 """
 
 
+@query(_SQL_WINDOW_SUITE)
 def q_window_suite_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window-function breadth beyond the reference's lag/rank/cumsum:
     lead, first_value, last_value (full frame), ntile(4), percent_rank
@@ -9387,25 +9367,39 @@ def q_window_suite_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_custkey", "o_orderkey")
 
 
-_SQL_WINDOW_SUITE = """
-SELECT o_custkey, o_orderkey,
-       round(o_totalprice, 2) AS price,
-       round(lead(o_totalprice, 1) OVER w, 2) AS next_price,
-       round(first_value(o_totalprice) OVER w, 2) AS first_price,
-       round(last_value(o_totalprice) OVER
-             (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING), 2)
-         AS last_price,
-       ntile(4) OVER w AS quartile,
-       round(percent_rank() OVER w, 6) AS pct_rank,
-       round(cume_dist() OVER w, 6) AS cum_dist
-FROM orders
-WHERE o_custkey % 37 = 0
-WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-ORDER BY o_custkey, o_orderkey
+_SQL_KMV_SKETCH = """
+WITH hashed AS (
+  SELECT DISTINCT event_type,
+         ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS h
+  FROM (SELECT DISTINCT event_type, user_id FROM events)
+),
+kmin AS (
+  SELECT event_type, h,
+         row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
+  FROM hashed
+),
+sk AS (
+  SELECT event_type, max(h) AS h_k, count(*)::BIGINT AS m
+  FROM kmin WHERE rn <= 64 GROUP BY event_type
+),
+exact AS (
+  SELECT event_type, count(DISTINCT user_id)::BIGINT AS exact_distinct
+  FROM events GROUP BY event_type
+)
+SELECT sk.event_type,
+       CASE WHEN m < 64 THEN m::DOUBLE
+            ELSE round((m - 1) * 1152921504606846976.0 / h_k, 2) END
+         AS est_distinct,
+       exact_distinct,
+       round(abs(CASE WHEN m < 64 THEN m::DOUBLE
+                      ELSE round((m - 1) * 1152921504606846976.0 / h_k, 2) END
+                 - exact_distinct) / exact_distinct, 4) AS rel_err
+FROM sk JOIN exact ON sk.event_type = exact.event_type
+ORDER BY sk.event_type
 """
 
 
+@query(_SQL_KMV_SKETCH)
 def q_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV (k-minimum-values) distinct-count sketch, k=64, per event
     type — the mergeable-sketch pattern for COUNT(DISTINCT) at 100 TB:
@@ -9471,38 +9465,18 @@ def q_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_KMV_SKETCH = """
-WITH hashed AS (
-  SELECT DISTINCT event_type,
-         ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS h
-  FROM (SELECT DISTINCT event_type, user_id FROM events)
-),
-kmin AS (
-  SELECT event_type, h,
-         row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
-  FROM hashed
-),
-sk AS (
-  SELECT event_type, max(h) AS h_k, count(*)::BIGINT AS m
-  FROM kmin WHERE rn <= 64 GROUP BY event_type
-),
-exact AS (
-  SELECT event_type, count(DISTINCT user_id)::BIGINT AS exact_distinct
-  FROM events GROUP BY event_type
-)
-SELECT sk.event_type,
-       CASE WHEN m < 64 THEN m::DOUBLE
-            ELSE round((m - 1) * 1152921504606846976.0 / h_k, 2) END
-         AS est_distinct,
-       exact_distinct,
-       round(abs(CASE WHEN m < 64 THEN m::DOUBLE
-                      ELSE round((m - 1) * 1152921504606846976.0 / h_k, 2) END
-                 - exact_distinct) / exact_distinct, 4) AS rel_err
-FROM sk JOIN exact ON sk.event_type = exact.event_type
-ORDER BY sk.event_type
+_SQL_FORECAST = """
+SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue_delta,
+       count(*)::BIGINT AS n_rows
+FROM lineitem
+WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+  AND l_shipdate < TIMESTAMP '1998-01-01'
+  AND l_discount BETWEEN 0.04 AND 0.08
+  AND l_quantity < 24
 """
 
 
+@query(_SQL_FORECAST)
 def q_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q6 shape: pure scan→filter→scalar-agg, zero joins. The entire
     predicate (shipdate year, discount band, quantity cap) pushes into
@@ -9527,17 +9501,22 @@ def q_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_FORECAST = """
-SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue_delta,
-       count(*)::BIGINT AS n_rows
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+_SQL_PRIORITY_RETURNFLAG = """
+SELECT l_returnflag,
+       sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                THEN 1 ELSE 0 END)::BIGINT AS high_line_count,
+       sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                THEN 0 ELSE 1 END)::BIGINT AS low_line_count
+FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+WHERE l_returnflag IN ('A', 'N')
+  AND l_shipdate >= TIMESTAMP '1997-01-01'
   AND l_shipdate < TIMESTAMP '1998-01-01'
-  AND l_discount BETWEEN 0.04 AND 0.08
-  AND l_quantity < 24
+GROUP BY l_returnflag
+ORDER BY l_returnflag
 """
 
 
+@query(_SQL_PRIORITY_RETURNFLAG)
 def q_priority_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q12 shape (l_returnflag stands in for the fixture's missing
     l_shipmode): fact⋈fact join on orderkey, then conditional counts
@@ -9565,21 +9544,28 @@ def q_priority_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_PRIORITY_RETURNFLAG = """
-SELECT l_returnflag,
-       sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                THEN 1 ELSE 0 END)::BIGINT AS high_line_count,
-       sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                THEN 0 ELSE 1 END)::BIGINT AS low_line_count
-FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-WHERE l_returnflag IN ('A', 'N')
-  AND l_shipdate >= TIMESTAMP '1997-01-01'
-  AND l_shipdate < TIMESTAMP '1998-01-01'
-GROUP BY l_returnflag
-ORDER BY l_returnflag
+_SQL_MIN_COST_SUPPLIER = """
+WITH offer AS (
+  SELECT l_partkey, l_suppkey, p_name,
+         round(avg(l_extendedprice / l_quantity), 6) AS unit_cost
+  FROM lineitem
+  JOIN part ON p_partkey = l_partkey
+  WHERE p_type = 'LARGE' AND p_size BETWEEN 1 AND 15
+  GROUP BY 1, 2, 3
+)
+SELECT o.l_partkey AS p_partkey, o.p_name, s_name, n_name,
+       round(s_acctbal, 2) AS s_acctbal, o.unit_cost
+FROM offer o
+JOIN supplier ON s_suppkey = o.l_suppkey
+JOIN nation ON n_nationkey = s_nationkey
+WHERE o.unit_cost = (SELECT min(o2.unit_cost) FROM offer o2
+                     WHERE o2.l_partkey = o.l_partkey)
+ORDER BY s_acctbal DESC, p_partkey, s_name
+LIMIT 100
 """
 
 
+@query(_SQL_MIN_COST_SUPPLIER)
 def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2 shape: correlated min subquery — for each qualifying part,
     the supplier(s) offering the minimum unit price (avg
@@ -9634,27 +9620,24 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_MIN_COST_SUPPLIER = """
-WITH offer AS (
-  SELECT l_partkey, l_suppkey, p_name,
-         round(avg(l_extendedprice / l_quantity), 6) AS unit_cost
+_SQL_IMPORTANT_PART_VALUE = """
+WITH value AS (
+  SELECT l_partkey,
+         round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS part_value
   FROM lineitem
-  JOIN part ON p_partkey = l_partkey
-  WHERE p_type = 'LARGE' AND p_size BETWEEN 1 AND 15
-  GROUP BY 1, 2, 3
+  JOIN supplier ON s_suppkey = l_suppkey
+  JOIN nation ON n_nationkey = s_nationkey
+  WHERE n_name IN ('NATION_12', 'NATION_13', 'NATION_15', 'NATION_18')
+  GROUP BY l_partkey
 )
-SELECT o.l_partkey AS p_partkey, o.p_name, s_name, n_name,
-       round(s_acctbal, 2) AS s_acctbal, o.unit_cost
-FROM offer o
-JOIN supplier ON s_suppkey = o.l_suppkey
-JOIN nation ON n_nationkey = s_nationkey
-WHERE o.unit_cost = (SELECT min(o2.unit_cost) FROM offer o2
-                     WHERE o2.l_partkey = o.l_partkey)
-ORDER BY s_acctbal DESC, p_partkey, s_name
-LIMIT 100
+SELECT l_partkey, part_value
+FROM value
+WHERE part_value > (SELECT sum(part_value) * 0.001 FROM value)
+ORDER BY part_value DESC, l_partkey
 """
 
 
+@query(_SQL_IMPORTANT_PART_VALUE, bench=False)
 def q_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q11 shape: per-part value restricted to a supplier-nation group,
     HAVING value > fraction × the global sum — a scalar subquery over
@@ -9694,23 +9677,19 @@ def q_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_IMPORTANT_PART_VALUE = """
-WITH value AS (
-  SELECT l_partkey,
-         round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS part_value
-  FROM lineitem
-  JOIN supplier ON s_suppkey = l_suppkey
-  JOIN nation ON n_nationkey = s_nationkey
-  WHERE n_name IN ('NATION_12', 'NATION_13', 'NATION_15', 'NATION_18')
-  GROUP BY l_partkey
-)
-SELECT l_partkey, part_value
-FROM value
-WHERE part_value > (SELECT sum(part_value) * 0.001 FROM value)
-ORDER BY part_value DESC, l_partkey
+_SQL_SUPPLIER_CNT = """
+SELECT p_brand, p_size, count(DISTINCT l_suppkey)::BIGINT AS supplier_cnt
+FROM lineitem JOIN part ON p_partkey = l_partkey
+WHERE p_brand <> 'Brand#1'
+  AND p_type <> 'PROMO'
+  AND p_size IN (1, 9, 14, 19, 23, 36, 45, 49)
+  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+GROUP BY p_brand, p_size
+ORDER BY supplier_cnt DESC, p_brand, p_size
 """
 
 
+@query(_SQL_SUPPLIER_CNT, bench=False)
 def q_supplier_cnt_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q16 shape: distinct-supplier counts per part attribute bucket,
     with a NOT IN exclusion subquery (negative-balance suppliers —
@@ -9739,18 +9718,28 @@ def q_supplier_cnt_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SUPPLIER_CNT = """
-SELECT p_brand, p_size, count(DISTINCT l_suppkey)::BIGINT AS supplier_cnt
-FROM lineitem JOIN part ON p_partkey = l_partkey
-WHERE p_brand <> 'Brand#1'
-  AND p_type <> 'PROMO'
-  AND p_size IN (1, 9, 14, 19, 23, 36, 45, 49)
-  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY p_brand, p_size
-ORDER BY supplier_cnt DESC, p_brand, p_size
+_SQL_EXCESS_STOCK = """
+WITH sp AS (
+  SELECT l_suppkey, l_partkey, sum(l_quantity) AS qty
+  FROM lineitem
+  JOIN part ON p_partkey = l_partkey
+  WHERE p_name LIKE 'red%'
+    AND l_shipdate >= TIMESTAMP '1997-01-01'
+    AND l_shipdate < TIMESTAMP '1998-01-01'
+  GROUP BY 1, 2
+),
+pt AS (SELECT l_partkey, avg(qty) AS avg_qty FROM sp GROUP BY 1)
+SELECT s_suppkey, s_name, n_name
+FROM supplier
+JOIN nation ON n_nationkey = s_nationkey
+WHERE s_suppkey IN (SELECT sp.l_suppkey FROM sp
+                    JOIN pt ON pt.l_partkey = sp.l_partkey
+                    WHERE sp.qty > 1.5 * pt.avg_qty)
+ORDER BY s_suppkey
 """
 
 
+@query(_SQL_EXCESS_STOCK, bench=False)
 def q_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q20 shape: nested IN-subqueries — suppliers who shipped, for
     some name-prefixed part, more than 1.5× that part's average
@@ -9791,27 +9780,26 @@ def q_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_EXCESS_STOCK = """
-WITH sp AS (
-  SELECT l_suppkey, l_partkey, sum(l_quantity) AS qty
-  FROM lineitem
-  JOIN part ON p_partkey = l_partkey
-  WHERE p_name LIKE 'red%'
-    AND l_shipdate >= TIMESTAMP '1997-01-01'
-    AND l_shipdate < TIMESTAMP '1998-01-01'
-  GROUP BY 1, 2
-),
-pt AS (SELECT l_partkey, avg(qty) AS avg_qty FROM sp GROUP BY 1)
-SELECT s_suppkey, s_name, n_name
-FROM supplier
-JOIN nation ON n_nationkey = s_nationkey
-WHERE s_suppkey IN (SELECT sp.l_suppkey FROM sp
-                    JOIN pt ON pt.l_partkey = sp.l_partkey
-                    WHERE sp.qty > 1.5 * pt.avg_qty)
-ORDER BY s_suppkey
+_SQL_LATE_SHIPPERS = """
+SELECT s_name, count(*)::BIGINT AS numwait
+FROM lineitem l1
+JOIN orders ON o_orderkey = l1.l_orderkey
+JOIN supplier ON s_suppkey = l1.l_suppkey
+WHERE o_orderstatus = 'F'
+  AND EXISTS (SELECT 1 FROM lineitem l2
+              WHERE l2.l_orderkey = l1.l_orderkey
+                AND l2.l_suppkey <> l1.l_suppkey)
+  AND NOT EXISTS (SELECT 1 FROM lineitem l3
+                  WHERE l3.l_orderkey = l1.l_orderkey
+                    AND l3.l_suppkey <> l1.l_suppkey
+                    AND l3.l_shipdate > l1.l_shipdate)
+GROUP BY s_name
+ORDER BY numwait DESC, s_name
+LIMIT 20
 """
 
 
+@query(_SQL_LATE_SHIPPERS)
 def q_late_shipper_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q21 shape: correlated EXISTS + NOT EXISTS with inequality
     correlation — suppliers who were the LAST to ship in finished
@@ -9879,44 +9867,6 @@ def q_late_shipper_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_LATE_SHIPPERS = """
-SELECT s_name, count(*)::BIGINT AS numwait
-FROM lineitem l1
-JOIN orders ON o_orderkey = l1.l_orderkey
-JOIN supplier ON s_suppkey = l1.l_suppkey
-WHERE o_orderstatus = 'F'
-  AND EXISTS (SELECT 1 FROM lineitem l2
-              WHERE l2.l_orderkey = l1.l_orderkey
-                AND l2.l_suppkey <> l1.l_suppkey)
-  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                  WHERE l3.l_orderkey = l1.l_orderkey
-                    AND l3.l_suppkey <> l1.l_suppkey
-                    AND l3.l_shipdate > l1.l_shipdate)
-GROUP BY s_name
-ORDER BY numwait DESC, s_name
-LIMIT 20
-"""
-
-
-def q_streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.11 — sliding event-time windows (2 h window, 1 h slide): the
-    overlapping-window aggregation only tumbling windows can't express.
-    availableNow drain ⇒ equals the batch explode-to-covering-windows
-    SQL, which is exactly the expansion Spark's TimeWindow node applies
-    per row before the windowed agg."""
-    from ..streaming.windows import (
-        run_to_memory,
-        scoped_shuffle_partitions,
-        sliding_counts_stream,
-        stream_events,
-    )
-
-    ev = stream_events(spark, sf_dir)
-    with scoped_shuffle_partitions(spark):
-        out = run_to_memory(sliding_counts_stream(ev))
-    return out.orderBy("win_start", "event_type")
-
-
 _SQL_STREAM_SLIDING = """
 SELECT time_bucket(INTERVAL 1 HOUR, ts) - k.k * INTERVAL 1 HOUR AS win_start,
        event_type, count(*)::BIGINT AS n, round(sum(value), 4) AS val_sum
@@ -9926,6 +9876,30 @@ ORDER BY win_start, event_type
 """
 
 
+@query(_SQL_STREAM_SLIDING, bench=False)
+def q_streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.11 — sliding event-time windows (2 h window, 1 h slide): the
+    overlapping-window aggregation only tumbling windows can't express.
+    availableNow drain ⇒ equals the batch explode-to-covering-windows
+    SQL, which is exactly the expansion Spark's TimeWindow node applies
+    per row before the windowed agg."""
+    ev = win.stream_events(spark, sf_dir)
+    with win.scoped_shuffle_partitions(spark):
+        out = win.run_to_memory(win.sliding_counts_stream(ev))
+    return out.orderBy("win_start", "event_type")
+
+
+_SQL_GROUPED_PCT = """
+SELECT event_type,
+       round(quantile_cont(value, 0.5), 6) AS p50,
+       round(quantile_cont(value, 0.9), 6) AS p90,
+       round(quantile_cont(value, 0.99), 6) AS p99,
+       count(*)::BIGINT AS n
+FROM events GROUP BY event_type ORDER BY event_type
+"""
+
+
+@query(_SQL_GROUPED_PCT)
 def q_grouped_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10 companion — EXACT interpolated percentiles per group
     (percentile_cont / R-7 semantics on both engines). At 100 TB the
@@ -9949,16 +9923,37 @@ def q_grouped_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-_SQL_GROUPED_PCT = """
-SELECT event_type,
-       round(quantile_cont(value, 0.5), 6) AS p50,
-       round(quantile_cont(value, 0.9), 6) AS p90,
-       round(quantile_cont(value, 0.99), 6) AS p99,
-       count(*)::BIGINT AS n
-FROM events GROUP BY event_type ORDER BY event_type
+_SQL_ROBUST_STATS = """
+WITH base AS (
+  SELECT event_type,
+         quantile_cont(value, 0.5) AS med,
+         quantile_cont(value, 0.25) AS q1,
+         quantile_cont(value, 0.75) AS q3
+  FROM events GROUP BY event_type
+),
+mad AS (
+  SELECT e.event_type, quantile_cont(abs(e.value - b.med), 0.5) AS mad_raw
+  FROM events e JOIN base b ON e.event_type = b.event_type
+  GROUP BY e.event_type
+),
+outl AS (
+  SELECT e.event_type,
+         sum(CASE WHEN e.value < b.q1 - 1.5 * (b.q3 - b.q1)
+                    OR e.value > b.q3 + 1.5 * (b.q3 - b.q1)
+                  THEN 1 ELSE 0 END)::BIGINT AS n_outliers,
+         count(*)::BIGINT AS n
+  FROM events e JOIN base b ON e.event_type = b.event_type
+  GROUP BY e.event_type
+)
+SELECT b.event_type, round(b.med, 6) AS median, round(m.mad_raw, 6) AS mad,
+       round(b.q3 - b.q1, 6) AS iqr, o.n_outliers, o.n
+FROM base b JOIN mad m ON b.event_type = m.event_type
+JOIN outl o ON b.event_type = o.event_type
+ORDER BY b.event_type
 """
 
 
+@query(_SQL_ROBUST_STATS)
 def q_robust_outlier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-group dispersion — median / MAD / IQR and the Tukey
     -fence outlier census (the heavy-tail-safe alternative to F11's
@@ -10010,36 +10005,16 @@ def q_robust_outlier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_ROBUST_STATS = """
-WITH base AS (
-  SELECT event_type,
-         quantile_cont(value, 0.5) AS med,
-         quantile_cont(value, 0.25) AS q1,
-         quantile_cont(value, 0.75) AS q3
-  FROM events GROUP BY event_type
-),
-mad AS (
-  SELECT e.event_type, quantile_cont(abs(e.value - b.med), 0.5) AS mad_raw
-  FROM events e JOIN base b ON e.event_type = b.event_type
-  GROUP BY e.event_type
-),
-outl AS (
-  SELECT e.event_type,
-         sum(CASE WHEN e.value < b.q1 - 1.5 * (b.q3 - b.q1)
-                    OR e.value > b.q3 + 1.5 * (b.q3 - b.q1)
-                  THEN 1 ELSE 0 END)::BIGINT AS n_outliers,
-         count(*)::BIGINT AS n
-  FROM events e JOIN base b ON e.event_type = b.event_type
-  GROUP BY e.event_type
-)
-SELECT b.event_type, round(b.med, 6) AS median, round(m.mad_raw, 6) AS mad,
-       round(b.q3 - b.q1, 6) AS iqr, o.n_outliers, o.n
-FROM base b JOIN mad m ON b.event_type = m.event_type
-JOIN outl o ON b.event_type = o.event_type
-ORDER BY b.event_type
+_SQL_INTERSECT = """
+SELECT c_custkey FROM customer WHERE c_acctbal > 5000
+INTERSECT
+SELECT o_custkey AS c_custkey FROM orders
+WHERE o_orderdate >= TIMESTAMP '1998-01-01'
+ORDER BY c_custkey
 """
 
 
+@query(_SQL_INTERSECT, bench=False)
 def q_intersect_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U-family completion — INTERSECT (distinct set semantics):
     high-balance customers ∩ customers ordering in 1998+. Catalyst
@@ -10055,15 +10030,20 @@ def q_intersect_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rich.intersect(recent).orderBy("c_custkey")
 
 
-_SQL_INTERSECT = """
-SELECT c_custkey FROM customer WHERE c_acctbal > 5000
-INTERSECT
-SELECT o_custkey AS c_custkey FROM orders
-WHERE o_orderdate >= TIMESTAMP '1998-01-01'
-ORDER BY c_custkey
+_SQL_ORDER_ARRAYS = """
+SELECT l_orderkey,
+       array_to_string(list_sort(list(l_partkey)), ',') AS items_str,
+       count(*)::INT AS n_items,
+       max(l_partkey) AS max_part,
+       sum(l_quantity)::BIGINT AS qty_sum
+FROM lineitem
+WHERE l_orderkey % 53 = 0
+GROUP BY l_orderkey
+ORDER BY l_orderkey
 """
 
 
+@query(_SQL_ORDER_ARRAYS)
 def q_order_item_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array/HOF surface — per-order item rollup into typed arrays:
     collect → array_sort → string-encode, plus an ``aggregate`` HOF
@@ -10093,35 +10073,6 @@ def q_order_item_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_ORDER_ARRAYS = """
-SELECT l_orderkey,
-       array_to_string(list_sort(list(l_partkey)), ',') AS items_str,
-       count(*)::INT AS n_items,
-       max(l_partkey) AS max_part,
-       sum(l_quantity)::BIGINT AS qty_sum
-FROM lineitem
-WHERE l_orderkey % 53 = 0
-GROUP BY l_orderkey
-ORDER BY l_orderkey
-"""
-
-
-def q_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skyline / Pareto frontier (operators/skyline): parts not
-    dominated on (minimize p_retailprice, maximize p_size). Two-phase
-    distributed BNL-with-presort — per-partition local skylines via
-    mapInPandas, then one reduce pass over the union of frontiers.
-    The oracle is the NOT EXISTS dominance definition itself
-    (quadratic — fine at oracle SF; the operator is the scale path)."""
-    from ..operators.skyline import skyline
-
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_size", "p_retailprice")
-    sky = skyline(part, minimize=["p_retailprice"], maximize=["p_size"])
-    return sky.select(
-        "p_partkey", "p_size", F.round("p_retailprice", 2).alias("p_retailprice")
-    ).orderBy("p_partkey")
-
-
 _SQL_SKYLINE = """
 SELECT p_partkey, p_size, round(p_retailprice, 2) AS p_retailprice
 FROM part p
@@ -10134,6 +10085,42 @@ ORDER BY p_partkey
 """
 
 
+@query(_SQL_SKYLINE)
+def q_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Skyline / Pareto frontier (operators/skyline): parts not
+    dominated on (minimize p_retailprice, maximize p_size). Two-phase
+    distributed BNL-with-presort — per-partition local skylines via
+    mapInPandas, then one reduce pass over the union of frontiers.
+    The oracle is the NOT EXISTS dominance definition itself
+    (quadratic — fine at oracle SF; the operator is the scale path)."""
+    part = _t(spark, sf_dir, "part").select("p_partkey", "p_size", "p_retailprice")
+    sky = skyline.skyline(part, minimize=["p_retailprice"], maximize=["p_size"])
+    return sky.select(
+        "p_partkey", "p_size", F.round("p_retailprice", 2).alias("p_retailprice")
+    ).orderBy("p_partkey")
+
+
+_SQL_REPETITION = """
+WITH t AS (
+  SELECT source, regexp_split_to_array(trim(text), '\\s+') AS toks
+  FROM documents
+),
+d AS (
+  SELECT source, len(toks) - 2 AS n_tri,
+         list_transform(range(1, len(toks) - 1),
+                        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) AS tris
+  FROM t WHERE len(toks) >= 3
+)
+SELECT source, count(*)::BIGINT AS n_docs,
+       round(avg(1.0 - len(list_distinct(tris)) / n_tri), 6) AS avg_rep,
+       round(max(1.0 - len(list_distinct(tris)) / n_tri), 6) AS max_rep,
+       sum(CASE WHEN 1.0 - len(list_distinct(tris)) / n_tri > 0.2
+                THEN 1 ELSE 0 END)::BIGINT AS n_repetitive
+FROM d GROUP BY source ORDER BY source
+"""
+
+
+@query(_SQL_REPETITION)
 def q_repetition_ratio_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text-quality extension — within-document repetition: the
     fraction of duplicate word trigrams (1 − distinct/total), the
@@ -10180,71 +10167,6 @@ def q_repetition_ratio_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_REPETITION = """
-WITH t AS (
-  SELECT source, regexp_split_to_array(trim(text), '\\s+') AS toks
-  FROM documents
-),
-d AS (
-  SELECT source, len(toks) - 2 AS n_tri,
-         list_transform(range(1, len(toks) - 1),
-                        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) AS tris
-  FROM t WHERE len(toks) >= 3
-)
-SELECT source, count(*)::BIGINT AS n_docs,
-       round(avg(1.0 - len(list_distinct(tris)) / n_tri), 6) AS avg_rep,
-       round(max(1.0 - len(list_distinct(tris)) / n_tri), 6) AS max_rep,
-       sum(CASE WHEN 1.0 - len(list_distinct(tris)) / n_tri > 0.2
-                THEN 1 ELSE 0 END)::BIGINT AS n_repetitive
-FROM d GROUP BY source ORDER BY source
-"""
-
-
-def q_bloom_prune_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter join pruning (`operators/scale.bloom_bitmap` /
-    `bloom_flag`) — the explicit runtime-filter technique: build a
-    2048-bit, 3-hash bitmap from a small dim key set (high-balance
-    customers), ship it to the fact side (k broadcast equi-joins on
-    the 64-row word table — all codegen, no UDF, no collect), and
-    count what survives vs the exact semi-join. Output pins the Bloom
-    contract itself: n_missed = 0 (NO false negatives) and the
-    measured false-positive rate. The md5-prefix hash is bit-identical
-    in DuckDB, so the oracle replays the bitmap build AND the probe —
-    the whole filter, not just the counts. At 100 TB this prunes the
-    fact shuffle before the join; Spark's own AQE runtime filters are
-    the automatic form, this is the engine-level primitive."""
-    from ..operators.scale import bloom_bitmap, bloom_flag
-
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    dim = customer.filter(F.col("c_acctbal") > 9000).select("c_custkey")
-    bitmap = bloom_bitmap(dim, "c_custkey")
-    flagged = bloom_flag(orders.select("o_custkey"), "o_custkey", bitmap).join(
-        F.broadcast(dim.withColumn("is_true", F.lit(1))),
-        F.col("o_custkey") == F.col("c_custkey"),
-        "left",
-    )
-    return flagged.agg(
-        F.count(F.lit(1)).alias("n_total"),
-        F.sum(F.coalesce(F.col("is_true"), F.lit(0))).alias("n_true"),
-        F.sum(F.when(F.col("bloom_pass"), 1).otherwise(0)).alias("n_candidates"),
-        F.sum(
-            F.when(F.col("bloom_pass") & F.col("is_true").isNull(), 1).otherwise(0)
-        ).alias("n_false_pos"),
-        F.sum(
-            F.when(~F.col("bloom_pass") & F.col("is_true").isNotNull(), 1).otherwise(0)
-        ).alias("n_missed"),
-    ).select(
-        "n_total",
-        "n_true",
-        "n_candidates",
-        "n_missed",
-        F.round(
-            F.col("n_false_pos") / (F.col("n_total") - F.col("n_true")), 6
-        ).alias("fpr"),
-    )
-
-
 _SQL_BLOOM_PRUNE = """
 WITH dim AS (SELECT c_custkey FROM customer WHERE c_acctbal > 9000),
 pos AS (
@@ -10286,6 +10208,72 @@ FROM flag
 """
 
 
+@query(_SQL_BLOOM_PRUNE)
+def q_bloom_prune_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bloom-filter join pruning (`operators/scale.bloom_bitmap` /
+    `bloom_flag`) — the explicit runtime-filter technique: build a
+    2048-bit, 3-hash bitmap from a small dim key set (high-balance
+    customers), ship it to the fact side (k broadcast equi-joins on
+    the 64-row word table — all codegen, no UDF, no collect), and
+    count what survives vs the exact semi-join. Output pins the Bloom
+    contract itself: n_missed = 0 (NO false negatives) and the
+    measured false-positive rate. The md5-prefix hash is bit-identical
+    in DuckDB, so the oracle replays the bitmap build AND the probe —
+    the whole filter, not just the counts. At 100 TB this prunes the
+    fact shuffle before the join; Spark's own AQE runtime filters are
+    the automatic form, this is the engine-level primitive."""
+    customer = _t(spark, sf_dir, "customer")
+    orders = _t(spark, sf_dir, "orders")
+    dim = customer.filter(F.col("c_acctbal") > 9000).select("c_custkey")
+    bitmap = sc.bloom_bitmap(dim, "c_custkey")
+    flagged = sc.bloom_flag(orders.select("o_custkey"), "o_custkey", bitmap).join(
+        F.broadcast(dim.withColumn("is_true", F.lit(1))),
+        F.col("o_custkey") == F.col("c_custkey"),
+        "left",
+    )
+    return flagged.agg(
+        F.count(F.lit(1)).alias("n_total"),
+        F.sum(F.coalesce(F.col("is_true"), F.lit(0))).alias("n_true"),
+        F.sum(F.when(F.col("bloom_pass"), 1).otherwise(0)).alias("n_candidates"),
+        F.sum(
+            F.when(F.col("bloom_pass") & F.col("is_true").isNull(), 1).otherwise(0)
+        ).alias("n_false_pos"),
+        F.sum(
+            F.when(~F.col("bloom_pass") & F.col("is_true").isNotNull(), 1).otherwise(0)
+        ).alias("n_missed"),
+    ).select(
+        "n_total",
+        "n_true",
+        "n_candidates",
+        "n_missed",
+        F.round(
+            F.col("n_false_pos") / (F.col("n_total") - F.col("n_true")), 6
+        ).alias("fpr"),
+    )
+
+
+_SQL_ROLLING_ANOMALY = """
+WITH daily AS (
+  SELECT date_trunc('day', o_orderdate) AS day,
+         round(sum(o_totalprice), 2) AS revenue
+  FROM orders GROUP BY 1
+),
+r AS (
+  SELECT day, revenue,
+         avg(revenue) OVER w AS avg7,
+         stddev_samp(revenue) OVER w AS sd7,
+         count(*) OVER w AS cnt
+  FROM daily
+  WINDOW w AS (ORDER BY day ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
+)
+SELECT day, revenue, round((revenue - avg7) / sd7, 4) AS z
+FROM r
+WHERE cnt = 7 AND abs((revenue - avg7) / sd7) > 2
+ORDER BY day
+"""
+
+
+@query(_SQL_ROLLING_ANOMALY)
 def q_rolling_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling z-score anomaly detection on daily revenue: each day
     scored against the trailing 7 days' mean/stddev (frame excludes
@@ -10315,27 +10303,27 @@ def q_rolling_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_ROLLING_ANOMALY = """
-WITH daily AS (
-  SELECT date_trunc('day', o_orderdate) AS day,
-         round(sum(o_totalprice), 2) AS revenue
-  FROM orders GROUP BY 1
+_SQL_SOURCE_DIVERGENCE = """
+WITH sl AS (
+  SELECT source, lang, count(*)::BIGINT AS n_sl FROM documents GROUP BY 1, 2
 ),
-r AS (
-  SELECT day, revenue,
-         avg(revenue) OVER w AS avg7,
-         stddev_samp(revenue) OVER w AS sd7,
-         count(*) OVER w AS cnt
-  FROM daily
-  WINDOW w AS (ORDER BY day ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
-)
-SELECT day, revenue, round((revenue - avg7) / sd7, 4) AS z
-FROM r
-WHERE cnt = 7 AND abs((revenue - avg7) / sd7) > 2
-ORDER BY day
+s AS (SELECT source, sum(n_sl) AS n_s FROM sl GROUP BY 1),
+lg AS (SELECT lang, sum(n_sl) AS n_l FROM sl GROUP BY 1),
+tot AS (SELECT count(*)::DOUBLE AS n FROM documents)
+SELECT sl.source, max(s.n_s)::BIGINT AS n_docs,
+       round(-sum((n_sl / n_s) * ln(n_sl / n_s)), 6) AS entropy,
+       round(sum((n_sl / n_s) * ln((n_sl / n_s) / (n_l / tot.n))), 6)
+         AS kl_from_global
+FROM sl
+JOIN s ON sl.source = s.source
+JOIN lg ON sl.lang = lg.lang
+CROSS JOIN tot
+GROUP BY sl.source
+ORDER BY sl.source
 """
 
 
+@query(_SQL_SOURCE_DIVERGENCE)
 def q_source_lang_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-mix diagnostics: per-source language-distribution entropy
     and KL divergence from the corpus-wide language mix — the drift /
@@ -10364,26 +10352,20 @@ def q_source_lang_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SOURCE_DIVERGENCE = """
-WITH sl AS (
-  SELECT source, lang, count(*)::BIGINT AS n_sl FROM documents GROUP BY 1, 2
-),
-s AS (SELECT source, sum(n_sl) AS n_s FROM sl GROUP BY 1),
-lg AS (SELECT lang, sum(n_sl) AS n_l FROM sl GROUP BY 1),
-tot AS (SELECT count(*)::DOUBLE AS n FROM documents)
-SELECT sl.source, max(s.n_s)::BIGINT AS n_docs,
-       round(-sum((n_sl / n_s) * ln(n_sl / n_s)), 6) AS entropy,
-       round(sum((n_sl / n_s) * ln((n_sl / n_s) / (n_l / tot.n))), 6)
-         AS kl_from_global
-FROM sl
-JOIN s ON sl.source = s.source
-JOIN lg ON sl.lang = lg.lang
-CROSS JOIN tot
-GROUP BY sl.source
-ORDER BY sl.source
+_SQL_FUZZY_DUP = """
+WITH d AS (
+  SELECT doc_id, substr(text, 1, 8) AS blk, substr(text, 1, 32) AS head
+  FROM documents
+)
+SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+       levenshtein(a.head, b.head)::INT AS dist
+FROM d a JOIN d b ON a.blk = b.blk AND a.doc_id < b.doc_id
+WHERE levenshtein(a.head, b.head) <= 8
+ORDER BY a_id, b_id
 """
 
 
+@query(_SQL_FUZZY_DUP)
 def q_fuzzy_dup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance near-dup detection — the dedup-family member the
     shingle methods can't express (they see token multisets; this sees
@@ -10415,19 +10397,14 @@ def q_fuzzy_dup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_FUZZY_DUP = """
-WITH d AS (
-  SELECT doc_id, substr(text, 1, 8) AS blk, substr(text, 1, 32) AS head
-  FROM documents
-)
-SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-       levenshtein(a.head, b.head)::INT AS dist
-FROM d a JOIN d b ON a.blk = b.blk AND a.doc_id < b.doc_id
-WHERE levenshtein(a.head, b.head) <= 8
-ORDER BY a_id, b_id
+_SQL_STREAM_DEDUP_HOURLY = """
+WITH d AS (SELECT DISTINCT user_id, event_type, ts FROM events)
+SELECT time_bucket(INTERVAL 1 HOUR, ts) AS hour_start, count(*)::BIGINT AS n
+FROM d GROUP BY 1 ORDER BY hour_start
 """
 
 
+@query(_SQL_STREAM_DEDUP_HOURLY, bench=False)
 def q_streaming_dedup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.11 — CHAINED stateful operators in one streaming query:
     watermarked dedup (dropDuplicatesWithinWatermark on
@@ -10437,13 +10414,7 @@ def q_streaming_dedup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     state-partition scoping matters (state instances = partitions ×
     stateful ops). availableNow drain ⇒ oracle = batch DISTINCT then
     hourly GROUP BY."""
-    from ..streaming.windows import (
-        run_to_memory,
-        scoped_shuffle_partitions,
-        stream_events,
-    )
-
-    ev = stream_events(spark, sf_dir)
+    ev = win.stream_events(spark, sf_dir)
     deduped = ev.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["user_id", "event_type", "ts"]
     )
@@ -10452,38 +10423,9 @@ def q_streaming_dedup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("hour_start"), "n")
     )
-    with scoped_shuffle_partitions(spark):
-        out = run_to_memory(agg)
+    with win.scoped_shuffle_partitions(spark):
+        out = win.run_to_memory(agg)
     return out.orderBy("hour_start")
-
-
-_SQL_STREAM_DEDUP_HOURLY = """
-WITH d AS (SELECT DISTINCT user_id, event_type, ts FROM events)
-SELECT time_bucket(INTERVAL 1 HOUR, ts) AS hour_start, count(*)::BIGINT AS n
-FROM d GROUP BY 1 ORDER BY hour_start
-"""
-
-
-def q_heavy_hitter_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy hitters (`operators/scale.frequent_items`): brands above
-    4.08% of lineitem volume, found sketch-style — per-partition exact
-    counts generate candidates (pigeonhole: a global heavy hitter MUST
-    exceed the local threshold in some partition, on any partitioning),
-    then a semi-join-pruned exact recount filters at support·n. The
-    output is provably exactly the > support·n set, which is why a
-    plain HAVING-clause oracle checks a partition-aware algorithm.
-    At 100 TB the local counter swaps for a bounded-memory
-    Misra-Gries/SpaceSaving sketch; the two-phase shape is unchanged.
-    The brand key comes from a broadcast part join before the count."""
-    from ..operators.scale import frequent_items
-
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    branded = li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-    return (
-        frequent_items(branded.select("p_brand"), ["p_brand"], support=0.0408)
-        .orderBy(F.desc("freq"), "p_brand")
-    )
 
 
 _SQL_HEAVY_HITTERS = """
@@ -10498,6 +10440,41 @@ ORDER BY freq DESC, p_brand
 """
 
 
+@query(_SQL_HEAVY_HITTERS)
+def q_heavy_hitter_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Heavy hitters (`operators/scale.frequent_items`): brands above
+    4.08% of lineitem volume, found sketch-style — per-partition exact
+    counts generate candidates (pigeonhole: a global heavy hitter MUST
+    exceed the local threshold in some partition, on any partitioning),
+    then a semi-join-pruned exact recount filters at support·n. The
+    output is provably exactly the > support·n set, which is why a
+    plain HAVING-clause oracle checks a partition-aware algorithm.
+    At 100 TB the local counter swaps for a bounded-memory
+    Misra-Gries/SpaceSaving sketch; the two-phase shape is unchanged.
+    The brand key comes from a broadcast part join before the count."""
+    li = _t(spark, sf_dir, "lineitem").select("l_partkey")
+    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    branded = li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+    return (
+        sc.frequent_items(branded.select("p_brand"), ["p_brand"], support=0.0408)
+        .orderBy(F.desc("freq"), "p_brand")
+    )
+
+
+_SQL_COPURCHASE = """
+WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
+SELECT a.l_partkey AS a_part, b.l_partkey AS b_part,
+       count(*)::BIGINT AS support
+FROM op a JOIN op b
+  ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+GROUP BY 1, 2
+HAVING count(*) >= 3
+ORDER BY support DESC, a_part, b_part
+LIMIT 20
+"""
+
+
+@query(_SQL_COPURCHASE)
 def q_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket pair mining (A-priori level 2): parts co-occurring
     in the same order, support ≥ 3, top-20. The self-join keys on
@@ -10534,19 +10511,25 @@ def q_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_COPURCHASE = """
-WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-SELECT a.l_partkey AS a_part, b.l_partkey AS b_part,
-       count(*)::BIGINT AS support
-FROM op a JOIN op b
-  ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-GROUP BY 1, 2
-HAVING count(*) >= 3
-ORDER BY support DESC, a_part, b_part
-LIMIT 20
+_SQL_TRANSITIONS = """
+WITH seq AS (
+  SELECT event_type,
+         lead(event_type) OVER (PARTITION BY user_id
+                                ORDER BY ts, event_id) AS next_type
+  FROM events
+),
+trans AS (
+  SELECT event_type AS from_type, next_type, count(*)::BIGINT AS n
+  FROM seq WHERE next_type IS NOT NULL GROUP BY 1, 2
+)
+SELECT from_type, next_type, n,
+       round(n / sum(n) OVER (PARTITION BY from_type), 6) AS p
+FROM trans
+ORDER BY from_type, next_type
 """
 
 
+@query(_SQL_TRANSITIONS)
 def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix over per-user event
     sequences: lead() over (user_id ordered by ts, event_id — a total
@@ -10572,24 +10555,31 @@ def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TRANSITIONS = """
-WITH seq AS (
-  SELECT event_type,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS next_type
-  FROM events
+_SQL_EMB_QUANT = """
+WITH q AS (
+  SELECT label,
+         embedding::DOUBLE[] AS x,
+         list_max(list_transform(embedding::DOUBLE[], v -> abs(v))) / 127.0
+           AS scale
+  FROM embeddings
 ),
-trans AS (
-  SELECT event_type AS from_type, next_type, count(*)::BIGINT AS n
-  FROM seq WHERE next_type IS NOT NULL GROUP BY 1, 2
+e AS (
+  SELECT label,
+         sqrt(
+           list_sum(list_transform(range(1, len(x) + 1),
+                    i -> pow(x[i] - round(x[i] / scale) * scale, 2)))
+           / list_sum(list_transform(x, v -> v * v))
+         ) AS rel_err
+  FROM q
 )
-SELECT from_type, next_type, n,
-       round(n / sum(n) OVER (PARTITION BY from_type), 6) AS p
-FROM trans
-ORDER BY from_type, next_type
+SELECT label, count(*)::BIGINT AS n,
+       round(avg(rel_err), 6) AS avg_rel_err,
+       round(max(rel_err), 6) AS max_rel_err
+FROM e GROUP BY label ORDER BY label
 """
 
 
+@query(_SQL_EMB_QUANT)
 def q_embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding compression for vector stores: per-vector symmetric
     int8 scalar quantization (scale = max|x|/127, q = round(x/scale))
@@ -10619,62 +10609,6 @@ def q_embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("label")
     )
-
-
-_SQL_EMB_QUANT = """
-WITH q AS (
-  SELECT label,
-         embedding::DOUBLE[] AS x,
-         list_max(list_transform(embedding::DOUBLE[], v -> abs(v))) / 127.0
-           AS scale
-  FROM embeddings
-),
-e AS (
-  SELECT label,
-         sqrt(
-           list_sum(list_transform(range(1, len(x) + 1),
-                    i -> pow(x[i] - round(x[i] / scale) * scale, 2)))
-           / list_sum(list_transform(x, v -> v * v))
-         ) AS rel_err
-  FROM q
-)
-SELECT label, count(*)::BIGINT AS n,
-       round(avg(rel_err), 6) AS avg_rel_err,
-       round(max(rel_err), 6) AS max_rel_err
-FROM e GROUP BY label ORDER BY label
-"""
-
-
-def q_profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column profiler (data-quality surface): one output row per
-    column with null count, distinct count, and min/max rendered as
-    strings — the schema-drift / ingest-health scan run before a table
-    enters a pipeline. The plan is metadata-driven (the per-column agg
-    is GENERATED from the schema) and runs as one COLUMN-PRUNED scan
-    per column, unioned: N single-column scans read the same total
-    bytes as one N-column scan, while the alternative — N exact
-    count(DISTINCT)s in one aggregate — makes Catalyst Expand every
-    row N× (measured 14 s vs 2 s at sf0.1 on 7 columns). Swap
-    approx_count_distinct in when ±2%% is acceptable: HLL partials
-    aggregate in a plain single pass with no Expand at all."""
-    li = _t(spark, sf_dir, "lineitem")
-    cols = [
-        "l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
-        "l_extendedprice", "l_returnflag", "l_shipdate",
-    ]
-
-    def prof(c: str) -> DataFrame:
-        return li.select(c).agg(
-            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias("n_nulls"),
-            F.countDistinct(c).alias("n_distinct"),
-            F.min(F.col(c).cast("string")).alias("min_str"),
-            F.max(F.col(c).cast("string")).alias("max_str"),
-        ).select(F.lit(c).alias("col_name"), "*")
-
-    out = prof(cols[0])
-    for c in cols[1:]:
-        out = out.unionByName(prof(c))
-    return out.orderBy("col_name")
 
 
 _SQL_PROFILE = """
@@ -10715,6 +10649,56 @@ ORDER BY col_name
 """
 
 
+@query(_SQL_PROFILE)
+def q_profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Column profiler (data-quality surface): one output row per
+    column with null count, distinct count, and min/max rendered as
+    strings — the schema-drift / ingest-health scan run before a table
+    enters a pipeline. The plan is metadata-driven (the per-column agg
+    is GENERATED from the schema) and runs as one COLUMN-PRUNED scan
+    per column, unioned: N single-column scans read the same total
+    bytes as one N-column scan, while the alternative — N exact
+    count(DISTINCT)s in one aggregate — makes Catalyst Expand every
+    row N× (measured 14 s vs 2 s at sf0.1 on 7 columns). Swap
+    approx_count_distinct in when ±2%% is acceptable: HLL partials
+    aggregate in a plain single pass with no Expand at all."""
+    li = _t(spark, sf_dir, "lineitem")
+    cols = [
+        "l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
+        "l_extendedprice", "l_returnflag", "l_shipdate",
+    ]
+
+    def prof(c: str) -> DataFrame:
+        return li.select(c).agg(
+            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias("n_nulls"),
+            F.countDistinct(c).alias("n_distinct"),
+            F.min(F.col(c).cast("string")).alias("min_str"),
+            F.max(F.col(c).cast("string")).alias("max_str"),
+        ).select(F.lit(c).alias("col_name"), "*")
+
+    out = prof(cols[0])
+    for c in cols[1:]:
+        out = out.unionByName(prof(c))
+    return out.orderBy("col_name")
+
+
+_SQL_TWAP = """
+WITH obs AS (
+  SELECT event_type, value,
+         epoch_us(lead(ts) OVER (PARTITION BY event_type
+                                 ORDER BY ts, event_id) - ts) AS dur_us
+  FROM events
+)
+SELECT event_type,
+       round(sum(value * dur_us) / sum(dur_us), 6) AS twap,
+       round(avg(value), 6) AS plain_avg,
+       count(*)::BIGINT AS n_intervals
+FROM obs WHERE dur_us IS NOT NULL
+GROUP BY event_type ORDER BY event_type
+"""
+
+
+@query(_SQL_TWAP)
 def q_twap_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-weighted average (TWAP) over irregular samples: each
     observation holds until the next one of the same type, so its
@@ -10742,65 +10726,6 @@ def q_twap_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_intervals"),
         )
         .orderBy("event_type")
-    )
-
-
-_SQL_TWAP = """
-WITH obs AS (
-  SELECT event_type, value,
-         epoch_us(lead(ts) OVER (PARTITION BY event_type
-                                 ORDER BY ts, event_id) - ts) AS dur_us
-  FROM events
-)
-SELECT event_type,
-       round(sum(value * dur_us) / sum(dur_us), 6) AS twap,
-       round(avg(value), 6) AS plain_avg,
-       count(*)::BIGINT AS n_intervals
-FROM obs WHERE dur_us IS NOT NULL
-GROUP BY event_type ORDER BY event_type
-"""
-
-
-def q_user_trajectory_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trajectory analytics over the derived point-per-event convention:
-    per-user path length (haversine between consecutive pings), max
-    single hop, and average speed (km/h over active time). Composes
-    the per-user sequence window with the geo kernel — all codegen;
-    one shuffle on user_id, then a per-user agg on the same key (no
-    second exchange: the window's hash partitioning is reused)."""
-    ev = _t(spark, sf_dir, "events")
-    pts = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        (F.lit(-74.3) + (F.col("event_id") % 1000) / 1000.0 * 0.6).alias("lon"),
-        (F.lit(40.5) + ((F.col("event_id") * 7) % 1000) / 1000.0 * 0.5).alias("lat"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    hops = pts.select(
-        "user_id",
-        "ts",
-        "lon",
-        "lat",
-        F.lag("lon").over(w).alias("plon"),
-        F.lag("lat").over(w).alias("plat"),
-        F.lag("ts").over(w).alias("pts_"),
-    ).filter(F.col("plon").isNotNull())
-    hop_km = haversine_km("plat", "plon", "lat", "lon")
-    dt_h = (
-        F.unix_micros(F.col("ts").cast("timestamp"))
-        - F.unix_micros(F.col("pts_").cast("timestamp"))
-    ) / F.lit(3600.0 * 1e6)
-    return (
-        hops.select("user_id", hop_km.alias("hop_km"), dt_h.alias("dt_h"))
-        .groupBy("user_id")
-        .agg(
-            F.round(F.sum("hop_km"), 3).alias("path_km"),
-            F.round(F.max("hop_km"), 3).alias("max_hop_km"),
-            F.round(F.sum("hop_km") / F.sum("dt_h"), 3).alias("avg_kmh"),
-            F.count(F.lit(1)).alias("n_hops"),
-        )
-        .orderBy("user_id")
     )
 
 
@@ -10836,6 +10761,72 @@ FROM d GROUP BY user_id ORDER BY user_id
 """
 
 
+@query(_sql_trajectory())
+def q_user_trajectory_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trajectory analytics over the derived point-per-event convention:
+    per-user path length (haversine between consecutive pings), max
+    single hop, and average speed (km/h over active time). Composes
+    the per-user sequence window with the geo kernel — all codegen;
+    one shuffle on user_id, then a per-user agg on the same key (no
+    second exchange: the window's hash partitioning is reused)."""
+    ev = _t(spark, sf_dir, "events")
+    pts = ev.select(
+        "user_id",
+        "ts",
+        "event_id",
+        (F.lit(-74.3) + (F.col("event_id") % 1000) / 1000.0 * 0.6).alias("lon"),
+        (F.lit(40.5) + ((F.col("event_id") * 7) % 1000) / 1000.0 * 0.5).alias("lat"),
+    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    hops = pts.select(
+        "user_id",
+        "ts",
+        "lon",
+        "lat",
+        F.lag("lon").over(w).alias("plon"),
+        F.lag("lat").over(w).alias("plat"),
+        F.lag("ts").over(w).alias("pts_"),
+    ).filter(F.col("plon").isNotNull())
+    hop_km = geo.haversine_km("plat", "plon", "lat", "lon")
+    dt_h = (
+        F.unix_micros(F.col("ts").cast("timestamp"))
+        - F.unix_micros(F.col("pts_").cast("timestamp"))
+    ) / F.lit(3600.0 * 1e6)
+    return (
+        hops.select("user_id", hop_km.alias("hop_km"), dt_h.alias("dt_h"))
+        .groupBy("user_id")
+        .agg(
+            F.round(F.sum("hop_km"), 3).alias("path_km"),
+            F.round(F.max("hop_km"), 3).alias("max_hop_km"),
+            F.round(F.sum("hop_km") / F.sum("dt_h"), 3).alias("avg_kmh"),
+            F.count(F.lit(1)).alias("n_hops"),
+        )
+        .orderBy("user_id")
+    )
+
+
+_SQL_KS = """
+WITH two AS (
+  SELECT round(value, 2) AS v,
+         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_p
+  FROM events WHERE event_type IN ('purchase', 'click')
+),
+g AS (
+  SELECT v, sum(is_p) AS n_p, sum(1 - is_p) AS n_c FROM two GROUP BY v
+),
+tot AS (SELECT sum(is_p) AS t_p, sum(1 - is_p) AS t_c FROM two),
+cum AS (
+  SELECT v,
+         sum(n_p) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS c_p,
+         sum(n_c) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS c_c
+  FROM g
+)
+SELECT round(max(abs(c_p / t_p - c_c / t_c)), 6) AS ks_d
+FROM cum CROSS JOIN tot
+"""
+
+
+@query(_SQL_KS)
 def q_ks_statistic_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov statistic between the purchase and
     click value distributions — distribution-drift detection without
@@ -10873,27 +10864,24 @@ def q_ks_statistic_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_KS = """
-WITH two AS (
-  SELECT round(value, 2) AS v,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_p
-  FROM events WHERE event_type IN ('purchase', 'click')
+_SQL_EXCEPT_ALL = """
+WITH a AS (
+  SELECT o_custkey, o_orderpriority FROM orders
+  WHERE o_orderdate >= TIMESTAMP '1997-01-01'
+    AND o_orderdate < TIMESTAMP '1998-01-01'
 ),
-g AS (
-  SELECT v, sum(is_p) AS n_p, sum(1 - is_p) AS n_c FROM two GROUP BY v
+b AS (
+  SELECT o_custkey, o_orderpriority FROM orders
+  WHERE o_orderdate >= TIMESTAMP '1998-01-01'
+    AND o_orderdate < TIMESTAMP '1999-01-01'
 ),
-tot AS (SELECT sum(is_p) AS t_p, sum(1 - is_p) AS t_c FROM two),
-cum AS (
-  SELECT v,
-         sum(n_p) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS c_p,
-         sum(n_c) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS c_c
-  FROM g
-)
-SELECT round(max(abs(c_p / t_p - c_c / t_c)), 6) AS ks_d
-FROM cum CROSS JOIN tot
+surviving AS (SELECT * FROM a EXCEPT ALL SELECT * FROM b)
+SELECT o_orderpriority, count(*)::BIGINT AS n_surviving
+FROM surviving GROUP BY o_orderpriority ORDER BY o_orderpriority
 """
 
 
+@query(_SQL_EXCEPT_ALL)
 def q_except_all_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U-family multiset completion — EXCEPT ALL (count-respecting
     difference): order-priority rows of 1997 minus those of 1998, i.e.
@@ -10917,23 +10905,21 @@ def q_except_all_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_EXCEPT_ALL = """
-WITH a AS (
-  SELECT o_custkey, o_orderpriority FROM orders
-  WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-    AND o_orderdate < TIMESTAMP '1998-01-01'
-),
-b AS (
-  SELECT o_custkey, o_orderpriority FROM orders
-  WHERE o_orderdate >= TIMESTAMP '1998-01-01'
-    AND o_orderdate < TIMESTAMP '1999-01-01'
-),
-surviving AS (SELECT * FROM a EXCEPT ALL SELECT * FROM b)
-SELECT o_orderpriority, count(*)::BIGINT AS n_surviving
-FROM surviving GROUP BY o_orderpriority ORDER BY o_orderpriority
+_SQL_DECILES = """
+WITH d AS (
+  SELECT event_type, value,
+         ntile(10) OVER (PARTITION BY event_type
+                         ORDER BY value, event_id) AS decile
+  FROM events
+)
+SELECT event_type, decile, count(*)::BIGINT AS n,
+       round(min(value), 2) AS lo, round(max(value), 2) AS hi,
+       round(avg(value), 6) AS mean_value
+FROM d GROUP BY 1, 2 ORDER BY event_type, decile
 """
 
 
+@query(_SQL_DECILES)
 def q_value_deciles_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-depth histogram: ntile(10) deciles of value within each
     event type, with per-decile count / bounds / mean — the
@@ -10955,46 +10941,6 @@ def q_value_deciles_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type", "decile")
     )
-
-
-_SQL_DECILES = """
-WITH d AS (
-  SELECT event_type, value,
-         ntile(10) OVER (PARTITION BY event_type
-                         ORDER BY value, event_id) AS decile
-  FROM events
-)
-SELECT event_type, decile, count(*)::BIGINT AS n,
-       round(min(value), 2) AS lo, round(max(value), 2) AS hi,
-       round(avg(value), 6) AS mean_value
-FROM d GROUP BY 1, 2 ORDER BY event_type, decile
-"""
-
-
-def q_value_trend_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M14's per-group generalization: closed-form linear trend of
-    value over time (days since 2024-01-01) computed independently for
-    every event type in ONE grouped aggregation — no per-group fitting
-    loop, the moment sums (n, Σx, Σy, Σx², Σy², Σxy) decompose per
-    group and the slope/intercept/r algebra runs on the 5-row result.
-    Centering x near 0 (days since corpus start, not epoch) keeps the
-    normal-equation arithmetic well-conditioned."""
-    ev = _t(spark, sf_dir, "events")
-    # 1704067200000000 µs = 2024-01-01; one bigint literal — an int32
-    # literal times 1e6 overflows SILENTLY under ANSI-off
-    xd = (
-        (
-            F.unix_micros(F.col("ts").cast("timestamp"))
-            - F.lit(1704067200000000).cast("bigint")
-        )
-        / F.lit(86400.0 * 1e6)
-    ).alias("xd")
-    base = ev.select("event_type", xd, "value")
-    out = base.groupBy("event_type").agg(*linregress_aggs("xd", "value"))
-    return out.select(
-        "event_type",
-        *[F.round(F.col(c), 6).alias(c) for c in ("slope", "intercept", "r", "r2")],
-    ).orderBy("event_type")
 
 
 _SQL_VALUE_TREND = """
@@ -11019,6 +10965,57 @@ FROM s ORDER BY event_type
 """
 
 
+@query(_SQL_VALUE_TREND)
+def q_value_trend_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """M14's per-group generalization: closed-form linear trend of
+    value over time (days since 2024-01-01) computed independently for
+    every event type in ONE grouped aggregation — no per-group fitting
+    loop, the moment sums (n, Σx, Σy, Σx², Σy², Σxy) decompose per
+    group and the slope/intercept/r algebra runs on the 5-row result.
+    Centering x near 0 (days since corpus start, not epoch) keeps the
+    normal-equation arithmetic well-conditioned."""
+    ev = _t(spark, sf_dir, "events")
+    # 1704067200000000 µs = 2024-01-01; one bigint literal — an int32
+    # literal times 1e6 overflows SILENTLY under ANSI-off
+    xd = (
+        (
+            F.unix_micros(F.col("ts").cast("timestamp"))
+            - F.lit(1704067200000000).cast("bigint")
+        )
+        / F.lit(86400.0 * 1e6)
+    ).alias("xd")
+    base = ev.select("event_type", xd, "value")
+    out = base.groupBy("event_type").agg(*st.linregress_aggs("xd", "value"))
+    return out.select(
+        "event_type",
+        *[F.round(F.col(c), 6).alias(c) for c in ("slope", "intercept", "r", "r2")],
+    ).orderBy("event_type")
+
+
+_SQL_ROLLING_ACTIVE = """
+WITH ud AS (
+  SELECT DISTINCT date_trunc('day', ts) AS day, user_id FROM events
+),
+dau AS (SELECT day, count(DISTINCT user_id)::BIGINT AS dau FROM ud GROUP BY day),
+span AS (SELECT min(day) AS d0, max(day) AS d1 FROM ud),
+covered AS (
+  SELECT user_id, day + (k.k * INTERVAL 1 DAY) AS report_day
+  FROM ud, (VALUES (0),(1),(2),(3),(4),(5),(6)) k(k)
+),
+wau AS (
+  SELECT report_day, count(DISTINCT user_id)::BIGINT AS wau
+  FROM covered GROUP BY report_day
+)
+SELECT dau.day, dau.dau, wau.wau
+FROM dau
+JOIN wau ON wau.report_day = dau.day
+CROSS JOIN span
+WHERE dau.day >= span.d0 + INTERVAL 6 DAY AND dau.day <= span.d1
+ORDER BY dau.day
+"""
+
+
+@query(_SQL_ROLLING_ACTIVE)
 def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling DAU/WAU: distinct users per day, and distinct users over
     the trailing 7 days — the metric a naive window SUM gets wrong
@@ -11062,74 +11059,6 @@ def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_ROLLING_ACTIVE = """
-WITH ud AS (
-  SELECT DISTINCT date_trunc('day', ts) AS day, user_id FROM events
-),
-dau AS (SELECT day, count(DISTINCT user_id)::BIGINT AS dau FROM ud GROUP BY day),
-span AS (SELECT min(day) AS d0, max(day) AS d1 FROM ud),
-covered AS (
-  SELECT user_id, day + (k.k * INTERVAL 1 DAY) AS report_day
-  FROM ud, (VALUES (0),(1),(2),(3),(4),(5),(6)) k(k)
-),
-wau AS (
-  SELECT report_day, count(DISTINCT user_id)::BIGINT AS wau
-  FROM covered GROUP BY report_day
-)
-SELECT dau.day, dau.dau, wau.wau
-FROM dau
-JOIN wau ON wau.report_day = dau.day
-CROSS JOIN span
-WHERE dau.day >= span.d0 + INTERVAL 6 DAY AND dau.day <= span.d1
-ORDER BY dau.day
-"""
-
-
-def q_clustering_coefficient_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local clustering coefficient c(v) = 2·tri(v) / (deg(v)·(deg(v)−1))
-    over the modular graph — composes the triangle-count operator with
-    the distinct-neighbor degree (both already oracle-proven pieces;
-    this query proves the composition). Nodes with deg < 2 report 0.
-    Top-level shape: two integer-keyed aggs + one join, all on node id."""
-    from ..graph.algorithms import triangle_counts
-
-    edges = _mod_graph_edges(spark)
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("u").alias("id"))
-        .unionByName(und.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    tri = triangle_counts(edges)
-    return (
-        deg.join(tri, "id", "left")
-        .select(
-            "id",
-            "deg",
-            F.coalesce("tri_count", F.lit(0)).alias("tri_count"),
-            F.when(
-                F.col("deg") >= 2,
-                F.round(
-                    2.0
-                    * F.coalesce("tri_count", F.lit(0))
-                    / (F.col("deg") * (F.col("deg") - 1)),
-                    6,
-                ),
-            )
-            .otherwise(0.0)
-            .alias("coef"),
-        )
-        .orderBy("id")
-    )
-
-
 _SQL_CLUSTERING_COEF = f"""
 WITH {_SQL_MOD_GRAPH},
 und AS (
@@ -11162,21 +11091,52 @@ ORDER BY deg.id
 """
 
 
+@query(_SQL_CLUSTERING_COEF)
+def q_clustering_coefficient_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Local clustering coefficient c(v) = 2·tri(v) / (deg(v)·(deg(v)−1))
+    over the modular graph — composes the triangle-count operator with
+    the distinct-neighbor degree (both already oracle-proven pieces;
+    this query proves the composition). Nodes with deg < 2 report 0.
+    Top-level shape: two integer-keyed aggs + one join, all on node id."""
+    edges = _mod_graph_edges(spark)
+    und = (
+        edges.select(
+            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
+        )
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+    deg = (
+        und.select(F.col("u").alias("id"))
+        .unionByName(und.select(F.col("v").alias("id")))
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
+    tri = ga.triangle_counts(edges)
+    return (
+        deg.join(tri, "id", "left")
+        .select(
+            "id",
+            "deg",
+            F.coalesce("tri_count", F.lit(0)).alias("tri_count"),
+            F.when(
+                F.col("deg") >= 2,
+                F.round(
+                    2.0
+                    * F.coalesce("tri_count", F.lit(0))
+                    / (F.col("deg") * (F.col("deg") - 1)),
+                    6,
+                ),
+            )
+            .otherwise(0.0)
+            .alias("coef"),
+        )
+        .orderBy("id")
+    )
+
+
 _KCORE_K = 4
 _KCORE_ROUNDS = 5
-
-
-def q_kcore_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """4-core of the modular graph by fixed-round iterative peeling
-    (`graph/algorithms.kcore`, 5 rounds ≥ the measured peel depth of 4,
-    so the output IS the exact 4-core). The oracle unrolls every peel
-    round as chained CTEs — degree, keep-set, edge filter — the same
-    fixed-iteration replay contract as PageRank/Lloyd's."""
-    from ..graph.algorithms import kcore
-
-    return kcore(
-        _mod_graph_edges(spark), k=_KCORE_K, rounds=_KCORE_ROUNDS
-    ).orderBy("id")
 
 
 def _sql_kcore() -> str:
@@ -11206,6 +11166,33 @@ FROM adj{_KCORE_ROUNDS} GROUP BY a ORDER BY id
 """
 
 
+@query(_sql_kcore())
+def q_kcore_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """4-core of the modular graph by fixed-round iterative peeling
+    (`graph/algorithms.kcore`, 5 rounds ≥ the measured peel depth of 4,
+    so the output IS the exact 4-core). The oracle unrolls every peel
+    round as chained CTEs — degree, keep-set, edge filter — the same
+    fixed-iteration replay contract as PageRank/Lloyd's."""
+    return ga.kcore(
+        _mod_graph_edges(spark), k=_KCORE_K, rounds=_KCORE_ROUNDS
+    ).orderBy("id")
+
+
+_SQL_WEIGHTED_SAMPLE = """
+WITH keyed AS (
+  SELECT doc_id, source,
+         ln((('0x' || substr(md5(doc_id::VARCHAR), 1, 13))::BIGINT)::DOUBLE
+            / 4503599627370496.0)
+         / sqrt(n_chars::DOUBLE) AS key
+  FROM documents
+),
+sample AS (SELECT * FROM keyed ORDER BY key DESC, doc_id LIMIT 100)
+SELECT source, count(*)::BIGINT AS n_sampled
+FROM sample GROUP BY source ORDER BY source
+"""
+
+
+@query(_SQL_WEIGHTED_SAMPLE)
 def q_weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted sampling WITHOUT replacement (Efraimidis–Spirakis
     A-Res): each doc draws key = ln(u)/w with u uniform in (0,1) and
@@ -11236,20 +11223,24 @@ def q_weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_WEIGHTED_SAMPLE = """
-WITH keyed AS (
-  SELECT doc_id, source,
-         ln((('0x' || substr(md5(doc_id::VARCHAR), 1, 13))::BIGINT)::DOUBLE
-            / 4503599627370496.0)
-         / sqrt(n_chars::DOUBLE) AS key
-  FROM documents
+_SQL_QUANTILE_NORM = """
+WITH ranked AS (
+  SELECT event_type, value,
+         row_number() OVER (PARTITION BY event_type
+                            ORDER BY value, event_id) AS rn,
+         count(*) OVER (PARTITION BY event_type) AS n
+  FROM events
 ),
-sample AS (SELECT * FROM keyed ORDER BY key DESC, doc_id LIMIT 100)
-SELECT source, count(*)::BIGINT AS n_sampled
-FROM sample GROUP BY source ORDER BY source
+normed AS (
+  SELECT event_type, value, (rn - 0.5) / n AS u FROM ranked
+)
+SELECT event_type, floor(u * 10)::INT AS bucket, count(*)::BIGINT AS n,
+       round(min(value), 2) AS lo, round(max(value), 2) AS hi
+FROM normed GROUP BY 1, 2 ORDER BY event_type, bucket
 """
 
 
+@query(_SQL_QUANTILE_NORM)
 def q_quantile_normalize_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile (rank-to-uniform) normalization — the monotone feature
     transform that strips a column's distribution shape: per group,
@@ -11286,76 +11277,6 @@ def q_quantile_normalize_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_QUANTILE_NORM = """
-WITH ranked AS (
-  SELECT event_type, value,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY value, event_id) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM events
-),
-normed AS (
-  SELECT event_type, value, (rn - 0.5) / n AS u FROM ranked
-)
-SELECT event_type, floor(u * 10)::INT AS bucket, count(*)::BIGINT AS n,
-       round(min(value), 2) AS lo, round(max(value), 2) AS hi
-FROM normed GROUP BY 1, 2 ORDER BY event_type, bucket
-"""
-
-
-def q_distance_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distance-band (DWithin) spatial join: purchase–signup event
-    pairs within 2 km, via the grid strategy — the probe side explodes
-    to its 3×3 neighbor cells (cell edge 0.03° > the 2 km radius in
-    both axes at this latitude, so the cover is complete), equi-join
-    on cell, exact haversine refine. The oracle is the brute-force
-    cross join with the same predicate — equality proves the grid
-    cover drops nothing. Scale: the shuffle key is the integer cell;
-    pair fan-out is bounded by points-per-disc, never |A|×|B|."""
-    ev = _t(spark, sf_dir, "events")
-    pts = _derived_points(ev).select("event_id", "event_type", "lon", "lat")
-    cell = 0.03
-    a = pts.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("a_id"), F.col("lon").alias("a_lon"),
-        F.col("lat").alias("a_lat"),
-    )
-    b = pts.filter(F.col("event_type") == "signup").select(
-        F.col("event_id").alias("b_id"), F.col("lon").alias("b_lon"),
-        F.col("lat").alias("b_lat"),
-    )
-    bgx, bgy = grid_cell("b_lat", "b_lon", 40.5, -74.3, cell)
-    b_cells = b.withColumn("gx", bgx).withColumn("gy", bgy)
-    agx, agy = grid_cell("a_lat", "a_lon", 40.5, -74.3, cell)
-    a_cells = (
-        a.withColumn("gx0", agx)
-        .withColumn("gy0", agy)
-        .select(
-            "*",
-            F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("dx"),
-        )
-        .select(
-            "*",
-            F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("dy"),
-        )
-        .select(
-            "a_id", "a_lon", "a_lat",
-            (F.col("gx0") + F.col("dx")).alias("gx"),
-            (F.col("gy0") + F.col("dy")).alias("gy"),
-        )
-    )
-    d = haversine_km("a_lat", "a_lon", "b_lat", "b_lon")
-    pairs = (
-        a_cells.join(b_cells, ["gx", "gy"])
-        .withColumn("dist_km", d)
-        .filter(F.col("dist_km") <= 2.0)
-    )
-    return pairs.agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.round(F.avg("dist_km"), 4).alias("avg_km"),
-        F.countDistinct("a_id").alias("n_a_matched"),
-    )
-
-
 _SQL_DISTANCE_BAND = f"""
 WITH p AS ({_DERIVED_POINTS_SQL}),
 a AS (SELECT event_id AS a_id, lon AS a_lon, lat AS a_lat FROM p
@@ -11378,6 +11299,88 @@ FROM pairs WHERE dist_km <= 2.0
 """
 
 
+@query(_SQL_DISTANCE_BAND)
+def q_distance_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distance-band (DWithin) spatial join: purchase–signup event
+    pairs within 2 km, via the grid strategy — the probe side explodes
+    to its 3×3 neighbor cells (cell edge 0.03° > the 2 km radius in
+    both axes at this latitude, so the cover is complete), equi-join
+    on cell, exact haversine refine. The oracle is the brute-force
+    cross join with the same predicate — equality proves the grid
+    cover drops nothing. Scale: the shuffle key is the integer cell;
+    pair fan-out is bounded by points-per-disc, never |A|×|B|."""
+    ev = _t(spark, sf_dir, "events")
+    pts = _derived_points(ev).select("event_id", "event_type", "lon", "lat")
+    cell = 0.03
+    a = pts.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("a_id"), F.col("lon").alias("a_lon"),
+        F.col("lat").alias("a_lat"),
+    )
+    b = pts.filter(F.col("event_type") == "signup").select(
+        F.col("event_id").alias("b_id"), F.col("lon").alias("b_lon"),
+        F.col("lat").alias("b_lat"),
+    )
+    bgx, bgy = geo.grid_cell("b_lat", "b_lon", 40.5, -74.3, cell)
+    b_cells = b.withColumn("gx", bgx).withColumn("gy", bgy)
+    agx, agy = geo.grid_cell("a_lat", "a_lon", 40.5, -74.3, cell)
+    a_cells = (
+        a.withColumn("gx0", agx)
+        .withColumn("gy0", agy)
+        .select(
+            "*",
+            F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("dx"),
+        )
+        .select(
+            "*",
+            F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("dy"),
+        )
+        .select(
+            "a_id", "a_lon", "a_lat",
+            (F.col("gx0") + F.col("dx")).alias("gx"),
+            (F.col("gy0") + F.col("dy")).alias("gy"),
+        )
+    )
+    d = geo.haversine_km("a_lat", "a_lon", "b_lat", "b_lon")
+    pairs = (
+        a_cells.join(b_cells, ["gx", "gy"])
+        .withColumn("dist_km", d)
+        .filter(F.col("dist_km") <= 2.0)
+    )
+    return pairs.agg(
+        F.count(F.lit(1)).alias("n_pairs"),
+        F.round(F.avg("dist_km"), 4).alias("avg_km"),
+        F.countDistinct("a_id").alias("n_a_matched"),
+    )
+
+
+_SQL_SNAPSHOT_DIFF = """
+WITH base AS (
+  SELECT o_orderkey,
+         hash(o_orderstatus, round(o_totalprice, 2)::VARCHAR) AS h,
+         o_orderdate
+  FROM orders
+),
+v1 AS (
+  SELECT o_orderkey, h AS h1 FROM base
+  WHERE o_orderdate < TIMESTAMP '1998-01-01'
+),
+v2 AS (
+  SELECT o_orderkey,
+         CASE WHEN o_orderkey % 97 = 0 THEN h + 1 ELSE h END AS h2
+  FROM base
+  WHERE o_orderdate < TIMESTAMP '1998-07-01' AND o_orderkey % 101 <> 0
+),
+j AS (SELECT * FROM v1 FULL OUTER JOIN v2 USING (o_orderkey))
+SELECT CASE WHEN h1 IS NULL THEN 'added'
+            WHEN h2 IS NULL THEN 'removed'
+            WHEN h1 = h2 THEN 'unchanged'
+            ELSE 'changed' END AS change_type,
+       count(*)::BIGINT AS n
+FROM j GROUP BY 1 ORDER BY change_type
+"""
+
+
+@query(_SQL_SNAPSHOT_DIFF)
 def q_snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot reconciliation (data-diff): classify every key across
     two table versions as added / removed / changed / unchanged via one
@@ -11421,82 +11424,6 @@ def q_snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SNAPSHOT_DIFF = """
-WITH base AS (
-  SELECT o_orderkey,
-         hash(o_orderstatus, round(o_totalprice, 2)::VARCHAR) AS h,
-         o_orderdate
-  FROM orders
-),
-v1 AS (
-  SELECT o_orderkey, h AS h1 FROM base
-  WHERE o_orderdate < TIMESTAMP '1998-01-01'
-),
-v2 AS (
-  SELECT o_orderkey,
-         CASE WHEN o_orderkey % 97 = 0 THEN h + 1 ELSE h END AS h2
-  FROM base
-  WHERE o_orderdate < TIMESTAMP '1998-07-01' AND o_orderkey % 101 <> 0
-),
-j AS (SELECT * FROM v1 FULL OUTER JOIN v2 USING (o_orderkey))
-SELECT CASE WHEN h1 IS NULL THEN 'added'
-            WHEN h2 IS NULL THEN 'removed'
-            WHEN h1 = h2 THEN 'unchanged'
-            ELSE 'changed' END AS change_type,
-       count(*)::BIGINT AS n
-FROM j GROUP BY 1 ORDER BY change_type
-"""
-
-
-def q_attribution_touchpoints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Marketing attribution over event streams: for every purchase,
-    the LAST click at-or-before it (last-touch) and the FIRST click in
-    the trailing 24 h window (first-touch). Both are as-of joins —
-    last-touch directly (`operators/asof`), first-touch as a backward
-    as-of over NEGATED timestamps (greatest −cts ≤ −t₀ ⇔ smallest
-    cts ≥ t₀), so neither model pays a per-pair range join; each is
-    one union-tag shuffle on user_id. The oracle states both as
-    correlated min/max subqueries — the declarative spec the operator
-    decorrelates."""
-    from ..operators.asof import asof_join_backward
-
-    ev = _t(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    day_us = 24 * 3600 * 1000000
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "event_id", us.alias("pus")
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", us.alias("cus")
-    )
-    last_t = asof_join_backward(
-        purchases, clicks, key="user_id", left_ts="pus", right_ts="cus",
-        payload_cols=[], prefix="last_",
-    )
-    p_neg = purchases.withColumn("nt0", -(F.col("pus") - F.lit(day_us)))
-    c_neg = clicks.select("user_id", (-F.col("cus")).alias("ncus"))
-    first_t = asof_join_backward(
-        p_neg, c_neg, key="user_id", left_ts="nt0", right_ts="ncus",
-        payload_cols=[], prefix="first_",
-    ).select("event_id", (-F.col("first_ncus")).alias("first_cus"))
-    both = last_t.join(first_t, "event_id")
-    last_ok = F.col("last_cus").isNotNull() & (
-        F.col("pus") - F.col("last_cus") <= day_us
-    )
-    first_ok = F.col("first_cus").isNotNull() & (
-        F.col("first_cus") <= F.col("pus")
-    )
-    mins_last = (F.col("pus") - F.col("last_cus")) / F.lit(6e7)
-    mins_first = (F.col("pus") - F.col("first_cus")) / F.lit(6e7)
-    return both.agg(
-        F.count(F.lit(1)).alias("n_purchases"),
-        F.sum(F.when(last_ok, 1).otherwise(0)).alias("n_last_touch"),
-        F.sum(F.when(first_ok, 1).otherwise(0)).alias("n_first_touch"),
-        F.round(F.avg(F.when(last_ok, mins_last)), 4).alias("avg_mins_last"),
-        F.round(F.avg(F.when(first_ok, mins_first)), 4).alias("avg_mins_first"),
-    )
-
-
 _SQL_ATTRIBUTION = """
 WITH p AS (
   SELECT user_id, event_id, epoch_us(ts) AS pus FROM events
@@ -11527,6 +11454,73 @@ FROM att
 """
 
 
+@query(_SQL_ATTRIBUTION)
+def q_attribution_touchpoints(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Marketing attribution over event streams: for every purchase,
+    the LAST click at-or-before it (last-touch) and the FIRST click in
+    the trailing 24 h window (first-touch). Both are as-of joins —
+    last-touch directly (`operators/asof`), first-touch as a backward
+    as-of over NEGATED timestamps (greatest −cts ≤ −t₀ ⇔ smallest
+    cts ≥ t₀), so neither model pays a per-pair range join; each is
+    one union-tag shuffle on user_id. The oracle states both as
+    correlated min/max subqueries — the declarative spec the operator
+    decorrelates."""
+    ev = _t(spark, sf_dir, "events")
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    day_us = 24 * 3600 * 1000000
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", "event_id", us.alias("pus")
+    )
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id", us.alias("cus")
+    )
+    last_t = asof.asof_join_backward(
+        purchases, clicks, key="user_id", left_ts="pus", right_ts="cus",
+        payload_cols=[], prefix="last_",
+    )
+    p_neg = purchases.withColumn("nt0", -(F.col("pus") - F.lit(day_us)))
+    c_neg = clicks.select("user_id", (-F.col("cus")).alias("ncus"))
+    first_t = asof.asof_join_backward(
+        p_neg, c_neg, key="user_id", left_ts="nt0", right_ts="ncus",
+        payload_cols=[], prefix="first_",
+    ).select("event_id", (-F.col("first_ncus")).alias("first_cus"))
+    both = last_t.join(first_t, "event_id")
+    last_ok = F.col("last_cus").isNotNull() & (
+        F.col("pus") - F.col("last_cus") <= day_us
+    )
+    first_ok = F.col("first_cus").isNotNull() & (
+        F.col("first_cus") <= F.col("pus")
+    )
+    mins_last = (F.col("pus") - F.col("last_cus")) / F.lit(6e7)
+    mins_first = (F.col("pus") - F.col("first_cus")) / F.lit(6e7)
+    return both.agg(
+        F.count(F.lit(1)).alias("n_purchases"),
+        F.sum(F.when(last_ok, 1).otherwise(0)).alias("n_last_touch"),
+        F.sum(F.when(first_ok, 1).otherwise(0)).alias("n_first_touch"),
+        F.round(F.avg(F.when(last_ok, mins_last)), 4).alias("avg_mins_last"),
+        F.round(F.avg(F.when(first_ok, mins_first)), 4).alias("avg_mins_first"),
+    )
+
+
+_SQL_USER_TYPE_MAP = """
+WITH per AS (
+  SELECT user_id, event_type, count(*)::BIGINT AS n
+  FROM events GROUP BY 1, 2
+)
+SELECT user_id,
+       count(*)::INT AS n_types,
+       coalesce(max(CASE WHEN event_type = 'purchase' THEN n END), 0)
+         AS n_purchases,
+       string_agg(event_type || ':' || n, ',' ORDER BY event_type)
+         AS counts_str
+FROM per
+WHERE user_id % 7 = 0
+GROUP BY user_id
+ORDER BY user_id
+"""
+
+
+@query(_SQL_USER_TYPE_MAP)
 def q_user_type_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MAP-type surface (completing the complex-type family: arrays ✓,
     structs ✓, map here): per-user event_type→count built as a real
@@ -11571,24 +11565,41 @@ def q_user_type_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_USER_TYPE_MAP = """
-WITH per AS (
-  SELECT user_id, event_type, count(*)::BIGINT AS n
-  FROM events GROUP BY 1, 2
+_SQL_CAPPED_SESSIONS = """
+WITH e AS (
+  SELECT user_id, epoch_us(ts) AS us, event_id,
+         CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w IS NULL
+                OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
+              THEN 1 ELSE 0 END AS new_s
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+),
+g AS (
+  SELECT user_id, us, event_id,
+         sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
+                          ROWS UNBOUNDED PRECEDING) AS gsid
+  FROM e
+),
+sub AS (
+  SELECT user_id, gsid, us,
+         floor((us - min(us) OVER (PARTITION BY user_id, gsid))
+               / 7200000000) AS sub
+  FROM g
+),
+per AS (
+  SELECT user_id, gsid, sub, count(*)::BIGINT AS n_events,
+         (max(us) - min(us)) / 6e7 AS dur_min
+  FROM sub GROUP BY 1, 2, 3
 )
-SELECT user_id,
-       count(*)::INT AS n_types,
-       coalesce(max(CASE WHEN event_type = 'purchase' THEN n END), 0)
-         AS n_purchases,
-       string_agg(event_type || ':' || n, ',' ORDER BY event_type)
-         AS counts_str
-FROM per
-WHERE user_id % 7 = 0
-GROUP BY user_id
-ORDER BY user_id
+SELECT user_id, count(*)::BIGINT AS n_sessions,
+       sum(CASE WHEN sub > 0 THEN 1 ELSE 0 END)::BIGINT AS n_cap_splits,
+       round(max(dur_min), 4) AS max_dur_min,
+       sum(n_events)::BIGINT AS n_events
+FROM per GROUP BY user_id ORDER BY user_id
 """
 
 
+@query(_SQL_CAPPED_SESSIONS)
 def q_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization with BOTH rules real trackers use: a 30-min
     inactivity gap starts a session AND a 2-hour hard cap splits long
@@ -11624,40 +11635,25 @@ def q_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id")
 
 
-_SQL_CAPPED_SESSIONS = """
-WITH e AS (
-  SELECT user_id, epoch_us(ts) AS us, event_id,
-         CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w IS NULL
-                OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-              THEN 1 ELSE 0 END AS new_s
+_SQL_DEBOUNCE = """
+WITH d AS (
+  SELECT event_type,
+         CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
+                     OVER (PARTITION BY user_id, event_type
+                           ORDER BY ts, event_id) IS NULL
+                OR epoch_us(ts) - lag(epoch_us(ts))
+                     OVER (PARTITION BY user_id, event_type
+                           ORDER BY ts, event_id) > 60000000
+              THEN 1 ELSE 0 END AS kept
   FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-g AS (
-  SELECT user_id, us, event_id,
-         sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-                          ROWS UNBOUNDED PRECEDING) AS gsid
-  FROM e
-),
-sub AS (
-  SELECT user_id, gsid, us,
-         floor((us - min(us) OVER (PARTITION BY user_id, gsid))
-               / 7200000000) AS sub
-  FROM g
-),
-per AS (
-  SELECT user_id, gsid, sub, count(*)::BIGINT AS n_events,
-         (max(us) - min(us)) / 6e7 AS dur_min
-  FROM sub GROUP BY 1, 2, 3
 )
-SELECT user_id, count(*)::BIGINT AS n_sessions,
-       sum(CASE WHEN sub > 0 THEN 1 ELSE 0 END)::BIGINT AS n_cap_splits,
-       round(max(dur_min), 4) AS max_dur_min,
-       sum(n_events)::BIGINT AS n_events
-FROM per GROUP BY user_id ORDER BY user_id
+SELECT event_type, count(*)::BIGINT AS n_raw, sum(kept)::BIGINT AS n_kept,
+       round(1.0 - sum(kept) / count(*), 6) AS suppressed_frac
+FROM d GROUP BY event_type ORDER BY event_type
 """
 
 
+@query(_SQL_DEBOUNCE)
 def q_debounced_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Debounce (near-duplicate-in-time suppression): drop an event if
     the same (user, type) fired within the previous 60 s — the
@@ -11690,24 +11686,63 @@ def q_debounced_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_DEBOUNCE = """
-WITH d AS (
-  SELECT event_type,
-         CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-                     OVER (PARTITION BY user_id, event_type
-                           ORDER BY ts, event_id) IS NULL
-                OR epoch_us(ts) - lag(epoch_us(ts))
-                     OVER (PARTITION BY user_id, event_type
-                           ORDER BY ts, event_id) > 60000000
-              THEN 1 ELSE 0 END AS kept
-  FROM events
+_SQL_ROLLING_CORR = """
+WITH daily AS (
+  SELECT date_trunc('day', o_orderdate) AS day,
+         sum(round(o_totalprice * 100)::BIGINT) AS x,
+         count(*)::BIGINT AS y
+  FROM orders GROUP BY 1
+),
+g AS (
+  -- exact FLOOR division for any sign (Spark side is Python's `//`):
+  -- DuckDB's // truncates toward zero, so subtract the non-negative
+  -- residue first — the numerator is then exactly divisible and
+  -- truncation == floor. Today's x/y (revenue cents, row counts) are
+  -- positive, but the mean must stay engine-identical for any sign.
+  SELECT (sum(x) - ((sum(x) % count(*)) + count(*)) % count(*)) // count(*) AS x0,
+         (sum(y) - ((sum(y) % count(*)) + count(*)) % count(*)) // count(*) AS y0
+  FROM daily
+),
+c AS (
+  SELECT day, (x - (SELECT x0 FROM g))::BIGINT AS cx,
+         (y - (SELECT y0 FROM g))::BIGINT AS cy
+  FROM daily
+),
+c2 AS (
+  SELECT day, cx, cy,
+         CAST(floor(cx / 8192.0) AS BIGINT) AS q
+  FROM c
+),
+c3 AS (
+  SELECT day, cx, cy, q, (cx - 8192 * q)::BIGINT AS r FROM c2
+),
+m AS (
+  SELECT day,
+         count(*) OVER w AS n,
+         sum(cx) OVER w AS sx, sum(cy) OVER w AS sy,
+         sum(q * q) OVER w AS s1, sum(q * r) OVER w AS s2,
+         sum(r * r) OVER w AS s3,
+         sum(cy * cy) OVER w AS syy,
+         sum(q * cy) OVER w AS t1, sum(r * cy) OVER w AS t2
+  FROM c3
+  WINDOW w AS (ORDER BY day ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
+),
+a AS (
+  SELECT day, n::DOUBLE AS nd, sx::DOUBLE AS sx, sy::DOUBLE AS sy,
+         67108864.0 * s1::DOUBLE + 16384.0 * s2::DOUBLE + s3::DOUBLE AS sxx,
+         syy::DOUBLE AS syy,
+         8192.0 * t1::DOUBLE + t2::DOUBLE AS sxy
+  FROM m WHERE n = 14
 )
-SELECT event_type, count(*)::BIGINT AS n_raw, sum(kept)::BIGINT AS n_kept,
-       round(1.0 - sum(kept) / count(*), 6) AS suppressed_frac
-FROM d GROUP BY event_type ORDER BY event_type
+SELECT day,
+       round((sxy - sx * sy / nd)
+             / sqrt((sxx - sx * sx / nd) * (syy - sy * sy / nd)), 6)
+         AS corr14
+FROM a ORDER BY day
 """
 
 
+@query(_SQL_ROLLING_CORR)
 def q_rolling_correlation_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing 14-day rolling Pearson correlation between daily
     revenue and daily order count — the co-movement monitor. All five
@@ -11790,90 +11825,6 @@ def q_rolling_correlation_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("day")
 
 
-_SQL_ROLLING_CORR = """
-WITH daily AS (
-  SELECT date_trunc('day', o_orderdate) AS day,
-         sum(round(o_totalprice * 100)::BIGINT) AS x,
-         count(*)::BIGINT AS y
-  FROM orders GROUP BY 1
-),
-g AS (
-  -- exact FLOOR division for any sign (Spark side is Python's `//`):
-  -- DuckDB's // truncates toward zero, so subtract the non-negative
-  -- residue first — the numerator is then exactly divisible and
-  -- truncation == floor. Today's x/y (revenue cents, row counts) are
-  -- positive, but the mean must stay engine-identical for any sign.
-  SELECT (sum(x) - ((sum(x) % count(*)) + count(*)) % count(*)) // count(*) AS x0,
-         (sum(y) - ((sum(y) % count(*)) + count(*)) % count(*)) // count(*) AS y0
-  FROM daily
-),
-c AS (
-  SELECT day, (x - (SELECT x0 FROM g))::BIGINT AS cx,
-         (y - (SELECT y0 FROM g))::BIGINT AS cy
-  FROM daily
-),
-c2 AS (
-  SELECT day, cx, cy,
-         CAST(floor(cx / 8192.0) AS BIGINT) AS q
-  FROM c
-),
-c3 AS (
-  SELECT day, cx, cy, q, (cx - 8192 * q)::BIGINT AS r FROM c2
-),
-m AS (
-  SELECT day,
-         count(*) OVER w AS n,
-         sum(cx) OVER w AS sx, sum(cy) OVER w AS sy,
-         sum(q * q) OVER w AS s1, sum(q * r) OVER w AS s2,
-         sum(r * r) OVER w AS s3,
-         sum(cy * cy) OVER w AS syy,
-         sum(q * cy) OVER w AS t1, sum(r * cy) OVER w AS t2
-  FROM c3
-  WINDOW w AS (ORDER BY day ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-),
-a AS (
-  SELECT day, n::DOUBLE AS nd, sx::DOUBLE AS sx, sy::DOUBLE AS sy,
-         67108864.0 * s1::DOUBLE + 16384.0 * s2::DOUBLE + s3::DOUBLE AS sxx,
-         syy::DOUBLE AS syy,
-         8192.0 * t1::DOUBLE + t2::DOUBLE AS sxy
-  FROM m WHERE n = 14
-)
-SELECT day,
-       round((sxy - sx * sy / nd)
-             / sqrt((sxx - sx * sx / nd) * (syy - sy * sy / nd)), 6)
-         AS corr14
-FROM a ORDER BY day
-"""
-
-
-def q_bearing_sector_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compass-sector spatial profile: every event's bearing from the
-    Times Square reference point (functions/geo.bearing_deg — initial
-    great-circle bearing via atan2) bucketed into eight 45° sectors,
-    with per-sector counts and mean haversine distance. Pure per-row
-    trig in codegen + one small agg; the oracle replays the exact
-    atan2/pmod formula."""
-    ev = _t(spark, sf_dir, "events")
-    from ..functions.geo import bearing_deg
-
-    pts = _derived_points(ev)
-    ref_lat, ref_lon = 40.7580, -73.9855
-    b = bearing_deg(F.lit(ref_lat), F.lit(ref_lon), F.col("lat"), F.col("lon"))
-    d = haversine_km(F.lit(ref_lat), F.lit(ref_lon), F.col("lat"), F.col("lon"))
-    sector = F.floor(((F.col("bearing") + 22.5) % 360) / 45).cast("int")
-    return (
-        pts.withColumn("bearing", b)
-        .withColumn("dist_km", d)
-        .withColumn("sector", sector)
-        .groupBy("sector")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg("dist_km"), 4).alias("avg_km"),
-        )
-        .orderBy("sector")
-    )
-
-
 _SQL_BEARING_SECTORS = f"""
 WITH p AS ({_DERIVED_POINTS_SQL}),
 b AS (
@@ -11897,6 +11848,52 @@ FROM b GROUP BY 1 ORDER BY sector
 """
 
 
+@query(_SQL_BEARING_SECTORS)
+def q_bearing_sector_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Compass-sector spatial profile: every event's bearing from the
+    Times Square reference point (functions/geo.bearing_deg — initial
+    great-circle bearing via atan2) bucketed into eight 45° sectors,
+    with per-sector counts and mean haversine distance. Pure per-row
+    trig in codegen + one small agg; the oracle replays the exact
+    atan2/pmod formula."""
+    ev = _t(spark, sf_dir, "events")
+
+    pts = _derived_points(ev)
+    ref_lat, ref_lon = 40.7580, -73.9855
+    b = geo.bearing_deg(F.lit(ref_lat), F.lit(ref_lon), F.col("lat"), F.col("lon"))
+    d = geo.haversine_km(F.lit(ref_lat), F.lit(ref_lon), F.col("lat"), F.col("lon"))
+    sector = F.floor(((F.col("bearing") + 22.5) % 360) / 45).cast("int")
+    return (
+        pts.withColumn("bearing", b)
+        .withColumn("dist_km", d)
+        .withColumn("sector", sector)
+        .groupBy("sector")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.avg("dist_km"), 4).alias("avg_km"),
+        )
+        .orderBy("sector")
+    )
+
+
+_SQL_FULFILLMENT_LAG = """
+WITH last_ship AS (
+  SELECT l_orderkey, max(l_shipdate) AS last_ship FROM lineitem GROUP BY 1
+),
+lagged AS (
+  SELECT o_orderpriority,
+         epoch_us(last_ship - o_orderdate) / (86400.0 * 1e6) AS lag_days
+  FROM orders JOIN last_ship ON o_orderkey = l_orderkey
+)
+SELECT o_orderpriority, count(*)::BIGINT AS n_orders,
+       round(quantile_cont(lag_days, 0.5), 6) AS p50_days,
+       round(quantile_cont(lag_days, 0.9), 6) AS p90_days,
+       round(max(lag_days), 6) AS max_days
+FROM lagged GROUP BY o_orderpriority ORDER BY o_orderpriority
+"""
+
+
+@query(_SQL_FULFILLMENT_LAG)
 def q_order_fulfillment_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lifecycle-lag analysis: days from order placement to its LAST
     line shipment, with exact p50/p90 per order priority — the SLA
@@ -11928,23 +11925,45 @@ def q_order_fulfillment_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_FULFILLMENT_LAG = """
-WITH last_ship AS (
-  SELECT l_orderkey, max(l_shipdate) AS last_ship FROM lineitem GROUP BY 1
+_SQL_RFM = """
+WITH mx AS (SELECT max(o_orderdate) AS mx FROM orders),
+rfm AS (
+  SELECT o_custkey,
+         min(epoch_us(mx.mx - o_orderdate)) / (86400.0 * 1e6) AS recency_days,
+         count(*)::BIGINT AS frequency,
+         round(sum(o_totalprice), 2) AS monetary
+  FROM orders CROSS JOIN mx
+  GROUP BY o_custkey
 ),
-lagged AS (
-  SELECT o_orderpriority,
-         epoch_us(last_ship - o_orderdate) / (86400.0 * 1e6) AS lag_days
-  FROM orders JOIN last_ship ON o_orderkey = l_orderkey
+th AS (
+  SELECT quantile_cont(recency_days, 0.25) AS recency_days_25,
+         quantile_cont(recency_days, 0.5) AS recency_days_50,
+         quantile_cont(recency_days, 0.75) AS recency_days_75,
+         quantile_cont(frequency, 0.25) AS frequency_25,
+         quantile_cont(frequency, 0.5) AS frequency_50,
+         quantile_cont(frequency, 0.75) AS frequency_75,
+         quantile_cont(monetary, 0.25) AS monetary_25,
+         quantile_cont(monetary, 0.5) AS monetary_50,
+         quantile_cont(monetary, 0.75) AS monetary_75
+  FROM rfm
+),
+scored AS (
+  SELECT
+    5 - (1 + (recency_days > recency_days_25)::INT
+           + (recency_days > recency_days_50)::INT
+           + (recency_days > recency_days_75)::INT) AS r,
+    1 + (frequency > frequency_25)::INT + (frequency > frequency_50)::INT
+      + (frequency > frequency_75)::INT AS f,
+    1 + (monetary > monetary_25)::INT + (monetary > monetary_50)::INT
+      + (monetary > monetary_75)::INT AS m
+  FROM rfm CROSS JOIN th
 )
-SELECT o_orderpriority, count(*)::BIGINT AS n_orders,
-       round(quantile_cont(lag_days, 0.5), 6) AS p50_days,
-       round(quantile_cont(lag_days, 0.9), 6) AS p90_days,
-       round(max(lag_days), 6) AS max_days
-FROM lagged GROUP BY o_orderpriority ORDER BY o_orderpriority
+SELECT r, f, m, count(*)::BIGINT AS n_customers
+FROM scored GROUP BY 1, 2, 3 ORDER BY r, f, m
 """
 
 
+@query(_SQL_RFM)
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation at scale: recency (days before the
     corpus max date), frequency (orders), monetary (total spend) per
@@ -12000,44 +12019,35 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_RFM = """
-WITH mx AS (SELECT max(o_orderdate) AS mx FROM orders),
-rfm AS (
-  SELECT o_custkey,
-         min(epoch_us(mx.mx - o_orderdate)) / (86400.0 * 1e6) AS recency_days,
-         count(*)::BIGINT AS frequency,
-         round(sum(o_totalprice), 2) AS monetary
-  FROM orders CROSS JOIN mx
-  GROUP BY o_custkey
+_SQL_MEAN_SHIFT = """
+WITH daily AS (
+  SELECT date_trunc('day', o_orderdate) AS day,
+         sum(round(o_totalprice * 100)::BIGINT) AS x
+  FROM orders GROUP BY 1
 ),
-th AS (
-  SELECT quantile_cont(recency_days, 0.25) AS recency_days_25,
-         quantile_cont(recency_days, 0.5) AS recency_days_50,
-         quantile_cont(recency_days, 0.75) AS recency_days_75,
-         quantile_cont(frequency, 0.25) AS frequency_25,
-         quantile_cont(frequency, 0.5) AS frequency_50,
-         quantile_cont(frequency, 0.75) AS frequency_75,
-         quantile_cont(monetary, 0.25) AS monetary_25,
-         quantile_cont(monetary, 0.5) AS monetary_50,
-         quantile_cont(monetary, 0.75) AS monetary_75
-  FROM rfm
-),
-scored AS (
-  SELECT
-    5 - (1 + (recency_days > recency_days_25)::INT
-           + (recency_days > recency_days_50)::INT
-           + (recency_days > recency_days_75)::INT) AS r,
-    1 + (frequency > frequency_25)::INT + (frequency > frequency_50)::INT
-      + (frequency > frequency_75)::INT AS f,
-    1 + (monetary > monetary_25)::INT + (monetary > monetary_50)::INT
-      + (monetary > monetary_75)::INT AS m
-  FROM rfm CROSS JOIN th
+tot AS (SELECT sum(x) AS sx_all, count(*)::BIGINT AS n_all FROM daily),
+pre AS (
+  SELECT day,
+         sum(x) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS sx_pre,
+         count(*) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS n_pre
+  FROM daily
 )
-SELECT r, f, m, count(*)::BIGINT AS n_customers
-FROM scored GROUP BY 1, 2, 3 ORDER BY r, f, m
+SELECT day,
+       round(sx_pre::DOUBLE / n_pre / 100.0, 4) AS mean_before,
+       round((sx_all - sx_pre)::DOUBLE / (n_all - n_pre) / 100.0, 4)
+         AS mean_after,
+       round(abs((sx_all - sx_pre)::DOUBLE / (n_all - n_pre) / 100.0
+                 - sx_pre::DOUBLE / n_pre / 100.0)
+             * sqrt(n_pre * (n_all - n_pre) / n_all::DOUBLE), 4)
+         AS shift_score
+FROM pre CROSS JOIN tot
+WHERE n_pre >= 14 AND n_all - n_pre >= 14
+ORDER BY shift_score DESC, day
+LIMIT 5
 """
 
 
+@query(_SQL_MEAN_SHIFT)
 def q_mean_shift_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Change-point detection by exhaustive mean-shift scan: for every
     candidate split day t, the standardized gap between the mean daily
@@ -12088,34 +12098,24 @@ def q_mean_shift_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_MEAN_SHIFT = """
-WITH daily AS (
-  SELECT date_trunc('day', o_orderdate) AS day,
-         sum(round(o_totalprice * 100)::BIGINT) AS x
-  FROM orders GROUP BY 1
+_SQL_BENFORD = """
+WITH obs AS (
+  SELECT floor(o_totalprice / pow(10.0, floor(log10(o_totalprice))))::INT AS d,
+         count(*)::BIGINT AS n
+  FROM orders WHERE o_totalprice > 0 GROUP BY 1
 ),
-tot AS (SELECT sum(x) AS sx_all, count(*)::BIGINT AS n_all FROM daily),
-pre AS (
-  SELECT day,
-         sum(x) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS sx_pre,
-         count(*) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS n_pre
-  FROM daily
-)
-SELECT day,
-       round(sx_pre::DOUBLE / n_pre / 100.0, 4) AS mean_before,
-       round((sx_all - sx_pre)::DOUBLE / (n_all - n_pre) / 100.0, 4)
-         AS mean_after,
-       round(abs((sx_all - sx_pre)::DOUBLE / (n_all - n_pre) / 100.0
-                 - sx_pre::DOUBLE / n_pre / 100.0)
-             * sqrt(n_pre * (n_all - n_pre) / n_all::DOUBLE), 4)
-         AS shift_score
-FROM pre CROSS JOIN tot
-WHERE n_pre >= 14 AND n_all - n_pre >= 14
-ORDER BY shift_score DESC, day
-LIMIT 5
+tot AS (SELECT sum(n) AS n_tot FROM obs)
+SELECT d, n,
+       round(n / n_tot::DOUBLE, 6) AS obs_share,
+       round(log10(1.0 + 1.0 / d), 6) AS benford_share,
+       round(pow(n - log10(1.0 + 1.0 / d) * n_tot, 2)
+             / (log10(1.0 + 1.0 / d) * n_tot), 4) AS chi2_term
+FROM obs CROSS JOIN tot
+ORDER BY d
 """
 
 
+@query(_SQL_BENFORD)
 def q_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law audit on order totals: observed first-significant-
     digit shares vs log10(1 + 1/d), with the χ² contribution per digit
@@ -12150,23 +12150,32 @@ def q_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_BENFORD = """
-WITH obs AS (
-  SELECT floor(o_totalprice / pow(10.0, floor(log10(o_totalprice))))::INT AS d,
-         count(*)::BIGINT AS n
-  FROM orders WHERE o_totalprice > 0 GROUP BY 1
+_SQL_MAX_OPEN = """
+WITH last_ship AS (
+  SELECT l_orderkey, max(l_shipdate) AS close_ts FROM lineitem GROUP BY 1
 ),
-tot AS (SELECT sum(n) AS n_tot FROM obs)
-SELECT d, n,
-       round(n / n_tot::DOUBLE, 6) AS obs_share,
-       round(log10(1.0 + 1.0 / d), 6) AS benford_share,
-       round(pow(n - log10(1.0 + 1.0 / d) * n_tot, 2)
-             / (log10(1.0 + 1.0 / d) * n_tot), 4) AS chi2_term
-FROM obs CROSS JOIN tot
-ORDER BY d
+o AS (
+  SELECT o_orderdate, close_ts FROM orders
+  JOIN last_ship ON o_orderkey = l_orderkey
+),
+deltas AS (
+  SELECT day, sum(delta) AS net FROM (
+    SELECT date_trunc('day', o_orderdate) AS day, 1 AS delta FROM o
+    UNION ALL
+    SELECT date_trunc('day', close_ts) + INTERVAL 1 DAY, -1 FROM o
+  ) GROUP BY day
+),
+running AS (
+  SELECT day,
+         sum(net) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS open_orders
+  FROM deltas
+)
+SELECT date_trunc('month', day) AS month, max(open_orders)::BIGINT AS max_open
+FROM running GROUP BY 1 ORDER BY month
 """
 
 
+@query(_SQL_MAX_OPEN)
 def q_max_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval-concurrency sweep line: how many orders are 'open'
     (placed, not yet fully shipped) at once — +1 at placement, −1
@@ -12202,31 +12211,29 @@ def q_max_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_MAX_OPEN = """
-WITH last_ship AS (
-  SELECT l_orderkey, max(l_shipdate) AS close_ts FROM lineitem GROUP BY 1
-),
-o AS (
-  SELECT o_orderdate, close_ts FROM orders
-  JOIN last_ship ON o_orderkey = l_orderkey
-),
-deltas AS (
-  SELECT day, sum(delta) AS net FROM (
-    SELECT date_trunc('day', o_orderdate) AS day, 1 AS delta FROM o
-    UNION ALL
-    SELECT date_trunc('day', close_ts) + INTERVAL 1 DAY, -1 FROM o
-  ) GROUP BY day
-),
-running AS (
-  SELECT day,
-         sum(net) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS open_orders
-  FROM deltas
-)
-SELECT date_trunc('month', day) AS month, max(open_orders)::BIGINT AS max_open
-FROM running GROUP BY 1 ORDER BY month
+_SQL_SKEW_REPORT = """
+WITH
+r1 AS (SELECT 'l_orderkey' AS key_col, count(*)::BIGINT AS n_keys,
+              sum(n)::BIGINT AS n_rows, max(n)::BIGINT AS max_per_key,
+              round(max(n) / avg(n), 4) AS skew_ratio,
+              round(max(n) / sum(n)::DOUBLE, 6) AS top_key_share
+       FROM (SELECT count(*)::BIGINT AS n FROM lineitem GROUP BY l_orderkey)),
+r2 AS (SELECT 'l_partkey', count(*)::BIGINT, sum(n)::BIGINT, max(n)::BIGINT,
+              round(max(n) / avg(n), 4), round(max(n) / sum(n)::DOUBLE, 6)
+       FROM (SELECT count(*)::BIGINT AS n FROM lineitem GROUP BY l_partkey)),
+r3 AS (SELECT 'l_suppkey', count(*)::BIGINT, sum(n)::BIGINT, max(n)::BIGINT,
+              round(max(n) / avg(n), 4), round(max(n) / sum(n)::DOUBLE, 6)
+       FROM (SELECT count(*)::BIGINT AS n FROM lineitem GROUP BY l_suppkey)),
+r4 AS (SELECT 'l_returnflag', count(*)::BIGINT, sum(n)::BIGINT, max(n)::BIGINT,
+              round(max(n) / avg(n), 4), round(max(n) / sum(n)::DOUBLE, 6)
+       FROM (SELECT count(*)::BIGINT AS n FROM lineitem GROUP BY l_returnflag))
+SELECT * FROM r1 UNION ALL SELECT * FROM r2
+UNION ALL SELECT * FROM r3 UNION ALL SELECT * FROM r4
+ORDER BY key_col
 """
 
 
+@query(_SQL_SKEW_REPORT)
 def q_skew_report_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew diagnostics — the pre-flight report that decides
     broadcast vs salt vs AQE for each candidate shuffle key: per key
@@ -12254,28 +12261,29 @@ def q_skew_report_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("key_col")
 
 
-_SQL_SKEW_REPORT = """
-WITH
-r1 AS (SELECT 'l_orderkey' AS key_col, count(*)::BIGINT AS n_keys,
-              sum(n)::BIGINT AS n_rows, max(n)::BIGINT AS max_per_key,
-              round(max(n) / avg(n), 4) AS skew_ratio,
-              round(max(n) / sum(n)::DOUBLE, 6) AS top_key_share
-       FROM (SELECT count(*)::BIGINT AS n FROM lineitem GROUP BY l_orderkey)),
-r2 AS (SELECT 'l_partkey', count(*)::BIGINT, sum(n)::BIGINT, max(n)::BIGINT,
-              round(max(n) / avg(n), 4), round(max(n) / sum(n)::DOUBLE, 6)
-       FROM (SELECT count(*)::BIGINT AS n FROM lineitem GROUP BY l_partkey)),
-r3 AS (SELECT 'l_suppkey', count(*)::BIGINT, sum(n)::BIGINT, max(n)::BIGINT,
-              round(max(n) / avg(n), 4), round(max(n) / sum(n)::DOUBLE, 6)
-       FROM (SELECT count(*)::BIGINT AS n FROM lineitem GROUP BY l_suppkey)),
-r4 AS (SELECT 'l_returnflag', count(*)::BIGINT, sum(n)::BIGINT, max(n)::BIGINT,
-              round(max(n) / avg(n), 4), round(max(n) / sum(n)::DOUBLE, 6)
-       FROM (SELECT count(*)::BIGINT AS n FROM lineitem GROUP BY l_returnflag))
-SELECT * FROM r1 UNION ALL SELECT * FROM r2
-UNION ALL SELECT * FROM r3 UNION ALL SELECT * FROM r4
-ORDER BY key_col
+_SQL_WEIGHTED_MEDIAN = """
+WITH base AS (
+  SELECT l_returnflag, l_extendedprice / l_quantity AS unit_price,
+         l_quantity, l_orderkey, l_linenumber
+  FROM lineitem
+),
+c AS (
+  SELECT l_returnflag, unit_price,
+         sum(l_quantity) OVER (PARTITION BY l_returnflag
+                               ORDER BY unit_price, l_orderkey, l_linenumber
+                               ROWS UNBOUNDED PRECEDING) AS cum_qty,
+         sum(l_quantity) OVER (PARTITION BY l_returnflag) AS tot_qty
+  FROM base
+)
+SELECT l_returnflag,
+       round(min(unit_price), 6) AS weighted_median_unit,
+       max(tot_qty)::BIGINT AS total_qty
+FROM c WHERE cum_qty >= tot_qty / 2
+GROUP BY l_returnflag ORDER BY l_returnflag
 """
 
 
+@query(_SQL_WEIGHTED_MEDIAN)
 def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantity-weighted median unit price per return flag — the
     weighted-quantile family (a plain median over lineitems answers
@@ -12310,32 +12318,32 @@ def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_WEIGHTED_MEDIAN = """
-WITH base AS (
-  SELECT l_returnflag, l_extendedprice / l_quantity AS unit_price,
-         l_quantity, l_orderkey, l_linenumber
-  FROM lineitem
-),
-c AS (
-  SELECT l_returnflag, unit_price,
-         sum(l_quantity) OVER (PARTITION BY l_returnflag
-                               ORDER BY unit_price, l_orderkey, l_linenumber
-                               ROWS UNBOUNDED PRECEDING) AS cum_qty,
-         sum(l_quantity) OVER (PARTITION BY l_returnflag) AS tot_qty
-  FROM base
-)
-SELECT l_returnflag,
-       round(min(unit_price), 6) AS weighted_median_unit,
-       max(tot_qty)::BIGINT AS total_qty
-FROM c WHERE cum_qty >= tot_qty / 2
-GROUP BY l_returnflag ORDER BY l_returnflag
-"""
-
-
 _EWMA_ALPHA = 0.2
 _EWMA_LAGS = 21
 
 
+def _sql_ewma() -> str:
+    num, den = [], []
+    for k in range(_EWMA_LAGS):
+        wk = f"{(1.0 - _EWMA_ALPHA) ** k!r}"
+        lagk = "x" if k == 0 else f"lag(x, {k}) OVER w"
+        num.append(f"coalesce({lagk}, 0.0) * {wk}")
+        den.append(f"CASE WHEN {lagk} IS NOT NULL THEN {wk} ELSE 0.0 END")
+    return f"""
+WITH daily AS (
+  SELECT date_trunc('day', o_orderdate) AS day,
+         sum(round(o_totalprice * 100)::BIGINT) / 100.0 AS x
+  FROM orders GROUP BY 1
+)
+SELECT day, round(x, 2) AS revenue,
+       round(({' + '.join(num)}) / ({' + '.join(den)}), 4) AS ewma
+FROM daily
+WINDOW w AS (ORDER BY day)
+ORDER BY day
+"""
+
+
+@query(_sql_ewma())
 def q_ewma_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially weighted moving average of daily revenue —
     defined TRUNCATED at 21 lags (weight 0.8²¹ < 1%), which turns the
@@ -12367,27 +12375,24 @@ def q_ewma_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("day")
 
 
-def _sql_ewma() -> str:
-    num, den = [], []
-    for k in range(_EWMA_LAGS):
-        wk = f"{(1.0 - _EWMA_ALPHA) ** k!r}"
-        lagk = "x" if k == 0 else f"lag(x, {k}) OVER w"
-        num.append(f"coalesce({lagk}, 0.0) * {wk}")
-        den.append(f"CASE WHEN {lagk} IS NOT NULL THEN {wk} ELSE 0.0 END")
-    return f"""
+_SQL_SEASONAL_DOW = """
 WITH daily AS (
   SELECT date_trunc('day', o_orderdate) AS day,
          sum(round(o_totalprice * 100)::BIGINT) / 100.0 AS x
   FROM orders GROUP BY 1
-)
-SELECT day, round(x, 2) AS revenue,
-       round(({' + '.join(num)}) / ({' + '.join(den)}), 4) AS ewma
-FROM daily
-WINDOW w AS (ORDER BY day)
-ORDER BY day
+),
+d AS (SELECT *, (dayofweek(day) + 6) % 7 AS dow FROM daily),
+o AS (SELECT avg(x) AS mu FROM d)
+SELECT dow, count(*)::BIGINT AS n_days,
+       round(avg(x), 2) AS mean_revenue,
+       round(avg(x) / max(mu), 6) AS seasonal_index,
+       round(stddev_samp(x / mu), 6) AS deseason_sd
+FROM d CROSS JOIN o
+GROUP BY dow ORDER BY dow
 """
 
 
+@query(_SQL_SEASONAL_DOW)
 def q_seasonal_index_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiplicative weekly seasonality: index(dow) = mean daily
     revenue on that weekday / overall mean (Monday=0 via the
@@ -12416,23 +12421,29 @@ def q_seasonal_index_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SEASONAL_DOW = """
+def _sql_acf() -> str:
+    parts = []
+    for k in range(1, 8):
+        parts.append(f"""
+SELECT {k} AS lag,
+       round((sum(a * b) - sum(a) * sum(b) / count(*))
+             / sqrt((sum(a * a) - sum(a) * sum(a) / count(*))
+                    * (sum(b * b) - sum(b) * sum(b) / count(*))), 6) AS acf,
+       count(*)::BIGINT AS n_pairs
+FROM (SELECT x::DOUBLE AS a, lag(x, {k}) OVER (ORDER BY day)::DOUBLE AS b
+      FROM daily) WHERE b IS NOT NULL""")
+    u = " UNION ALL ".join(parts)
+    return f"""
 WITH daily AS (
   SELECT date_trunc('day', o_orderdate) AS day,
-         sum(round(o_totalprice * 100)::BIGINT) / 100.0 AS x
+         sum(round(o_totalprice * 100)::BIGINT) AS x
   FROM orders GROUP BY 1
-),
-d AS (SELECT *, (dayofweek(day) + 6) % 7 AS dow FROM daily),
-o AS (SELECT avg(x) AS mu FROM d)
-SELECT dow, count(*)::BIGINT AS n_days,
-       round(avg(x), 2) AS mean_revenue,
-       round(avg(x) / max(mu), 6) AS seasonal_index,
-       round(stddev_samp(x / mu), 6) AS deseason_sd
-FROM d CROSS JOIN o
-GROUP BY dow ORDER BY dow
+)
+SELECT * FROM ({u}) ORDER BY lag
 """
 
 
+@query(_sql_acf())
 def q_autocorrelation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation function of daily revenue at lags 1–7 (the
     weekly-cycle detector): each lag's Pearson correlation over the
@@ -12474,28 +12485,30 @@ def q_autocorrelation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("lag")
 
 
-def _sql_acf() -> str:
-    parts = []
-    for k in range(1, 8):
-        parts.append(f"""
-SELECT {k} AS lag,
-       round((sum(a * b) - sum(a) * sum(b) / count(*))
-             / sqrt((sum(a * a) - sum(a) * sum(a) / count(*))
-                    * (sum(b * b) - sum(b) * sum(b) / count(*))), 6) AS acf,
-       count(*)::BIGINT AS n_pairs
-FROM (SELECT x::DOUBLE AS a, lag(x, {k}) OVER (ORDER BY day)::DOUBLE AS b
-      FROM daily) WHERE b IS NOT NULL""")
-    u = " UNION ALL ".join(parts)
-    return f"""
-WITH daily AS (
-  SELECT date_trunc('day', o_orderdate) AS day,
-         sum(round(o_totalprice * 100)::BIGINT) AS x
-  FROM orders GROUP BY 1
+_SQL_UNIGRAM_LP = """
+WITH toks AS (
+  SELECT doc_id, source, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+  FROM documents
+),
+t AS (SELECT * FROM toks WHERE tok <> ''),
+vocab AS (SELECT tok, count(*)::BIGINT AS tf FROM t GROUP BY tok),
+totals AS (SELECT sum(tf) AS n_tokens, count(*)::BIGINT AS v_size FROM vocab),
+scored AS (
+  SELECT doc_id, source,
+         ln((tf + 1.0) / (n_tokens + v_size)::DOUBLE) AS lp
+  FROM t JOIN vocab USING (tok) CROSS JOIN totals
+),
+per_doc AS (
+  SELECT doc_id, source, avg(lp) AS mean_lp FROM scored GROUP BY 1, 2
 )
-SELECT * FROM ({u}) ORDER BY lag
+SELECT source, count(*)::BIGINT AS n_docs,
+       round(avg(mean_lp), 6) AS avg_logprob,
+       round(min(mean_lp), 6) AS worst_logprob
+FROM per_doc GROUP BY source ORDER BY source
 """
 
 
+@query(_SQL_UNIGRAM_LP)
 def q_unigram_logprob_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-model quality scoring: a unigram LM fit on the corpus
     itself (add-1 smoothed token probabilities), each doc scored by its
@@ -12538,6 +12551,39 @@ def q_unigram_logprob_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_SQL_DSIR = """
+WITH toks AS (
+  SELECT doc_id, source, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+  FROM documents
+),
+t AS (SELECT * FROM toks WHERE tok <> ''),
+tgt AS (SELECT min(source) AS s FROM documents),
+vc AS (SELECT tok, count(*)::BIGINT AS tf_c FROM t GROUP BY tok),
+vt AS (SELECT tok, count(*)::BIGINT AS tf_t FROM t, tgt WHERE t.source = tgt.s GROUP BY tok),
+vocab AS (
+  SELECT vc.tok, vc.tf_c, coalesce(vt.tf_t, 0) AS tf_t
+  FROM vc LEFT JOIN vt USING (tok)
+),
+totals AS (SELECT sum(tf_c) AS n_c, sum(tf_t) AS n_t, count(*)::BIGINT AS v FROM vocab),
+per_doc AS (
+  SELECT doc_id, source,
+         avg(ln((tf_t + 1.0) / (n_t + v)::DOUBLE) - ln((tf_c + 1.0) / (n_c + v)::DOUBLE)) AS w
+  FROM t JOIN vocab USING (tok) CROSS JOIN totals
+  GROUP BY doc_id, source
+),
+ranked AS (
+  SELECT *, row_number() OVER (ORDER BY w DESC, doc_id ASC) AS rk FROM per_doc
+)
+SELECT source, count(*)::BIGINT AS n_docs,
+       sum(CASE WHEN rk <= 100 THEN 1 ELSE 0 END)::BIGINT AS n_selected,
+       round(avg(CASE WHEN rk <= 100 THEN w END), 6) AS avg_sel_weight
+FROM ranked
+GROUP BY source HAVING sum(CASE WHEN rk <= 100 THEN 1 ELSE 0 END) > 0
+ORDER BY source
+"""
+
+
+@query(_SQL_DSIR)
 def q_dsir_select_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-selection-by-importance-resampling (DSIR, Xie et al. 2023)
     re-expressed with hashed-unigram features: fit add-1-smoothed
@@ -12606,61 +12652,31 @@ def q_dsir_select_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_DSIR = """
-WITH toks AS (
-  SELECT doc_id, source, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-  FROM documents
-),
-t AS (SELECT * FROM toks WHERE tok <> ''),
-tgt AS (SELECT min(source) AS s FROM documents),
-vc AS (SELECT tok, count(*)::BIGINT AS tf_c FROM t GROUP BY tok),
-vt AS (SELECT tok, count(*)::BIGINT AS tf_t FROM t, tgt WHERE t.source = tgt.s GROUP BY tok),
-vocab AS (
-  SELECT vc.tok, vc.tf_c, coalesce(vt.tf_t, 0) AS tf_t
-  FROM vc LEFT JOIN vt USING (tok)
-),
-totals AS (SELECT sum(tf_c) AS n_c, sum(tf_t) AS n_t, count(*)::BIGINT AS v FROM vocab),
-per_doc AS (
-  SELECT doc_id, source,
-         avg(ln((tf_t + 1.0) / (n_t + v)::DOUBLE) - ln((tf_c + 1.0) / (n_c + v)::DOUBLE)) AS w
-  FROM t JOIN vocab USING (tok) CROSS JOIN totals
-  GROUP BY doc_id, source
-),
-ranked AS (
-  SELECT *, row_number() OVER (ORDER BY w DESC, doc_id ASC) AS rk FROM per_doc
+_SQL_PIT_FEATURES = """
+WITH feat AS (
+  SELECT user_id, event_type, ts,
+         count(*) OVER wp AS prior_n,
+         avg(value) OVER wp AS prior_avg_value,
+         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) OVER wp
+           AS prior_clicks,
+         (epoch_us(ts) - lag(epoch_us(ts)) OVER w) / 1e6 AS gap_s
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id),
+         wp AS (PARTITION BY user_id ORDER BY ts, event_id
+                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
 )
-SELECT source, count(*)::BIGINT AS n_docs,
-       sum(CASE WHEN rk <= 100 THEN 1 ELSE 0 END)::BIGINT AS n_selected,
-       round(avg(CASE WHEN rk <= 100 THEN w END), 6) AS avg_sel_weight
-FROM ranked
-GROUP BY source HAVING sum(CASE WHEN rk <= 100 THEN 1 ELSE 0 END) > 0
-ORDER BY source
+SELECT hour(ts) AS label_hour, count(*)::BIGINT AS n_rows,
+       round(avg(prior_n), 4) AS avg_prior_n,
+       round(avg(prior_avg_value), 4) AS avg_prior_value,
+       round(avg(prior_clicks), 4) AS avg_prior_clicks,
+       sum(CASE WHEN prior_n = 0 THEN 1 ELSE 0 END)::BIGINT AS n_cold_start,
+       round(avg(gap_s), 2) AS avg_gap_s
+FROM feat WHERE event_type = 'purchase'
+GROUP BY 1 ORDER BY label_hour
 """
 
 
-_SQL_UNIGRAM_LP = """
-WITH toks AS (
-  SELECT doc_id, source, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-  FROM documents
-),
-t AS (SELECT * FROM toks WHERE tok <> ''),
-vocab AS (SELECT tok, count(*)::BIGINT AS tf FROM t GROUP BY tok),
-totals AS (SELECT sum(tf) AS n_tokens, count(*)::BIGINT AS v_size FROM vocab),
-scored AS (
-  SELECT doc_id, source,
-         ln((tf + 1.0) / (n_tokens + v_size)::DOUBLE) AS lp
-  FROM t JOIN vocab USING (tok) CROSS JOIN totals
-),
-per_doc AS (
-  SELECT doc_id, source, avg(lp) AS mean_lp FROM scored GROUP BY 1, 2
-)
-SELECT source, count(*)::BIGINT AS n_docs,
-       round(avg(mean_lp), 6) AS avg_logprob,
-       round(min(mean_lp), 6) AS worst_logprob
-FROM per_doc GROUP BY source ORDER BY source
-"""
-
-
+@query(_SQL_PIT_FEATURES)
 def q_pit_features_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time-correct training-set assembly — the feature-store
     contract: every label row (a purchase) carries features computed
@@ -12704,30 +12720,23 @@ def q_pit_features_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_PIT_FEATURES = """
-WITH feat AS (
-  SELECT user_id, event_type, ts,
-         count(*) OVER wp AS prior_n,
-         avg(value) OVER wp AS prior_avg_value,
-         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) OVER wp
-           AS prior_clicks,
-         (epoch_us(ts) - lag(epoch_us(ts)) OVER w) / 1e6 AS gap_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id),
-         wp AS (PARTITION BY user_id ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+_SQL_TOPK_TIES = """
+WITH rev AS (
+  SELECT p_brand, p_partkey,
+         round(sum(round(l_extendedprice * 100)::BIGINT
+                   * (100 - round(l_discount * 100)::BIGINT)) / 10000.0,
+               2) AS revenue
+  FROM lineitem JOIN part ON l_partkey = p_partkey
+  GROUP BY 1, 2
 )
-SELECT hour(ts) AS label_hour, count(*)::BIGINT AS n_rows,
-       round(avg(prior_n), 4) AS avg_prior_n,
-       round(avg(prior_avg_value), 4) AS avg_prior_value,
-       round(avg(prior_clicks), 4) AS avg_prior_clicks,
-       sum(CASE WHEN prior_n = 0 THEN 1 ELSE 0 END)::BIGINT AS n_cold_start,
-       round(avg(gap_s), 2) AS avg_gap_s
-FROM feat WHERE event_type = 'purchase'
-GROUP BY 1 ORDER BY label_hour
+SELECT p_brand, p_partkey, revenue,
+       dense_rank() OVER (PARTITION BY p_brand ORDER BY revenue DESC) AS rnk
+FROM rev QUALIFY rnk <= 3
+ORDER BY p_brand, rnk, p_partkey
 """
 
 
+@query(_SQL_TOPK_TIES)
 def q_topk_with_ties_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k WITH TIES (dense_rank ≤ 3): the 3 highest revenue VALUES
     per brand, keeping every part that achieves them — the semantics
@@ -12760,22 +12769,23 @@ def q_topk_with_ties_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TOPK_TIES = """
-WITH rev AS (
-  SELECT p_brand, p_partkey,
-         round(sum(round(l_extendedprice * 100)::BIGINT
-                   * (100 - round(l_discount * 100)::BIGINT)) / 10000.0,
-               2) AS revenue
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  GROUP BY 1, 2
+_SQL_FRONTEND = """
+WITH nat_rev AS (
+  SELECT n_name, round(sum(o_totalprice), 2) AS revenue,
+         count(*)::BIGINT AS n_orders
+  FROM orders
+  JOIN customer ON o_custkey = c_custkey
+  JOIN nation ON c_nationkey = n_nationkey
+  GROUP BY n_name
 )
-SELECT p_brand, p_partkey, revenue,
-       dense_rank() OVER (PARTITION BY p_brand ORDER BY revenue DESC) AS rnk
-FROM rev QUALIFY rnk <= 3
-ORDER BY p_brand, rnk, p_partkey
+SELECT n_name, revenue, n_orders,
+       round(revenue / sum(revenue) OVER (), 6) AS share
+FROM nat_rev
+ORDER BY revenue DESC, n_name
 """
 
 
+@query(_SQL_FRONTEND)
 def q_sql_frontend_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL front end as a first-class entry point: the engine's
     tables registered as temp views and a multi-CTE Spark SQL
@@ -12802,83 +12812,6 @@ def q_sql_frontend_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM nat_rev
         ORDER BY revenue DESC, n_name
         """
-    )
-
-
-_SQL_FRONTEND = """
-WITH nat_rev AS (
-  SELECT n_name, round(sum(o_totalprice), 2) AS revenue,
-         count(*)::BIGINT AS n_orders
-  FROM orders
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation ON c_nationkey = n_nationkey
-  GROUP BY n_name
-)
-SELECT n_name, revenue, n_orders,
-       round(revenue / sum(revenue) OVER (), 6) AS share
-FROM nat_rev
-ORDER BY revenue DESC, n_name
-"""
-
-
-def q_isochrone_hull_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Polygon measurement on the isochrone hull: vertex count,
-    shoelace area and centroid of the reachable region's convex hull —
-    the geometry rollup lab-3-style reports print. Runs on the same
-    integer lattice as `isochrone_poi_access`, so every cross product
-    is exact bigint math and the oracle can replay the WHOLE chain:
-    recursive-CTE bounded SSSP → boundary points → MAXIMAL hull edges
-    (all points weakly left AND no collinear point outside the
-    segment — the second condition is what de-duplicates collinear
-    chains so shoelace sums each side exactly once) → closed-loop
-    shoelace. Spark side: the hull (already collinear-free, CCW from
-    monotone chain) folds to area/centroid on the driver — O(hull)
-    artifacts only, per the engine's driver policy."""
-    from ..graph.algorithms import convex_hull, isochrone_nodes
-
-    n = 30
-    ids = spark.range(n * n).select(F.col("id").cast("bigint"))
-    nodes = ids.select(
-        "id",
-        ((F.col("id") % n) * 100).alias("ix"),
-        ((F.col("id") / n).cast("bigint") * 100).alias("iy"),
-    )
-    right = ids.filter((F.col("id") % n) < n - 1).select(
-        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
-    )
-    down = ids.filter(F.col("id") < n * (n - 1)).select(
-        F.col("id").alias("src"), (F.col("id") + n).alias("dst")
-    )
-    edges = right.unionByName(down).withColumn(
-        "travel_time",
-        F.lit(60.0) / (F.lit(1) + (F.col("src") * F.col("dst")) % 5),
-    )
-    center = n * n // 2 + n // 2
-    reach = isochrone_nodes(edges, nodes, center, radius=300.0, directed=False)
-    hull = convex_hull(reach, x="ix", y="iy")
-    a2 = sum(
-        ax * by - bx * ay
-        for (ax, ay), (bx, by) in zip(hull, hull[1:] + hull[:1])
-    )
-    cx6 = sum(
-        (ax + bx) * (ax * by - bx * ay)
-        for (ax, ay), (bx, by) in zip(hull, hull[1:] + hull[:1])
-    )
-    cy6 = sum(
-        (ay + by) * (ax * by - bx * ay)
-        for (ax, ay), (bx, by) in zip(hull, hull[1:] + hull[:1])
-    )
-    return local_frame(
-        spark,
-        [
-            (
-                len(hull),
-                a2 / 2.0,
-                round(cx6 / (3.0 * a2), 4),
-                round(cy6 / (3.0 * a2), 4),
-            )
-        ],
-        "n_vertices int, area double, cx double, cy double",
     )
 
 
@@ -12933,6 +12866,97 @@ FROM hedges
 """
 
 
+@query(_SQL_HULL_GEOMETRY)
+def q_isochrone_hull_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Polygon measurement on the isochrone hull: vertex count,
+    shoelace area and centroid of the reachable region's convex hull —
+    the geometry rollup lab-3-style reports print. Runs on the same
+    integer lattice as `isochrone_poi_access`, so every cross product
+    is exact bigint math and the oracle can replay the WHOLE chain:
+    recursive-CTE bounded SSSP → boundary points → MAXIMAL hull edges
+    (all points weakly left AND no collinear point outside the
+    segment — the second condition is what de-duplicates collinear
+    chains so shoelace sums each side exactly once) → closed-loop
+    shoelace. Spark side: the hull (already collinear-free, CCW from
+    monotone chain) folds to area/centroid on the driver — O(hull)
+    artifacts only, per the engine's driver policy."""
+    n = 30
+    ids, grid = _grid_graph(spark, n)
+    nodes = ids.select(
+        "id",
+        ((F.col("id") % n) * 100).alias("ix"),
+        ((F.col("id") / n).cast("bigint") * 100).alias("iy"),
+    )
+    edges = grid.withColumn(
+        "travel_time",
+        F.lit(60.0) / (F.lit(1) + (F.col("src") * F.col("dst")) % 5),
+    )
+    center = n * n // 2 + n // 2
+    reach = ga.isochrone_nodes(edges, nodes, center, radius=300.0, directed=False)
+    hull = ga.convex_hull(reach, x="ix", y="iy")
+    a2 = sum(
+        ax * by - bx * ay
+        for (ax, ay), (bx, by) in zip(hull, hull[1:] + hull[:1])
+    )
+    cx6 = sum(
+        (ax + bx) * (ax * by - bx * ay)
+        for (ax, ay), (bx, by) in zip(hull, hull[1:] + hull[:1])
+    )
+    cy6 = sum(
+        (ay + by) * (ax * by - bx * ay)
+        for (ax, ay), (bx, by) in zip(hull, hull[1:] + hull[:1])
+    )
+    return tb.local_frame(
+        spark,
+        [
+            (
+                len(hull),
+                a2 / 2.0,
+                round(cx6 / (3.0 * a2), 4),
+                round(cy6 / (3.0 * a2), 4),
+            )
+        ],
+        "n_vertices int, area double, cx double, cy double",
+    )
+
+
+_SQL_KMV_OVERLAP = """
+WITH ha AS (
+  SELECT DISTINCT ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS h
+  FROM (SELECT DISTINCT user_id FROM events WHERE event_type = 'click')
+),
+hb AS (
+  SELECT DISTINCT ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS h
+  FROM (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')
+),
+ska AS (SELECT h FROM ha ORDER BY h LIMIT 64),
+skb AS (SELECT h FROM hb ORDER BY h LIMIT 64),
+sku AS (SELECT DISTINCT h FROM (SELECT h FROM ska UNION ALL SELECT h FROM skb)
+        ORDER BY h LIMIT 64),
+ea AS (SELECT CASE WHEN count(*) < 64 THEN count(*)::DOUBLE
+                   ELSE round((count(*) - 1) * 1152921504606846976.0 / max(h), 2)
+              END AS d_click FROM ska),
+eb AS (SELECT CASE WHEN count(*) < 64 THEN count(*)::DOUBLE
+                   ELSE round((count(*) - 1) * 1152921504606846976.0 / max(h), 2)
+              END AS d_purchase FROM skb),
+eu AS (SELECT CASE WHEN count(*) < 64 THEN count(*)::DOUBLE
+                   ELSE round((count(*) - 1) * 1152921504606846976.0 / max(h), 2)
+              END AS d_union FROM sku),
+exact AS (
+  SELECT count(*)::BIGINT AS exact_overlap FROM (
+    SELECT DISTINCT user_id FROM events WHERE event_type = 'click'
+    INTERSECT
+    SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'
+  )
+)
+SELECT d_click, d_purchase, d_union,
+       round(d_click + d_purchase - d_union, 2) AS est_overlap,
+       exact_overlap
+FROM ea CROSS JOIN eb CROSS JOIN eu CROSS JOIN exact
+"""
+
+
+@query(_SQL_KMV_OVERLAP)
 def q_kmv_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set-operation sketches — audience-overlap estimation from KMV
     sketches ALONE (the mergeable-sketch algebra): distinct clickers ∩
@@ -13007,42 +13031,22 @@ def q_kmv_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_KMV_OVERLAP = """
-WITH ha AS (
-  SELECT DISTINCT ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS h
-  FROM (SELECT DISTINCT user_id FROM events WHERE event_type = 'click')
+_SQL_INVERTED_INDEX = """
+WITH toks AS (
+  SELECT DISTINCT doc_id,
+         unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+  FROM documents
 ),
-hb AS (
-  SELECT DISTINCT ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS h
-  FROM (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')
-),
-ska AS (SELECT h FROM ha ORDER BY h LIMIT 64),
-skb AS (SELECT h FROM hb ORDER BY h LIMIT 64),
-sku AS (SELECT DISTINCT h FROM (SELECT h FROM ska UNION ALL SELECT h FROM skb)
-        ORDER BY h LIMIT 64),
-ea AS (SELECT CASE WHEN count(*) < 64 THEN count(*)::DOUBLE
-                   ELSE round((count(*) - 1) * 1152921504606846976.0 / max(h), 2)
-              END AS d_click FROM ska),
-eb AS (SELECT CASE WHEN count(*) < 64 THEN count(*)::DOUBLE
-                   ELSE round((count(*) - 1) * 1152921504606846976.0 / max(h), 2)
-              END AS d_purchase FROM skb),
-eu AS (SELECT CASE WHEN count(*) < 64 THEN count(*)::DOUBLE
-                   ELSE round((count(*) - 1) * 1152921504606846976.0 / max(h), 2)
-              END AS d_union FROM sku),
-exact AS (
-  SELECT count(*)::BIGINT AS exact_overlap FROM (
-    SELECT DISTINCT user_id FROM events WHERE event_type = 'click'
-    INTERSECT
-    SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'
-  )
-)
-SELECT d_click, d_purchase, d_union,
-       round(d_click + d_purchase - d_union, 2) AS est_overlap,
-       exact_overlap
-FROM ea CROSS JOIN eb CROSS JOIN eu CROSS JOIN exact
+t AS (SELECT * FROM toks WHERE tok <> '')
+SELECT tok, count(*)::BIGINT AS df,
+       string_agg(doc_id::VARCHAR, ',' ORDER BY doc_id) AS postings
+FROM t GROUP BY tok
+ORDER BY df DESC, tok
+LIMIT 20
 """
 
 
+@query(_SQL_INVERTED_INDEX)
 def q_inverted_index_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Search-index construction: token → sorted postings list
     (doc_ids) + document frequency, for the 20 highest-df terms — the
@@ -13068,21 +13072,32 @@ def q_inverted_index_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_INVERTED_INDEX = """
-WITH toks AS (
-  SELECT DISTINCT doc_id,
-         unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-  FROM documents
+_SQL_CHI2 = """
+WITH d AS (
+  SELECT event_type, (dayofweek(ts) + 6) % 7 AS dow FROM events
 ),
-t AS (SELECT * FROM toks WHERE tok <> '')
-SELECT tok, count(*)::BIGINT AS df,
-       string_agg(doc_id::VARCHAR, ',' ORDER BY doc_id) AS postings
-FROM t GROUP BY tok
-ORDER BY df DESC, tok
-LIMIT 20
+grid AS (
+  SELECT event_type, dow, count(*)::BIGINT AS o FROM d GROUP BY 1, 2
+),
+rows_ AS (SELECT event_type, sum(o) AS r_tot FROM grid GROUP BY 1),
+cols_ AS (SELECT dow, sum(o) AS c_tot FROM grid GROUP BY 1),
+tot AS (SELECT sum(o) AS n FROM grid),
+e AS (
+  SELECT o, r_tot * c_tot / n::DOUBLE AS exp, n
+  FROM grid
+  JOIN rows_ USING (event_type)
+  JOIN cols_ USING (dow)
+  CROSS JOIN tot
+)
+SELECT round(sum(pow(o - exp, 2) / exp), 4) AS chi2,
+       24 AS dof,
+       round(sqrt(sum(pow(o - exp, 2) / exp) / (max(n) * 4.0)), 6) AS cramers_v,
+       max(n)::BIGINT AS n
+FROM e
 """
 
 
+@query(_SQL_CHI2)
 def q_chi2_type_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """χ² independence test between event type and weekday (the
     categorical-association screen; completes the statistical-test
@@ -13117,31 +13132,28 @@ def q_chi2_type_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CHI2 = """
-WITH d AS (
-  SELECT event_type, (dayofweek(ts) + 6) % 7 AS dow FROM events
+_SQL_FRAME_SAMPLE = """
+WITH videos AS (
+  SELECT doc_id AS item_id, (8 + doc_id % 120)::INT AS n_frames
+  FROM documents WHERE doc_id % 3 = 2
 ),
-grid AS (
-  SELECT event_type, dow, count(*)::BIGINT AS o FROM d GROUP BY 1, 2
-),
-rows_ AS (SELECT event_type, sum(o) AS r_tot FROM grid GROUP BY 1),
-cols_ AS (SELECT dow, sum(o) AS c_tot FROM grid GROUP BY 1),
-tot AS (SELECT sum(o) AS n FROM grid),
-e AS (
-  SELECT o, r_tot * c_tot / n::DOUBLE AS exp, n
-  FROM grid
-  JOIN rows_ USING (event_type)
-  JOIN cols_ USING (dow)
-  CROSS JOIN tot
+sampled AS (
+  SELECT item_id, n_frames,
+         range(0, n_frames, 4) AS idxs
+  FROM videos
 )
-SELECT round(sum(pow(o - exp, 2) / exp), 4) AS chi2,
-       24 AS dof,
-       round(sqrt(sum(pow(o - exp, 2) / exp) / (max(n) * 4.0)), 6) AS cramers_v,
-       max(n)::BIGINT AS n
-FROM e
+SELECT (n_frames // 32) * 32 AS frame_band,
+       count(*)::BIGINT AS n_videos,
+       sum(len(idxs))::BIGINT AS total_sampled,
+       max(n_frames) AS max_frames,
+       max_by(array_to_string(idxs, ','), n_frames * 100000 + item_id)
+         AS longest_idx_list
+FROM sampled
+GROUP BY 1 ORDER BY frame_band
 """
 
 
+@query(_SQL_FRAME_SAMPLE)
 def q_frame_sample_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal frame-sampling MANIFEST — the planning half of video
     ingestion, fully oracle-checkable (the decode half stays a pytest-
@@ -13153,9 +13165,8 @@ def q_frame_sample_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (video, frame-range)) — planning stays JVM-side, bytes never move
     for it."""
     docs = _t(spark, sf_dir, "documents")
-    from ..sources.multimodal import synthesize_media
 
-    m = synthesize_media(docs, "doc_id", "text")
+    m = mm.synthesize_media(docs, "doc_id", "text")
     videos = m.filter(F.col("media.media_type") == "video").select(
         "item_id", F.col("media.n_frames").alias("n_frames")
     )
@@ -13183,27 +13194,25 @@ def q_frame_sample_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_FRAME_SAMPLE = """
-WITH videos AS (
-  SELECT doc_id AS item_id, (8 + doc_id % 120)::INT AS n_frames
-  FROM documents WHERE doc_id % 3 = 2
+_SQL_TOP_DECILE = """
+WITH spend AS (
+  SELECT n_name, o_custkey, round(sum(o_totalprice), 2) AS spend
+  FROM orders
+  JOIN customer ON o_custkey = c_custkey
+  JOIN nation ON c_nationkey = n_nationkey
+  GROUP BY n_name, o_custkey
 ),
-sampled AS (
-  SELECT item_id, n_frames,
-         range(0, n_frames, 4) AS idxs
-  FROM videos
-)
-SELECT (n_frames // 32) * 32 AS frame_band,
-       count(*)::BIGINT AS n_videos,
-       sum(len(idxs))::BIGINT AS total_sampled,
-       max(n_frames) AS max_frames,
-       max_by(array_to_string(idxs, ','), n_frames * 100000 + item_id)
-         AS longest_idx_list
-FROM sampled
-GROUP BY 1 ORDER BY frame_band
+th AS (SELECT n_name, quantile_cont(spend, 0.9) AS p90 FROM spend GROUP BY 1)
+SELECT s.n_name, count(*)::BIGINT AS n_top,
+       round(sum(s.spend), 2) AS top_spend, round(max(t.p90), 2) AS p90_bar
+FROM spend s JOIN th t ON s.n_name = t.n_name
+WHERE s.spend > t.p90
+GROUP BY s.n_name
+ORDER BY s.n_name
 """
 
 
+@query(_SQL_TOP_DECILE)
 def q_top_decile_spenders_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-GROUP percentile threshold (F17's group-wise form): each
     nation's top-decile spenders — the p90 spend computed per nation
@@ -13240,24 +13249,28 @@ def q_top_decile_spenders_by_nation(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-_SQL_TOP_DECILE = """
+_SQL_GINI = """
 WITH spend AS (
-  SELECT n_name, o_custkey, round(sum(o_totalprice), 2) AS spend
+  SELECT n_name, o_custkey,
+         sum(round(o_totalprice * 100)::BIGINT) AS x
   FROM orders
   JOIN customer ON o_custkey = c_custkey
   JOIN nation ON c_nationkey = n_nationkey
   GROUP BY n_name, o_custkey
 ),
-th AS (SELECT n_name, quantile_cont(spend, 0.9) AS p90 FROM spend GROUP BY 1)
-SELECT s.n_name, count(*)::BIGINT AS n_top,
-       round(sum(s.spend), 2) AS top_spend, round(max(t.p90), 2) AS p90_bar
-FROM spend s JOIN th t ON s.n_name = t.n_name
-WHERE s.spend > t.p90
-GROUP BY s.n_name
-ORDER BY s.n_name
+ranked AS (
+  SELECT n_name, x,
+         row_number() OVER (PARTITION BY n_name ORDER BY x, o_custkey) AS i
+  FROM spend
+)
+SELECT n_name, count(*)::BIGINT AS n_customers,
+       round(2.0 * sum(i * x) / (count(*) * sum(x))
+             - (count(*) + 1.0) / count(*), 6) AS gini
+FROM ranked GROUP BY n_name ORDER BY n_name
 """
 
 
+@query(_SQL_GINI)
 def q_gini_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inequality measurement: the Gini coefficient of customer spend
     within each nation, from the rank formulation
@@ -13296,27 +13309,39 @@ def q_gini_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_GINI = """
-WITH spend AS (
-  SELECT n_name, o_custkey,
-         sum(round(o_totalprice * 100)::BIGINT) AS x
-  FROM orders
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation ON c_nationkey = n_nationkey
-  GROUP BY n_name, o_custkey
+_SQL_CONCENTRATION = """
+WITH grid AS (
+  SELECT p_type, p_brand,
+         round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS rev
+  FROM lineitem JOIN part ON l_partkey = p_partkey
+  GROUP BY 1, 2
 ),
-ranked AS (
-  SELECT n_name, x,
-         row_number() OVER (PARTITION BY n_name ORDER BY x, o_custkey) AS i
-  FROM spend
+tot AS (SELECT p_type, sum(rev) AS t FROM grid GROUP BY 1),
+shared AS (
+  SELECT g.p_type, g.p_brand, g.rev, g.rev / t.t AS share
+  FROM grid g JOIN tot t ON g.p_type = t.p_type
+),
+cr3 AS (
+  SELECT p_type, round(sum(share), 6) AS cr3 FROM (
+    SELECT p_type, share,
+           row_number() OVER (PARTITION BY p_type
+                              ORDER BY rev DESC, p_brand) AS rn
+    FROM shared
+  ) WHERE rn <= 3 GROUP BY p_type
+),
+base AS (
+  SELECT p_type, count(*)::BIGINT AS n_brands,
+         round(sum(share * share), 6) AS hhi,
+         round(-sum(share * ln(share)), 6) AS entropy
+  FROM shared GROUP BY p_type
 )
-SELECT n_name, count(*)::BIGINT AS n_customers,
-       round(2.0 * sum(i * x) / (count(*) * sum(x))
-             - (count(*) + 1.0) / count(*), 6) AS gini
-FROM ranked GROUP BY n_name ORDER BY n_name
+SELECT base.p_type, n_brands, hhi, entropy, cr3.cr3
+FROM base JOIN cr3 ON base.p_type = cr3.p_type
+ORDER BY base.p_type
 """
 
 
+@query(_SQL_CONCENTRATION)
 def q_concentration_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-concentration metrics per part type: Herfindahl–Hirschman
     index (Σ share²), Shannon entropy of the brand mix, and CR3 (top-3
@@ -13355,76 +13380,6 @@ def q_concentration_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.join(cr3, "p_type").orderBy("p_type")
 
 
-_SQL_CONCENTRATION = """
-WITH grid AS (
-  SELECT p_type, p_brand,
-         round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS rev
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  GROUP BY 1, 2
-),
-tot AS (SELECT p_type, sum(rev) AS t FROM grid GROUP BY 1),
-shared AS (
-  SELECT g.p_type, g.p_brand, g.rev, g.rev / t.t AS share
-  FROM grid g JOIN tot t ON g.p_type = t.p_type
-),
-cr3 AS (
-  SELECT p_type, round(sum(share), 6) AS cr3 FROM (
-    SELECT p_type, share,
-           row_number() OVER (PARTITION BY p_type
-                              ORDER BY rev DESC, p_brand) AS rn
-    FROM shared
-  ) WHERE rn <= 3 GROUP BY p_type
-),
-base AS (
-  SELECT p_type, count(*)::BIGINT AS n_brands,
-         round(sum(share * share), 6) AS hhi,
-         round(-sum(share * ln(share)), 6) AS entropy
-  FROM shared GROUP BY p_type
-)
-SELECT base.p_type, n_brands, hhi, entropy, cr3.cr3
-FROM base JOIN cr3 ON base.p_type = cr3.p_type
-ORDER BY base.p_type
-"""
-
-
-def q_temporal_state_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal (validity-interval) point lookup against SCD2 history —
-    'what was each user's state at time T?' for a deterministic probe
-    set: the SCD2 collapse builds the versioned dimension, then probes
-    join on user_id with the interval residual
-    effective_from ≤ T < effective_to. The equi-key (user_id) drives
-    the hash join — the interval test is a residual filter, never a
-    range-scan join; per (user, T) exactly one version matches (SCD2
-    intervals partition time). Probes land mid-corpus via per-user
-    offsets so the answers exercise interior versions, not just
-    endpoints. The census per looked-up state is the output."""
-    from ..operators.scd import scd2_collapse
-
-    ev = _t(spark, sf_dir, "events")
-    hist = scd2_collapse(ev, "user_id", "event_type", "ts")
-    hi = F.lit("2100-01-01 00:00:00").cast("timestamp")
-    hist = hist.select(
-        "user_id",
-        "event_type",
-        F.col("effective_from").cast("timestamp").alias("ef"),
-        F.coalesce(F.col("effective_to").cast("timestamp"), hi).alias("et"),
-    )
-    users = ev.select("user_id").distinct()
-    probe_ts = (
-        F.lit("2024-01-05 00:00:00").cast("timestamp")
-        + F.make_dt_interval(F.lit(0), (F.col("user_id") % 14).cast("int"))
-    )
-    probes = users.select("user_id", probe_ts.alias("t"))
-    hits = hist.join(probes, "user_id").filter(
-        (F.col("ef") <= F.col("t")) & (F.col("t") < F.col("et"))
-    )
-    return (
-        hits.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_users"))
-        .orderBy("event_type")
-    )
-
-
 _SQL_TEMPORAL_LOOKUP = """
 WITH m AS (
   SELECT user_id, event_type, ts,
@@ -13452,6 +13407,71 @@ GROUP BY h.event_type ORDER BY h.event_type
 """
 
 
+@query(_SQL_TEMPORAL_LOOKUP)
+def q_temporal_state_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Temporal (validity-interval) point lookup against SCD2 history —
+    'what was each user's state at time T?' for a deterministic probe
+    set: the SCD2 collapse builds the versioned dimension, then probes
+    join on user_id with the interval residual
+    effective_from ≤ T < effective_to. The equi-key (user_id) drives
+    the hash join — the interval test is a residual filter, never a
+    range-scan join; per (user, T) exactly one version matches (SCD2
+    intervals partition time). Probes land mid-corpus via per-user
+    offsets so the answers exercise interior versions, not just
+    endpoints. The census per looked-up state is the output."""
+    ev = _t(spark, sf_dir, "events")
+    hist = scd.scd2_collapse(ev, "user_id", "event_type", "ts")
+    hi = F.lit("2100-01-01 00:00:00").cast("timestamp")
+    hist = hist.select(
+        "user_id",
+        "event_type",
+        F.col("effective_from").cast("timestamp").alias("ef"),
+        F.coalesce(F.col("effective_to").cast("timestamp"), hi).alias("et"),
+    )
+    users = ev.select("user_id").distinct()
+    probe_ts = (
+        F.lit("2024-01-05 00:00:00").cast("timestamp")
+        + F.make_dt_interval(F.lit(0), (F.col("user_id") % 14).cast("int"))
+    )
+    probes = users.select("user_id", probe_ts.alias("t"))
+    hits = hist.join(probes, "user_id").filter(
+        (F.col("ef") <= F.col("t")) & (F.col("t") < F.col("et"))
+    )
+    return (
+        hits.groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n_users"))
+        .orderBy("event_type")
+    )
+
+
+_SQL_SHARE_OF_PARENT = """
+WITH base AS (
+  SELECT r_name, n_name, o_totalprice
+  FROM orders
+  JOIN customer ON o_custkey = c_custkey
+  JOIN nation ON c_nationkey = n_nationkey
+  JOIN region ON n_regionkey = r_regionkey
+),
+leaves AS (
+  SELECT r_name, n_name, round(sum(o_totalprice), 2) AS rev
+  FROM base GROUP BY 1, 2
+),
+regions AS (
+  SELECT r_name, round(sum(o_totalprice), 2) AS region_rev
+  FROM base GROUP BY 1
+),
+grand AS (SELECT round(sum(o_totalprice), 2) AS grand_rev FROM base)
+SELECT l.r_name, l.n_name, l.rev,
+       round(l.rev / r.region_rev, 6) AS share_of_region,
+       round(r.region_rev / g.grand_rev, 6) AS region_share_of_total
+FROM leaves l
+JOIN regions r ON l.r_name = r.r_name
+CROSS JOIN grand g
+ORDER BY l.r_name, l.n_name
+"""
+
+
+@query(_SQL_SHARE_OF_PARENT)
 def q_share_of_parent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical share-of-parent over one ROLLUP grid: each
     (region, nation) row's share of its REGION subtotal, and each
@@ -13500,33 +13520,37 @@ def q_share_of_parent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SHARE_OF_PARENT = """
-WITH base AS (
-  SELECT r_name, n_name, o_totalprice
-  FROM orders
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation ON c_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey
+_SQL_QUARTILE_MIGRATION = """
+WITH s97 AS (
+  SELECT o_custkey, round(sum(o_totalprice), 2) AS spend FROM orders
+  WHERE o_orderdate >= TIMESTAMP '1997-01-01'
+    AND o_orderdate < TIMESTAMP '1998-01-01'
+  GROUP BY 1
 ),
-leaves AS (
-  SELECT r_name, n_name, round(sum(o_totalprice), 2) AS rev
-  FROM base GROUP BY 1, 2
+s98 AS (
+  SELECT o_custkey, round(sum(o_totalprice), 2) AS spend FROM orders
+  WHERE o_orderdate >= TIMESTAMP '1998-01-01'
+    AND o_orderdate < TIMESTAMP '1999-01-01'
+  GROUP BY 1
 ),
-regions AS (
-  SELECT r_name, round(sum(o_totalprice), 2) AS region_rev
-  FROM base GROUP BY 1
-),
-grand AS (SELECT round(sum(o_totalprice), 2) AS grand_rev FROM base)
-SELECT l.r_name, l.n_name, l.rev,
-       round(l.rev / r.region_rev, 6) AS share_of_region,
-       round(r.region_rev / g.grand_rev, 6) AS region_share_of_total
-FROM leaves l
-JOIN regions r ON l.r_name = r.r_name
-CROSS JOIN grand g
-ORDER BY l.r_name, l.n_name
+t97 AS (SELECT quantile_cont(spend, 0.25) AS q1, quantile_cont(spend, 0.5) AS q2,
+               quantile_cont(spend, 0.75) AS q3 FROM s97),
+t98 AS (SELECT quantile_cont(spend, 0.25) AS q1, quantile_cont(spend, 0.5) AS q2,
+               quantile_cont(spend, 0.75) AS q3 FROM s98),
+a AS (SELECT o_custkey,
+             1 + (spend > q1)::INT + (spend > q2)::INT + (spend > q3)::INT AS q97
+      FROM s97 CROSS JOIN t97),
+b AS (SELECT o_custkey,
+             1 + (spend > q1)::INT + (spend > q2)::INT + (spend > q3)::INT AS q98
+      FROM s98 CROSS JOIN t98)
+SELECT coalesce(q97, 0) AS q97, coalesce(q98, 0) AS q98,
+       count(*)::BIGINT AS n_customers
+FROM a FULL OUTER JOIN b USING (o_custkey)
+GROUP BY 1, 2 ORDER BY q97, q98
 """
 
 
+@query(_SQL_QUARTILE_MIGRATION)
 def q_spend_quartile_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Segment-migration matrix: each customer's spend quartile in 1997
     vs 1998, counted as a 4×4 transition grid plus churn-in/out rows
@@ -13574,36 +13598,24 @@ def q_spend_quartile_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_QUARTILE_MIGRATION = """
-WITH s97 AS (
-  SELECT o_custkey, round(sum(o_totalprice), 2) AS spend FROM orders
-  WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-    AND o_orderdate < TIMESTAMP '1998-01-01'
-  GROUP BY 1
+_SQL_SEASONAL_NAIVE = """
+WITH daily AS (
+  SELECT date_trunc('day', o_orderdate) AS day,
+         sum(round(o_totalprice * 100)::BIGINT) AS x
+  FROM orders GROUP BY 1
 ),
-s98 AS (
-  SELECT o_custkey, round(sum(o_totalprice), 2) AS spend FROM orders
-  WHERE o_orderdate >= TIMESTAMP '1998-01-01'
-    AND o_orderdate < TIMESTAMP '1999-01-01'
-  GROUP BY 1
-),
-t97 AS (SELECT quantile_cont(spend, 0.25) AS q1, quantile_cont(spend, 0.5) AS q2,
-               quantile_cont(spend, 0.75) AS q3 FROM s97),
-t98 AS (SELECT quantile_cont(spend, 0.25) AS q1, quantile_cont(spend, 0.5) AS q2,
-               quantile_cont(spend, 0.75) AS q3 FROM s98),
-a AS (SELECT o_custkey,
-             1 + (spend > q1)::INT + (spend > q2)::INT + (spend > q3)::INT AS q97
-      FROM s97 CROSS JOIN t97),
-b AS (SELECT o_custkey,
-             1 + (spend > q1)::INT + (spend > q2)::INT + (spend > q3)::INT AS q98
-      FROM s98 CROSS JOIN t98)
-SELECT coalesce(q97, 0) AS q97, coalesce(q98, 0) AS q98,
-       count(*)::BIGINT AS n_customers
-FROM a FULL OUTER JOIN b USING (o_custkey)
-GROUP BY 1, 2 ORDER BY q97, q98
+scored AS (
+  SELECT day, x, lag(x, 7) OVER (ORDER BY day) AS yhat FROM daily
+)
+SELECT date_trunc('month', day) AS month, count(*)::BIGINT AS n_days,
+       round(avg(abs(x - yhat)) / 100.0, 2) AS mae,
+       round(avg(abs(x - yhat) / x::DOUBLE), 6) AS mape
+FROM scored WHERE yhat IS NOT NULL
+GROUP BY 1 ORDER BY month
 """
 
 
+@query(_SQL_SEASONAL_NAIVE)
 def q_seasonal_naive_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forecast backtesting: the seasonal-naive baseline (ŷ_t = y_{t−7},
     same weekday last week) evaluated walk-forward over daily revenue —
@@ -13632,23 +13644,40 @@ def q_seasonal_naive_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SEASONAL_NAIVE = """
-WITH daily AS (
-  SELECT date_trunc('day', o_orderdate) AS day,
-         sum(round(o_totalprice * 100)::BIGINT) AS x
-  FROM orders GROUP BY 1
+_SQL_PRORATED = """
+WITH last_ship AS (
+  SELECT l_orderkey, max(l_shipdate) AS close_ts FROM lineitem GROUP BY 1
 ),
-scored AS (
-  SELECT day, x, lag(x, 7) OVER (ORDER BY day) AS yhat FROM daily
+o AS (
+  SELECT o_orderkey, round(o_totalprice * 100)::BIGINT AS cents,
+         o_orderdate::DATE AS d0, close_ts::DATE AS d1,
+         date_diff('day', o_orderdate::DATE, close_ts::DATE) + 1 AS span_days
+  FROM orders JOIN last_ship ON o_orderkey = l_orderkey
+  WHERE close_ts::DATE >= o_orderdate::DATE
+),
+exploded AS (
+  SELECT o_orderkey, cents, d0, d1, span_days,
+         unnest(generate_series(date_trunc('month', d0),
+                                date_trunc('month', d1),
+                                INTERVAL 1 MONTH))::DATE AS month
+  FROM o
+),
+credited AS (
+  SELECT month,
+         date_diff('day', greatest(month, d0),
+                   least(last_day(month), d1)) + 1 AS ov_days,
+         cents, span_days
+  FROM exploded
 )
-SELECT date_trunc('month', day) AS month, count(*)::BIGINT AS n_days,
-       round(avg(abs(x - yhat)) / 100.0, 2) AS mae,
-       round(avg(abs(x - yhat) / x::DOUBLE), 6) AS mape
-FROM scored WHERE yhat IS NOT NULL
-GROUP BY 1 ORDER BY month
+SELECT strftime(month, '%Y-%m') AS month,
+       round(sum(cents * ov_days / span_days::DOUBLE / 100.0), 2)
+         AS recognized_revenue,
+       count(*)::BIGINT AS n_order_slices
+FROM credited GROUP BY 1 ORDER BY month
 """
 
 
+@query(_SQL_PRORATED)
 def q_prorated_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue recognition proration: each order's value spreads
     uniformly over its service interval [orderdate, last shipment],
@@ -13710,39 +13739,30 @@ def q_prorated_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_PRORATED = """
-WITH last_ship AS (
-  SELECT l_orderkey, max(l_shipdate) AS close_ts FROM lineitem GROUP BY 1
+_SQL_SURVIVAL = """
+WITH spans AS (
+  SELECT user_id, min(ts)::DATE AS first_d, max(ts)::DATE AS last_d
+  FROM events GROUP BY 1
 ),
-o AS (
-  SELECT o_orderkey, round(o_totalprice * 100)::BIGINT AS cents,
-         o_orderdate::DATE AS d0, close_ts::DATE AS d1,
-         date_diff('day', o_orderdate::DATE, close_ts::DATE) + 1 AS span_days
-  FROM orders JOIN last_ship ON o_orderkey = l_orderkey
-  WHERE close_ts::DATE >= o_orderdate::DATE
+end_ AS (SELECT max(ts)::DATE AS end_d FROM events),
+lt AS (
+  SELECT user_id,
+         date_diff('day', first_d, last_d) AS lifetime,
+         date_diff('day', first_d, end_d) AS observable
+  FROM spans CROSS JOIN end_
 ),
-exploded AS (
-  SELECT o_orderkey, cents, d0, d1, span_days,
-         unnest(generate_series(date_trunc('month', d0),
-                                date_trunc('month', d1),
-                                INTERVAL 1 MONTH))::DATE AS month
-  FROM o
-),
-credited AS (
-  SELECT month,
-         date_diff('day', greatest(month, d0),
-                   least(last_day(month), d1)) + 1 AS ov_days,
-         cents, span_days
-  FROM exploded
-)
-SELECT strftime(month, '%Y-%m') AS month,
-       round(sum(cents * ov_days / span_days::DOUBLE / 100.0), 2)
-         AS recognized_revenue,
-       count(*)::BIGINT AS n_order_slices
-FROM credited GROUP BY 1 ORDER BY month
+horizons AS (SELECT (range * 5)::INT AS k FROM range(7))
+SELECT k, count(*)::BIGINT AS n_observable,
+       sum(CASE WHEN lifetime >= k THEN 1 ELSE 0 END)::BIGINT AS n_surviving,
+       round(sum(CASE WHEN lifetime >= k THEN 1 ELSE 0 END)
+             / count(*)::DOUBLE, 6) AS survival
+FROM lt CROSS JOIN horizons
+WHERE observable >= k
+GROUP BY k ORDER BY k
 """
 
 
+@query(_SQL_SURVIVAL)
 def q_user_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Censoring-aware retention (Kaplan-Meier-style at fixed
     horizons): S(k) = share of users still active ≥ k days after first
@@ -13781,29 +13801,36 @@ def q_user_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SURVIVAL = """
-WITH spans AS (
-  SELECT user_id, min(ts)::DATE AS first_d, max(ts)::DATE AS last_d
-  FROM events GROUP BY 1
-),
-end_ AS (SELECT max(ts)::DATE AS end_d FROM events),
-lt AS (
+_SQL_AB_TEST = """
+WITH per_user AS (
   SELECT user_id,
-         date_diff('day', first_d, last_d) AS lifetime,
-         date_diff('day', first_d, end_d) AS observable
-  FROM spans CROSS JOIN end_
+         ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT % 2 AS arm,
+         max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS converted
+  FROM events GROUP BY user_id
 ),
-horizons AS (SELECT (range * 5)::INT AS k FROM range(7))
-SELECT k, count(*)::BIGINT AS n_observable,
-       sum(CASE WHEN lifetime >= k THEN 1 ELSE 0 END)::BIGINT AS n_surviving,
-       round(sum(CASE WHEN lifetime >= k THEN 1 ELSE 0 END)
-             / count(*)::DOUBLE, 6) AS survival
-FROM lt CROSS JOIN horizons
-WHERE observable >= k
-GROUP BY k ORDER BY k
+arms AS (
+  SELECT arm, count(*)::BIGINT AS n, sum(converted)::BIGINT AS conv
+  FROM per_user GROUP BY arm
+),
+a AS (SELECT n AS n_a, conv AS c_a FROM arms WHERE arm = 0),
+b AS (SELECT n AS n_b, conv AS c_b FROM arms WHERE arm = 1)
+SELECT n_a, n_b,
+       round(c_a / n_a::DOUBLE, 6) AS rate_a,
+       round(c_b / n_b::DOUBLE, 6) AS rate_b,
+       round(c_a / n_a::DOUBLE - c_b / n_b::DOUBLE, 6) AS lift,
+       round(CASE WHEN sqrt(((c_a + c_b) / (n_a + n_b)::DOUBLE)
+                         * (1 - (c_a + c_b) / (n_a + n_b)::DOUBLE)
+                         * (1.0 / n_a + 1.0 / n_b)) > 0
+                  THEN (c_a / n_a::DOUBLE - c_b / n_b::DOUBLE)
+                       / sqrt(((c_a + c_b) / (n_a + n_b)::DOUBLE)
+                              * (1 - (c_a + c_b) / (n_a + n_b)::DOUBLE)
+                              * (1.0 / n_a + 1.0 / n_b))
+                  ELSE 0.0 END, 4) AS z_stat
+FROM a CROSS JOIN b
 """
 
 
+@query(_SQL_AB_TEST)
 def q_ab_test_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A/B experiment readout: users split by a deterministic hash
     bucket (the assignment every experimentation platform does),
@@ -13852,77 +13879,6 @@ def q_ab_test_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_AB_TEST = """
-WITH per_user AS (
-  SELECT user_id,
-         ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT % 2 AS arm,
-         max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS converted
-  FROM events GROUP BY user_id
-),
-arms AS (
-  SELECT arm, count(*)::BIGINT AS n, sum(converted)::BIGINT AS conv
-  FROM per_user GROUP BY arm
-),
-a AS (SELECT n AS n_a, conv AS c_a FROM arms WHERE arm = 0),
-b AS (SELECT n AS n_b, conv AS c_b FROM arms WHERE arm = 1)
-SELECT n_a, n_b,
-       round(c_a / n_a::DOUBLE, 6) AS rate_a,
-       round(c_b / n_b::DOUBLE, 6) AS rate_b,
-       round(c_a / n_a::DOUBLE - c_b / n_b::DOUBLE, 6) AS lift,
-       round(CASE WHEN sqrt(((c_a + c_b) / (n_a + n_b)::DOUBLE)
-                         * (1 - (c_a + c_b) / (n_a + n_b)::DOUBLE)
-                         * (1.0 / n_a + 1.0 / n_b)) > 0
-                  THEN (c_a / n_a::DOUBLE - c_b / n_b::DOUBLE)
-                       / sqrt(((c_a + c_b) / (n_a + n_b)::DOUBLE)
-                              * (1 - (c_a + c_b) / (n_a + n_b)::DOUBLE)
-                              * (1.0 / n_a + 1.0 / n_b))
-                  ELSE 0.0 END, 4) AS z_stat
-FROM a CROSS JOIN b
-"""
-
-
-def q_staypoint_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trajectory stay-point detection: maximal runs of consecutive
-    pings in the SAME grid cell lasting ≥ 30 minutes — the dwell
-    episodes mobility analysis mines (home/work/POI visits). The
-    trajectory family's gaps-and-islands member: cell-change flags
-    cumsum into island ids per user (the SCD2 collapse applied to a
-    spatial state), then island duration filters. Cell size ties to
-    the dwell radius exactly like DBSCAN's eps-grid. Output: per-user
-    stay counts and dwell-time stats."""
-    ev = _t(spark, sf_dir, "events")
-    pts = _derived_points(ev).select("user_id", "ts", "event_id", "lon", "lat")
-    gx, gy = grid_cell("lat", "lon", 40.5, -74.3, 0.05)
-    cells = pts.withColumn("cell", gx * 1000 + gy)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = cells.withColumn(
-        "chg",
-        F.when(
-            F.lag("cell").over(w).isNull()
-            | (F.col("cell") != F.lag("cell").over(w)),
-            1,
-        ).otherwise(0),
-    )
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    islands = flagged.withColumn("island", F.sum("chg").over(wrun))
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    per_island = islands.groupBy("user_id", "island").agg(
-        F.count(F.lit(1)).alias("n_pings"),
-        ((F.max(us) - F.min(us)) / F.lit(6e7)).alias("dwell_min"),
-    )
-    stays = per_island.filter(F.col("dwell_min") >= 30.0)
-    return (
-        stays.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_stays"),
-            F.round(F.avg("dwell_min"), 4).alias("avg_dwell_min"),
-            F.round(F.max("dwell_min"), 4).alias("max_dwell_min"),
-            F.sum("n_pings").alias("n_stay_pings"),
-        )
-        .orderBy("user_id")
-    )
-
-
 _SQL_STAYPOINTS = f"""
 WITH p AS ({_DERIVED_POINTS_SQL}),
 cells AS (
@@ -13957,6 +13913,78 @@ FROM stays GROUP BY user_id ORDER BY user_id
 """
 
 
+@query(_SQL_STAYPOINTS)
+def q_staypoint_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trajectory stay-point detection: maximal runs of consecutive
+    pings in the SAME grid cell lasting ≥ 30 minutes — the dwell
+    episodes mobility analysis mines (home/work/POI visits). The
+    trajectory family's gaps-and-islands member: cell-change flags
+    cumsum into island ids per user (the SCD2 collapse applied to a
+    spatial state), then island duration filters. Cell size ties to
+    the dwell radius exactly like DBSCAN's eps-grid. Output: per-user
+    stay counts and dwell-time stats."""
+    ev = _t(spark, sf_dir, "events")
+    pts = _derived_points(ev).select("user_id", "ts", "event_id", "lon", "lat")
+    gx, gy = geo.grid_cell("lat", "lon", 40.5, -74.3, 0.05)
+    cells = pts.withColumn("cell", gx * 1000 + gy)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    flagged = cells.withColumn(
+        "chg",
+        F.when(
+            F.lag("cell").over(w).isNull()
+            | (F.col("cell") != F.lag("cell").over(w)),
+            1,
+        ).otherwise(0),
+    )
+    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    islands = flagged.withColumn("island", F.sum("chg").over(wrun))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    per_island = islands.groupBy("user_id", "island").agg(
+        F.count(F.lit(1)).alias("n_pings"),
+        ((F.max(us) - F.min(us)) / F.lit(6e7)).alias("dwell_min"),
+    )
+    stays = per_island.filter(F.col("dwell_min") >= 30.0)
+    return (
+        stays.groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_stays"),
+            F.round(F.avg("dwell_min"), 4).alias("avg_dwell_min"),
+            F.round(F.max("dwell_min"), 4).alias("max_dwell_min"),
+            F.sum("n_pings").alias("n_stay_pings"),
+        )
+        .orderBy("user_id")
+    )
+
+
+_SQL_ASSORTATIVITY = f"""
+WITH {_SQL_MOD_GRAPH},
+und AS (
+  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v FROM e
+),
+deg AS (
+  SELECT id, count(*)::BIGINT AS d FROM (
+    SELECT u AS id FROM und UNION ALL SELECT v FROM und
+  ) GROUP BY id
+),
+both_dirs AS (
+  SELECT u, v FROM und UNION ALL SELECT v AS u, u AS v FROM und
+),
+pairs AS (
+  SELECT da.d::DOUBLE AS a, db.d::DOUBLE AS b
+  FROM both_dirs
+  JOIN deg da ON both_dirs.u = da.id
+  JOIN deg db ON both_dirs.v = db.id
+)
+SELECT (count(*) / 2)::BIGINT AS n_edges,
+       round((sum(a * b) - sum(a) * sum(b) / count(*))
+             / sqrt((sum(a * a) - sum(a) * sum(a) / count(*))
+                    * (sum(b * b) - sum(b) * sum(b) / count(*))), 6)
+         AS assortativity
+FROM pairs
+"""
+
+
+@query(_SQL_ASSORTATIVITY)
 def q_degree_assortativity_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the modular graph — Pearson correlation
     of endpoint degrees over undirected edges (counted once per
@@ -14003,34 +14031,29 @@ def q_degree_assortativity_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_ASSORTATIVITY = f"""
-WITH {_SQL_MOD_GRAPH},
-und AS (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v FROM e
-),
-deg AS (
-  SELECT id, count(*)::BIGINT AS d FROM (
-    SELECT u AS id FROM und UNION ALL SELECT v FROM und
-  ) GROUP BY id
-),
-both_dirs AS (
-  SELECT u, v FROM und UNION ALL SELECT v AS u, u AS v FROM und
-),
-pairs AS (
-  SELECT da.d::DOUBLE AS a, db.d::DOUBLE AS b
-  FROM both_dirs
-  JOIN deg da ON both_dirs.u = da.id
-  JOIN deg db ON both_dirs.v = db.id
+def _sql_centroid_separation() -> str:
+    cols = ", ".join(
+        f"avg(embedding[{i + 1}]::DOUBLE) AS c{i}" for i in range(_EMB_DIM)
+    )
+    dot = " + ".join(f"a.c{i} * b.c{i}" for i in range(_EMB_DIM))
+    na = " + ".join(f"a.c{i} * a.c{i}" for i in range(_EMB_DIM))
+    nb = " + ".join(f"b.c{i} * b.c{i}" for i in range(_EMB_DIM))
+    return f"""
+WITH cents AS (
+  SELECT label, {cols} FROM embeddings GROUP BY label
 )
-SELECT (count(*) / 2)::BIGINT AS n_edges,
-       round((sum(a * b) - sum(a) * sum(b) / count(*))
-             / sqrt((sum(a * a) - sum(a) * sum(a) / count(*))
-                    * (sum(b * b) - sum(b) * sum(b) / count(*))), 6)
-         AS assortativity
-FROM pairs
+SELECT a.label AS la, b.label AS lb,
+       round(({dot}) / (sqrt({na}) * sqrt({nb})), 6) AS cos_sim
+FROM cents a JOIN cents b ON a.label < b.label
+ORDER BY cos_sim DESC, la, lb
+LIMIT 5
 """
 
 
+_EMB_DIM = 64
+
+
+@query(_sql_centroid_separation())
 def q_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-quality geometry: pairwise cosine similarity between
     per-label embedding centroids — the separation matrix that grades
@@ -14072,30 +14095,36 @@ def q_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_centroid_separation() -> str:
-    cols = ", ".join(
-        f"avg(embedding[{i + 1}]::DOUBLE) AS c{i}" for i in range(_EMB_DIM)
-    )
-    dot = " + ".join(f"a.c{i} * b.c{i}" for i in range(_EMB_DIM))
-    na = " + ".join(f"a.c{i} * a.c{i}" for i in range(_EMB_DIM))
-    nb = " + ".join(f"b.c{i} * b.c{i}" for i in range(_EMB_DIM))
-    return f"""
-WITH cents AS (
-  SELECT label, {cols} FROM embeddings GROUP BY label
-)
-SELECT a.label AS la, b.label AS lb,
-       round(({dot}) / (sqrt({na}) * sqrt({nb})), 6) AS cos_sim
-FROM cents a JOIN cents b ON a.label < b.label
-ORDER BY cos_sim DESC, la, lb
-LIMIT 5
-"""
-
-
 _HOLIDAYS = [
     f"{y}-{md}" for y in range(1995, 2002) for md in ("01-01", "07-04", "12-25")
 ]
 
 
+def _sql_business_day_lag() -> str:
+    hol = ", ".join(f"'{h}'::DATE" for h in _HOLIDAYS)
+    return f"""
+WITH last_ship AS (
+  SELECT l_orderkey, max(l_shipdate) AS close_ts FROM lineitem GROUP BY 1
+),
+o AS (
+  SELECT o_orderpriority, o_orderdate::DATE AS d0, close_ts::DATE AS d1
+  FROM orders JOIN last_ship ON o_orderkey = l_orderkey
+  WHERE close_ts::DATE > o_orderdate::DATE
+),
+b AS (
+  SELECT o_orderpriority,
+         len(list_filter(generate_series(d0 + 1, d1, INTERVAL 1 DAY),
+             d -> (dayofweek(d::DATE) + 6) % 7 < 5
+                  AND NOT list_contains([{hol}], d::DATE))) AS bdays
+  FROM o
+)
+SELECT o_orderpriority, count(*)::BIGINT AS n_orders,
+       round(avg(bdays), 4) AS avg_bdays, max(bdays)::INT AS max_bdays
+FROM b GROUP BY 1 ORDER BY o_orderpriority
+"""
+
+
+@query(_sql_business_day_lag())
 def q_business_day_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holiday-aware business-day lag: working days (Mon–Fri, minus a
     fixed holiday calendar) between order placement and final shipment,
@@ -14135,33 +14164,33 @@ def q_business_day_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_business_day_lag() -> str:
-    hol = ", ".join(f"'{h}'::DATE" for h in _HOLIDAYS)
+def _sql_silhouette() -> str:
+    cols = ", ".join(f"avg(embedding[{i + 1}]::DOUBLE) AS c{i}" for i in range(_EMB_DIM))
+    d2 = " + ".join(
+        f"(e.embedding[{i + 1}]::DOUBLE - c.c{i})"
+        f" * (e.embedding[{i + 1}]::DOUBLE - c.c{i})"
+        for i in range(_EMB_DIM)
+    )
     return f"""
-WITH last_ship AS (
-  SELECT l_orderkey, max(l_shipdate) AS close_ts FROM lineitem GROUP BY 1
+WITH cents AS (SELECT label AS cl, {cols} FROM embeddings GROUP BY label),
+pairs AS (
+  SELECT e.vec_id, e.label, c.cl, {d2} AS d2
+  FROM embeddings e CROSS JOIN cents c
 ),
-o AS (
-  SELECT o_orderpriority, o_orderdate::DATE AS d0, close_ts::DATE AS d1
-  FROM orders JOIN last_ship ON o_orderkey = l_orderkey
-  WHERE close_ts::DATE > o_orderdate::DATE
-),
-b AS (
-  SELECT o_orderpriority,
-         len(list_filter(generate_series(d0 + 1, d1, INTERVAL 1 DAY),
-             d -> (dayofweek(d::DATE) + 6) % 7 < 5
-                  AND NOT list_contains([{hol}], d::DATE))) AS bdays
-  FROM o
+per AS (
+  SELECT vec_id, label,
+         min(CASE WHEN label = cl THEN d2 END) AS a2,
+         min(CASE WHEN label <> cl THEN d2 END) AS b2
+  FROM pairs GROUP BY 1, 2
 )
-SELECT o_orderpriority, count(*)::BIGINT AS n_orders,
-       round(avg(bdays), 4) AS avg_bdays, max(bdays)::INT AS max_bdays
-FROM b GROUP BY 1 ORDER BY o_orderpriority
+SELECT label, count(*)::BIGINT AS n,
+       round(avg((sqrt(b2) - sqrt(a2)) / greatest(sqrt(a2), sqrt(b2))), 6)
+         AS silhouette
+FROM per GROUP BY label ORDER BY label
 """
 
 
-_EMB_DIM = 64
-
-
+@query(_sql_silhouette())
 def q_silhouette_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Centroid-based silhouette score per label — cluster-quality at
     the POINT level (the separation matrix grades centroids; this
@@ -14172,14 +14201,12 @@ def q_silhouette_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-term squared distance in one codegen'd projection, then a
     per-point min-split agg. The full-pairwise silhouette is
     quadratic; the centroid form is the one that scales."""
-    from ..operators.spread import spread
-
     # plan-BUILD was the bottleneck (guide §7.3): the former Column-API
     # loops (64 getItem/alias + 64 avg + a 64-term sum chain) cost
     # ~3 s of py4j round-trips per invocation — parsed strings build
     # the identical trees in a handful of calls. spread: the 64-term
     # distance map runs in the 1-task fixture scan stage otherwise.
-    emb = spread(_t(spark, sf_dir, "embeddings"))
+    emb = spr.spread(_t(spark, sf_dir, "embeddings"))
     xi = "CAST(embedding AS ARRAY<DOUBLE>)"
     cents = emb.selectExpr(
         "label", *[f"{xi}[{i}] AS c{i}" for i in range(_EMB_DIM)]
@@ -14213,32 +14240,29 @@ def q_silhouette_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_silhouette() -> str:
-    cols = ", ".join(f"avg(embedding[{i + 1}]::DOUBLE) AS c{i}" for i in range(_EMB_DIM))
-    d2 = " + ".join(
-        f"(e.embedding[{i + 1}]::DOUBLE - c.c{i})"
-        f" * (e.embedding[{i + 1}]::DOUBLE - c.c{i})"
-        for i in range(_EMB_DIM)
-    )
-    return f"""
-WITH cents AS (SELECT label AS cl, {cols} FROM embeddings GROUP BY label),
-pairs AS (
-  SELECT e.vec_id, e.label, c.cl, {d2} AS d2
-  FROM embeddings e CROSS JOIN cents c
+_SQL_CONTAINMENT = f"""
+WITH docs AS (SELECT doc_id, {{clean}} AS ct FROM documents),
+sh AS (
+  SELECT doc_id, {{shingles}} AS shingles
+  FROM (SELECT doc_id, string_split(ct, ' ') AS toks FROM docs)
 ),
-per AS (
-  SELECT vec_id, label,
-         min(CASE WHEN label = cl THEN d2 END) AS a2,
-         min(CASE WHEN label <> cl THEN d2 END) AS b2
-  FROM pairs GROUP BY 1, 2
+pairs AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         len(list_intersect(a.shingles, b.shingles)) AS i,
+         len(a.shingles) AS na, len(b.shingles) AS nb
+  FROM sh a, sh b WHERE a.doc_id < b.doc_id
 )
-SELECT label, count(*)::BIGINT AS n,
-       round(avg((sqrt(b2) - sqrt(a2)) / greatest(sqrt(a2), sqrt(b2))), 6)
-         AS silhouette
-FROM per GROUP BY label ORDER BY label
+SELECT doc_a, doc_b,
+       round(i / least(na, nb)::DOUBLE, 6) AS containment,
+       round(i / (na + nb - i)::DOUBLE, 6) AS jaccard
+FROM pairs
+WHERE i / least(na, nb)::DOUBLE >= 0.8
+  AND i / (na + nb - i)::DOUBLE <= 0.5
+ORDER BY doc_a, doc_b
 """
 
 
+@query(_SQL_CONTAINMENT.format(clean=_CLEAN_SQL, shingles=_SHINGLES_SQL))
 def q_shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Containment (asymmetric overlap) near-dup detection:
     |A∩B| / min(|A|,|B|) ≥ 0.8 over 3-gram shingle sets — the
@@ -14250,10 +14274,8 @@ def q_shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalizer changes. Reports pairs where containment clears the
     bar but Jaccard ≤ 0.5 alongside both scores — the pairs ONLY this
     operator finds."""
-    from ..operators.dedup import shingle_hash_rows
-
     docs = _t(spark, sf_dir, "documents")
-    sh = shingle_hash_rows(docs, "text", "doc_id", 3).distinct()
+    sh = dd.shingle_hash_rows(docs, "text", "doc_id", 3).distinct()
     sh = sh.withColumn(
         "n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
     ).localCheckpoint()
@@ -14283,28 +14305,21 @@ def q_shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CONTAINMENT = f"""
-WITH docs AS (SELECT doc_id, {{clean}} AS ct FROM documents),
-sh AS (
-  SELECT doc_id, {{shingles}} AS shingles
-  FROM (SELECT doc_id, string_split(ct, ' ') AS toks FROM docs)
-),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         len(list_intersect(a.shingles, b.shingles)) AS i,
-         len(a.shingles) AS na, len(b.shingles) AS nb
-  FROM sh a, sh b WHERE a.doc_id < b.doc_id
+_SQL_SHIPMENT_WAVES = """
+WITH waves AS (
+  SELECT l_orderkey, count(DISTINCT l_shipdate::DATE)::BIGINT AS n_waves
+  FROM lineitem GROUP BY 1
 )
-SELECT doc_a, doc_b,
-       round(i / least(na, nb)::DOUBLE, 6) AS containment,
-       round(i / (na + nb - i)::DOUBLE, 6) AS jaccard
-FROM pairs
-WHERE i / least(na, nb)::DOUBLE >= 0.8
-  AND i / (na + nb - i)::DOUBLE <= 0.5
-ORDER BY doc_a, doc_b
+SELECT o_orderpriority, count(*)::BIGINT AS n_orders,
+       round(avg(n_waves), 4) AS avg_waves,
+       sum(CASE WHEN n_waves = 1 THEN 1 ELSE 0 END)::BIGINT AS n_single_wave,
+       max(n_waves)::BIGINT AS max_waves
+FROM orders JOIN waves ON o_orderkey = l_orderkey
+GROUP BY 1 ORDER BY o_orderpriority
 """
 
 
+@query(_SQL_SHIPMENT_WAVES)
 def q_shipment_waves(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partial-shipment analysis: how many distinct shipment DATES an
     order's lines spread over (1 = shipped complete, k = k waves),
@@ -14331,20 +14346,23 @@ def q_shipment_waves(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SHIPMENT_WAVES = """
-WITH waves AS (
-  SELECT l_orderkey, count(DISTINCT l_shipdate::DATE)::BIGINT AS n_waves
-  FROM lineitem GROUP BY 1
+_SQL_INTERARRIVAL = """
+WITH gaps AS (
+  SELECT event_type,
+         epoch_us(ts) - lag(epoch_us(ts))
+           OVER (PARTITION BY event_type ORDER BY ts, event_id) AS gap_us
+  FROM events
 )
-SELECT o_orderpriority, count(*)::BIGINT AS n_orders,
-       round(avg(n_waves), 4) AS avg_waves,
-       sum(CASE WHEN n_waves = 1 THEN 1 ELSE 0 END)::BIGINT AS n_single_wave,
-       max(n_waves)::BIGINT AS max_waves
-FROM orders JOIN waves ON o_orderkey = l_orderkey
-GROUP BY 1 ORDER BY o_orderpriority
+SELECT event_type, count(*)::BIGINT AS n_gaps,
+       round(avg(gap_us) / 6e7, 4) AS mean_gap_min,
+       round(stddev_samp(gap_us) / avg(gap_us), 6) AS cv,
+       round(3.6e9 / avg(gap_us), 4) AS rate_per_hour
+FROM gaps WHERE gap_us IS NOT NULL
+GROUP BY event_type ORDER BY event_type
 """
 
 
+@query(_SQL_INTERARRIVAL)
 def q_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrival-process characterization: per-type inter-arrival gap
     mean and coefficient of variation (cv ≈ 1 ⇒ Poisson-like, cv ≪ 1
@@ -14371,22 +14389,33 @@ def q_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_INTERARRIVAL = """
-WITH gaps AS (
-  SELECT event_type,
-         epoch_us(ts) - lag(epoch_us(ts))
-           OVER (PARTITION BY event_type ORDER BY ts, event_id) AS gap_us
-  FROM events
+_SQL_BACKLOG_AGE = """
+WITH last_ship AS (
+  SELECT l_orderkey, max(l_shipdate) AS close_ts FROM lineitem GROUP BY 1
+),
+o AS (
+  SELECT o_orderdate::DATE AS d0, close_ts::DATE AS d1
+  FROM orders JOIN last_ship ON o_orderkey = l_orderkey
+),
+span AS (SELECT min(d0) AS lo, max(d1) AS hi FROM o),
+probes AS (
+  SELECT unnest(generate_series(date_trunc('month', lo + INTERVAL 1 MONTH)::DATE,
+                                hi, INTERVAL 3 MONTH))::DATE AS snap
+  FROM span
+),
+open_at AS (
+  SELECT snap, date_diff('day', d0, snap) AS age
+  FROM o CROSS JOIN probes
+  WHERE d0 <= snap AND snap < d1
 )
-SELECT event_type, count(*)::BIGINT AS n_gaps,
-       round(avg(gap_us) / 6e7, 4) AS mean_gap_min,
-       round(stddev_samp(gap_us) / avg(gap_us), 6) AS cv,
-       round(3.6e9 / avg(gap_us), 4) AS rate_per_hour
-FROM gaps WHERE gap_us IS NOT NULL
-GROUP BY event_type ORDER BY event_type
+SELECT strftime(snap, '%Y-%m-%d') AS snapshot, count(*)::BIGINT AS n_open,
+       round(quantile_cont(age, 0.5), 2) AS p50_age_days,
+       max(age)::BIGINT AS max_age_days
+FROM open_at GROUP BY snap ORDER BY snapshot
 """
 
 
+@query(_SQL_BACKLOG_AGE)
 def q_backlog_age_at_month_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time backlog aging: at quarterly month-start snapshots,
     the orders still open (placed, last line not yet shipped) with
@@ -14430,32 +14459,28 @@ def q_backlog_age_at_month_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_BACKLOG_AGE = """
-WITH last_ship AS (
-  SELECT l_orderkey, max(l_shipdate) AS close_ts FROM lineitem GROUP BY 1
+_SQL_REPURCHASE = """
+WITH gaps AS (
+  SELECT o_custkey,
+         date_diff('day',
+                   lag(o_orderdate::DATE) OVER (PARTITION BY o_custkey
+                                                ORDER BY o_orderdate, o_orderkey),
+                   o_orderdate::DATE) AS gap_days
+  FROM orders
 ),
-o AS (
-  SELECT o_orderdate::DATE AS d0, close_ts::DATE AS d1
-  FROM orders JOIN last_ship ON o_orderkey = l_orderkey
-),
-span AS (SELECT min(d0) AS lo, max(d1) AS hi FROM o),
-probes AS (
-  SELECT unnest(generate_series(date_trunc('month', lo + INTERVAL 1 MONTH)::DATE,
-                                hi, INTERVAL 3 MONTH))::DATE AS snap
-  FROM span
-),
-open_at AS (
-  SELECT snap, date_diff('day', d0, snap) AS age
-  FROM o CROSS JOIN probes
-  WHERE d0 <= snap AND snap < d1
+per_cust AS (
+  SELECT o_custkey, avg(gap_days) AS mean_gap, count(*)::BIGINT AS n_repeats
+  FROM gaps WHERE gap_days IS NOT NULL GROUP BY 1
 )
-SELECT strftime(snap, '%Y-%m-%d') AS snapshot, count(*)::BIGINT AS n_open,
-       round(quantile_cont(age, 0.5), 2) AS p50_age_days,
-       max(age)::BIGINT AS max_age_days
-FROM open_at GROUP BY snap ORDER BY snapshot
+SELECT c_mktsegment, count(*)::BIGINT AS n_repeat_customers,
+       round(avg(mean_gap), 4) AS avg_cycle_days,
+       round(quantile_cont(mean_gap, 0.5), 4) AS median_cycle_days
+FROM per_cust JOIN customer ON o_custkey = c_custkey
+GROUP BY 1 ORDER BY c_mktsegment
 """
 
 
+@query(_SQL_REPURCHASE)
 def q_repurchase_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repurchase-cycle analysis: each repeat customer's mean days
     between consecutive orders (lag per customer), distributed per
@@ -14494,27 +14519,35 @@ def q_repurchase_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_REPURCHASE = """
-WITH gaps AS (
-  SELECT o_custkey,
-         date_diff('day',
-                   lag(o_orderdate::DATE) OVER (PARTITION BY o_custkey
-                                                ORDER BY o_orderdate, o_orderkey),
-                   o_orderdate::DATE) AS gap_days
-  FROM orders
-),
-per_cust AS (
-  SELECT o_custkey, avg(gap_days) AS mean_gap, count(*)::BIGINT AS n_repeats
-  FROM gaps WHERE gap_days IS NOT NULL GROUP BY 1
+_SQL_PRICE_VOLUME = """
+WITH g AS (
+  SELECT p_type,
+         sum(CASE WHEN l_shipdate >= TIMESTAMP '1997-01-01'
+                   AND l_shipdate < TIMESTAMP '1998-01-01'
+                  THEN l_quantity END) AS q97,
+         sum(CASE WHEN l_shipdate >= TIMESTAMP '1997-01-01'
+                   AND l_shipdate < TIMESTAMP '1998-01-01'
+                  THEN l_extendedprice END) AS r97,
+         sum(CASE WHEN l_shipdate >= TIMESTAMP '1998-01-01'
+                   AND l_shipdate < TIMESTAMP '1999-01-01'
+                  THEN l_quantity END) AS q98,
+         sum(CASE WHEN l_shipdate >= TIMESTAMP '1998-01-01'
+                   AND l_shipdate < TIMESTAMP '1999-01-01'
+                  THEN l_extendedprice END) AS r98
+  FROM lineitem JOIN part ON l_partkey = p_partkey
+  GROUP BY p_type
 )
-SELECT c_mktsegment, count(*)::BIGINT AS n_repeat_customers,
-       round(avg(mean_gap), 4) AS avg_cycle_days,
-       round(quantile_cont(mean_gap, 0.5), 4) AS median_cycle_days
-FROM per_cust JOIN customer ON o_custkey = c_custkey
-GROUP BY 1 ORDER BY c_mktsegment
+SELECT p_type,
+       round(r98 - r97, 2) AS delta_rev,
+       round((q98 - q97) * (r97 / q97), 2) AS volume_effect,
+       round(q98 * (r98 / q98 - r97 / q97), 2) AS price_effect
+FROM g
+WHERE q97 IS NOT NULL AND q98 IS NOT NULL
+ORDER BY p_type
 """
 
 
+@query(_SQL_PRICE_VOLUME)
 def q_price_volume_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Price-volume bridge (the BI decomposition behind every revenue
     variance review): per part type, 1998-vs-1997 revenue change split
@@ -14555,34 +14588,39 @@ def q_price_volume_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("p_type")
 
 
-_SQL_PRICE_VOLUME = """
-WITH g AS (
-  SELECT p_type,
-         sum(CASE WHEN l_shipdate >= TIMESTAMP '1997-01-01'
-                   AND l_shipdate < TIMESTAMP '1998-01-01'
-                  THEN l_quantity END) AS q97,
-         sum(CASE WHEN l_shipdate >= TIMESTAMP '1997-01-01'
-                   AND l_shipdate < TIMESTAMP '1998-01-01'
-                  THEN l_extendedprice END) AS r97,
-         sum(CASE WHEN l_shipdate >= TIMESTAMP '1998-01-01'
-                   AND l_shipdate < TIMESTAMP '1999-01-01'
-                  THEN l_quantity END) AS q98,
-         sum(CASE WHEN l_shipdate >= TIMESTAMP '1998-01-01'
-                   AND l_shipdate < TIMESTAMP '1999-01-01'
-                  THEN l_extendedprice END) AS r98
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  GROUP BY p_type
+_SQL_REF_INTEGRITY = """
+SELECT * FROM (
+  SELECT 'lineitem->orders' AS relationship,
+    (SELECT count(*) FROM (SELECT DISTINCT l_orderkey FROM lineitem)
+     WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders))::BIGINT
+      AS child_orphans,
+    (SELECT count(*) FROM (SELECT DISTINCT o_orderkey FROM orders)
+     WHERE o_orderkey NOT IN (SELECT l_orderkey FROM lineitem))::BIGINT
+      AS unreferenced_parents
+  UNION ALL
+  SELECT 'lineitem->part',
+    (SELECT count(*) FROM (SELECT DISTINCT l_partkey FROM lineitem)
+     WHERE l_partkey NOT IN (SELECT p_partkey FROM part))::BIGINT,
+    (SELECT count(*) FROM (SELECT DISTINCT p_partkey FROM part)
+     WHERE p_partkey NOT IN (SELECT l_partkey FROM lineitem))::BIGINT
+  UNION ALL
+  SELECT 'lineitem->supplier',
+    (SELECT count(*) FROM (SELECT DISTINCT l_suppkey FROM lineitem)
+     WHERE l_suppkey NOT IN (SELECT s_suppkey FROM supplier))::BIGINT,
+    (SELECT count(*) FROM (SELECT DISTINCT s_suppkey FROM supplier)
+     WHERE s_suppkey NOT IN (SELECT l_suppkey FROM lineitem))::BIGINT
+  UNION ALL
+  SELECT 'orders->customer',
+    (SELECT count(*) FROM (SELECT DISTINCT o_custkey FROM orders)
+     WHERE o_custkey NOT IN (SELECT c_custkey FROM customer))::BIGINT,
+    (SELECT count(*) FROM (SELECT DISTINCT c_custkey FROM customer)
+     WHERE c_custkey NOT IN (SELECT o_custkey FROM orders))::BIGINT
 )
-SELECT p_type,
-       round(r98 - r97, 2) AS delta_rev,
-       round((q98 - q97) * (r97 / q97), 2) AS volume_effect,
-       round(q98 * (r98 / q98 - r97 / q97), 2) AS price_effect
-FROM g
-WHERE q97 IS NOT NULL AND q98 IS NOT NULL
-ORDER BY p_type
+ORDER BY relationship
 """
 
 
+@query(_SQL_REF_INTEGRITY)
 def q_referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity audit across the star schema's four fact
     relationships — orphan counts in BOTH directions per edge
@@ -14620,69 +14658,6 @@ def q_referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     ]:
         out = out.unionByName(edge(*args))
     return out.orderBy("relationship")
-
-
-_SQL_REF_INTEGRITY = """
-SELECT * FROM (
-  SELECT 'lineitem->orders' AS relationship,
-    (SELECT count(*) FROM (SELECT DISTINCT l_orderkey FROM lineitem)
-     WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders))::BIGINT
-      AS child_orphans,
-    (SELECT count(*) FROM (SELECT DISTINCT o_orderkey FROM orders)
-     WHERE o_orderkey NOT IN (SELECT l_orderkey FROM lineitem))::BIGINT
-      AS unreferenced_parents
-  UNION ALL
-  SELECT 'lineitem->part',
-    (SELECT count(*) FROM (SELECT DISTINCT l_partkey FROM lineitem)
-     WHERE l_partkey NOT IN (SELECT p_partkey FROM part))::BIGINT,
-    (SELECT count(*) FROM (SELECT DISTINCT p_partkey FROM part)
-     WHERE p_partkey NOT IN (SELECT l_partkey FROM lineitem))::BIGINT
-  UNION ALL
-  SELECT 'lineitem->supplier',
-    (SELECT count(*) FROM (SELECT DISTINCT l_suppkey FROM lineitem)
-     WHERE l_suppkey NOT IN (SELECT s_suppkey FROM supplier))::BIGINT,
-    (SELECT count(*) FROM (SELECT DISTINCT s_suppkey FROM supplier)
-     WHERE s_suppkey NOT IN (SELECT l_suppkey FROM lineitem))::BIGINT
-  UNION ALL
-  SELECT 'orders->customer',
-    (SELECT count(*) FROM (SELECT DISTINCT o_custkey FROM orders)
-     WHERE o_custkey NOT IN (SELECT c_custkey FROM customer))::BIGINT,
-    (SELECT count(*) FROM (SELECT DISTINCT c_custkey FROM customer)
-     WHERE c_custkey NOT IN (SELECT o_custkey FROM orders))::BIGINT
-)
-ORDER BY relationship
-"""
-
-
-def q_global_moran_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global spatial autocorrelation scalars — Moran's I and Geary's C
-    with binary queen-contiguity weights over 0.05° grid-cell event
-    counts, plus Moran's analytic normality inference (E[I], Var_N[I],
-    z) — the global companion to `lisa_moran_events` (lab4 nb cell 21's
-    esda local Moran; esda's `Moran`/`Geary` are the global versions a
-    spatial analyst runs first). Contiguity materializes as an 8-offset
-    integer-cell equi-join (`operators/spatstats.queen_neighbor_pairs`)
-    — no distance search, |cells|×8 shuffle rows, scale-safe."""
-    from ..operators.spatstats import global_moran_geary
-
-    pts = _derived_points(_t(spark, sf_dir, "events"))
-    gx, gy = grid_cell("lat", "lon", 40.5, -74.3, 0.05)
-    cells = (
-        pts.withColumn("gx", gx)
-        .withColumn("gy", gy)
-        .groupBy("gx", "gy")
-        .agg(F.count(F.lit(1)).cast("double").alias("n"))
-    )
-    out = global_moran_geary(cells, "n")
-    return out.select(
-        "n_cells",
-        "w_sum",
-        F.round("morans_i", 6).alias("morans_i"),
-        F.round("gearys_c", 6).alias("gearys_c"),
-        F.round("e_i", 6).alias("e_i"),
-        F.round("var_i", 9).alias("var_i"),
-        F.round("z_norm", 6).alias("z_norm"),
-    )
 
 
 _SQL_GLOBAL_MORAN = f"""
@@ -14731,36 +14706,40 @@ FROM f
 """
 
 
+@query(_SQL_GLOBAL_MORAN)
+def q_global_moran_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Global spatial autocorrelation scalars — Moran's I and Geary's C
+    with binary queen-contiguity weights over 0.05° grid-cell event
+    counts, plus Moran's analytic normality inference (E[I], Var_N[I],
+    z) — the global companion to `lisa_moran_events` (lab4 nb cell 21's
+    esda local Moran; esda's `Moran`/`Geary` are the global versions a
+    spatial analyst runs first). Contiguity materializes as an 8-offset
+    integer-cell equi-join (`operators/spatstats.queen_neighbor_pairs`)
+    — no distance search, |cells|×8 shuffle rows, scale-safe."""
+    pts = _derived_points(_t(spark, sf_dir, "events"))
+    gx, gy = geo.grid_cell("lat", "lon", 40.5, -74.3, 0.05)
+    cells = (
+        pts.withColumn("gx", gx)
+        .withColumn("gy", gy)
+        .groupBy("gx", "gy")
+        .agg(F.count(F.lit(1)).cast("double").alias("n"))
+    )
+    out = spatstats.global_moran_geary(cells, "n")
+    return out.select(
+        "n_cells",
+        "w_sum",
+        F.round("morans_i", 6).alias("morans_i"),
+        F.round("gearys_c", 6).alias("gearys_c"),
+        F.round("e_i", 6).alias("e_i"),
+        F.round("var_i", 9).alias("var_i"),
+        F.round("z_norm", 6).alias("z_norm"),
+    )
+
+
 _RIPLEY_RADII = [0.5, 1.0, 1.5, 2.0, 3.0]
 # Naive planar study-area size for the derived-point bbox
 # (0.6° lon × 0.5° lat around 40.75°N) — literal shared with the oracle.
 _RIPLEY_AREA_KM2 = (0.6 * 111.32 * 0.7576555560963426) * (0.5 * 110.574)
-
-
-def q_ripley_k_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ripley's K / Besag's L point-pattern statistic at 5 radii over
-    the DISTINCT derived event locations (the generator folds event_id
-    mod 1000, so distinct-location analysis is the meaningful pattern;
-    co-located multiplicities would swamp K). Pair counting uses the
-    3×3 covering-cell equi-join (cell 0.04° ≥ 3 km on both axes at
-    40.75°N → complete cover), one pass for all radii via conditional
-    aggregation (`operators/spatstats.ripley_k`). Naive estimator, no
-    edge correction (documented)."""
-    from ..operators.spatstats import ripley_k
-
-    pts = (
-        _derived_points(_t(spark, sf_dir, "events"))
-        .select("lon", "lat")
-        .distinct()
-    )
-    return ripley_k(
-        pts,
-        radii_km=_RIPLEY_RADII,
-        area_km2=_RIPLEY_AREA_KM2,
-        origin_lat=40.5,
-        origin_lon=-74.3,
-        cover_cell_deg=0.04,
-    ).orderBy("r_km")
 
 
 _SQL_RIPLEY = f"""
@@ -14792,62 +14771,29 @@ ORDER BY r_km
 """
 
 
-def q_emerging_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Emerging-hot-spot analysis (ArcGIS space-time-cube style): 0.05°
-    grid × daily-bin event counts → per-cell Mann-Kendall trend test
-    (tie-corrected variance, continuity-corrected z;
-    `operators/spatstats.mann_kendall_by_key`) + hot/cold banding of
-    total cell volume against global quartiles → census per
-    (band, trend) class. The i<j day-pair self-join keys on the cell
-    id (T ≤ observation days, bounded fan-out per cell). Day index is
-    epoch-seconds div 86400 — identical arithmetic on both engines, no
-    week-convention risk."""
-    from ..operators.spatstats import mann_kendall_by_key
-
-    pts = _derived_points(_t(spark, sf_dir, "events"))
-    gx, gy = grid_cell("lat", "lon", 40.5, -74.3, 0.05)
-    day = (F.unix_timestamp("ts") / F.lit(86400)).cast("bigint")
-    cube = (
-        pts.withColumn("gx", gx)
-        .withColumn("gy", gy)
-        .withColumn("day", day)
-        .groupBy("gx", "gy", "day")
-        .agg(F.count(F.lit(1)).cast("double").alias("n"))
+@query(_SQL_RIPLEY)
+def q_ripley_k_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ripley's K / Besag's L point-pattern statistic at 5 radii over
+    the DISTINCT derived event locations (the generator folds event_id
+    mod 1000, so distinct-location analysis is the meaningful pattern;
+    co-located multiplicities would swamp K). Pair counting uses the
+    3×3 covering-cell equi-join (cell 0.04° ≥ 3 km on both axes at
+    40.75°N → complete cover), one pass for all radii via conditional
+    aggregation (`operators/spatstats.ripley_k`). Naive estimator, no
+    edge correction (documented)."""
+    pts = (
+        _derived_points(_t(spark, sf_dir, "events"))
+        .select("lon", "lat")
+        .distinct()
     )
-    mk = mann_kendall_by_key(cube, ["gx", "gy"], "day", "n").filter(
-        F.col("n_bins") >= 5
-    )
-    totals = cube.groupBy("gx", "gy").agg(F.sum("n").alias("total"))
-    thresh = totals.agg(
-        F.expr("percentile(total, 0.75)").alias("_q75"),
-        F.expr("percentile(total, 0.25)").alias("_q25"),
-    )
-    banded = (
-        mk.join(totals, ["gx", "gy"])
-        .crossJoin(F.broadcast(thresh))
-        .withColumn(
-            "band",
-            F.when(F.col("total") >= F.col("_q75"), F.lit("hot"))
-            .when(F.col("total") <= F.col("_q25"), F.lit("cold"))
-            .otherwise(F.lit("mid")),
-        )
-        .withColumn(
-            "trend",
-            F.when(F.col("z_mk") > 1.645, F.lit("increasing"))
-            .when(F.col("z_mk") < -1.645, F.lit("decreasing"))
-            .otherwise(F.lit("flat")),
-        )
-    )
-    return (
-        banded.groupBy("band", "trend")
-        .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            F.sum("total").cast("long").alias("n_events"),
-            F.round(F.avg("s_stat"), 6).alias("avg_s"),
-            F.round(F.avg("z_mk"), 6).alias("avg_z"),
-        )
-        .orderBy("band", "trend")
-    )
+    return spatstats.ripley_k(
+        pts,
+        radii_km=_RIPLEY_RADII,
+        area_km2=_RIPLEY_AREA_KM2,
+        origin_lat=40.5,
+        origin_lon=-74.3,
+        cover_cell_deg=0.04,
+    ).orderBy("r_km")
 
 
 _SQL_EMERGING = f"""
@@ -14908,23 +14854,64 @@ ORDER BY band, trend
 """
 
 
+@query(_SQL_EMERGING)
+def q_emerging_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Emerging-hot-spot analysis (ArcGIS space-time-cube style): 0.05°
+    grid × daily-bin event counts → per-cell Mann-Kendall trend test
+    (tie-corrected variance, continuity-corrected z;
+    `operators/spatstats.mann_kendall_by_key`) + hot/cold banding of
+    total cell volume against global quartiles → census per
+    (band, trend) class. The i<j day-pair self-join keys on the cell
+    id (T ≤ observation days, bounded fan-out per cell). Day index is
+    epoch-seconds div 86400 — identical arithmetic on both engines, no
+    week-convention risk."""
+    pts = _derived_points(_t(spark, sf_dir, "events"))
+    gx, gy = geo.grid_cell("lat", "lon", 40.5, -74.3, 0.05)
+    day = (F.unix_timestamp("ts") / F.lit(86400)).cast("bigint")
+    cube = (
+        pts.withColumn("gx", gx)
+        .withColumn("gy", gy)
+        .withColumn("day", day)
+        .groupBy("gx", "gy", "day")
+        .agg(F.count(F.lit(1)).cast("double").alias("n"))
+    )
+    mk = spatstats.mann_kendall_by_key(cube, ["gx", "gy"], "day", "n").filter(
+        F.col("n_bins") >= 5
+    )
+    totals = cube.groupBy("gx", "gy").agg(F.sum("n").alias("total"))
+    thresh = totals.agg(
+        F.expr("percentile(total, 0.75)").alias("_q75"),
+        F.expr("percentile(total, 0.25)").alias("_q25"),
+    )
+    banded = (
+        mk.join(totals, ["gx", "gy"])
+        .crossJoin(F.broadcast(thresh))
+        .withColumn(
+            "band",
+            F.when(F.col("total") >= F.col("_q75"), F.lit("hot"))
+            .when(F.col("total") <= F.col("_q25"), F.lit("cold"))
+            .otherwise(F.lit("mid")),
+        )
+        .withColumn(
+            "trend",
+            F.when(F.col("z_mk") > 1.645, F.lit("increasing"))
+            .when(F.col("z_mk") < -1.645, F.lit("decreasing"))
+            .otherwise(F.lit("flat")),
+        )
+    )
+    return (
+        banded.groupBy("band", "trend")
+        .agg(
+            F.count(F.lit(1)).alias("n_cells"),
+            F.sum("total").cast("long").alias("n_events"),
+            F.round(F.avg("s_stat"), 6).alias("avg_s"),
+            F.round(F.avg("z_mk"), 6).alias("avg_z"),
+        )
+        .orderBy("band", "trend")
+    )
+
+
 _BPE_N_MERGES = 8
-
-
-def q_bpe_merges_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE tokenizer-merge training over the documents corpus
-    (`operators/bpe`): 8 merge rounds on the (word, count) vocabulary —
-    pair counting is a hash aggregate per round, the sequence rewrite is
-    a codegen'd `replace` on suffix-delimited symbol strings, and the
-    only corpus-sized job is the initial word count. The oracle replays
-    ALL 8 rounds as unrolled CTEs (argmax with the same
-    (count DESC, left, right) tie-break) — full cross-engine replay of
-    the iterative fit, like `lloyd_kmeans_clusters`."""
-    from ..operators.bpe import bpe_train, merges_df, word_vocab
-
-    docs = _t(spark, sf_dir, "documents")
-    merges, _ = bpe_train(word_vocab(docs), _BPE_N_MERGES)
-    return merges_df(spark, merges).orderBy("merge_rank")
 
 
 def _sql_bpe_train_parts() -> list[str]:
@@ -14973,34 +14960,22 @@ def _sql_bpe() -> str:
     return f"WITH {ctes}\nSELECT * FROM (\n{ranks}\n) ORDER BY merge_rank"
 
 
-_WP_N_MERGES = 8
-
-
-def q_wordpiece_merges_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WordPiece tokenizer-merge training over the documents corpus
-    (`operators/bpe.wordpiece_train` — Schuster & Nakajima 2012 /
-    BERT's likelihood-gain criterion): 8 rounds on the (word, count)
-    vocabulary, each picking argmax of
-    ``pair_count / (left_count · right_count)`` instead of BPE's raw
-    pair count — so the merge tables genuinely diverge from
-    `bpe_merges_docs` on the same corpus. Per round: symbol-count +
-    pair-count hash aggregates, two vocab-sized joins, a 1-row argmax
-    collect, and the codegen'd suffix-delimited `replace` rewrite.
-
-    The oracle replays ALL 8 rounds as unrolled CTEs. The double
-    score is bit-identical cross-engine — both factors are exact
-    BIGINT counts cast exactly to double, and IEEE multiply/divide
-    are correctly rounded — so the (score DESC, l, r) argmax replays
-    exactly; the reported score is rounded 6dp on both sides."""
-    from ..operators.bpe import wordpiece_merges_df, wordpiece_train, word_vocab
-
+@query(_sql_bpe())
+def q_bpe_merges_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BPE tokenizer-merge training over the documents corpus
+    (`operators/bpe`): 8 merge rounds on the (word, count) vocabulary —
+    pair counting is a hash aggregate per round, the sequence rewrite is
+    a codegen'd `replace` on suffix-delimited symbol strings, and the
+    only corpus-sized job is the initial word count. The oracle replays
+    ALL 8 rounds as unrolled CTEs (argmax with the same
+    (count DESC, left, right) tie-break) — full cross-engine replay of
+    the iterative fit, like `lloyd_kmeans_clusters`."""
     docs = _t(spark, sf_dir, "documents")
-    merges, _ = wordpiece_train(word_vocab(docs), _WP_N_MERGES)
-    out = wordpiece_merges_df(spark, merges)
-    return out.select(
-        "merge_rank", "left_sym", "right_sym", "merged", "pair_count",
-        F.round("score", 6).alias("score_6dp"),
-    ).orderBy("merge_rank")
+    merges, _ = bpe.bpe_train(bpe.word_vocab(docs), _BPE_N_MERGES)
+    return bpe.merges_df(spark, merges).orderBy("merge_rank")
+
+
+_WP_N_MERGES = 8
 
 
 def _sql_wordpiece() -> str:
@@ -15050,9 +15025,67 @@ def _sql_wordpiece() -> str:
     return f"WITH {ctes}\nSELECT * FROM (\n{ranks}\n) ORDER BY merge_rank"
 
 
+@query(_sql_wordpiece())
+def q_wordpiece_merges_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """WordPiece tokenizer-merge training over the documents corpus
+    (`operators/bpe.wordpiece_train` — Schuster & Nakajima 2012 /
+    BERT's likelihood-gain criterion): 8 rounds on the (word, count)
+    vocabulary, each picking argmax of
+    ``pair_count / (left_count · right_count)`` instead of BPE's raw
+    pair count — so the merge tables genuinely diverge from
+    `bpe_merges_docs` on the same corpus. Per round: symbol-count +
+    pair-count hash aggregates, two vocab-sized joins, a 1-row argmax
+    collect, and the codegen'd suffix-delimited `replace` rewrite.
+
+    The oracle replays ALL 8 rounds as unrolled CTEs. The double
+    score is bit-identical cross-engine — both factors are exact
+    BIGINT counts cast exactly to double, and IEEE multiply/divide
+    are correctly rounded — so the (score DESC, l, r) argmax replays
+    exactly; the reported score is rounded 6dp on both sides."""
+    docs = _t(spark, sf_dir, "documents")
+    merges, _ = bpe.wordpiece_train(bpe.word_vocab(docs), _WP_N_MERGES)
+    out = bpe.wordpiece_merges_df(spark, merges)
+    return out.select(
+        "merge_rank", "left_sym", "right_sym", "merged", "pair_count",
+        F.round("score", 6).alias("score_6dp"),
+    ).orderBy("merge_rank")
+
+
 _SPAN_W = 8  # tokens per scrub span
 
 
+_SQL_DUP_SPAN_ISLANDS = """
+WITH toks AS (
+  SELECT doc_id, source, list_filter(string_split(text, ' '), x -> x <> '') AS t
+  FROM documents
+),
+pos AS (
+  SELECT doc_id, source, t, unnest(range(len(t) - 7)) AS i
+  FROM toks WHERE len(t) >= 8
+),
+grams AS (
+  SELECT doc_id, source, i, array_to_string(t[i + 1 : i + 8], ' ') AS g FROM pos
+),
+dup AS (SELECT g FROM grams GROUP BY g HAVING count(DISTINCT doc_id) > 1),
+dpos AS (SELECT doc_id, source, i FROM grams JOIN dup USING (g)),
+islands AS (
+  SELECT doc_id, source, i,
+         i - row_number() OVER (PARTITION BY doc_id ORDER BY i) AS isl
+  FROM dpos
+),
+spans AS (
+  SELECT doc_id, source, count(*) + 7 AS span_tokens
+  FROM islands GROUP BY doc_id, source, isl
+)
+SELECT source, count(DISTINCT doc_id)::BIGINT AS n_docs,
+       count(*)::BIGINT AS n_spans,
+       sum(span_tokens)::BIGINT AS dup_tokens,
+       max(span_tokens)::INT AS max_span_tokens
+FROM spans GROUP BY source ORDER BY source
+"""
+
+
+@query(_SQL_DUP_SPAN_ISLANDS)
 def q_dup_span_islands_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MAXIMAL cross-document duplicated-substring spans — the
     distributed approximation of suffix-array substring dedup (Lee et
@@ -15074,8 +15107,6 @@ def q_dup_span_islands_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     collisions); the islands window is partitioned by doc_id — never
     global. At 100 TB this is exactly the BigQuery/Spark reformulation
     used in practice when true suffix arrays don't fit."""
-    from ..operators.spread import spread_by
-
     # r9: the gram build was an interpreted HOF transform (slice +
     # array_join + hash per gram — CodegenFallback) evaluated TWICE
     # (duplicate census + position join). Rebuilt as the dedup family's
@@ -15086,7 +15117,7 @@ def q_dup_span_islands_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mismatch), spread_by(doc_id) BEFORE the token explode (§2.3), and
     # lazily checkpointed so the census and the join read one
     # materialization. i = pos − 7 reproduces the gram-start stamp.
-    docs = spread_by(
+    docs = spr.spread_by(
         _t(spark, sf_dir, "documents").select("doc_id", "source", "text"),
         "doc_id",
     ).withColumn("_t", F.expr("filter(split(text, ' '), x -> x <> '')"))
@@ -15132,37 +15163,49 @@ def q_dup_span_islands_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_DUP_SPAN_ISLANDS = """
-WITH toks AS (
-  SELECT doc_id, source, list_filter(string_split(text, ' '), x -> x <> '') AS t
-  FROM documents
+_SQL_SPAN_DEDUP = f"""
+WITH sp AS (
+  SELECT doc_id, source, u['span_idx']::BIGINT AS span_idx,
+         hash(u['span_text']) AS span_h,
+         length(u['span_text'])::BIGINT AS span_chars,
+         ROW(doc_id, u['span_idx']::BIGINT) AS occ_key
+  FROM (
+    SELECT doc_id, source,
+           unnest([{{'span_idx': i - 1,
+                     'span_text': array_to_string(
+                       toks[(i-1)*{_SPAN_W}+1:(i-1)*{_SPAN_W}+{_SPAN_W}], ' ')}}
+                   for i in range(1, len(toks) // {_SPAN_W} + 1)]) AS u
+    FROM (SELECT doc_id, source,
+                 list_filter(string_split(text, ' '), x -> x <> '') AS toks
+          FROM documents)
+  )
 ),
-pos AS (
-  SELECT doc_id, source, t, unnest(range(len(t) - 7)) AS i
-  FROM toks WHERE len(t) >= 8
+census AS (
+  SELECT span_h, count(*) AS n_occ, min(occ_key) AS keep_key
+  FROM sp GROUP BY span_h
 ),
-grams AS (
-  SELECT doc_id, source, i, array_to_string(t[i + 1 : i + 8], ' ') AS g FROM pos
+v AS (
+  SELECT sp.*, CASE WHEN sp.occ_key <> c.keep_key THEN 1 ELSE 0 END AS removed
+  FROM sp JOIN census c USING (span_h)
 ),
-dup AS (SELECT g FROM grams GROUP BY g HAVING count(DISTINCT doc_id) > 1),
-dpos AS (SELECT doc_id, source, i FROM grams JOIN dup USING (g)),
-islands AS (
-  SELECT doc_id, source, i,
-         i - row_number() OVER (PARTITION BY doc_id ORDER BY i) AS isl
-  FROM dpos
-),
-spans AS (
-  SELECT doc_id, source, count(*) + 7 AS span_tokens
-  FROM islands GROUP BY doc_id, source, isl
+per_doc AS (
+  SELECT doc_id, source, count(*)::BIGINT AS n_spans,
+         sum(removed)::BIGINT AS n_removed,
+         sum(removed * span_chars)::BIGINT AS chars_removed
+  FROM v GROUP BY doc_id, source
 )
-SELECT source, count(DISTINCT doc_id)::BIGINT AS n_docs,
-       count(*)::BIGINT AS n_spans,
-       sum(span_tokens)::BIGINT AS dup_tokens,
-       max(span_tokens)::INT AS max_span_tokens
-FROM spans GROUP BY source ORDER BY source
+SELECT source, count(*)::BIGINT AS n_docs, sum(n_spans)::BIGINT AS n_spans,
+       sum(n_removed)::BIGINT AS n_removed,
+       round(sum(n_removed) / sum(n_spans), 6) AS removed_share,
+       sum(chars_removed)::BIGINT AS chars_removed,
+       sum(CASE WHEN n_removed > 0 THEN 1 ELSE 0 END)::BIGINT AS docs_touched
+FROM per_doc
+GROUP BY source
+ORDER BY source
 """
 
 
+@query(_SQL_SPAN_DEDUP)
 def q_span_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style duplicate-span scrub (Raffel 2020 §2.2 dedups exact
     three-sentence spans corpus-wide, keeping one occurrence): docs →
@@ -15231,51 +15274,43 @@ def q_span_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SPAN_DEDUP = f"""
-WITH sp AS (
-  SELECT doc_id, source, u['span_idx']::BIGINT AS span_idx,
-         hash(u['span_text']) AS span_h,
-         length(u['span_text'])::BIGINT AS span_chars,
-         ROW(doc_id, u['span_idx']::BIGINT) AS occ_key
-  FROM (
-    SELECT doc_id, source,
-           unnest([{{'span_idx': i - 1,
-                     'span_text': array_to_string(
-                       toks[(i-1)*{_SPAN_W}+1:(i-1)*{_SPAN_W}+{_SPAN_W}], ' ')}}
-                   for i in range(1, len(toks) // {_SPAN_W} + 1)]) AS u
-    FROM (SELECT doc_id, source,
-                 list_filter(string_split(text, ' '), x -> x <> '') AS toks
-          FROM documents)
-  )
-),
-census AS (
-  SELECT span_h, count(*) AS n_occ, min(occ_key) AS keep_key
-  FROM sp GROUP BY span_h
-),
-v AS (
-  SELECT sp.*, CASE WHEN sp.occ_key <> c.keep_key THEN 1 ELSE 0 END AS removed
-  FROM sp JOIN census c USING (span_h)
-),
-per_doc AS (
-  SELECT doc_id, source, count(*)::BIGINT AS n_spans,
-         sum(removed)::BIGINT AS n_removed,
-         sum(removed * span_chars)::BIGINT AS chars_removed
-  FROM v GROUP BY doc_id, source
-)
-SELECT source, count(*)::BIGINT AS n_docs, sum(n_spans)::BIGINT AS n_spans,
-       sum(n_removed)::BIGINT AS n_removed,
-       round(sum(n_removed) / sum(n_spans), 6) AS removed_share,
-       sum(chars_removed)::BIGINT AS chars_removed,
-       sum(CASE WHEN n_removed > 0 THEN 1 ELSE 0 END)::BIGINT AS docs_touched
-FROM per_doc
-GROUP BY source
-ORDER BY source
-"""
-
-
 _SNM_W = 4  # sorted-neighborhood window (pairs within rank distance w-1)
 
 
+_SQL_SNM = f"""
+WITH d AS (
+  SELECT doc_id, lang, toks,
+         array_to_string(toks[1:3], ' ') AS snm_key,
+         CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
+              ELSE [array_to_string(toks[i:i+2], ' ')
+                    for i in range(1, len(toks) - 2 + 1)] END AS sh
+  FROM (SELECT doc_id, lang,
+               list_filter(string_split(text, ' '), x -> x <> '') AS toks
+        FROM documents)
+),
+r AS (
+  SELECT doc_id, lang, sh,
+         row_number() OVER (PARTITION BY lang ORDER BY snm_key, doc_id) AS rn
+  FROM d
+),
+pairs AS (
+  SELECT a.lang,
+         len(list_intersect(a.sh, b.sh))::DOUBLE
+           / len(list_distinct(list_concat(a.sh, b.sh))) AS jacc
+  FROM r a JOIN r b
+    ON a.lang = b.lang AND b.rn > a.rn AND b.rn - a.rn <= {_SNM_W - 1}
+)
+SELECT lang, count(*)::BIGINT AS n_candidates,
+       sum(CASE WHEN jacc >= 0.5 THEN 1 ELSE 0 END)::BIGINT AS n_verified,
+       round(avg(jacc), 6) AS avg_jaccard,
+       round(max(jacc), 6) AS max_jaccard
+FROM pairs
+GROUP BY lang
+ORDER BY lang
+"""
+
+
+@query(_SQL_SNM)
 def q_sorted_neighborhood_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood-method blocking (Hernández & Stolfo 1995) —
     the third blocking family next to LSH banding and prefix blocking:
@@ -15354,59 +15389,7 @@ def q_sorted_neighborhood_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SNM = f"""
-WITH d AS (
-  SELECT doc_id, lang, toks,
-         array_to_string(toks[1:3], ' ') AS snm_key,
-         CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-              ELSE [array_to_string(toks[i:i+2], ' ')
-                    for i in range(1, len(toks) - 2 + 1)] END AS sh
-  FROM (SELECT doc_id, lang,
-               list_filter(string_split(text, ' '), x -> x <> '') AS toks
-        FROM documents)
-),
-r AS (
-  SELECT doc_id, lang, sh,
-         row_number() OVER (PARTITION BY lang ORDER BY snm_key, doc_id) AS rn
-  FROM d
-),
-pairs AS (
-  SELECT a.lang,
-         len(list_intersect(a.sh, b.sh))::DOUBLE
-           / len(list_distinct(list_concat(a.sh, b.sh))) AS jacc
-  FROM r a JOIN r b
-    ON a.lang = b.lang AND b.rn > a.rn AND b.rn - a.rn <= {_SNM_W - 1}
-)
-SELECT lang, count(*)::BIGINT AS n_candidates,
-       sum(CASE WHEN jacc >= 0.5 THEN 1 ELSE 0 END)::BIGINT AS n_verified,
-       round(avg(jacc), 6) AS avg_jaccard,
-       round(max(jacc), 6) AS max_jaccard
-FROM pairs
-GROUP BY lang
-ORDER BY lang
-"""
-
-
 _LPA_ROUNDS = 5
-
-
-def q_label_propagation_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community detection via deterministic label propagation
-    (`graph/algorithms.label_propagation`; min-label tie-break makes
-    the randomized algorithm exactly replayable): 5 synchronous rounds
-    over the modular graph, then the community census. The oracle
-    unrolls every round (neighbor-label count → windowed argmax →
-    coalesce fallback) — same full-replay discipline as
-    `pagerank_mod`/`lloyd_kmeans_clusters`."""
-    from ..graph.algorithms import label_propagation
-
-    labels = label_propagation(_mod_graph_edges(spark), rounds=_LPA_ROUNDS)
-    return (
-        labels.groupBy("label")
-        .agg(F.count(F.lit(1)).alias("n_nodes"))
-        .select(F.col("label").alias("community"), "n_nodes")
-        .orderBy(F.desc("n_nodes"), "community")
-    )
 
 
 def _sql_lpa() -> str:
@@ -15440,6 +15423,69 @@ ORDER BY n_nodes DESC, community
 """
 
 
+@query(_sql_lpa())
+def q_label_propagation_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Community detection via deterministic label propagation
+    (`graph/algorithms.label_propagation`; min-label tie-break makes
+    the randomized algorithm exactly replayable): 5 synchronous rounds
+    over the modular graph, then the community census. The oracle
+    unrolls every round (neighbor-label count → windowed argmax →
+    coalesce fallback) — same full-replay discipline as
+    `pagerank_mod`/`lloyd_kmeans_clusters`."""
+    labels = ga.label_propagation(_mod_graph_edges(spark), rounds=_LPA_ROUNDS)
+    return (
+        labels.groupBy("label")
+        .agg(F.count(F.lit(1)).alias("n_nodes"))
+        .select(F.col("label").alias("community"), "n_nodes")
+        .orderBy(F.desc("n_nodes"), "community")
+    )
+
+
+_SQL_HLL = """
+WITH words AS (
+  SELECT source, unnest(string_split(text, ' ')) AS w FROM documents
+),
+hashed AS (
+  SELECT source, h, h % 64 AS bucket, h // 64 AS wbits
+  FROM (SELECT source, ('0x' || substr(md5(w), 1, 15))::BIGINT AS h
+        FROM words WHERE w <> '')
+),
+regs AS (
+  SELECT source, bucket,
+         max(CASE WHEN wbits = 0 THEN 55
+                  ELSE 55 - length(bin(wbits)) END) AS m_j
+  FROM hashed GROUP BY 1, 2
+),
+sk AS (
+  SELECT source, count(*)::BIGINT AS n_present,
+         sum(power(2.0, -m_j)) AS z_present
+  FROM regs GROUP BY 1
+),
+est AS (
+  SELECT source, n_present, z_present,
+         (0.7213 / (1 + 1.079 / 64.0)) * 64.0 * 64.0
+           / (z_present + (64 - n_present)) AS est_raw,
+         64 - n_present AS v
+  FROM sk
+),
+fin AS (
+  SELECT source,
+         CASE WHEN est_raw <= 2.5 * 64 AND v > 0
+              THEN 64.0 * ln(64.0 / v) ELSE est_raw END AS e
+  FROM est
+),
+exact AS (
+  SELECT source, count(DISTINCT w)::BIGINT AS exact_distinct
+  FROM words WHERE w <> '' GROUP BY 1
+)
+SELECT source, exact_distinct, round(e, 4) AS hll_estimate,
+       round((e - exact_distinct) / exact_distinct, 6) AS rel_err
+FROM fin JOIN exact USING (source)
+ORDER BY source
+"""
+
+
+@query(_SQL_HLL)
 def q_hll_distinct_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """From-scratch HyperLogLog (Flajolet 2007; the mergeable-sketch
     family member next to `kmv_distinct_sketch`): per-source distinct-
@@ -15503,132 +15549,7 @@ def q_hll_distinct_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_HLL = """
-WITH words AS (
-  SELECT source, unnest(string_split(text, ' ')) AS w FROM documents
-),
-hashed AS (
-  SELECT source, h, h % 64 AS bucket, h // 64 AS wbits
-  FROM (SELECT source, ('0x' || substr(md5(w), 1, 15))::BIGINT AS h
-        FROM words WHERE w <> '')
-),
-regs AS (
-  SELECT source, bucket,
-         max(CASE WHEN wbits = 0 THEN 55
-                  ELSE 55 - length(bin(wbits)) END) AS m_j
-  FROM hashed GROUP BY 1, 2
-),
-sk AS (
-  SELECT source, count(*)::BIGINT AS n_present,
-         sum(power(2.0, -m_j)) AS z_present
-  FROM regs GROUP BY 1
-),
-est AS (
-  SELECT source, n_present, z_present,
-         (0.7213 / (1 + 1.079 / 64.0)) * 64.0 * 64.0
-           / (z_present + (64 - n_present)) AS est_raw,
-         64 - n_present AS v
-  FROM sk
-),
-fin AS (
-  SELECT source,
-         CASE WHEN est_raw <= 2.5 * 64 AND v > 0
-              THEN 64.0 * ln(64.0 / v) ELSE est_raw END AS e
-  FROM est
-),
-exact AS (
-  SELECT source, count(DISTINCT w)::BIGINT AS exact_distinct
-  FROM words WHERE w <> '' GROUP BY 1
-)
-SELECT source, exact_distinct, round(e, 4) AS hll_estimate,
-       round((e - exact_distinct) / exact_distinct, 6) AS rel_err
-FROM fin JOIN exact USING (source)
-ORDER BY source
-"""
-
-
 _MRL_DIMS = [4, 16, 32]
-
-
-def q_mrl_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka-style truncation evaluation (Kusupati 2022): recall@5
-    of cosine top-k computed on PREFIX dims {4, 16, 32} against the
-    full 64-dim exact top-5, per truncation width — the measurement
-    behind serving embeddings at reduced dimension (the cheap first-
-    stage retrieval a 100 TB vector pipeline runs before full-dim
-    re-rank). Reuses the proven exact-top-k operator at each width
-    (`operators/similarity.cosine_topk_bruteforce(dim=d)` — the cosine
-    unrolls over only the first d components, so the narrow widths also
-    cost proportionally less compute). Same sum-then-divide recall as
-    `ann_recall`."""
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    # All four widths in ONE pass over the pair table (r9, guide §1.2 /
-    # §2.4 "share one exchange"): each pair row carries cos_4/16/32/64
-    # (the same per-width unrolled `_cosine_sql` prefix dots as the
-    # exact-top-k operator — identical fp), and the four rankings are
-    # four row_number windows over the SAME query_id hash partitioning:
-    # one Exchange instead of four crossJoin+window pipelines, an eager
-    # checkpoint, and three rank joins. A pair has _rk{d} ≤ 5 AND
-    # _rk64 ≤ 5 exactly iff it sits in both top-5 lists (same tie rule:
-    # cosine desc, neighbor_id asc), so the hit counts are identical by
-    # construction; recall rounding stays Spark-side HALF_UP.
-    from ..operators.similarity import _cosine_sql
-
-    q = emb.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")
-    ).filter(F.col("query_id") < 32)
-    b = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_bv")
-    )
-    pairs = (
-        b.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            *[
-                F.expr(_cosine_sql("_qv", "_bv", d)).alias(f"_cos{d}")
-                for d in (*_MRL_DIMS, 64)
-            ],
-        )
-    )
-    wq = Window.partitionBy("query_id")
-    ranked = pairs.select(
-        "query_id",
-        *[
-            F.row_number()
-            .over(
-                wq.orderBy(F.col(f"_cos{d}").desc(), F.col("neighbor_id").asc())
-            )
-            .alias(f"_rk{d}")
-            for d in (*_MRL_DIMS, 64)
-        ],
-    )
-    stats = (
-        ranked.filter(F.col("_rk64") <= 5)
-        .agg(
-            F.countDistinct("query_id").alias("n"),
-            *[
-                F.sum((F.col(f"_rk{d}") <= 5).cast("bigint")).alias(f"s{d}")
-                for d in _MRL_DIMS
-            ],
-        )
-        .collect()[0]
-    )
-    out = local_frame(
-        spark,
-        [(d, int(stats["n"]), int(stats[f"s{d}"])) for d in _MRL_DIMS],
-        "trunc_dim int, n_queries bigint, s bigint",
-    )
-    return out.select(
-        "trunc_dim",
-        "n_queries",
-        F.round(F.col("s") / (F.lit(5.0) * F.col("n_queries")), 6).alias(
-            "recall_at_5"
-        ),
-    ).orderBy("trunc_dim")
 
 
 def _sql_trunc_topk(d: int) -> str:
@@ -15666,75 +15587,85 @@ def _sql_mrl_recall() -> str:
     return f"SELECT * FROM (\n{rows}\n) ORDER BY trunc_dim"
 
 
-def q_trajectory_hausdorff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trajectory similarity — symmetric Hausdorff distance between
-    user movement footprints, grid-simplified (distinct 0.05° cells per
-    user, distances between cell centers): the mobility-mining
-    companion to `staypoint_detection`/`user_trajectory_stats`.
+@query(_sql_mrl_recall())
+def q_mrl_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Matryoshka-style truncation evaluation (Kusupati 2022): recall@5
+    of cosine top-k computed on PREFIX dims {4, 16, 32} against the
+    full 64-dim exact top-5, per truncation width — the measurement
+    behind serving embeddings at reduced dimension (the cheap first-
+    stage retrieval a 100 TB vector pipeline runs before full-dim
+    re-rank). Reuses the proven exact-top-k operator at each width
+    (`operators/similarity.cosine_topk_bruteforce(dim=d)` — the cosine
+    unrolls over only the first d components, so the narrow widths also
+    cost proportionally less compute). Same sum-then-divide recall as
+    `ann_recall`."""
+    emb = _t(spark, sf_dir, "embeddings").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+    # All four widths in ONE pass over the pair table (r9, guide §1.2 /
+    # §2.4 "share one exchange"): each pair row carries cos_4/16/32/64
+    # (the same per-width unrolled `_cosine_sql` prefix dots as the
+    # exact-top-k operator — identical fp), and the four rankings are
+    # four row_number windows over the SAME query_id hash partitioning:
+    # one Exchange instead of four crossJoin+window pipelines, an eager
+    # checkpoint, and three rank joins. A pair has _rk{d} ≤ 5 AND
+    # _rk64 ≤ 5 exactly iff it sits in both top-5 lists (same tie rule:
+    # cosine desc, neighbor_id asc), so the hit counts are identical by
+    # construction; recall rounding stays Spark-side HALF_UP.
 
-    Shape: footprints are DISTINCT cells (bounded by the grid extent,
-    not event volume — the simplification IS the scale lever); the
-    user-pair roster (u < v over 6 users) is a tiny allowlisted
-    non-equi self-join, and the cell-pair stage reaches cells via two
-    equi-joins on user id, so fan-out is |A|·|B| per pair with both
-    bounded by the grid. Both directed maxima come from the same pair
-    table (min-per-a-cell → max, min-per-b-cell → max)."""
-    pts = _derived_points(_t(spark, sf_dir, "events")).filter(
-        F.col("user_id") < 6
-    )
-    gx, gy = grid_cell("lat", "lon", 40.5, -74.3, 0.05)
-    cells = (
-        pts.withColumn("gx", gx)
-        .withColumn("gy", gy)
-        .select("user_id", "gx", "gy")
-        .distinct()
-        .withColumn("cx", F.lit(-74.3) + (F.col("gx") + 0.5) * 0.05)
-        .withColumn("cy", F.lit(40.5) + (F.col("gy") + 0.5) * 0.05)
-    )
-    users = cells.select("user_id").distinct()
-    roster = (
-        users.select(F.col("user_id").alias("ua"))
-        .join(
-            users.select(F.col("user_id").alias("ub")),
-            F.col("ua") < F.col("ub"),
-        )
-    )
-    a = cells.select(
-        F.col("user_id").alias("ua"), F.col("gx").alias("agx"),
-        F.col("gy").alias("agy"), F.col("cx").alias("ax"),
-        F.col("cy").alias("ay"),
-    )
-    b = cells.select(
-        F.col("user_id").alias("ub"), F.col("gx").alias("bgx"),
-        F.col("gy").alias("bgy"), F.col("cx").alias("bx"),
-        F.col("cy").alias("by"),
+    q = emb.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")
+    ).filter(F.col("query_id") < 32)
+    b = emb.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_bv")
     )
     pairs = (
-        roster.join(a, "ua")
-        .join(b, "ub")
-        .withColumn("d", haversine_km("ay", "ax", "by", "bx"))
-    )
-    h_ab = (
-        pairs.groupBy("ua", "ub", "agx", "agy")
-        .agg(F.min("d").alias("md"))
-        .groupBy("ua", "ub")
-        .agg(F.max("md").alias("h_fwd"))
-    )
-    h_ba = (
-        pairs.groupBy("ua", "ub", "bgx", "bgy")
-        .agg(F.min("d").alias("md"))
-        .groupBy("ua", "ub")
-        .agg(F.max("md").alias("h_bwd"))
-    )
-    return (
-        h_ab.join(h_ba, ["ua", "ub"])
+        b.crossJoin(F.broadcast(q))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
-            F.col("ua").alias("user_a"),
-            F.col("ub").alias("user_b"),
-            F.round(F.greatest("h_fwd", "h_bwd"), 6).alias("hausdorff_km"),
+            "query_id",
+            "neighbor_id",
+            *[
+                F.expr(sim._cosine_sql("_qv", "_bv", d)).alias(f"_cos{d}")
+                for d in (*_MRL_DIMS, 64)
+            ],
         )
-        .orderBy("user_a", "user_b")
     )
+    wq = Window.partitionBy("query_id")
+    ranked = pairs.select(
+        "query_id",
+        *[
+            F.row_number()
+            .over(
+                wq.orderBy(F.col(f"_cos{d}").desc(), F.col("neighbor_id").asc())
+            )
+            .alias(f"_rk{d}")
+            for d in (*_MRL_DIMS, 64)
+        ],
+    )
+    stats = (
+        ranked.filter(F.col("_rk64") <= 5)
+        .agg(
+            F.countDistinct("query_id").alias("n"),
+            *[
+                F.sum((F.col(f"_rk{d}") <= 5).cast("bigint")).alias(f"s{d}")
+                for d in _MRL_DIMS
+            ],
+        )
+        .collect()[0]
+    )
+    out = tb.local_frame(
+        spark,
+        [(d, int(stats["n"]), int(stats[f"s{d}"])) for d in _MRL_DIMS],
+        "trunc_dim int, n_queries bigint, s bigint",
+    )
+    return out.select(
+        "trunc_dim",
+        "n_queries",
+        F.round(F.col("s") / (F.lit(5.0) * F.col("n_queries")), 6).alias(
+            "recall_at_5"
+        ),
+    ).orderBy("trunc_dim")
 
 
 _SQL_HAUSDORFF = f"""
@@ -15778,6 +15709,107 @@ ORDER BY user_a, user_b
 """
 
 
+@query(_SQL_HAUSDORFF)
+def q_trajectory_hausdorff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trajectory similarity — symmetric Hausdorff distance between
+    user movement footprints, grid-simplified (distinct 0.05° cells per
+    user, distances between cell centers): the mobility-mining
+    companion to `staypoint_detection`/`user_trajectory_stats`.
+
+    Shape: footprints are DISTINCT cells (bounded by the grid extent,
+    not event volume — the simplification IS the scale lever); the
+    user-pair roster (u < v over 6 users) is a tiny allowlisted
+    non-equi self-join, and the cell-pair stage reaches cells via two
+    equi-joins on user id, so fan-out is |A|·|B| per pair with both
+    bounded by the grid. Both directed maxima come from the same pair
+    table (min-per-a-cell → max, min-per-b-cell → max)."""
+    pts = _derived_points(_t(spark, sf_dir, "events")).filter(
+        F.col("user_id") < 6
+    )
+    gx, gy = geo.grid_cell("lat", "lon", 40.5, -74.3, 0.05)
+    cells = (
+        pts.withColumn("gx", gx)
+        .withColumn("gy", gy)
+        .select("user_id", "gx", "gy")
+        .distinct()
+        .withColumn("cx", F.lit(-74.3) + (F.col("gx") + 0.5) * 0.05)
+        .withColumn("cy", F.lit(40.5) + (F.col("gy") + 0.5) * 0.05)
+    )
+    users = cells.select("user_id").distinct()
+    roster = (
+        users.select(F.col("user_id").alias("ua"))
+        .join(
+            users.select(F.col("user_id").alias("ub")),
+            F.col("ua") < F.col("ub"),
+        )
+    )
+    a = cells.select(
+        F.col("user_id").alias("ua"), F.col("gx").alias("agx"),
+        F.col("gy").alias("agy"), F.col("cx").alias("ax"),
+        F.col("cy").alias("ay"),
+    )
+    b = cells.select(
+        F.col("user_id").alias("ub"), F.col("gx").alias("bgx"),
+        F.col("gy").alias("bgy"), F.col("cx").alias("bx"),
+        F.col("cy").alias("by"),
+    )
+    pairs = (
+        roster.join(a, "ua")
+        .join(b, "ub")
+        .withColumn("d", geo.haversine_km("ay", "ax", "by", "bx"))
+    )
+    h_ab = (
+        pairs.groupBy("ua", "ub", "agx", "agy")
+        .agg(F.min("d").alias("md"))
+        .groupBy("ua", "ub")
+        .agg(F.max("md").alias("h_fwd"))
+    )
+    h_ba = (
+        pairs.groupBy("ua", "ub", "bgx", "bgy")
+        .agg(F.min("d").alias("md"))
+        .groupBy("ua", "ub")
+        .agg(F.max("md").alias("h_bwd"))
+    )
+    return (
+        h_ab.join(h_ba, ["ua", "ub"])
+        .select(
+            F.col("ua").alias("user_a"),
+            F.col("ub").alias("user_b"),
+            F.round(F.greatest("h_fwd", "h_bwd"), 6).alias("hausdorff_km"),
+        )
+        .orderBy("user_a", "user_b")
+    )
+
+
+_SQL_ITEM_CF = """
+WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+support AS (SELECT l_partkey, count(*)::BIGINT AS sup FROM li GROUP BY 1),
+co AS (
+  SELECT a.l_partkey AS pa, b.l_partkey AS pb, count(*)::BIGINT AS c_ab
+  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
+  WHERE a.l_partkey <> b.l_partkey
+  GROUP BY 1, 2
+),
+sim AS (
+  SELECT co.pa, co.pb, co.c_ab,
+         co.c_ab / sqrt(sa.sup * sb.sup) AS sim
+  FROM co
+  JOIN support sa ON sa.l_partkey = co.pa
+  JOIN support sb ON sb.l_partkey = co.pb
+  WHERE sa.sup >= 3 AND sb.sup >= 3
+),
+ranked AS (
+  SELECT *, row_number() OVER (PARTITION BY pa ORDER BY sim DESC, pb ASC) AS rk
+  FROM sim
+)
+SELECT pa AS part_id, rk AS rank, pb AS partner_id, c_ab AS co_count,
+       round(sim, 6) AS cosine_sim
+FROM ranked WHERE rk <= 3 AND pa % 200 = 0
+ORDER BY part_id, rank
+"""
+
+
+@query(_SQL_ITEM_CF)
 def q_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Item-item collaborative filtering (cosine over order-basket
     co-occurrence — the recommender primitive on top of
@@ -15826,34 +15858,44 @@ def q_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_ITEM_CF = """
-WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-support AS (SELECT l_partkey, count(*)::BIGINT AS sup FROM li GROUP BY 1),
-co AS (
-  SELECT a.l_partkey AS pa, b.l_partkey AS pb, count(*)::BIGINT AS c_ab
-  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-  WHERE a.l_partkey <> b.l_partkey
-  GROUP BY 1, 2
+_SQL_SAMPLED_QUANTILES = """
+WITH li AS (
+  SELECT l_extendedprice,
+         ('0x' || substr(md5(l_orderkey::VARCHAR || ':' ||
+                             l_linenumber::VARCHAR), 1, 15))::BIGINT AS h
+  FROM lineitem
 ),
-sim AS (
-  SELECT co.pa, co.pb, co.c_ab,
-         co.c_ab / sqrt(sa.sup * sb.sup) AS sim
-  FROM co
-  JOIN support sa ON sa.l_partkey = co.pa
-  JOIN support sb ON sb.l_partkey = co.pb
-  WHERE sa.sup >= 3 AND sb.sup >= 3
+est AS (
+  SELECT quantile_cont(l_extendedprice, 0.5) AS e0,
+         quantile_cont(l_extendedprice, 0.9) AS e1,
+         quantile_cont(l_extendedprice, 0.99) AS e2,
+         count(*)::BIGINT AS n_sample
+  FROM li WHERE h % 10 = 0
 ),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY pa ORDER BY sim DESC, pb ASC) AS rk
-  FROM sim
+exact AS (
+  SELECT quantile_cont(l_extendedprice, 0.5) AS x0,
+         quantile_cont(l_extendedprice, 0.9) AS x1,
+         quantile_cont(l_extendedprice, 0.99) AS x2,
+         count(*)::BIGINT AS n_total
+  FROM lineitem
+),
+rows_q AS (
+  SELECT 0.5::DOUBLE AS quantile, e0 AS est, x0 AS exact, n_sample, n_total FROM est, exact
+  UNION ALL
+  SELECT 0.9::DOUBLE, e1, x1, n_sample, n_total FROM est, exact
+  UNION ALL
+  SELECT 0.99::DOUBLE, e2, x2, n_sample, n_total FROM est, exact
 )
-SELECT pa AS part_id, rk AS rank, pb AS partner_id, c_ab AS co_count,
-       round(sim, 6) AS cosine_sim
-FROM ranked WHERE rk <= 3 AND pa % 200 = 0
-ORDER BY part_id, rank
+SELECT quantile, n_sample, n_total,
+       round(est, 4) AS est_value, round(exact, 4) AS exact_value,
+       round((est - exact) / exact, 6) AS rel_err,
+       CASE WHEN abs((est - exact) / exact) <= 0.02 THEN 1 ELSE 0 END AS within_band
+FROM rows_q
+ORDER BY quantile
 """
 
 
+@query(_SQL_SAMPLED_QUANTILES)
 def q_sampled_quantile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-accuracy evaluation: quantiles {p50, p90, p99} of
     l_extendedprice estimated from a DETERMINISTIC 10% hash sample
@@ -15926,119 +15968,9 @@ def q_sampled_quantile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("quantile")
 
 
-_SQL_SAMPLED_QUANTILES = """
-WITH li AS (
-  SELECT l_extendedprice,
-         ('0x' || substr(md5(l_orderkey::VARCHAR || ':' ||
-                             l_linenumber::VARCHAR), 1, 15))::BIGINT AS h
-  FROM lineitem
-),
-est AS (
-  SELECT quantile_cont(l_extendedprice, 0.5) AS e0,
-         quantile_cont(l_extendedprice, 0.9) AS e1,
-         quantile_cont(l_extendedprice, 0.99) AS e2,
-         count(*)::BIGINT AS n_sample
-  FROM li WHERE h % 10 = 0
-),
-exact AS (
-  SELECT quantile_cont(l_extendedprice, 0.5) AS x0,
-         quantile_cont(l_extendedprice, 0.9) AS x1,
-         quantile_cont(l_extendedprice, 0.99) AS x2,
-         count(*)::BIGINT AS n_total
-  FROM lineitem
-),
-rows_q AS (
-  SELECT 0.5::DOUBLE AS quantile, e0 AS est, x0 AS exact, n_sample, n_total FROM est, exact
-  UNION ALL
-  SELECT 0.9::DOUBLE, e1, x1, n_sample, n_total FROM est, exact
-  UNION ALL
-  SELECT 0.99::DOUBLE, e2, x2, n_sample, n_total FROM est, exact
-)
-SELECT quantile, n_sample, n_total,
-       round(est, 4) AS est_value, round(exact, 4) AS exact_value,
-       round((est - exact) / exact, 6) AS rel_err,
-       CASE WHEN abs((est - exact) / exact) <= 0.02 THEN 1 ELSE 0 END AS within_band
-FROM rows_q
-ORDER BY quantile
-"""
-
-
 #: sorted-neighborhood half-window for jw_entity_resolution: each probe
 #: compares against the ≤2·64 block-mates nearest in name sort order
 _JW_SNM_W = 64
-
-
-def q_jw_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy entity resolution with Jaro-Winkler
-    (`functions/strings.jaro_winkler` — the full matching-window /
-    transposition / prefix-boost similarity as ONE codegen'd column
-    expression; Spark has no built-in): probe parts (p_partkey % 997 =
-    0) are matched via blocking + SORTED NEIGHBORHOOD — candidates are
-    the parts sharing the probe's first name token (blocking key) AND
-    within ±64 positions in the block's (p_name, p_partkey) sort order
-    (the classic SNM candidate rule: JW's prefix weighting makes
-    lexicographic neighbors the plausible matches) — best partner per
-    probe by (similarity DESC, partkey ASC). The oracle computes the
-    SAME candidate set and pairs with DuckDB's independent C++
-    ``jaro_winkler_similarity`` — a foreign-implementation check.
-
-    Shape (rewritten in round 5 — the sf1 scale sweep measured the
-    full-block form at 96x per 10x data, the textbook quadratic-
-    blocking blowup): the block rank is one per-block window sort, the
-    rank band is an equi-join on (block, rank÷64 bucket) with the probe
-    side exploded to 3 buckets + exact |Δrank| ≤ 64 refine — the same
-    grid pattern as the spatial DWithin join — so candidate volume is
-    probes × ≤129, linear in n. Note: nested higher-order functions
-    are NOT whole-stage-codegen'd — the match fold runs on Spark's
-    interpreted expression path (~ms per 40-char pair), which is why
-    the candidate set must stay bounded per probe."""
-    from ..functions.strings import jaro_winkler
-
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_name")
-    blocked = part.withColumn("blk", F.split("p_name", " ").getItem(0))
-    wr = Window.partitionBy("blk").orderBy("p_name", "p_partkey")
-    ranked = blocked.withColumn("rnk", F.row_number().over(wr))
-    cand = ranked.select(
-        F.col("p_partkey").alias("cand_key"),
-        F.col("p_name").alias("cand_name"),
-        "blk",
-        F.col("rnk").alias("cand_rnk"),
-        F.floor(F.col("rnk") / _JW_SNM_W).alias("bkt"),
-    )
-    probe = (
-        ranked.filter(F.col("p_partkey") % 997 == 0)
-        .select(
-            F.col("p_partkey").alias("probe_key"),
-            F.col("p_name").alias("probe_name"),
-            "blk",
-            F.col("rnk").alias("probe_rnk"),
-        )
-        .withColumn("db", F.explode(F.sequence(F.lit(-1), F.lit(1))))
-        .withColumn("bkt", F.floor(F.col("probe_rnk") / _JW_SNM_W) + F.col("db"))
-        .drop("db")
-    )
-    pairs = (
-        probe.join(cand, ["blk", "bkt"])
-        .filter(
-            (F.col("probe_key") != F.col("cand_key"))
-            & (F.abs(F.col("probe_rnk") - F.col("cand_rnk")) <= _JW_SNM_W)
-        )
-        .withColumn("jw", jaro_winkler("probe_name", "cand_name"))
-    )
-    # rank on jw ROUNDED to the compared precision (6dp): the Spark
-    # expression and DuckDB's C++ jaro_winkler_similarity agree only to
-    # ~1e-9, so raw-float ordering could pick a different best match per
-    # engine for near-tied candidates — a data-dependent flaky mismatch.
-    w = Window.partitionBy("probe_key").orderBy(
-        F.desc(F.round("jw", 6)), F.asc("cand_key")
-    )
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("probe_key", F.col("cand_key").alias("best_match_key"),
-                F.round("jw", 6).alias("best_jw"))
-        .orderBy("probe_key")
-    )
 
 
 _SQL_JW_ER = f"""
@@ -16068,6 +16000,106 @@ ORDER BY probe_key
 """
 
 
+@query(_SQL_JW_ER)
+def q_jw_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fuzzy entity resolution with Jaro-Winkler
+    (`functions/strings.jaro_winkler` — the full matching-window /
+    transposition / prefix-boost similarity as ONE codegen'd column
+    expression; Spark has no built-in): probe parts (p_partkey % 997 =
+    0) are matched via blocking + SORTED NEIGHBORHOOD — candidates are
+    the parts sharing the probe's first name token (blocking key) AND
+    within ±64 positions in the block's (p_name, p_partkey) sort order
+    (the classic SNM candidate rule: JW's prefix weighting makes
+    lexicographic neighbors the plausible matches) — best partner per
+    probe by (similarity DESC, partkey ASC). The oracle computes the
+    SAME candidate set and pairs with DuckDB's independent C++
+    ``jaro_winkler_similarity`` — a foreign-implementation check.
+
+    Shape (rewritten in round 5 — the sf1 scale sweep measured the
+    full-block form at 96x per 10x data, the textbook quadratic-
+    blocking blowup): the block rank is one per-block window sort, the
+    rank band is an equi-join on (block, rank÷64 bucket) with the probe
+    side exploded to 3 buckets + exact |Δrank| ≤ 64 refine — the same
+    grid pattern as the spatial DWithin join — so candidate volume is
+    probes × ≤129, linear in n. Note: nested higher-order functions
+    are NOT whole-stage-codegen'd — the match fold runs on Spark's
+    interpreted expression path (~ms per 40-char pair), which is why
+    the candidate set must stay bounded per probe."""
+    part = _t(spark, sf_dir, "part").select("p_partkey", "p_name")
+    blocked = part.withColumn("blk", F.split("p_name", " ").getItem(0))
+    wr = Window.partitionBy("blk").orderBy("p_name", "p_partkey")
+    ranked = blocked.withColumn("rnk", F.row_number().over(wr))
+    cand = ranked.select(
+        F.col("p_partkey").alias("cand_key"),
+        F.col("p_name").alias("cand_name"),
+        "blk",
+        F.col("rnk").alias("cand_rnk"),
+        F.floor(F.col("rnk") / _JW_SNM_W).alias("bkt"),
+    )
+    probe = (
+        ranked.filter(F.col("p_partkey") % 997 == 0)
+        .select(
+            F.col("p_partkey").alias("probe_key"),
+            F.col("p_name").alias("probe_name"),
+            "blk",
+            F.col("rnk").alias("probe_rnk"),
+        )
+        .withColumn("db", F.explode(F.sequence(F.lit(-1), F.lit(1))))
+        .withColumn("bkt", F.floor(F.col("probe_rnk") / _JW_SNM_W) + F.col("db"))
+        .drop("db")
+    )
+    pairs = (
+        probe.join(cand, ["blk", "bkt"])
+        .filter(
+            (F.col("probe_key") != F.col("cand_key"))
+            & (F.abs(F.col("probe_rnk") - F.col("cand_rnk")) <= _JW_SNM_W)
+        )
+        .withColumn("jw", strings.jaro_winkler("probe_name", "cand_name"))
+    )
+    # rank on jw ROUNDED to the compared precision (6dp): the Spark
+    # expression and DuckDB's C++ jaro_winkler_similarity agree only to
+    # ~1e-9, so raw-float ordering could pick a different best match per
+    # engine for near-tied candidates — a data-dependent flaky mismatch.
+    w = Window.partitionBy("probe_key").orderBy(
+        F.desc(F.round("jw", 6)), F.asc("cand_key")
+    )
+    return (
+        pairs.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") == 1)
+        .select("probe_key", F.col("cand_key").alias("best_match_key"),
+                F.round("jw", 6).alias("best_jw"))
+        .orderBy("probe_key")
+    )
+
+
+_SQL_K_ANON = """
+WITH classes AS (
+  SELECT c_nationkey, c_mktsegment,
+         CASE WHEN c_acctbal < 0 THEN 'neg' ELSE 'nonneg' END AS bal_sign,
+         count(*)::BIGINT AS cls
+  FROM customer GROUP BY 1, 2, 3
+),
+banded AS (
+  SELECT cls,
+         CASE WHEN cls = 1 THEN '1' WHEN cls <= 4 THEN '2-4'
+              WHEN cls <= 9 THEN '5-9' ELSE '10+' END AS band
+  FROM classes
+),
+total AS (
+  SELECT sum(cls)::BIGINT AS tot, min(cls)::BIGINT AS kmin,
+         sum(CASE WHEN cls < 5 THEN cls ELSE 0 END)::BIGINT AS supp
+  FROM classes
+)
+SELECT band, count(*)::BIGINT AS n_classes, sum(cls)::BIGINT AS n_rows,
+       round(sum(cls) / tot, 6) AS row_share,
+       kmin AS k_min, supp AS suppress_rows_for_k5
+FROM banded, total
+GROUP BY band, tot, kmin, supp
+ORDER BY band
+"""
+
+
+@query(_SQL_K_ANON)
 def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Privacy/data-governance audit — k-anonymity of a quasi-
     identifier tuple (nation, market segment, account-balance sign):
@@ -16118,38 +16150,40 @@ def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_K_ANON = """
-WITH classes AS (
-  SELECT c_nationkey, c_mktsegment,
-         CASE WHEN c_acctbal < 0 THEN 'neg' ELSE 'nonneg' END AS bal_sign,
-         count(*)::BIGINT AS cls
-  FROM customer GROUP BY 1, 2, 3
-),
-banded AS (
-  SELECT cls,
-         CASE WHEN cls = 1 THEN '1' WHEN cls <= 4 THEN '2-4'
-              WHEN cls <= 9 THEN '5-9' ELSE '10+' END AS band
-  FROM classes
-),
-total AS (
-  SELECT sum(cls)::BIGINT AS tot, min(cls)::BIGINT AS kmin,
-         sum(CASE WHEN cls < 5 THEN cls ELSE 0 END)::BIGINT AS supp
-  FROM classes
-)
-SELECT band, count(*)::BIGINT AS n_classes, sum(cls)::BIGINT AS n_rows,
-       round(sum(cls) / tot, 6) AS row_share,
-       kmin AS k_min, supp AS suppress_rows_for_k5
-FROM banded, total
-GROUP BY band, tot, kmin, supp
-ORDER BY band
-"""
-
-
 _KCENTER_ROUNDS = 8
 #: Row cap of the k-center driver kernel (100k × 64 doubles ≈ 51 MB).
 _KCENTER_DRIVER_CAP = 100_000
 
 
+def _sql_kcenter() -> str:
+    parts = [
+        "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
+        "n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nv FROM e)",
+        "d0 AS (SELECT a.vec_id, a.v, a.nv,"
+        " 1.0 - list_dot_product(a.v, s.v) / (a.nv * s.nv) AS md"
+        " FROM n a, (SELECT v, nv FROM n WHERE vec_id = 0) s)",
+    ]
+    for t in range(1, _KCENTER_ROUNDS + 1):
+        parts.append(
+            f"m{t} AS (SELECT vec_id, md FROM d{t - 1}"
+            f" ORDER BY md DESC, vec_id ASC LIMIT 1)"
+        )
+        parts.append(
+            f"d{t} AS (SELECT a.vec_id, a.v, a.nv,"
+            f" least(a.md, 1.0 - list_dot_product(a.v, s.v) / (a.nv * s.nv)) AS md"
+            f" FROM d{t - 1} a,"
+            f" (SELECT b.v, b.nv FROM n b, m{t} WHERE b.vec_id = m{t}.vec_id) s)"
+        )
+    sel = "\nUNION ALL\n".join(
+        f"SELECT {t} AS sel_round, vec_id, round(md, 6) AS cov_radius FROM m{t}"
+        for t in range(1, _KCENTER_ROUNDS + 1)
+    )
+    return (
+        "WITH " + ",\n".join(parts) + f"\nSELECT * FROM (\n{sel}\n) ORDER BY sel_round"
+    )
+
+
+@query(_sql_kcenter())
 def q_kcenter_coreset_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy k-center coreset selection (Gonzalez 1985; the
     diversity-based data-selection op an embedding-curated training set
@@ -16201,8 +16235,6 @@ def q_kcenter_coreset_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl = dispatch.driver_rows(emb, _KCENTER_DRIVER_CAP)
     out_rows = []
     if tbl is not None:
-        import numpy as np
-
         ids = np.array(tbl.column("vec_id").to_pylist(), dtype=np.int64)
         V = np.array(tbl.column("v").to_pylist(), dtype=np.float64)
 
@@ -16237,104 +16269,19 @@ def q_kcenter_coreset_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("md"), F.lit(1.0) - dot_lit(bv) / (F.col("nv") * F.lit(bn))
                 ),
             ).localCheckpoint()
-    return local_frame(
+    return tb.local_frame(
         spark, out_rows, "sel_round int, vec_id bigint, cov_radius double"
     ).select(
         "sel_round", "vec_id", F.round("cov_radius", 6).alias("cov_radius")
     ).orderBy("sel_round")
 
 
-def _sql_kcenter() -> str:
-    parts = [
-        "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        "n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nv FROM e)",
-        "d0 AS (SELECT a.vec_id, a.v, a.nv,"
-        " 1.0 - list_dot_product(a.v, s.v) / (a.nv * s.nv) AS md"
-        " FROM n a, (SELECT v, nv FROM n WHERE vec_id = 0) s)",
-    ]
-    for t in range(1, _KCENTER_ROUNDS + 1):
-        parts.append(
-            f"m{t} AS (SELECT vec_id, md FROM d{t - 1}"
-            f" ORDER BY md DESC, vec_id ASC LIMIT 1)"
-        )
-        parts.append(
-            f"d{t} AS (SELECT a.vec_id, a.v, a.nv,"
-            f" least(a.md, 1.0 - list_dot_product(a.v, s.v) / (a.nv * s.nv)) AS md"
-            f" FROM d{t - 1} a,"
-            f" (SELECT b.v, b.nv FROM n b, m{t} WHERE b.vec_id = m{t}.vec_id) s)"
-        )
-    sel = "\nUNION ALL\n".join(
-        f"SELECT {t} AS sel_round, vec_id, round(md, 6) AS cov_radius FROM m{t}"
-        for t in range(1, _KCENTER_ROUNDS + 1)
-    )
-    return (
-        "WITH " + ",\n".join(parts) + f"\nSELECT * FROM (\n{sel}\n) ORDER BY sel_round"
-    )
-
-
 _CLIP_BBOX = (-74.25, -73.85, 40.54, 40.88)
 
 
-def q_polygon_clip_areas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Polygon-overlay primitive — Sutherland–Hodgman convex-polygon ∩
-    bbox clipping with shoelace areas (`functions/polyclip`), lifting
-    the engine's overlay support from line segments (J6 Liang-Barsky)
-    to areas: 25 deterministic pentagons (one per nation key; center
-    and radius are arithmetic in the key) clipped against a fixed
-    window; per-polygon original area, clipped area, survival share,
-    and clipped vertex count. Oracle builds the identical algorithm
-    from DuckDB list comprehensions — rings match vertex-for-vertex.
-
-    Shape: pure per-row expression work (4 unrolled half-plane passes,
-    ring length ≤ n+4); composes under the covering-cell equi-join for
-    polygon-vs-grid zonal statistics at scale."""
-    from ..functions.polyclip import (
-        clip_polygon_bbox_spark,
-        shoelace_area_spark,
-    )
-
-    xmin, xmax, ymin, ymax = _CLIP_BBOX
-    nat = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").cast("int").alias("k")
-    )
-    poly = (
-        "transform(sequence(0, 4), i -> named_struct("
-        "'x', cx + r * cos(radians(90.0D + i * 72.0D)), "
-        "'y', cy + r * sin(radians(90.0D + i * 72.0D))))"
-    )
-    df = (
-        nat.withColumn("cx", F.lit(-74.3) + (F.col("k") % 5) * 0.12 + 0.03)
-        .withColumn("cy", F.lit(40.5) + F.floor(F.col("k") / 5) * 0.1 + 0.02)
-        .withColumn("r", F.lit(0.02) + (F.col("k") % 7) * 0.012)
-        .withColumn("poly", F.expr(poly))
-    )
-    df = df.withColumn(
-        "clipped",
-        F.expr(clip_polygon_bbox_spark("poly", xmin, xmax, ymin, ymax)),
-    )
-    # barrier: the downstream select references `clipped`/`poly` five
-    # times; without it projection collapse re-inlines the (nested-
-    # lambda) clip chain per reference and ANALYSIS time, not runtime,
-    # dominates (measured 15 s build → <1 s with the barrier).
-    df = df.select("k", "poly", "clipped").localCheckpoint()
-    return df.select(
-        F.col("k").alias("poly_id"),
-        F.expr("size(clipped)").alias("n_vert_clip"),
-        F.round(F.expr(shoelace_area_spark("poly")), 9).alias("area_orig"),
-        F.round(F.expr(shoelace_area_spark("clipped")), 9).alias("area_clip"),
-        F.round(
-            F.expr(shoelace_area_spark("clipped"))
-            / F.expr(shoelace_area_spark("poly")),
-            6,
-        ).alias("clip_share"),
-    ).orderBy("poly_id")
-
-
 def _sql_polyclip() -> str:
-    from ..functions.polyclip import clip_passes_duckdb, shoelace_area_duckdb
-
     xmin, xmax, ymin, ymax = _CLIP_BBOX
-    passes = clip_passes_duckdb(xmin, xmax, ymin, ymax)
+    passes = polyclip.clip_passes_duckdb(xmin, xmax, ymin, ymax)
     ctes = []
     cur = "poly"
     for n, p_fn in enumerate(passes):
@@ -16367,15 +16314,127 @@ rings AS (
 {chain},
 clipped_t AS (SELECT k, poly, {cur} AS clipped FROM {last})
 SELECT k AS poly_id, len(clipped)::BIGINT AS n_vert_clip,
-       round({shoelace_area_duckdb('poly')}, 9) AS area_orig,
-       round({shoelace_area_duckdb('clipped')}, 9) AS area_clip,
-       round({shoelace_area_duckdb('clipped')}
-             / {shoelace_area_duckdb('poly')}, 6) AS clip_share
+       round({polyclip.shoelace_area_duckdb('poly')}, 9) AS area_orig,
+       round({polyclip.shoelace_area_duckdb('clipped')}, 9) AS area_clip,
+       round({polyclip.shoelace_area_duckdb('clipped')}
+             / {polyclip.shoelace_area_duckdb('poly')}, 6) AS clip_share
 FROM clipped_t
 ORDER BY poly_id
 """
 
 
+@query(_sql_polyclip())
+def q_polygon_clip_areas(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Polygon-overlay primitive — Sutherland–Hodgman convex-polygon ∩
+    bbox clipping with shoelace areas (`functions/polyclip`), lifting
+    the engine's overlay support from line segments (J6 Liang-Barsky)
+    to areas: 25 deterministic pentagons (one per nation key; center
+    and radius are arithmetic in the key) clipped against a fixed
+    window; per-polygon original area, clipped area, survival share,
+    and clipped vertex count. Oracle builds the identical algorithm
+    from DuckDB list comprehensions — rings match vertex-for-vertex.
+
+    Shape: pure per-row expression work (4 unrolled half-plane passes,
+    ring length ≤ n+4); composes under the covering-cell equi-join for
+    polygon-vs-grid zonal statistics at scale."""
+    xmin, xmax, ymin, ymax = _CLIP_BBOX
+    nat = _t(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").cast("int").alias("k")
+    )
+    poly = (
+        "transform(sequence(0, 4), i -> named_struct("
+        "'x', cx + r * cos(radians(90.0D + i * 72.0D)), "
+        "'y', cy + r * sin(radians(90.0D + i * 72.0D))))"
+    )
+    df = (
+        nat.withColumn("cx", F.lit(-74.3) + (F.col("k") % 5) * 0.12 + 0.03)
+        .withColumn("cy", F.lit(40.5) + F.floor(F.col("k") / 5) * 0.1 + 0.02)
+        .withColumn("r", F.lit(0.02) + (F.col("k") % 7) * 0.012)
+        .withColumn("poly", F.expr(poly))
+    )
+    df = df.withColumn(
+        "clipped",
+        F.expr(polyclip.clip_polygon_bbox_spark("poly", xmin, xmax, ymin, ymax)),
+    )
+    # barrier: the downstream select references `clipped`/`poly` five
+    # times; without it projection collapse re-inlines the (nested-
+    # lambda) clip chain per reference and ANALYSIS time, not runtime,
+    # dominates (measured 15 s build → <1 s with the barrier).
+    df = df.select("k", "poly", "clipped").localCheckpoint()
+    return df.select(
+        F.col("k").alias("poly_id"),
+        F.expr("size(clipped)").alias("n_vert_clip"),
+        F.round(F.expr(polyclip.shoelace_area_spark("poly")), 9).alias("area_orig"),
+        F.round(F.expr(polyclip.shoelace_area_spark("clipped")), 9).alias("area_clip"),
+        F.round(
+            F.expr(polyclip.shoelace_area_spark("clipped"))
+            / F.expr(polyclip.shoelace_area_spark("poly")),
+            6,
+        ).alias("clip_share"),
+    ).orderBy("poly_id")
+
+
+def _sql_zonal() -> str:
+    xmin = "(-74.3 + gx * 0.1)"
+    xmax = "(-74.3 + (gx + 1) * 0.1)"
+    ymin = "(40.5 + gy * 0.1)"
+    ymax = "(40.5 + (gy + 1) * 0.1)"
+    passes = polyclip.clip_passes_duckdb(xmin, xmax, ymin, ymax)
+    ctes, cur = [], "poly"
+    for n, p_fn in enumerate(passes):
+        src = "cells" if n == 0 else f"z{n - 1}"
+        # MATERIALIZED: see _sql_polyclip — prevents exponential CTE
+        # inlining across the four chained clip passes.
+        ctes.append(
+            f"z{n} AS MATERIALIZED (SELECT k, gx, gy, {p_fn(cur)} AS p{n} FROM {src})"
+        )
+        cur = f"p{n}"
+    chain = ",\n".join(ctes)
+    last = f"z{len(passes) - 1}"
+    return f"""
+WITH base AS (
+  SELECT n_nationkey::INT AS k,
+         -74.3 + (n_nationkey % 5) * 0.12 + 0.03 AS cx,
+         40.5 + floor(n_nationkey / 5) * 0.1 + 0.02 AS cy,
+         0.02 + (n_nationkey % 7) * 0.012 AS r
+  FROM nation
+),
+rings AS (
+  SELECT k, cx, cy, r,
+         [{{'x': cx + r * cos(radians(90.0 + i * 72.0)),
+            'y': cy + r * sin(radians(90.0 + i * 72.0))}}
+          for i in range(0, 5)] AS poly
+  FROM base
+),
+cells AS (
+  SELECT k, poly, gx.unnest AS gx, gy.unnest AS gy
+  FROM rings,
+       unnest(range(floor((cx - r - (-74.3)) / 0.1)::INT,
+                    floor((cx + r - (-74.3)) / 0.1)::INT + 1)) AS gx(unnest),
+       unnest(range(floor((cy - r - 40.5) / 0.1)::INT,
+                    floor((cy + r - 40.5) / 0.1)::INT + 1)) AS gy(unnest)
+),
+{chain},
+areas AS (
+  SELECT gx, gy, {polyclip.shoelace_area_duckdb(cur)} AS a FROM {last}
+),
+per_cell AS (
+  SELECT gx, gy, count(*)::BIGINT AS n_polys, sum(a) AS covered
+  FROM areas WHERE a > 0 GROUP BY 1, 2
+),
+totals AS (
+  SELECT round(sum(covered), 9) AS total_covered, count(*)::BIGINT AS n_cells
+  FROM per_cell
+)
+SELECT gx, gy, n_polys, round(covered, 9) AS covered_area,
+       total_covered AS total_covered_area, n_cells AS n_cells_touched
+FROM per_cell, totals
+WHERE n_polys >= 2
+ORDER BY gx, gy
+"""
+
+
+@query(_sql_zonal())
 def q_zonal_polygon_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zonal polygon coverage — the overlay JOIN shape on top of the
     clip primitive: each pentagon explodes to its covering 0.1° cells
@@ -16387,8 +16446,6 @@ def q_zonal_polygon_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     covered area for cells touched by ≥ 2 polygons (plus global
     conservation stats in every row — total clipped area must not
     exceed total polygon area)."""
-    from ..functions.polyclip import clip_polygon_bbox_spark, shoelace_area_spark
-
     cell = 0.1
     nat = _t(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("int").alias("k")
@@ -16433,12 +16490,12 @@ def q_zonal_polygon_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     xmax = "(-74.3 + (gx + 1) * 0.1)"
     ymin = "(40.5 + gy * 0.1)"
     ymax = "(40.5 + (gy + 1) * 0.1)"
-    clip = clip_polygon_bbox_spark("poly", xmin, xmax, ymin, ymax)
+    clip = polyclip.clip_polygon_bbox_spark("poly", xmin, xmax, ymin, ymax)
     clipped = cells.withColumn("clipped", F.expr(clip)).select(
         "k", "gx", "gy", "clipped"
     ).localCheckpoint()
     per_cell = (
-        clipped.withColumn("a", F.expr(shoelace_area_spark("clipped")))
+        clipped.withColumn("a", F.expr(polyclip.shoelace_area_spark("clipped")))
         .filter(F.col("a") > 0)
         .groupBy("gx", "gy")
         .agg(
@@ -16463,68 +16520,44 @@ def q_zonal_polygon_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_zonal() -> str:
-    from ..functions.polyclip import clip_passes_duckdb, shoelace_area_duckdb
-
-    xmin = "(-74.3 + gx * 0.1)"
-    xmax = "(-74.3 + (gx + 1) * 0.1)"
-    ymin = "(40.5 + gy * 0.1)"
-    ymax = "(40.5 + (gy + 1) * 0.1)"
-    passes = clip_passes_duckdb(xmin, xmax, ymin, ymax)
-    ctes, cur = [], "poly"
-    for n, p_fn in enumerate(passes):
-        src = "cells" if n == 0 else f"z{n - 1}"
-        # MATERIALIZED: see _sql_polyclip — prevents exponential CTE
-        # inlining across the four chained clip passes.
-        ctes.append(
-            f"z{n} AS MATERIALIZED (SELECT k, gx, gy, {p_fn(cur)} AS p{n} FROM {src})"
-        )
-        cur = f"p{n}"
-    chain = ",\n".join(ctes)
-    last = f"z{len(passes) - 1}"
-    return f"""
-WITH base AS (
-  SELECT n_nationkey::INT AS k,
-         -74.3 + (n_nationkey % 5) * 0.12 + 0.03 AS cx,
-         40.5 + floor(n_nationkey / 5) * 0.1 + 0.02 AS cy,
-         0.02 + (n_nationkey % 7) * 0.012 AS r
-  FROM nation
+_SQL_KM = """
+WITH span AS (SELECT max(ts) AS e FROM events),
+users AS (
+  SELECT user_id, min(ts) AS first_ts, max(ts) AS last_ts FROM events GROUP BY 1
 ),
-rings AS (
-  SELECT k, cx, cy, r,
-         [{{'x': cx + r * cos(radians(90.0 + i * 72.0)),
-            'y': cy + r * sin(radians(90.0 + i * 72.0))}}
-          for i in range(0, 5)] AS poly
-  FROM base
+lab AS (
+  SELECT user_id,
+         floor(epoch(last_ts - first_ts) / 86400)::INT AS dur_days,
+         CASE WHEN epoch(e) - epoch(last_ts) > 2 * 86400 THEN 1 ELSE 0 END AS died
+  FROM users, span
 ),
-cells AS (
-  SELECT k, poly, gx.unnest AS gx, gy.unnest AS gy
-  FROM rings,
-       unnest(range(floor((cx - r - (-74.3)) / 0.1)::INT,
-                    floor((cx + r - (-74.3)) / 0.1)::INT + 1)) AS gx(unnest),
-       unnest(range(floor((cy - r - 40.5) / 0.1)::INT,
-                    floor((cy + r - 40.5) / 0.1)::INT + 1)) AS gy(unnest)
+n AS (SELECT count(*)::BIGINT AS n_total FROM lab),
+days AS (
+  SELECT dur_days, count(*)::BIGINT AS n_ending, sum(died)::BIGINT AS d_i
+  FROM lab GROUP BY 1
 ),
-{chain},
-areas AS (
-  SELECT gx, gy, {shoelace_area_duckdb(cur)} AS a FROM {last}
+km AS (
+  SELECT dur_days, n_ending, d_i,
+         n_total - coalesce(sum(n_ending) OVER (ORDER BY dur_days
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_at_risk
+  FROM days, n
 ),
-per_cell AS (
-  SELECT gx, gy, count(*)::BIGINT AS n_polys, sum(a) AS covered
-  FROM areas WHERE a > 0 GROUP BY 1, 2
-),
-totals AS (
-  SELECT round(sum(covered), 9) AS total_covered, count(*)::BIGINT AS n_cells
-  FROM per_cell
+s AS (
+  SELECT *, exp(sum(CASE WHEN d_i > 0 THEN ln(1.0 - d_i::DOUBLE / n_at_risk)
+                         ELSE 0.0 END)
+                OVER (ORDER BY dur_days
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+            AS survival
+  FROM km
 )
-SELECT gx, gy, n_polys, round(covered, 9) AS covered_area,
-       total_covered AS total_covered_area, n_cells AS n_cells_touched
-FROM per_cell, totals
-WHERE n_polys >= 2
-ORDER BY gx, gy
+SELECT dur_days, n_at_risk::BIGINT AS n_at_risk, d_i AS deaths,
+       (n_ending - d_i)::BIGINT AS censored, round(survival, 6) AS survival
+FROM s
+ORDER BY dur_days
 """
 
 
+@query(_SQL_KM)
 def q_kaplan_meier_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier product-limit survival estimator over user
     lifetimes (first event → last event, right-censored at the corpus
@@ -16584,43 +16617,31 @@ def q_kaplan_meier_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("dur_days")
 
 
-_SQL_KM = """
-WITH span AS (SELECT max(ts) AS e FROM events),
-users AS (
-  SELECT user_id, min(ts) AS first_ts, max(ts) AS last_ts FROM events GROUP BY 1
+_SQL_READABILITY = """
+WITH d AS (
+  SELECT source,
+         len(list_filter(string_split(text, ' '), x -> x <> '')) AS w,
+         length(regexp_replace(text, '[aeiouy]+', '#', 'g'))
+           - length(replace(regexp_replace(text, '[aeiouy]+', '#', 'g'),
+                            '#', '')) AS sy_raw,
+         greatest(1, len(list_filter(string_split_regex(text, '[.!?]+'),
+                                     x -> trim(x) <> ''))) AS se
+  FROM documents
 ),
-lab AS (
-  SELECT user_id,
-         floor(epoch(last_ts - first_ts) / 86400)::INT AS dur_days,
-         CASE WHEN epoch(e) - epoch(last_ts) > 2 * 86400 THEN 1 ELSE 0 END AS died
-  FROM users, span
-),
-n AS (SELECT count(*)::BIGINT AS n_total FROM lab),
-days AS (
-  SELECT dur_days, count(*)::BIGINT AS n_ending, sum(died)::BIGINT AS d_i
-  FROM lab GROUP BY 1
-),
-km AS (
-  SELECT dur_days, n_ending, d_i,
-         n_total - coalesce(sum(n_ending) OVER (ORDER BY dur_days
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_at_risk
-  FROM days, n
-),
-s AS (
-  SELECT *, exp(sum(CASE WHEN d_i > 0 THEN ln(1.0 - d_i::DOUBLE / n_at_risk)
-                         ELSE 0.0 END)
-                OVER (ORDER BY dur_days
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-            AS survival
-  FROM km
+d2 AS (
+  SELECT source, w, sy_raw AS sy, se FROM d WHERE w > 0
 )
-SELECT dur_days, n_at_risk::BIGINT AS n_at_risk, d_i AS deaths,
-       (n_ending - d_i)::BIGINT AS censored, round(survival, 6) AS survival
-FROM s
-ORDER BY dur_days
+SELECT source, count(*)::BIGINT AS n_docs,
+       round(avg(206.835 - 1.015 * (w / se) - 84.6 * (sy / w)), 6) AS avg_flesch,
+       round(avg(0.39 * (w / se) + 11.8 * (sy / w) - 15.59), 6) AS avg_fk_grade,
+       round(avg(sy / w), 6) AS avg_syll_per_word
+FROM d2
+GROUP BY source
+ORDER BY source
 """
 
 
+@query(_SQL_READABILITY)
 def q_readability_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flesch reading-ease / Flesch-Kincaid grade per source — the
     readability member of the text-quality family (beside
@@ -16670,30 +16691,43 @@ def q_readability_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_READABILITY = """
-WITH d AS (
-  SELECT source,
-         len(list_filter(string_split(text, ' '), x -> x <> '')) AS w,
-         length(regexp_replace(text, '[aeiouy]+', '#', 'g'))
-           - length(replace(regexp_replace(text, '[aeiouy]+', '#', 'g'),
-                            '#', '')) AS sy_raw,
-         greatest(1, len(list_filter(string_split_regex(text, '[.!?]+'),
-                                     x -> trim(x) <> ''))) AS se
+_SQL_BM25 = """
+WITH toks AS (
+  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
   FROM documents
 ),
-d2 AS (
-  SELECT source, w, sy_raw AS sy, se FROM d WHERE w > 0
+toks4 AS (SELECT * FROM toks WHERE length(tok) > 3),
+dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks4 GROUP BY doc_id),
+stats AS (SELECT count(*)::BIGINT AS n_corpus, avg(dl) AS avgdl FROM dl),
+df_tbl AS (
+  SELECT tok, count(*)::BIGINT AS df
+  FROM (SELECT DISTINCT doc_id, tok FROM toks4) GROUP BY tok
+),
+qterms AS (SELECT unnest(['spark', 'window', 'merge']) AS tok),
+tf_tbl AS (
+  SELECT t.doc_id, t.tok, count(*)::BIGINT AS tf
+  FROM toks4 t JOIN qterms q ON t.tok = q.tok
+  GROUP BY t.doc_id, t.tok
+),
+scored AS (
+  SELECT t.doc_id,
+         ln((s.n_corpus - d.df + 0.5) / (d.df + 0.5) + 1.0)
+           * (t.tf * 2.2)
+           / (t.tf + 1.2 * (0.25 + 0.75 * l.dl / s.avgdl)) AS w
+  FROM tf_tbl t
+  JOIN df_tbl d ON t.tok = d.tok
+  JOIN dl l ON t.doc_id = l.doc_id
+  CROSS JOIN stats s
 )
-SELECT source, count(*)::BIGINT AS n_docs,
-       round(avg(206.835 - 1.015 * (w / se) - 84.6 * (sy / w)), 6) AS avg_flesch,
-       round(avg(0.39 * (w / se) + 11.8 * (sy / w) - 15.59), 6) AS avg_fk_grade,
-       round(avg(sy / w), 6) AS avg_syll_per_word
-FROM d2
-GROUP BY source
-ORDER BY source
+SELECT doc_id, round(sum(w), 6) AS bm25, count(*)::BIGINT AS n_terms_hit
+FROM scored
+GROUP BY doc_id
+ORDER BY bm25 DESC, doc_id
+LIMIT 10
 """
 
 
+@query(_SQL_BM25)
 def q_bm25_retrieval_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranked retrieval (Robertson-Spärck Jones; k1=1.2, b=0.75)
     over the corpus for a fixed 3-term query — the lexical-retrieval
@@ -16719,7 +16753,7 @@ def q_bm25_retrieval_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     df_tbl = (
         toks.distinct().groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     )
-    qterms = local_frame(spark, [(t,) for t in terms], "tok string")
+    qterms = tb.local_frame(spark, [(t,) for t in terms], "tok string")
     tf_tbl = (
         toks.join(F.broadcast(qterms), "tok")
         .groupBy("doc_id", "tok")
@@ -16758,42 +16792,30 @@ def q_bm25_retrieval_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_BM25 = """
-WITH toks AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-  FROM documents
+_SQL_DP_NOISE = """
+WITH counts AS (
+  SELECT o_orderpriority, count(*)::BIGINT AS true_n
+  FROM orders GROUP BY o_orderpriority
 ),
-toks4 AS (SELECT * FROM toks WHERE length(tok) > 3),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks4 GROUP BY doc_id),
-stats AS (SELECT count(*)::BIGINT AS n_corpus, avg(dl) AS avgdl FROM dl),
-df_tbl AS (
-  SELECT tok, count(*)::BIGINT AS df
-  FROM (SELECT DISTINCT doc_id, tok FROM toks4) GROUP BY tok
+seeded AS (
+  SELECT *,
+         ('0x' || substr(md5('dp#' || o_orderpriority), 1, 13))::BIGINT
+           / 4503599627370496.0 - 0.5 AS u
+  FROM counts
 ),
-qterms AS (SELECT unnest(['spark', 'window', 'merge']) AS tok),
-tf_tbl AS (
-  SELECT t.doc_id, t.tok, count(*)::BIGINT AS tf
-  FROM toks4 t JOIN qterms q ON t.tok = q.tok
-  GROUP BY t.doc_id, t.tok
-),
-scored AS (
-  SELECT t.doc_id,
-         ln((s.n_corpus - d.df + 0.5) / (d.df + 0.5) + 1.0)
-           * (t.tf * 2.2)
-           / (t.tf + 1.2 * (0.25 + 0.75 * l.dl / s.avgdl)) AS w
-  FROM tf_tbl t
-  JOIN df_tbl d ON t.tok = d.tok
-  JOIN dl l ON t.doc_id = l.doc_id
-  CROSS JOIN stats s
+noised AS (
+  SELECT o_orderpriority, true_n, u,
+         -sign(u) * ln(1.0 - 2.0 * abs(u)) AS noise
+  FROM seeded
 )
-SELECT doc_id, round(sum(w), 6) AS bm25, count(*)::BIGINT AS n_terms_hit
-FROM scored
-GROUP BY doc_id
-ORDER BY bm25 DESC, doc_id
-LIMIT 10
+SELECT o_orderpriority, true_n,
+       round(noise, 6) AS laplace_noise,
+       round(true_n + noise, 6) AS released_n
+FROM noised ORDER BY o_orderpriority
 """
 
 
+@query(_SQL_DP_NOISE)
 def q_dp_noised_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Differentially-private release of a count histogram (Laplace
     mechanism, ε=1, sensitivity 1 ⇒ b=1) over order priorities — the
@@ -16831,29 +16853,36 @@ def q_dp_noised_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderpriority")
 
 
-_SQL_DP_NOISE = """
-WITH counts AS (
-  SELECT o_orderpriority, count(*)::BIGINT AS true_n
-  FROM orders GROUP BY o_orderpriority
+_SQL_L_DIVERSITY = """
+WITH seg AS (
+  SELECT c_nationkey,
+         CASE WHEN c_acctbal < 0 THEN 'neg' ELSE 'nonneg' END AS bal_sign,
+         c_mktsegment, count(*)::BIGINT AS seg_n
+  FROM customer GROUP BY 1, 2, 3
 ),
-seeded AS (
-  SELECT *,
-         ('0x' || substr(md5('dp#' || o_orderpriority), 1, 13))::BIGINT
-           / 4503599627370496.0 - 0.5 AS u
-  FROM counts
+classes AS (
+  SELECT c_nationkey, bal_sign,
+         count(*)::BIGINT AS l, sum(seg_n)::BIGINT AS cls,
+         max(seg_n)::BIGINT AS max_seg
+  FROM seg GROUP BY 1, 2
 ),
-noised AS (
-  SELECT o_orderpriority, true_n, u,
-         -sign(u) * ln(1.0 - 2.0 * abs(u)) AS noise
-  FROM seeded
+total AS (
+  SELECT min(l)::BIGINT AS lmin,
+         sum(CASE WHEN l < 3 THEN cls ELSE 0 END)::BIGINT AS fail,
+         sum(cls)::BIGINT AS tot
+  FROM classes
 )
-SELECT o_orderpriority, true_n,
-       round(noise, 6) AS laplace_noise,
-       round(true_n + noise, 6) AS released_n
-FROM noised ORDER BY o_orderpriority
+SELECT l, count(*)::BIGINT AS n_classes, sum(cls)::BIGINT AS n_rows,
+       round(avg(max_seg / cls), 6) AS avg_majority_share,
+       lmin AS l_min, fail AS rows_failing_l3,
+       round(fail / tot, 6) AS fail_share
+FROM classes, total
+GROUP BY l, lmin, fail, tot
+ORDER BY l
 """
 
 
+@query(_SQL_L_DIVERSITY)
 def q_l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """l-diversity audit — the attribute-disclosure companion to
     `k_anonymity_audit`: within each quasi-identifier equivalence
@@ -16907,72 +16936,6 @@ def q_l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_L_DIVERSITY = """
-WITH seg AS (
-  SELECT c_nationkey,
-         CASE WHEN c_acctbal < 0 THEN 'neg' ELSE 'nonneg' END AS bal_sign,
-         c_mktsegment, count(*)::BIGINT AS seg_n
-  FROM customer GROUP BY 1, 2, 3
-),
-classes AS (
-  SELECT c_nationkey, bal_sign,
-         count(*)::BIGINT AS l, sum(seg_n)::BIGINT AS cls,
-         max(seg_n)::BIGINT AS max_seg
-  FROM seg GROUP BY 1, 2
-),
-total AS (
-  SELECT min(l)::BIGINT AS lmin,
-         sum(CASE WHEN l < 3 THEN cls ELSE 0 END)::BIGINT AS fail,
-         sum(cls)::BIGINT AS tot
-  FROM classes
-)
-SELECT l, count(*)::BIGINT AS n_classes, sum(cls)::BIGINT AS n_rows,
-       round(avg(max_seg / cls), 6) AS avg_majority_share,
-       lmin AS l_min, fail AS rows_failing_l3,
-       round(fail / tot, 6) AS fail_share
-FROM classes, total
-GROUP BY l, lmin, fail, tot
-ORDER BY l
-"""
-
-
-def q_scc_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strongly connected components of the directed modular graph
-    (`graph/algorithms.scc_labels`): multi-pivot FORWARD-BACKWARD
-    pivoting (trim → min-id color sweep → within-class backward sweep;
-    Fleischer 2000 / Orzan 2004) — Θ(V)+Θ(E) state, never the closure;
-    labels = min SCC member. Completes the component family: undirected
-    CC (near-dup clusters) and label propagation see only symmetric
-    edges; SCC is the directed notion (dependency cycles, link graphs).
-    Output: per-SCC sizes for the non-singleton components + the
-    singleton census.
-
-    Oracle: DuckDB recursive-CTE closure + mutual-min aggregation — an
-    INDEPENDENT algorithm computing the same labels (the closure-based
-    anchor also exists Spark-side as `scc_labels_closure`, parity-
-    pytested, guarded at 200k pairs). Scale: every FW-BW pass is an
-    edge-keyed hash join or aggregate — the web-scale shape."""
-    from ..graph.algorithms import scc_labels
-
-    labels = scc_labels(_mod_graph_edges(spark))
-    sizes = labels.groupBy("scc_id").agg(F.count(F.lit(1)).alias("n_nodes"))
-    singles = sizes.agg(
-        F.sum(F.when(F.col("n_nodes") == 1, 1).otherwise(0)).alias("_n_single"),
-        F.count(F.lit(1)).alias("_n_sccs"),
-    )
-    return (
-        sizes.filter(F.col("n_nodes") > 1)
-        .crossJoin(F.broadcast(singles))
-        .select(
-            "scc_id",
-            "n_nodes",
-            F.col("_n_single").alias("n_singleton_sccs"),
-            F.col("_n_sccs").alias("n_sccs_total"),
-        )
-        .orderBy(F.desc("n_nodes"), "scc_id")
-    )
-
-
 def _sql_scc() -> str:
     return f"""
 WITH RECURSIVE ids AS (SELECT unnest(range(0, {_MOD_N})) AS i),
@@ -17006,9 +16969,74 @@ ORDER BY n_nodes DESC, scc_id
 """
 
 
+@query(_sql_scc())
+def q_scc_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Strongly connected components of the directed modular graph
+    (`graph/algorithms.scc_labels`): multi-pivot FORWARD-BACKWARD
+    pivoting (trim → min-id color sweep → within-class backward sweep;
+    Fleischer 2000 / Orzan 2004) — Θ(V)+Θ(E) state, never the closure;
+    labels = min SCC member. Completes the component family: undirected
+    CC (near-dup clusters) and label propagation see only symmetric
+    edges; SCC is the directed notion (dependency cycles, link graphs).
+    Output: per-SCC sizes for the non-singleton components + the
+    singleton census.
+
+    Oracle: DuckDB recursive-CTE closure + mutual-min aggregation — an
+    INDEPENDENT algorithm computing the same labels (the closure-based
+    anchor also exists Spark-side as `scc_labels_closure`, parity-
+    pytested, guarded at 200k pairs). Scale: every FW-BW pass is an
+    edge-keyed hash join or aggregate — the web-scale shape."""
+    labels = ga.scc_labels(_mod_graph_edges(spark))
+    sizes = labels.groupBy("scc_id").agg(F.count(F.lit(1)).alias("n_nodes"))
+    singles = sizes.agg(
+        F.sum(F.when(F.col("n_nodes") == 1, 1).otherwise(0)).alias("_n_single"),
+        F.count(F.lit(1)).alias("_n_sccs"),
+    )
+    return (
+        sizes.filter(F.col("n_nodes") > 1)
+        .crossJoin(F.broadcast(singles))
+        .select(
+            "scc_id",
+            "n_nodes",
+            F.col("_n_single").alias("n_singleton_sccs"),
+            F.col("_n_sccs").alias("n_sccs_total"),
+        )
+        .orderBy(F.desc("n_nodes"), "scc_id")
+    )
+
+
 _HOLT_ALPHA, _HOLT_BETA = 0.3, 0.1
 
 
+def _sql_holt() -> str:
+    a, b = _HOLT_ALPHA, _HOLT_BETA
+    return f"""
+WITH RECURSIVE monthly AS (
+  SELECT date_trunc('month', o_orderdate) AS mon,
+         sum(round(o_totalprice * 100)::BIGINT) / 100.0 AS y
+  FROM orders GROUP BY 1
+),
+m AS (SELECT row_number() OVER (ORDER BY mon) AS rn, mon, y FROM monthly),
+h(rn, mon, y, l, b, fit) AS (
+  SELECT rn, mon, y, y, CAST(0.0 AS DOUBLE), CAST(NULL AS DOUBLE) FROM m WHERE rn = 1
+  UNION ALL
+  SELECT m.rn, m.mon, m.y,
+         {a} * m.y + {1 - a} * (h.l + h.b),
+         {b} * (({a} * m.y + {1 - a} * (h.l + h.b)) - h.l) + {1 - b} * h.b,
+         h.l + h.b
+  FROM h JOIN m ON m.rn = h.rn + 1
+),
+sse AS (SELECT sum(round(pow(y - fit, 2))::BIGINT) AS s, count(*)::BIGINT AS n FROM h)
+SELECT mon, round(y, 2) AS revenue, round(l, 4) AS level,
+       round(b, 4) AS trend, round(fit, 4) AS fitted,
+       round(sse.s / sse.n, 2) AS mse_all
+FROM h, sse
+ORDER BY mon DESC
+LIMIT 6
+"""
+
+
+@query(_sql_holt())
 def q_holt_trend_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt double exponential smoothing (level + linear trend,
     α=0.3 β=0.1) over monthly revenue — the trend-aware upgrade of
@@ -17077,34 +17105,40 @@ def q_holt_trend_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_holt() -> str:
-    a, b = _HOLT_ALPHA, _HOLT_BETA
-    return f"""
-WITH RECURSIVE monthly AS (
-  SELECT date_trunc('month', o_orderdate) AS mon,
-         sum(round(o_totalprice * 100)::BIGINT) / 100.0 AS y
-  FROM orders GROUP BY 1
-),
-m AS (SELECT row_number() OVER (ORDER BY mon) AS rn, mon, y FROM monthly),
-h(rn, mon, y, l, b, fit) AS (
-  SELECT rn, mon, y, y, CAST(0.0 AS DOUBLE), CAST(NULL AS DOUBLE) FROM m WHERE rn = 1
-  UNION ALL
-  SELECT m.rn, m.mon, m.y,
-         {a} * m.y + {1 - a} * (h.l + h.b),
-         {b} * (({a} * m.y + {1 - a} * (h.l + h.b)) - h.l) + {1 - b} * h.b,
-         h.l + h.b
-  FROM h JOIN m ON m.rn = h.rn + 1
-),
-sse AS (SELECT sum(round(pow(y - fit, 2))::BIGINT) AS s, count(*)::BIGINT AS n FROM h)
-SELECT mon, round(y, 2) AS revenue, round(l, 4) AS level,
-       round(b, 4) AS trend, round(fit, 4) AS fitted,
-       round(sse.s / sse.n, 2) AS mse_all
-FROM h, sse
-ORDER BY mon DESC
-LIMIT 6
-"""
+def _sql_bpe_encode() -> str:
+    parts = _sql_bpe_train_parts()
+    # apply the 8 trained merges to each document in rank order; each
+    # d{t} references the previous seq once (linear growth) and pulls
+    # its merge pattern from b{t} as scalar subqueries
+    parts.append(
+        "d0 AS (SELECT doc_id, source,"
+        " length(replace(text, ' ', '')) AS n_chars,"
+        " length(text) - length(replace(text, ' ', '')) AS n_space,"
+        " regexp_replace(text, '(.)', '\\1|', 'g') AS seq"
+        " FROM documents)"
+    )
+    for t in range(1, _BPE_N_MERGES + 1):
+        parts.append(
+            f"d{t} AS (SELECT doc_id, source, n_chars, n_space,"
+            f" replace(seq, (SELECT l || '|' || r || '|' FROM b{t}),"
+            f" (SELECT l || r || '|' FROM b{t})) AS seq FROM d{t - 1})"
+        )
+    last = f"d{_BPE_N_MERGES}"
+    ctes = ",\n".join(parts)
+    return f"""WITH {ctes},
+enc AS (
+  SELECT doc_id, source, n_chars,
+         (length(seq) - length(replace(seq, '|', ''))) - n_space AS n_tokens
+  FROM {last}
+)
+SELECT source, count(*)::BIGINT AS n_docs,
+       sum(n_tokens)::BIGINT AS total_tokens,
+       round(avg(n_tokens), 6) AS avg_tokens_per_doc,
+       round(sum(n_chars) / sum(n_tokens), 6) AS chars_per_token
+FROM enc GROUP BY source ORDER BY source"""
 
 
+@query(_sql_bpe_encode())
 def q_bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE ENCODING — applying the trained merge table
     (`bpe_merges_docs`' fit artifact) back to the corpus: each doc's
@@ -17119,10 +17153,8 @@ def q_bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE codegen'd expression chain (8 replaces) over the corpus — no
     joins, no Python. Oracle: replays training (shared unrolled CTE
     chain) AND the 8-replace encode per doc."""
-    from ..operators.bpe import bpe_train, word_vocab
-
     docs = _t(spark, sf_dir, "documents")
-    merges, _ = bpe_train(word_vocab(docs), _BPE_N_MERGES)
+    merges, _ = bpe.bpe_train(bpe.word_vocab(docs), _BPE_N_MERGES)
     # merge patterns as literal COLUMNS (F.replace/F.lit), never
     # interpolated into an expr string: learned symbols can contain
     # quotes AND backslashes, and Spark's SQL parser treats backslash
@@ -17158,39 +17190,18 @@ def q_bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_bpe_encode() -> str:
-    parts = _sql_bpe_train_parts()
-    # apply the 8 trained merges to each document in rank order; each
-    # d{t} references the previous seq once (linear growth) and pulls
-    # its merge pattern from b{t} as scalar subqueries
-    parts.append(
-        "d0 AS (SELECT doc_id, source,"
-        " length(replace(text, ' ', '')) AS n_chars,"
-        " length(text) - length(replace(text, ' ', '')) AS n_space,"
-        " regexp_replace(text, '(.)', '\\1|', 'g') AS seq"
-        " FROM documents)"
-    )
-    for t in range(1, _BPE_N_MERGES + 1):
-        parts.append(
-            f"d{t} AS (SELECT doc_id, source, n_chars, n_space,"
-            f" replace(seq, (SELECT l || '|' || r || '|' FROM b{t}),"
-            f" (SELECT l || r || '|' FROM b{t})) AS seq FROM d{t - 1})"
-        )
-    last = f"d{_BPE_N_MERGES}"
-    ctes = ",\n".join(parts)
-    return f"""WITH {ctes},
-enc AS (
-  SELECT doc_id, source, n_chars,
-         (length(seq) - length(replace(seq, '|', ''))) - n_space AS n_tokens
-  FROM {last}
-)
-SELECT source, count(*)::BIGINT AS n_docs,
-       sum(n_tokens)::BIGINT AS total_tokens,
-       round(avg(n_tokens), 6) AS avg_tokens_per_doc,
-       round(sum(n_chars) / sum(n_tokens), 6) AS chars_per_token
-FROM enc GROUP BY source ORDER BY source"""
+_SQL_ORC_SCAN = """
+SELECT date_trunc('hour', ts) AS hour, event_type,
+       count(*)::BIGINT AS n_events, round(sum(value), 6) AS sum_value
+FROM events
+WHERE event_type <> 'scroll'
+GROUP BY 1, 2
+ORDER BY hour, event_type
+LIMIT 50
+"""
 
 
+@query(_SQL_ORC_SCAN)
 def q_orc_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC round-trip (columnar-format surface beyond parquet/CSV/
     NDJSON/GeoJSON: Spark's built-in ORC source keeps predicate
@@ -17198,8 +17209,6 @@ def q_orc_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     type-range filter, aggregate hourly. The oracle reads the original
     parquet — a match proves the ORC writer/reader round-trips types
     (timestamps, doubles, strings) losslessly."""
-    import tempfile
-
     ev = _t(spark, sf_dir, "events")
     tmp = tempfile.mkdtemp(prefix="orc_scan_")
     path = f"{tmp}/events.orc"
@@ -17217,63 +17226,6 @@ def q_orc_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("hour", "event_type")
         .limit(50)
-    )
-
-
-_SQL_ORC_SCAN = """
-SELECT date_trunc('hour', ts) AS hour, event_type,
-       count(*)::BIGINT AS n_events, round(sum(value), 6) AS sum_value
-FROM events
-WHERE event_type <> 'scroll'
-GROUP BY 1, 2
-ORDER BY hour, event_type
-LIMIT 50
-"""
-
-
-def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard-negative mining for embedding/metric-learning training
-    (the contrastive-data op beside `knn_embeddings`): for each probe
-    vector, the top-3 MOST similar vectors with a DIFFERENT label —
-    "near-misses" that make the strongest negatives (in-batch random
-    negatives are too easy; nearest wrong-class items carry gradient).
-
-    Shape: the probe set (vec_id % 211 = 0, pushed-down scan filter)
-    broadcasts against the partitioned base; cosine is the unrolled
-    codegen'd 64-dim expression; per-probe top-3 via a partitioned
-    window over candidates. Ranks on round(cosine, 6) (the JW lesson:
-    rank at the compared precision, never on raw floats)."""
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    q = emb.filter(F.col("vec_id") % 211 == 0).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("label").alias("probe_label"),
-        F.col("embedding").alias("_qv"),
-    )
-    b = emb.select(
-        F.col("vec_id").alias("negative_id"),
-        F.col("label").alias("neg_label"),
-        F.col("embedding").alias("_bv"),
-    )
-    from ..operators.similarity import _cosine_sql
-
-    pairs = (
-        b.crossJoin(F.broadcast(q))
-        .filter(F.col("neg_label") != F.col("probe_label"))
-        .withColumn("cosine", F.round(F.expr(_cosine_sql("_qv", "_bv", 64)), 6))
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.desc("cosine"), F.asc("negative_id")
-    )
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select(
-            "probe_id", "probe_label", F.col("rk").alias("rank"),
-            "negative_id", F.col("neg_label").alias("negative_label"), "cosine",
-        )
-        .orderBy("probe_id", "rank")
     )
 
 
@@ -17302,41 +17254,24 @@ ORDER BY probe_id, rank
 """
 
 
-def q_hard_negative_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INDEX-DRIVEN hard-negative mining (VERDICT r3 "Next" #4): the
-    same mining task as `hard_negative_mining`, but candidates come
-    from the IVF coarse quantizer (per-label centroid cells, probes
-    expand to their nprobe nearest cells via the integer-cell
-    equi-join) instead of an all-pairs probe broadcast — the shape a
-    100 TB contrastive-data job needs. The exact variant stays as the
-    recall anchor: this query GRADES the index like `ann_recall` does,
-    reporting, for nprobe ∈ {1, 3} plus the exact anchor, the selected
-    pair count, recall@3 vs the exact top-3, and the mean cosine of
-    the selected negatives (how much "hardness" the index keeps).
+@query(_SQL_HARD_NEG)
+def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hard-negative mining for embedding/metric-learning training
+    (the contrastive-data op beside `knn_embeddings`): for each probe
+    vector, the top-3 MOST similar vectors with a DIFFERENT label —
+    "near-misses" that make the strongest negatives (in-batch random
+    negatives are too easy; nearest wrong-class items carry gradient).
 
-    Shape: cell assignment is a map over broadcast centroid literals;
-    the probe is a cell equi-join; the anchor's cross join is bounded
-    by the tiny probe set. Cosines ranked and averaged at 6dp via
-    decimal sums — cross-engine exact."""
-    from ..operators.similarity import (
-        _cosine_sql,
-        hard_negatives_ivf,
-        ivf_cell_base,
-        label_centroids,
-    )
-    from ..operators.spread import spread
-
-    # spread: the exact-anchor cosine and the IVF cell sweep are
-    # interpreted/codegen-dense per-row maps off a 1-task fixture scan
-    # (guide §2.5)
-    emb = spread(_t(spark, sf_dir, "embeddings")).withColumn(
+    Shape: the probe set (vec_id % 211 = 0, pushed-down scan filter)
+    broadcasts against the partitioned base; cosine is the unrolled
+    codegen'd 64-dim expression; per-probe top-3 via a partitioned
+    window over candidates. Ranks on round(cosine, 6) (the JW lesson:
+    rank at the compared precision, never on raw floats)."""
+    emb = _t(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    probes = emb.filter(F.col("vec_id") % 211 == 0)
-    centers = label_centroids(emb, "embedding", "label")
-
-    q = probes.select(
-        F.col("vec_id").alias("query_id"),
+    q = emb.filter(F.col("vec_id") % 211 == 0).select(
+        F.col("vec_id").alias("probe_id"),
         F.col("label").alias("probe_label"),
         F.col("embedding").alias("_qv"),
     )
@@ -17345,56 +17280,24 @@ def q_hard_negative_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("neg_label"),
         F.col("embedding").alias("_bv"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("negative_id")
-    )
-    exact3 = (
+
+    pairs = (
         b.crossJoin(F.broadcast(q))
         .filter(F.col("neg_label") != F.col("probe_label"))
-        .withColumn("cosine", F.round(F.expr(_cosine_sql("_qv", "_bv", 64)), 6))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("query_id", "negative_id", "cosine")
-        .localCheckpoint(eager=False)
+        .withColumn("cosine", F.round(F.expr(sim._cosine_sql("_qv", "_bv", 64)), 6))
     )
-
-    def summary(method: str, sel: DataFrame) -> DataFrame:
-        stats = sel.agg(
-            F.count(F.lit(1)).cast("bigint").alias("sel_pairs"),
-            # 6dp-rounded cosines sum exactly as decimals (order-free)
-            F.round(
-                F.sum(F.col("cosine").cast("decimal(24,6)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("mean_cosine"),
+    w = Window.partitionBy("probe_id").orderBy(
+        F.desc("cosine"), F.asc("negative_id")
+    )
+    return (
+        pairs.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= 3)
+        .select(
+            "probe_id", "probe_label", F.col("rk").alias("rank"),
+            "negative_id", F.col("neg_label").alias("negative_label"), "cosine",
         )
-        hits = sel.select("query_id", "negative_id").join(
-            exact3.select("query_id", "negative_id"), ["query_id", "negative_id"]
-        ).agg(F.count(F.lit(1)).alias("hits"))
-        n_exact = exact3.agg(F.count(F.lit(1)).alias("n_exact"))
-        return (
-            stats.crossJoin(F.broadcast(hits))
-            .crossJoin(F.broadcast(n_exact))
-            .select(
-                F.lit(method).alias("method"),
-                "sel_pairs",
-                F.round(F.col("hits") / F.col("n_exact"), 6).alias("recall_at_3"),
-                "mean_cosine",
-            )
-        )
-
-    out = summary("exact", exact3)
-    # cell-assign the base ONCE behind a lazy checkpoint: both probe
-    # widths reuse it instead of re-running the per-row cell sweep
-    # (guide §1.2; measured 5.3 → 4.7 s median with the spread above)
-    celled = ivf_cell_base(emb, centers).localCheckpoint(eager=False)
-    for nprobe in (1, 3):
-        sel = hard_negatives_ivf(
-            probes, emb, k=3, centers=centers, nprobe=nprobe,
-            celled_base=celled,
-        ).select("query_id", "negative_id", "cosine")
-        out = out.unionByName(summary(f"ivf_nprobe{nprobe}", sel))
-    return out.orderBy("method")
+        .orderBy("probe_id", "rank")
+    )
 
 
 def _sql_hard_neg_ivf() -> str:
@@ -17477,81 +17380,92 @@ ORDER BY method
 """
 
 
-def q_rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid lexical+dense retrieval with Reciprocal Rank Fusion
-    (Cormack 2009, k=60) — the standard RAG first stage: for each of 4
-    probe documents, (a) a LEXICAL ranking of all docs sharing ≥1
-    >3-char token (distinct-overlap count; inverted-index equi-join on
-    the token key, never all-pairs) and (b) a DENSE ranking by 64-dim
-    cosine (probe broadcast); fuse rrf = Σ 1/(60+rank) over both lists
-    (full outer — a doc ranked by only one list gets that one term),
-    top-5 per probe.
+@query(_sql_hard_neg_ivf())
+def q_hard_negative_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """INDEX-DRIVEN hard-negative mining (VERDICT r3 "Next" #4): the
+    same mining task as `hard_negative_mining`, but candidates come
+    from the IVF coarse quantizer (per-label centroid cells, probes
+    expand to their nprobe nearest cells via the integer-cell
+    equi-join) instead of an all-pairs probe broadcast — the shape a
+    100 TB contrastive-data job needs. The exact variant stays as the
+    recall anchor: this query GRADES the index like `ann_recall` does,
+    reporting, for nprobe ∈ {1, 3} plus the exact anchor, the selected
+    pair count, recall@3 vs the exact top-3, and the mean cosine of
+    the selected negatives (how much "hardness" the index keeps).
 
-    Shape: the token join shuffles on the term key (the inverted-index
-    build); the dense side is a 4-probe broadcast; both rank windows
-    partition by probe. Ranks use integers (overlap counts) or
-    round(cosine, 6) — cross-engine stable."""
-    from ..operators.similarity import _cosine_sql
-
-    docs = _t(spark, sf_dir, "documents")
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
+    Shape: cell assignment is a map over broadcast centroid literals;
+    the probe is a cell equi-join; the anchor's cross join is bounded
+    by the tiny probe set. Cosines ranked and averaged at 6dp via
+    decimal sums — cross-engine exact."""
+    # spread: the exact-anchor cosine and the IVF cell sweep are
+    # interpreted/codegen-dense per-row maps off a 1-task fixture scan
+    # (guide §2.5)
+    emb = spr.spread(_t(spark, sf_dir, "embeddings")).withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    probe_ids = [0, 1, 2, 3]
-    toks = docs.select(
-        "doc_id", F.explode(tx.tokens(F.col("text"))).alias("tok")
-    ).filter(F.length("tok") > 3).distinct()
-    ptoks = toks.filter(F.col("doc_id").isin(probe_ids)).select(
-        F.col("doc_id").alias("probe_id"), "tok"
+    probes = emb.filter(F.col("vec_id") % 211 == 0)
+    centers = sim.label_centroids(emb, "embedding", "label")
+
+    q = probes.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("label").alias("probe_label"),
+        F.col("embedding").alias("_qv"),
     )
-    lex = (
-        toks.join(F.broadcast(ptoks), "tok")
-        .filter(F.col("doc_id") != F.col("probe_id"))
-        .groupBy("probe_id", "doc_id")
-        .agg(F.count(F.lit(1)).alias("overlap"))
+    b = emb.select(
+        F.col("vec_id").alias("negative_id"),
+        F.col("label").alias("neg_label"),
+        F.col("embedding").alias("_bv"),
     )
-    wl = Window.partitionBy("probe_id").orderBy(F.desc("overlap"), F.asc("doc_id"))
-    lex_r = lex.withColumn("r_lex", F.row_number().over(wl)).select(
-        "probe_id", "doc_id", "r_lex"
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.asc("negative_id")
     )
-    qv = emb.filter(F.col("vec_id").isin(probe_ids)).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("_qv")
+    exact3 = (
+        b.crossJoin(F.broadcast(q))
+        .filter(F.col("neg_label") != F.col("probe_label"))
+        .withColumn("cosine", F.round(F.expr(sim._cosine_sql("_qv", "_bv", 64)), 6))
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= 3)
+        .select("query_id", "negative_id", "cosine")
+        .localCheckpoint(eager=False)
     )
-    dense = (
-        emb.select(F.col("vec_id").alias("doc_id"), F.col("embedding").alias("_bv"))
-        .crossJoin(F.broadcast(qv))
-        .filter(F.col("doc_id") != F.col("probe_id"))
-        .withColumn("cos6", F.round(F.expr(_cosine_sql("_qv", "_bv", 64)), 6))
-    )
-    wd = Window.partitionBy("probe_id").orderBy(F.desc("cos6"), F.asc("doc_id"))
-    dense_r = dense.withColumn("r_dense", F.row_number().over(wd)).select(
-        "probe_id", "doc_id", "r_dense"
-    )
-    fused = (
-        lex_r.join(dense_r, ["probe_id", "doc_id"], "full_outer")
-        .withColumn(
-            "rrf",
+
+    def summary(method: str, sel: DataFrame) -> DataFrame:
+        stats = sel.agg(
+            F.count(F.lit(1)).cast("bigint").alias("sel_pairs"),
+            # 6dp-rounded cosines sum exactly as decimals (order-free)
             F.round(
-                F.coalesce(1.0 / (60 + F.col("r_lex")), F.lit(0.0))
-                + F.coalesce(1.0 / (60 + F.col("r_dense")), F.lit(0.0)),
+                F.sum(F.col("cosine").cast("decimal(24,6)")).cast("double")
+                / F.count(F.lit(1)),
                 6,
-            ),
+            ).alias("mean_cosine"),
         )
-    )
-    wf = Window.partitionBy("probe_id").orderBy(F.desc("rrf"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rk", F.row_number().over(wf))
-        .filter(F.col("rk") <= 5)
-        .select(
-            "probe_id",
-            F.col("rk").alias("rank"),
-            "doc_id",
-            "rrf",
-            F.coalesce("r_lex", F.lit(-1)).alias("lex_rank"),
-            F.coalesce("r_dense", F.lit(-1)).alias("dense_rank"),
+        hits = sel.select("query_id", "negative_id").join(
+            exact3.select("query_id", "negative_id"), ["query_id", "negative_id"]
+        ).agg(F.count(F.lit(1)).alias("hits"))
+        n_exact = exact3.agg(F.count(F.lit(1)).alias("n_exact"))
+        return (
+            stats.crossJoin(F.broadcast(hits))
+            .crossJoin(F.broadcast(n_exact))
+            .select(
+                F.lit(method).alias("method"),
+                "sel_pairs",
+                F.round(F.col("hits") / F.col("n_exact"), 6).alias("recall_at_3"),
+                "mean_cosine",
+            )
         )
-        .orderBy("probe_id", "rank")
-    )
+
+    out = summary("exact", exact3)
+    # cell-assign the base ONCE behind a lazy checkpoint: both probe
+    # widths reuse it instead of re-running the per-row cell sweep
+    # (guide §1.2; measured 5.3 → 4.7 s median with the spread above)
+    celled = sim.ivf_cell_base(emb, centers).localCheckpoint(eager=False)
+    for nprobe in (1, 3):
+        sel = sim.hard_negatives_ivf(
+            probes, emb, k=3, centers=centers, nprobe=nprobe,
+            celled_base=celled,
+        ).select("query_id", "negative_id", "cosine")
+        out = out.unionByName(summary(f"ivf_nprobe{nprobe}", sel))
+    return out.orderBy("method")
 
 
 _SQL_RRF = """
@@ -17608,6 +17522,112 @@ ORDER BY probe_id, rank
 """
 
 
+@query(_SQL_RRF)
+def q_rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hybrid lexical+dense retrieval with Reciprocal Rank Fusion
+    (Cormack 2009, k=60) — the standard RAG first stage: for each of 4
+    probe documents, (a) a LEXICAL ranking of all docs sharing ≥1
+    >3-char token (distinct-overlap count; inverted-index equi-join on
+    the token key, never all-pairs) and (b) a DENSE ranking by 64-dim
+    cosine (probe broadcast); fuse rrf = Σ 1/(60+rank) over both lists
+    (full outer — a doc ranked by only one list gets that one term),
+    top-5 per probe.
+
+    Shape: the token join shuffles on the term key (the inverted-index
+    build); the dense side is a 4-probe broadcast; both rank windows
+    partition by probe. Ranks use integers (overlap counts) or
+    round(cosine, 6) — cross-engine stable."""
+    docs = _t(spark, sf_dir, "documents")
+    emb = _t(spark, sf_dir, "embeddings").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+    probe_ids = [0, 1, 2, 3]
+    toks = docs.select(
+        "doc_id", F.explode(tx.tokens(F.col("text"))).alias("tok")
+    ).filter(F.length("tok") > 3).distinct()
+    ptoks = toks.filter(F.col("doc_id").isin(probe_ids)).select(
+        F.col("doc_id").alias("probe_id"), "tok"
+    )
+    lex = (
+        toks.join(F.broadcast(ptoks), "tok")
+        .filter(F.col("doc_id") != F.col("probe_id"))
+        .groupBy("probe_id", "doc_id")
+        .agg(F.count(F.lit(1)).alias("overlap"))
+    )
+    wl = Window.partitionBy("probe_id").orderBy(F.desc("overlap"), F.asc("doc_id"))
+    lex_r = lex.withColumn("r_lex", F.row_number().over(wl)).select(
+        "probe_id", "doc_id", "r_lex"
+    )
+    qv = emb.filter(F.col("vec_id").isin(probe_ids)).select(
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("_qv")
+    )
+    dense = (
+        emb.select(F.col("vec_id").alias("doc_id"), F.col("embedding").alias("_bv"))
+        .crossJoin(F.broadcast(qv))
+        .filter(F.col("doc_id") != F.col("probe_id"))
+        .withColumn("cos6", F.round(F.expr(sim._cosine_sql("_qv", "_bv", 64)), 6))
+    )
+    wd = Window.partitionBy("probe_id").orderBy(F.desc("cos6"), F.asc("doc_id"))
+    dense_r = dense.withColumn("r_dense", F.row_number().over(wd)).select(
+        "probe_id", "doc_id", "r_dense"
+    )
+    fused = (
+        lex_r.join(dense_r, ["probe_id", "doc_id"], "full_outer")
+        .withColumn(
+            "rrf",
+            F.round(
+                F.coalesce(1.0 / (60 + F.col("r_lex")), F.lit(0.0))
+                + F.coalesce(1.0 / (60 + F.col("r_dense")), F.lit(0.0)),
+                6,
+            ),
+        )
+    )
+    wf = Window.partitionBy("probe_id").orderBy(F.desc("rrf"), F.asc("doc_id"))
+    return (
+        fused.withColumn("rk", F.row_number().over(wf))
+        .filter(F.col("rk") <= 5)
+        .select(
+            "probe_id",
+            F.col("rk").alias("rank"),
+            "doc_id",
+            "rrf",
+            F.coalesce("r_lex", F.lit(-1)).alias("lex_rank"),
+            F.coalesce("r_dense", F.lit(-1)).alias("dense_rank"),
+        )
+        .orderBy("probe_id", "rank")
+    )
+
+
+_SQL_PPL_BUCKETS = """
+WITH toks AS (
+  SELECT doc_id, source, tok FROM (
+    SELECT doc_id, source,
+           unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+    FROM documents
+  ) WHERE tok <> ''
+),
+vocab AS (SELECT tok, count(*)::BIGINT AS tf FROM toks GROUP BY tok),
+totals AS (SELECT sum(tf)::BIGINT AS n_tokens, count(*)::BIGINT AS v_size FROM vocab),
+scored AS (
+  SELECT t.doc_id, t.source,
+         round(exp(-avg(ln((v.tf + 1.0) / (tt.n_tokens + tt.v_size)))), 6) AS ppl
+  FROM toks t JOIN vocab v USING (tok), totals tt
+  GROUP BY t.doc_id, t.source
+),
+th AS (SELECT round(quantile_cont(ppl, 0.3333333333333333), 6) AS t1,
+              round(quantile_cont(ppl, 0.6666666666666666), 6) AS t2 FROM scored)
+SELECT source,
+       CASE WHEN ppl <= t1 THEN 'head'
+            WHEN ppl <= t2 THEN 'middle' ELSE 'tail' END AS bucket,
+       count(*)::BIGINT AS n_docs,
+       round(sum(ppl::DECIMAL(24,6))::DOUBLE / count(*), 6) AS avg_ppl
+FROM scored, th
+GROUP BY 1, 2
+ORDER BY source, bucket
+"""
+
+
+@query(_SQL_PPL_BUCKETS)
 def q_ppl_bucket_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek 2020 splits Common
     Crawl into head/middle/tail by LM perplexity tercile; the bucket
@@ -17671,35 +17691,62 @@ def q_ppl_bucket_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_PPL_BUCKETS = """
+_SQL_KN_BIGRAM_PPL = """
 WITH toks AS (
-  SELECT doc_id, source, tok FROM (
-    SELECT doc_id, source,
-           unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-    FROM documents
-  ) WHERE tok <> ''
+  SELECT doc_id, source, regexp_split_to_array(trim(text), '\\s+') AS t
+  FROM documents
+  WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 2
 ),
-vocab AS (SELECT tok, count(*)::BIGINT AS tf FROM toks GROUP BY tok),
-totals AS (SELECT sum(tf)::BIGINT AS n_tokens, count(*)::BIGINT AS v_size FROM vocab),
+pos AS (
+  SELECT doc_id, source, t, unnest(range(len(t) - 1)) AS i FROM toks
+),
+bigrams AS (
+  SELECT doc_id, source, t[i + 1] AS v, t[i + 2] AS w FROM pos
+),
+cvw AS (
+  SELECT v, w, count(*)::BIGINT AS c_vw FROM bigrams
+  WHERE doc_id % 7 <> 0 GROUP BY v, w
+),
+cv AS (
+  SELECT v, sum(c_vw)::BIGINT AS c_v, count(*)::BIGINT AS n1p_v
+  FROM cvw GROUP BY v
+),
+n1pw AS (SELECT w, count(*)::BIGINT AS n1p_w FROM cvw GROUP BY w),
+n1all AS (SELECT count(*)::BIGINT AS n1p_all FROM cvw),
 scored AS (
-  SELECT t.doc_id, t.source,
-         round(exp(-avg(ln((v.tf + 1.0) / (tt.n_tokens + tt.v_size)))), 6) AS ppl
-  FROM toks t JOIN vocab v USING (tok), totals tt
-  GROUP BY t.doc_id, t.source
+  SELECT b.doc_id, b.source,
+         CASE WHEN cv.c_v IS NOT NULL THEN
+           (greatest(coalesce(cvw.c_vw, 0)::DOUBLE - 0.75, 0.0)
+            + 0.75 * cv.n1p_v::DOUBLE
+              * coalesce(n1pw.n1p_w::DOUBLE / a.n1p_all::DOUBLE,
+                         1.0 / a.n1p_all::DOUBLE))
+           / cv.c_v::DOUBLE
+         ELSE coalesce(n1pw.n1p_w::DOUBLE / a.n1p_all::DOUBLE,
+                       1.0 / a.n1p_all::DOUBLE)
+         END AS p,
+         CASE WHEN cvw.c_vw IS NULL THEN 1 ELSE 0 END AS unseen
+  FROM bigrams b
+  LEFT JOIN cvw ON cvw.v = b.v AND cvw.w = b.w
+  LEFT JOIN cv ON cv.v = b.v
+  LEFT JOIN n1pw ON n1pw.w = b.w
+  CROSS JOIN n1all a
+  WHERE b.doc_id % 7 = 0
 ),
-th AS (SELECT round(quantile_cont(ppl, 0.3333333333333333), 6) AS t1,
-              round(quantile_cont(ppl, 0.6666666666666666), 6) AS t2 FROM scored)
-SELECT source,
-       CASE WHEN ppl <= t1 THEN 'head'
-            WHEN ppl <= t2 THEN 'middle' ELSE 'tail' END AS bucket,
-       count(*)::BIGINT AS n_docs,
-       round(sum(ppl::DECIMAL(24,6))::DOUBLE / count(*), 6) AS avg_ppl
-FROM scored, th
-GROUP BY 1, 2
-ORDER BY source, bucket
+per_doc AS (
+  SELECT doc_id, source,
+         round(exp(-(sum(round(ln(p), 6)::DECIMAL(24,6))::DOUBLE / count(*))), 6)
+           AS ppl,
+         count(*)::BIGINT AS nb, sum(unseen)::BIGINT AS n_unseen
+  FROM scored GROUP BY doc_id, source
+)
+SELECT source, count(*)::BIGINT AS n_docs,
+       round(sum(ppl::DECIMAL(24,6))::DOUBLE / count(*), 6) AS avg_ppl,
+       round(sum(n_unseen)::DOUBLE / sum(nb)::DOUBLE, 6) AS unseen_share
+FROM per_doc GROUP BY source ORDER BY source
 """
 
 
+@query(_SQL_KN_BIGRAM_PPL)
 def q_kn_bigram_ppl_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated Kneser-Ney BIGRAM language-model perplexity — the
     honest scaled-down of CCNet's 5-gram KenLM quality scorer (the
@@ -17796,61 +17843,54 @@ def q_kn_bigram_ppl_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_KN_BIGRAM_PPL = """
-WITH toks AS (
+_SQL_GOPHER_REPETITION = """
+WITH docs AS (
   SELECT doc_id, source, regexp_split_to_array(trim(text), '\\s+') AS t
   FROM documents
-  WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 2
+  WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 5
 ),
-pos AS (
-  SELECT doc_id, source, t, unnest(range(len(t) - 1)) AS i FROM toks
+base AS (
+  SELECT doc_id, source,
+         list_sum(list_transform(t, w -> length(w)))::BIGINT AS char_total
+  FROM docs
 ),
-bigrams AS (
-  SELECT doc_id, source, t[i + 1] AS v, t[i + 2] AS w FROM pos
+g2pos AS (SELECT doc_id, t, unnest(range(len(t) - 1)) AS i FROM docs),
+g2 AS (
+  SELECT doc_id, array_to_string(t[i + 1 : i + 2], ' ') AS g, count(*) AS c
+  FROM g2pos GROUP BY doc_id, g
 ),
-cvw AS (
-  SELECT v, w, count(*)::BIGINT AS c_vw FROM bigrams
-  WHERE doc_id % 7 <> 0 GROUP BY v, w
+top2 AS (
+  SELECT doc_id,
+         max_by(c * (length(g) - 1), c * 100000 + (length(g) - 1)) AS top2_chars
+  FROM g2 GROUP BY doc_id
 ),
-cv AS (
-  SELECT v, sum(c_vw)::BIGINT AS c_v, count(*)::BIGINT AS n1p_v
-  FROM cvw GROUP BY v
+g5pos AS (SELECT doc_id, t, unnest(range(len(t) - 4)) AS i FROM docs),
+g5 AS (
+  SELECT doc_id, array_to_string(t[i + 1 : i + 5], ' ') AS g, count(*) AS c
+  FROM g5pos GROUP BY doc_id, g
 ),
-n1pw AS (SELECT w, count(*)::BIGINT AS n1p_w FROM cvw GROUP BY w),
-n1all AS (SELECT count(*)::BIGINT AS n1p_all FROM cvw),
-scored AS (
-  SELECT b.doc_id, b.source,
-         CASE WHEN cv.c_v IS NOT NULL THEN
-           (greatest(coalesce(cvw.c_vw, 0)::DOUBLE - 0.75, 0.0)
-            + 0.75 * cv.n1p_v::DOUBLE
-              * coalesce(n1pw.n1p_w::DOUBLE / a.n1p_all::DOUBLE,
-                         1.0 / a.n1p_all::DOUBLE))
-           / cv.c_v::DOUBLE
-         ELSE coalesce(n1pw.n1p_w::DOUBLE / a.n1p_all::DOUBLE,
-                       1.0 / a.n1p_all::DOUBLE)
-         END AS p,
-         CASE WHEN cvw.c_vw IS NULL THEN 1 ELSE 0 END AS unseen
-  FROM bigrams b
-  LEFT JOIN cvw ON cvw.v = b.v AND cvw.w = b.w
-  LEFT JOIN cv ON cv.v = b.v
-  LEFT JOIN n1pw ON n1pw.w = b.w
-  CROSS JOIN n1all a
-  WHERE b.doc_id % 7 = 0
+dup5 AS (
+  SELECT doc_id,
+         sum(CASE WHEN c >= 2 THEN c * (length(g) - 4) ELSE 0 END)::BIGINT
+           AS dup5_chars
+  FROM g5 GROUP BY doc_id
 ),
 per_doc AS (
-  SELECT doc_id, source,
-         round(exp(-(sum(round(ln(p), 6)::DECIMAL(24,6))::DOUBLE / count(*))), 6)
-           AS ppl,
-         count(*)::BIGINT AS nb, sum(unseen)::BIGINT AS n_unseen
-  FROM scored GROUP BY doc_id, source
+  SELECT b.source,
+         round(t2.top2_chars / b.char_total::DOUBLE, 6) AS top2_share,
+         round(d5.dup5_chars / b.char_total::DOUBLE, 6) AS dup5_share
+  FROM base b JOIN top2 t2 USING (doc_id) JOIN dup5 d5 USING (doc_id)
 )
 SELECT source, count(*)::BIGINT AS n_docs,
-       round(sum(ppl::DECIMAL(24,6))::DOUBLE / count(*), 6) AS avg_ppl,
-       round(sum(n_unseen)::DOUBLE / sum(nb)::DOUBLE, 6) AS unseen_share
+       sum(CASE WHEN top2_share > 0.20 THEN 1 ELSE 0 END)::BIGINT AS n_fail_top2,
+       sum(CASE WHEN dup5_share > 0.15 THEN 1 ELSE 0 END)::BIGINT AS n_fail_dup5,
+       round(sum(top2_share::DECIMAL(24,6))::DOUBLE / count(*), 6) AS avg_top2_share,
+       round(sum(dup5_share::DECIMAL(24,6))::DOUBLE / count(*), 6) AS avg_dup5_share
 FROM per_doc GROUP BY source ORDER BY source
 """
 
 
+@query(_SQL_GOPHER_REPETITION)
 def q_gopher_repetition_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher WITHIN-document repetition filters (Rae et al. 2021
     Table A1 — the family `gopher_rules` does NOT cover): per doc
@@ -17933,100 +17973,8 @@ def q_gopher_repetition_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_GOPHER_REPETITION = """
-WITH docs AS (
-  SELECT doc_id, source, regexp_split_to_array(trim(text), '\\s+') AS t
-  FROM documents
-  WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 5
-),
-base AS (
-  SELECT doc_id, source,
-         list_sum(list_transform(t, w -> length(w)))::BIGINT AS char_total
-  FROM docs
-),
-g2pos AS (SELECT doc_id, t, unnest(range(len(t) - 1)) AS i FROM docs),
-g2 AS (
-  SELECT doc_id, array_to_string(t[i + 1 : i + 2], ' ') AS g, count(*) AS c
-  FROM g2pos GROUP BY doc_id, g
-),
-top2 AS (
-  SELECT doc_id,
-         max_by(c * (length(g) - 1), c * 100000 + (length(g) - 1)) AS top2_chars
-  FROM g2 GROUP BY doc_id
-),
-g5pos AS (SELECT doc_id, t, unnest(range(len(t) - 4)) AS i FROM docs),
-g5 AS (
-  SELECT doc_id, array_to_string(t[i + 1 : i + 5], ' ') AS g, count(*) AS c
-  FROM g5pos GROUP BY doc_id, g
-),
-dup5 AS (
-  SELECT doc_id,
-         sum(CASE WHEN c >= 2 THEN c * (length(g) - 4) ELSE 0 END)::BIGINT
-           AS dup5_chars
-  FROM g5 GROUP BY doc_id
-),
-per_doc AS (
-  SELECT b.source,
-         round(t2.top2_chars / b.char_total::DOUBLE, 6) AS top2_share,
-         round(d5.dup5_chars / b.char_total::DOUBLE, 6) AS dup5_share
-  FROM base b JOIN top2 t2 USING (doc_id) JOIN dup5 d5 USING (doc_id)
-)
-SELECT source, count(*)::BIGINT AS n_docs,
-       sum(CASE WHEN top2_share > 0.20 THEN 1 ELSE 0 END)::BIGINT AS n_fail_top2,
-       sum(CASE WHEN dup5_share > 0.15 THEN 1 ELSE 0 END)::BIGINT AS n_fail_dup5,
-       round(sum(top2_share::DECIMAL(24,6))::DOUBLE / count(*), 6) AS avg_top2_share,
-       round(sum(dup5_share::DECIMAL(24,6))::DOUBLE / count(*), 6) AS avg_dup5_share
-FROM per_doc GROUP BY source ORDER BY source
-"""
-
-
-def q_quality_funnel_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-filter FUNNEL ATTRIBUTION (the FineWeb/RefinedWeb
-    operational report): the Gopher rule chain applied in a fixed
-    order, each document attributed to its FIRST failing rule — per
-    source, how many docs and characters die at each stage and what
-    share survives. `gopher_quality_docs` reports marginal per-rule
-    pass counts; this is the ordered-pipeline view an iteration on
-    filter thresholds actually needs (which stage do I loosen?).
-
-    Shape: one projection computing the rule struct, one CASE for the
-    first-fail stage, one census aggregate — single corpus pass, no
-    joins."""
-    from ..functions.text import gopher_rules
-
-    rules = [
-        "word_count_ok", "mean_word_len_ok", "alpha_share_ok",
-        "symbol_ratio_ok", "common_words_ok",
-    ]
-    docs = _t(spark, sf_dir, "documents")
-    # materialize the rule struct behind an exchange barrier before the
-    # first-fail CASE: each CASE arm's field access would otherwise be
-    # re-inlined to the full rule expression (tokenize + HOF folds) by
-    # SimplifyExtractValueOps — the hex_density lesson (4.6 s → ~1 s)
-    g = gopher_rules("text")
-    bound = docs.select(
-        "source", F.length("text").alias("n_chars_t"), g.alias("g")
-    ).repartition(32)
-    gc = F.col("g")
-    stage = F.when(~gc["word_count_ok"], "1_word_count")
-    for i, r in enumerate(rules[1:], start=2):
-        stage = stage.when(~gc[r], f"{i}_{r[:-3]}")
-    stage = stage.otherwise("kept")
-    scored = bound.select("source", "n_chars_t", stage.alias("stage"))
-    return (
-        scored.groupBy("source", "stage")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars_t").alias("n_chars"),
-        )
-        .orderBy("source", "stage")
-    )
-
-
 def _sql_quality_funnel() -> str:
-    from ..functions.text import gopher_rules_sql
-
-    r = gopher_rules_sql("text")
+    r = tx.gopher_rules_sql("text")
     rules = [
         "word_count_ok", "mean_word_len_ok", "alpha_share_ok",
         "symbol_ratio_ok", "common_words_ok",
@@ -18047,6 +17995,83 @@ FROM scored GROUP BY 1, 2 ORDER BY source, stage
 """
 
 
+@query(_sql_quality_funnel())
+def q_quality_funnel_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality-filter FUNNEL ATTRIBUTION (the FineWeb/RefinedWeb
+    operational report): the Gopher rule chain applied in a fixed
+    order, each document attributed to its FIRST failing rule — per
+    source, how many docs and characters die at each stage and what
+    share survives. `gopher_quality_docs` reports marginal per-rule
+    pass counts; this is the ordered-pipeline view an iteration on
+    filter thresholds actually needs (which stage do I loosen?).
+
+    Shape: one projection computing the rule struct, one CASE for the
+    first-fail stage, one census aggregate — single corpus pass, no
+    joins."""
+    rules = [
+        "word_count_ok", "mean_word_len_ok", "alpha_share_ok",
+        "symbol_ratio_ok", "common_words_ok",
+    ]
+    docs = _t(spark, sf_dir, "documents")
+    # materialize the rule struct behind an exchange barrier before the
+    # first-fail CASE: each CASE arm's field access would otherwise be
+    # re-inlined to the full rule expression (tokenize + HOF folds) by
+    # SimplifyExtractValueOps — the hex_density lesson (4.6 s → ~1 s)
+    g = tx.gopher_rules("text")
+    bound = docs.select(
+        "source", F.length("text").alias("n_chars_t"), g.alias("g")
+    ).repartition(32)
+    gc = F.col("g")
+    stage = F.when(~gc["word_count_ok"], "1_word_count")
+    for i, r in enumerate(rules[1:], start=2):
+        stage = stage.when(~gc[r], f"{i}_{r[:-3]}")
+    stage = stage.otherwise("kept")
+    scored = bound.select("source", "n_chars_t", stage.alias("stage"))
+    return (
+        scored.groupBy("source", "stage")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars_t").alias("n_chars"),
+        )
+        .orderBy("source", "stage")
+    )
+
+
+_SQL_DOMAIN_MIX = """
+WITH per_src AS (
+  SELECT source,
+         sum(len(regexp_split_to_array(trim(text), '\\s+')))::BIGINT AS tokens
+  FROM documents GROUP BY source
+),
+weighted AS (
+  SELECT source, tokens,
+         (1 + CAST(regexp_replace(source, '[^0-9]', '', 'g') AS INT) % 3)::DOUBLE AS w_raw
+  FROM per_src
+),
+tot AS (SELECT sum(tokens)::BIGINT AS tok_total, sum(w_raw) AS w_total FROM weighted),
+a AS (
+  SELECT w.*, w.w_raw / t.w_total AS weight, t.tok_total / 2.0 AS budget,
+         least(1.0, (t.tok_total / 2.0) * (w.w_raw / t.w_total) / w.tokens) AS rate0
+  FROM weighted w, tot t
+),
+redis AS (
+  SELECT sum(CASE WHEN rate0 >= 1.0 THEN budget * weight - tokens ELSE 0.0 END) AS leftover,
+         sum(CASE WHEN rate0 < 1.0 THEN w_raw ELSE 0.0 END) AS w_unsat
+  FROM a
+)
+SELECT source, tokens, round(weight, 6) AS weight,
+       round(CASE WHEN rate0 >= 1.0 THEN 1.0
+                  ELSE least(1.0, rate0 + r.leftover * (w_raw / r.w_unsat) / tokens)
+             END, 6) AS rate,
+       CAST(floor(round(CASE WHEN rate0 >= 1.0 THEN 1.0
+                             ELSE least(1.0, rate0 + r.leftover * (w_raw / r.w_unsat) / tokens)
+                        END, 6) * tokens) AS BIGINT) AS alloc_tokens
+FROM a, redis r
+ORDER BY source
+"""
+
+
+@query(_SQL_DOMAIN_MIX)
 def q_domain_mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-mix token budgeting (the DoReMi/The-Pile static
     mixture-weight planning step): given per-source target weights
@@ -18117,40 +18142,31 @@ def q_domain_mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
-_SQL_DOMAIN_MIX = """
+_SQL_TEMPERATURE_MIX = """
 WITH per_src AS (
   SELECT source,
-         sum(len(regexp_split_to_array(trim(text), '\\s+')))::BIGINT AS tokens
+         sum(len(regexp_split_to_array(trim(text), '\\s+')))::BIGINT AS n_tokens
   FROM documents GROUP BY source
 ),
-weighted AS (
-  SELECT source, tokens,
-         (1 + CAST(regexp_replace(source, '[^0-9]', '', 'g') AS INT) % 3)::DOUBLE AS w_raw
+sq AS (
+  SELECT source, n_tokens,
+         round(sqrt(n_tokens::DOUBLE), 6)::DECIMAL(24,6) AS sq
   FROM per_src
 ),
-tot AS (SELECT sum(tokens)::BIGINT AS tok_total, sum(w_raw) AS w_total FROM weighted),
-a AS (
-  SELECT w.*, w.w_raw / t.w_total AS weight, t.tok_total / 2.0 AS budget,
-         least(1.0, (t.tok_total / 2.0) * (w.w_raw / t.w_total) / w.tokens) AS rate0
-  FROM weighted w, tot t
-),
-redis AS (
-  SELECT sum(CASE WHEN rate0 >= 1.0 THEN budget * weight - tokens ELSE 0.0 END) AS leftover,
-         sum(CASE WHEN rate0 < 1.0 THEN w_raw ELSE 0.0 END) AS w_unsat
-  FROM a
-)
-SELECT source, tokens, round(weight, 6) AS weight,
-       round(CASE WHEN rate0 >= 1.0 THEN 1.0
-                  ELSE least(1.0, rate0 + r.leftover * (w_raw / r.w_unsat) / tokens)
-             END, 6) AS rate,
-       CAST(floor(round(CASE WHEN rate0 >= 1.0 THEN 1.0
-                             ELSE least(1.0, rate0 + r.leftover * (w_raw / r.w_unsat) / tokens)
-                        END, 6) * tokens) AS BIGINT) AS alloc_tokens
-FROM a, redis r
+tot AS (SELECT sum(n_tokens) AS tok_total, sum(sq) AS sq_total FROM sq)
+SELECT source, n_tokens,
+       round(n_tokens::DOUBLE / tok_total::DOUBLE, 6) AS nat_share,
+       round(sq::DOUBLE / sq_total::DOUBLE, 6) AS temp_share,
+       CAST(floor(round(sq::DOUBLE / sq_total::DOUBLE, 6) * 1000000.0) AS BIGINT)
+         AS alloc_tokens,
+       round(CAST(floor(round(sq::DOUBLE / sq_total::DOUBLE, 6) * 1000000.0) AS BIGINT)::DOUBLE
+             / n_tokens::DOUBLE, 6) AS epochs
+FROM sq, tot
 ORDER BY source
 """
 
 
+@query(_SQL_TEMPERATURE_MIX)
 def q_temperature_mix_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-based mixture sampling (the mT5/XLM-R low-resource
     upsampling scheme: sample source s with probability ∝ share_s^α,
@@ -18201,30 +18217,61 @@ def q_temperature_mix_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TEMPERATURE_MIX = """
-WITH per_src AS (
+_SQL_SELF_BLEU = r"""
+WITH base AS (
+  SELECT doc_id, source, regexp_split_to_array(trim(text), '\s+') AS toks
+  FROM documents
+),
+b2 AS (SELECT doc_id, source, toks, len(toks) AS n FROM base WHERE len(toks) >= 2),
+pairs AS (
+  SELECT * FROM (
+    SELECT doc_id AS pair_id, source, toks AS ctoks, n AS clen,
+           lead(toks) OVER w AS rtoks, lead(n) OVER w AS rlen
+    FROM b2 WINDOW w AS (PARTITION BY source ORDER BY doc_id)
+  ) WHERE rlen IS NOT NULL
+),
+c1 AS (SELECT pair_id, u.g, count(*)::BIGINT AS c
+       FROM pairs, unnest(ctoks) AS u(g) GROUP BY 1, 2),
+r1 AS (SELECT pair_id, u.g, count(*)::BIGINT AS r
+       FROM pairs, unnest(rtoks) AS u(g) GROUP BY 1, 2),
+c2 AS (SELECT pair_id, u.g, count(*)::BIGINT AS c
+       FROM pairs, unnest(list_transform(range(1, len(ctoks)),
+                                          i -> ctoks[i] || ' ' || ctoks[i+1])) AS u(g)
+       GROUP BY 1, 2),
+r2 AS (SELECT pair_id, u.g, count(*)::BIGINT AS r
+       FROM pairs, unnest(list_transform(range(1, len(rtoks)),
+                                          i -> rtoks[i] || ' ' || rtoks[i+1])) AS u(g)
+       GROUP BY 1, 2),
+s1 AS (SELECT c1.pair_id, sum(least(c1.c, coalesce(r1.r, 0)))::BIGINT AS clip1,
+              sum(c1.c)::BIGINT AS den1
+       FROM c1 LEFT JOIN r1 USING (pair_id, g) GROUP BY 1),
+s2 AS (SELECT c2.pair_id, sum(least(c2.c, coalesce(r2.r, 0)))::BIGINT AS clip2,
+              sum(c2.c)::BIGINT AS den2
+       FROM c2 LEFT JOIN r2 USING (pair_id, g) GROUP BY 1),
+m AS (
+  SELECT p.source,
+         round(clip1 / den1::DOUBLE, 6) AS p1,
+         round(clip2 / den2::DOUBLE, 6) AS p2,
+         round(least(1.0, exp(1.0 - rlen / clen::DOUBLE)), 6) AS bp,
+         round(clip1 / rlen::DOUBLE, 6) AS r1m
+  FROM pairs p JOIN s1 USING (pair_id) JOIN s2 USING (pair_id)
+),
+m2 AS (
   SELECT source,
-         sum(len(regexp_split_to_array(trim(text), '\\s+')))::BIGINT AS n_tokens
-  FROM documents GROUP BY source
-),
-sq AS (
-  SELECT source, n_tokens,
-         round(sqrt(n_tokens::DOUBLE), 6)::DECIMAL(24,6) AS sq
-  FROM per_src
-),
-tot AS (SELECT sum(n_tokens) AS tok_total, sum(sq) AS sq_total FROM sq)
-SELECT source, n_tokens,
-       round(n_tokens::DOUBLE / tok_total::DOUBLE, 6) AS nat_share,
-       round(sq::DOUBLE / sq_total::DOUBLE, 6) AS temp_share,
-       CAST(floor(round(sq::DOUBLE / sq_total::DOUBLE, 6) * 1000000.0) AS BIGINT)
-         AS alloc_tokens,
-       round(CAST(floor(round(sq::DOUBLE / sq_total::DOUBLE, 6) * 1000000.0) AS BIGINT)::DOUBLE
-             / n_tokens::DOUBLE, 6) AS epochs
-FROM sq, tot
-ORDER BY source
+         round(CASE WHEN p1 > 0 AND p2 > 0 THEN bp * sqrt(p1 * p2)
+                    ELSE 0.0 END, 6) AS bleu2,
+         round(CASE WHEN p1 + r1m > 0 THEN 2.0 * p1 * r1m / (p1 + r1m)
+                    ELSE 0.0 END, 6) AS rouge1_f
+  FROM m
+)
+SELECT source, count(*)::BIGINT AS n_pairs,
+       round(sum(bleu2::DECIMAL(24,6))::DOUBLE / count(*), 6) AS mean_self_bleu2,
+       round(sum(rouge1_f::DECIMAL(24,6))::DOUBLE / count(*), 6) AS mean_rouge1_f
+FROM m2 GROUP BY source ORDER BY source
 """
 
 
+@query(_SQL_SELF_BLEU)
 def q_self_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus DIVERSITY via self-BLEU (Zhu 2018, Texygen: high
     self-BLEU = the corpus repeats itself — a generation/curation
@@ -18349,60 +18396,47 @@ def q_self_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SELF_BLEU = r"""
-WITH base AS (
-  SELECT doc_id, source, regexp_split_to_array(trim(text), '\s+') AS toks
-  FROM documents
+_SQL_ZIPF = r"""
+WITH tf AS (
+  SELECT source, tok, count(*)::BIGINT AS freq
+  FROM (
+    SELECT source, unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
+    FROM documents
+  ) WHERE tok <> '' GROUP BY 1, 2
 ),
-b2 AS (SELECT doc_id, source, toks, len(toks) AS n FROM base WHERE len(toks) >= 2),
-pairs AS (
-  SELECT * FROM (
-    SELECT doc_id AS pair_id, source, toks AS ctoks, n AS clen,
-           lead(toks) OVER w AS rtoks, lead(n) OVER w AS rlen
-    FROM b2 WINDOW w AS (PARTITION BY source ORDER BY doc_id)
-  ) WHERE rlen IS NOT NULL
+totals AS (
+  SELECT source, count(*)::BIGINT AS vocab, sum(freq)::BIGINT AS tokens_total
+  FROM tf GROUP BY source
 ),
-c1 AS (SELECT pair_id, u.g, count(*)::BIGINT AS c
-       FROM pairs, unnest(ctoks) AS u(g) GROUP BY 1, 2),
-r1 AS (SELECT pair_id, u.g, count(*)::BIGINT AS r
-       FROM pairs, unnest(rtoks) AS u(g) GROUP BY 1, 2),
-c2 AS (SELECT pair_id, u.g, count(*)::BIGINT AS c
-       FROM pairs, unnest(list_transform(range(1, len(ctoks)),
-                                          i -> ctoks[i] || ' ' || ctoks[i+1])) AS u(g)
-       GROUP BY 1, 2),
-r2 AS (SELECT pair_id, u.g, count(*)::BIGINT AS r
-       FROM pairs, unnest(list_transform(range(1, len(rtoks)),
-                                          i -> rtoks[i] || ' ' || rtoks[i+1])) AS u(g)
-       GROUP BY 1, 2),
-s1 AS (SELECT c1.pair_id, sum(least(c1.c, coalesce(r1.r, 0)))::BIGINT AS clip1,
-              sum(c1.c)::BIGINT AS den1
-       FROM c1 LEFT JOIN r1 USING (pair_id, g) GROUP BY 1),
-s2 AS (SELECT c2.pair_id, sum(least(c2.c, coalesce(r2.r, 0)))::BIGINT AS clip2,
-              sum(c2.c)::BIGINT AS den2
-       FROM c2 LEFT JOIN r2 USING (pair_id, g) GROUP BY 1),
-m AS (
-  SELECT p.source,
-         round(clip1 / den1::DOUBLE, 6) AS p1,
-         round(clip2 / den2::DOUBLE, 6) AS p2,
-         round(least(1.0, exp(1.0 - rlen / clen::DOUBLE)), 6) AS bp,
-         round(clip1 / rlen::DOUBLE, 6) AS r1m
-  FROM pairs p JOIN s1 USING (pair_id) JOIN s2 USING (pair_id)
+ranked AS (
+  SELECT source, row_number() OVER (PARTITION BY source
+           ORDER BY freq DESC, tok ASC) AS rnk, freq
+  FROM tf QUALIFY rnk <= 100
 ),
-m2 AS (
+xy AS (
   SELECT source,
-         round(CASE WHEN p1 > 0 AND p2 > 0 THEN bp * sqrt(p1 * p2)
-                    ELSE 0.0 END, 6) AS bleu2,
-         round(CASE WHEN p1 + r1m > 0 THEN 2.0 * p1 * r1m / (p1 + r1m)
-                    ELSE 0.0 END, 6) AS rouge1_f
-  FROM m
+         round(ln(rnk), 9)::DECIMAL(20,9) AS x,
+         round(ln(freq), 9)::DECIMAL(20,9) AS y,
+         round(round(ln(rnk), 9) * round(ln(freq), 9), 9)::DECIMAL(20,9) AS xy,
+         round(round(ln(rnk), 9) * round(ln(rnk), 9), 9)::DECIMAL(20,9) AS xx
+  FROM ranked
+),
+fit AS (
+  SELECT source, count(*)::BIGINT AS n, sum(x) AS sx, sum(y) AS sy,
+         sum(xy) AS sxy, sum(xx) AS sxx
+  FROM xy GROUP BY source
 )
-SELECT source, count(*)::BIGINT AS n_pairs,
-       round(sum(bleu2::DECIMAL(24,6))::DOUBLE / count(*), 6) AS mean_self_bleu2,
-       round(sum(rouge1_f::DECIMAL(24,6))::DOUBLE / count(*), 6) AS mean_rouge1_f
-FROM m2 GROUP BY source ORDER BY source
+SELECT f.source, t.vocab, t.tokens_total,
+       round(t.vocab / t.tokens_total::DOUBLE, 6) AS ttr,
+       round((f.n * f.sxy::DOUBLE - f.sx::DOUBLE * f.sy::DOUBLE)
+             / (f.n * f.sxx::DOUBLE - f.sx::DOUBLE * f.sx::DOUBLE), 6)
+         AS zipf_slope
+FROM fit f JOIN totals t USING (source)
+ORDER BY source
 """
 
 
+@query(_SQL_ZIPF)
 def q_zipf_slope_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-health Zipf diagnostics per source (the Gopher paper
     reports rank-frequency slope as a quality signal): least-squares
@@ -18491,46 +18525,25 @@ def q_zipf_slope_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_ZIPF = r"""
-WITH tf AS (
-  SELECT source, tok, count(*)::BIGINT AS freq
-  FROM (
-    SELECT source, unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-    FROM documents
-  ) WHERE tok <> '' GROUP BY 1, 2
-),
-totals AS (
-  SELECT source, count(*)::BIGINT AS vocab, sum(freq)::BIGINT AS tokens_total
-  FROM tf GROUP BY source
-),
-ranked AS (
-  SELECT source, row_number() OVER (PARTITION BY source
-           ORDER BY freq DESC, tok ASC) AS rnk, freq
-  FROM tf QUALIFY rnk <= 100
-),
-xy AS (
-  SELECT source,
-         round(ln(rnk), 9)::DECIMAL(20,9) AS x,
-         round(ln(freq), 9)::DECIMAL(20,9) AS y,
-         round(round(ln(rnk), 9) * round(ln(freq), 9), 9)::DECIMAL(20,9) AS xy,
-         round(round(ln(rnk), 9) * round(ln(rnk), 9), 9)::DECIMAL(20,9) AS xx
-  FROM ranked
-),
-fit AS (
-  SELECT source, count(*)::BIGINT AS n, sum(x) AS sx, sum(y) AS sy,
-         sum(xy) AS sxy, sum(xx) AS sxx
-  FROM xy GROUP BY source
+_SQL_TOKENIZER_FERTILITY = r"""
+WITH t AS (
+  SELECT lang,
+         len(regexp_split_to_array(trim(text), '\s+'))::BIGINT AS ws,
+         len(regexp_split_to_array(
+               trim(regexp_replace(text, '([^a-zA-Z0-9\s])', ' \1 ', 'g')),
+               '\s+'))::BIGINT AS bpe,
+         length(text)::BIGINT AS chars
+  FROM documents
 )
-SELECT f.source, t.vocab, t.tokens_total,
-       round(t.vocab / t.tokens_total::DOUBLE, 6) AS ttr,
-       round((f.n * f.sxy::DOUBLE - f.sx::DOUBLE * f.sy::DOUBLE)
-             / (f.n * f.sxx::DOUBLE - f.sx::DOUBLE * f.sx::DOUBLE), 6)
-         AS zipf_slope
-FROM fit f JOIN totals t USING (source)
-ORDER BY source
+SELECT lang, count(*)::BIGINT AS n_docs, sum(ws)::BIGINT AS words,
+       sum(bpe)::BIGINT AS subword_tokens, sum(chars)::BIGINT AS n_chars,
+       round(sum(bpe) / sum(ws)::DOUBLE, 6) AS fertility,
+       round(sum(chars) / sum(bpe)::DOUBLE, 6) AS chars_per_token
+FROM t GROUP BY lang ORDER BY lang
 """
 
 
+@query(_SQL_TOKENIZER_FERTILITY)
 def q_tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-health report per language (the standard fertility /
     compression diagnostics a multilingual-corpus job reviews before
@@ -18567,24 +18580,40 @@ def q_tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_SQL_TOKENIZER_FERTILITY = r"""
-WITH t AS (
-  SELECT lang,
-         len(regexp_split_to_array(trim(text), '\s+'))::BIGINT AS ws,
-         len(regexp_split_to_array(
-               trim(regexp_replace(text, '([^a-zA-Z0-9\s])', ' \1 ', 'g')),
-               '\s+'))::BIGINT AS bpe,
-         length(text)::BIGINT AS chars
+_SQL_SPLIT_LEAKAGE = f"""
+WITH docs AS (SELECT doc_id, {_CLEAN_SQL} AS ct FROM documents),
+sh AS (
+  SELECT doc_id, {_SHINGLES_SQL} AS shingles
+  FROM (SELECT doc_id, string_split(ct, ' ') AS toks FROM docs)
+),
+pairs AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM sh a, sh b
+  WHERE a.doc_id < b.doc_id
+    AND len(list_intersect(a.shingles, b.shingles))::DOUBLE
+          / len(list_distinct(list_concat(a.shingles, b.shingles))) >= 0.8
+),
+assign AS (
+  SELECT doc_id,
+         CASE WHEN (doc_id * 2654435761) % 20 < 18 THEN 'train'
+              WHEN (doc_id * 2654435761) % 20 = 18 THEN 'val'
+              ELSE 'test' END AS split
   FROM documents
+),
+labeled AS (
+  SELECT least(sa.split, sb.split) AS split_a,
+         greatest(sa.split, sb.split) AS split_b
+  FROM pairs p
+  JOIN assign sa ON sa.doc_id = p.doc_a
+  JOIN assign sb ON sb.doc_id = p.doc_b
 )
-SELECT lang, count(*)::BIGINT AS n_docs, sum(ws)::BIGINT AS words,
-       sum(bpe)::BIGINT AS subword_tokens, sum(chars)::BIGINT AS n_chars,
-       round(sum(bpe) / sum(ws)::DOUBLE, 6) AS fertility,
-       round(sum(chars) / sum(bpe)::DOUBLE, 6) AS chars_per_token
-FROM t GROUP BY lang ORDER BY lang
+SELECT split_a, split_b, count(*)::BIGINT AS n_pairs,
+       split_a <> split_b AS is_leak
+FROM labeled GROUP BY 1, 2 ORDER BY split_a, split_b
 """
 
 
+@query(_SQL_SPLIT_LEAKAGE)
 def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/val/test LEAKAGE AUDIT (the eval-integrity check a
     curation pipeline runs before shipping a split): docs are assigned
@@ -18632,369 +18661,3 @@ def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("is_leak", F.col("split_a") != F.col("split_b"))
         .orderBy("split_a", "split_b")
     )
-
-
-_SQL_SPLIT_LEAKAGE = f"""
-WITH docs AS (SELECT doc_id, {_CLEAN_SQL} AS ct FROM documents),
-sh AS (
-  SELECT doc_id, {_SHINGLES_SQL} AS shingles
-  FROM (SELECT doc_id, string_split(ct, ' ') AS toks FROM docs)
-),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM sh a, sh b
-  WHERE a.doc_id < b.doc_id
-    AND len(list_intersect(a.shingles, b.shingles))::DOUBLE
-          / len(list_distinct(list_concat(a.shingles, b.shingles))) >= 0.8
-),
-assign AS (
-  SELECT doc_id,
-         CASE WHEN (doc_id * 2654435761) % 20 < 18 THEN 'train'
-              WHEN (doc_id * 2654435761) % 20 = 18 THEN 'val'
-              ELSE 'test' END AS split
-  FROM documents
-),
-labeled AS (
-  SELECT least(sa.split, sb.split) AS split_a,
-         greatest(sa.split, sb.split) AS split_b
-  FROM pairs p
-  JOIN assign sa ON sa.doc_id = p.doc_a
-  JOIN assign sb ON sb.doc_id = p.doc_b
-)
-SELECT split_a, split_b, count(*)::BIGINT AS n_pairs,
-       split_a <> split_b AS is_leak
-FROM labeled GROUP BY 1, 2 ORDER BY split_a, split_b
-"""
-
-
-# --------------------------------------------------------------------------
-# Registry
-# --------------------------------------------------------------------------
-
-# name -> (query_fn, oracle_sql or None)
-REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
-    "pricing_summary": (q_pricing_summary, _SQL_PRICING),
-    "part_type_revenue": (q_part_type_revenue, _SQL_PART_TYPE_REVENUE),
-    "top_revenue_customers": (q_top_revenue_customers, _SQL_TOP_REV),
-    "region_nation_rollup": (q_region_nation_rollup, _SQL_REGION_ROLLUP),
-    "customers_with_orders": (q_customers_with_orders, _SQL_SEMI),
-    "customers_without_orders": (q_customers_without_orders, _SQL_ANTI),
-    "orderpriority_value_counts": (q_orderpriority_value_counts, _SQL_VALUE_COUNTS),
-    "missing_census": (q_missing_census, _SQL_MISSING),
-    "histogram_quantity": (q_histogram_quantity, _SQL_HISTOGRAM),
-    "linregress_price_qty": (q_linregress_price_qty, _SQL_LINREGRESS),
-    "percentile_filter_orders": (q_percentile_filter_orders, _SQL_PERCENTILE),
-    "csv_roundtrip_events": (q_csv_roundtrip_events, _SQL_CSV_SCAN),
-    "spatial_extent_by_type": (q_spatial_extent_by_type, _SQL_EXTENT),
-    "hot_cold_grid_cells": (q_hot_cold_grid_cells, _SQL_HOT_COLD),
-    "value_distribution_stats": (q_value_distribution_stats, _SQL_DISTRIBUTION),
-    "union_stack": (q_union_stack, _SQL_UNION),
-    "rank_suppliers": (q_rank_suppliers, _SQL_RANK),
-    "avg_rank_suppliers": (q_avg_rank_suppliers, _SQL_AVG_RANK),
-    "pareto_user_share": (q_pareto_user_share, _SQL_PARETO),
-    "hourly_event_counts": (q_hourly_event_counts, _SQL_HOURLY),
-    "high_density_hours": (q_high_density_hours, _SQL_HIGH_DENSITY),
-    "user_sessions": (q_user_sessions, _SQL_SESSIONS),
-    "session_drilldown": (q_session_drilldown, _SQL_DRILLDOWN),
-    "dow_eventtype_pivot": (q_dow_eventtype_pivot, _SQL_PIVOT),
-    "time_interval_buckets": (q_time_interval_buckets, _SQL_TIME_BUCKETS),
-    "event_value_stats": (q_event_value_stats, _SQL_VALUE_STATS),
-    "json_extract_events": (q_json_extract_events, _SQL_JSON),
-    "geo_grid_density": (q_geo_grid_density, _SQL_GRID),
-    "polygon_points_join": (q_polygon_points_join, _sql_polygon_points()),
-    "haversine_stats": (q_haversine_stats, _SQL_HAVERSINE),
-    "exact_dedup_docs": (q_exact_dedup_docs, _SQL_DEDUP),
-    "minhash_near_dup_docs": (q_minhash_near_dup_docs, _SQL_MINHASH_NEAR_DUP),
-    "lsh_sensitivity_report": (q_lsh_sensitivity_report, _SQL_LSH_SENSITIVITY),
-    "minhash_index_build": (q_minhash_index_build, _SQL_MINHASH_INDEX_BUILD),
-    "minhash_index_upsert": (q_minhash_index_upsert, _SQL_MINHASH_INDEX_UPSERT),
-    "near_dup_probe_stored": (q_near_dup_probe_stored, _SQL_NEAR_DUP_PROBE),
-    "streaming_near_dup_probe": (q_streaming_near_dup_probe, _SQL_NEAR_DUP_PROBE),
-    "near_dup_clusters_docs": (q_near_dup_clusters_docs, _SQL_NEAR_DUP_CLUSTERS),
-    "training_corpus_pipeline": (q_training_corpus_pipeline, _SQL_CORPUS_PIPELINE),
-    "simhash_docs": (q_simhash_docs, _sql_simhash()),
-    "ngram_jaccard_pairs": (q_ngram_jaccard_pairs, _SQL_NGRAM_JACCARD),
-    "doc_fingerprint_dups": (q_doc_fingerprint_dups, _SQL_FINGERPRINT),
-    "embedding_near_dup": (q_embedding_near_dup, _SQL_EMB_NEAR_DUP),
-    "srp_near_dup_pairs": (q_srp_near_dup_pairs, _sql_srp_near_dup()),
-    "srp_near_dup_split": (q_srp_near_dup_split, _sql_srp_near_dup_split()),
-    "pq_codes_embeddings": (q_pq_codes_embeddings, _sql_pq_codes()),
-    "semdedup_embeddings": (q_semdedup_embeddings, _sql_semdedup()),
-    "pq_adc_topk_embeddings": (q_pq_adc_topk_embeddings, _sql_pq_adc()),
-    "srp_topk_embeddings": (q_srp_topk_embeddings, _sql_srp()),
-    "srp_multi_topk_embeddings": (q_srp_multi_topk_embeddings, _sql_srp_multi()),
-    "ivf_topk_embeddings": (q_ivf_topk_embeddings, _SQL_IVF),
-    "ann_recall": (q_ann_recall, _sql_ann_recall()),
-    "ivfpq_recall": (q_ivfpq_recall, _sql_ivfpq_recall()),
-    "token_stats_docs": (q_token_stats_docs, _SQL_TOKENS),
-    "top_keywords_docs": (q_top_keywords_docs, _sql_top_keywords()),
-    "pii_scrub_docs": (q_pii_scrub_docs, _SQL_PII_SCRUB),
-    "lang_id_docs": (q_lang_id_docs, _SQL_LANG),
-    "quality_score_docs": (q_quality_score_docs, _SQL_QUALITY),
-    "gopher_quality_docs": (q_gopher_quality_docs, _sql_gopher_quality()),
-    "dup_ngram_share_docs": (q_dup_ngram_share_docs, _SQL_DUP_NGRAM),
-    "knn_embeddings": (q_knn_embeddings, _SQL_KNN),
-    "knn_embeddings_pandas": (q_knn_embeddings_pandas, _SQL_KNN),
-    "embedding_label_centroids": (q_embedding_label_centroids, _SQL_CENTROIDS),
-    "one_hot_event_type": (q_one_hot_event_type, _SQL_ONE_HOT),
-    "positional_split_stats": (q_positional_split_stats, _SQL_POS_SPLIT),
-    "scaled_value_stats": (q_scaled_value_stats, _SQL_SCALED),
-    "pca_axis_points": (q_pca_axis_points, _SQL_PCA),
-    "voronoi_region_speed": (q_voronoi_region_speed, _sql_voronoi()),
-    "region_speed_joinback": (q_region_speed_joinback, _sql_region_joinback()),
-    "kmeans_event_clusters": (q_kmeans_event_clusters, _SQL_KMEANS_BAND),
-    "gbt_value_metrics": (q_gbt_value_metrics, _SQL_GBT_VALUE_BAND),
-    "kdist_curve_stats": (q_kdist_curve_stats, _SQL_KDIST),
-    "ndjson_scan_docs": (q_ndjson_scan_docs, _SQL_NDJSON_SCAN),
-    "streaming_hourly_counts": (q_streaming_hourly_counts, _SQL_STREAM_HOURLY),
-    "streaming_enriched_counts": (q_streaming_enriched_counts, _sql_stream_enriched()),
-    "streaming_user_sessions": (q_streaming_user_sessions, _SQL_STREAM_SESSIONS),
-    "streaming_dedup_counts": (q_streaming_dedup_counts, _SQL_STREAM_DEDUP),
-    "streaming_user_state": (q_streaming_user_state, _SQL_STREAM_STATE),
-    "streaming_click_purchase": (q_streaming_click_purchase, _SQL_STREAM_CLICK_PURCHASE),
-    "large_order_customers": (q_large_order_customers, _SQL_LARGE_ORDERS),
-    "shipping_priority": (q_shipping_priority, _SQL_SHIPPING_PRIORITY),
-    "asof_last_purchase": (q_asof_last_purchase, _SQL_ASOF),
-    "rollup_revenue": (q_rollup_revenue, _SQL_ROLLUP_REVENUE),
-    "ngram_jaccard_capped": (q_ngram_jaccard_capped, _SQL_NGRAM_CAPPED),
-    "hypertable_rollup": (q_hypertable_rollup, _SQL_HYPERTABLE),
-    "salted_event_type_counts": (q_salted_event_type_counts, _SQL_SALTED),
-    "unpivot_pricing_measures": (q_unpivot_pricing_measures, _SQL_UNPIVOT),
-    "scd2_user_state": (q_scd2_user_state, _SQL_SCD2),
-    "trailing_7day_revenue": (q_trailing_7day_revenue, _SQL_TRAILING),
-    "multimodal_stats": (q_multimodal_stats, _SQL_MULTIMODAL),
-    "multimodal_features": (q_multimodal_features, _sql_multimodal_features()),
-    "png_roundtrip_stats": (q_png_roundtrip_stats, _SQL_PNG_ROUNDTRIP),
-    "jpeg_roundtrip_stats": (q_jpeg_roundtrip_stats, _SQL_JPEG_ROUNDTRIP),
-    "image_phash_near_dup": (q_image_phash_near_dup, _SQL_IMAGE_PHASH),
-    "ivfpq_topk_embeddings": (q_ivfpq_topk_embeddings, _sql_ivfpq()),
-    "ivfpq_index_build": (q_ivfpq_index_build, _sql_ivfpq_build()),
-    "ivfpq_index_upsert": (q_ivfpq_index_upsert, _sql_ivfpq_upsert()),
-    "ivfpq_probe_stored": (q_ivfpq_probe_stored, _sql_ivfpq()),
-    "flac_roundtrip_stats": (q_flac_roundtrip_stats, _SQL_FLAC_ROUNDTRIP),
-    "mp4_sample_manifest": (q_mp4_sample_manifest, _SQL_MP4_MANIFEST),
-    "mjpeg_mp4_frame_stats": (q_mjpeg_mp4_frame_stats, _SQL_MJPEG_MP4),
-    "h264_ipcm_roundtrip_stats": (q_h264_ipcm_roundtrip_stats, _SQL_H264_IPCM),
-    "webp_roundtrip_stats": (q_webp_roundtrip_stats, _SQL_WEBP_ROUNDTRIP),
-    "mp3_frame_census": (q_mp3_frame_census, _SQL_MP3_CENSUS),
-    "wav_roundtrip_stats": (q_wav_roundtrip_stats, _SQL_WAV_ROUNDTRIP),
-    "gif_roundtrip_stats": (q_gif_roundtrip_stats, _SQL_GIF_ROUNDTRIP),
-    "hard_negative_mining": (q_hard_negative_mining, _SQL_HARD_NEG),
-    "hard_negative_mining_ivf": (q_hard_negative_mining_ivf, _sql_hard_neg_ivf()),
-    "rrf_hybrid_retrieval": (q_rrf_hybrid_retrieval, _SQL_RRF),
-    "ppl_bucket_census": (q_ppl_bucket_census, _SQL_PPL_BUCKETS),
-    "kn_bigram_ppl_docs": (q_kn_bigram_ppl_docs, _SQL_KN_BIGRAM_PPL),
-    "gopher_repetition_docs": (q_gopher_repetition_docs, _SQL_GOPHER_REPETITION),
-    "quality_funnel_docs": (q_quality_funnel_docs, _sql_quality_funnel()),
-    "domain_mix_budget": (q_domain_mix_budget, _SQL_DOMAIN_MIX),
-    "temperature_mix_docs": (q_temperature_mix_docs, _SQL_TEMPERATURE_MIX),
-    "self_bleu_pairs": (q_self_bleu_pairs, _SQL_SELF_BLEU),
-    "zipf_slope_words": (q_zipf_slope_words, _SQL_ZIPF),
-    "tokenizer_fertility_by_lang": (q_tokenizer_fertility_by_lang, _SQL_TOKENIZER_FERTILITY),
-    "split_leakage_audit": (q_split_leakage_audit, _SQL_SPLIT_LEAKAGE),
-    "raster_sample_stats": (q_raster_sample_stats, _sql_raster_stats()),
-    "raster_tiled_stats": (q_raster_tiled_stats, _sql_raster_stats()),
-    "road_density_grid": (q_road_density_grid, _SQL_ROAD_DENSITY),
-    "isochrone_poi_access": (q_isochrone_poi_access, _SQL_ISOCHRONE),
-    "sentiment_docs": (q_sentiment_docs, _sql_sentiment_docs()),
-    "sentiment_pattern_docs": (q_sentiment_pattern_docs, _sql_sentiment_pattern_docs()),
-    "lab4_sentiment_golden": (q_lab4_sentiment_golden, _sql_lab4_golden()),
-    "sentiment_source_ranks": (q_sentiment_source_ranks, _sql_sentiment_ranks()),
-    "lab4_sentiment_linregress": (q_lab4_sentiment_linregress, _sql_lab4_linregress()),
-    "lisa_moran_events": (q_lisa_moran_events, _SQL_LISA),
-    "graph_degree": (q_graph_degree, _SQL_DEGREE),
-    "node_degree_bands": (q_node_degree_bands, _SQL_DEGREE_BANDS),
-    "peak_hour_by_type": (q_peak_hour_by_type, _SQL_PEAK_HOUR),
-    "summary_stats_lineitem": (q_summary_stats_lineitem, _SQL_SUMMARY),
-    "knn_grid_points": (q_knn_grid_points, _SQL_KNN_GRID),
-    "dbscan_event_clusters": (q_dbscan_event_clusters, _sql_dbscan()),
-    "utm_project_events": (q_utm_project_events, _SQL_UTM_PROJECT),
-    "web_mercator_tiles": (q_web_mercator_tiles, _sql_web_mercator_tiles()),
-    "geocode_places": (q_geocode_places, _sql_geocode_places()),
-    "hex_density_events": (q_hex_density_events, _sql_hex_density()),
-    "snap_to_road": (q_snap_to_road, _sql_snap_to_road()),
-    "lloyd_kmeans_clusters": (q_lloyd_kmeans_clusters, _sql_lloyd()),
-    "sssp_grid": (q_sssp_grid, _SQL_SSSP_GRID),
-    "shortest_path_route_grid": (q_shortest_path_route_grid, _SQL_ROUTE_GRID),
-    "network_summary": (q_network_summary, _SQL_NETWORK_SUMMARY),
-    "bias_audit_summary": (q_bias_audit_summary, _SQL_BIAS_AUDIT),
-    "lab1_noise_pipeline": (q_lab1_noise_pipeline, _SQL_LAB1),
-    "lab2_taxi_features": (q_lab2_taxi_features, _SQL_LAB2),
-    "lab2_pipeline": (q_lab2_pipeline, _sql_lab2_pipeline()),
-    "gbt_band_lab2": (q_gbt_band_lab2, _SQL_GBT_BAND),
-    "param_search_band": (q_param_search_band, _SQL_PARAM_SEARCH_BAND),
-    "importances_band": (q_importances_band, _SQL_IMPORTANCES_BAND),
-    "lisa_perm_band": (q_lisa_perm_band, _SQL_LISA_PERM_BAND),
-    "lisa_perm_band_dist": (q_lisa_perm_band_dist, _SQL_LISA_PERM_BAND_DIST),
-    "kde_grid_density": (q_kde_grid_density, _SQL_KDE),
-    "status_remap_counts": (q_status_remap_counts, _SQL_REMAP),
-    "custdist_orders": (q_custdist_orders, _SQL_CUSTDIST),
-    "small_quantity_revenue": (q_small_quantity_revenue, _SQL_SMALL_QTY),
-    "exists_priority_orders": (q_exists_priority_orders, _SQL_EXISTS_PRIORITY),
-    "latest_event_per_user": (q_latest_event_per_user, _SQL_LATEST_EVENT),
-    "triangle_counts_mod": (q_triangle_counts_mod, _SQL_TRIANGLES),
-    "pagerank_mod": (q_pagerank_mod, _sql_pagerank()),
-    "stratified_sample_docs": (q_stratified_sample_docs, _SQL_STRATIFIED),
-    "pack_sequences_docs": (q_pack_sequences_docs, _SQL_PACK),
-    "cube_priority_status": (q_cube_priority_status, _SQL_CUBE),
-    "incremental_hourly_merge": (q_incremental_hourly_merge, _SQL_INCREMENTAL),
-    "interleave_corpus_docs": (q_interleave_corpus_docs, _SQL_INTERLEAVE),
-    "decontaminate_docs": (q_decontaminate_docs, _SQL_DECONTAMINATE),
-    "shuffled_export_manifest": (q_shuffled_export_manifest, _SQL_SHUFFLED_EXPORT),
-    "top_customers_per_nation": (q_top_customers_per_nation, _SQL_TOP_PER_NATION),
-    "variant_extract_events": (q_variant_extract_events, _SQL_VARIANT),
-    "chunk_docs_manifest": (q_chunk_docs_manifest, _SQL_CHUNKS),
-    "local_supplier_volume": (q_local_supplier_volume, _SQL_LOCAL_SUPPLIER_VOLUME),
-    "volume_shipping_pairs": (q_volume_shipping_pairs, _SQL_VOLUME_SHIPPING),
-    "market_share_by_year": (q_market_share_by_year, _SQL_MARKET_SHARE),
-    "product_profit_by_nation": (q_product_profit_by_nation, _SQL_PRODUCT_PROFIT),
-    "returned_items_topk": (q_returned_items_topk, _SQL_RETURNED_ITEMS),
-    "top_supplier_revenue": (q_top_supplier_revenue, _SQL_TOP_SUPPLIER),
-    "disjunctive_pred_revenue": (q_disjunctive_pred_revenue, _SQL_DISJUNCTIVE),
-    "global_sales_opportunity": (q_global_sales_opportunity, _SQL_GLOBAL_SALES_OPP),
-    "window_suite_orders": (q_window_suite_orders, _SQL_WINDOW_SUITE),
-    "kmv_distinct_sketch": (q_kmv_distinct_sketch, _SQL_KMV_SKETCH),
-    "streaming_click_nopurchase": (
-        q_streaming_click_nopurchase,
-        _SQL_STREAM_CLICK_NOPURCHASE,
-    ),
-    "auc_rank_metric": (q_auc_rank_metric, _SQL_AUC_RANK),
-    "tfidf_top_terms": (q_tfidf_top_terms, _SQL_TFIDF),
-    "logreg_return_metrics": (q_logreg_return_metrics, _SQL_LOGREG_BAND),
-    "gap_fill_daily_revenue": (q_gap_fill_daily_revenue, _SQL_GAP_FILL),
-    "funnel_conversion": (q_funnel_conversion, _SQL_FUNNEL),
-    "cohort_retention": (q_cohort_retention, _SQL_COHORT),
-    "forecast_revenue_change": (q_forecast_revenue_change, _SQL_FORECAST),
-    "priority_by_returnflag": (q_priority_by_returnflag, _SQL_PRIORITY_RETURNFLAG),
-    "min_cost_supplier": (q_min_cost_supplier, _SQL_MIN_COST_SUPPLIER),
-    "important_part_value": (q_important_part_value, _SQL_IMPORTANT_PART_VALUE),
-    "supplier_cnt_by_part": (q_supplier_cnt_by_part, _SQL_SUPPLIER_CNT),
-    "excess_stock_suppliers": (q_excess_stock_suppliers, _SQL_EXCESS_STOCK),
-    "late_shipper_suppliers": (q_late_shipper_suppliers, _SQL_LATE_SHIPPERS),
-    "streaming_sliding_counts": (q_streaming_sliding_counts, _SQL_STREAM_SLIDING),
-    "grouped_percentiles": (q_grouped_percentiles, _SQL_GROUPED_PCT),
-    "robust_outlier_stats": (q_robust_outlier_stats, _SQL_ROBUST_STATS),
-    "intersect_customers": (q_intersect_customers, _SQL_INTERSECT),
-    "order_item_arrays": (q_order_item_arrays, _SQL_ORDER_ARRAYS),
-    "skyline_parts": (q_skyline_parts, _SQL_SKYLINE),
-    "repetition_ratio_docs": (q_repetition_ratio_docs, _SQL_REPETITION),
-    "bloom_prune_orders": (q_bloom_prune_orders, _SQL_BLOOM_PRUNE),
-    "rolling_anomaly_days": (q_rolling_anomaly_days, _SQL_ROLLING_ANOMALY),
-    "source_lang_divergence": (q_source_lang_divergence, _SQL_SOURCE_DIVERGENCE),
-    "fuzzy_dup_docs": (q_fuzzy_dup_docs, _SQL_FUZZY_DUP),
-    "streaming_dedup_hourly": (q_streaming_dedup_hourly, _SQL_STREAM_DEDUP_HOURLY),
-    "heavy_hitter_brands": (q_heavy_hitter_brands, _SQL_HEAVY_HITTERS),
-    "copurchase_pairs": (q_copurchase_pairs, _SQL_COPURCHASE),
-    "event_transition_matrix": (q_event_transition_matrix, _SQL_TRANSITIONS),
-    "embedding_quantization": (q_embedding_quantization, _SQL_EMB_QUANT),
-    "profile_lineitem": (q_profile_lineitem, _SQL_PROFILE),
-    "twap_value_by_type": (q_twap_value_by_type, _SQL_TWAP),
-    "user_trajectory_stats": (q_user_trajectory_stats, _sql_trajectory()),
-    "ks_statistic_values": (q_ks_statistic_values, _SQL_KS),
-    "except_all_orders": (q_except_all_orders, _SQL_EXCEPT_ALL),
-    "value_deciles_by_type": (q_value_deciles_by_type, _SQL_DECILES),
-    "value_trend_by_type": (q_value_trend_by_type, _SQL_VALUE_TREND),
-    "rolling_active_users": (q_rolling_active_users, _SQL_ROLLING_ACTIVE),
-    "clustering_coefficient_mod": (q_clustering_coefficient_mod, _SQL_CLUSTERING_COEF),
-    "kcore_mod": (q_kcore_mod, _sql_kcore()),
-    "weighted_sample_docs": (q_weighted_sample_docs, _SQL_WEIGHTED_SAMPLE),
-    "quantile_normalize_values": (q_quantile_normalize_values, _SQL_QUANTILE_NORM),
-    "distance_band_pairs": (q_distance_band_pairs, _SQL_DISTANCE_BAND),
-    "snapshot_diff_orders": (q_snapshot_diff_orders, _SQL_SNAPSHOT_DIFF),
-    "attribution_touchpoints": (q_attribution_touchpoints, _SQL_ATTRIBUTION),
-    "user_type_map": (q_user_type_map, _SQL_USER_TYPE_MAP),
-    "capped_sessions": (q_capped_sessions, _SQL_CAPPED_SESSIONS),
-    "debounced_event_counts": (q_debounced_event_counts, _SQL_DEBOUNCE),
-    "rolling_correlation_days": (q_rolling_correlation_days, _SQL_ROLLING_CORR),
-    "bearing_sector_counts": (q_bearing_sector_counts, _SQL_BEARING_SECTORS),
-    "order_fulfillment_lag": (q_order_fulfillment_lag, _SQL_FULFILLMENT_LAG),
-    "rfm_segments": (q_rfm_segments, _SQL_RFM),
-    "mean_shift_scan": (q_mean_shift_scan, _SQL_MEAN_SHIFT),
-    "benford_first_digit": (q_benford_first_digit, _SQL_BENFORD),
-    "max_open_orders": (q_max_open_orders, _SQL_MAX_OPEN),
-    "skew_report_lineitem": (q_skew_report_lineitem, _SQL_SKEW_REPORT),
-    "weighted_median_price": (q_weighted_median_price, _SQL_WEIGHTED_MEDIAN),
-    "ewma_daily_revenue": (q_ewma_daily_revenue, _sql_ewma()),
-    "seasonal_index_dow": (q_seasonal_index_dow, _SQL_SEASONAL_DOW),
-    "autocorrelation_daily": (q_autocorrelation_daily, _sql_acf()),
-    "unigram_logprob_docs": (q_unigram_logprob_docs, _SQL_UNIGRAM_LP),
-    "dsir_select_docs": (q_dsir_select_docs, _SQL_DSIR),
-    "pit_features_purchases": (q_pit_features_purchases, _SQL_PIT_FEATURES),
-    "topk_with_ties_parts": (q_topk_with_ties_parts, _SQL_TOPK_TIES),
-    "sql_frontend_revenue": (q_sql_frontend_revenue, _SQL_FRONTEND),
-    "isochrone_hull_geometry": (q_isochrone_hull_geometry, _SQL_HULL_GEOMETRY),
-    "kmv_overlap_sketch": (q_kmv_overlap_sketch, _SQL_KMV_OVERLAP),
-    "inverted_index_docs": (q_inverted_index_docs, _SQL_INVERTED_INDEX),
-    "chi2_type_dow": (q_chi2_type_dow, _SQL_CHI2),
-    "frame_sample_manifest": (q_frame_sample_manifest, _SQL_FRAME_SAMPLE),
-    "top_decile_spenders_by_nation": (
-        q_top_decile_spenders_by_nation,
-        _SQL_TOP_DECILE,
-    ),
-    "gini_by_nation": (q_gini_by_nation, _SQL_GINI),
-    "concentration_by_type": (q_concentration_by_type, _SQL_CONCENTRATION),
-    "temporal_state_lookup": (q_temporal_state_lookup, _SQL_TEMPORAL_LOOKUP),
-    "share_of_parent_rollup": (q_share_of_parent_rollup, _SQL_SHARE_OF_PARENT),
-    "spend_quartile_migration": (
-        q_spend_quartile_migration,
-        _SQL_QUARTILE_MIGRATION,
-    ),
-    "seasonal_naive_eval": (q_seasonal_naive_eval, _SQL_SEASONAL_NAIVE),
-    "prorated_monthly_revenue": (q_prorated_monthly_revenue, _SQL_PRORATED),
-    "user_survival_curve": (q_user_survival_curve, _SQL_SURVIVAL),
-    "ab_test_conversion": (q_ab_test_conversion, _SQL_AB_TEST),
-    "staypoint_detection": (q_staypoint_detection, _SQL_STAYPOINTS),
-    "degree_assortativity_mod": (q_degree_assortativity_mod, _SQL_ASSORTATIVITY),
-    "centroid_separation": (q_centroid_separation, _sql_centroid_separation()),
-    "business_day_lag": (q_business_day_lag, _sql_business_day_lag()),
-    "silhouette_by_label": (q_silhouette_by_label, _sql_silhouette()),
-    "shingle_containment_pairs": (
-        q_shingle_containment_pairs,
-        _SQL_CONTAINMENT.format(clean=_CLEAN_SQL, shingles=_SHINGLES_SQL),
-    ),
-    "shipment_waves": (q_shipment_waves, _SQL_SHIPMENT_WAVES),
-    "interarrival_stats": (q_interarrival_stats, _SQL_INTERARRIVAL),
-    "backlog_age_at_month_end": (q_backlog_age_at_month_end, _SQL_BACKLOG_AGE),
-    "repurchase_cycle": (q_repurchase_cycle, _SQL_REPURCHASE),
-    "price_volume_mix": (q_price_volume_mix, _SQL_PRICE_VOLUME),
-    "referential_integrity_audit": (
-        q_referential_integrity_audit,
-        _SQL_REF_INTEGRITY,
-    ),
-    "global_moran_events": (q_global_moran_events, _SQL_GLOBAL_MORAN),
-    "bpe_merges_docs": (q_bpe_merges_docs, _sql_bpe()),
-    "wordpiece_merges_docs": (q_wordpiece_merges_docs, _sql_wordpiece()),
-    "span_dedup_docs": (q_span_dedup_docs, _SQL_SPAN_DEDUP),
-    "dup_span_islands_docs": (q_dup_span_islands_docs, _SQL_DUP_SPAN_ISLANDS),
-    "sorted_neighborhood_docs": (q_sorted_neighborhood_docs, _SQL_SNM),
-    "label_propagation_mod": (q_label_propagation_mod, _sql_lpa()),
-    "hll_distinct_words": (q_hll_distinct_words, _SQL_HLL),
-    "mrl_truncation_recall": (q_mrl_truncation_recall, _sql_mrl_recall()),
-    "trajectory_hausdorff": (q_trajectory_hausdorff, _SQL_HAUSDORFF),
-    "item_item_cf": (q_item_item_cf, _SQL_ITEM_CF),
-    "sampled_quantile_bands": (q_sampled_quantile_bands, _SQL_SAMPLED_QUANTILES),
-    "jw_entity_resolution": (q_jw_entity_resolution, _SQL_JW_ER),
-    "k_anonymity_audit": (q_k_anonymity_audit, _SQL_K_ANON),
-    "kcenter_coreset_embeddings": (q_kcenter_coreset_embeddings, _sql_kcenter()),
-    "polygon_clip_areas": (q_polygon_clip_areas, _sql_polyclip()),
-    "zonal_polygon_coverage": (q_zonal_polygon_coverage, _sql_zonal()),
-    "kaplan_meier_users": (q_kaplan_meier_users, _SQL_KM),
-    "readability_docs": (q_readability_docs, _SQL_READABILITY),
-    "bm25_retrieval_docs": (q_bm25_retrieval_docs, _SQL_BM25),
-    "dp_noised_counts": (q_dp_noised_counts, _SQL_DP_NOISE),
-    "l_diversity_audit": (q_l_diversity_audit, _SQL_L_DIVERSITY),
-    "scc_mod": (q_scc_mod, _sql_scc()),
-    "holt_trend_revenue": (q_holt_trend_revenue, _sql_holt()),
-    "bpe_encode_docs": (q_bpe_encode_docs, _sql_bpe_encode()),
-    "orc_roundtrip_events": (q_orc_roundtrip_events, _SQL_ORC_SCAN),
-    "ripley_k_events": (q_ripley_k_events, _SQL_RIPLEY),
-    "emerging_hotspots": (q_emerging_hotspots, _SQL_EMERGING),
-}
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: fn for name, (fn, _) in REGISTRY.items()}
-
-
-def oracle_sql() -> dict[str, str]:
-    return {name: sql for name, (_, sql) in REGISTRY.items() if sql is not None}

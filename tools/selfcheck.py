@@ -87,9 +87,6 @@ def run(sf_dir: str, only: list[str] | None = None) -> int:
             failures += 1
             continue
         spark_s = time.time() - t0
-        if sql is None:
-            print(f"ok?  {name}: rows={len(sdf)} (no oracle, rows-only) [{spark_s:.1f}s]")
-            continue
         try:
             odf = con.execute(sql).fetchdf()
         except Exception as e:  # noqa: BLE001

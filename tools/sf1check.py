@@ -264,7 +264,7 @@ def run(sf_dir: str, only: list[str] | None = None) -> int:
     outputs: dict = {}
     complete_ctx: dict = {}
     failures = 0
-    n_pass = n_golden = n_rows_only = 0
+    n_pass = n_golden = 0
     for name, (fn, sql) in REGISTRY.items():
         if only and name not in only:
             continue
@@ -346,10 +346,6 @@ def run(sf_dir: str, only: list[str] | None = None) -> int:
                 print(f"PASSg {name}: rows={len(sdf)} golden-hash [{spark_s:.1f}s]")
             n_golden += 1
             continue
-        if sql is None:
-            print(f"ok?  {name}: rows={len(sdf)} (no oracle, rows-only) [{spark_s:.1f}s]")
-            n_rows_only += 1
-            continue
         t1 = time.time()
         odf, o_to, o_err = _with_timeout(
             lambda: con.execute(sql).fetchdf(), con.interrupt, TIMEOUT_S
@@ -420,8 +416,7 @@ def run(sf_dir: str, only: list[str] | None = None) -> int:
             )
             n_pass += 1
     print(
-        f"\n{n_pass} oracle-PASS, {n_golden} golden-PASS, "
-        f"{n_rows_only} rows-only, {failures} failures"
+        f"\n{n_pass} oracle-PASS, {n_golden} golden-PASS, {failures} failures"
     )
     print("ALL GREEN" if failures == 0 else f"{failures} FAILURES")
     return failures

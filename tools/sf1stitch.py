@@ -4,7 +4,7 @@ The full sf1 sweep runs in parallel shards (and heavy queries get
 re-runs after golden collection); this stitches the per-query result
 lines back into one record in REGISTRY order. Later logs win (a
 re-run after a fix or golden supersedes the first attempt). The
-output carries the same PASS/PASSg/ok? line grammar the gating test
+output carries the same PASS/PASSg line grammar the gating test
 (tests/test_selfcheck_record.py::test_sf1_full_record) parses, plus a
 tally and ALL GREEN marker only when nothing failed.
 
@@ -22,11 +22,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from geo_big_data_analysis_spark.plans.registry import REGISTRY  # noqa: E402
 
 LINE = re.compile(
-    r"^(PASS|PASSg|ok\?|FAIL|SPARK_TIMEOUT|ORACLE_TIMEOUT)\s+(\w+): (.*)$"
+    r"^(PASS|PASSg|FAIL|SPARK_TIMEOUT|ORACLE_TIMEOUT)\s+(\w+): (.*)$"
 )
 
 
-GREEN = ("PASS", "PASSg", "ok?")
+GREEN = ("PASS", "PASSg")
 
 
 def main() -> int:
@@ -63,12 +63,11 @@ def main() -> int:
         if name not in best:
             continue
         tag, rest = best[name]
-        if tag in ("PASS", "PASSg", "ok?"):
+        if tag in GREEN:
             n_green += 1
         else:
             n_bad += 1
-        sep = "  " if tag == "ok?" else " "
-        lines.append(f"{tag}{sep}{name}: {rest}")
+        lines.append(f"{tag} {name}: {rest}")
     missing = [n for n in REGISTRY if n not in best]
     with open(out_path, "w") as f:
         f.write("\n".join(lines) + "\n")
